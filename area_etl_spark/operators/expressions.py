@@ -36,6 +36,9 @@ def bind_once(expr: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
+MATERIALIZE_MODES = ("local", "persist", "reliable")
+
+
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Compute ``df`` once and let every downstream consumer read the
     result back instead of re-running its subtree (guide §2.4 — the
@@ -64,13 +67,27 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       accordingly.  Use at 100 TB where a retry-the-whole-query failure
       mode is unacceptable.
     - ``reliable``: ``checkpoint`` to the directory named by
-      ``SPARK_GRAFT_CHECKPOINT_DIR`` (set on the session by
-      ``get_spark``) — survives executor loss entirely; costs a
-      write+read of the materialized table to shared storage.  Use for
-      corpus-sized intermediates on long multi-tenant runs.
+      ``SPARK_GRAFT_CHECKPOINT_DIR`` (set on the session on first use,
+      unless it already has one) — survives executor loss
+      entirely; costs a write+read of the materialized table to shared
+      storage.  Use for corpus-sized intermediates on long multi-tenant
+      runs.
+
+    An unknown mode, or ``reliable`` without a checkpoint directory,
+    raises ``ValueError`` naming the setting.
     """
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
+    if mode not in MATERIALIZE_MODES:
+        raise ValueError(
+            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of {', '.join(MATERIALIZE_MODES)}"
+        )
     if mode == "reliable":
+        ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        if not ckpt_dir:
+            raise ValueError("SPARK_GRAFT_MATERIALIZE=reliable needs SPARK_GRAFT_CHECKPOINT_DIR set to a directory")
+        sc = df.sparkSession.sparkContext
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     if mode == "persist":
         from pyspark import StorageLevel

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from area_etl_spark.operators.dedup import normalize_tokens
+from area_etl_spark.operators.expressions import materialize
 from area_etl_spark.operators.ids import dense_ids
 
 
@@ -97,13 +98,13 @@ def train_bpe_merges(
     The scale insight that makes BPE tractable on a 100 TB corpus: merges
     are a function of the WORD HISTOGRAM, not the corpus — one
     corpus-sized explode+groupBy builds (word, count) (vocabulary-sized,
-    typically ≤ a few million rows), is cached, and every merge round then
-    runs on that small table: one pair-count aggregate (adjacent symbols
-    via slice+zip_with, weighted by word count) + a 1-row deterministic
-    argmax collect (max count, lexicographically smallest pair on ties —
-    the bounded-seed contract, same as the k-means centroid collects) + a
-    narrow literal ``replace`` that applies the merge left-to-right
-    non-overlapping.  Words are restricted to ``[a-z0-9]+`` so the
+    typically ≤ a few million rows), is materialized once, and every merge
+    round then runs on that small table: one pair-count aggregate
+    (adjacent symbols via slice+zip_with, weighted by word count) + a
+    1-row deterministic argmax collect (max count, lexicographically
+    smallest pair on ties — the bounded-seed contract, same as the k-means
+    centroid collects) + a narrow literal ``replace`` that applies the
+    merge left-to-right non-overlapping.  Words are restricted to ``[a-z0-9]+`` so the
     char-level symbol split is engine-portable (Java regex walks UTF-16
     units, RE2 walks codepoints — they differ on astral chars; real
     byte-level BPE sidesteps this the same way).
@@ -112,7 +113,7 @@ def train_bpe_merges(
     tokenizer consumes.  Stops early if no adjacent pair remains.
     """
     spark = docs.sparkSession
-    words = (
+    words = materialize(
         docs.select(
             F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w")
         )
@@ -122,7 +123,6 @@ def train_bpe_merges(
         .select(
             F.trim(F.regexp_replace("w", "(.)", "$1 ")).alias("sym"), "n"
         )
-        .persist()
     )
     cur = words
     merges: list[tuple[int, str, str, int]] = []
@@ -158,7 +158,6 @@ def train_bpe_merges(
             ).alias("sym"),
             "n",
         )
-    words.unpersist()
     return spark.createDataFrame(
         merges, "rank long, left string, right string, pair_count long"
     )

@@ -1,24 +1,29 @@
 """Target schema contracts — the reference's DDL layer, engine-side.
 
-Parity: the reference ships 1.5k LoC of Postgres DDL
-(``/root/reference/sql/init_*.sql``) whose work at load time is typing,
-NOT NULL enforcement, and defaults.  A lake has no database to reject rows,
-so the contract moves into the engine: ``apply_contract`` shapes a frame to
-the declared schema (declared column order, ``try_cast`` typing, defaults
-for nulls), and ``contract_violations`` is the validation gate — one
-aggregation pass counting required-null and primary-key-duplicate rows,
-run BEFORE the write instead of failing inside it.
+Parity: the reference ships 1.5k LoC of Postgres DDL (``sql/init_*.sql``)
+whose work at load time is typing, NOT NULL enforcement, and defaults.  A
+lake has no database to reject rows, so the contract moves into the engine:
+``apply_contract`` shapes a frame to the declared schema (declared column
+order, ``try_cast`` typing, defaults for nulls), and the checks run inside
+the load, as Postgres runs them inside the COPY.
 
-At 100 TB the violations pass piggybacks the same scan as the write (cache
-or re-read is the caller's call); its output is k rows (one per rule), so
-the gate itself is free of shuffle concerns.
+``enforce_contract`` is the runner's gate.  It adds the checks to the frame
+the sink writes: NOT NULL rules are counting aggregates of a
+``DataFrame.observe`` (no extra stage), and PK uniqueness is a
+``row_number`` over the key, counted the same way (one shuffle of the
+output on the key).  The write job fills the counts; the sink publishes
+the written files only if every count is 0 (``sources/load.py``,
+``before_publish``).  The pipeline is evaluated once.
+
+``contract_violations`` is the same rules as a stand-alone query, one row
+per rule, for reporting on a frame without writing it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -69,43 +74,45 @@ def apply_contract(df: DataFrame, contract: TableContract) -> DataFrame:
     return df.select(*cols)
 
 
+def _not_null_counts(contract: TableContract) -> list[Column]:
+    """One aggregate per NOT NULL column, aliased with its rule name."""
+    return [
+        F.count(F.when(F.col(c.name).isNull(), 1)).alias(f"not_null:{c.name}")
+        for c in contract.columns
+        if not c.nullable
+    ]
+
+
+def _pk_rule(contract: TableContract) -> str:
+    return "unique_pk:" + ",".join(contract.primary_key)
+
+
+def _pk_present(contract: TableContract) -> Column:
+    """Every key column is non-null.  Duplicates count among such rows only;
+    a null key is already counted by its not_null rule."""
+    present = F.lit(True)
+    for k in contract.primary_key:
+        present = present & F.col(k).isNotNull()
+    return present
+
+
 def contract_violations(df: DataFrame, contract: TableContract) -> DataFrame:
     """One row per rule: (rule, n_bad) — required-null and pk-dup counts.
 
     Run on the OUTPUT of ``apply_contract``; a clean load has every
     ``n_bad`` = 0.
     """
-    aggs = [
-        F.count(F.when(F.col(c.name).isNull(), 1)).alias(f"nn__{c.name}")
-        for c in contract.columns
-        if not c.nullable
-    ]
-    pk = contract.primary_key
-    if pk:
-        # duplicates among fully-non-null keys; null keys are already counted
-        # by their not_null rules
-        all_present = F.lit(True)
-        for k in pk:
-            all_present = all_present & F.col(k).isNotNull()
+    aggs = _not_null_counts(contract)
+    if contract.primary_key:
+        pk = [F.col(k) for k in contract.primary_key]
         aggs.append(
-            (F.count(F.when(all_present, 1)) - F.countDistinct(*[F.col(k) for k in pk])).alias(
-                "pk__dups"
-            )
+            (F.count(F.when(_pk_present(contract), 1)) - F.countDistinct(*pk)).alias(_pk_rule(contract))
         )
     row = df.agg(*aggs)
-    structs = []
-    for c in contract.columns:
-        if not c.nullable:
-            structs.append(
-                F.struct(
-                    F.lit(f"not_null:{c.name}").alias("rule"),
-                    F.col(f"nn__{c.name}").cast("long").alias("n_bad"),
-                )
-            )
-    if pk:
-        structs.append(
-            F.struct(F.lit("unique_pk:" + ",".join(pk)).alias("rule"), F.col("pk__dups").cast("long").alias("n_bad"))
-        )
+    structs = [
+        F.struct(F.lit(rule).alias("rule"), F.col(f"`{rule}`").cast("long").alias("n_bad"))
+        for rule in row.columns
+    ]
     return row.select(F.explode(F.array(*structs)).alias("v")).select("v.*")
 
 
@@ -438,20 +445,60 @@ PIPELINE_CONTRACTS: dict[str, TableContract] = {
 }
 
 
-def enforce_contract(df: DataFrame, contract: TableContract) -> DataFrame:
-    """Gate used by the runner: shape to the contract, then fail FAST (before
-    any write) if a rule is violated — the engine-side equivalent of the
-    reference's Postgres load rejecting a bad batch, except the error names
-    every violated rule and its row count instead of dying mid-COPY.
+_RN = "__contract_rn"
 
-    The violations pass is one aggregation over the shaped frame (k output
-    rows); at 100 TB cache the shaped frame if the double scan matters.
+
+@dataclass
+class ContractGate:
+    """A frame to write, with its contract check inside the write job.
+
+    Writing ``frame`` fills ``observation``: ``rows`` (the rows written)
+    and, under a contract, one violation count per rule, named like the
+    ``rule`` column of ``contract_violations``.
     """
+
+    frame: DataFrame
+    contract: TableContract | None
+    observation: Observation
+
+    @property
+    def rows(self) -> int:
+        return self.observation.get["rows"]
+
+    def check(self) -> None:
+        """Raise if the write counted a violation; call it after the write
+        and before the written files are published."""
+        bad = {rule: n for rule, n in self.observation.get.items() if rule != "rows" and n}
+        if bad:
+            raise ValueError(f"contract '{self.contract.table}' violated: {bad}")
+
+
+def enforce_contract(df: DataFrame, contract: TableContract | None) -> ContractGate:
+    """Gate used by the runner: shape ``df`` to the contract and count its
+    violations in the job that writes it — the engine-side equivalent of
+    the reference's Postgres load rejecting a bad batch, except the error
+    names every violated rule and its row count instead of dying mid-COPY.
+
+    Runs no Spark job.  NOT NULL counts are aggregates of the observation.
+    PK duplicates are exact: ``row_number`` over ``partitionBy(pk)``
+    numbers each key's rows, and every fully-present row past the first is
+    a duplicate — the same number as ``count(present) - countDistinct(pk)``
+    in ``contract_violations``, for one shuffle of the output on the key
+    (the rank column is dropped before the write).  ``contract=None``
+    shapes nothing and only counts rows.
+    """
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if contract is None:
+        return ContractGate(df.observe(obs, *metrics), None, obs)
     shaped = apply_contract(df, contract)
-    bad = {r.rule: r.n_bad for r in contract_violations(shaped, contract).collect() if r.n_bad}
-    if bad:
-        raise ValueError(f"contract '{contract.table}' violated: {bad}")
-    return shaped
+    metrics += _not_null_counts(contract)
+    pk = contract.primary_key
+    if not pk:
+        return ContractGate(shaped.observe(obs, *metrics), contract, obs)
+    ranked = shaped.withColumn(_RN, F.row_number().over(Window.partitionBy(*pk).orderBy(*pk)))
+    metrics.append(F.count(F.when(_pk_present(contract) & (F.col(_RN) > 1), 1)).alias(_pk_rule(contract)))
+    return ContractGate(ranked.observe(obs, *metrics).drop(_RN), contract, obs)
 
 
 @dataclass

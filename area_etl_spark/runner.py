@@ -191,24 +191,23 @@ def run(
 
     def _one(item: tuple[str, PipelineSpec]) -> None:
         module, spec = item
+        key = f"{module}.{spec.name}"
         t0 = time.perf_counter()
-        df = spec.build(spark, tables, now)
         # Contract gate: the reference's DDL layer (typing / NOT NULL / PK)
-        # enforced engine-side BEFORE the sink — a violated rule aborts the
-        # table with named rule counts instead of loading bad rows.
-        contract = PIPELINE_CONTRACTS.get(f"{module}.{spec.name}")
-        if contract is not None:
-            df = enforce_contract(df, contract)
+        # enforced engine-side INSIDE the write — the sink stages the table,
+        # and a violated rule aborts the publish with named rule counts,
+        # leaving the previous table in place.
+        contract = PIPELINE_CONTRACTS.get(key)
+        gate = enforce_contract(spec.build(spark, tables, now), contract)
+        check = gate.check if contract is not None else None
+        path = f"{out_dir}/{module}/{spec.name}"
+        partition_by = spec.partition_by or None
         if versioned:
-            write_versioned(
-                df,
-                f"{out_dir}/{module}/{spec.name}",
-                partition_by=spec.partition_by or None,
-            )
+            write_versioned(gate.frame, path, partition_by=partition_by, before_publish=check)
         else:
-            reload_overwrite(df, f"{out_dir}/{module}/{spec.name}", partition_by=spec.partition_by or None)
-        timings[f"{module}.{spec.name}"] = round(time.perf_counter() - t0, 3)
-        logging.info("runner: %s.%s done in %.2fs", module, spec.name, timings[f"{module}.{spec.name}"])
+            reload_overwrite(gate.frame, path, partition_by=partition_by, before_publish=check)
+        timings[key] = round(time.perf_counter() - t0, 3)
+        logging.info("runner: %s done in %.2fs, %d rows", key, timings[key], gate.rows)
 
     if max_parallel > 1:
         with ThreadPoolExecutor(max_workers=max_parallel) as pool:

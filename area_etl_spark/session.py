@@ -89,14 +89,7 @@ def get_spark(app_name: str = "area-etl-spark") -> SparkSession:
         return active
     if SparkSession.builder._options.get("spark.master") is None:  # noqa: SLF001
         builder = builder.master(f"local[{cpus}]")
-    spark = builder.getOrCreate()
-    # reliable-checkpoint support for operators.expressions.materialize's
-    # SPARK_GRAFT_MATERIALIZE=reliable mode (guide §5: executor-loss-safe
-    # corpus-sized intermediates on real clusters)
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir:
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
-    return spark
+    return builder.getOrCreate()
 
 
 class LazyTables(dict):

@@ -21,6 +21,7 @@ file per partition).
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,13 +36,53 @@ def load_append(df: DataFrame, path: str, fmt: str = "parquet", partition_by: li
     logging.info("load_append: appended to %s", path)
 
 
-def reload_overwrite(df: DataFrame, path: str, fmt: str = "parquet", partition_by: list[str] | None = None) -> None:
-    """Truncate-and-reload as one atomic overwrite (utils.py:226 idiom)."""
+def reload_overwrite(
+    df: DataFrame,
+    path: str,
+    fmt: str = "parquet",
+    partition_by: list[str] | None = None,
+    before_publish: Callable[[], None] | None = None,
+) -> None:
+    """Truncate-and-reload as one atomic overwrite (utils.py:226 idiom).
+
+    With ``before_publish`` the write is staged: ``df`` lands in a hidden,
+    uniquely named sibling of ``path``, then ``before_publish()`` runs (the
+    runner's contract check reads the counts the write job observed).  If
+    the write or the check raises, the staging directory is deleted and
+    ``path`` keeps its previous table.  Otherwise the old table is deleted
+    and the staging directory renamed into its place — a reader in that
+    window finds no table (``write_versioned`` has no such window).
+    """
     writer = df.write.mode("overwrite").format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    if before_publish is None:
+        writer.save(path)
+    else:
+        _staged_save(df.sparkSession, writer, path, before_publish)
     logging.info("reload_overwrite: rewrote %s", path)
+
+
+def _staged_save(spark: SparkSession, writer, path: str, before_publish: Callable[[], None]) -> None:
+    """Save to a staging sibling of ``path``, gate, then swap it in.  Goes
+    through the Hadoop ``FileSystem`` of ``path``, so every scheme the
+    writer accepts works."""
+    import uuid
+
+    jvm = spark.sparkContext._jvm
+    fs_path = jvm.org.apache.hadoop.fs.Path
+    fs = fs_path(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    target = fs.makeQualified(fs_path(path))
+    staging = fs_path(target.getParent(), f".{target.getName()}.staging-{uuid.uuid4().hex}")
+    try:
+        writer.save(staging.toString())
+        before_publish()
+    except BaseException:
+        fs.delete(staging, True)
+        raise
+    fs.delete(target, True)
+    if not fs.rename(staging, target):
+        raise OSError(f"reload_overwrite: could not rename {staging.toString()} to {path}")
 
 
 def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -549,6 +590,7 @@ def write_versioned(
     keep_versions: int = 2,
     partition_by: list[str] | None = None,
     lock_stale_after_s: float = 3600.0,
+    before_publish: Callable[[], None] | None = None,
 ) -> int:
     """Atomic table publish via a manifest pointer — the poor-man's
     transactional table that closes :func:`compact_files`' documented swap
@@ -568,6 +610,10 @@ def write_versioned(
     - version numbers grow past orphans (max(existing)+1), so a crashed
       v=7 can never be confused with a later successful publish.
 
+    ``before_publish()`` runs after the ``v=<n>/`` write and before the
+    manifest flip; if it raises, ``v=<n>/`` is deleted and the manifest
+    still names the previous version.
+
     Returns the published version number.  Writer concurrency is ENFORCED
     by :func:`_writer_lock`: a second concurrent writer raises
     :class:`ConcurrentWriteError` before touching any state (a crashed
@@ -584,7 +630,13 @@ def write_versioned(
         writer = df.write.mode("overwrite").format(fmt)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(data_dir)
+        try:
+            writer.save(data_dir)
+            if before_publish is not None:
+                before_publish()
+        except BaseException:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
         # atomic publish: write-temp + rename, never truncate-in-place
         tmp_manifest = os.path.join(table_dir, "_CURRENT.tmp")
         with open(tmp_manifest, "w", encoding="utf-8") as f:

@@ -5656,3 +5656,56 @@ def test_detect_bot_traffic(spark):
     assert not out[3].is_bot and out[3].cv_milli > 1000
     assert not out[4].is_bot and out[4].cv_milli is None
     assert out[4].n_events == 1 and out[4].mean_gap_ms is None
+
+
+def _materialize_roundtrip(spark):
+    """Materialize a frame under the current dial and check every consumer
+    reads the values the plan computes."""
+    from area_etl_spark.operators.expressions import materialize
+
+    df = spark.range(100).select((F.col("id") % 7).alias("k"), F.col("id"))
+    expected = sorted(map(tuple, df.collect()))
+    m = materialize(df)
+    assert sorted(map(tuple, m.collect())) == expected
+    assert sorted(map(tuple, m.groupBy("k").count().collect())) == [
+        (k, len([i for i in range(100) if i % 7 == k])) for k in range(7)
+    ]
+    return m
+
+
+def test_materialize_local_mode(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
+    _materialize_roundtrip(spark)
+
+
+def test_materialize_persist_mode(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
+    m = _materialize_roundtrip(spark)
+    assert m.is_cached
+    m.unpersist()
+
+
+def test_materialize_reliable_mode(spark, monkeypatch, tmp_path):
+    """reliable checkpoints to SPARK_GRAFT_CHECKPOINT_DIR, setting it on
+    the session when the session has none."""
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    _materialize_roundtrip(spark)
+    assert spark.sparkContext.getCheckpointDir() is not None
+
+
+def test_materialize_bad_setting_fails_clearly(spark, monkeypatch):
+    """An unknown mode and reliable without a directory raise a ValueError
+    naming the setting, before any Spark work."""
+    import pytest
+
+    from area_etl_spark.operators.expressions import materialize
+
+    df = spark.range(3)
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persit")
+    with pytest.raises(ValueError, match="'persit': expected one of local, persist, reliable"):
+        materialize(df)
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CHECKPOINT_DIR"):
+        materialize(df)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from area_etl_spark.runner import MODULES, run
@@ -23,32 +24,120 @@ def test_runner_all_modules(spark, sf_dir, tmp_path):
     assert any(p.startswith("event_class=") for p in parts)
 
 
-def test_contract_gate_blocks_bad_frame(spark):
-    """enforce_contract must abort with named rule counts on a frame that
-    violates NOT NULL or PK uniqueness — and pass a clean frame through
-    shaped to the declared column order."""
-    import pytest
+def _gated_write(df, contract, path, versioned=False):
+    """Land ``df`` the way the runner does: the contract check runs inside
+    the write and gates the publish."""
+    from area_etl_spark.plans.contracts import enforce_contract
+    from area_etl_spark.sources.load import reload_overwrite, write_versioned
 
+    gate = enforce_contract(df, contract)
+    if versioned:
+        write_versioned(gate.frame, path, before_publish=gate.check)
+    else:
+        reload_overwrite(gate.frame, path, before_publish=gate.check)
+    return gate
+
+
+_HC_SCHEMA = "id string, code string, name string, ulss_id string"
+
+
+def test_contract_gate_blocks_bad_frame(spark, tmp_path):
+    """The gated write must abort with named rule counts on a frame that
+    violates NOT NULL or PK uniqueness — the same rules and counts
+    contract_violations reports — and land a clean frame shaped to the
+    declared column order."""
+    import ast
+
+    from area_etl_spark.plans.contracts import PIPELINE_CONTRACTS, apply_contract, contract_violations
+
+    c = PIPELINE_CONTRACTS["cronos.healthcare_companies"]
+    path = str(tmp_path / "hc")
+    good = spark.createDataFrame([("a", "10", "alpha", None), ("b", "11", "beta", "1")], _HC_SCHEMA)
+    gate = _gated_write(good, c, path)
+    assert gate.rows == 2
+    assert spark.read.parquet(path).columns == ["id", "code", "name", "ulss_id"]
+    bad_null = spark.createDataFrame([("a", None, "alpha", None)], _HC_SCHEMA)
+    bad_dup = good.unionByName(good)
+    for bad, rule in ((bad_null, "not_null:code"), (bad_dup, "unique_pk:id")):
+        with pytest.raises(ValueError, match=rule) as err:
+            _gated_write(bad, c, path)
+        reported = {
+            r.rule: r.n_bad for r in contract_violations(apply_contract(bad, c), c).collect() if r.n_bad
+        }
+        assert ast.literal_eval(str(err.value).split("violated: ", 1)[1]) == reported
+
+
+def test_gate_counts_match_contract_violations(spark):
+    """The in-write counts equal contract_violations' rule by rule — a
+    composite key with null parts and repeated duplicates included."""
     from area_etl_spark.plans.contracts import (
-        PIPELINE_CONTRACTS,
+        ColumnContract,
+        TableContract,
+        apply_contract,
+        contract_violations,
         enforce_contract,
     )
 
+    c = TableContract(
+        "t",
+        [ColumnContract("a", "bigint", nullable=False), ColumnContract("b", "bigint"), ColumnContract("v", "string")],
+        primary_key=["a", "b"],
+    )
+    keys = [(1, 1)] * 3 + [(1, None)] * 2 + [(None, None), (2, 2)] + [(1, 2)] * 2
+    df = spark.createDataFrame([(a, b, "x") for a, b in keys], "a bigint, b bigint, v string")
+    gate = enforce_contract(df, c)
+    gate.frame.write.format("noop").mode("overwrite").save()
+    counts = dict(gate.observation.get)
+    assert counts.pop("rows") == len(keys)
+    expected = {r.rule: r.n_bad for r in contract_violations(apply_contract(df, c), c).collect()}
+    assert counts == expected == {"not_null:a": 1, "unique_pk:a,b": 3}
+
+
+@pytest.mark.parametrize("versioned", [False, True], ids=["plain", "versioned"])
+def test_contract_violation_keeps_previous_table(spark, tmp_path, versioned):
+    """A violating write publishes nothing: the previously landed table
+    stays readable with its old rows, and no staging directory is left."""
+    from area_etl_spark.plans.contracts import PIPELINE_CONTRACTS
+    from area_etl_spark.sources.load import read_versioned
+
     c = PIPELINE_CONTRACTS["cronos.healthcare_companies"]
-    good = spark.createDataFrame(
-        [("a", "10", "alpha", None), ("b", "11", "beta", "1")],
-        "id string, code string, name string, ulss_id string",
-    )
-    shaped = enforce_contract(good, c)
-    assert shaped.columns == ["id", "code", "name", "ulss_id"]
-    bad_null = spark.createDataFrame(
-        [("a", None, "alpha", None)], "id string, code string, name string, ulss_id string"
-    )
-    with pytest.raises(ValueError, match="not_null:code"):
-        enforce_contract(bad_null, c)
-    bad_dup = good.unionByName(good)
+    path = str(tmp_path / "hc")
+    good = spark.createDataFrame([("a", "10", "alpha", None), ("b", "11", "beta", "1")], _HC_SCHEMA)
+    _gated_write(good, c, path, versioned)
+    before = sorted(os.listdir(path))
     with pytest.raises(ValueError, match="unique_pk:id"):
-        enforce_contract(bad_dup, c)
+        _gated_write(good.unionByName(good), c, path, versioned)
+    landed = read_versioned(spark, path) if versioned else spark.read.parquet(path)
+    assert landed.count() == 2
+    assert os.listdir(tmp_path) == ["hc"]
+    assert sorted(os.listdir(path)) == before
+
+
+def test_gated_write_evaluates_input_once(spark, tmp_path):
+    """The contract check rides the write job: a gated write of a PK
+    contract evaluates its input once per landed row, not once for the
+    check and again for the write."""
+    from pyspark.sql.types import StringType
+
+    from area_etl_spark.plans.contracts import PIPELINE_CONTRACTS
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        acc.add(1)
+        return x
+
+    tap = F.udf(bump, StringType()).asNondeterministic()
+    c = PIPELINE_CONTRACTS["cronos.healthcare_companies"]
+    src = spark.range(50).select(
+        tap(F.col("id").cast("string")).alias("id"),
+        F.lit("10").alias("code"),
+        F.lit("n").alias("name"),
+        F.lit(None).cast("string").alias("ulss_id"),
+    )
+    gate = _gated_write(src, c, str(tmp_path / "hc"))
+    assert gate.rows == 50
+    assert acc.value == 50
 
 
 def test_every_runner_spec_with_audit_cols_has_contract():
@@ -170,17 +259,24 @@ def test_runner_versioned_sink(spark, sf_dir, tmp_path):
     assert read_versioned(spark, t).count() == n1  # same input, same rows
 
 
-def test_runner_ledger(spark, sf_dir, tmp_path):
+def test_runner_ledger(spark, sf_dir, tmp_path, caplog):
     """ledger=True writes an atomic _run_ledger.json whose row counts match
-    what actually landed in the sinks."""
+    what actually landed in the sinks — and what the runner's per-pipeline
+    log line reports from the write's own observation."""
     import json
+    import logging
 
     out = str(tmp_path / "lake")
-    run(spark, sf_dir, out, modules=["cronos"], ledger=True)
+    with caplog.at_level(logging.INFO):
+        run(spark, sf_dir, out, modules=["cronos"], ledger=True)
     led = json.load(open(f"{out}/_run_ledger.json"))
     assert led["versioned"] is False
     for key, entry in led["tables"].items():
         module, name = key.split(".", 1)
         assert entry["rows"] == spark.read.parquet(f"{out}/{module}/{name}").count()
         assert entry["seconds"] >= 0
+        assert any(
+            m.startswith(f"runner: {key} done in ") and m.endswith(f", {entry['rows']} rows")
+            for m in caplog.messages
+        )
     assert len(led["tables"]) >= 1

@@ -1,8524 +1,27 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract: ``entry(spark)``, ``queries()`` and ``oracle_sql()``.
 
-Every operator from SURVEY.md §2 is registered here: ``queries()`` maps a
-key to a (spark, sf_dir) → DataFrame callable, and ``oracle_sql()`` carries
-the DuckDB-equivalent SQL for every SQL-expressible entry (rows-only keys —
-the LSH/SimHash candidate generators — intentionally have no oracle, per the
-contract).
-
-Engine code lives in ``area_etl_spark/``; this module only wires it to the
-driver's correctness gate.
+Every query is one record in ``area_etl_spark/registry/<family>.py``: a
+``q_<key>(spark, sf_dir)`` builder with its DuckDB oracle ``o_<key>()``
+directly below it (rows-only keys have no oracle).  This module only wires
+those records to the driver's correctness gate.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
 from collections.abc import Callable
-from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from area_etl_spark.functions import transforms as TR
-from area_etl_spark.functions.transforms import (
-    handle_datetime,
-    handle_enum_mapping,
-    handle_id,
-    handle_json,
-    handle_text,
-    handle_timestamps,
-    handle_year,
-)
-from area_etl_spark.operators import dedup as D
-from area_etl_spark.operators import multimodal as MM
-from area_etl_spark.operators import similarity as SIM
-from area_etl_spark.operators import text_analysis as TA
-from area_etl_spark.operators import aggregates as AGG
-from area_etl_spark.operators import quality as Q
-from area_etl_spark.operators.aggregates import collect_sorted_list, exact_money_sum
-from area_etl_spark.operators.asof import asof_join, range_band_join
-from area_etl_spark.operators.attachments import with_object_ids
-from area_etl_spark.operators import linkage as LKG
-from area_etl_spark.operators.joins import left_join_chain
-from area_etl_spark.operators.unions import union_diagonal_relaxed
-from area_etl_spark.operators import windows as W
-from area_etl_spark.operators.windows import disambiguate_names
+from area_etl_spark import registry
 from area_etl_spark.plans import pipelines as P
-from area_etl_spark.session import load_tables_lazy
-from area_etl_spark.sources.extract import extract_csv, extract_sql
-from area_etl_spark.sources.load import (
-    export_csv,
-    load_append,
-    read_back,
-    reload_overwrite,
-    write_bucketed,
-    write_range_layout,
-    write_zorder_layout,
-)
-from area_etl_spark.streaming.event_stream import windowed_event_agg
-from area_etl_spark.streaming.sessions import session_agg
+from area_etl_spark.registry._common import _tables
 
-REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-SEED_CSV = os.path.join(REPO_DIR, "seed", "regions.csv")
-
-# Fixed "now" so coalesce-ladder fallbacks are reproducible across engines.
-FIXED_NOW = datetime(2026, 1, 1, 0, 0, 0)
-
-
-# One catalog per (application, sf_dir): tables open lazily on first access
-# and the driver-side parquet footer/schema read is paid once, not once per
-# query.  Keyed on applicationId (not id(session) — id() values can be
-# recycled after GC, handing a new session another session's cached frames);
-# bounded because a process hosts O(1) applications.
-_CATALOGS: dict[tuple[str, str], dict] = {}
-
-
-def _run_tmp(spark: SparkSession, *parts: str) -> str:
-    """Per-run scratch path: keyed by applicationId so two concurrent sessions
-    (e.g. the driver's gate and a local bench) can never overwrite each
-    other's write-then-read-back outputs mid-read."""
-    return os.path.join(
-        tempfile.gettempdir(), f"area_etl_run_{spark.sparkContext.applicationId}", *parts
-    )
-
-
-def _tables(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cat = _CATALOGS.get(key)
-    if cat is None:
-        cat = load_tables_lazy(spark, sf_dir)
-        _CATALOGS[key] = cat
-    return cat
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query (core pipeline star join + rollup) on sf0.001."""
-    tables = _tables(spark, "/root/testdata/sf0.001")
-    return P.core_pipeline(tables)
-
-
-# ---------------------------------------------------------------------------
-# individual query builders
-# ---------------------------------------------------------------------------
-
-
-def q_extract_sql(spark, sf_dir):
-    _tables(spark, sf_dir)["orders"]  # ensure the view is registered
-    return extract_sql(
-        spark,
-        """
-        SELECT o_orderpriority, COUNT(*) AS n_orders
-        FROM orders WHERE o_orderstatus = 'F'
-        GROUP BY o_orderpriority
-        """,
-    )
-
-
-def q_extract_csv_schema(spark, sf_dir):
-    return extract_csv(spark, SEED_CSV, schema_overrides={"region_code": "string", "population": "bigint"})
-
-
-def q_load_roundtrip(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    src = tables["nation"].select("n_nationkey", "n_name", "n_regionkey")
-    path = os.path.join(tempfile.mkdtemp(prefix="area_etl_append_"), "nation")
-    load_append(src, path)
-    return read_back(spark, path)
-
-
-def q_reload_idempotent(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    src = tables["supplier"].select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    path = _run_tmp(spark, "reload", "supplier")
-    reload_overwrite(src, path)
-    reload_overwrite(src, path)  # idempotent: second overwrite leaves identical state
-    return read_back(spark, path)
-
-
-def q_export_csv_roundtrip(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    src = tables["region"].select("r_regionkey", "r_name")
-    path = _run_tmp(spark, "export", "region_csv")
-    export_csv(src, path)
-    out = spark.read.csv(path, header=True, schema="r_regionkey int, r_name string")
-    return out
-
-
-def q_attachment_id_remap(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"].select(
-        F.col("doc_id").alias("id"),
-        # rows with n_chars above the median-ish cut carry an "attachment"
-        F.when(F.col("n_chars") > 400, F.col("text")).alias("attachment"),
-    )
-    remapped = with_object_ids(docs, "attachment", id_col="id", out_col="file_id")
-    return remapped.select("id", "file_id")
-
-
-def q_timestamps_coalesce(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        F.col("event_id"),
-        F.col("ts").alias("CREATION"),
-        F.when(F.col("event_id") % 3 != 0, F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("LAST_MOD"),
-        F.when(F.col("event_type") == "click", F.lit("S")).otherwise(F.lit("N")).alias("DISABLED"),
-    )
-    ts = handle_timestamps(current_time=FIXED_NOW)
-    return ev.select("event_id", ts["created_at"], ts["updated_at"], ts["disabled_at"])
-
-
-def q_id_normalize(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["customer"].select(
-        F.col("c_custkey"), handle_id(F.concat(F.lit("  "), F.col("c_name"), F.lit(" ")), "id")
-    )
-
-
-def q_enum_mapping(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["customer"].select(
-        F.col("c_custkey"),
-        handle_enum_mapping("c_mktsegment", "segment_it", P.SEGMENT_MAPPING, default="ALTRO"),
-    )
-
-
-def q_text_clean(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["documents"].select(
-        F.col("doc_id"), handle_text(F.concat(F.lit("  "), F.col("text"), F.lit("\n")), "clean_text")
-    )
-
-
-def q_year_cast(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    year_str = F.concat(F.lit(" "), F.year("o_orderdate").cast("string"), F.lit(" "))
-    return tables["orders"].select(F.col("o_orderkey"), handle_year(year_str, "order_year"))
-
-
-def q_datetime_normalize(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["lineitem"].select(
-        F.col("l_orderkey"), F.col("l_linenumber"), handle_datetime("l_shipdate", "ship_ts")
-    )
-
-
-def q_when_then_derivation(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["orders"].select(
-        F.col("o_orderkey"),
-        handle_enum_mapping("o_orderpriority", "priority_it", P.PRIORITY_MAPPING, default="ALTRO"),
-        F.when(F.col("o_totalprice") < 50000, F.lit("SMALL"))
-        .when(F.col("o_totalprice") < 200000, F.lit("MEDIUM"))
-        .otherwise(F.lit("LARGE"))
-        .alias("order_size"),
-    )
-
-
-def q_dup_name_disambiguation(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    named = tables["part"].select(F.col("p_partkey").alias("id"), F.col("p_type").alias("name"))
-    return disambiguate_names(named, "name", "id")
-
-
-def q_multiway_left_join(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    orders = tables["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    cust = tables["customer"].select(
-        F.col("c_custkey").alias("o_custkey"), F.col("c_name"), F.col("c_nationkey")
-    )
-    nation = tables["nation"].select(
-        F.col("n_nationkey").alias("c_nationkey"), F.col("n_name"), F.col("n_regionkey")
-    )
-    region = tables["region"].select(F.col("r_regionkey").alias("n_regionkey"), F.col("r_name"))
-    joined = left_join_chain(
-        orders, [(cust, "o_custkey", False), (nation, "c_nationkey", True), (region, "n_regionkey", True)]
-    )
-    return joined.select("o_orderkey", "c_name", "n_name", "r_name")
-
-
-def q_union_diagonal_relaxed(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    a = tables["orders"].select(F.col("o_orderkey"), F.col("o_totalprice"))
-    b = tables["orders"].select(F.col("o_orderkey"), F.col("o_orderpriority"))
-    return union_diagonal_relaxed(a, b)
-
-
-def q_groupby_agg(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    li = tables["lineitem"]
-    return (
-        li.where(F.col("l_shipdate") <= F.lit(datetime(1998, 9, 2)))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            exact_money_sum("l_quantity").alias("sum_qty"),
-            exact_money_sum("l_extendedprice").alias("sum_base_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_groupby_collect_list(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return (
-        tables["events"]
-        .groupBy("user_id")
-        .agg(
-            F.array_join(collect_sorted_list("event_type"), ",").alias("event_types"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-def q_distinct_dedup(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["customer"].select("c_mktsegment", "c_nationkey").distinct()
-
-
-def q_projection_pipeline(spark, sf_dir):
-    from area_etl_spark.plans.projections import ColumnSpec, ProjectionSpec, apply_projection
-
-    tables = _tables(spark, sf_dir)
-    spec = ProjectionSpec(
-        columns=[
-            ColumnSpec("l_orderkey", "order_id"),
-            ColumnSpec("l_linenumber", "line_no", cast="long"),
-            ColumnSpec("l_returnflag", "return_flag", fill_null="N"),
-            ColumnSpec(F.floor(F.col("l_quantity")).cast("long"), "qty"),
-        ],
-        filters=[F.col("l_discount") > 0.05],
-    )
-    return apply_projection(tables["lineitem"], spec)
-
-
-def q_pipeline_core(spark, sf_dir):
-    return P.core_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_poa(spark, sf_dir):
-    return P.poa_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_cronos(spark, sf_dir):
-    return P.cronos_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_auac(spark, sf_dir):
-    return P.auac_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_resolutions(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return P.resolutions_pipeline(tables)
-
-
-def q_pipeline_specialties(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return P.specialties_pipeline(tables)
-
-
-def q_pipeline_districts(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    seed = extract_csv(spark, SEED_CSV, schema_overrides={"region_code": "string"})
-    return P.districts_pipeline(tables, seed)
-
-
-def q_pipeline_companies(spark, sf_dir):
-    """1:1 recast of migrate_companies (reference core.py:275)."""
-    return P.companies_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_buildings(spark, sf_dir):
-    """1:1 recast of migrate_buildings (reference core.py:478)."""
-    return P.buildings_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_udo_types(spark, sf_dir):
-    """1:1 recast of migrate_udo_types (reference core.py:1199)."""
-    return P.udo_types_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_udos(spark, sf_dir):
-    """1:1 recast of migrate_udos (reference core.py:1456)."""
-    return P.udos_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_decontaminate_benchmark(spark, sf_dir):
-    """LLM training hygiene: flag training docs sharing word 8-grams with a
-    benchmark slice (doc_id % 61 == 0 plays the eval set — the modulus that
-    intersects the generator's planted duplicate clusters at every sf).
-    Inverted-index shingle join — shuffle O(shingles), benchmark side
-    broadcast."""
-    from area_etl_spark.operators.decontamination import decontaminate
-
-    docs = _tables(spark, sf_dir)["documents"]
-    train = docs.where(F.col("doc_id") % 61 != 0)
-    bench = docs.where(F.col("doc_id") % 61 == 0)
-    return decontaminate(train, bench, "text", "doc_id", n=8, min_fraction=0.2)
-
-
-BOILERPLATE_LINE = "Cookie notice: please accept the terms."
-
-
-def _synthetic_pages(docs):
-    """Multi-line page per document (the flat synthetic text carries no
-    newlines): a sentence-ish first line, a SHARED boilerplate line, a
-    too-short line, and an unterminated fragment — so the line filter and
-    the cross-document paragraph dedup both have real work. Mirrored
-    literally in the oracles."""
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.substring(F.col("text"), 1, 80), F.lit(".\n"),
-            F.lit(BOILERPLATE_LINE), F.lit("\n"),
-            F.lit("ok\n"),
-            F.substring(F.col("text"), 81, 60),
-        ).alias("page"),
-    )
-
-
-def q_clean_lines(spark, sf_dir):
-    """C4-style line filtering: keep lines with >= 3 words ending in
-    terminal punctuation, rebuild the page — pure Column expressions, no
-    explode, no shuffle."""
-    from area_etl_spark.operators.cleaning import c4_line_filter
-
-    pages = _synthetic_pages(_tables(spark, sf_dir)["documents"])
-    return pages.select("doc_id", c4_line_filter("page").alias("clean_text"))
-
-
-def q_dedup_paragraphs(spark, sf_dir):
-    """Cross-document paragraph dedup: the shared boilerplate line survives
-    only in its first (lowest doc_id, idx) occurrence; documents are
-    reassembled in paragraph order. One shuffle keyed on the paragraph
-    hash, one regroup keyed on doc_id."""
-    from area_etl_spark.operators.cleaning import dedup_paragraphs
-
-    pages = _synthetic_pages(_tables(spark, sf_dir)["documents"])
-    return dedup_paragraphs(pages, "page", "doc_id")
-
-
-def q_rebalance_mixture(spark, sf_dir):
-    """Corpus mixture rebalancing: src0→10%, src1→5%, src2→2%, rest→1% of
-    the original corpus size, deterministic md5 membership (downsample-only;
-    over-provisioned sources keep all rows)."""
-    from area_etl_spark.operators.sampling import rebalance_mixture
-
-    docs = _tables(spark, sf_dir)["documents"].select("doc_id", "source", "n_chars")
-    return rebalance_mixture(
-        docs, "doc_id", "source",
-        {"src0": 0.10, "src1": 0.05, "src2": 0.02},
-        default_share=0.01,
-    )
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Overlapping token-window chunking (RAG / training prep): 40-token
-    chunks every 30 tokens. Single narrow projection — tokenize, sequence
-    of start offsets, posexplode, slice; zero shuffles."""
-    from area_etl_spark.operators.chunking import chunk_documents
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return chunk_documents(docs, "text", "doc_id", chunk_size=40, stride=30)
-
-
-def q_duplicate_spans(spark, sf_dir):
-    """Span-level exact-duplicate signal (Lee et al. exact-substring dedup,
-    relational form): per-document count/fraction of 8-token grams that also
-    occur in another document. One gram-key aggregate + one equi-join back —
-    O(total tokens), never doc×doc."""
-    docs = _tables(spark, sf_dir)["documents"]
-    return D.duplicate_spans(docs, "text", "doc_id", n=8)
-
-
-def q_bigram_lm_score(spark, sf_dir):
-    """Self-trained token-bigram LM fluency score (the KenLM-perplexity slot
-    of a CCNet-style quality funnel): avg ln p(w2|w1) per document, model
-    trained on the same corpus as two hash aggregates, scored via equi-join
-    — the LM lives in a DataFrame, nothing collected."""
-    docs = _tables(spark, sf_dir)["documents"]
-    return TA.bigram_lm_score(docs, "text", "doc_id")
-
-
-def q_incremental_dedup(spark, sf_dir):
-    """Continuous-ingestion dedup: batch docs anti-joined against a
-    historical snapshot's content-hash index (history = doc_id % 3 != 0
-    deterministic split), then in-batch keep-lowest-id. One left_anti
-    equi-join on the 32-hex hash + one min-aggregate."""
-    docs = _tables(spark, sf_dir)["documents"]
-    history = docs.where(F.col("doc_id") % 3 != 0).select(
-        F.md5(F.trim(F.lower(F.col("text")))).alias("content_hash")
-    )
-    return D.incremental_dedup(docs, history, "text", "doc_id")
-
-
-def q_leakage_safe_split(spark, sf_dir):
-    """Leakage-safe train/val/test split: docs sharing a verbatim 8-token
-    span are coupled via connected components, and the 80/10/10 md5 draw is
-    keyed on the CLUSTER id — near-duplicates can never straddle a split
-    boundary. Oracle replays the pairs, a recursive-CTE component walk, and
-    the identical hex-prefix draw."""
-    from area_etl_spark.operators.sampling import leakage_safe_split
-
-    docs = _tables(spark, sf_dir)["documents"]
-    pairs = D.span_pairs(docs, "text", "doc_id", n=8)
-    return leakage_safe_split(docs, pairs, "doc_id", train=0.8, val=0.1)
-
-
-def q_inverted_index(spark, sf_dir):
-    """Document-partitioned inverted index (Lucene/Elasticsearch shard
-    layout): per-shard term dictionary + ascending postings. One shuffle on
-    (shard_id, term); hot terms bounded by shard size, not corpus size."""
-    from area_etl_spark.operators.indexing import inverted_index
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return inverted_index(docs, "text", "doc_id", n_shards=8)
-
-
-def q_search_terms(spark, sf_dir):
-    """Conjunctive term search over the inverted index: term-filtered index
-    scan → posting explode → per-doc distinct-term count == |query|. No
-    self-joins; shard results merge in one aggregate."""
-    from area_etl_spark.operators.indexing import inverted_index, search_terms
-
-    docs = _tables(spark, sf_dir)["documents"]
-    idx = inverted_index(docs, "text", "doc_id", n_shards=8)
-    return search_terms(idx, ["spark", "window", "merge"], mode="all")
-
-
-def q_bm25_search(spark, sf_dir):
-    """Okapi BM25 ranked retrieval (k1=1.2, b=0.75, +1 idf smoothing):
-    top-20 documents for a 3-term query. Scores rounded to 6 decimals
-    BEFORE the cut and ranked (score desc, doc_id) so the boundary is
-    engine-deterministic."""
-    from area_etl_spark.operators.indexing import bm25_search
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return bm25_search(docs, ["spark", "window", "merge"], "text", "doc_id", topk=20)
-
-
-def q_topk_per_group(spark, sf_dir):
-    """Aggregate-based per-group top-k (top-3 customers by order cents per
-    nation): collect → array_sort → slice, no window — a hot group sorts a
-    group-local array instead of stalling one reducer task. Oracle = the
-    equivalent row_number window, proving the forms agree."""
-    tables = _tables(spark, sf_dir)
-    cust_totals = (
-        tables["orders"]
-        .groupBy("o_custkey")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-    )
-    joined = (
-        cust_totals.join(
-            tables["customer"], F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(
-            F.broadcast(tables["nation"]),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("n_name", "c_custkey", "cents")
-    )
-    return AGG.topk_per_group(joined, ["n_name"], "cents", ["c_custkey"], 3)
-
-
-def q_corpus_report(spark, sf_dir):
-    """Per-source corpus dashboard: doc count, total whitespace tokens,
-    predicted-English share, mean quality score (operator:
-    operators/text_analysis.py:corpus_report — one staged narrow projection
-    + one hash aggregate)."""
-    tables = _tables(spark, sf_dir)
-    return TA.corpus_report(tables["documents"])
-
-
-def q_corpus_prep_pipeline(spark, sf_dir):
-    """END-TO-END training-corpus preparation — the full LLM-data funnel in
-    one declarative plan, fully SQL-oracled:
-
-      language-ID filter ('en') → quality-score filter (>= 0.5) → exact
-      dedup (keep lowest doc_id per md5 fingerprint) → fixed-budget sequence
-      packing (shard-local running sums).
-
-    Plan shape: one narrow scan computes lang + quality features (HOFs
-    single-evaluated via the staged-projection idiom), the dedup group-by is
-    the first shuffle (keyed on the fingerprint — shuffle O(|survivors|)),
-    the packing window the second (keyed on shard).  Composes the same
-    operators the individual queries exercise (text_language_id,
-    text_quality_score, dedup_exact, pack_sequences).
-    """
-    from area_etl_spark.operators.packing import pack_sequences
-
-    docs = _tables(spark, sf_dir)["documents"]
-    feats = TA.quality_features("text")
-    staged = docs.select(
-        "doc_id",
-        "text",
-        TA.language_id("text").alias("lid"),
-        feats["n_tokens"],
-        feats["stopword_ratio"],
-        feats["punct_ratio"],
-    )
-    scored = staged.select(
-        "doc_id",
-        "text",
-        "lid",
-        "n_tokens",
-        TA.quality_score_from_features(
-            F.col("n_tokens"), F.col("stopword_ratio"), F.col("punct_ratio")
-        ).alias("q"),
-    )
-    kept = scored.where((F.col("lid") == "en") & (F.col("q") >= 0.5))
-    survivors = (
-        kept.groupBy(F.md5(F.col("text").cast("binary")).alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("n_tokens").alias("n_tokens"))
-        .select("doc_id", "n_tokens")
-    )
-    return pack_sequences(survivors, "n_tokens", budget=2048, id_col="doc_id", num_shards=64)
-
-
-def q_pipeline_udo_specialties(spark, sf_dir):
-    """1:1 recast of migrate_udo_specialties (reference core.py:1576)."""
-    return P.udo_specialties_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_healthcare_companies(spark, sf_dir):
-    """1:1 recast of migrate_healthcare_companies (reference cronos.py:87):
-    id/code/name scalar toolkit + broadcast left join to the previously-
-    migrated ulss dimension on a text code."""
-    return P.healthcare_companies_pipeline(_tables(spark, sf_dir))
-
-
-def q_pipeline_requirements(spark, sf_dir):
-    """1:1 recast of migrate_requirements (reference auac.py:135): 3-way
-    conditional state, s/n boolean, conditional-FK + runtime fallback id,
-    response-type dim join with text normalization, timestamp toolkit."""
-    return P.requirements_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_requirement_taxonomies(spark, sf_dir):
-    """1:1 recast of migrate_requirement_taxonomies (reference auac.py:42):
-    lower-trim name filter on the general branch, per-branch is_readonly
-    literals, explicit NULL disabled_at, literal '-' fallback row, relaxed
-    concat."""
-    return P.requirement_taxonomies_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_requirement_lists(spark, sf_dir):
-    """1:1 recast of migrate_requirement_lists (reference auac.py:104):
-    three stripped scalars (id NOT lowercased) + default timestamp toolkit,
-    one narrow projection."""
-    return P.requirement_lists_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_procedures(spark, sf_dir):
-    """1:1 recast of migrate_procedures (reference auac.py:211): STATO-driven
-    disabled ladder (disabled_value='CESTINATA'), CESTINATA→BOZZA status
-    rewrite, two-column progressive-code fill_null, DESCR
-    upper/space→_/dot-strip dim join.  DATE columns ride as timestamp for
-    the driver gate (Spark DATE → pandas object dtype, the vocab_encode
-    canonicalizer failure class); the pipeline/contract keep true DATEs."""
-    out = P.procedures_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-    for c in ("completion_date", "sent_date", "expiration_date"):
-        out = out.withColumn(c, F.col(c).cast("timestamp"))
-    return out
-
-
-def q_or_join(spark, sf_dir):
-    """OR-predicate join (match on nationkey OR on a derived code) rewritten
-    as a union of hash equi-joins + distinct — the BroadcastNestedLoopJoin
-    escape hatch; result-identical to the OR join (the oracle IS the OR
-    join)."""
-    from area_etl_spark.operators.joins import or_join
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        F.col("c_custkey"), F.col("c_nationkey").alias("l_nat"),
-        (F.col("c_custkey") % 30).alias("l_code"),
-    )
-    supp = tables["supplier"].select(
-        F.col("s_suppkey"), F.col("s_nationkey").alias("r_nat"),
-        (F.col("s_suppkey") % 30).alias("r_code"),
-    )
-    out = or_join(cust, supp, [("l_nat", "r_nat"), ("l_code", "r_code")])
-    return out.groupBy("l_nat").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.countDistinct("s_suppkey").alias("n_suppliers"),
-    )
-
-
-def q_json_flatten(spark, sf_dir):
-    """Nested semi-structured flattening: a JSON ARRAY-of-structs column
-    (synthesized per order) parsed with an explicit schema and exploded to
-    one row per element — from_json + explode, the lake-side LATERAL
-    json_each."""
-    tables = _tables(spark, sf_dir)
-    o = tables["orders"]
-    js = F.format_string(
-        '[{"slot": 1, "amt": %d}, {"slot": 2, "amt": %d}]',
-        (F.col("o_orderkey") % 100).cast("int"),
-        ((F.col("o_orderkey") * 7) % 100).cast("int"),
-    )
-    parsed = o.select(
-        "o_orderkey",
-        F.from_json(js, "array<struct<slot:int, amt:int>>").alias("items"),
-    )
-    return (
-        parsed.select("o_orderkey", F.explode("items").alias("it"))
-        .select("o_orderkey", F.col("it.slot").alias("slot"), F.col("it.amt").alias("amt"))
-    )
-
-
-def q_bitmap_distinct(spark, sf_dir):
-    """Exact distinct suppliers per return flag via bitmap aggregates
-    (constant-size per-bucket accumulators instead of shuffling every
-    distinct value)."""
-    from area_etl_spark.operators.aggregates import bitmap_distinct_count
-
-    li = _tables(spark, sf_dir)["lineitem"]
-    return bitmap_distinct_count(li, ["l_returnflag"], "l_suppkey")
-
-
-GOLDEN_PRIORITY = {"1-URGENT": 3, "2-HIGH": 2, "3-MEDIUM": 1}
-
-
-def q_golden_record(spark, sf_dir):
-    """MDM survivorship: per customer, each attribute independently from the
-    highest-priority source row that has it non-null (priority → recency →
-    value tie-break); unmapped sources rank below every mapped one."""
-    from area_etl_spark.operators.diff import golden_record
-
-    o = _tables(spark, sf_dir)["orders"]
-    src = o.select(
-        F.col("o_custkey").alias("key"),
-        F.col("o_orderpriority").alias("src"),
-        F.col("o_orderdate").alias("ts"),
-        F.when(F.col("o_orderkey") % 3 != 0, F.col("o_orderstatus")).alias("v_status"),
-        F.when(
-            F.col("o_orderkey") % 5 != 0,
-            F.round(F.col("o_totalprice") * 100).cast("long"),
-        ).alias("v_price"),
-    )
-    return golden_record(
-        src, ["key"], "src", GOLDEN_PRIORITY, "ts", ["v_status", "v_price"]
-    )
-
-
-def q_allocate_budget(spark, sf_dir):
-    """Largest-remainder proration: 1,000,000 integer units per order
-    priority spread across its orders ∝ total price — shares are integers
-    summing exactly to the target (Hamilton apportionment)."""
-    from area_etl_spark.operators.allocation import allocate_largest_remainder
-
-    o = _tables(spark, sf_dir)["orders"]
-    w = o.select(
-        "o_orderpriority",
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("w_cents"),
-    )
-    return allocate_largest_remainder(
-        w, ["o_orderpriority"], "o_orderkey", "w_cents", 1_000_000
-    )
-
-
-def q_k_anonymity(spark, sf_dir):
-    """k-anonymity equivalence classes over (nation, market segment): class
-    size + whether it meets k=5 — the privacy gate before a data release."""
-    from area_etl_spark.operators.quality import k_anonymity
-
-    cust = _tables(spark, sf_dir)["customer"]
-    return k_anonymity(cust, ["c_nationkey", "c_mktsegment"], k=5)
-
-
-def q_weighted_median(spark, sf_dir):
-    """Lower weighted median price (cents) per return flag, weighted by
-    quantity — cumulative-weight window, exact integer threshold test."""
-    from area_etl_spark.operators.aggregates import weighted_median
-
-    li = _tables(spark, sf_dir)["lineitem"]
-    s = li.select(
-        "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents"),
-        F.col("l_quantity").cast("long").alias("qty"),
-    )
-    return weighted_median(s, ["l_returnflag"], "price_cents", "qty")
-
-
-def q_gini_concentration(spark, sf_dir):
-    """Per-priority Gini index of order value concentration from exact
-    DECIMAL(38,0) rank-weighted sums; only the final division is float."""
-    from area_etl_spark.operators.quality import gini_coefficient
-
-    o = _tables(spark, sf_dir)["orders"]
-    s = o.select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return gini_coefficient(s, ["o_orderpriority"], "cents")
-
-
-def q_rolling_corr(spark, sf_dir):
-    """Trailing 30-row quantity↔price correlation per supplier from exact
-    integer window sums (only the closed-form division/sqrt is float)."""
-    from area_etl_spark.operators.windows import rolling_corr
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        "l_shipdate",
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    # (orderkey, linenumber) is NOT unique in the synthetic data at sf0.1 —
-    # append the value columns so ties are bit-identical rows and the frame
-    # sums are order-invariant (a genuinely total order per key)
-    out = rolling_corr(
-        li,
-        ["l_suppkey"],
-        ["l_shipdate", "l_orderkey", "l_linenumber", "qty", "cents"],
-        "qty",
-        "cents",
-        window_rows=30,
-    )
-    return out.select("l_suppkey", "l_orderkey", "l_linenumber", "rolling_corr")
-
-
-def q_cusum_drift(spark, sf_dir):
-    """Per-user CUSUM drift report (mean-shift detection) in all-integer
-    arithmetic: n·C_k = n·P_k − k·S stays BIGINT, threshold 5.00 units."""
-    from area_etl_spark.operators.windows import cusum_stats
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return cusum_stats(ev, ["user_id"], ["ts", "event_id"], "cents", threshold=500)
-
-
-def q_url_canonical_dedup(spark, sf_dir):
-    """Crawl-side URL canonicalization: messy synthesized URLs (case, www,
-    default ports, utm params, fragments, trailing slashes) normalized with
-    narrow regexps, then per-domain unique-URL counts."""
-    from area_etl_spark.operators.cleaning import canonicalize_urls
-
-    d = _tables(spark, sf_dir)["documents"]
-    url = F.concat(
-        F.lit("HTTP://WWW.Site"),
-        (F.col("doc_id") % 37).cast("string"),
-        F.lit(".COM"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit(":80")).otherwise(F.lit("")),
-        F.lit("/Articles/"),
-        (F.col("doc_id") % 97).cast("string"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("?utm_source=feed&ref="), (F.col("doc_id") % 5).cast("string")),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(F.lit("?ref="), (F.col("doc_id") % 5).cast("string")),
-        )
-        .otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 6 == 0, F.lit("#sec")).otherwise(F.lit("")),
-    )
-    canon = canonicalize_urls(d.select("doc_id", url.alias("url")), "url")
-    return canon.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_urls"),
-        F.countDistinct("canon_url").alias("n_canonical"),
-    )
-
-
-def q_readability(spark, sf_dir):
-    """Flesch reading-ease per document from portable integer counts
-    (letter runs / sentence punctuation runs / vowel-group syllables)."""
-    from area_etl_spark.operators.text_analysis import (
-        readability_features,
-        readability_score,
-    )
-
-    d = _tables(spark, sf_dir)["documents"]
-    f = readability_features("text")
-    return d.select(
-        "doc_id",
-        f["n_words"].alias("n_words"),
-        f["n_sentences"].alias("n_sentences"),
-        f["n_syllables"].alias("n_syllables"),
-        readability_score("text").alias("flesch"),
-    )
-
-
-def q_negative_sampling(spark, sf_dir):
-    """Contrastive-training negative pairs: 3 deterministic md5-drawn
-    partners per anchor over the dense doc-id space, self-draws remapped;
-    partner source attached by equi-join."""
-    from area_etl_spark.operators.sampling import negative_pairs
-
-    d = _tables(spark, sf_dir)["documents"]
-    pairs = negative_pairs(d, "doc_id", k=3)
-    return pairs.join(
-        d.select(F.col("doc_id").alias("negative_id"), F.col("source").alias("neg_source")),
-        "negative_id",
-    ).select("anchor_id", "neg_i", "negative_id", "neg_source")
-
-
-def q_score_calibration(spark, sf_dir):
-    """Cross-source score calibration: percent-rank of n_chars within each
-    source — 'top 20% of every source' becomes one global filter."""
-    from area_etl_spark.operators.quality import calibrate_percent_rank
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "source", "n_chars")
-    return calibrate_percent_rank(d, "source", "n_chars")
-
-
-def q_session_paths(spark, sf_dir):
-    """Top navigation paths: 30-min-gap sessionization, then event-type
-    trigrams via two leads inside each session, counted globally."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"].select("user_id", "ts", "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_sess = F.when(
-        F.col("_prev").isNull()
-        | (F.expr("timestampdiff(MICROSECOND, _prev, ts)") > 1800 * 1_000_000),
-        1,
-    ).otherwise(0)
-    sessed = (
-        ev.withColumn("_prev", F.lag("ts").over(w))
-        .withColumn(
-            "_sess",
-            F.sum(new_sess).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    w2 = Window.partitionBy("user_id", "_sess").orderBy("ts", "event_id")
-    tri = (
-        sessed.withColumn("_e2", F.lead("event_type", 1).over(w2))
-        .withColumn("_e3", F.lead("event_type", 2).over(w2))
-        .where(F.col("_e3").isNotNull())
-        .select(
-            F.concat_ws(">", "event_type", "_e2", "_e3").alias("path")
-        )
-    )
-    return tri.groupBy("path").agg(F.count(F.lit(1)).alias("n_sessions_through"))
-
-
-def q_sorted_neighborhood(spark, sf_dir):
-    """Sorted-neighborhood blocking over the balance axis: each customer
-    paired with its 3 nearest neighbors in (acctbal, custkey) order —
-    rank from the range-shuffle dense-id pass, neighbors from plain
-    equi-joins (no single-partition window)."""
-    from area_etl_spark.operators.dedup import sorted_neighborhood_pairs
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    return sorted_neighborhood_pairs(c, "c_custkey", ["bal_cents"], window=4)
-
-
-def q_linkage_classify(spark, sf_dir):
-    """Fellegi–Sunter linkage scoring over hash-blocked customer pairs:
-    integer agreement weights on nation / segment / balance proximity,
-    two-threshold match/possible classification."""
-    from area_etl_spark.operators.linkage import linkage_score
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        "c_nationkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-        (F.col("c_custkey") % 100).alias("_block"),
-    )
-    a = c.select(
-        F.col("c_custkey").alias("id_a"),
-        F.col("c_nationkey").alias("nat_a"),
-        F.col("c_mktsegment").alias("seg_a"),
-        F.col("cents").alias("bal_a"),
-        "_block",
-    )
-    b = c.select(
-        F.col("c_custkey").alias("id_b"),
-        F.col("c_nationkey").alias("nat_b"),
-        F.col("c_mktsegment").alias("seg_b"),
-        F.col("cents").alias("bal_b"),
-        "_block",
-    )
-    pairs = a.join(b, "_block").where(F.col("id_a") < F.col("id_b"))
-    rules = [
-        (F.col("nat_a") == F.col("nat_b"), 2, -1),
-        (F.col("seg_a") == F.col("seg_b"), 1, -1),
-        (F.abs(F.col("bal_a") - F.col("bal_b")) <= 50_000, 2, -2),
-    ]
-    out = linkage_score(pairs, rules, match_threshold=4, possible_threshold=1)
-    return out.select("id_a", "id_b", "score", "tier")
-
-
-def q_interval_overlap(spark, sf_dir):
-    """1-D interval overlap join: even vs odd event streams as [ts, ts+dur]
-    intervals in exact epoch micros, grid-bucketed — one equi-join on the
-    cell, never a cross join; exact integer overlap length."""
-    from area_etl_spark.operators.intervals import interval_overlap_join
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("s"),
-        (
-            F.unix_micros(F.col("ts"))
-            + (F.round(F.col("value") * 100).cast("long") % 600 + 1) * 1_000_000
-        ).alias("e"),
-    )
-    left = ev.where(F.col("event_id") % 2 == 0).withColumnRenamed("event_id", "id_a")
-    right = ev.where(F.col("event_id") % 2 == 1).withColumnRenamed("event_id", "id_b")
-    return interval_overlap_join(
-        left, right, "id_a", "id_b", "s", "e", bucket_width=600 * 1_000_000
-    )
-
-
-def q_bootstrap_ci(spark, sf_dir):
-    """Poisson-bootstrap 90% CI for the mean event value per type: 50
-    deterministic md5-drawn Poisson(1) replicates, exact integer sums,
-    interpolated percentile over the replicate means."""
-    from area_etl_spark.operators.bootstrap import poisson_bootstrap_mean_ci
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return poisson_bootstrap_mean_ci(
-        ev, ["event_type"], "event_id", "cents", n_replicates=50,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_keyness_top_terms(spark, sf_dir):
-    """Chi-square keyness: the 10 most source-discriminative terms per
-    source (over-represented only), exact contingency counts with the
-    square in DECIMAL(38,0)."""
-    from area_etl_spark.operators.text_analysis import keyness_terms
-
-    return keyness_terms(_tables(spark, sf_dir)["documents"], k=10)
-
-
-def q_ewma_smooth(spark, sf_dir):
-    """α=1/2 EWMA per user in exact truncated form: 16 shared-sort lags,
-    integer 2^i-weighted numerator/denominator, one final division."""
-    from area_etl_spark.operators.windows import ewma_smooth
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    out = ewma_smooth(ev, ["user_id"], ["ts", "event_id"], "cents", n_lags=16)
-    return out.select("user_id", "event_id", "ewma")
-
-
-def q_fk_orphans(spark, sf_dir):
-    """Referential-integrity pre-load gate: orphan counts for the schema's
-    three FK relations, each one broadcast anti-join + count."""
-    from area_etl_spark.operators.quality import fk_orphan_report
-
-    t = _tables(spark, sf_dir)
-    return fk_orphan_report(
-        [
-            ("orders->customer", t["orders"], "o_custkey", t["customer"], "c_custkey"),
-            ("lineitem->part", t["lineitem"], "l_partkey", t["part"], "p_partkey"),
-            ("lineitem->supplier", t["lineitem"], "l_suppkey", t["supplier"], "s_suppkey"),
-        ]
-    )
-
-
-def q_date_dimension(spark, sf_dir):
-    """Kimball calendar dimension for 2024, generated with sequence() —
-    portable attribute arithmetic, ISO week, Monday-based weekday.  The
-    date column rides as timestamp for the driver gate (Spark DATE →
-    pandas object dtype, the vocab_encode canonicalizer failure class);
-    the operator itself emits a true DATE."""
-    from area_etl_spark.sources.extract import date_dimension
-
-    return date_dimension(spark, "2024-01-01", "2024-12-31").withColumn(
-        "date", F.col("date").cast("timestamp")
-    )
-
-
-def q_join_size_estimate(spark, sf_dir):
-    """Pre-flight join explosion check: exact predicted |lineitem ⋈ orders|
-    from per-key counts — two aggregates instead of the join itself."""
-    from area_etl_spark.operators.quality import join_size_estimate
-
-    t = _tables(spark, sf_dir)
-    li = t["lineitem"].select(F.col("l_orderkey").alias("k"))
-    o = t["orders"].select(F.col("o_orderkey").alias("k"))
-    return join_size_estimate(li, o, ["k"])
-
-
-def q_domain_capped_corpus(spark, sf_dir):
-    """Crawl-politeness composition: canonicalize synthesized URLs →
-    first-occurrence dedup by canonical URL → keep the top 3 docs per
-    domain by (n_chars, doc_id) — the per-site cap a crawl corpus applies
-    before mixing."""
-    from pyspark.sql import Window
-
-    from area_etl_spark.operators.cleaning import canonicalize_urls
-
-    d = _tables(spark, sf_dir)["documents"]
-    url = F.concat(
-        F.lit("HTTP://WWW.Site"),
-        (F.col("doc_id") % 37).cast("string"),
-        F.lit(".COM"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit(":80")).otherwise(F.lit("")),
-        F.lit("/Articles/"),
-        (F.col("doc_id") % 97).cast("string"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    canon = canonicalize_urls(
-        d.select("doc_id", "n_chars", url.alias("url")), "url"
-    )
-    first = Window.partitionBy("canon_url").orderBy("doc_id")
-    deduped = (
-        canon.withColumn("_rn", F.row_number().over(first))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    cap = Window.partitionBy("domain").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    return (
-        deduped.withColumn("domain_rank", F.row_number().over(cap))
-        .where(F.col("domain_rank") <= 3)
-        .select("domain", "domain_rank", "doc_id", "n_chars")
-    )
-
-
-def q_id_gap_report(spark, sf_dir):
-    """Sequence-integrity gaps over a planted-holes id stream, found with
-    cell-partitioned leads + a bounded per-cell seam pass — never a global
-    single-partition sort; oracle = the naive global lead."""
-    from area_etl_spark.operators.quality import id_gap_report
-
-    o = _tables(spark, sf_dir)["orders"].where(F.col("o_orderkey") % 7 != 3)
-    return id_gap_report(o, "o_orderkey", bucket=1000)
-
-
-KEYWORD_TAGS = [
-    ("join", "relational"),
-    ("sort", "relational"),
-    ("hash", "relational"),
-    ("scan", "io"),
-    ("stream", "streaming"),
-    ("window", "analytics"),
-]
-
-
-def q_keyword_tagging(spark, sf_dir):
-    """Taxonomy tagging: each doc gets every tag whose keyword list
-    intersects its token set — token explode ⋈ broadcast lexicon."""
-    from area_etl_spark.operators.text_analysis import tag_by_keywords
-
-    kw = spark.createDataFrame(KEYWORD_TAGS, "term string, tag string")
-    return tag_by_keywords(_tables(spark, sf_dir)["documents"], kw)
-
-
-def q_cuped_adjustment(spark, sf_dir):
-    """CUPED variance-reduced A/B means: pre-period event value as the
-    covariate, experiment-period value as the metric, pooled θ from exact
-    BIGINT sufficient statistics."""
-    from area_etl_spark.operators.experiments import cuped_adjusted_means
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    cutoff = F.lit("2024-01-15").cast("timestamp")
-    per_user = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("ts") < cutoff, F.col("cents")).otherwise(0)).alias("x"),
-        F.sum(F.when(F.col("ts") >= cutoff, F.col("cents")).otherwise(0)).alias("y"),
-    )
-    units = per_user.withColumn("variant", (F.col("user_id") % 2).cast("int"))
-    return cuped_adjusted_means(units, "variant", "y", "x")
-
-
-MDM_SEGMENT_PRIORITY = {"BUILDING": 3, "AUTOMOBILE": 2, "MACHINERY": 1}
-
-
-def q_mdm_golden_pipeline(spark, sf_dir):
-    """End-to-end MDM: hash-blocked pairs → Fellegi–Sunter scoring (match
-    tier only) → connected components → per-cluster golden record
-    (segment-priority survivorship, custkey as recency).  The full
-    entity-resolution workflow as one composition; oracle replays the
-    components with a recursive CTE."""
-    from area_etl_spark.operators.diff import golden_record
-    from area_etl_spark.operators.graph import connected_components
-    from area_etl_spark.operators.linkage import linkage_score
-
-    cust = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
-    side = lambda s: cust.select(  # noqa: E731
-        F.col("c_custkey").alias(f"id_{s}"),
-        F.col("c_nationkey").alias(f"nat_{s}"),
-        F.col("c_mktsegment").alias(f"seg_{s}"),
-        F.col("cents").alias(f"bal_{s}"),
-        (F.col("c_custkey") % 100).alias("_block"),
-    )
-    pairs = side("a").join(side("b"), "_block").where(F.col("id_a") < F.col("id_b"))
-    rules = [
-        (F.col("nat_a") == F.col("nat_b"), 2, -1),
-        (F.col("seg_a") == F.col("seg_b"), 1, -1),
-        (F.abs(F.col("bal_a") - F.col("bal_b")) <= 10_000, 2, -2),
-    ]
-    matches = linkage_score(pairs, rules, match_threshold=4, possible_threshold=4)
-    cc = connected_components(matches.select("id_a", "id_b"), "id_a", "id_b")
-    labeled = cust.join(
-        cc.withColumnRenamed("node", "c_custkey"), "c_custkey", "left"
-    ).withColumn("cluster", F.coalesce(F.col("label"), F.col("c_custkey")))
-    golden = golden_record(
-        labeled,
-        ["cluster"],
-        "c_mktsegment",
-        MDM_SEGMENT_PRIORITY,
-        "c_custkey",
-        ["c_name", "cents"],
-    )
-    sizes = labeled.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
-    return golden.join(sizes, "cluster").select(
-        "cluster", "n_members", "c_name", "cents"
-    )
-
-
-def q_revenue_bridge(spark, sf_dir):
-    """Period-over-period revenue waterfall: per-customer totals for two
-    halves of the window, classified new / churned / expansion /
-    contraction / flat — category deltas reconcile exactly to the total
-    change (integer cents end-to-end)."""
-    from area_etl_spark.operators.business import revenue_bridge
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_custkey",
-        "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    cutoff = F.lit("1997-01-01").cast("timestamp")
-    prior = o.where(F.col("o_orderdate") < cutoff).groupBy("o_custkey").agg(
-        F.sum("cents").alias("amt")
-    )
-    current = o.where(F.col("o_orderdate") >= cutoff).groupBy("o_custkey").agg(
-        F.sum("cents").alias("amt")
-    )
-    return revenue_bridge(prior, current, "o_custkey", "amt")
-
-
-def q_rfm_segments(spark, sf_dir):
-    """RFM quintile segmentation per customer (recency / frequency /
-    monetary ntiles over the per-key aggregate, key-tie-broken; 555 best)."""
-    from area_etl_spark.operators.business import rfm_segments
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_custkey",
-        "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return rfm_segments(o, "o_custkey", "o_orderdate", "cents", "2003-01-01")
-
-
-def q_drift_chi2(spark, sf_dir):
-    """Distribution drift between two shipment eras of the price column:
-    fixed-width integer bins, exact two-sample chi-square summed in sorted
-    bin order (the PSI monitor without the non-portable ln)."""
-    from area_etl_spark.operators.quality import drift_chi2
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    cutoff = F.lit("1997-01-01").cast("timestamp")
-    base = li.where(F.col("l_shipdate") < cutoff)
-    cur = li.where(F.col("l_shipdate") >= cutoff)
-    return drift_chi2(base, cur, "cents", bin_width=100_000)
-
-
-def q_knn_classify(spark, sf_dir):
-    """k-NN majority-vote labeling: every 40th vector classified by its 5
-    nearest corpus neighbors (cosine, rounded before ranking; ties →
-    smaller label via struct-min argmax)."""
-    from area_etl_spark.operators.similarity import knn_classify
-
-    emb = _tables(spark, sf_dir)["embeddings"]
-    queries = emb.where(F.col("vec_id") % 40 == 0)
-    corpus = emb.where(F.col("vec_id") % 40 != 0)
-    return knn_classify(corpus, queries, k=5)
-
-
-def q_embedding_dim_stats(spark, sf_dir):
-    """Per-dimension embedding health stats (dead/saturated-dim monitor):
-    floats quantized to exact 1e-6 integer units first, so the sums are
-    engine-reproducible."""
-    from area_etl_spark.operators.similarity import embedding_dim_stats
-
-    return embedding_dim_stats(_tables(spark, sf_dir)["embeddings"])
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 vector quantization (4× ANN storage cut): per-vector
-    amax scaling, portable floor(+0.5) rounding, dequant scale kept.
-
-    The code array is emitted CSV-serialized (``q8_csv``) — the driver's
-    pandas canonicalizer can't sort an array column (vocab_encode's r7 err
-    class; schema-audit r8 flagged this as the only other oracled query
-    emitting a complex type)."""
-    from area_etl_spark.operators.similarity import quantize_int8
-
-    emb = _tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    return quantize_int8(emb).select(
-        "vec_id",
-        F.array_join(F.transform("q8", lambda x: x.cast("string")), ",").alias("q8_csv"),
-        "q_scale",
-    )
-
-
-def q_asof_forward(spark, sf_dir):
-    """Forward as-of: each event's NEXT strictly-later purchase by the same
-    user (time-to-next-event join) — union-merge with a descending window,
-    one shuffle; oracle = DuckDB's native ASOF with the < inequality."""
-    from area_etl_spark.operators.asof import asof_join_forward
-
-    ev = _tables(spark, sf_dir)["events"]
-    left = ev.select("event_id", "user_id", "ts")
-    right = ev.where(F.col("event_type") == "purchase").select("user_id", "ts")
-    out = asof_join_forward(
-        left, right, "user_id", "ts", "ts", value_cols=[], strict=True
-    )
-    return out.select("event_id", "user_id", "ts", "ts_asof")
-
-
-def q_ohlc_bars(spark, sf_dir):
-    """Hourly OHLCV bars per event type: one hash aggregate, open/close as
-    struct-min/max argmins over (time, value) — deterministic under
-    same-instant ties, no windows."""
-    from area_etl_spark.operators.windows import ohlc_bars
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return ohlc_bars(ev, ["event_type"], "ts", "cents", bar_seconds=3600)
-
-
-FIXED_WIDTH_SPECS = [
-    ("o_orderkey", 12, "right"),
-    ("o_custkey", 12, "right"),
-    ("o_orderstatus", 4, "left"),
-    ("cents", 14, "right"),
-    ("o_orderpriority", 20, "left"),
-]
-
-
-def q_fixed_width_roundtrip(spark, sf_dir):
-    """Fixed-width (mainframe) interchange: format orders as padded
-    records, parse back with substring+trim+cast — the roundtrip is
-    lossless so the oracle is the plain projection."""
-    from area_etl_spark.sources.extract import format_fixed_width, parse_fixed_width
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        "o_orderpriority",
-    )
-    lines = format_fixed_width(o, FIXED_WIDTH_SPECS)
-    dtypes = {
-        "o_orderkey": "long",
-        "o_custkey": "long",
-        "o_orderstatus": "string",
-        "cents": "long",
-        "o_orderpriority": "string",
-    }
-    return parse_fixed_width(lines, FIXED_WIDTH_SPECS, dtypes)
-
-
-def q_phrase_search(spark, sf_dir):
-    """Exact phrase query ('hash join') over the positional inverted
-    index: pruned postings joined per term, adjacency via shifted position
-    intersection — Lucene's positional merge, relationally."""
-    from area_etl_spark.operators.indexing import phrase_search, positional_index
-
-    idx = positional_index(_tables(spark, sf_dir)["documents"])
-    return phrase_search(idx, ["hash", "join"])
-
-
-TABLE_CHECKSUM_COLS = [
-    "o_orderkey",
-    "o_custkey",
-    "o_orderstatus",
-    "cents",
-    "o_orderpriority",
-]
-
-
-def q_table_checksum(spark, sf_dir):
-    """Order-independent migration checksum of orders: commutative sum of
-    48-bit md5 prefixes over a canonical row encoding — one scan, any
-    partitioning, replayable in any engine."""
-    from area_etl_spark.operators.quality import table_checksum
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        "o_orderpriority",
-    )
-    # checksum rides as string for the driver gate: Spark decimal(38,0) →
-    # pandas object-Decimal while duckdb DECIMAL/HUGEINT → LOSSY float64
-    return table_checksum(o, TABLE_CHECKSUM_COLS).withColumn(
-        "checksum", F.col("checksum").cast("string")
-    )
-
-
-def q_group_sample_n(spark, sf_dir):
-    """Balanced corpus construction: exactly 2 deterministic docs per
-    (lang, source) cell via md5-ordered in-group ranks."""
-    from area_etl_spark.operators.sampling import group_sample_n
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "lang", "source")
-    return group_sample_n(d, ["lang", "source"], "doc_id", n=2)
-
-
-def q_ltv_curve(spark, sf_dir):
-    """Cohort LTV curve: signup-week cohorts × days-since-signup, per-day
-    purchase revenue and its running total (exact cents; the post-agg
-    cumulative window is bounded by days-per-cohort)."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"]
-    signups = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    j = purchases.join(signups, "user_id").where(F.col("ts") >= F.col("signup_ts"))
-    daily = (
-        j.select(
-            # timestamp, not cast("date"): DATE → pandas object dtype breaks
-            # the driver canonicalizer (vocab_encode failure class)
-            F.date_trunc("week", F.col("signup_ts")).alias("cohort_week"),
-            F.datediff(F.col("ts").cast("date"), F.col("signup_ts").cast("date")).alias(
-                "day_offset"
-            ),
-            "cents",
-        )
-        .groupBy("cohort_week", "day_offset")
-        .agg(F.sum("cents").alias("revenue_cents"))
-    )
-    w = (
-        Window.partitionBy("cohort_week")
-        .orderBy("day_offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return daily.withColumn("cum_revenue_cents", F.sum("revenue_cents").over(w))
-
-
-def q_priority_sample_grouped(spark, sf_dir):
-    """Stratified weighted sampling: 5 quality-weighted docs per source via
-    per-group priority ranks (q = w/u, ln-free portable draw)."""
-    from area_etl_spark.operators.sampling import priority_sample_grouped
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "source", "n_chars")
-    return priority_sample_grouped(d, ["source"], "doc_id", "n_chars", k=5)
-
-
-WATERFALL_TIERS = [
-    ("exact", [("key_dirty", "c_custkey")]),
-    ("by_name", [("name_dirty", "c_name")]),
-]
-
-
-def q_waterfall_join(spark, sf_dir):
-    """Cascading match: dirty inbound rows resolve against the customer
-    master by exact key, then by name, else stay unmatched — each tier one
-    equi-join + anti-join on the shrinking remainder."""
-    from area_etl_spark.operators.joins import waterfall_join
-
-    cust = _tables(spark, sf_dir)["customer"]
-    incoming = cust.select(
-        F.col("c_custkey").alias("in_id"),
-        F.when(F.col("c_custkey") % 3 == 0, F.col("c_custkey"))
-        .otherwise(F.lit(-1))
-        .alias("key_dirty"),
-        F.when(F.col("c_custkey") % 3 != 2, F.col("c_name"))
-        .otherwise(F.concat(F.lit("zzz-"), F.col("c_custkey").cast("string")))
-        .alias("name_dirty"),
-    )
-    out = waterfall_join(
-        incoming, cust.select("c_custkey", "c_name"), "in_id", "c_custkey", WATERFALL_TIERS
-    )
-    return out.select("in_id", "matched_id", "match_tier")
-
-
-def q_interval_integrity(spark, sf_dir):
-    """SCD2-style validity-interval validator over synthesized per-customer
-    order intervals: report every overlap/gap with the offending neighbor
-    start — empty output is the pass signal."""
-    from area_etl_spark.operators.intervals import interval_integrity_report
-
-    o = _tables(spark, sf_dir)["orders"]
-    tus = F.unix_micros(F.col("o_orderdate"))
-    iv = o.select(
-        "o_custkey",
-        tus.alias("s"),
-        (
-            tus
-            + (F.round(F.col("o_totalprice") * 100).cast("long") % 30 + 1)
-            * F.lit(86_400_000_000)
-        ).alias("e"),
-    )
-    return interval_integrity_report(iv, ["o_custkey"], "s", "e")
-
-
-def q_session_quality_report(spark, sf_dir):
-    """Daily session quality: sessions, bounces (single-event sessions),
-    exact median session duration — sessionization reused, rollup per
-    session-start day."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"].select("user_id", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_sess = F.when(
-        F.col("_prev").isNull()
-        | (F.expr("timestampdiff(MICROSECOND, _prev, ts)") > 1800 * 1_000_000),
-        1,
-    ).otherwise(0)
-    sessed = (
-        ev.withColumn("_prev", F.lag("ts").over(w))
-        .withColumn(
-            "_sess",
-            F.sum(new_sess).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    per_session = sessed.groupBy("user_id", "_sess").agg(
-        F.min("ts").alias("_start"),
-        F.count(F.lit(1)).alias("_n_events"),
-        (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("_dur_us"),
-    )
-    return (
-        # date_trunc (timestamp) not cast("date"): Spark DATE → pandas
-        # object dtype, which the driver canonicalizer hashes differently
-        # from DuckDB's datetime64 (the vocab_encode failure class)
-        per_session.groupBy(F.date_trunc("day", F.col("_start")).alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum(F.when(F.col("_n_events") == 1, 1).otherwise(0)).alias("n_bounces"),
-            F.percentile(F.col("_dur_us"), F.lit(0.5)).alias("median_duration_us"),
-        )
-    )
-
-
-def q_bom_explosion(spark, sf_dir):
-    """BOM explosion over a derived part hierarchy (parent = key div 10):
-    per root assembly, node count and total rolled-up cost — edge-quantity
-    PRODUCTS carried through pointer doubling; oracle replays with a
-    recursive CTE."""
-    from area_etl_spark.operators.graph import bom_rollup
-
-    p = _tables(spark, sf_dir)["part"]
-    edges = p.where(F.col("p_partkey") >= 10).select(
-        F.col("p_partkey").alias("child"),
-        F.expr("p_partkey div 10").alias("parent"),
-        (F.col("p_partkey") % 5 + 1).alias("qty"),
-    )
-    units = bom_rollup(edges)
-    costs = p.select(
-        F.col("p_partkey").alias("node"),
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("cents"),
-    )
-    return (
-        units.join(costs, "node")
-        .groupBy("root")
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.col("units") * F.col("cents")).alias("total_cost_cents"),
-        )
-    )
-
-
-def q_pseudonymize_events(spark, sf_dir):
-    """Keyed pseudonymization: user ids replaced by salted md5 tokens that
-    preserve referential integrity — per-token event counts still equal
-    the per-user ones."""
-    from area_etl_spark.functions.transforms import pseudonymize
-
-    ev = _tables(spark, sf_dir)["events"]
-    return (
-        ev.select(pseudonymize("user_id", "s3cret").alias("user_token"))
-        .groupBy("user_token")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def q_decline_streaks(spark, sf_dir):
-    """Longest run of strictly-declining daily spend per user (consecutive
-    OBSERVED days): gaps-and-islands on the delta sign, max run length;
-    users that never decline report 0."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(
-        "user_id", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    w = Window.partitionBy("user_id").orderBy("day")
-    run = Window.partitionBy("user_id").orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    flagged = daily.withColumn(
-        "_declining",
-        (F.col("cents") - F.lag("cents").over(w) < 0).cast("int"),
-    ).withColumn(
-        "_grp",
-        F.sum(
-            F.when(F.coalesce(F.col("_declining"), F.lit(0)) == 0, 1).otherwise(0)
-        ).over(run),
-    )
-    streaks = (
-        flagged.where(F.col("_declining") == 1)
-        .groupBy("user_id", "_grp")
-        .agg(F.count(F.lit(1)).alias("_len"))
-        .groupBy("user_id")
-        .agg(F.max("_len").alias("longest"))
-    )
-    users = daily.select("user_id").distinct()
-    return users.join(streaks, "user_id", "left").select(
-        "user_id",
-        F.coalesce(F.col("longest"), F.lit(0)).alias("longest_decline_streak"),
-    )
-
-
-def q_time_in_state(spark, sf_dir):
-    """Total time each user spends 'in' each event type (state held until
-    the next event): lead-difference in exact micros, last state open-ended
-    and excluded — the device/session state accounting query."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"].select("user_id", "ts", "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    held = (
-        ev.withColumn("_nxt", F.lead("ts").over(w))
-        .where(F.col("_nxt").isNotNull())
-        .select(
-            "user_id",
-            "event_type",
-            (F.unix_micros(F.col("_nxt")) - F.unix_micros(F.col("ts"))).alias("_dur"),
-        )
-    )
-    return held.groupBy("user_id", "event_type").agg(
-        F.sum("_dur").alias("total_us"),
-        F.count(F.lit(1)).alias("n_intervals"),
-    )
-
-
-def q_share_of_parent(spark, sf_dir):
-    """Two-level share-of-parent rollup: each nation's revenue share within
-    its region AND each region's share of the total — exact cents, shares
-    from window sums over the AGGREGATED levels."""
-    from pyspark.sql import Window
-
-    t = _tables(spark, sf_dir)
-    rev = (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("n_regionkey").alias("regionkey"),
-            F.col("n_name").alias("nation"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("regionkey", "nation")
-        .agg(F.sum("cents").alias("nation_cents"))
-    )
-    w_region = Window.partitionBy("regionkey")
-    w_all = Window.partitionBy()
-    region_cents = F.sum("nation_cents").over(w_region)
-    total_cents = F.sum("nation_cents").over(w_all)
-    return rev.select(
-        "regionkey",
-        "nation",
-        "nation_cents",
-        F.round(F.col("nation_cents").cast("double") / region_cents.cast("double"), 9).alias(
-            "share_of_region"
-        ),
-        F.round(region_cents.cast("double") / total_cents.cast("double"), 9).alias(
-            "region_share_of_total"
-        ),
-    )
-
-
-def _ewma_sql(n_lags: int = 16) -> str:
-    """DuckDB replay of the exact truncated α=1/2 EWMA: the same 16 lag
-    terms with power-of-two weights, generated to match ewma_smooth."""
-    terms, avail = [], []
-    for i in range(n_lags):
-        w = 1 << (n_lags - 1 - i)
-        lag = "x" if i == 0 else f"lag(x, {i}) OVER w"
-        terms.append(f"COALESCE({lag}, 0) * {w}")
-        avail.append(f"CASE WHEN {lag} IS NOT NULL THEN {w} ELSE 0 END")
-    return f"""
-        WITH s AS (
-            SELECT user_id, ts, event_id,
-                   CAST(round(value * 100) AS BIGINT) AS x
-            FROM events
-        ), l AS (
-            SELECT user_id, event_id,
-                   ({' + '.join(terms)}) AS num,
-                   ({' + '.join(avail)}) AS den
-            FROM s
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        )
-        SELECT user_id, event_id,
-               round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) AS ewma
-        FROM l
-    """
-
-
-def _ewma_chart_sql(n_lags: int = 16, l_sigma: float = 3.0) -> str:
-    """DuckDB replay of ewma_control_chart over the events/user grain:
-    the _ewma_sql lag terms plus per-user exact mean/sample-std and the
-    exact (1 − 4^{−t})/3 limit-width factor."""
-    terms, avail = [], []
-    for i in range(n_lags):
-        w = 1 << (n_lags - 1 - i)
-        lag = "x" if i == 0 else f"lag(x, {i}) OVER w"
-        terms.append(f"COALESCE({lag}, 0) * {w}")
-        avail.append(f"CASE WHEN {lag} IS NOT NULL THEN {w} ELSE 0 END")
-    return f"""
-        WITH s AS (
-            SELECT user_id, ts, event_id,
-                   CAST(round(value * 100) AS BIGINT) AS x
-            FROM events
-        ), lg AS (
-            SELECT user_id, event_id,
-                   round(CAST(({' + '.join(terms)}) AS DOUBLE)
-                         / CAST(({' + '.join(avail)}) AS DOUBLE), 6) AS ewma,
-                   row_number() OVER w AS t
-            FROM s
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), st AS (
-            SELECT user_id, COUNT(*) AS n,
-                   SUM(CAST(x AS HUGEINT)) AS sx,
-                   SUM(CAST(x AS HUGEINT) * x) AS qx
-            FROM s GROUP BY 1
-        ), j AS (
-            SELECT lg.user_id, event_id, ewma, t, n,
-                   CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-                   CASE WHEN n > 1 THEN sqrt(GREATEST(
-                       CAST(n * qx - sx * sx AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)),
-                       0.0))
-                   END AS sigma
-            FROM lg JOIN st USING (user_id)
-        ), k AS (
-            SELECT user_id, event_id, ewma, mu, sigma,
-                   {l_sigma} * sigma
-                   * sqrt((1.0 - pow(0.25, CAST(t AS DOUBLE))) / 3.0) AS width
-            FROM j
-        )
-        SELECT user_id, event_id, ewma,
-               round(mu, 6) AS center,
-               round(CASE WHEN sigma > 0 THEN mu + width END, 6) AS ucl,
-               round(CASE WHEN sigma > 0 THEN mu - width END, 6) AS lcl,
-               CASE WHEN sigma > 0
-                    THEN (ewma > mu + width OR ewma < mu - width)
-               END AS out_of_control
-        FROM k
-    """
-
-
-def _bradley_terry_sql(iters: int = 5) -> str:
-    """DuckDB replay of q_bradley_terry: the within-order brand matches,
-    then ``iters`` unrolled Hunter MM CTE rounds with every float sum a
-    sorted list_reduce fold — mirrors bradley_terry's iteration algebra."""
-    cte = ["""
-        li AS MATERIALIZED (
-            SELECT l_orderkey AS o, l_linenumber AS ln, p_brand AS b,
-                   CAST(l_quantity AS BIGINT) AS q
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-        ), ms AS MATERIALIZED (
-            SELECT CASE WHEN x.q > y.q THEN x.b ELSE y.b END AS w,
-                   CASE WHEN x.q > y.q THEN y.b ELSE x.b END AS l
-            FROM li x JOIN li y ON x.o = y.o AND x.ln < y.ln
-            WHERE x.b <> y.b AND x.q <> y.q
-        ), sym AS MATERIALIZED (
-            SELECT w AS i, l AS j FROM ms
-            UNION ALL SELECT l, w FROM ms
-        ), pairs AS MATERIALIZED (
-            SELECT i, j, COUNT(*) AS n FROM sym GROUP BY 1, 2
-        ), wins AS MATERIALIZED (
-            SELECT w AS i, COUNT(*) AS wn FROM ms GROUP BY 1
-        ), stats AS MATERIALIZED (
-            SELECT m.i, COALESCE(wn, 0) AS wn, m
-            FROM (SELECT i, SUM(n) AS m FROM pairs GROUP BY 1) m
-            LEFT JOIN wins USING (i)
-        ), p0 AS MATERIALIZED (
-            SELECT i, CAST(1.0 AS DOUBLE) AS p FROM stats
-        )"""]
-    for t in range(iters):
-        cte.append(f""", d{t} AS MATERIALIZED (
-            SELECT c.i,
-                   list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                       list(CAST(n AS DOUBLE) / (pi.p + pj.p) ORDER BY c.j)),
-                       (x, y) -> x + y) AS d
-            FROM pairs c JOIN p{t} pi ON pi.i = c.i
-                         JOIN p{t} pj ON pj.i = c.j
-            GROUP BY c.i
-        ), r{t} AS MATERIALIZED (
-            SELECT s.i,
-                   CASE WHEN d > 0 THEN CAST(wn AS DOUBLE) / d
-                        ELSE 0.0 END AS pr
-            FROM stats s JOIN d{t} ON d{t}.i = s.i
-        ), s{t} AS MATERIALIZED (
-            SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                       list(pr ORDER BY i)), (x, y) -> x + y) AS s
-            FROM r{t}
-        ), p{t + 1} AS MATERIALIZED (
-            SELECT i, pr / s AS p FROM r{t} CROSS JOIN s{t}
-        )""")
-    return f"""
-        WITH {''.join(cte)}
-        SELECT st.i AS item,
-               CAST(wn AS BIGINT) AS wins,
-               CAST(m AS BIGINT) AS matches,
-               round(p, 9) AS score,
-               row_number() OVER (ORDER BY p DESC, st.i ASC) AS rank
-        FROM stats st JOIN p{iters} USING (i)
-    """
-
-
-def q_ewma_control_chart(spark, sf_dir):
-    """EWMA control chart per user over event value cents: exact
-    truncated α=1/2 EWMA vs μ ± 3σ·√((1−4^{−t})/3) — mean/std from exact
-    DECIMAL sums, the time-dependent width exact by construction."""
-    from area_etl_spark.operators.windows import ewma_control_chart
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    out = ewma_control_chart(ev, ["user_id"], ["ts", "event_id"], "cents")
-    return out.select(
-        "user_id", "event_id", "ewma", "center", "ucl", "lcl", "out_of_control"
-    )
-
-
-def q_rolling_distinct_users(spark, sf_dir):
-    """Exact trailing-7-day distinct users per day (DAU→WAU rollup).
-
-    The naive COUNT(DISTINCT) OVER a RANGE window buffers every row of the
-    frame per key; the scalable form works on the DAILY user grid: distinct
-    (day, user) — already tiny — exploded to the ≤7 future days each
-    contributes to (bounded 7× expansion of the GRID, not the events),
-    distinct again, then a plain count per window day.  Every stage is a
-    hash aggregate; nothing buffers raw events.  Only days with events
-    appear (observed grid, no calendar spine)."""
-    tables = _tables(spark, sf_dir)
-    daily = (
-        tables["events"]
-        .select(F.to_date("ts").alias("day"), "user_id")
-        .distinct()
-    )
-    contrib = daily.select(
-        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"), "day", "user_id"
-    ).select(F.date_add(F.col("day"), F.col("off")).alias("win_day"), "user_id")
-    observed = daily.select(F.col("day").alias("win_day")).distinct()
-    return (
-        contrib.distinct()
-        .join(observed, "win_day")
-        .groupBy("win_day")
-        .agg(F.count(F.lit(1)).cast("long").alias("users_7d"))
-        # DATE degrades to python-object dtype in the pandas handoff while
-        # DuckDB's DATE arrives as datetime64 — hash-mismatch despite equal
-        # values; normalize to timestamp on both sides
-        .withColumn("win_day", F.col("win_day").cast("timestamp"))
-    )
-
-
-def q_vocab_build(spark, sf_dir):
-    """Corpus vocabulary with dense 0-based ids by (count DESC, token ASC)
-    — |vocab|-sized numbering via the range-shuffle dense_ids pass, never a
-    single-partition row_number window."""
-    from area_etl_spark.operators.vocab import build_vocab
-
-    tables = _tables(spark, sf_dir)
-    return build_vocab(tables["documents"], min_count=2)
-
-
-def q_vocab_encode(spark, sf_dir):
-    """Documents rewritten as token-id sequences (the tokenizer-adjacent
-    LLM-prep step): posexplode positions ride the vocab join so document
-    order survives two hash shuffles; rare tokens encode as -1, tokenless
-    docs as empty arrays.
-
-    The id sequence is emitted CSV-serialized (``token_ids_csv``) rather
-    than as ``array<long>``: the driver's pandas canonicalizer sorts rows
-    over all columns and a list column is unhashable there (the one r7 err;
-    same fix the r4 feature vectors use via array_join)."""
-    from area_etl_spark.operators.vocab import build_vocab, encode_docs
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    enc = encode_docs(docs, build_vocab(docs, min_count=2))
-    return enc.select(
-        "doc_id",
-        "n_tokens",
-        F.array_join(F.transform("token_ids", lambda x: x.cast("string")), ",").alias(
-            "token_ids_csv"
-        ),
-    )
-
-
-def q_radius_join(spark, sf_dir):
-    """Spatial proximity join: customers within integer distance 500 of a
-    supplier on a synthetic 10000×10000 plane — grid-bucketed (9-cell
-    candidate join, ONE shuffle on the cell key, pure BIGINT distance
-    predicate), never the |L|·|R| cross join the oracle brute-forces."""
-    from area_etl_spark.operators.joins import radius_join
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        F.col("c_custkey").alias("left_id"),
-        ((F.col("c_custkey") * 37) % 10000).alias("x"),
-        ((F.col("c_custkey") * 91) % 10000).alias("y"),
-    )
-    supp = tables["supplier"].select(
-        F.col("s_suppkey").alias("right_id"),
-        ((F.col("s_suppkey") * 53) % 10000).alias("x"),
-        ((F.col("s_suppkey") * 71) % 10000).alias("y"),
-    )
-    return radius_join(cust, supp, "x", "y", radius=500)
-
-
-def q_linear_interpolate(spark, sf_dir):
-    """Per-user LINEAR interpolation of gapped readings (every 5th value
-    nulled): time-weighted blend between neighboring observations in exact
-    micros/cents, boundary rows back-/forward-filled — the trend-unbiased
-    complement of LOCF."""
-    from area_etl_spark.operators.windows import linear_interpolate
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id",
-        "user_id",
-        # synthetic unique timeline (micros from event_id): a total order per
-        # user so the window order is deterministic
-        F.timestamp_micros(F.col("event_id") * 60_000_000).alias("ts"),
-        F.when(
-            F.col("event_id") % 5 != 0, F.round(F.col("value") * 100).cast("long")
-        ).alias("cents"),
-    )
-    out = linear_interpolate(ev, "user_id", "ts", "cents")
-    return out.select("event_id", "user_id", "cents", "value_interp")
-
-
-def q_ab_test_ztest(spark, sf_dir):
-    """Two-proportion z-test (A/B evaluation): purchase-conversion rate of
-    even vs odd user ids from exact counts — closed-form z from one
-    aggregation, sqrt/division IEEE-exact so the statistic is
-    bit-reproducible cross-engine."""
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        (F.col("user_id") % 2 == 0).alias("is_a"),
-        (F.col("event_type") == "purchase").cast("long").alias("conv"),
-    )
-    agg = ev.groupBy().agg(
-        F.sum(F.when(F.col("is_a"), 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("is_a"), F.col("conv")).otherwise(0)).alias("c_a"),
-        F.sum(F.when(~F.col("is_a"), 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(~F.col("is_a"), F.col("conv")).otherwise(0)).alias("c_b"),
-    )
-    n_a, c_a = F.col("n_a").cast("double"), F.col("c_a").cast("double")
-    n_b, c_b = F.col("n_b").cast("double"), F.col("c_b").cast("double")
-    p_a, p_b = c_a / n_a, c_b / n_b
-    pool = (c_a + c_b) / (n_a + n_b)
-    z = (p_a - p_b) / F.sqrt(pool * (F.lit(1.0) - pool) * (F.lit(1.0) / n_a + F.lit(1.0) / n_b))
-    return agg.select(
-        "n_a", "c_a", "n_b", "c_b",
-        F.round(p_a, 6).alias("rate_a"),
-        F.round(p_b, 6).alias("rate_b"),
-        F.round(z, 6).alias("z_stat"),
-    )
-
-
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC crawl-archive ingestion round-trip (sources/warc.py): each
-    document becomes a spec-conformant WARC/1.0 response record (exact
-    UTF-8 octet Content-Lengths, pure Column arithmetic), then the REAL
-    length-prefixed binary parser (Arrow-batched mapInPandas) reads the
-    bytes back.  Metadata is SQL-replayable the parse_logs way: the DuckDB
-    oracle rebuilds the identical record string and measures the same
-    octet lengths — every offset/length/url/status must agree and the
-    payload must round-trip byte-exactly to the source text."""
-    from area_etl_spark.sources.warc import format_warc_records, parse_warc
-
-    docs = _tables(spark, sf_dir)["documents"].withColumn(
-        "url", F.concat(F.lit("http://corpus.example/doc/"), F.col("doc_id"))
-    )
-    recs = format_warc_records(docs, "url", "text", "doc_id")
-    parsed = parse_warc(recs, content_col="warc_bytes", source_col="doc_id")
-    return parsed.select(
-        F.col("source").cast("long").alias("doc_id"),
-        "url",
-        "http_status",
-        F.length("payload").cast("long").alias("payload_len"),
-        "record_length",
-        F.decode(F.col("payload"), "UTF-8").alias("text"),
-    )
-
-
-def q_parse_logs(spark, sf_dir):
-    """Raw text-source ETL: synthesize access-log lines from events (3% of
-    them deliberately corrupted), round-trip through spark.read.text, parse
-    with regexp_extract into typed columns (NULL on corrupt lines — the
-    quarantine contract), aggregate the clean feed per (path, status)."""
-    from area_etl_spark.sources.extract import parse_access_logs
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"]
-    line = F.format_string(
-        '10.0.%d.1 - u%d [%s] "GET /%s HTTP/1.1" %d %d',
-        (F.col("user_id") % 256).cast("int"),
-        F.col("user_id").cast("int"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss"),
-        F.col("event_type"),
-        F.when(F.col("event_id") % 10 == 0, 500)
-        .when(F.col("event_id") % 10 == 1, 404)
-        .otherwise(200)
-        .cast("int"),
-        F.greatest(F.round(F.col("value") * 100).cast("long"), F.lit(0)),
-    )
-    lines = ev.select(
-        F.when(F.col("event_id") % 97 == 0, F.concat(F.lit("CORRUPT "), line))
-        .otherwise(line)
-        .alias("value")
-    )
-    path = _run_tmp(spark, "logs", "access")
-    lines.write.mode("overwrite").text(path)
-    parsed = parse_access_logs(spark.read.text(path))
-    return (
-        parsed.where(F.col("status").isNotNull())
-        .groupBy("path", "status")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.min("ts").alias("first_ts"),
-        )
-    )
-
-
-def q_hopping_window_agg(spark, sf_dir):
-    """Batch hopping-window aggregation: 60-minute windows sliding every 15
-    minutes via the built-in F.window (each event lands in 4 windows —
-    Generate inside the scan stage, then ONE hash aggregation on
-    (window_start, event_type)); exact integer-cents sums."""
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"]
-    return (
-        ev.groupBy(
-            F.window("ts", "60 minutes", "15 minutes").alias("w"), F.col("event_type")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "value_cents")
-    )
-
-
-def q_hierarchy_paths(spark, sf_dir):
-    """Parent-pointer hierarchy flattening (WITH RECURSIVE in SQL engines;
-    Spark lacks it): synthetic forest parent(p) = p // 4 over part keys,
-    flattened to (node, root, depth, path) by pointer doubling — O(log
-    depth) self-joins, never depth sequential rounds."""
-    from area_etl_spark.operators.graph import ancestor_paths
-
-    tables = _tables(spark, sf_dir)
-    edges = tables["part"].select(
-        F.col("p_partkey").alias("child"),
-        F.expr("p_partkey DIV 4").alias("parent"),
-    ).where(F.col("p_partkey") > 0)
-    return ancestor_paths(edges)
-
-
-def q_priority_sample(spark, sf_dir):
-    """Weighted sampling WITHOUT replacement (Duffield-Lund-Thorup priority
-    sampling): 50 documents drawn with probability increasing in n_chars —
-    chosen over the A-ES exponential-key reservoir because ln() differs
-    between JVM and DuckDB libm in the last ulp for ~8% of inputs (measured)
-    while the priority w/u needs only IEEE-exact division."""
-    from area_etl_spark.operators.sampling import priority_sample
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"].select("doc_id", "lang", "n_chars")
-    return priority_sample(docs, "doc_id", F.col("n_chars").cast("double"), k=50)
-
-
-def q_pareto_frontier(spark, sf_dir):
-    """2-D Pareto frontier (skyline) of parts maximizing (size, price):
-    collapse size ties to best price, one running-max window over distinct
-    sizes — never the O(n²) NOT EXISTS self-join."""
-    from area_etl_spark.operators.windows import pareto_frontier
-
-    tables = _tables(spark, sf_dir)
-    parts = tables["part"].select(
-        F.col("p_size"), F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents")
-    )
-    return pareto_frontier(parts, "p_size", "price_cents")
-
-
-def q_skew_report(spark, sf_dir):
-    """Heavy-hitter diagnosis over events: top-5 values of event_type /
-    user_id / props with exact shares, ONE scan for all columns (explode to
-    (column, value) pairs → one count groupBy → per-column rank window)."""
-    from area_etl_spark.operators.quality import skew_report
-
-    tables = _tables(spark, sf_dir)
-    return skew_report(tables["events"], ["event_type", "user_id", "props"], k=5)
-
-
-def q_longest_streak(spark, sf_dir):
-    """Longest run of consecutive ACTIVE DAYS per user — the
-    gaps-and-islands date idiom (datediff − row_number is constant within a
-    consecutive run): distinct (user, day) → island key → count per island
-    → max per user.  Two bounded shuffles, no self-join."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    days = (
-        tables["events"]
-        .select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    islands = days.withColumn(
-        "island",
-        F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
-        - F.row_number().over(w),
-    )
-    runs = islands.groupBy("user_id", "island").agg(F.count(F.lit(1)).alias("run_len"))
-    return runs.groupBy("user_id").agg(F.max("run_len").cast("long").alias("longest_streak"))
-
-
-def q_contract_gate_users(spark, sf_dir):
-    """The runner's DDL-layer gate on the users recast: shape the pipeline
-    output to its declared TableContract (reference init_core.sql:476-501
-    typing/NOT NULL/PK) and return the per-rule violation counts — a clean
-    load is all-zero rows, and the oracle recomputes every rule from the
-    same SQL the pipeline_users oracle declares."""
-    from area_etl_spark.plans.contracts import (
-        PIPELINE_CONTRACTS,
-        apply_contract,
-        contract_violations,
-    )
-
-    out = P.users_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-    c = PIPELINE_CONTRACTS["core.users"]
-    return contract_violations(apply_contract(out, c), c)
-
-
-def q_contract_gate_requirements(spark, sf_dir):
-    """Same gate over the auac requirements recast (reference
-    init_auac.sql requirements table)."""
-    from area_etl_spark.plans.contracts import (
-        PIPELINE_CONTRACTS,
-        apply_contract,
-        contract_violations,
-    )
-
-    out = P.requirements_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-    c = PIPELINE_CONTRACTS["auac.requirement_templates"]
-    return contract_violations(apply_contract(out, c), c)
-
-
-def q_pipeline_taxonomies(spark, sf_dir):
-    """Generic template-table recast (reference core.py:74-270 family):
-    three synthetic template tables (region/nation/supplier playing
-    REGION_TEMPL / TIPO_TITOLARE_TEMPL / RAGG_DISCPL) through ONE
-    parameterized projection, unioned with a kind tag."""
-    tables = _tables(spark, sf_dir)
-
-    def audit(df, key):
-        creation = F.timestamp_add(
-            "DAY", (F.col(key) % 1500).cast("int"), F.lit(datetime(1996, 1, 1))
-        )
-        return df.withColumns(
-            {
-                "creation": creation,
-                "last_mod": F.when(
-                    F.col(key) % 3 != 0,
-                    F.timestamp_add("DAY", (F.col(key) % 40).cast("int"), creation),
-                ),
-                "disabled": F.when(F.col(key) % 9 == 0, F.lit("S")).otherwise(F.lit("N")),
-            }
-        )
-
-    region = P.template_taxonomy_pipeline(
-        audit(tables["region"], "r_regionkey"),
-        "r_regionkey", "r_name", "REGION_TEMPL", FIXED_NOW,
-        creation_col="creation", last_mod_col="last_mod", disabled_col="disabled",
-    )
-    company_types = P.template_taxonomy_pipeline(
-        audit(tables["nation"], "n_nationkey"),
-        "n_nationkey", "n_name", "TIPO_TITOLARE_TEMPL", FIXED_NOW,
-        creation_col="creation", last_mod_col="last_mod", disabled_col="disabled",
-        flags={
-            "is_show_health_director_declaration_poa": F.col("n_nationkey") % 2 == 0,
-            "is_active_poa": F.col("n_nationkey") % 5 != 0,
-        },
-    )
-    grouping = P.template_taxonomy_pipeline(
-        audit(tables["supplier"], "s_suppkey"),
-        "s_suppkey", "s_name", "RAGG_DISCPL", FIXED_NOW,
-        creation_col="creation", last_mod_col="last_mod", disabled_col="disabled",
-    )
-    return region.unionByName(company_types, allowMissingColumns=True).unionByName(
-        grouping, allowMissingColumns=True
-    )
-
-
-def q_pipeline_users(spark, sf_dir):
-    """1:1 recast of migrate_users (reference core.py:1813)."""
-    return P.users_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_bindings(spark, sf_dir):
-    """All five remaining migrate_core binding-table migrations through ONE
-    parameterized helper (reference core.py:546, 1536, 1556, 1659, 1917) —
-    closes the migrate_core list (core.py:1955-1996) to 100%."""
-    return P.bindings_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_physical_structures(spark, sf_dir):
-    """1:1 recast of migrate_physical_structures (reference core.py:367)."""
-    return P.physical_structures_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_operational_offices(spark, sf_dir):
-    """1:1 recast of migrate_operational_offices (reference core.py:416)."""
-    return P.operational_offices_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_pipeline_production_factors(spark, sf_dir):
-    """1:1 recast of migrate_production_factors (reference core.py:1119)."""
-    return P.production_factors_pipeline(_tables(spark, sf_dir), FIXED_NOW)
-
-
-def q_tpch_q3ish(spark, sf_dir):
-    """Shipping-priority shape (TPC-H Q3): 3-way join, agg, top-10 by revenue.
-
-    customer filter → broadcast into orders; orders⋈lineitem is the
-    fact-fact shuffle (bucketable at scale); top-10 is TakeOrdered, no
-    global sort.
-    """
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    orders = tables["orders"].select(
-        F.col("o_orderkey"), F.col("o_custkey").alias("c_custkey"), F.col("o_orderdate")
-    )
-    li = tables["lineitem"].select(
-        F.col("l_orderkey").alias("o_orderkey"),
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long").alias("rev_cents"),
-    )
-    return (
-        orders.join(cust, "c_custkey")  # sf-proportional side: AQE picks BHJ/SMJ
-        .join(li, "o_orderkey")
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg((F.sum("rev_cents") / F.lit(100.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-def q_tpch_q5ish(spark, sf_dir):
-    """Local-supplier-volume shape (TPC-H Q5): 5-way star join + rollup.
-
-    All dimension sides broadcast; the single data-sized shuffle is
-    orders⋈lineitem and the final group-by.
-    """
-    tables = _tables(spark, sf_dir)
-    region = tables["region"].select(F.col("r_regionkey").alias("n_regionkey"), F.col("r_name"))
-    nation = tables["nation"].select(
-        F.col("n_nationkey").alias("c_nationkey"), F.col("n_name"), F.col("n_regionkey")
-    )
-    cust = tables["customer"].select("c_custkey", "c_nationkey")
-    orders = tables["orders"].select(
-        F.col("o_orderkey"), F.col("o_custkey").alias("c_custkey"), F.year("o_orderdate").alias("o_year")
-    )
-    li = tables["lineitem"].select(
-        F.col("l_orderkey").alias("o_orderkey"),
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long").alias("rev_cents"),
-    )
-    joined = (
-        orders.join(li, "o_orderkey")
-        .join(cust, "c_custkey")  # sf-proportional: AQE decides
-        .join(F.broadcast(nation), "c_nationkey")
-        .join(F.broadcast(region), "n_regionkey")
-    )
-    return (
-        joined.where(F.col("o_year").between(1996, 1998))
-        .groupBy("r_name", "n_name", "o_year")
-        .agg((F.sum("rev_cents") / F.lit(100.0)).alias("revenue"))
-    )
-
-
-def q_snapshot_diff(spark, sf_dir):
-    """CDC between the supplier snapshot and a derived next version
-    (deterministic deletes/updates/inserts)."""
-    from area_etl_spark.operators.diff import snapshot_diff
-
-    old, new = _supplier_next_snapshot(_tables(spark, sf_dir))
-    return snapshot_diff(old, new, ["s_suppkey"])
-
-
-def _supplier_next_snapshot(tables):
-    """Deterministic derived next-version of supplier (shared by the CDC and
-    merge queries): drop every 10th, bump every 7th's balance, insert shifted
-    copies of every 13th."""
-    old = tables["supplier"].select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    survivors = old.where(F.col("s_suppkey") % 10 != 0).withColumn(
-        "s_acctbal",
-        F.when(F.col("s_suppkey") % 7 == 0, F.col("s_acctbal") + 1000.0).otherwise(F.col("s_acctbal")),
-    )
-    inserts = old.where(F.col("s_suppkey") % 13 == 0).select(
-        (F.col("s_suppkey") + 100000).alias("s_suppkey"), "s_name", "s_nationkey", "s_acctbal"
-    )
-    return old, survivors.unionByName(inserts)
-
-
-def q_merge_upsert(spark, sf_dir):
-    """SCD1 merge of the derived next snapshot into supplier: matched keys
-    take the new row, old-only keys survive (no delete)."""
-    from area_etl_spark.operators.diff import merge_upsert
-
-    old, new = _supplier_next_snapshot(_tables(spark, sf_dir))
-    return merge_upsert(old, new, ["s_suppkey"])
-
-
-def q_histogram_bins(spark, sf_dir):
-    """Fixed-width histogram of order values (floor-div binning — portable,
-    no width_bucket dependency), with per-bin totals."""
-    tables = _tables(spark, sf_dir)
-    binned = tables["orders"].select(
-        F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bin"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        (F.sum("cents") / F.lit(100.0)).alias("total_value"),
-    )
-
-
-def q_corr_exact(spark, sf_dir):
-    """Pearson correlation + OLS slope of lineitem quantity vs extended
-    price, from EXACT integer-cents sums — the five sufficient statistics
-    aggregate commutatively as DECIMAL(38,0) (exact to 38 digits; Sxy grows
-    as rows × x·y magnitude, and a BIGINT Syy already overflows at sf0.1 —
-    600k rows × 10^14 — under ANSI), the closed form evaluates once in
-    doubles, so the statistic is bit-identical under any partitioning and
-    across engines (built-in corr() implementations use per-engine streaming
-    algorithms and disagree in the last ulps).  DuckDB's SUM over BIGINT is
-    HUGEINT (128-bit) — the oracle is exact the same way."""
-    tables = _tables(spark, sf_dir)
-    li = tables["lineitem"].select(
-        F.round(F.col("l_quantity") * 100).cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    )
-    dec = "decimal(38,0)"
-    sums = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    cov_n = n * sxy - sx * sy
-    return sums.select(
-        F.col("n"),
-        F.round(cov_n / (F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)), 6).alias("pearson_r"),
-        F.round(cov_n / (n * sxx - sx * sx), 6).alias("ols_slope"),
-    )
-
-
-def q_contract_enforce(spark, sf_dir):
-    """Target-DDL contract applied to the resolutions pipeline output."""
-    from area_etl_spark.plans.contracts import RESOLUTIONS_CONTRACT, apply_contract
-
-    tables = _tables(spark, sf_dir)
-    return apply_contract(P.resolutions_pipeline(tables), RESOLUTIONS_CONTRACT)
-
-
-def q_contract_violations(spark, sf_dir):
-    from area_etl_spark.plans.contracts import RESOLUTIONS_CONTRACT, apply_contract, contract_violations
-
-    tables = _tables(spark, sf_dir)
-    return contract_violations(
-        apply_contract(P.resolutions_pipeline(tables), RESOLUTIONS_CONTRACT), RESOLUTIONS_CONTRACT
-    )
-
-
-def q_dedup_exact(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    return (
-        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return D.minhash_lsh_pairs(
-        tables["documents"], "text", "doc_id", num_hashes=64, bands=16,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_dedup_simhash(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"].repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    return docs.select(F.col("doc_id"), D.simhash("text").alias("simhash"))
-
-
-def q_dedup_ngram_jaccard(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    candidates = D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16, parallelism=par)
-    return D.ngram_jaccard_pairs(docs, candidates, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
-
-
-def _query_vec(spark, sf_dir):
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    row = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    return [float(x) for x in row[0]]
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    q = _query_vec(spark, sf_dir)
-    return SIM.cosine_topk(tables["embeddings"].where(F.col("vec_id") != 0), q, k=10)
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    q = _query_vec(spark, sf_dir)
-    return SIM.lsh_ann_topk(tables["embeddings"].where(F.col("vec_id") != 0), q, k=10, bits=4, multi_probe=2)
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    q = _query_vec(spark, sf_dir)
-    return SIM.ivf_ann_topk(
-        tables["embeddings"].where(F.col("vec_id") != 0), q, k=10, n_centroids=16, nprobe=2
-    )
-
-
-def q_ann_ivf_trained_topk(spark, sf_dir):
-    """IVF with a k-means-TRAINED codebook.  Fully oracle-checked: training
-    uses fixed-point per-dim sums (deterministic, engine-independent), and
-    the DuckDB oracle replays the identical Lloyd rounds (_ivf_trained_sql)."""
-    tables = _tables(spark, sf_dir)
-    q = _query_vec(spark, sf_dir)
-    emb = tables["embeddings"].where(F.col("vec_id") != 0)
-    cents = SIM.train_kmeans_codebook(
-        emb, k=16, iters=3, parallelism=spark.sparkContext.defaultParallelism
-    )
-    assigned = SIM.assign_ivf_buckets(emb, cents)
-    qsims = sorted(
-        (
-            (sum(float(a) * float(b) for a, b in zip(c, q)), cid)
-            for cid, c in cents
-        ),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probes = [cid for _, cid in qsims[:2]]
-    sim = F.round(SIM.cosine_similarity(F.col("embedding"), q), 6).alias("cosine")
-    return (
-        assigned.where(F.col("ivf_bucket").isin(probes))
-        .select("vec_id", sim)
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
-
-
-def q_dedup_full_pipeline(spark, sf_dir):
-    """The canonical training-data dedup pipeline end-to-end: MinHash-LSH
-    candidates → n-gram Jaccard verification → connected components →
-    keep one representative doc per cluster.  Returns the surviving corpus
-    (rows-only: xxhash-based candidates)."""
-    from area_etl_spark.operators.graph import connected_components, dedup_keep_representatives
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16, parallelism=par)
-    verified = D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
-    comps = connected_components(verified.select("id_a", "id_b"))
-    return dedup_keep_representatives(docs.select("doc_id", "lang", "source"), comps, "doc_id")
-
-
-def q_multimodal_binary_meta(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    payloads = MM.attach_binary_payload(tables["documents"], "text", "text/plain", "doc_id")
-    return MM.decode_media(payloads, decoder="fake")
-
-
-def q_text_token_stats(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["documents"].select(
-        F.col("doc_id"),
-        F.length("text").cast("long").alias("n_chars"),
-        TA.token_count("text").cast("long").alias("n_tokens"),
-    )
-
-
-def q_text_quality_score(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    feats = TA.quality_features("text")
-    staged = tables["documents"].select(
-        F.col("doc_id"), feats["n_tokens"], feats["stopword_ratio"], feats["punct_ratio"]
-    )
-    # score derives from the feature COLUMNS — the tokenize/filter HOFs are
-    # excluded from codegen CSE, so inlining the score recomputes them
-    # (1.7× slower, measured); CollapseProject keeps this single-evaluated
-    return staged.select(
-        "doc_id",
-        "n_tokens",
-        "stopword_ratio",
-        "punct_ratio",
-        TA.quality_score_from_features(
-            F.col("n_tokens"), F.col("stopword_ratio"), F.col("punct_ratio")
-        ),
-    )
-
-
-def q_text_language_id(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    staged = tables["documents"].select(
-        F.col("doc_id"), F.col("lang"), TA.language_scores("text").alias("_scores")
-    )
-    return staged.select(
-        "doc_id",
-        "lang",
-        TA.language_id_from_scores(F.col("_scores"), sorted(TA.LANG_STOPWORDS)),
-    )
-
-
-def q_text_fingerprint(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["documents"].select(F.col("doc_id"), TA.fingerprint("text"))
-
-
-def q_events_windowed_agg(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return windowed_event_agg(tables["events"], window_minutes=60)
-
-
-def q_asof_join(spark, sf_dir):
-    """Most recent purchase strictly before each event, per user (as-of join)."""
-    tables = _tables(spark, sf_dir)
-    events = tables["events"]
-    # project BOTH sides to the columns the result uses before the
-    # union-merge shuffle: asof_join packs every left column into a struct
-    # that rides the exchange, so unused payload (props, value, ...) would
-    # otherwise be shuffled just to be dropped (guide §2.3)
-    left = events.select("event_id", "user_id", "ts")
-    purchases = events.where(F.col("event_type") == "purchase").select("user_id", "ts")
-    joined = asof_join(
-        left, purchases, on="user_id", left_time="ts", right_time="ts",
-        value_cols=[], strict=True,
-    )
-    return joined.select("event_id", "user_id", "ts", "ts_asof")
-
-
-def q_range_band_join(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    spark_bands = spark.createDataFrame(
-        [("SMALL", 0.0, 50_000.0), ("MEDIUM", 50_000.0, 200_000.0), ("LARGE", 200_000.0, 10_000_000.0)],
-        "band string, lo double, hi double",
-    )
-    joined = range_band_join(tables["orders"], spark_bands, "o_totalprice")
-    return joined.select("o_orderkey", "band")
-
-
-def q_window_rolling_agg(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", "user_id", "ts", F.round(F.col("value") * 100).cast("long").alias("value_cents")
-    )
-    # No presentation orderBy: the driver's compare is order-insensitive, and
-    # the r02/r03 hash-fail was the oracle's HUGEINT windowed SUM dtype (fixed
-    # by CAST AS BIGINT in oracle_sql), not row order — a global sort here is
-    # a pure extra exchange.
-    return W.lag_and_rolling(ev, "user_id", ["ts", "event_id"], "value_cents", window_rows=3, lag_default=0)
-
-
-def q_window_rank_funcs(spark, sf_dir):
-    """Ranking family over one shared window sort: rank, dense_rank, ntile,
-    running first_value — a single Window physical node."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return tables["orders"].select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.first("o_orderkey").over(w).alias("top_order_key"),
-    )
-
-
-def q_monthly_revenue_rollup(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    li = tables["lineitem"].select(
-        F.date_trunc("month", F.col("l_shipdate")).alias("ship_month"),
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long").alias("rev_cents"),
-    )
-    return li.groupBy("ship_month").agg(
-        (F.sum("rev_cents") / F.lit(100.0)).alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-def q_first_touch_attribution(spark, sf_dir):
-    """First event per user (classic first-touch): row_number over (user, ts)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        tables["events"]
-        .select("user_id", "event_id", "ts", "event_type", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") == 1)
-        .select("user_id", F.col("event_id").alias("first_event_id"), F.col("event_type").alias("first_touch"))
-    )
-
-
-def q_retention_cohorts(spark, sf_dir):
-    """Cohort retention: users grouped by first-activity day, counted per
-    (cohort_day, activity_day) — two shuffles (first-day window, rollup)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
-    w = Window.partitionBy("user_id")
-    cohorted = ev.withColumn("cohort_day", F.min("day").over(w))
-    return (
-        cohorted.groupBy("cohort_day", "day")
-        .agg(F.countDistinct("user_id").alias("n_users"))
-    )
-
-
-def q_calendar_gapfill(spark, sf_dir):
-    """Zero-filled monthly series: generated calendar spine left-joined to
-    the revenue rollup (months with no shipments appear with 0)."""
-    tables = _tables(spark, sf_dir)
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit("1995-01-01").cast("timestamp"),
-                F.lit("2001-12-01").cast("timestamp"),
-                F.expr("INTERVAL 1 MONTH"),
-            )
-        ).alias("ship_month")
-    )
-    li = tables["lineitem"].select(
-        F.date_trunc("month", F.col("l_shipdate")).alias("ship_month"),
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long").alias("rev_cents"),
-    )
-    monthly = li.groupBy("ship_month").agg(F.sum("rev_cents").alias("cents"))
-    return spine.join(monthly, "ship_month", "left").select(
-        "ship_month",
-        (F.coalesce(F.col("cents"), F.lit(0)) / F.lit(100.0)).alias("revenue"),
-    )
-
-
-def q_events_sessionization(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return session_agg(tables["events"], gap_minutes=30)
-
-
-def q_text_topk_terms(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    toks = D.normalize_tokens(F.col("text"))
-    return (
-        tables["documents"]
-        .select(F.explode(toks).alias("term"))
-        .where(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("term"))
-        .limit(20)
-    )
-
-
-def q_emb_cosine_pairs_exact(spark, sf_dir):
-    """Brute-force cosine near-dup pairs on a bounded slice — correctness
-    baseline for the LSH-bucketed scale path (dedup_embedding_cosine)."""
-    tables = _tables(spark, sf_dir)
-    emb = tables["embeddings"].where(F.col("vec_id") < 300)
-    a = emb.alias("a")
-    b = emb.alias("b")
-    sim = F.round(
-        SIM._dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (SIM._norm(F.col("a.embedding")) * SIM._norm(F.col("b.embedding"))),
-        6,
-    ).alias("cosine")
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"), sim)
-        .where(F.col("cosine") >= 0.38)
-    )
-
-
-def q_dedup_embedding_cosine(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    emb = tables["embeddings"].repartition(spark.sparkContext.defaultParallelism, F.col("vec_id"))
-    return SIM.embedding_near_dup_pairs(emb, threshold=0.38, bits=8, num_tables=2)
-
-
-def q_gopher_rules(spark, sf_dir):
-    """Gopher rule-based quality gate (Rae et al. 2021): the seven
-    published per-document rules as named booleans + overall pass — every
-    threshold an INTEGER cross-multiplication, so no float ever
-    materializes and the gate is bit-identical across engines by
-    construction."""
-    from area_etl_spark.operators.text_analysis import gopher_rules
-
-    # anchor lexicon adapted to the synthetic corpus's function words (the
-    # stopword rule is language-specific by design; the paper's English
-    # anchors are the operator default)
-    return gopher_rules(
-        _tables(spark, sf_dir)["documents"],
-        word_count_min=20,
-        required_stopwords=("the", "a"),
-        min_required=2,
-    )
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): semantic dedup — bit-reproducible
-    k-means clusters the embedding space (k=16, 3 Lloyd rounds), then a
-    within-cluster min-id shadow prune on rounded cosines (t=0.35, tuned
-    to this corpus's spread) — pairwise work bounded by cluster size,
-    never corpus², and the WHOLE train+assign+prune pipeline replays in
-    the DuckDB oracle."""
-    emb = _tables(spark, sf_dir)["embeddings"].where(F.col("vec_id") != 0)
-    return SIM.semdedup_prune(
-        emb, k=16, iters=3, threshold=0.35,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_multimodal_frame_sample(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    payloads = MM.attach_binary_payload(tables["documents"], "text", "video/mp4", "doc_id")
-    return MM.sample_frames(MM.decode_media(payloads, decoder="fake"), stride=5)
-
-
-def q_multimodal_features(spark, sf_dir):
-    # The operator emits features as array<double> (feeds the ANN path); the
-    # gate serializes it to a canonical integer-milli CSV so the driver's
-    # dtype-sensitive hash can compare it against the DuckDB oracle.
-    tables = _tables(spark, sf_dir)
-    payloads = MM.attach_binary_payload(tables["documents"], "text", "image/png", "doc_id")
-    feats = MM.extract_features(payloads)
-    return feats.select(
-        "id",
-        "byte_len",
-        F.concat_ws(
-            ",",
-            F.transform("features", lambda x: F.round(x * 1000).cast("long").cast("string")),
-        ).alias("features_csv"),
-    )
-
-
-def q_agg_salted_sum(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return AGG.salted_agg_sum_count(ev, ["event_type"], "cents", salt_on="event_id", buckets=32)
-
-
-def q_distinct_count_skewsafe(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return AGG.distinct_count_skew_safe(tables["events"], ["event_type"], "user_id")
-
-
-def q_json_extract(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", handle_json("props", "k INT", "props_parsed")
-    )
-    return ev.select("event_id", F.col("props_parsed.k").alias("k"))
-
-
-def q_anti_semi_join(spark, sf_dir):
-    """Customers never seen in orders (anti) vs seen (semi) — one row per kind.
-
-    Left-anti/semi joins are Spark's EXISTS/NOT EXISTS: build side hashed,
-    probe short-circuits — no row multiplication regardless of match count.
-    """
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select("c_custkey")
-    orders = tables["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    anti = cust.join(orders, "c_custkey", "left_anti").agg(F.count(F.lit(1)).alias("n"))
-    semi = cust.join(orders, "c_custkey", "left_semi").agg(F.count(F.lit(1)).alias("n"))
-    return anti.select(F.lit("never_ordered").alias("kind"), "n").unionByName(
-        semi.select(F.lit("ordered").alias("kind"), "n")
-    )
-
-
-def q_percentile_agg(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return (
-        tables["lineitem"]
-        .groupBy("l_returnflag")
-        .agg(
-            F.round(F.percentile(F.col("l_quantity"), F.lit(0.5)), 6).alias("p50_qty"),
-            F.round(F.percentile(F.col("l_quantity"), F.lit(0.95)), 6).alias("p95_qty"),
-            F.round(F.percentile(F.col("l_extendedprice"), F.lit(0.5)), 4).alias("p50_price"),
-        )
-    )
-
-
-def q_profile_table(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return Q.profile_columns(tables["orders"], ["o_custkey", "o_totalprice", "o_orderstatus"])
-
-
-def q_groupby_rollup(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    nation = tables["nation"].select(F.col("n_nationkey").alias("c_nationkey"), "n_name")
-    cust = left_join_chain(tables["customer"], [(nation, "c_nationkey", True)])
-    return (
-        cust.rollup("n_name", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"), exact_money_sum("c_acctbal").alias("total_acctbal"))
-    )
-
-
-def q_string_agg(spark, sf_dir):
-    """Ordered string aggregation (listagg WITHIN GROUP) — deterministic
-    under any shuffle order because the sort is inside the aggregate."""
-    tables = _tables(spark, sf_dir)
-    return (
-        tables["supplier"]
-        .groupBy("s_nationkey")
-        .agg(F.expr("listagg(s_name, ',') WITHIN GROUP (ORDER BY s_name)").alias("supplier_names"))
-    )
-
-
-def q_unpivot_melt(spark, sf_dir):
-    """Wide→long reshape (DataFrame.unpivot) — inverse of pivot_agg."""
-    tables = _tables(spark, sf_dir)
-    wide = (
-        tables["orders"]
-        .select("o_orderpriority", "o_orderstatus", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .sum("cents")
-    )
-    return wide.unpivot(
-        ids=["o_orderpriority"],
-        values=["F", "O", "P"],
-        variableColumnName="status",
-        valueColumnName="cents",
-    )
-
-
-def q_groupby_cube(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return (
-        tables["orders"]
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), exact_money_sum("o_totalprice").alias("total"))
-    )
-
-
-def q_regex_extract(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return tables["part"].select(
-        "p_partkey",
-        F.regexp_extract(F.col("p_brand"), r"Brand#(\d+)", 1).try_cast("int").alias("brand_num"),
-        F.regexp_extract(F.col("p_type"), r"^(\w+)", 1).alias("type_head"),
-    )
-
-
-def q_fuzzy_name_match(spark, sf_dir):
-    """Fuzzy self-join: supplier-name pairs within edit distance 3.
-
-    Physical plan is the PassJoin pigeonhole equi-join (exact recall, bounded
-    candidate blocks — shuffle O(rows·k²), never the O(|block|²) blow-up of
-    coarse nation-only blocking at 100× data); because recall is exactly 1.0
-    the oracle stays the simple all-pairs-within-nation SQL."""
-    from area_etl_spark.operators.fuzzy import fuzzy_pairs_passjoin
-
-    tables = _tables(spark, sf_dir)
-    s = tables["supplier"].select("s_suppkey", "s_nationkey", "s_name")
-    return fuzzy_pairs_passjoin(s, "s_suppkey", "s_name", ["s_nationkey"], k=3)
-
-
-def q_dedup_components(spark, sf_dir):
-    """Near-dup pairs → dedup clusters: connected components over the blocked
-    levenshtein similarity graph (min-label propagation, oracle = recursive CTE)."""
-    from area_etl_spark.operators.graph import connected_components
-
-    pairs = q_fuzzy_name_match(spark, sf_dir).select("id_a", "id_b")
-    return connected_components(pairs)
-
-
-def q_pivot_agg(spark, sf_dir):
-    tables = _tables(spark, sf_dir)
-    return (
-        tables["orders"]
-        .select("o_orderpriority", "o_orderstatus", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .sum("cents")
-        .select(
-            "o_orderpriority",
-            F.col("F").alias("cents_f"),
-            F.col("O").alias("cents_o"),
-            F.col("P").alias("cents_p"),
-        )
-    )
-
-
-def q_text_repetition(spark, sf_dir):
-    """Gopher-style repetition signals (distinct-token ratio, top-term
-    dominance) per document."""
-    tables = _tables(spark, sf_dir)
-    return TA.repetition_features(tables["documents"])
-
-
-def q_text_tfidf_topk(spark, sf_dir):
-    """Top-3 characteristic terms per doc by TF·IDF (broadcast N, windowed
-    top-k, ties on term)."""
-    tables = _tables(spark, sf_dir)
-    return TA.tfidf_top_terms(tables["documents"], k=3)
-
-
-def q_text_pii_redact(spark, sf_dir):
-    """PII scrub pass over the corpus with synthetic PII injected per row so
-    every pattern (email, phone, long-id) actually fires."""
-    tables = _tables(spark, sf_dir)
-    salted = tables["documents"].select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or +1 (555) 123-4567 ref 9876543210."),
-        ).alias("text"),
-    )
-    return salted.select("doc_id", TA.pii_redact("text").alias("redacted"))
-
-
-def q_sample_hash(spark, sf_dir):
-    """Deterministic 10% corpus sample keyed on the row's own id hash —
-    reproducible across runs, partitionings, and engines; samples nest."""
-    from area_etl_spark.operators.sampling import hash_sample
-
-    tables = _tables(spark, sf_dir)
-    return hash_sample(tables["documents"], "doc_id", 0.1).select("doc_id", "lang", "source")
-
-
-def q_funnel_conversion(spark, sf_dir):
-    """Ordered-funnel analysis: users progressing view → later click → later
-    purchase; per-stage reachable-user counts (strictly-ordered semantics via
-    min-time joins, no window over the whole event stream)."""
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select("user_id", "event_type", "ts")
-    v = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("t1"))
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    return (
-        v.agg(F.count(F.lit(1)).alias("n_users")).select(F.lit(1).alias("stage"), F.lit("view").alias("event"), "n_users")
-        .unionByName(c.agg(F.count(F.lit(1)).alias("n_users")).select(F.lit(2).alias("stage"), F.lit("click").alias("event"), "n_users"))
-        .unionByName(p.agg(F.count(F.lit(1)).alias("n_users")).select(F.lit(3).alias("stage"), F.lit("purchase").alias("event"), "n_users"))
-        .orderBy("stage")
-    )
-
-
-def q_partitioned_layout_prune(spark, sf_dir):
-    """Hive-partitioned lake layout: write documents partitioned by lang,
-    read back one partition — the filter resolves to directory pruning (the
-    scan's PartitionFilters), no data files of other langs are opened."""
-    tables = _tables(spark, sf_dir)
-    src = tables["documents"].select("doc_id", "lang", "n_chars")
-    path = _run_tmp(spark, "partlayout", "documents")
-    reload_overwrite(src, path, partition_by=["lang"])
-    out = read_back(spark, path).where(F.col("lang") == "en")
-    return out.select("doc_id", F.col("lang"), "n_chars")
-
-
-def q_export_jsonl_roundtrip(spark, sf_dir):
-    """JSONL (json-lines) export + re-read with explicit schema — the
-    interchange format LLM corpus tooling expects."""
-    tables = _tables(spark, sf_dir)
-    src = tables["documents"].select("doc_id", "lang", "source", "text")
-    path = _run_tmp(spark, "jsonl", "documents")
-    src.write.mode("overwrite").json(path)
-    return spark.read.schema("doc_id bigint, lang string, source string, text string").json(path)
-
-
-def q_keep_latest(spark, sf_dir):
-    """CDC compaction: latest record per key (row_number over recency-desc,
-    keep rank 1) — the change-log → current-state collapse every
-    incremental pipeline runs."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        tables["events"]
-        .select("user_id", "event_id", "ts", "event_type", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") == 1)
-        .select("user_id", F.col("event_id").alias("last_event_id"), F.col("ts").alias("last_ts"),
-                F.col("event_type").alias("last_event_type"))
-    )
-
-
-def q_sample_stratified_hash(spark, sf_dir):
-    """Per-stratum deterministic sampling: 20% of English docs, 5% of the
-    rest — one CASE-thresholded hash predicate, narrow scan-time filter."""
-    from area_etl_spark.operators.sampling import stratified_hash_sample
-
-    tables = _tables(spark, sf_dir)
-    return stratified_hash_sample(
-        tables["documents"], "doc_id", "lang", {"en": 0.20}, default_fraction=0.05
-    ).select("doc_id", "lang", "source")
-
-
-def q_dedup_minhash_portable(spark, sf_dir):
-    """md5-based MinHash LSH candidates — the engine-portable twin of
-    dedup_minhash_lsh, with a full DuckDB oracle (lexicographic min of md5
-    hex per seed over the distinct unigram set)."""
-    tables = _tables(spark, sf_dir)
-    return D.minhash_lsh_pairs_portable(
-        tables["documents"], "text", "doc_id", num_hashes=16, bands=4,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_dedup_simhash_portable(spark, sf_dir):
-    """md5-based 16-bit SimHash — engine-portable twin of dedup_simhash
-    with a full DuckDB oracle (nibble arithmetic, ±1 sums, sign pack)."""
-    tables = _tables(spark, sf_dir)
-    return D.simhash_portable(tables["documents"], "text", "doc_id", bits=16)
-
-
-def q_dedup_jaccard_portable(spark, sf_dir):
-    """Exact 3-gram Jaccard over the PORTABLE MinHash candidates — the
-    verification stage of the dedup pipeline with a full DuckDB oracle."""
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", num_hashes=16, bands=4, parallelism=par
-    )
-    return D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
-
-
-def q_dedup_pipeline_portable(spark, sf_dir):
-    """The COMPLETE dedup pipeline with a full oracle end to end:
-    md5-MinHash candidates → exact Jaccard ≥ 0.5 → connected components →
-    one representative per cluster (DuckDB replays every stage, components
-    via recursive CTE)."""
-    from area_etl_spark.operators.graph import connected_components, dedup_keep_representatives
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", num_hashes=16, bands=4, parallelism=par
-    )
-    verified = D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
-    comps = connected_components(verified.select("id_a", "id_b"))
-    return dedup_keep_representatives(docs.select("doc_id", "lang", "source"), comps, "doc_id")
-
-
-def q_outlier_detection(spark, sf_dir):
-    """Per-type z-score anomalies over order values — exact-sufficient-
-    statistics mean/std (partition- and engine-invariant), broadcast back,
-    flag |z| > 3."""
-    from area_etl_spark.operators.quality import flag_outliers
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return flag_outliers(ev, ["event_type"], "cents", z_threshold=3.0)
-
-
-def q_pack_sequences(spark, sf_dir):
-    """LLM sequence packing: documents → fixed-token-budget packs via
-    shard-local contiguous running sums (one bounded window shuffle)."""
-    from area_etl_spark.operators.packing import pack_sequences
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"].select(
-        "doc_id", TA.token_count("text").cast("long").alias("n_tokens")
-    )
-    # shard count pinned ONLY so the DuckDB oracle can mirror it literally;
-    # the operator's default auto-derives max(1024, input partitions) so the
-    # per-shard window partition stays bounded at any corpus size
-    return pack_sequences(docs, "n_tokens", budget=2048, id_col="doc_id", num_shards=64)
-
-
-def q_dense_ids(spark, sf_dir):
-    """Global dense surrogate ids with NO single-partition window: range
-    repartition → per-partition counts → driver prefix-sum (O(partitions)
-    ints) → offset + in-partition row_number.  Equals row_number() OVER
-    (ORDER BY ...) at any partition count."""
-    from area_etl_spark.operators.ids import dense_ids
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select("c_custkey", "c_name", "c_nationkey")
-    return dense_ids(cust, ["c_name", "c_custkey"], id_name="surrogate_id", num_partitions=8)
-
-
-def q_quarantine_rows(spark, sf_dir):
-    """Bad-row quarantine: customers violating business rules, tagged with
-    every rule they break — the distributed replacement for the reference's
-    abort-on-bad-row strict casts."""
-    from area_etl_spark.plans.contracts import quarantine_rows
-
-    tables = _tables(spark, sf_dir)
-    rules = {
-        "non_negative_balance": F.col("c_acctbal") >= 0,
-        "known_segment": F.col("c_mktsegment").isin(
-            "BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE"
-        ),
-        "valid_nation": F.col("c_nationkey").between(0, 24),
-    }
-    return quarantine_rows(tables["customer"], rules).select(
-        "c_custkey", "c_acctbal", "c_mktsegment", "quarantine_reasons"
-    )
-
-
-def q_scd2_intervals(spark, sf_dir):
-    """Status-history effective dating (the reference's migrate_udos_history
-    shape, core.py:1679-1812): per-user event_type runs → validity intervals."""
-    from area_etl_spark.operators.history import scd2_intervals
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select("user_id", "event_id", "ts", F.col("event_type").alias("status"))
-    return scd2_intervals(
-        ev, key_cols=["user_id"], time_col="ts", attr_cols=["status"], tiebreak_cols=["event_id"]
-    )
-
-
-def q_role_permissions_fanout(spark, sf_dir):
-    """Role-enum mapping + per-role permission fan-out (core.py:1813,1898):
-    segment → role (CASE), role → permissions (literal array) → explode."""
-    from area_etl_spark.operators.history import role_permission_fanout
-
-    tables = _tables(spark, sf_dir)
-    return role_permission_fanout(tables["customer"], "c_mktsegment", "c_custkey")
-
-
-def q_merge_intervals(spark, sf_dir):
-    """Gaps-and-islands interval consolidation: each event opens a
-    variable-length validity interval [ts, ts + (event_id mod 3000) min];
-    overlapping/touching intervals merge per user (running-max-end islands —
-    lag alone can't handle a long interval swallowing later short ones)."""
-    from area_etl_spark.operators.intervals import merge_intervals
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "user_id",
-        F.col("ts").alias("iv_start"),
-        (
-            F.col("ts")
-            + F.make_dt_interval(F.lit(0), F.lit(0), F.pmod(F.col("event_id"), F.lit(3000)), F.lit(0))
-        ).alias("iv_end"),
-    )
-    return merge_intervals(ev, ["user_id"], "iv_start", "iv_end")
-
-
-def q_salted_join_skew(spark, sf_dir):
-    """Skew-safe salted equi-join (lineitem ⋈ supplier): big side salted on
-    a row-unique hash, dimension side replicated num_salts×.  Result is
-    IDENTICAL to the plain join — the oracle IS the plain join."""
-    from area_etl_spark.operators.joins import salted_join
-
-    tables = _tables(spark, sf_dir)
-    li = tables["lineitem"].select(
-        "l_orderkey", "l_linenumber", F.col("l_suppkey").alias("s_suppkey"), "l_quantity"
-    )
-    sup = tables["supplier"].select("s_suppkey", "s_name")
-    out = salted_join(
-        li, sup, "s_suppkey", num_salts=8,
-        salt_source=F.xxhash64("l_orderkey", "l_linenumber"),
-    )
-    return out.select("l_orderkey", "l_linenumber", "s_suppkey", "s_name", "l_quantity")
-
-
-def q_grouping_sets(spark, sf_dir):
-    """Explicit GROUPING SETS — finer than ROLLUP/CUBE: exactly the
-    (flag,status), (flag), () groupings, with a portable grouping id derived
-    from null-ness (safe: TPC-H flag/status are never NULL in the data)."""
-    _tables(spark, sf_dir)["lineitem"]  # register the view
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(CASE WHEN l_returnflag IS NULL THEN 2 ELSE 0 END
-                    + CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END AS INT) AS gid,
-               COUNT(*) AS n,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_price
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
-
-
-def q_histogram_equidepth(spark, sf_dir):
-    """Equi-depth (quantile-bounded) histogram of order values — the
-    scale-safe formulation: percentile boundaries + broadcast + array-filter
-    bin index, never a global-sort ntile."""
-    from area_etl_spark.operators.quality import equidepth_histogram
-
-    tables = _tables(spark, sf_dir)
-    cents = tables["orders"].select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    return equidepth_histogram(cents, "cents", num_bins=10)
-
-
-def q_robust_zscore(spark, sf_dir):
-    """Median/MAD (modified z-score) outlier flags per event type — the
-    masking-resistant twin of outlier_detection's mean/std pass."""
-    from area_etl_spark.operators.quality import flag_outliers_robust
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return flag_outliers_robust(ev, ["event_type"], "cents", z_threshold=3.5)
-
-
-def q_window_running_distinct(spark, sf_dir):
-    """Running DISTINCT count over an event stream (collect_set window — a
-    distinct aggregate no plain running sum can express): per user, how many
-    distinct event types seen so far."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].where(F.col("user_id") < 100)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts"), F.col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return ev.select(
-        "user_id", "event_id",
-        F.size(F.collect_set("event_type").over(w)).alias("n_types_seen"),
-    )
-
-
-def q_ols_per_group(spark, sf_dir):
-    """Per-group OLS (slope/intercept/R²) from exact DECIMAL(38,0)
-    sufficient statistics — corr_exact generalized to grouped regression;
-    one map-side-combining aggregation, closed form in doubles."""
-    tables = _tables(spark, sf_dir)
-    li = tables["lineitem"].select(
-        "l_returnflag",
-        F.round(F.col("l_quantity") * 100).cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    )
-    dec = "decimal(38,0)"
-    sums = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    cov_n = n * sxy - sx * sy
-    var_x = n * sxx - sx * sx
-    slope = cov_n / var_x
-    return sums.select(
-        "l_returnflag",
-        F.col("n"),
-        F.round(slope, 6).alias("ols_slope"),
-        F.round((sy - slope * sx) / n, 4).alias("ols_intercept"),
-        F.round((cov_n * cov_n) / (var_x * (n * syy - sy * sy)), 6).alias("r2"),
-    )
-
-
-def q_orc_roundtrip(spark, sf_dir):
-    """ORC write + read-back + aggregate — the columnar interchange format
-    besides parquet that Spark ships a native vectorized reader for."""
-    tables = _tables(spark, sf_dir)
-    src = tables["supplier"].select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    path = _run_tmp(spark, "orc", "supplier")
-    reload_overwrite(src, path, fmt="orc")
-    back = read_back(spark, path, fmt="orc")
-    return back.groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        exact_money_sum("s_acctbal").alias("total_acctbal"),
-    )
-
-
-def q_schema_evolution_read(spark, sf_dir):
-    """Schema-evolution read: two parquet batches written with DIFFERENT
-    column sets, read together under mergeSchema — each batch's missing
-    columns surface as NULLs (the lake-format contract for additive
-    evolution)."""
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    p1 = _run_tmp(spark, "evolve", "v1")
-    p2 = _run_tmp(spark, "evolve", "v2")
-    docs.select("doc_id", "lang").write.mode("overwrite").parquet(p1)
-    docs.select("doc_id", "source", "n_chars").write.mode("overwrite").parquet(p2)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(p1, p2)
-        .select("doc_id", "lang", "source", "n_chars")
-    )
-
-
-def q_bucketed_join(spark, sf_dir):
-    """Bucketed co-located fact-fact join READ-BACK (SURVEY 43): orders and
-    lineitem saved bucketed by orderkey with the same bucket count, then
-    joined — the plan has no shuffle exchange (proven in
-    tests/test_bucketing.py); this entry verifies the JOIN RESULT against a
-    plain SQL oracle.  The write shuffles once; every subsequent join of the
-    two tables is exchange-free — the 100 TB fact-fact strategy."""
-    tables = _tables(spark, sf_dir)
-    tag = "".join(ch for ch in spark.sparkContext.applicationId if ch.isalnum())
-    t_orders, t_line = f"ae_bkt_orders_{tag}", f"ae_bkt_lineitem_{tag}"
-    if not spark.catalog.tableExists(t_orders):
-        write_bucketed(
-            tables["orders"].select("o_orderkey", "o_orderpriority", "o_totalprice"),
-            t_orders, ["o_orderkey"], num_buckets=8, sort_cols=["o_orderkey"],
-        )
-        write_bucketed(
-            tables["lineitem"].select("l_orderkey", "l_quantity", "l_extendedprice"),
-            t_line, ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"],
-        )
-    o, l = spark.table(t_orders), spark.table(t_line)
-    return (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            exact_money_sum("l_extendedprice").alias("revenue"),
-        )
-    )
-
-
-def q_range_layout_readback(spark, sf_dir):
-    """Range-clustered layout READ-BACK (SURVEY 43b): events written via
-    repartitionByRange(user_id) + sortWithinPartitions, re-read with a
-    narrow user_id band filter — the layout makes parquet min/max skip all
-    other files (span test in tests/test_bucketing.py); this entry verifies
-    the filtered content against the unclustered oracle."""
-    tables = _tables(spark, sf_dir)
-    src = tables["events"].select("event_id", "user_id", "event_type", "value")
-    path = _run_tmp(spark, "rangelayout", "events")
-    write_range_layout(src, path, ["user_id"], num_partitions=8)
-    out = read_back(spark, path).where((F.col("user_id") >= 3) & (F.col("user_id") < 12))
-    return out.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        exact_money_sum("value").alias("total_value"),
-    )
-
-
-def q_zorder_layout_readback(spark, sf_dir):
-    """Z-order-clustered layout READ-BACK (SURVEY 43c): orders written
-    Morton-interleaved on (o_custkey, o_totalprice) quantile buckets, re-read
-    with a predicate on BOTH dimensions — the layout keeps min/max tight in
-    every interleaved column (file-skip test in tests/test_bucketing.py);
-    this entry verifies content equality after the rewrite."""
-    tables = _tables(spark, sf_dir)
-    src = tables["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    path = _run_tmp(spark, "zorder", "orders")
-    write_zorder_layout(src, path, ["o_custkey", "o_totalprice"], bits=4, num_partitions=8)
-    out = read_back(spark, path).where(
-        (F.col("o_custkey") < 500) & (F.col("o_totalprice") > 100000.0)
-    )
-    return out.select("o_orderkey", "o_custkey", "o_totalprice")
-
-
-def q_compact_roundtrip(spark, sf_dir):
-    """Small-file compaction READ-BACK (SURVEY 43d): documents deliberately
-    shattered into 64 files, compacted to ~250-row files, re-read — row-set
-    equality with the source proves the rewrite lost/duplicated nothing
-    (file-count assertions live in tests/test_sources.py)."""
-    from area_etl_spark.sources.load import compact_files
-
-    tables = _tables(spark, sf_dir)
-    src = tables["documents"].select("doc_id", "lang", "source", "n_chars")
-    path = _run_tmp(spark, "compact", "documents")
-    src.repartition(64).write.mode("overwrite").parquet(path)
-    compact_files(spark, path, target_rows_per_file=250)
-    return read_back(spark, path)
-
-
-def q_file_stats_manifest(spark, sf_dir):
-    """Per-file stats manifest (SURVEY 43e), rolled up to the partition key
-    so the oracle is layout-independent: documents written hive-partitioned
-    by lang, the `_metadata.file_path` manifest built per FILE, then grouped
-    by the lang extracted from each file's hive path — per-lang row counts
-    and min/max must equal a plain GROUP BY over the source table.  Exercises
-    the real manifest mechanics (hidden `_metadata` column, one distributed
-    pass) under an engine-checkable contract."""
-    from area_etl_spark.sources.load import file_stats_manifest
-
-    tables = _tables(spark, sf_dir)
-    src = tables["documents"].select("doc_id", "lang", "n_chars")
-    path = _run_tmp(spark, "manifest", "documents")
-    reload_overwrite(src, path, partition_by=["lang"])
-    man = file_stats_manifest(spark, path, ["doc_id", "n_chars"])
-    lang = F.regexp_extract(F.col("file"), r"lang=([^/]+)/", 1)
-    return (
-        man.groupBy(lang.alias("lang"))
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.min("min_doc_id").alias("min_doc_id"),
-            F.max("max_doc_id").alias("max_doc_id"),
-            F.min("min_n_chars").alias("min_n_chars"),
-            F.max("max_n_chars").alias("max_n_chars"),
-        )
-    )
-
-
-def q_stratified_sample_by(spark, sf_dir):
-    """Seeded stratified sampling via DataFrame.sampleBy (SURVEY 47g):
-    per-lang keep fractions, fixed seed.  Rows-only by design — Spark's
-    Bernoulli draw is engine-specific RNG, so no cross-engine oracle exists;
-    the deterministic portable twin (sample_stratified_hash, 47x) carries the
-    full oracle.  Tolerance-bounded rate assertions live in
-    tests/test_approx_sampling.py."""
-    tables = _tables(spark, sf_dir)
-    fractions = {"en": 0.5, "de": 0.25, "fr": 0.25, "it": 0.25, "es": 0.25}
-    return (
-        tables["documents"]
-        .sampleBy("lang", fractions, seed=42)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Per-row weighted deterministic sampling: keep each document with
-    probability n_chars/800 (clamped to [0,1]) — quality-proportional
-    downsampling on the portable md5-uniform draw."""
-    from area_etl_spark.operators.sampling import weighted_hash_sample
-
-    tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    return weighted_hash_sample(
-        docs, "doc_id", F.col("n_chars") / F.lit(800.0)
-    ).select("doc_id", "lang", "n_chars")
-
-
-def q_dedup_best_rep(spark, sf_dir):
-    """Quality-aware near-dup collapse: the full portable dedup pipeline but
-    keeping the LONGEST document per cluster (ties → min id) instead of the
-    min-id representative — the curation-grade survivor policy."""
-    from area_etl_spark.operators.graph import near_dup_survivors
-
-    tables = _tables(spark, sf_dir)
-    return near_dup_survivors(tables["documents"])
-
-
-def q_pagerank(spark, sf_dir):
-    """Fixed-3-iteration all-integer PageRank over the bidirectional
-    user↔item interaction graph (item = event_id mod 500, offset past the
-    user-id range).  Integer arithmetic makes the iterative algorithm
-    bit-reproducible and lets the oracle replay each round as a chained
-    CTE."""
-    from area_etl_spark.operators.graph import pagerank_integer
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        F.col("user_id").alias("u"),
-        (F.pmod(F.col("event_id"), F.lit(500)) + F.lit(10_000_000)).alias("i"),
-    )
-    fwd = ev.select(F.col("u").alias("src"), F.col("i").alias("dst"))
-    rev = ev.select(F.col("i").alias("src"), F.col("u").alias("dst"))
-    edges = fwd.unionByName(rev).distinct()
-    return pagerank_integer(edges, iterations=3).select(
-        "node", F.col("rank").alias("pr_rank")
-    )
-
-
-def q_ann_pq_topk(spark, sf_dir):
-    """Product-quantization ANN: corpus compressed to 16 one-byte codes per
-    vector (prefix-seeded subspace codebooks), scanned by asymmetric
-    distance (table lookups, never the original vectors), then the top-50
-    shortlist re-ranked by exact cosine — the production PQ shape."""
-    tables = _tables(spark, sf_dir)
-    q = _query_vec(spark, sf_dir)
-    return SIM.pq_adc_topk(
-        tables["embeddings"].where(F.col("vec_id") != 0), q,
-        k=10, n_subspaces=16, ks=16, refine=50,
-    )
-
-
-def q_scd2_lookup(spark, sf_dir):
-    """Point-in-time dimension lookup: join every event to the SCD2 status
-    version valid AT its timestamp — asof machinery against the validity
-    intervals (latest valid_from ≤ ts), the standard history-aware join
-    the reference's migrate_udos_history consumers need.  Safe here because
-    (user_id, ts) is unique in events (no equal-valid_from ambiguity)."""
-    from area_etl_spark.operators.history import scd2_intervals
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select("user_id", "event_id", "ts", F.col("event_type").alias("status"))
-    dim = scd2_intervals(
-        ev, key_cols=["user_id"], time_col="ts", attr_cols=["status"], tiebreak_cols=["event_id"]
-    ).select("user_id", "valid_from", "status")
-    return asof_join(
-        tables["events"].select("event_id", "user_id", "ts"),
-        dim,
-        on="user_id",
-        left_time="ts",
-        right_time="valid_from",
-        value_cols=["status"],
-    ).select("event_id", "user_id", "ts", F.col("status_asof"))
-
-
-def q_window_moving_median(spark, sf_dir):
-    """Moving EXACT median over a 7-row trailing window per user — an
-    order-statistic no running sum can maintain; the window buffers the
-    frame and Spark's `percentile` aggregate evaluates per frame.  Integer
-    cents make the .5-interpolation identical across engines."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].where(F.col("user_id") < 100).select(
-        "user_id", "event_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts"), F.col("event_id"))
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return ev.select(
-        "user_id", "event_id", "cents",
-        F.round(F.percentile(F.col("cents"), F.lit(0.5)).over(w), 6).alias("median_7"),
-    )
-
-
-def q_locf_impute(spark, sf_dir):
-    """Forward-fill (last-observation-carried-forward) imputation: planted
-    nulls (every 5th event) take the user's most recent non-null value —
-    `last(ignorenulls)` over an ordered frame, the time-series gap-repair
-    primitive."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        "event_id", "user_id", "ts",
-        F.when(F.col("event_id") % 5 != 0, F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts"), F.col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return ev.select(
-        "event_id", "user_id", "value_cents",
-        F.last("value_cents", ignorenulls=True).over(w).alias("filled_cents"),
-    )
-
-
-def q_ratio_to_report(spark, sf_dir):
-    """Percent-of-total within a group (ratio-to-report): each order's share
-    of its priority class's revenue — window sum of exact cents, one
-    division per row."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    o = tables["orders"].select(
-        "o_orderkey", "o_orderpriority", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    total = F.sum("cents").over(Window.partitionBy("o_orderpriority"))
-    return o.select(
-        "o_orderkey", "o_orderpriority", "cents",
-        F.round(F.col("cents") / total, 9).alias("share"),
-    )
-
-
-def q_mode_per_group(spark, sf_dir):
-    """DETERMINISTIC mode per user (most frequent event type, ties → first
-    alphabetically) — built-in `mode()` leaves ties engine-defined, so the
-    argmax runs as a struct-min over (−count, value)."""
-    tables = _tables(spark, sf_dir)
-    counts = tables["events"].groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
-    win = counts.groupBy("user_id").agg(
-        F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("event_type").alias("et"))).alias("_w")
-    )
-    return win.select(
-        "user_id", F.col("_w.et").alias("mode_event_type"), (-F.col("_w.neg")).cast("long").alias("mode_count")
-    )
-
-
-def q_set_operations(spark, sf_dir):
-    """INTERSECT / EXCEPT set algebra: BUILDING-segment customers split into
-    those who ever ordered and those who never did."""
-    tables = _tables(spark, sf_dir)
-    seg = tables["customer"].where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    both = seg.intersect(ordered).select(F.lit("ordered").alias("kind"), "c_custkey")
-    never = seg.subtract(ordered).select(F.lit("never").alias("kind"), "c_custkey")
-    return both.unionByName(never)
-
-
-def q_entropy_per_user(spark, sf_dir):
-    """Shannon entropy of each user's event-type mix — a float fold made
-    engine-deterministic by summing terms in SORTED KEY ORDER (array_sort →
-    left fold), never in shuffle order."""
-    tables = _tables(spark, sf_dir)
-    counts = tables["events"].groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
-    per_user = counts.groupBy("user_id").agg(
-        F.sum("cnt").alias("total"),
-        F.array_sort(F.collect_list(F.struct(F.col("event_type").alias("et"), F.col("cnt").alias("c")))).alias("_cs"),
-    )
-    p = lambda s: s.getField("c").cast("double") / F.col("total").cast("double")  # noqa: E731
-    ent = F.aggregate(
-        F.col("_cs"), F.lit(0.0), lambda acc, s: acc - p(s) * F.log2(p(s))
-    )
-    return per_user.select("user_id", F.col("total"), F.round(ent, 6).alias("entropy"))
-
-
-def q_text_strip_accents(spark, sf_dir):
-    """Accent folding over planted Italian-accented names (table-driven
-    translate, no UDF) — the normalization the reference's master-data
-    equality keys need ('Località' ≡ 'Localita')."""
-    from area_etl_spark.functions.transforms import strip_accents
-
-    tables = _tables(spark, sf_dir)
-    salted = tables["customer"].select(
-        "c_custkey",
-        F.concat(F.lit("Località Tùrìn é "), F.col("c_name"), F.lit(" ÀÈÌÒÙ çñ")).alias("raw"),
-    )
-    return salted.select("c_custkey", "raw", strip_accents("raw", "folded"))
-
-
-def q_time_weighted_avg(spark, sf_dir):
-    """Interval-weighted mean for an IRREGULAR time series: each value
-    holds until the user's next event, so it weighs by its microsecond
-    duration (exact BIGINT diffs — `timestampdiff(SECOND)` truncates and
-    DuckDB's date_diff counts boundary crossings; at microsecond
-    granularity, the native resolution, the two agree exactly).  Products
-    accumulate as DECIMAL(38,0); one window pass + one aggregation."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
-    ev = tables["events"].select(
-        "user_id", "event_id", "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    ).withColumn("next_ts", F.lead("ts").over(w))
-    dur = F.expr("timestampdiff(MICROSECOND, ts, next_ts)")
-    spans = ev.where(F.col("next_ts").isNotNull()).select(
-        "user_id", "cents", dur.alias("dur_us")
-    )
-    dec = "decimal(38,0)"
-    return spans.groupBy("user_id").agg(
-        F.round(
-            # cast each FACTOR to decimal before multiplying — a long×long
-            # product can overflow int64 for multi-decade gaps even though
-            # the SUM accumulates as decimal (same class as the r6 sums fix)
-            F.sum(F.col("cents").cast(dec) * F.col("dur_us").cast(dec)).cast("double")
-            / F.sum(F.col("dur_us").cast(dec)).cast("double"),
-            6,
-        ).alias("tw_avg_cents"),
-        F.count(F.lit(1)).alias("n_spans"),
-    )
-
-
-def q_mom_growth(spark, sf_dir):
-    """Month-over-month revenue growth: monthly rollup → lag ratio.  The
-    post-aggregation window runs over O(months) rows — a bounded
-    single-partition window by construction, not a scale hazard."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    monthly = (
-        tables["orders"]
-        .select(
-            F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("month")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    prev = F.lag("rev_cents").over(Window.orderBy("month"))
-    return monthly.select(
-        "month", "rev_cents",
-        F.round(F.col("rev_cents") / prev, 6).alias("growth"),
-    )
-
-
-def q_event_transitions(spark, sf_dir):
-    """First-order event-type transition matrix: per user, each event pairs
-    with its successor (lead over the user's timeline); global counts per
-    (from, to) — the product-analytics Markov summary."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
-    ev = tables["events"].select(
-        "user_id", "ts", "event_id", F.col("event_type").alias("from_type")
-    ).withColumn("to_type", F.lead("from_type").over(w))
-    return (
-        ev.where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_winsorize(spark, sf_dir):
-    """Winsorize order values at the exact p01/p99 quantiles (broadcast
-    bounds + narrow clip; outlier TREATMENT beside the flagging passes)."""
-    from area_etl_spark.operators.quality import winsorize
-
-    tables = _tables(spark, sf_dir)
-    o = tables["orders"].select(
-        "o_orderkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    return winsorize(o, "cents", 0.01, 0.99)
-
-
-def q_window_dist_funcs(spark, sf_dir):
-    """Distribution window functions: percent_rank + cume_dist of each
-    order within its priority class (completes the ranking family beside
-    window_rank_funcs)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.round(F.col("o_totalprice") * 100).cast("long"), F.col("o_orderkey")
-    )
-    return tables["orders"].select(
-        "o_orderkey", "o_orderpriority",
-        F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 9).alias("cume"),
-    )
-
-
-def q_benford_digits(spark, sf_dir):
-    """Benford's-law first-digit profile of order values — the classic
-    fraud/data-entry screen: observed share per leading digit vs the
-    log10(1+1/d) expectation.  Counts are exact; each digit's share and
-    excess are per-row doubles (no float fold)."""
-    import math as _math
-
-    tables = _tables(spark, sf_dir)
-    digit = F.substring(F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1).cast("int")
-    counts = tables["orders"].select(digit.alias("digit")).groupBy("digit").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    total = counts.agg(F.sum("n").alias("_total"))
-    expected = F.element_at(
-        F.array(*[F.lit(_math.log10(1 + 1 / d)) for d in range(1, 10)]), F.col("digit")
-    )
-    return (
-        counts.join(F.broadcast(total))
-        .select(
-            "digit", "n",
-            F.round(F.col("n") / F.col("_total"), 6).alias("share"),
-            F.round(expected, 6).alias("benford_expected"),
-            F.round(F.col("n") / F.col("_total") - expected, 6).alias("excess"),
-        )
-    )
-
-
-def q_chi_square(spark, sf_dir):
-    """Chi-square test of independence (event_type × user cohort): the
-    statistic Σ (obs−exp)²/exp folded over cells in SORTED cell order —
-    exact integer counts in, one deterministic float fold out (the
-    entropy_per_user discipline applied to contingency tables).  Only
-    OBSERVED cells contribute (identically in both engines); with these
-    margins every cell is occupied, so the statistic is the full one."""
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        F.col("event_type").alias("et"), F.pmod(F.col("user_id"), F.lit(3)).alias("cohort")
-    )
-    cells = ev.groupBy("et", "cohort").agg(F.count(F.lit(1)).alias("o"))
-    row_t = ev.groupBy("et").agg(F.count(F.lit(1)).alias("rt"))
-    col_t = ev.groupBy("cohort").agg(F.count(F.lit(1)).alias("ct"))
-    n = ev.agg(F.count(F.lit(1)).alias("nn"))
-    full = (
-        cells.join(F.broadcast(row_t), "et")
-        .join(F.broadcast(col_t), "cohort")
-        .join(F.broadcast(n))
-    )
-    packed = full.agg(
-        F.array_sort(
-            F.collect_list(F.struct("et", "cohort", "o", "rt", "ct", "nn"))
-        ).alias("_cells"),
-        F.countDistinct("et").alias("_r"),
-        F.countDistinct("cohort").alias("_c"),
-    )
-    def term(s):
-        exp = s.getField("rt").cast("double") * s.getField("ct").cast("double") / s.getField("nn").cast("double")
-        d = s.getField("o").cast("double") - exp
-        return d * d / exp
-    stat = F.aggregate(F.col("_cells"), F.lit(0.0), lambda acc, s: acc + term(s))
-    return packed.select(
-        F.round(stat, 6).alias("chi2"),
-        ((F.col("_r") - 1) * (F.col("_c") - 1)).cast("long").alias("dof"),
-    )
-
-
-def q_window_range_frame(spark, sf_dir):
-    """RANGE-frame window (trailing 7 VALUE days, not 7 rows): daily revenue
-    summed over [day−6, day] — on a gapped calendar a ROWS frame silently
-    spans more than a week; RANGE frames bound by the ORDER-BY value.  The
-    window runs post-aggregation over O(days) rows (bounded by the calendar,
-    like mom_growth)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    daily = (
-        tables["events"]
-        .select(
-            F.datediff(F.col("ts").cast("date"), F.lit("1990-01-01").cast("date")).alias("day_num"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("day_num")
-        .agg(F.sum("cents").alias("day_cents"), F.count(F.lit(1)).alias("n_events"))
-    )
-    w = Window.orderBy("day_num").rangeBetween(-6, Window.currentRow)
-    return daily.select(
-        "day_num", "day_cents", "n_events",
-        F.sum("day_cents").over(w).alias("trailing7_cents"),
-        F.count(F.lit(1)).over(w).cast("long").alias("days_present_7"),
-    )
-
-
-def q_assoc_rules(spark, sf_dir):
-    """Market-basket association rules over per-user event-type baskets:
-    co-occurrence support / confidence / lift from exact distinct-user
-    counts (basket = SET of types — the unordered complement of the
-    transition matrix).  Pairs come from a self-join of the distinct
-    (user, type) relation on the user key — O(users · types²), never a
-    corpus cross join."""
-    tables = _tables(spark, sf_dir)
-    ut = tables["events"].select("user_id", F.col("event_type").alias("et")).distinct()
-    n_users = ut.select("user_id").distinct().count()
-    item = ut.groupBy("et").agg(F.count(F.lit(1)).alias("n_item"))
-    a = ut.withColumnRenamed("et", "et_a")
-    b = ut.withColumnRenamed("et", "et_b")
-    pairs = (
-        a.join(b, "user_id")
-        .where(F.col("et_a") < F.col("et_b"))
-        .groupBy("et_a", "et_b")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
-    ia = item.select(F.col("et").alias("et_a"), F.col("n_item").alias("n_a"))
-    ib = item.select(F.col("et").alias("et_b"), F.col("n_item").alias("n_b"))
-    out = pairs.join(F.broadcast(ia), "et_a").join(F.broadcast(ib), "et_b")
-    nu = F.lit(float(n_users))
-    return out.select(
-        "et_a", "et_b", "n_pair",
-        F.round(F.col("n_pair") / nu, 6).alias("support"),
-        F.round(F.col("n_pair") / F.col("n_a"), 6).alias("confidence_a_b"),
-        F.round(F.col("n_pair") * nu / (F.col("n_a") * F.col("n_b")), 6).alias("lift"),
-    )
-
-
-def q_topk_with_ties(spark, sf_dir):
-    """Top-3 orders per priority WITH TIES (rank() ≤ k keeps every row
-    tied at the boundary — the ANSI FETCH WITH TIES semantic, distinct from
-    topk_per_group's exactly-k slice)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    w = Window.partitionBy("o_orderpriority").orderBy(cents.desc())
-    return (
-        tables["orders"]
-        .select("o_orderkey", "o_orderpriority", cents.alias("cents"), F.rank().over(w).alias("rnk"))
-        .where(F.col("rnk") <= 3)
-    )
-
-
-def q_iqr_report(spark, sf_dir):
-    """Per-type quartile report (p25/p50/p75 + IQR + Tukey fences) — the
-    box-plot profile; exact percentile over integer cents, one aggregation."""
-    tables = _tables(spark, sf_dir)
-    cents = F.round(F.col("value") * 100).cast("long")
-    ev = tables["events"].select("event_type", cents.alias("cents"))
-    q = lambda p: F.percentile(F.col("cents"), F.lit(p))  # noqa: E731
-    iqr = q(0.75) - q(0.25)
-    return ev.groupBy("event_type").agg(
-        F.round(q(0.25), 6).alias("p25"),
-        F.round(q(0.5), 6).alias("p50"),
-        F.round(q(0.75), 6).alias("p75"),
-        F.round(iqr, 6).alias("iqr"),
-        F.round(q(0.25) - 1.5 * iqr, 6).alias("lo_fence"),
-        F.round(q(0.75) + 1.5 * iqr, 6).alias("hi_fence"),
-    )
-
-
-def q_debounce_events(spark, sf_dir):
-    """Debounce: drop a user's repeat of the SAME event type within 30
-    minutes of the previous same-type occurrence (double-click suppression —
-    lag over the (user, type) timeline, narrow filter after one window)."""
-    from pyspark.sql import Window
-
-    tables = _tables(spark, sf_dir)
-    w = Window.partitionBy("user_id", "event_type").orderBy(F.col("ts"), F.col("event_id"))
-    # microsecond diff — SECOND-granularity diffs truncate in Spark but
-    # count boundary crossings in DuckDB (the time_weighted_avg lesson)
-    keep = F.col("_prev").isNull() | (
-        F.expr("timestampdiff(MICROSECOND, _prev, ts)") >= 1800 * 1_000_000
-    )
-    return (
-        tables["events"]
-        .select("event_id", "user_id", "event_type", "ts")
-        .withColumn("_prev", F.lag("ts").over(w))
-        .where(keep)
-        .drop("_prev")
-    )
-
-
-def _order_graph(tables):
-    """Sparse derived graph over a 1000-node id space: (custkey mod 1000) →
-    (orderkey mod 1000) per order, distinct — density stays constant as SF
-    grows, so graph queries stress the ALGORITHM, not an ever-denser input."""
-    return (
-        tables["orders"]
-        .select(
-            F.pmod(F.col("o_custkey"), F.lit(1000)).alias("src"),
-            F.pmod(F.col("o_orderkey"), F.lit(1000)).alias("dst"),
-        )
-        .distinct()
-    )
-
-
-def q_bfs_hops(spark, sf_dir):
-    """Unweighted shortest-path hop counts from node 1 over the derived
-    order graph (undirected) — frontier-expansion BFS, ≤ 6 rounds; the
-    oracle replays it as a bounded recursive CTE with a min-hops rollup."""
-    from area_etl_spark.operators.graph import bfs_hops
-
-    tables = _tables(spark, sf_dir)
-    return bfs_hops(_order_graph(tables), source=1, max_hops=6)
-
-
-def q_triangle_count(spark, sf_dir):
-    """Global triangle count of the derived order graph — order-canonical
-    (i<j<k) double equi-join, each triangle counted once, never all-pairs."""
-    from area_etl_spark.operators.graph import triangle_count
-
-    tables = _tables(spark, sf_dir)
-    return triangle_count(_order_graph(tables))
-
-
-def q_attribution_time_decay(spark, sf_dir):
-    """Multi-touch attribution with exponential time-decay credit: every
-    view/click within 7 days before a purchase earns 2^(7-k) integer credit
-    (k = recency rank, most recent k=0, capped at 8 touches) — exact BIGINT
-    sums per channel, the power-of-two decay keeping cross-engine hashes
-    stable (ewma recipe)."""
-    from area_etl_spark.operators.business import time_decay_attribution
-
-    return time_decay_attribution(_tables(spark, sf_dir)["events"])
-
-
-def q_km_survival(spark, sf_dir):
-    """Kaplan-Meier time-to-conversion curve: per signup user, days to first
-    purchase (right-censored at the corpus max ts); survival = ordered
-    sequential product of (1 - d/n) factors — the collect-fold float recipe,
-    counts exact."""
-    from area_etl_spark.operators.experiments import km_survival
-
-    ev = _tables(spark, sf_dir)["events"]
-    s = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("t0")
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s, "user_id")
-        .where(F.col("ts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    tmax = ev.agg(F.max("ts").alias("tmax"))
-    subj = (
-        s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(tmax))
-        .select(
-            F.datediff(
-                F.coalesce(F.col("t1"), F.col("tmax")).cast("date"),
-                F.col("t0").cast("date"),
-            ).alias("dur"),
-            F.col("t1").isNotNull().alias("ev"),
-        )
-    )
-    return km_survival(subj, "dur", "ev")
-
-
-def q_km_survival_ci(spark, sf_dir):
-    """Kaplan–Meier time-to-conversion curve WITH the Greenwood variance
-    and complementary log-log 95% band — same subjects as km_survival,
-    both cumulative folds in ascending-day order."""
-    from area_etl_spark.operators.experiments import km_survival_ci
-
-    ev = _tables(spark, sf_dir)["events"]
-    s = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("t0")
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s, "user_id")
-        .where(F.col("ts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    tmax = ev.agg(F.max("ts").alias("tmax"))
-    subj = (
-        s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(tmax))
-        .select(
-            F.datediff(
-                F.coalesce(F.col("t1"), F.col("tmax")).cast("date"),
-                F.col("t0").cast("date"),
-            ).alias("dur"),
-            F.col("t1").isNotNull().alias("ev"),
-        )
-    )
-    return km_survival_ci(subj, "dur", "ev")
-
-
-def q_cascade_delete(spark, sf_dir):
-    """GDPR right-to-erasure cascade: erase nation 3's customers, propagate
-    through orders to lineitem via FK anti-joins; report (table_name,
-    n_deleted, n_kept) — counts piggyback the same joins, no collect."""
-    from area_etl_spark.operators.quality import cascade_delete
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"]
-    root_ids = cust.where(F.col("c_nationkey") == 3).select("c_custkey")
-    _, report = cascade_delete(
-        cust,
-        "c_custkey",
-        root_ids,
-        [
-            ("orders", tables["orders"], "o_custkey", "root", "c_custkey"),
-            ("lineitem", tables["lineitem"], "l_orderkey", "orders", "o_orderkey"),
-        ],
-    )
-    return report
-
-
-def q_jaccard_prefix_join(spark, sf_dir):
-    """EXACT all-pairs Jaccard >= 0.5 self-join via prefix filtering
-    (PPJoin-family): candidates only from each document's globally-RAREST
-    (|S| - ceil(t|S|) + 1) tokens — stopwords never join, completeness is a
-    theorem; oracle brute-forces every pair of the same bounded subset."""
-    from area_etl_spark.operators.dedup import prefix_filter_jaccard_join
-
-    docs = _tables(spark, sf_dir)["documents"].where(F.col("doc_id") % 11 == 0)
-    return prefix_filter_jaccard_join(docs, threshold=0.5)
-
-
-def q_quantile_normalize(spark, sf_dir):
-    """Quantile normalization of per-source document lengths onto src0's
-    empirical distribution: percent_rank within source, then a union-merge
-    floor lookup into the ref ECDF (asof idiom on a double axis) — the
-    cross-source score-blending step beyond rank calibration."""
-    from area_etl_spark.operators.quality import quantile_normalize
-
-    docs = _tables(spark, sf_dir)["documents"].select(
-        "doc_id", "source", F.col("n_chars").alias("score")
-    )
-    return quantile_normalize(docs, "source", "score", "src0")
-
-
-def q_remove_duplicate_spans(spark, sf_dir):
-    """Exact-substring duplicate REMOVAL (Lee et al. 2022): every 8-token
-    gram shared by >= 2 documents keeps its tokens only in the min-doc_id
-    owner; other documents lose the covered positions and are rebuilt from
-    the surviving tokens in order — the treatment stage above
-    duplicate_spans' diagnosis."""
-    from area_etl_spark.operators.dedup import remove_duplicate_spans
-
-    return remove_duplicate_spans(_tables(spark, sf_dir)["documents"])
-
-
-def q_apply_cdc_log(spark, sf_dir):
-    """Debezium-style CDC log replay WITH tombstones: events become an
-    ordered I/U/D operation log on user_id ('error' = delete marker); the
-    latest op per key wins and a winning delete removes the key — the
-    missing half of keep_latest (an upsert-only compaction resurrects
-    deleted keys).  One struct-max hash aggregate, no window."""
-    from area_etl_spark.operators.diff import apply_cdc_log
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-        F.when(F.col("event_type") == "error", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    return apply_cdc_log(
-        ev,
-        key_cols=["user_id"],
-        seq_cols=["ts", "event_id"],
-        payload_cols=["event_type", "value_cents"],
-    )
-
-
-def q_seasonal_anomaly(spark, sf_dir):
-    """Seasonal-naive anomaly detection on the daily event-count series per
-    event type: forecast = count 7 days earlier, residuals scored with the
-    per-key Iglewicz–Hoaglin robust z (the flag_outliers_robust machinery);
-    |z| > 2 rows surface as anomalies."""
-    from area_etl_spark.operators.quality import seasonal_naive_anomaly
-
-    ev = _tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return seasonal_naive_anomaly(
-        daily, ["event_type"], "day", "n", period=7, z_threshold=2.0
-    )
-
-
-def q_parse_json_quarantine(spark, sf_dir):
-    """Corrupt-record-tolerant JSON ingestion: order payloads rendered as
-    JSON (every 7th truncated mid-document), parsed against an explicit
-    schema with the _corrupt_record contract — clean rows keep their typed
-    fields, broken rows carry ok=false + the raw text for the dead-letter
-    sink.  Narrow, codegen-side, no UDF."""
-    from area_etl_spark.sources.extract import parse_json_quarantine
-
-    o = _tables(spark, sf_dir)["orders"]
-    full = F.concat(
-        F.lit('{"key":'),
-        F.col("o_orderkey").cast("string"),
-        F.lit(',"price_cents":'),
-        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        F.lit(',"status":"'),
-        F.col("o_orderstatus"),
-        F.lit('"}'),
-    )
-    raw = o.select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 7 == 0, F.substring(full, 1, 10))
-        .otherwise(full)
-        .alias("payload"),
-    )
-    return parse_json_quarantine(
-        raw,
-        "payload",
-        "key long, price_cents long, status string",
-        keep_cols=["o_orderkey"],
-    )
-
-
-def q_sequence_match(spark, sf_dir):
-    """MATCH_RECOGNIZE-lite sequence mining: per user the ordered
-    event-initial symbol string and the count of non-overlapping
-    view→clicks*→purchase runs ('vc*p') — CEP as one hash aggregate plus a
-    key-local regexp, no state machine."""
-    from area_etl_spark.operators.sequences import sequence_pattern_count
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id", "ts", "event_id",
-        F.substring("event_type", 1, 1).alias("sym"),
-    )
-    return sequence_pattern_count(
-        ev, ["user_id"], ["ts", "event_id"], "sym", "vc*p"
-    )
-
-
-def q_agg_state_merge(spark, sf_dir):
-    """Incremental-aggregation mergeability: per-user (n,sum,min,max) states
-    built over two disjoint halves of the event stream merge into exactly
-    the full-scan aggregate (the oracle IS the full scan) — the algebraic
-    merge law that keeps 100 TB rollups O(new partition) instead of
-    O(history)."""
-    from area_etl_spark.operators.aggregates import agg_state, merge_agg_states
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    a = agg_state(ev.where(F.col("event_id") % 2 == 0), ["user_id"], "cents")
-    b = agg_state(ev.where(F.col("event_id") % 2 == 1), ["user_id"], "cents")
-    return merge_agg_states([a, b], ["user_id"]).select(
-        "user_id",
-        "n",
-        F.col("sum").alias("sum_cents"),
-        F.col("min").alias("min_cents"),
-        F.col("max").alias("max_cents"),
-    )
-
-
-def _event_deltas(spark, sf_dir):
-    """Shared signed-cash-flow view of the event stream: purchases deposit,
-    everything else withdraws — deterministic integer deltas for the
-    balance-series operators."""
-    ev = _tables(spark, sf_dir)["events"]
-    cents = F.round(F.col("value") * 100).cast("long")
-    return ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.unix_micros("ts").alias("us"),
-        F.when(F.col("event_type") == "purchase", cents).otherwise(-cents).alias(
-            "delta"
-        ),
-    )
-
-
-def q_max_drawdown(spark, sf_dir):
-    """Per-user maximum drawdown of the cumulative signed cash-flow series —
-    peak-to-trough risk metric from two stacked window aggregates sharing
-    one sort (cum → running peak → dd), then a struct-max argmax; exact
-    integers, earliest trough on ties."""
-    from area_etl_spark.operators.windows import max_drawdown
-
-    return max_drawdown(_event_deltas(spark, sf_dir), ["user_id"], ["us", "event_id"], "delta")
-
-
-def q_clamped_balance(spark, sf_dir):
-    """Per-user ENDING balance with a zero floor (prepaid-credit semantics:
-    overdrafts truncate, not carry) — non-associative, so the ordered
-    deltas fold once per key with O(1) (balance, floor_hits) state."""
-    from area_etl_spark.operators.windows import clamped_balance
-
-    return clamped_balance(
-        _event_deltas(spark, sf_dir), ["user_id"], ["ts", "event_id"], "delta"
-    )
-
-
-def q_burst_detection(spark, sf_dir):
-    """Trailing event-rate window at event granularity (rate-limit/abuse
-    monitoring): per user the event count in the trailing 30 days by VALUE
-    (RANGE frame over exact micros — ROWS frames silently overcount gapped
-    streams), flagged against a fixed burst threshold."""
-    from pyspark.sql import Window
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id", "event_id", "ts", F.unix_micros("ts").alias("_us")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("_us")
-        .rangeBetween(-30 * 86400 * 1_000_000, 0)
-    )
-    return (
-        ev.withColumn("n_trailing_30d", F.count(F.lit(1)).over(w))
-        .select(
-            "user_id",
-            "event_id",
-            "ts",
-            "n_trailing_30d",
-            (F.col("n_trailing_30d") >= 14).alias("is_burst"),
-        )
-    )
-
-
-def q_minmax_scale(spark, sf_dir):
-    """Per-source min-max scaling of document lengths to [0,1] — spacing-
-    preserving normalization (the complement of rank calibration 90);
-    constant groups → 0.0 by convention."""
-    from area_etl_spark.operators.quality import minmax_scale
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "source", "n_chars")
-    return minmax_scale(d, ["source"], "n_chars")
-
-
-def q_mann_whitney(spark, sf_dir):
-    """Mann–Whitney U rank-sum test comparing purchase vs view value
-    distributions — nonparametric A/B beside 74/104; midranks from
-    per-distinct-value cumulative counts (bounded aggregate-level window),
-    exact integer-or-half rank sums, float only in the final z.  Tie
-    correction ON (VERDICT r8 item 6): integer cents tie heavily, and the
-    uncorrected variance understates |z|; the Σ(t³−t) term comes from the
-    same per-value aggregate as exact BIGINTs."""
-    from area_etl_spark.operators.experiments import mann_whitney_u
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return mann_whitney_u(
-        ev, "event_type", "cents", "purchase", "view", tie_correction=True
-    )
-
-
-def q_versioned_roundtrip(spark, sf_dir):
-    """Manifest-pointer atomic table: publish nation as v1, publish an
-    uppercased v2, read back through the manifest — the reader must see
-    exactly the second snapshot (the oracle IS v2's content); v1 stays
-    readable for time travel within retention."""
-    import shutil
-
-    from area_etl_spark.sources.load import read_versioned, write_versioned
-
-    t = _run_tmp(spark, "versioned", "nation")
-    shutil.rmtree(t, ignore_errors=True)
-    n = _tables(spark, sf_dir)["nation"].select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    write_versioned(n, t, keep_versions=2)
-    write_versioned(
-        n.withColumn("n_name", F.upper(F.col("n_name"))), t, keep_versions=2
-    )
-    return read_versioned(spark, t)
-
-
-def q_kfold_assign(spark, sf_dir):
-    """Deterministic 5-fold CV assignment over documents: fold =
-    md5-uniform draw on doc_id — partition/engine-invariant, so folds are
-    reproducible artifacts; zero shuffles."""
-    from area_etl_spark.operators.sampling import kfold_assign
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "lang", "source")
-    return kfold_assign(d, "doc_id", k=5)
-
-
-def q_balance_classes(spark, sf_dir):
-    """Class-balanced undersampling of documents by lang: every class cut
-    to the minority size with the deterministic md5-rank draw; minority
-    size broadcast via the scalar-join idiom, no collect."""
-    from area_etl_spark.operators.sampling import balance_classes
-
-    d = _tables(spark, sf_dir)["documents"].select("doc_id", "lang", "source")
-    return balance_classes(d, "lang", "doc_id")
-
-
-def q_feature_hash(spark, sf_dir):
-    """Hashing-trick bag-of-words over documents: 64 signed buckets from
-    md5 bits — fixed feature width regardless of vocabulary growth, one
-    explode + one hash aggregate."""
-    from area_etl_spark.operators.encoding import feature_hash
-
-    return feature_hash(_tables(spark, sf_dir)["documents"], "text", "doc_id", 64)
-
-
-def q_target_encode_loo(spark, sf_dir):
-    """Leave-one-out target encoding of order priority against price:
-    per-category mean excluding the row's own target, smoothed toward the
-    global mean (m=20) — integer sums, one broadcast join, single float
-    division."""
-    from area_etl_spark.operators.encoding import target_encode_loo
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return target_encode_loo(o, "o_orderpriority", "cents", smoothing=20)
-
-
-def q_expectation_suite(spark, sf_dir):
-    """Expectation-suite table monitor (the Great Expectations slot): value
-    bounds, null-rate caps, distinct floors, and enum membership over
-    orders — every rule folded into ONE aggregation pass, one report row
-    per rule with observed vs bound."""
-    from area_etl_spark.plans.contracts import Expectation, expect
-
-    o = _tables(spark, sf_dir)["orders"]
-    return expect(
-        o,
-        [
-            Expectation("o_totalprice", min_value=0, max_value=1_000_000),
-            Expectation("o_orderkey", max_null_frac=0.0, min_distinct=100),
-            Expectation(
-                "o_orderstatus", allowed_values=["F", "O", "P"], max_null_frac=0.0
-            ),
-            Expectation("o_custkey", min_value=1),
-        ],
-    )
-
-
-def q_changepoint(spark, sf_dir):
-    """Mean-shift changepoint per event type over the daily revenue
-    series: argmax_k |n·P_k − k·S| (all-integer CUSUM numerator) plus the
-    before/after segment means — cusum_stats' scan report localized."""
-    from area_etl_spark.operators.windows import changepoint_detect
-
-    ev = _tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    return changepoint_detect(daily, ["event_type"], ["day"], "cents")
-
-
-def q_degree_distribution(spark, sf_dir):
-    """Key-cardinality histogram of lineitem per order in power-of-two
-    buckets (bit length of the count — exact integer log2): the degree
-    SHAPE skew diagnostic behind join/groupBy planning."""
-    from area_etl_spark.operators.quality import degree_distribution
-
-    return degree_distribution(_tables(spark, sf_dir)["lineitem"], ["l_orderkey"])
-
-
-KCORE_K, KCORE_ROUNDS = 3, 3
-
-
-def q_kcore(spark, sf_dir):
-    """Fixed-3-round 3-core peel of the order↔supplier bipartite graph
-    (each round deletes degree<3 nodes + their edges) — dense-subgraph
-    mining with deterministic, oracle-replayable rounds (the
-    pagerank_integer convention)."""
-    from area_etl_spark.operators.graph import kcore_peel
-
-    li = _tables(spark, sf_dir)["lineitem"]
-    edges = li.select(
-        (F.col("l_orderkey") % 1000).alias("src"),
-        (F.col("l_suppkey") + 1_000_000).alias("dst"),
-    )
-    return kcore_peel(edges, KCORE_K, KCORE_ROUNDS)
-
-
-def _kcore_sql(k: int, rounds: int) -> str:
-    """Chained-CTE replay of the fixed-round k-core peel (pagerank
-    convention: possible because each round is pure relational algebra)."""
-    ctes = [
-        """e0 AS (
-            SELECT DISTINCT a, b FROM (
-                SELECT l_orderkey % 1000 AS a, l_suppkey + 1000000 AS b FROM lineitem
-                UNION ALL
-                SELECT l_suppkey + 1000000 AS a, l_orderkey % 1000 AS b FROM lineitem
-            ) WHERE a <> b
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        ctes.append(
-            f"d{r} AS (SELECT a, COUNT(*) AS d FROM e{p} GROUP BY a)"
-        )
-        ctes.append(f"k{r} AS (SELECT a FROM d{r} WHERE d >= {k})")
-        ctes.append(
-            f"""e{r} AS (
-                SELECT e.a, e.b FROM e{p} e
-                JOIN k{r} x ON e.a = x.a
-                JOIN k{r} y ON e.b = y.a
-            )"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT a AS node, COUNT(*) AS degree FROM e{rounds} GROUP BY a"
-    )
-
-
-def q_strip_html(spark, sf_dir):
-    """Crawl-corpus HTML cleaning: documents wrapped in synthetic HTML
-    (script/style blocks with code bodies, comments, entities) must strip
-    back to their visible text — script/style CONTENTS dropped, entities
-    decoded, whitespace collapsed; the oracle asserts the exact expected
-    text from the construction."""
-    from area_etl_spark.operators.cleaning import strip_html
-
-    d = _tables(spark, sf_dir)["documents"]
-    html = F.concat(
-        F.lit('<html><head><script type="text/javascript">var a = 1 < 2;</script>'),
-        F.lit("<style>.x { color: red }</style></head><body><!-- hidden --><p>"),
-        F.coalesce(F.col("text"), F.lit("")),
-        F.lit('</p> <b>src='),
-        F.col("source"),
-        F.lit("</b>&amp;&nbsp;end</body></html>"),
-    )
-    return strip_html(
-        d.select("doc_id", html.alias("html")), "html"
-    ).select("doc_id", "clean_text")
-
-
-def q_split_sentences(spark, sf_dir):
-    """Sentence segmentation: documents given synthetic sentence
-    punctuation (a period after every third word) split into one row per
-    sentence with stable in-doc ids; empties dropped."""
-    from area_etl_spark.operators.chunking import split_sentences
-
-    d = _tables(spark, sf_dir)["documents"]
-    punct = F.regexp_replace(
-        F.coalesce(F.col("text"), F.lit("")),
-        r"([a-z0-9]+ [a-z0-9]+ [a-z0-9]+) ",
-        r"$1. ",
-    )
-    return split_sentences(d.select("doc_id", punct.alias("text")), "text", "doc_id")
-
-
-def q_parse_money(spark, sf_dir):
-    """Dirty money-string parsing: order totals rendered in four formats
-    ($1,234.56 / €1.234,56 / 1234.56 / "1234,56 EUR") from exact integer
-    cents, then parsed back — the oracle is the ORIGINAL cents, so the
-    parse must recover every row exactly."""
-    from area_etl_spark.functions.transforms import parse_money
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
-    )
-    intpart = F.format_number((F.col("_c") / 100).cast("long"), 0)
-    decpart = F.lpad((F.col("_c") % 100).cast("string"), 2, "0")
-    us = F.concat(intpart, F.lit("."), decpart)
-    eu = F.translate(us, ",.", ".,")
-    style = (F.col("o_orderkey") % 4).cast("int")
-    dirty = (
-        F.when(style == 0, F.concat(F.lit("$"), us))
-        .when(style == 1, F.concat(F.lit("€"), eu))
-        .when(style == 2, F.regexp_replace(us, ",", ""))
-        .otherwise(
-            F.concat(F.lit(" "), F.regexp_replace(eu, r"\.", ""), F.lit(" EUR"))
-        )
-    )
-    return o.select(
-        "o_orderkey", style.alias("style"), dirty.alias("raw")
-    ).select("o_orderkey", "style", parse_money("raw"))
-
-
-# Italian national holiday calendar over the TPC-H date range (orders span
-# 1992-01-01..1998-08-02, spans reach +59 days): the 10 fixed national
-# holidays per year plus the movable Easter Mondays (Pasquetta; Gregorian
-# computus dates, public knowledge).  The modern calendar is applied
-# uniformly — the pre-2001 history of the June 2 observance is out of
-# scope for the demo.  Used by BOTH q_business_days_holidays and its
-# oracle so the two sides share one literal dimension.
-_EASTER_MONDAYS = [
-    "1992-04-20", "1993-04-12", "1994-04-04", "1995-04-17",
-    "1996-04-08", "1997-03-31", "1998-04-13",
-]
-_IT_FIXED_HOLIDAYS = [
-    "01-01", "01-06", "04-25", "05-01", "06-02",
-    "08-15", "11-01", "12-08", "12-25", "12-26",
-]
-
-
-def _italian_holidays() -> list[str]:
-    return sorted(
-        [f"{y}-{md}" for y in range(1992, 1999) for md in _IT_FIXED_HOLIDAYS]
-        + _EASTER_MONDAYS
-    )
-
-
-def q_business_days_holidays(spark, sf_dir):
-    """Holiday-calendar SLA tier (VERDICT r12 item 5): weekday count in
-    [orderdate, orderdate + k) minus Italian public holidays falling on
-    weekdays — the reference's public-sector deadline arithmetic
-    (is_open_only_on_business_days, ref src/core.py:1493; AUAC
-    expiration_date, ref src/auac.py:241).  The calendar ships as a plan
-    literal (the degenerate broadcast dimension — no join, no shuffle);
-    the oracle recounts INDEPENDENTLY day-by-day with generate_series +
-    isodow + list_contains."""
-    from area_etl_spark.functions.transforms import business_days_between_holidays
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        F.col("o_orderdate").cast("date").alias("start_day"),
-        F.date_add(
-            F.col("o_orderdate").cast("date"), (F.col("o_orderkey") % 60).cast("int")
-        ).alias("end_day"),
-    )
-    return o.select(
-        "o_orderkey",
-        F.col("start_day").cast("timestamp").alias("start_day"),
-        F.col("end_day").cast("timestamp").alias("end_day"),
-        business_days_between_holidays(
-            "start_day", "end_day", _italian_holidays()
-        ).alias("business_days"),
-    )
-
-
-def _synthetic_article_page() -> "F.Column":
-    """The boilerplate-wrapped article page shared by q_html_main_text and
-    q_crawl_funnel_pipeline — one definition so the entries and their
-    closed-form oracles cannot drift."""
-    did = F.col("doc_id").cast("string")
-    return F.concat(
-        F.lit("<html><head><title>Doc "), did,
-        F.lit("</title><style>p{color:red}</style></head><body>"
-              "<nav class='nav'>Home | About | <a href='/'>Contact</a></nav>"
-              "<header><h1>Site Banner</h1></header>"
-              "<div class='cookie-banner'>We use cookies.</div>"
-              "<article><h2>Doc "), did, F.lit("</h2><p>"),
-        F.coalesce(F.col("text"), F.lit("")),
-        F.lit("</p></article><div id='social-share'>Share this everywhere</div>"
-              "<footer>All rights reserved.</footer></body></html>"),
-    )
-
-
-def q_html_main_text(spark, sf_dir):
-    """DOM-tier main-text extraction (VERDICT r12 item 7) over a synthetic
-    page wrapped around each document: nav/header/cookie/share/footer
-    boilerplate planted around the prose, html.parser mapInPandas tier
-    extracts it back out.  Because the corpus text is '<&>'-free and
-    single-level, the EXPECTED output is closed-form — title, heading
-    block + prose block (prose kept iff ≥ 25 non-ws chars) — so the
-    Python-worker tier gets a FULL value oracle, not rows-only; the
-    boilerplate-judgment paths are pytest-covered on crafted pages
-    (tests/test_cleaning.py)."""
-    from area_etl_spark.operators.cleaning import extract_main_text
-
-    d = _tables(spark, sf_dir)["documents"]
-    page = _synthetic_article_page()
-    return extract_main_text(
-        d.select("doc_id", page.alias("html")), "html", "doc_id"
-    )
-
-
-def q_crawl_funnel_pipeline(spark, sf_dir):
-    """END-TO-END crawl-to-corpus funnel — the tier ABOVE
-    q_corpus_prep_pipeline's text-side funnel: raw boilerplate-wrapped
-    HTML → DOM main-text extraction (Python-worker tier) → language ID →
-    quality score → the keep/route verdict a crawl pipeline feeds into
-    dedup.  The page wrap is the shared closed-form template, so the
-    DOM stage's output — and therefore EVERY downstream stage — replays
-    exactly in SQL: the one Python tier in the chain still gets a full
-    value oracle.  Plan: one mapInPandas pass, then a single narrow
-    projection (HOF token features, staged-projection idiom) — no
-    shuffle anywhere."""
-    from area_etl_spark.operators.cleaning import extract_main_text
-
-    d = _tables(spark, sf_dir)["documents"]
-    page = _synthetic_article_page()
-    main = extract_main_text(
-        d.select("doc_id", page.alias("html")), "html", "doc_id"
-    )
-    feats = TA.quality_features("text")
-    staged = main.select(
-        F.col("id").alias("doc_id"),
-        F.col("parse_ok"),
-        F.col("main_text").alias("text"),
-    ).select(
-        "doc_id",
-        "parse_ok",
-        TA.language_id("text").alias("lang"),
-        feats["n_tokens"],
-        feats["stopword_ratio"],
-        feats["punct_ratio"],
-    )
-    scored = staged.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        TA.quality_score_from_features(
-            F.col("n_tokens"), F.col("stopword_ratio"), F.col("punct_ratio")
-        ).alias("quality"),
-        "parse_ok",
-    )
-    return scored.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        "quality",
-        (
-            F.col("parse_ok")
-            & (F.col("lang") == "en")
-            & (F.col("quality") >= 0.5)
-        ).alias("kept"),
-    )
-
-
-def _synthetic_link_page() -> "F.Column":
-    """The deterministic 3-link page wrap shared by q_html_extract_links
-    and q_anchor_text_agg — one definition so the two entries (and their
-    closed-form oracles) cannot drift."""
-    did = F.col("doc_id").cast("string")
-    return F.concat(
-        F.lit("<html><body><p>Intro <a href='/doc/"), did,
-        F.lit("'>Doc "), did,
-        F.lit("</a> and <a href='https://example.com/src/"), F.col("source"),
-        F.lit("' rel='nofollow ugc'>source "), F.col("source"),
-        F.lit("</a>.</p>"
-              "<script>var a='<a href=\"/junk\">x</a>';</script>"
-              "<nav><a href='/'>Home</a></nav></body></html>"),
-    )
-
-
-def q_html_extract_links(spark, sf_dir):
-    """Link extraction over the same synthetic-page wrap as
-    q_html_main_text: one row per <a href> in document order — nav links
-    KEPT (link-graph edges are data, the opposite call from main-text
-    boilerplate removal), script-embedded anchors skipped, nofollow read
-    off rel.  Three deterministic links per page make the output
-    closed-form, so the Python-worker tier gets a full value oracle."""
-    from area_etl_spark.operators.cleaning import extract_links
-
-    d = _tables(spark, sf_dir)["documents"]
-    page = _synthetic_link_page()
-    return extract_links(d.select("doc_id", page.alias("html")), "html", "doc_id")
-
-
-def q_anchor_text_agg(spark, sf_dir):
-    """Anchor-text aggregation over the extracted link graph: the 3-link
-    synthetic pages produce three target classes — per-doc '/doc/<id>'
-    (one followed inlink each), shared 'https://example.com/src/<source>'
-    hubs (one nofollow inlink per doc of that source), and the site root
-    '/' that EVERY page links (the hub-skew case the operator's map-side
-    combine collapses) — so inlink/follow/source/anchor rollups and the
-    (count desc, anchor asc) top anchor are all closed-form for the
-    oracle."""
-    from area_etl_spark.operators.cleaning import extract_links
-    from area_etl_spark.operators.indexing import aggregate_anchor_text
-
-    d = _tables(spark, sf_dir)["documents"]
-    page = _synthetic_link_page()
-    links = extract_links(d.select("doc_id", page.alias("html")), "html", "doc_id")
-    return aggregate_anchor_text(links, "href", "anchor_text", "id", "nofollow")
-
-
-def q_vat_checksum_scan(spark, sf_dir):
-    """Italian VAT-number (Partita IVA) checksum scan: 11-digit candidates
-    synthesized from customer keys, partita_iva_valid's integer HOF fold
-    deciding which satisfy the published check — the validation the
-    reference's vat_number/owner_vat_number columns (ref src/core.py:346,
-    502) never get; DuckDB replays the fold with the same list_reduce."""
-    from area_etl_spark.operators.text_analysis import partita_iva_valid
-
-    c = _tables(spark, sf_dir)["customer"]
-    piva = F.concat(
-        F.lpad((F.col("c_custkey") % 10_000_000_000).cast("string"), 10, "0"),
-        (F.col("c_custkey") % 10).cast("string"),
-    )
-    return c.select(
-        "c_custkey",
-        piva.alias("vat_number"),
-        partita_iva_valid(piva).alias("vat_ok"),
-    )
-
-
-def q_iban_checksum_scan(spark, sf_dir):
-    """IBAN mod-97 checksum scan (ISO 13616): Italian-shaped IBANs
-    synthesized from customer keys (IT + claimed check digits + CIN/ABI/
-    CAB + 12-digit account), iban_checksum_valid's single left-to-right
-    remainder fold deciding validity — no big-integer arithmetic on
-    either side; DuckDB replays the identical fold."""
-    from area_etl_spark.operators.text_analysis import iban_checksum_valid
-
-    c = _tables(spark, sf_dir)["customer"]
-    iban = F.concat(
-        F.lit("IT"),
-        F.lpad((F.col("c_custkey") % 100).cast("string"), 2, "0"),
-        F.lit("X0542811101"),
-        F.lpad((F.col("c_custkey") % 1_000_000_000_000).cast("string"), 12, "0"),
-    )
-    return c.select(
-        "c_custkey",
-        iban.alias("iban"),
-        iban_checksum_valid(iban).alias("iban_ok"),
-    )
-
-
-def q_iban_redaction(spark, sf_dir):
-    """Checksum-validated IBAN redaction over synthetic payment lines:
-    only the mod-97-valid tokens are replaced (precision rides on the
-    checksum, ~1% random-shape pass rate), the rest of the text is left
-    byte-identical.  DuckDB replays validity with the same remainder
-    fold and replaces conditionally."""
-    from area_etl_spark.operators.text_analysis import redact_ibans
-
-    c = _tables(spark, sf_dir)["customer"]
-    iban = F.concat(
-        F.lit("IT"),
-        F.lpad((F.col("c_custkey") % 100).cast("string"), 2, "0"),
-        F.lit("X0542811101"),
-        F.lpad((F.col("c_custkey") % 1_000_000_000_000).cast("string"), 12, "0"),
-    )
-    text = F.concat(F.lit("pay "), iban, F.lit(" by wire"))
-    return c.select(
-        "c_custkey",
-        text.alias("raw"),
-        redact_ibans(text).alias("redacted"),
-    )
-
-
-def q_cf_checksum_scan(spark, sf_dir):
-    """Italian codice fiscale checksum scan + redaction (the national-ID
-    PII class of the reference's public-sector registries): CF-shaped
-    16-char codes synthesized from customer keys — six base-26 letters,
-    YY/month/day/town slots — with the TRUE check character (computed by
-    the same mod-26 fold) on even keys and a shifted, never-valid one on
-    odd keys; codice_fiscale_valid decides validity and
-    redact_codici_fiscali replaces exactly the valid tokens.  DuckDB
-    replays the fold with the same list_reduce over the same literal
-    CF_ODD_VALUES table."""
-    from area_etl_spark.operators.text_analysis import (
-        codice_fiscale_check_index,
-        codice_fiscale_valid,
-        redact_codici_fiscali,
-    )
-
-    c = _tables(spark, sf_dir)["customer"]
-    k = F.col("c_custkey")
-    letters = F.array(*[F.lit(ch) for ch in "ABCDEFGHIJKLMNOPQRSTUVWXYZ"])
-    months = F.array(*[F.lit(ch) for ch in "ABCDEHLMPRST"])
-    cf15 = F.concat(
-        *[
-            F.element_at(letters, (F.floor(k / F.lit(26**j)) % 26 + 1).cast("int"))
-            for j in range(6)
-        ],
-        F.lpad((k % 100).cast("string"), 2, "0"),
-        F.element_at(months, (k % 12 + 1).cast("int")),
-        F.lpad((k % 28 + 1).cast("string"), 2, "0"),
-        F.element_at(letters, (k % 26 + 1).cast("int")),
-        F.lpad((k % 1000).cast("string"), 3, "0"),
-    )
-    # STAGED projections: cf15 → check index → cf each land in their own
-    # select, so every downstream reference reads a bound column.  The
-    # single-expression form inlined the ~30-node cf15 tree into each of
-    # the check fold's 15 terms and then inlined THAT whole tree again
-    # into the validity fold and the redactor — a multiplicative
-    # expression blowup measured at 13.1 s for this scan; staged it is
-    # 1.5 s with bit-identical values (guide §1.2 per-task work).
-    s1 = c.select("c_custkey", cf15.alias("_cf15"))
-    s2 = s1.select(
-        "c_custkey", "_cf15",
-        codice_fiscale_check_index(F.col("_cf15")).alias("_idx"),
-    )
-    claimed = F.when(
-        F.col("c_custkey") % 2 == 0,
-        F.element_at(letters, (F.col("_idx") + 1).cast("int")),
-    ).otherwise(F.element_at(letters, ((F.col("_idx") + 7) % 26 + 1).cast("int")))
-    s3 = s2.select("c_custkey", F.concat(F.col("_cf15"), claimed).alias("cf"))
-    text = F.concat(F.lit("cf "), F.col("cf"), F.lit(" ok"))
-    return s3.select(
-        "c_custkey",
-        "cf",
-        codice_fiscale_valid(F.col("cf")).alias("cf_ok"),
-        redact_codici_fiscali(text).alias("redacted"),
-    )
-
-
-# Shared literals for the codice fiscale oracle — generated from the SAME
-# Python sources the Spark entry uses (CF_ODD_VALUES from the operator
-# module; the alphabet/month strings), so the two engines cannot drift.
-from area_etl_spark.operators.text_analysis import CF_ODD_VALUES as _CF_ODD
-
-_CF_LETTERS_SQL = "[" + ", ".join(f"'{ch}'" for ch in "ABCDEFGHIJKLMNOPQRSTUVWXYZ") + "]"
-_CF_MONTHS_SQL = "[" + ", ".join(f"'{ch}'" for ch in "ABCDEHLMPRST") + "]"
-_CF_ODD_SQL = "[" + ", ".join(str(v) for v in _CF_ODD) + "]"
-
-
-def _sqlq(s: str) -> str:
-    """Quote a Python string as a DuckDB single-quoted literal."""
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _periodogram_oracle_sql(max_freq: int = 12) -> str:
-    """DuckDB replay of q_periodogram built from the SAME import-time
-    trig-coefficient literals as the Spark operator (W.horner_sql renders
-    the identical Horner association; repr round-trips every double), so
-    the only cross-engine float surface is IEEE +,*,/ — bit-identical."""
-    cos_h = W.horner_sql("x2", W.COS_X2_COEFFS)
-    sin_h = f"(theta * {W.horner_sql('x2', W.SIN_X2_COEFFS)})"
-    ck = "(CAST(C AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000.0))"
-    sk = "(CAST(Ss AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000.0))"
-    return f"""
-            WITH series AS (
-                SELECT o_orderdate AS day, count(*) AS x
-                FROM orders GROUP BY o_orderdate
-            ), b AS (
-                SELECT CAST(x AS BIGINT) AS x,
-                       CAST(row_number() OVER (ORDER BY day) - 1 AS BIGINT) AS i
-                FROM series
-            ), t AS (
-                SELECT CAST(count(*) AS BIGINT) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS S
-                FROM b
-            ), g AS (
-                SELECT CAST(unnest(range(1, {max_freq + 1})) AS INT) AS freq
-            ), r1 AS (
-                SELECT b.x, t.n, t.S, g.freq,
-                       4 * ((CAST(g.freq AS BIGINT) * b.i) % t.n) AS fourm,
-                       (4 * ((CAST(g.freq AS BIGINT) * b.i) % t.n)) % t.n AS r
-                FROM b, t, g
-            ), r2 AS (
-                SELECT x, n, S, freq,
-                       CAST((fourm - r) / n AS INT) AS q,
-                       (CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-                           * {W.HALF_PI!r} AS theta
-                FROM r1
-            ), r3 AS (
-                SELECT x, n, S, freq, q, theta, theta * theta AS x2 FROM r2
-            ), r4 AS (
-                SELECT x, n, S, freq,
-                       CASE WHEN q = 0 THEN {cos_h}
-                            WHEN q = 1 THEN -{sin_h}
-                            WHEN q = 2 THEN -{cos_h}
-                            ELSE {sin_h} END AS cosv,
-                       CASE WHEN q = 0 THEN {sin_h}
-                            WHEN q = 1 THEN {cos_h}
-                            WHEN q = 2 THEN -{sin_h}
-                            ELSE -{cos_h} END AS sinv
-                FROM r3
-            ), r5 AS (
-                SELECT freq, n,
-                       CAST(n AS HUGEINT) * x - S AS w,
-                       CAST(floor(cosv * 1000000000.0 + 0.5) AS BIGINT) AS cq,
-                       CAST(floor(sinv * 1000000000.0 + 0.5) AS BIGINT) AS sq
-                FROM r4
-            ), a AS (
-                SELECT freq, MAX(n) AS n,
-                       SUM(w * cq) AS C, SUM(w * sq) AS Ss
-                FROM r5 GROUP BY freq
-            )
-            SELECT freq, n,
-                   round(CAST(n AS DOUBLE) / CAST(freq AS DOUBLE), 6) AS period,
-                   round(({ck} * {ck} + {sk} * {sk}) / CAST(n AS DOUBLE), 6)
-                       AS power
-            FROM a
-    """
-
-
-_FS_EM_FIELDS = ["name_eq", "city_eq", "phone_eq"]
-_FS_EM_PAIRS_SQL = """
-    SELECT CASE WHEN c_custkey % 10 = 0 THEN c_custkey % 13 < 12
-                ELSE c_custkey % 13 < 2 END AS name_eq,
-           CASE WHEN c_custkey % 10 = 0 THEN c_custkey % 11 < 9
-                ELSE c_custkey % 11 < 1 END AS city_eq,
-           CASE WHEN c_custkey % 10 = 0 THEN c_custkey % 7 < 5
-                ELSE c_custkey % 7 < 1 END AS phone_eq
-    FROM customer
-"""
-
-
-def q_fs_em_weights(spark, sf_dir):
-    """Unsupervised Fellegi–Sunter EM over synthesized candidate pairs
-    with a PLANTED latent match class (10% of keys, high per-field
-    agreement rates vs low non-match rates, all integer-mod conditions):
-    the quantized-responsibility EM recovers m/u/log2-weights per field;
-    the oracle is GENERATED by the operator's own paired SQL renderer
-    (fs_em_oracle_sql) — both engines' update arithmetic comes from one
-    set of formulas."""
-    from area_etl_spark.operators.linkage import fs_em_weights
-
-    c = _tables(spark, sf_dir)["customer"]
-    k = F.col("c_custkey")
-    L = k % 10 == 0
-    pairs = c.select(
-        F.when(L, k % 13 < 12).otherwise(k % 13 < 2).alias("name_eq"),
-        F.when(L, k % 11 < 9).otherwise(k % 11 < 1).alias("city_eq"),
-        F.when(L, k % 7 < 5).otherwise(k % 7 < 1).alias("phone_eq"),
-    )
-    return fs_em_weights(pairs, _FS_EM_FIELDS)
-
-
-def q_hyperball_neighborhood(spark, sf_dir):
-    """HyperBall 2-hop ball-size estimation over the bidirectional
-    user↔item event graph (the pagerank graph): md5-derived HLL registers
-    merge along edges for two unrolled rounds — per-node state is 16
-    registers, a round is one register-wise max-merge (map-side
-    combinable), the harmonic denominator is the exact integer
-    Σ 2^(33−r); DuckDB replays registers, both rounds, and the one float
-    division."""
-    from area_etl_spark.operators.graph import hyperball_neighborhood
-
-    tables = _tables(spark, sf_dir)
-    ev = tables["events"].select(
-        F.col("user_id").alias("u"),
-        (F.pmod(F.col("event_id"), F.lit(500)) + F.lit(10_000_000)).alias("i"),
-    )
-    fwd = ev.select(F.col("u").alias("src"), F.col("i").alias("dst"))
-    rev = ev.select(F.col("i").alias("src"), F.col("u").alias("dst"))
-    edges = fwd.unionByName(rev).distinct()
-    return hyperball_neighborhood(edges, hops=2)
-
-
-def _hyperball_oracle_sql(hops: int = 2) -> str:
-    """DuckDB replay of q_hyperball_neighborhood from the graph module's
-    own constants (register table + α) — rounds unrolled as chained CTEs
-    (the pagerank precedent)."""
-    import area_etl_spark.operators.graph as GR
-
-    pow2 = "[" + ", ".join(str(v) for v in GR.POW2) + "]"
-    m = 16
-    scale = GR.HLL_ALPHA_16 * float(m * m) * float(GR.POW2[33])
-    hexd = " ".join(f"WHEN '{x:x}' THEN {x}" for x in range(16))
-    rounds = []
-    prev = "r0"
-    for t in range(1, hops + 1):
-        rounds.append(
-            f"r{t} AS (SELECT node, j, max(r) AS r FROM ("
-            f" SELECT node, j, r FROM {prev}"
-            f" UNION ALL"
-            f" SELECT e.src AS node, t.j, t.r FROM edges e"
-            f" JOIN {prev} t ON e.dst = t.node) GROUP BY node, j),"
-        )
-        prev = f"r{t}"
-    return f"""
-            WITH ev AS (
-                SELECT DISTINCT user_id AS u,
-                       (event_id % 500) + 10000000 AS i
-                FROM events
-            ), edges AS (
-                SELECT u AS src, i AS dst FROM ev
-                UNION
-                SELECT i, u FROM ev
-            ), nodes AS (
-                SELECT src AS node FROM edges
-                UNION
-                SELECT dst FROM edges
-            ), hx AS (
-                SELECT node, md5(CAST(node AS VARCHAR)) AS h FROM nodes
-            ), zz AS (
-                SELECT node,
-                       CASE substr(h, 1, 1) {hexd} END AS j,
-                       length(regexp_extract(substr(h, 2, 8), '^(0*)', 1)) AS z,
-                       substr(h, 2, 8) AS hex8
-                FROM hx
-            ), r0 AS (
-                SELECT node, CAST(j AS INT) AS j,
-                       CAST(CASE WHEN z = 8 THEN 33
-                            ELSE 4 * z
-                                 + (4 - (CASE substr(hex8, z + 1, 1)
-                                         WHEN '1' THEN 1
-                                         WHEN '2' THEN 2 WHEN '3' THEN 2
-                                         WHEN '4' THEN 3 WHEN '5' THEN 3
-                                         WHEN '6' THEN 3 WHEN '7' THEN 3
-                                         ELSE 4 END)) + 1
-                            END AS INT) AS r
-                FROM zz
-            ),
-            {''.join(rounds)}
-            fin AS (
-                SELECT node,
-                       CAST(SUM(list_extract({pow2}, 33 - r + 1))
-                            + ({m} - count(*)) * {GR.POW2[33]} AS BIGINT)
-                           AS reg_sum,
-                       CAST({m} - count(*) AS INT) AS v_empty
-                FROM {prev} GROUP BY node
-            )
-            SELECT node, CAST({hops} AS INT) AS hops, reg_sum, v_empty,
-                   round(CASE WHEN {scale!r} / CAST(reg_sum AS DOUBLE)
-                                   < {2.5 * m!r} AND v_empty > 0
-                              THEN {float(m)!r}
-                                   * ln({float(m)!r} / CAST(v_empty AS DOUBLE))
-                              ELSE {scale!r} / CAST(reg_sum AS DOUBLE)
-                         END, 3) AS est
-            FROM fin
-    """
-
-
-def q_local_clustering(spark, sf_dir):
-    """Per-node clustering coefficient over the derived order graph: the
-    order-canonical triangle join exploded back to all three members,
-    exact-integer 2·tri / deg·(deg−1), degree-capped hubs reported NULL;
-    DuckDB replays the wedge join and the ratio."""
-    from area_etl_spark.operators.graph import local_clustering_coefficient
-
-    tables = _tables(spark, sf_dir)
-    return local_clustering_coefficient(_order_graph(tables), max_degree=500)
-
-
-def q_bot_traffic(spark, sf_dir):
-    """Metronomic-traffic detection over events with planted bots: every
-    user_id % 7 == 0 gets an exact 60-second tick schedule in place of
-    its real timestamps; the cv/modal-gap signals must flag exactly the
-    planted class.  Gaps are integer microseconds (the debounce lesson),
-    the cv folds from DECIMAL sums, so DuckDB replays every signal."""
-    from area_etl_spark.operators.telemetry import detect_bot_traffic
-
-    ev = _tables(spark, sf_dir)["events"].select("user_id", "ts", "event_id")
-    bot = F.col("user_id") % 7 == 0
-    ts2 = F.when(
-        bot,
-        F.expr(
-            "timestamp'1995-01-01 00:00:00'"
-            " + make_dt_interval(0, 0, 0, CAST(event_id % 1000 AS INT) * 60)"
-        ),
-    ).otherwise(F.col("ts"))
-    return detect_bot_traffic(
-        ev.select("user_id", ts2.alias("ts")), "user_id", "ts", min_events=10
-    )
-
-
-def q_cooccurrence_pairs(spark, sf_dir):
-    """Market-basket bipartite projection over lineitem (order = basket,
-    part-class = item): deterministic per-basket cap (lexicographically
-    smallest 5) BEFORE the pair join, min-support 2, exact-integer lift —
-    the capped wedge shape the adamic_adar audit standardized; DuckDB
-    replays cap, pairs, degrees, and the lift division."""
-    from area_etl_spark.operators.graph import cooccurrence_pairs
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_orderkey").alias("basket"),
-        (F.col("l_partkey") % 100).alias("item"),
-    )
-    return cooccurrence_pairs(
-        li, "basket", "item", max_items_per_user=5, min_users=2
-    )
-
-
-def q_periodogram(spark, sf_dir):
-    """DFT periodogram of the daily order-count series at harmonics
-    k = 1..12: integer quadrant reduction + the shared Horner trig
-    polynomials (engine-bit-identical — no libm sin/cos on either side),
-    1e-9-quantized weights, exact DECIMAL sums; DuckDB replays the
-    identical chain from the same import-time coefficient literals."""
-    from area_etl_spark.operators.windows import periodogram
-
-    o = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(F.col("o_orderdate").alias("day"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    return periodogram(o, "day", "x", max_freq=12)
-
-
-def q_embedding_anisotropy(spark, sf_dir):
-    """Embedding-space anisotropy report (Ethayarajh 2019 diagnostic):
-    ||mean||^2 over E||x||^2 from exact quantized DECIMAL sums — the
-    collapsed-cone monitor that explains inflated cosines before anyone
-    tunes a near-dup threshold on them."""
-    from area_etl_spark.operators.similarity import embedding_anisotropy
-
-    return embedding_anisotropy(_tables(spark, sf_dir)["embeddings"])
-
-
-def q_embedding_whiten(spark, sf_dir):
-    """Diagonal whitening (per-dim z-score) of the embedding table: exact
-    per-dim DECIMAL stats broadcast back, the z chain re-quantized to
-    integer milliunits and CSV-serialized (the q8_csv precedent — integer
-    strings are engine-portable, float formatting is not)."""
-    from area_etl_spark.operators.similarity import embedding_whiten_diagonal
-
-    return embedding_whiten_diagonal(
-        _tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    )
-
-
-# Deterministic code snippets for q_code_detect — import-time fixtures so
-# the Spark query and the DuckDB oracle synthesize byte-identical inputs
-# (the mojibake-fixture recipe).
-_CODE_SNIP_PY = "def main():\n    import os\n    return os.path;\n"
-_CODE_SNIP_SQL = (
-    "select o_orderkey from orders where o_status = 'F';\n"
-    "update orders set o_status = 'P' where o_orderkey = 1;\n"
-)
-
-
-def q_code_detect(spark, sf_dir):
-    """Code-vs-prose corpus routing: three deterministic document classes —
-    a python snippet prefix (def/import/return + indents + symbols), a SQL
-    snippet prefix (select/from/where/update), and the raw prose text —
-    detect_code's symbol/indent/keyword densities must route the first two
-    to is_code with the right lang_hint and leave prose alone.  All
-    counting is HOF token/line filters + the length-difference symbol
-    trick, so DuckDB replays every feature over the same synthesized
-    text."""
-    from area_etl_spark.operators.text_analysis import detect_code
-
-    d = _tables(spark, sf_dir)["documents"]
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    cls = F.col("doc_id") % 3
-    staged = (
-        F.when(cls == 0, F.concat(F.lit(_CODE_SNIP_PY), txt))
-        .when(cls == 1, F.concat(F.lit(_CODE_SNIP_SQL), txt))
-        .otherwise(txt)
-    )
-    return detect_code(
-        d.select("doc_id", staged.alias("text")), "text", "doc_id"
-    )
-
-
-# Deterministic mojibake fixtures for q_mojibake_repair: the CLEAN string,
-# its UTF-8-read-as-latin1 form, and its UTF-8-read-as-cp1252 form — built
-# at import so the Spark query and the DuckDB oracle share one source of
-# truth (no hand-typed control characters).
-_MOJI_CLEAN_L1 = "Città di Modena: "
-_MOJI_BROKEN_L1 = _MOJI_CLEAN_L1.encode("utf-8").decode("latin-1")
-_MOJI_CLEAN_CP = "perché l’unità — "
-_MOJI_BROKEN_CP = _MOJI_CLEAN_CP.encode("utf-8").decode("cp1252")
-
-
-def q_mojibake_repair(spark, sf_dir):
-    """Crawl-encoding repair (ftfy-class, re-derived): three deterministic
-    document classes — a latin1-mojibake prefix, a cp1252-mojibake prefix
-    (curly punctuation through the 0x80–0x9F translate-back), and clean
-    ascii — each followed by the document's own text; fix_mojibake must
-    repair exactly the first two prefixes and pass everything else through
-    byte-identical.  The oracle replays the class outputs closed-form from
-    the SAME import-time fixtures."""
-    from area_etl_spark.operators.cleaning import fix_mojibake
-
-    d = _tables(spark, sf_dir)["documents"]
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    cls = F.col("doc_id") % 3
-    raw = (
-        F.when(cls == 0, F.concat(F.lit(_MOJI_BROKEN_L1), txt))
-        .when(cls == 1, F.concat(F.lit(_MOJI_BROKEN_CP), txt))
-        .otherwise(F.concat(F.lit("clean: "), txt))
-    )
-    return d.select(
-        "doc_id",
-        raw.alias("raw"),
-        fix_mojibake(raw).alias("fixed"),
-    )
-
-
-def q_robots_url_filter(spark, sf_dir):
-    """Robots.txt crawl gating under the published longest-match rule:
-    paths synthesized into four deterministic classes (disallowed subtree,
-    longer-allow exception inside it, prefix disallow, unmatched), the
-    plan-literal rule fold deciding each — the oracle replays the class
-    decisions closed-form (the quarantine-report recipe)."""
-    from area_etl_spark.operators.cleaning import parse_robots_txt, robots_allow
-
-    robots = (
-        "User-agent: *\n"
-        "Disallow: /private/\n"
-        "Allow: /private/press/\n"
-        "Disallow: /tmp\n"
-    )
-    rules = parse_robots_txt(robots)
-    d = _tables(spark, sf_dir)["documents"]
-    did = F.col("doc_id").cast("string")
-    cls = F.col("doc_id") % 4
-    path = (
-        F.when(cls == 0, F.concat(F.lit("/private/doc/"), did))
-        .when(cls == 1, F.concat(F.lit("/private/press/rel"), did))
-        .when(cls == 2, F.concat(F.lit("/tmp"), did))
-        .otherwise(F.concat(F.lit("/public/doc/"), did))
-    )
-    return d.select(
-        "doc_id",
-        path.alias("path"),
-        robots_allow(path, rules).alias("crawl_allowed"),
-    )
-
-
-def q_business_days(spark, sf_dir):
-    """SLA working-day arithmetic: weekday count in [orderdate,
-    orderdate + k) per order via the closed-form full-weeks + bounded
-    remainder fold; the oracle counts the days INDEPENDENTLY with
-    generate_series + isodow."""
-    from area_etl_spark.functions.transforms import business_days_between
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        F.col("o_orderdate").cast("date").alias("start_day"),
-        F.date_add(F.col("o_orderdate").cast("date"), (F.col("o_orderkey") % 60).cast("int")).alias(
-            "end_day"
-        ),
-    )
-    return o.select(
-        "o_orderkey",
-        F.col("start_day").cast("timestamp").alias("start_day"),
-        F.col("end_day").cast("timestamp").alias("end_day"),
-        business_days_between("start_day", "end_day").alias("business_days"),
-    )
-
-
-def q_score_linear(spark, sf_dir):
-    """Linear-model scoring over hashed features: feature_hash(documents)
-    ⋈ broadcast integer-micro weights → exact BIGINT margin per doc —
-    bit-reproducible inference, the production filter tier."""
-    from area_etl_spark.operators.encoding import feature_hash, score_linear
-
-    feats = feature_hash(_tables(spark, sf_dir)["documents"], "text", "doc_id", 64)
-    weights = spark.range(64).select(
-        F.col("id").cast("int").alias("bucket"),
-        ((F.col("id") * 7) % 13 - 6).alias("w"),
-    )
-    return score_linear(feats, weights)
-
-
-def q_jl_project(spark, sf_dir):
-    """Johnson–Lindenstrauss ±1 projection of int8-quantized embeddings to
-    16 dims — all-integer signed sums with a deterministic md5 sign matrix
-    (plan literal), long-form output; the ANN-prep reduction after the 4×
-    quantization cut."""
-    from area_etl_spark.operators.similarity import jl_project, quantize_int8
-
-    emb = _tables(spark, sf_dir)["embeddings"]
-    return jl_project(quantize_int8(emb))
-
-
-def _jl_sql(out_dim: int = 16, in_dim: int = 64) -> str:
-    """Replay of the JL projection: quantization CTE + one UNION ALL arm
-    per output dimension, the sign rows inlined from the SAME Python
-    jl_signs matrix the Spark plan embeds."""
-    from area_etl_spark.operators.similarity import jl_signs
-
-    signs = jl_signs(out_dim, in_dim)
-    arms = []
-    for k in range(out_dim):
-        lit = "[" + ", ".join(str(s) for s in signs[k]) + "]"
-        arms.append(
-            f"""SELECT vec_id, {k} AS out_dim_idx,
-                CAST(list_sum(list_transform(range(1, {in_dim} + 1),
-                     i -> q[i] * ({lit})[i])) AS BIGINT) AS value
-                FROM q"""
-        )
-    return (
-        """WITH q AS (
-            SELECT vec_id,
-                   CASE WHEN amax > 0
-                        THEN list_transform(embedding,
-                             x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / amax + 0.5)
-                                  AS BIGINT))
-                        ELSE list_transform(embedding, x -> CAST(0 AS BIGINT))
-                        END AS q
-            FROM (
-                SELECT vec_id, embedding,
-                       CAST(list_aggregate(list_transform(embedding,
-                            x -> abs(CAST(x AS DOUBLE))), 'max') AS DOUBLE) AS amax
-                FROM embeddings
-            )
-        )
-        """
-        + " UNION ALL ".join(arms)
-    )
-
-
-def q_standardized_rates(spark, sf_dir):
-    """Direct standardization (Simpson's-paradox guard): per-mktsegment
-    positive-balance rates re-weighted to the pooled nation mix — exact
-    counts, one stratum-sorted float fold per group."""
-    from area_etl_spark.operators.experiments import standardized_rates
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_mktsegment",
-        "c_nationkey",
-        (F.col("c_acctbal") > 0).cast("int").alias("positive"),
-    )
-    return standardized_rates(c, "c_mktsegment", "c_nationkey", "positive")
-
-
-def q_merge_conditional(spark, sf_dir):
-    """Full ANSI MERGE semantics: a customer-dimension refresh where
-    matched rows update only when the source balance differs, rows flagged
-    by the source delete, unmatched source rows insert, and target-only
-    rows survive — one full-outer join + CASE, evaluation order
-    delete→update→keep."""
-    from area_etl_spark.operators.diff import merge_conditional
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        "c_name",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    # source: every 2nd key with shifted balance, every 9th flagged for
-    # delete via bal = -999999; plus brand-new keys past the id range
-    src_existing = c.where(F.col("c_custkey") % 2 == 0).select(
-        "c_custkey",
-        "c_name",
-        F.when(F.col("c_custkey") % 9 == 0, F.lit(-999999))
-        .when(F.col("c_custkey") % 4 == 0, F.col("bal_cents") + 555)
-        .otherwise(F.col("bal_cents"))
-        .alias("bal_cents"),
-    )
-    src_new = c.where(F.col("c_custkey") % 7 == 0).select(
-        (F.col("c_custkey") + 10_000_000).alias("c_custkey"),
-        F.concat(F.lit("NEW "), F.col("c_name")).alias("c_name"),
-        F.lit(100).cast("long").alias("bal_cents"),
-    )
-    src = src_existing.unionByName(src_new)
-    return merge_conditional(
-        c,
-        src,
-        ["c_custkey"],
-        update_cond=F.col("s_bal_cents") != F.col("t_bal_cents"),
-        delete_cond=F.col("s_bal_cents") == -999999,
-    )
-
-
-def q_mask_columns(spark, sf_dir):
-    """Column masking for a governed release: customer name fully masked,
-    phone-like key partially (last 4 kept), account balance hash-tokenized
-    (referential integrity preserved), nation nulled."""
-    from area_etl_spark.functions.transforms import mask_columns
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        "c_name",
-        F.col("c_acctbal").cast("string").alias("bal"),
-        F.col("c_nationkey").cast("string").alias("nat"),
-        F.concat(F.lit("555-01"), F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0")).alias(
-            "phone"
-        ),
-    )
-    return mask_columns(
-        c, {"c_name": "full", "phone": "partial", "bal": "hash", "nat": "null"}
-    )
-
-
-def q_stickiness(spark, sf_dir):
-    """DAU/MAU stickiness per day: daily distinct users over trailing-28-day
-    distinct users — the day-offset-explode exact-distinct recipe of
-    rolling_distinct_users (76) at two horizons, one (day,user) distinct
-    each, no windowed state."""
-    ev = _tables(spark, sf_dir)["events"].select(
-        F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-    )
-    dau = ev.distinct().groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
-    spread = ev.distinct().select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(27)),
-                lambda i: F.timestamp_add("DAY", i, F.col("day")),
-            )
-        ).alias("day"),
-        "user_id",
-    )
-    mau = (
-        spread.distinct()
-        .groupBy("day")
-        .agg(F.countDistinct("user_id").alias("mau"))
-    )
-    return (
-        dau.join(mau, "day")
-        .select(
-            "day",
-            "dau",
-            "mau",
-            (F.round(F.col("dau").cast("double") / F.col("mau"), 6) + F.lit(0.0)).alias(
-                "stickiness"
-            ),
-        )
-    )
-
-
-def q_fd_violations(spark, sf_dir):
-    """Functional-dependency profiling over lineitem/orders: does
-    l_orderkey → o_custkey hold through the join key, does suppkey →
-    nationkey, and a deliberately violated pair (orderkey → shipdate)."""
-    from area_etl_spark.operators.quality import fd_violations
-
-    t = _tables(spark, sf_dir)
-    li = t["lineitem"].join(
-        t["orders"].select("o_orderkey", "o_custkey"),
-        t["lineitem"]["l_orderkey"] == t["orders"]["o_orderkey"],
-    )
-    df = li.select(
-        "l_orderkey",
-        "o_custkey",
-        "l_suppkey",
-        "l_shipdate",
-    )
-    return fd_violations(
-        df,
-        [("l_orderkey", "o_custkey"), ("l_suppkey", "l_orderkey"), ("l_orderkey", "l_shipdate")],
-    )
-
-
-def q_feature_matrix(spark, sf_dir):
-    """Point-in-time feature-store join: for every purchase (label row),
-    the most recent view value and most recent click value STRICTLY before
-    the label time — one chained backward as-of join per feature table,
-    missing history → NULL (cold start), no future leakage by
-    construction."""
-    from area_etl_spark.operators.features import FeatureTable, point_in_time_join
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    labels = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", F.col("cents").alias("label_cents")
-    )
-    views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "cents")
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "cents")
-    return point_in_time_join(
-        labels,
-        "user_id",
-        "ts",
-        [
-            FeatureTable(views, "ts", ["cents"], "lv"),
-            FeatureTable(clicks, "ts", ["cents"], "lc"),
-        ],
-    ).select("user_id", "ts", "event_id", "label_cents", "lv_cents", "lc_cents")
-
-
-def q_parse_xml(spark, sf_dir):
-    """Flat-XML legacy-feed ingestion: orders rendered as XML records
-    (entities escaped in the comment field), extracted back to typed
-    columns — the oracle is the original values, so extraction + entity
-    decode + try_cast must recover every row."""
-    from area_etl_spark.sources.extract import parse_xml_flat
-
-    o = _tables(spark, sf_dir)["orders"]
-    esc = F.concat(
-        F.lit("A&amp;B &lt;"), F.col("o_orderpriority"), F.lit("&gt;")
-    )
-    xml = F.concat(
-        F.lit("<order><key>"),
-        F.col("o_orderkey").cast("string"),
-        F.lit("</key><cents>"),
-        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        F.lit("</cents><status>"),
-        F.col("o_orderstatus"),
-        F.lit("</status><comment>"),
-        esc,
-        F.lit("</comment></order>"),
-    )
-    return parse_xml_flat(
-        o.select("o_orderkey", xml.alias("xml")),
-        "xml",
-        {"key": "long", "cents": "long", "status": "string", "comment": "string"},
-        keep_cols=["o_orderkey"],
-    )
-
-
-def q_personalized_pagerank(spark, sf_dir):
-    """Seeded-teleport PageRank over the user↔item graph (seeds = every
-    5th user): random-walk-with-restart affinity to the seed set —
-    all-integer, fixed 3 rounds, oracle replays each round as chained
-    CTEs."""
-    from area_etl_spark.operators.graph import personalized_pagerank_integer
-
-    ev = _tables(spark, sf_dir)["events"]
-    edges = (
-        ev.select(
-            F.col("user_id").alias("src"),
-            (F.lit(10_000_000) + F.col("event_id") % 500).alias("dst"),
-        )
-        .unionByName(
-            ev.select(
-                (F.lit(10_000_000) + F.col("event_id") % 500).alias("src"),
-                F.col("user_id").alias("dst"),
-            )
-        )
-        .distinct()
-    )
-    seeds = ev.select("user_id").where(F.col("user_id") % 5 == 0).distinct()
-    return personalized_pagerank_integer(edges, seeds).select(
-        "node", F.col("rank").alias("ppr_rank")
-    )
-
-
-def _ppr_sql(iterations: int = 3, damping_pct: int = 85, scale: int = 10**9) -> str:
-    """Chained-CTE replay of the personalized PageRank (same machinery as
-    _pagerank_sql with seed-gated base/init terms)."""
-    base = (100 - damping_pct) * scale // 100
-    ctes = [
-        """e AS (
-            SELECT DISTINCT user_id AS src, 10000000 + (event_id % 500) AS dst FROM events
-            UNION
-            SELECT DISTINCT 10000000 + (event_id % 500) AS src, user_id AS dst FROM events
-        )""",
-        "deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src)",
-        """nodes AS (
-            SELECT node, MAX(s) AS seed FROM (
-                SELECT src AS node,
-                       CASE WHEN src < 10000000 AND src % 5 = 0 THEN 1 ELSE 0 END AS s
-                FROM e
-                UNION ALL
-                SELECT dst,
-                       CASE WHEN dst < 10000000 AND dst % 5 = 0 THEN 1 ELSE 0 END
-                FROM e
-            ) GROUP BY node
-        )""",
-        f"""r0 AS (SELECT node,
-                   CAST(CASE WHEN seed = 1 THEN {scale} ELSE 0 END AS BIGINT) AS pr
-                   FROM nodes)""",
-    ]
-    for k in range(1, iterations + 1):
-        ctes.append(
-            f"""c{k} AS (
-                SELECT e.dst AS node, CAST(SUM(r.pr // g.d) AS BIGINT) AS s
-                FROM e JOIN deg g ON g.src = e.src JOIN r{k - 1} r ON r.node = e.src
-                GROUP BY e.dst
-            )"""
-        )
-        ctes.append(
-            f"""r{k} AS (
-                SELECT n.node,
-                       CAST(CASE WHEN n.seed = 1 THEN {base} ELSE 0 END AS BIGINT)
-                       + ({damping_pct} * COALESCE(c.s, 0)) // 100 AS pr
-                FROM nodes n LEFT JOIN c{k} c ON c.node = n.node
-            )"""
-        )
-    return (
-        f"WITH {', '.join(ctes)} "
-        f"SELECT node, CAST(pr AS BIGINT) AS ppr_rank FROM r{iterations}"
-    )
-
-
-def q_link_prediction(spark, sf_dir):
-    """Item-item link prediction over the user↔item bipartite graph:
-    common-user counts + neighborhood Jaccard for non-adjacent item pairs
-    (wedges through users; 'users also engaged with') — output bounded by
-    |items|², wedge work by the middle-degree cap."""
-    from area_etl_spark.operators.graph import common_neighbor_scores
-
-    ev = _tables(spark, sf_dir)["events"]
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        (F.lit(10_000_000) + F.col("event_id") % 500).alias("dst"),
-    ).distinct()
-    scored = common_neighbor_scores(edges, min_common=2, max_middle_degree=100000)
-    # keep the item-item side (user-user pairs ride the same machinery)
-    return scored.where(F.col("u") >= 10_000_000)
-
-
-def q_collocations(spark, sf_dir):
-    """Top-50 collocations by lift over the document corpus — exact
-    integer counts, DECIMAL(38,0) numerator, single rounded division;
-    log-free on purpose (PMI's log orders identically but differs in
-    engine ulps)."""
-    from area_etl_spark.operators.text_analysis import collocations_by_lift
-
-    return collocations_by_lift(_tables(spark, sf_dir)["documents"])
-
-
-def q_growth_accounting(spark, sf_dir):
-    """Daily growth accounting over events: every active user classified
-    new / retained / resurrected per day, churn reported the day after
-    last activity — all lag/lead arithmetic on the distinct (user, day)
-    activity grid, exact integers end to end."""
-    from area_etl_spark.operators.business import growth_accounting
-
-    ev = _tables(spark, sf_dir)["events"]
-    return growth_accounting(
-        ev, "user_id", F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01"))
-    )
-
-
-def q_log2_histogram(spark, sf_dir):
-    """Exponential histogram of order value cents: floor(log2) bins taken
-    as integer bit length (length(bin(x))−1), never float log2 — exact at
-    the power-of-two edges where libm rounding flips rows between engines."""
-    from area_etl_spark.operators.quality import log2_histogram
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    return log2_histogram(o, "cents")
-
-
-def q_checksum_drilldown(spark, sf_dir):
-    """Reconciliation drill-down: orders vs a deliberately damaged copy
-    (every 1000th row deleted, every 997th mutated) compared as 64
-    md5-bucketed commutative checksums — only the differing buckets come
-    back, localizing a 100 TB diff without shipping rows."""
-    from area_etl_spark.operators.quality import checksum_drilldown
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    damaged = o.where(F.col("o_orderkey") % 1000 != 1).withColumn(
-        "cents",
-        F.when(F.col("o_orderkey") % 997 == 0, F.col("cents") + 1).otherwise(
-            F.col("cents")
-        ),
-    )
-    out = checksum_drilldown(
-        o, damaged, ["o_orderkey"], ["o_orderkey", "o_custkey", "cents"], buckets=64
-    )
-    # decimal(38,0) sums ride as strings for the driver gate (same
-    # canonicalization note as q_table_checksum)
-    return out.select(
-        "bucket",
-        "n_left",
-        "n_right",
-        F.col("sum_left").cast("string").alias("sum_left"),
-        F.col("sum_right").cast("string").alias("sum_right"),
-    )
-
-
-def q_bloom_prune(spark, sf_dir):
-    """Bloom-filter join pruning: lineitem pre-filtered to suppliers from
-    nation 3 by a 256-bit bitmap built in one bounded pass — the
-    shuffle-avoidance move when the dim side is too big to broadcast as a
-    hash table but its Bloom bitmap is tiny.  The tiny num_bits is chosen
-    to surface deterministic false positives, which the portable md5 hash
-    family reproduces bit-identically in the oracle."""
-    from area_etl_spark.operators.sketches import bloom_prune
-
-    tables = _tables(spark, sf_dir)
-    build = tables["supplier"].where(F.col("s_nationkey") == 3)
-    pruned = bloom_prune(
-        tables["lineitem"], build, "l_suppkey", "s_suppkey", num_bits=256, num_hashes=3
-    )
-    return pruned.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("sum_cents"),
-    )
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Count-min-sketch heavy hitters: customers with ≥25 orders estimated
-    from a fixed 3×64 counter table (deliberately narrow so collisions
-    inflate estimates — the estimates-never-undercount guarantee and the
-    exact collision pattern are both reproduced by the oracle)."""
-    from area_etl_spark.operators.sketches import cms_heavy_hitters
-
-    return cms_heavy_hitters(
-        _tables(spark, sf_dir)["orders"], "o_custkey", threshold=25, width=64, depth=3
-    )
-
-
-def q_bpe_merges(spark, sf_dir):
-    """BPE tokenizer training on the documents corpus: the 6 most frequent
-    adjacent symbol pairs, each merge applied before the next is counted
-    (Sennrich-style).  All rounds run on the cached word HISTOGRAM — the
-    corpus is exploded exactly once; the oracle unrolls the same 6 rounds
-    as chained CTEs with identical argmax tie-breaks and left-to-right
-    non-overlapping replace semantics."""
-    from area_etl_spark.operators.vocab import train_bpe_merges
-
-    return train_bpe_merges(
-        _tables(spark, sf_dir)["documents"], num_merges=6
-    ).select("rank", F.col("left").alias("lft"), F.col("right").alias("rgt"), "pair_count")
-
-
-def q_bpe_segment(spark, sf_dir):
-    """Documents re-tokenized with the 6 learned BPE merges: per-doc BPE
-    token count.  Training collects 6 bounded argmax rows; application is
-    a pure narrow replace chain — no extra shuffle."""
-    from area_etl_spark.operators.vocab import bpe_segment, train_bpe_merges
-
-    docs = _tables(spark, sf_dir)["documents"]
-    merges = [
-        (r.left, r.right)
-        for r in train_bpe_merges(docs, num_merges=6).collect()
-    ]
-    return bpe_segment(docs, merges)
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """KMV bottom-16 distinct sketch per market segment: deterministic
-    (md5) bottom-k hashes → distinct-customer estimates that reproduce
-    bit-identically in the oracle — the mergeable distinct-count sketch
-    with set algebra that HLL can't give you (union via kmv_merge is
-    pytest-proven equal to sketching the union)."""
-    from area_etl_spark.operators.sketches import kmv_estimate, kmv_sketch
-
-    sk = kmv_sketch(
-        _tables(spark, sf_dir)["customer"], ["c_mktsegment"], "c_custkey", k=16
-    )
-    est = kmv_estimate(sk, 16)
-    return est.select(
-        "c_mktsegment",
-        F.size("hashes").alias("n_hashes"),
-        "est_distinct",
-    )
-
-
-def q_l_diversity(spark, sf_dir):
-    """l-diversity privacy gate over orders: per (orderpriority,
-    orderstatus) class, distinct customers — a k-anonymous class whose
-    members share one sensitive value still leaks it."""
-    from area_etl_spark.operators.quality import l_diversity
-
-    return l_diversity(
-        _tables(spark, sf_dir)["orders"],
-        ["o_orderpriority", "o_orderstatus"],
-        "o_custkey",
-        l=5,
-    )
-
-
-def q_kmv_overlap(spark, sf_dir):
-    """Audience-overlap matrix from KMV sketches: pairwise Jaccard of
-    user sets between event types, computed entirely from bottom-16
-    sketches — never re-reading events."""
-    from area_etl_spark.operators.sketches import kmv_pairwise_jaccard, kmv_sketch
-
-    sk = kmv_sketch(_tables(spark, sf_dir)["events"], ["event_type"], "user_id", k=16)
-    return kmv_pairwise_jaccard(sk, "event_type", 16)
-
-
-def q_compression_ratio(spark, sf_dir):
-    """zlib compression ratio per document (mapInPandas, Arrow-batched
-    stdlib zlib — the one text signal that genuinely needs Python).
-    Rows-only driver check BY DESIGN: zlib output is deterministic per
-    build but not contractually identical across zlib versions, so the
-    value oracle is the pytest on known strings, not cross-engine SQL."""
-    from area_etl_spark.operators.text_analysis import compression_ratio
-
-    return compression_ratio(_tables(spark, sf_dir)["documents"])
-
-
-def q_repair_monotonic(spark, sf_dir):
-    """Device-clock repair: per-user timestamps clamped non-decreasing in
-    event_id (ingest) order — running max over one window sort."""
-    from area_etl_spark.operators.telemetry import repair_monotonic
-
-    ev = _tables(spark, sf_dir)["events"].select("user_id", "event_id", "ts")
-    return repair_monotonic(ev, ["user_id"], "ts", "event_id").select(
-        "user_id", "event_id", "ts_repaired", "was_reordered"
-    )
-
-
-def q_counter_increase(spark, sf_dir):
-    """Prometheus increase() semantics: per-user total increase of the
-    value-cents series in time order, counter resets (negative deltas)
-    contributing their post-reset value — exact integers end to end."""
-    from area_etl_spark.operators.telemetry import counter_increase
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return counter_increase(ev, ["user_id"], "ts", "cents")
-
-
-def q_diff_in_diff(spark, sf_dir):
-    """DiD causal estimate on events: even user_ids "treated", the second
-    half of the observed window "post" — four exact DECIMAL(38,0) cell
-    sums in one pass, means and the interaction evaluated once in
-    doubles."""
-    from area_etl_spark.operators.experiments import diff_in_diff
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        (F.col("ts") >= F.lit("2024-02-01").cast("timestamp")).alias("post"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return diff_in_diff(ev, "treat", "post", "cents")
-
-
-def q_select_under_budget(spark, sf_dir):
-    """Quality-first corpus selection under a 50k-token budget: documents
-    ranked by whitespace token count (unique doc_id tie-break), kept while
-    the GLOBAL running total fits — computed via the dense_ids range-
-    shuffle + driver-prefix-sum recipe, never a single-partition window."""
-    from area_etl_spark.operators.sampling import select_under_budget
-
-    docs = _tables(spark, sf_dir)["documents"].select(
-        "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
-    )
-    out = select_under_budget(docs, "n_tokens", "n_tokens", 50000, "doc_id")
-    return out.select("doc_id", "n_tokens", "cum_tokens")
-
-
-def q_subset_closure(spark, sf_dir):
-    """1.5% dev-copy extraction with FK closure: orders hash-sampled,
-    lineitems closed down (every sampled order keeps ALL its lines),
-    customers closed up — verified by per-table counts plus a
-    dangling-FK count that must be zero."""
-    from area_etl_spark.operators.sampling import subset_closure
-
-    t = _tables(spark, sf_dir)
-    sub = subset_closure(
-        t["orders"],
-        "o_orderkey",
-        0.015,
-        children=[(t["lineitem"], "l_orderkey")],
-        parents=[(t["customer"], "c_custkey", "o_custkey")],
-    )
-    o, li, c = sub["root"], sub["child_0"], sub["parent_0"]
-    dangling = li.join(
-        o.select("o_orderkey"), li["l_orderkey"] == o["o_orderkey"], "left_anti"
-    )
-    return (
-        o.agg(F.count(F.lit(1)).alias("n")).select(F.lit("orders").alias("tbl"), "n")
-        .unionByName(li.agg(F.count(F.lit(1)).alias("n")).select(F.lit("lineitem").alias("tbl"), "n"))
-        .unionByName(c.agg(F.count(F.lit(1)).alias("n")).select(F.lit("customer").alias("tbl"), "n"))
-        .unionByName(dangling.agg(F.count(F.lit(1)).alias("n")).select(F.lit("dangling").alias("tbl"), "n"))
-    )
-
-
-def q_interpolate_linear(spark, sf_dir):
-    """Gap repair beyond LOCF: every 7th event's value knocked out, then
-    linearly interpolated between its per-user neighbors in (ts,
-    event_id) order — edges stay NULL, non-nulls pass through exactly."""
-    from area_etl_spark.operators.telemetry import interpolate_linear
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("us"),
-        F.when(
-            F.col("event_id") % 7 != 0, F.round(F.col("value") * 100).cast("long")
-        ).alias("cents"),
-    )
-    out = interpolate_linear(
-        ev, ["user_id"], "us", "cents", order_cols=["us", "event_id"]
-    )
-    return out.select("user_id", "event_id", "value_interp")
-
-
-def q_collapse_rare_levels(spark, sf_dir):
-    """Cardinality guard before encoding: customer names appearing < 2
-    times on orders collapse to __other__ — level counts joined back
-    broadcast, NULL kept distinct."""
-    from area_etl_spark.operators.encoding import collapse_rare_levels
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey", (F.col("o_custkey") % 97).cast("string").alias("bucket")
-    )
-    out = collapse_rare_levels(o, "bucket", min_count=100)
-    return out.groupBy(F.col("bucket_collapsed").alias("level")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-
-
-def q_manifest_pruned_read(spark, sf_dir):
-    """Manifest-driven file skipping (Iceberg-style data skipping without
-    the table format): orders written range-clustered on o_custkey, a
-    file_stats_manifest built once, then a narrow custkey band answered by
-    opening ONLY the overlapping files — content proven identical to a
-    plain filtered read (the oracle); the I/O skip itself is pytest-proven
-    in tests/test_bucketing.py."""
-    from area_etl_spark.sources.load import (
-        file_stats_manifest,
-        read_pruned,
-        write_range_layout,
-    )
-
-    tables = _tables(spark, sf_dir)
-    src = tables["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    path = _run_tmp(spark, "manifestprune", "orders")
-    write_range_layout(src, path, ["o_custkey"], num_partitions=8)
-    manifest = file_stats_manifest(spark, path, ["o_custkey"])
-    out = read_pruned(spark, manifest, "o_custkey", 100, 400)
-    return out.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("sum_cents"),
-    )
-
-
-def q_ivm_agg_update(spark, sf_dir):
-    """Incremental view maintenance: a per-customer (n_orders, sum_cents)
-    aggregate maintained under a synthetic CDC log (inserts = held-out
-    orders, deletes = every 100th, updates = +1000 cents on every 97th)
-    WITHOUT rescanning the base table.  The oracle recomputes the final
-    state from scratch — equality IS the IVM correctness claim."""
-    from area_etl_spark.operators.diff import cdc_to_agg_deltas, ivm_agg_apply
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    base = o.where(F.col("o_orderkey") % 500 != 3)
-    state = base.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents")
-    )
-    nl = F.lit(None).cast("long")
-    ins = o.where(F.col("o_orderkey") % 500 == 3).select(
-        F.lit("I").alias("op"),
-        nl.alias("before_o_custkey"),
-        nl.alias("before_cents"),
-        F.col("o_custkey").alias("after_o_custkey"),
-        F.col("cents").alias("after_cents"),
-    )
-    dels = base.where(F.col("o_orderkey") % 100 == 1).select(
-        F.lit("D").alias("op"),
-        F.col("o_custkey").alias("before_o_custkey"),
-        F.col("cents").alias("before_cents"),
-        nl.alias("after_o_custkey"),
-        nl.alias("after_cents"),
-    )
-    upds = base.where(
-        (F.col("o_orderkey") % 97 == 0) & (F.col("o_orderkey") % 100 != 1)
-    ).select(
-        F.lit("U").alias("op"),
-        F.col("o_custkey").alias("before_o_custkey"),
-        F.col("cents").alias("before_cents"),
-        F.col("o_custkey").alias("after_o_custkey"),
-        (F.col("cents") + 1000).alias("after_cents"),
-    )
-    log = ins.unionByName(dels).unionByName(upds)
-    deltas = cdc_to_agg_deltas(log, ["o_custkey"], ["cents"])
-    return ivm_agg_apply(state, deltas, ["o_custkey"], ["cents"])
-
-
-def q_fdr_bh(spark, sf_dir):
-    """Benjamini–Hochberg FDR over a 24-test family: per hour-of-day, is
-    the purchase share different from the other 23 hours' pooled share?
-    z from exact counts (divisions/sqrt IEEE-exact), p from the PORTABLE
-    A&S 7.1.26 erfc polynomial (a defined statistic, not a libm erf), then
-    the step-up adjustment via a reverse running-min window over the
-    24-row family table (aggregate-level, bounded)."""
-    from area_etl_spark.operators.experiments import bh_adjust, normal_sf_portable
-
-    ev = _tables(spark, sf_dir)["events"]
-    per = ev.groupBy(F.hour("ts").cast("long").alias("hour")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("k"),
-    )
-    tot = per.agg(F.sum("n").alias("nn"), F.sum("k").alias("kk"))
-    j = per.crossJoin(F.broadcast(tot))  # 1-row scalar join
-    n1 = F.col("n").cast("double")
-    k1 = F.col("k").cast("double")
-    n2 = (F.col("nn") - F.col("n")).cast("double")
-    k2 = (F.col("kk") - F.col("k")).cast("double")
-    pp = F.col("kk").cast("double") / F.col("nn").cast("double")
-    z = (k1 / n1 - k2 / n2) / F.sqrt(pp * (1 - pp) * (1 / n1 + 1 / n2))
-    pv = F.least(F.lit(1.0), F.lit(2.0) * normal_sf_portable(F.abs(z)))
-    fam = j.select(F.col("hour"), pv.alias("p_value"))
-    return bh_adjust(fam, "hour", "p_value", alpha=0.05)
-
-
-def q_holm_bonferroni(spark, sf_dir):
-    """Holm-Bonferroni step-down over the SAME 24-test hour-of-day family
-    as q_fdr_bh - the FWER-controlling sibling (confirmatory decisions)
-    beside BH's FDR control (exploratory readouts): adj = forward
-    running-max of (m-rank+1)*p over the p-sorted family, uniformly more
-    powerful than plain Bonferroni at the same guarantee."""
-    from area_etl_spark.operators.experiments import holm_adjust, normal_sf_portable
-
-    ev = _tables(spark, sf_dir)["events"]
-    per = ev.groupBy(F.hour("ts").cast("long").alias("hour")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("k"),
-    )
-    tot = per.agg(F.sum("n").alias("nn"), F.sum("k").alias("kk"))
-    j = per.crossJoin(F.broadcast(tot))  # 1-row scalar join
-    n1 = F.col("n").cast("double")
-    k1 = F.col("k").cast("double")
-    n2 = (F.col("nn") - F.col("n")).cast("double")
-    k2 = (F.col("kk") - F.col("k")).cast("double")
-    pp = F.col("kk").cast("double") / F.col("nn").cast("double")
-    z = (k1 / n1 - k2 / n2) / F.sqrt(pp * (1 - pp) * (1 / n1 + 1 / n2))
-    pv = F.least(F.lit(1.0), F.lit(2.0) * normal_sf_portable(F.abs(z)))
-    fam = j.select(F.col("hour"), pv.alias("p_value"))
-    return holm_adjust(fam, "hour", "p_value", alpha=0.05)
-
-
-def q_randomization_test(spark, sf_dir):
-    """Approximate randomization test (Noreen 1989) - does URGENT-priority
-    order value differ from HIGH?  199 deterministic md5 relabelings of
-    order keys, one explode + one hash aggregate on perm id (never a
-    per-permutation sort); p = add-one Monte-Carlo share of relabelings
-    at least as extreme as the observed mean diff."""
-    from area_etl_spark.operators.experiments import approx_randomization_test
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return approx_randomization_test(
-        o, "o_orderkey", "o_orderpriority", "cents", "1-URGENT", "2-HIGH",
-        n_perm=199, parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_cohen_kappa(spark, sf_dir):
-    """Cohen's kappa between the language_id heuristic and the gold lang
-    label — chance-corrected labeler agreement with an ALL-INTEGER core
-    (kappa = (agree·n − Σ aₖbₖ) / (n² − Σ aₖbₖ), one exact division)."""
-    from area_etl_spark.operators.experiments import cohen_kappa
-    from area_etl_spark.operators.text_analysis import language_id
-
-    docs = _tables(spark, sf_dir)["documents"]
-    preds = docs.select(
-        F.col("lang").alias("gold"), language_id(F.col("text")).alias("pred")
-    )
-    return cohen_kappa(preds, "gold", "pred")
-
-
-def q_matched_pairs(spark, sf_dir):
-    """Stratified nearest-rank matching (deterministic propensity-matching
-    substitute): BUILDING-segment customers paired with non-BUILDING
-    controls of equal balance rank within $1000 balance buckets — the
-    caliper is the bucket width, unmatched tail ranks drop."""
-    from area_etl_spark.operators.experiments import rank_match
-
-    cust = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        (F.col("c_mktsegment") == "BUILDING").alias("treated"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    return rank_match(cust, "treated", "bal_cents", "c_custkey", bucket_width=100000)
-
-
-LPA_NODES = ["shard-a", "shard-b", "shard-c", "shard-d"]
-
-
-IP_NETWORKS = [
-    ("internal-10", "10.0.0.0/8"),
-    ("office-lan", "192.168.0.0/16"),
-    ("office-floor1", "192.168.1.0/24"),
-    ("google-dns", "8.8.8.0/24"),
-]
-
-
-def q_geohash_cells(spark, sf_dir):
-    """Standard geohash-6 cell rollup over synthetic order coordinates —
-    the interoperable spatial bucket key (same cells as every geohash
-    library, proven on reference vectors in pytest), computed as ONE
-    narrow closed-form bit-interleave projection in the scan stage."""
-    from area_etl_spark.operators.geo import geohash_encode
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        ((F.col("o_custkey") % 17000) / 100.0 - 85.0).alias("lat"),
-        ((F.col("o_orderkey") % 35000) / 100.0 - 175.0).alias("lon"),
-    )
-    return o.select(geohash_encode(F.col("lat"), F.col("lon"), 6).alias("cell")).groupBy(
-        "cell"
-    ).agg(F.count(F.lit(1)).alias("n_orders"))
-
-
-def q_ip_networks(spark, sf_dir):
-    """IPv4 → CIDR classification of synthetic access ips (parse_logs'
-    natural downstream): dotted-quad parse with malformed-input quarantine,
-    broadcast band join on the numeric ip, MOST-SPECIFIC block wins."""
-    from area_etl_spark.operators.geo import tag_ip_networks
-
-    c = _tables(spark, sf_dir)["customer"].select("c_custkey")
-    ip = F.concat_ws(
-        ".",
-        F.when(F.col("c_custkey") % 3 == 0, F.lit("10"))
-        .when(F.col("c_custkey") % 3 == 1, F.lit("192"))
-        .otherwise(F.lit("8")),
-        F.when(F.col("c_custkey") % 3 == 0, (F.col("c_custkey") % 200).cast("string"))
-        .when(F.col("c_custkey") % 3 == 1, F.lit("168"))
-        .otherwise(F.lit("8")),
-        (F.col("c_custkey") % 7).cast("string"),
-        ((F.col("c_custkey") * 3) % 256).cast("string"),
-    )
-    df = c.select("c_custkey", ip.alias("ip"))
-    return tag_ip_networks(df, "ip", IP_NETWORKS)
-
-
-def q_ks_test(spark, sf_dir):
-    """Two-sample Kolmogorov–Smirnov: purchase vs view event-value
-    distributions — EXACT D from integer cumulative-count cross products,
-    argmax location, and the truncated-Kolmogorov-series p (a defined
-    portable statistic, 5 terms both engines)."""
-    from area_etl_spark.operators.experiments import ks_test
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return ks_test(ev, "event_type", "cents", "purchase", "view")
-
-
-def q_mutual_information(spark, sf_dir):
-    """Target-leakage screen: mutual information of four categorical
-    features with the high-value-order label — including a PLANTED copy of
-    the label, which must score ig_ratio 1.0 (perfect leakage) while real
-    features score near 0."""
-    from area_etl_spark.operators.features import mutual_information
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        "o_orderstatus",
-        F.month("o_orderdate").alias("ship_month"),
-        (F.round(F.col("o_totalprice") * 100).cast("long") >= 20_000_000).alias(
-            "is_high"
-        ),
-    ).withColumn("leak_label_copy", F.col("is_high").cast("string"))
-    return mutual_information(
-        o, ["o_orderpriority", "o_orderstatus", "ship_month", "leak_label_copy"], "is_high"
-    )
-
-
-def q_quantile_ci(spark, sf_dir):
-    """Distribution-free median CI per order priority (binomial rank
-    bounds, order statistics at k = nq ± z√(nq(1−q))) — the 'p50 with
-    error bars' SRE number; ranks from cumulative DISTINCT-value counts,
-    never a raw-row sort."""
-    from area_etl_spark.operators.quality import quantile_order_stat_ci
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return quantile_order_stat_ci(o, ["o_orderpriority"], "cents", q=0.5)
-
-
-def q_stratified_ate(spark, sf_dir):
-    """Post-stratification ATE of BUILDING-segment membership on customer
-    order revenue, stratified by nation — bucket-level exact sums, arms
-    required in every used bucket (positivity), final weighted sum folded
-    in sorted bucket order."""
-    from area_etl_spark.operators.experiments import stratified_ate
-
-    tables = _tables(spark, sf_dir)
-    rev = tables["orders"].groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("_rev")
-    )
-    units = tables["customer"].join(rev, "c_custkey", "left").select(
-        F.col("c_nationkey").alias("nation"),
-        (F.col("c_mktsegment") == "BUILDING").alias("treated"),
-        F.coalesce("_rev", F.lit(0)).alias("rev_cents"),
-    )
-    return stratified_ate(units, "nation", "treated", "rev_cents")
-
-
-def q_pool_embeddings(spark, sf_dir):
-    """Chunk→document mean pooling: vectors grouped 50-to-a-doc, components
-    pooled via exact 1e-6 fixed-point DECIMAL sums, vector reassembled from
-    a dim-bounded sorted collect — then exploded back to (group, pos, val)
-    rows so the oracle hashes scalars, not arrays (the vocab_encode
-    canonicalizer lesson)."""
-    emb = _tables(spark, sf_dir)["embeddings"]
-    grouped = emb.select((F.col("vec_id") % 50).alias("grp"), "embedding")
-    pooled = SIM.pool_embeddings(grouped, "grp")
-    return pooled.select(
-        "grp", "n_vecs", F.posexplode("pooled").alias("pos", "val")
-    ).select("grp", "n_vecs", "pos", F.round("val", 9).alias("val"))
-
-
-def q_classification_report(spark, sf_dir):
-    """Per-class precision/recall/F1 of the language_id heuristic against
-    the gold lang label — exact tp/fp/fn counts, the one-division F1 form
-    2tp/(2tp+fp+fn), NULL on zero denominators (sklearn convention)."""
-    from area_etl_spark.operators.classify import classification_report
-    from area_etl_spark.operators.text_analysis import language_id
-
-    docs = _tables(spark, sf_dir)["documents"]
-    preds = docs.select(
-        F.col("lang").alias("gold"), language_id(F.col("text")).alias("pred")
-    )
-    return classification_report(preds, "gold", "pred")
-
-
-def q_roc_auc(spark, sf_dir):
-    """EXACT ROC AUC of the balance-derived propensity score against the
-    placed-an-order outcome — the Mann–Whitney identity U⁺/(n⁺·n⁻) from
-    midranks over distinct scores; every quantity an exact 0.5-multiple, so
-    the single division is bit-reproducible."""
-    from area_etl_spark.operators.experiments import roc_auc
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        "c_custkey", F.round(F.col("c_acctbal") * 100).cast("long").alias("score")
-    )
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = cust.join(ordered.withColumn("_o", F.lit(1)), "c_custkey", "left").select(
-        "score", F.col("_o").isNotNull().alias("placed")
-    )
-    return roc_auc(units, "score", "placed")
-
-
-def q_roc_auc_quantized(spark, sf_dir):
-    """roc_auc's cardinality contract exercised end-to-end (VERDICT r10
-    item 3): the RAW continuous c_acctbal double is the score, and
-    ``quantize=50.0`` bins it to floor(v/50)·50 BEFORE the per-value
-    aggregate — the unpartitioned cumulative window then runs over
-    range/50 bins instead of |distinct doubles|.  The binning is one
-    divide + exact floor + one multiply, identical IEEE ops in DuckDB."""
-    from area_etl_spark.operators.experiments import roc_auc
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select("c_custkey", F.col("c_acctbal").alias("score"))
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = cust.join(ordered.withColumn("_o", F.lit(1)), "c_custkey", "left").select(
-        "score", F.col("_o").isNotNull().alias("placed")
-    )
-    return roc_auc(units, "score", "placed", quantize=50.0)
-
-
-def q_modularity(spark, sf_dir):
-    """Newman modularity of the LPA communities over the user↔item graph —
-    the eval score for q_label_propagation: exact integer in_c/d_c/2m
-    statistics, per-community terms folded in sorted label order."""
-    from area_etl_spark.operators.graph import label_propagation, modularity
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        F.col("user_id").alias("src"),
-        (F.pmod(F.col("event_id"), F.lit(500)) + F.lit(10_000_000)).alias("dst"),
-    )
-    labels = label_propagation(ev, rounds=3)
-    return modularity(ev, labels)
-
-
-def q_calibration_curve(spark, sf_dir):
-    """Reliability diagram table: customer account-balance percentile
-    (scaled to [0,1e6]) as an 'order propensity' score vs the observed
-    placed-an-order outcome, 10 fixed-width bins — mean predicted score vs
-    outcome rate per bin from exact sums."""
-    from area_etl_spark.operators.quality import calibration_curve
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        "c_custkey", F.round(F.col("c_acctbal") * 100).cast("long").alias("bal")
-    )
-    # deterministic percentile score without a global sort window: exact
-    # rank via a self-aggregate would shuffle; percent_rank over the
-    # |customers| table is the documented bounded case — instead scale the
-    # balance linearly into [0, 1e6] over its fixed domain [-1000_00, 9999_99]
-    score = F.least(
-        F.lit(1_000_000),
-        F.greatest(
-            F.lit(0),
-            F.floor((F.col("bal") + 100_000) * F.lit(1_000_000) / F.lit(1_100_000)).cast(
-                "long"
-            ),
-        ),
-    )
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = cust.join(ordered.withColumn("_o", F.lit(1)), "c_custkey", "left").select(
-        score.alias("score"), F.col("_o").isNotNull().alias("placed")
-    )
-    return calibration_curve(units, "score", "placed", n_bins=10)
-
-
-def q_isotonic_calibration(spark, sf_dir):
-    """Isotonic (PAV) calibration of the balance-derived propensity score
-    vs the placed-an-order outcome - the closed-form minimax solution
-    iso_i = max_{j<=i} min_{k>=i} rate(j..k) over the 10 calibration bins
-    (Ayer et al. 1955): no iterative pooling, two bounded |bins|^2 joins,
-    every segment rate one division of exact integer prefix sums."""
-    from area_etl_spark.operators.quality import isotonic_calibration
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        "c_custkey", F.round(F.col("c_acctbal") * 100).cast("long").alias("bal")
-    )
-    score = F.least(
-        F.lit(1_000_000),
-        F.greatest(
-            F.lit(0),
-            F.floor((F.col("bal") + 100_000) * F.lit(1_000_000) / F.lit(1_100_000)).cast(
-                "long"
-            ),
-        ),
-    )
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = cust.join(ordered.withColumn("_o", F.lit(1)), "c_custkey", "left").select(
-        score.alias("score"), F.col("_o").isNotNull().alias("placed")
-    )
-    return isotonic_calibration(units, "score", "placed", n_bins=10)
-
-
-def q_mantel_haenszel(spark, sf_dir):
-    """Mantel-Haenszel nation-adjusted odds ratio: does the BUILDING
-    market segment place orders at different odds, pooling per-nation 2x2
-    tables - the Simpson's-paradox-safe confounder adjustment; exact cell
-    counts, one division per stratum, sorted-stratum float folds."""
-    from area_etl_spark.operators.experiments import mantel_haenszel
-
-    tables = _tables(spark, sf_dir)
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = tables["customer"].join(
-        ordered.withColumn("_o", F.lit(1)), "c_custkey", "left"
-    ).select(
-        F.col("c_nationkey").alias("nation"),
-        (F.col("c_mktsegment") == "BUILDING").alias("treated"),
-        F.col("_o").isNotNull().alias("placed"),
-    )
-    return mantel_haenszel(units, "nation", "treated", "placed")
-
-
-def q_mcnemar_langid(spark, sf_dir):
-    """McNemar's paired test: is the TRAINED char-2-gram NB language ID
-    actually different from the stopword HEURISTIC on the same held-out
-    docs?  Correctness-vs-gold per doc for both raters, then the
-    discordant-pair statistic - the Dietterich-recommended way to compare
-    two classifiers on one sample (an unpaired z-test wastes the pairing).
-    Closes VERDICT r10 item 6's eval loop driver-checkably."""
-    from area_etl_spark.operators.classify import language_id_trained
-    from area_etl_spark.operators.experiments import mcnemar_test
-    from area_etl_spark.operators.text_analysis import language_id
-
-    docs = _tables(spark, sf_dir)["documents"]
-    seed = docs.where(F.col("doc_id") % 2 == 0)
-    test = docs.where(F.col("doc_id") % 2 == 1)
-    trained = language_id_trained(seed, test).select(
-        "doc_id", F.col("pred").alias("_tp")
-    )
-    both = test.select(
-        "doc_id", F.col("lang").alias("_gold"), language_id("text").alias("_hp")
-    ).join(trained, "doc_id")
-    pairs = both.select(
-        (F.col("_hp") == F.col("_gold")).alias("h_ok"),
-        (F.col("_tp") == F.col("_gold")).alias("t_ok"),
-    )
-    return mcnemar_test(pairs, "h_ok", "t_ok")
-
-
-def q_trend_test(spark, sf_dir):
-    """Cochran-Armitage trend test: does the purchase share trend
-    LINEARLY across session-hour-of-day dose levels 0..23?  Integer dose
-    scores weight each level; T and the variance core are exact
-    DECIMAL(38,0) integers, z divides once, p from the portable normal
-    SF - the ordered-alternative power a plain chi-square (47ag) wastes."""
-    from area_etl_spark.operators.experiments import cochran_armitage_trend
-
-    ev = _tables(spark, sf_dir)["events"]
-    units = ev.select(
-        F.hour("ts").cast("long").alias("dose"),
-        (F.col("event_type") == "purchase").alias("converted"),
-    )
-    return cochran_armitage_trend(units, "dose", "converted")
-
-
-def q_ntile_scalable(spark, sf_dir):
-    """scalable_ntile == NTILE() OVER (ORDER BY ...), proven against the
-    window function itself: customer deciles by (acctbal cents, custkey)
-    - the rank comes from the dense_ids range shuffle, the decile from
-    NTILE's piecewise integer split, no single-partition sort in the plan
-    (the rfm_segments machinery as a first-class operator)."""
-    from area_etl_spark.operators.ids import scalable_ntile
-
-    cust = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey", F.round(F.col("c_acctbal") * 100).cast("long").alias("bal")
-    )
-    return scalable_ntile(cust, ["bal", "c_custkey"], 10, "decile")
-
-
-def q_spearman_corr(spark, sf_dir):
-    """Spearman rank correlation between line-item quantity and extended
-    price - midranks from cumulative tie counts per DISTINCT value (never
-    a row-level sort), doubled-rank sums exact in DECIMAL(38,0), one
-    closed-form division."""
-    from area_etl_spark.operators.experiments import spearman_corr
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    return spearman_corr(li, "qty", "cents")
-
-
-def q_kruskal_wallis(spark, sf_dir):
-    """Kruskal-Wallis H across the five order priorities: one-way ANOVA
-    on ranks with tie correction - the k-group generalization of
-    mann_whitney over the same distinct-value midrank machinery;
-    Wilson-Hilferty chi-square approximation on the portable normal SF."""
-    from area_etl_spark.operators.experiments import kruskal_wallis
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return kruskal_wallis(o, "o_orderpriority", "cents")
-
-
-def q_js_divergence(spark, sf_dir):
-    """Jensen-Shannon drift between the first- and second-half order-value
-    distributions - the bounded symmetric member of the drift family
-    (psi magnitude, chi-square surprise, JSD bounded score): one-sided
-    bins contribute p/2*ln2 exactly instead of being excluded."""
-    from area_etl_spark.operators.quality import js_divergence
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    before = o.where(F.col("o_orderdate") < "1996-01-01")
-    after = o.where(F.col("o_orderdate") >= "1996-01-01")
-    return js_divergence(before, after, "cents", n_bins=10, lo=0, hi=60_000_000)
-
-
-def q_psi_drift(spark, sf_dir):
-    """Population stability index of the order-value distribution, first
-    half of the date range vs second half — per-bin (p−q)·ln(p/q) terms
-    with the standard empty-bin exclusion; PSI magnitude complements
-    drift_chi2's significance."""
-    from area_etl_spark.operators.quality import psi_drift
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderdate", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    before = o.where(F.col("o_orderdate") < F.lit("1996-01-01"))
-    after = o.where(F.col("o_orderdate") >= F.lit("1996-01-01"))
-    return psi_drift(before, after, "cents", n_bins=10, lo=0, hi=60_000_000)
-
-
-def q_good_turing(spark, sf_dir):
-    """Good–Turing unseen-token mass + Chao1 total-vocabulary estimate from
-    the corpus vocabulary — the 'how much new vocabulary will the next
-    shard add' corpus-planning numbers."""
-    from area_etl_spark.operators.vocab import build_vocab, good_turing_report
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return good_turing_report(build_vocab(docs, min_count=1))
-
-
-def q_label_propagation(spark, sf_dir):
-    """Synchronous frequency-LPA community detection over the user↔item
-    interaction graph (3 fixed rounds, most-frequent neighbor label, ties
-    to the smaller label) — deterministic by construction, so the oracle
-    replays every round as chained CTEs."""
-    from area_etl_spark.operators.graph import label_propagation
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        F.col("user_id").alias("src"),
-        (F.pmod(F.col("event_id"), F.lit(500)) + F.lit(10_000_000)).alias("dst"),
-    )
-    return label_propagation(ev, rounds=3)
-
-
-def q_rendezvous_assign(spark, sf_dir):
-    """Rendezvous/HRW-hash shard routing: every customer key to its argmax-
-    md5 node — consistent assignment (removing a node moves only its own
-    keys, pytest-proven), computed as ONE narrow greatest() projection with
-    no shuffle and no lookup state."""
-    from area_etl_spark.operators.ids import rendezvous_assign
-
-    cust = _tables(spark, sf_dir)["customer"].select("c_custkey")
-    return rendezvous_assign(cust, "c_custkey", LPA_NODES)
-
-
-_HYBRID_TERMS = ["spark", "window", "merge"]
-
-
-def _hybrid_runs(spark, sf_dir):
-    """The hybrid retrieval stack's three rankings, built ONCE for both
-    q_hybrid_search_rrf and q_retrieval_eval (review fix, r10 — the two
-    entries previously duplicated this construction and any tie-break or
-    constant drift between copies would silently break oracle parity):
-    (lex top-20 with rank, sem top-20 with rank, RRF-fused top-10)."""
-    from pyspark.sql import Window
-
-    from area_etl_spark.operators.indexing import bm25_search, rrf_fuse
-
-    tables = _tables(spark, sf_dir)
-    lex = bm25_search(tables["documents"], _HYBRID_TERMS, "text", "doc_id", topk=20)
-    wl = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())  # 20 rows
-    lex = lex.withColumn("rank", F.row_number().over(wl))
-    q = _query_vec(spark, sf_dir)
-    sem = SIM.cosine_topk(tables["embeddings"].where(F.col("vec_id") != 0), q, k=20)
-    ws = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())  # 20 rows
-    sem = sem.withColumn("rank", F.row_number().over(ws)).withColumnRenamed(
-        "vec_id", "doc_id"
-    )
-    fused = rrf_fuse([("lex", lex), ("sem", sem)], "doc_id", k=60, topk=10)
-    return lex, sem, fused
-
-
-def q_hybrid_search_rrf(spark, sf_dir):
-    """Hybrid retrieval: BM25 lexical top-20 fused with cosine semantic
-    top-20 by reciprocal-rank fusion (k=60) — rank-based combination needs
-    no score calibration, and with integer ranks + sorted-source folds the
-    FUSED ranking itself holds a full oracle.  doc_id/vec_id share the id
-    space in the testdata corpus."""
-    return _hybrid_runs(spark, sf_dir)[2]
-
-
-def q_ann_recall_eval(spark, sf_dir):
-    """Recall@10 of the LSH ANN shortlist vs exact brute-force truth over 5
-    query vectors — the measurement the bits/multi_probe dials are tuned
-    by.  Rounded cosines + id tie-breaks make the k-frontier engine-stable,
-    so even RECALL itself holds a full oracle."""
-    emb = _tables(spark, sf_dir)["embeddings"]
-    return SIM.ann_recall_report(
-        emb.where(F.col("vec_id") >= 5),
-        emb.where(F.col("vec_id") < 5),
-        k=10,
-        bits=4,
-        multi_probe=2,
-    )
-
-
-def q_retrieval_eval(spark, sf_dir):
-    """Retrieval-quality harness (VERDICT r9 item 8): nDCG@10 / MRR /
-    precision@10 of the RRF-fused hybrid ranking AGAINST its own BM25 and
-    cosine legs, over term-coverage graded qrels (rel = how many of the
-    three query terms the doc contains) — the ann_recall_report pattern
-    applied to retrieval quality, fully oracled via literal log2 discount
-    weights and sorted float folds."""
-    from area_etl_spark.operators.dedup import normalize_tokens
-    from area_etl_spark.operators.indexing import retrieval_eval
-
-    lex, sem, fused = _hybrid_runs(spark, sf_dir)
-    fused = fused.withColumnRenamed("rrf_rank", "rank")
-    qrels = _tables(spark, sf_dir)["documents"].select(
-        "doc_id",
-        F.size(
-            F.array_intersect(
-                F.array_distinct(normalize_tokens("text")),
-                F.array(*[F.lit(t) for t in _HYBRID_TERMS]),
-            )
-        ).alias("rel"),
-    )
-    return retrieval_eval(
-        [("bm25", lex), ("cosine", sem), ("rrf", fused)], qrels, k=10
-    )
-
-
-def q_zipf_fit(spark, sf_dir):
-    """Zipf's-law OLS over the corpus vocabulary (ln freq on ln rank):
-    ln values quantized to 1e-6 fixed point so the five sufficient
-    statistics sum exactly as DECIMAL(38,0) — the corr_exact discipline —
-    and slope/intercept/R² evaluate once in doubles."""
-    from area_etl_spark.operators.vocab import build_vocab, zipf_fit
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return zipf_fit(build_vocab(docs, min_count=1))
-
-
-def q_ipf_raking(spark, sf_dir):
-    """Iterative proportional fitting: rake the (event_type × daypart)
-    event-count table to UNIFORM marginals on both axes in 3 rounds —
-    the two-axis corpus-rebalancing primitive (rebalance_mixture is the
-    one-axis special case).  Marginal sums fold in sorted cross-key order
-    over the 20-cell aggregate table."""
-    from area_etl_spark.operators.sampling import ipf_weights
-
-    ev = _tables(spark, sf_dir)["events"]
-    cells = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.floor(F.hour("ts") / 6).cast("long").alias("daypart"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    totals = cells.agg(
-        F.sum("n").alias("tot"),
-        F.countDistinct("et").alias("nr"),
-        F.countDistinct("daypart").alias("nc"),
-    )
-    row_t = (
-        cells.select("et")
-        .distinct()
-        .crossJoin(F.broadcast(totals))
-        .select("et", (F.col("tot").cast("double") / F.col("nr").cast("double")).alias("target"))
-    )
-    col_t = (
-        cells.select("daypart")
-        .distinct()
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "daypart",
-            (F.col("tot").cast("double") / F.col("nc").cast("double")).alias("target"),
-        )
-    )
-    return ipf_weights(cells, "et", "daypart", "n", row_t, col_t, iters=3)
-
-
-def q_nb_classify(spark, sf_dir):
-    """Multinomial naive Bayes corpus router: train on even doc_ids
-    (class = gold lang), classify odd doc_ids.  Laplace-smoothed
-    log-likelihoods fold in SORTED TOKEN ORDER (the entropy discipline);
-    the argmax breaks float ties by label.  Training = two map-side-combined
-    hash aggregates; classification = one vocab-bounded broadcast join."""
-    from area_etl_spark.operators.classify import nb_classify, nb_train
-
-    docs = _tables(spark, sf_dir)["documents"]
-    train = docs.where(F.col("doc_id") % 2 == 0)
-    test = docs.where(F.col("doc_id") % 2 == 1)
-    tc, cs = nb_train(train, "lang")
-    out = nb_classify(tc, cs, test)
-    gold = test.select("doc_id", F.col("lang").alias("gold"))
-    return out.join(gold, "doc_id").select("doc_id", "gold", "pred", "log_score")
-
-
-def q_language_id_trained(spark, sf_dir):
-    """TRAINED char-3-gram NB language ID (VERDICT r10 item 6): featurize
-    with char_ngram_text (whitespace→'_', overlapping 3-grams), train on
-    the even-doc_id half's gold lang labels, classify the odd half — the
-    whole chain (featurize → nb_train → nb_classify) replays in DuckDB,
-    inheriting nb_classify's sorted-fold / label-tie-break exactness."""
-    from area_etl_spark.operators.classify import language_id_trained
-
-    docs = _tables(spark, sf_dir)["documents"]
-    seed = docs.where(F.col("doc_id") % 2 == 0)
-    test = docs.where(F.col("doc_id") % 2 == 1)
-    out = language_id_trained(seed, test)
-    gold = test.select("doc_id", F.col("lang").alias("gold"))
-    return out.join(gold, "doc_id").select("doc_id", "gold", "pred", "log_score")
-
-
-_MEDIA_TEMPLATES_HEX = {
-    # deterministic header-class template blobs (hex → unhex binary):
-    # a REAL 1×1 grayscale PNG (full pixel decode works on it), an
-    # admissible baseline-JPEG marker stream, and one representative of
-    # each documented quarantine class
-    0: "89504e470d0a1a0a0000000d49484452000000010000000108000000003a7e9b550000000a4944415478da6368000000820081da45083b0000000049454e44ae426082",
-    1: "ffd8ffc0000b080001000101011100ffda0008010100003f00ffd9",
-    # r13: in-subset SOF2 WITH a scan — progressive is now an ADMITTED
-    # class (progressive_subset_ok), the telemetry's third green bucket
-    2: "ffd8ffc2000b080001000101011100ffda000801010000000000ffd9",
-    # r13: 4:1:1 (luma 4x1) — 4:2:2 joined the decoded baseline subset,
-    # so the representative subsampling quarantine moved one layout out
-    3: "ffd8ffc00011080001000103014100021100031100ffda000c03010002000300003f00ffd9",
-    4: "ffd8ffdd00040064ffc0000b080001000101011100ffda0008010100003f00ffd9",
-    5: "6e6f7420616e20696d61676520617420616c6c2e2e2e2e2e",
-}
-
-
-def q_multimodal_quarantine_report(spark, sf_dir):
-    """Multimodal quarantine telemetry (VERDICT r10 item 8): every doc_id
-    maps to one of six deterministic header-class blobs (real PNG,
-    baseline JPEG, in-subset progressive — ADMITTED since r13, 4:1:1,
-    restart-interval, garbage); the REAL header classifier
-    (image_decode_diagnose, the same subset checks as the pixel decoders)
-    must land each blob on exactly its class, and the corpus report
-    aggregates (fmt, ok, reason) — the reasons are a pure function of
-    doc_id % 6, so DuckDB replays the whole report."""
-    from area_etl_spark.operators.multimodal import decode_quarantine_report
-
-    docs = _tables(spark, sf_dir)["documents"]
-    hex_expr = None
-    for k, hx in _MEDIA_TEMPLATES_HEX.items():
-        cond = F.col("doc_id") % 6 == k
-        hex_expr = F.when(cond, F.lit(hx)) if hex_expr is None else hex_expr.when(cond, F.lit(hx))
-    blobs = docs.select(F.col("doc_id").alias("id"), F.unhex(hex_expr).alias("payload"))
-    return decode_quarantine_report(blobs)
-
-
-def q_luhn_card_scan(spark, sf_dir):
-    """Luhn-validated card redaction (VERDICT r10 item 7): card-shaped
-    16-digit strings synthesized from order keys, the mod-10 HOF fold
-    deciding which are checksum-valid, and redact_card_numbers replacing
-    exactly those — DuckDB replays the fold with the same list_reduce, so
-    validity AND the redacted text are value-checked."""
-    from area_etl_spark.operators.text_analysis import (
-        luhn_checksum_valid,
-        redact_card_numbers,
-    )
-
-    o = _tables(spark, sf_dir)["orders"]
-    digits = F.lpad(F.col("o_orderkey").cast("string"), 16, "0")
-    # stage the synthesized card string so the Luhn fold and the redactor
-    # reference a bound column, not the lpad expression (the cf-scan
-    # staging lesson)
-    staged = o.select("o_orderkey", digits.alias("card_digits"))
-    text = F.concat(F.lit("ref "), F.col("card_digits"), F.lit(" ok"))
-    return staged.select(
-        "o_orderkey",
-        "card_digits",
-        luhn_checksum_valid(F.col("card_digits")).alias("luhn_ok"),
-        redact_card_numbers(text).alias("redacted"),
-    )
-
-
-def q_trimmed_mean(spark, sf_dir):
-    """10% trimmed mean of order value per priority — the robust location
-    estimate that DROPS the tails (winsorize clamps them): exact
-    interpolated percentile bounds broadcast back, DECIMAL(38,0) sum of
-    the kept rows, one final division."""
-    from area_etl_spark.operators.aggregates import trimmed_mean
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return trimmed_mean(o, ["o_orderpriority"], "cents", trim=0.1)
-
-
-# ---------------------------------------------------------------------------
-# r9 operator batch
-# ---------------------------------------------------------------------------
-
-
-def q_woe_iv(spark, sf_dir):
-    """Weight-of-evidence + information value of market segment vs the
-    positive-balance label — doubled-integer smoothing keeps every count
-    exact; ln is the single float per category, iv folds in sorted
-    category order."""
-    from area_etl_spark.operators.encoding import woe_iv
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_mktsegment", (F.col("c_acctbal") > 0).cast("int").alias("y")
-    )
-    return woe_iv(c, "c_mktsegment", "y")
-
-
-def q_one_hot_segment(spark, sf_dir):
-    """Explicit-vocabulary one-hot of market segment (3 listed categories
-    + other) — pure CASE columns, no pivot pass, fixed width."""
-    from area_etl_spark.operators.encoding import one_hot_encode
-
-    c = _tables(spark, sf_dir)["customer"]
-    return one_hot_encode(
-        c, "c_mktsegment", ["BUILDING", "MACHINERY", "AUTOMOBILE"],
-        id_cols=["c_custkey"],
-    )
-
-
-def q_lift_gain(spark, sf_dir):
-    """Cumulative gain/lift deciles of event value-cents as a purchase
-    score — distinct-score bucketing (tie-coherent), exact integer cums,
-    two divisions per bucket at the end."""
-    from area_etl_spark.operators.classify import lift_gain_table
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        F.round(F.col("value") * 100).cast("long").alias("score"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    return lift_gain_table(ev, "score", "y", n_buckets=10)
-
-
-def _dag_edges(spark, sf_dir):
-    """Deterministic 3-layer DAG from the dimension tables: nation keys
-    feed supplier-derived mid nodes feed customer-derived leaves (strictly
-    increasing id ranges — acyclic by construction)."""
-    t = _tables(spark, sf_dir)
-    e1 = t["nation"].select(
-        (F.col("n_nationkey") % 20).alias("src"),
-        (100 + F.col("n_nationkey") % 40).alias("dst"),
-    )
-    e2 = t["supplier"].select(
-        (100 + F.col("s_suppkey") % 40).alias("src"),
-        (200 + F.col("s_suppkey") % 60).alias("dst"),
-    )
-    e3 = t["supplier"].select(
-        (F.col("s_suppkey") % 20).alias("src"),
-        (200 + (F.col("s_suppkey") * 7) % 60).alias("dst"),
-    )
-    return e1.unionByName(e2).unionByName(e3).distinct()
-
-
-def q_dag_layers(spark, sf_dir):
-    """Topological layers (longest path from sources) over a constructed
-    3-tier DAG — fixed-round max-propagation, chained-CTE replayable."""
-    from area_etl_spark.operators.graph import dag_layers
-
-    return dag_layers(_dag_edges(spark, sf_dir), rounds=4)
-
-
-def q_shortest_paths(spark, sf_dir):
-    """Multi-source Bellman-Ford over the same DAG with integer weights
-    (src+dst derived), seeds = nation-layer nodes 0..4; 4 relaxation
-    sweeps cover the 2-hop diameter."""
-    from area_etl_spark.operators.graph import shortest_paths_weighted
-
-    e = _dag_edges(spark, sf_dir).withColumn(
-        "w", (F.col("src") + F.col("dst")) % 7 + 1
-    )
-    return shortest_paths_weighted(e, [0, 1, 2, 3, 4], rounds=4)
-
-
-def q_max_concurrency(spark, sf_dir):
-    """Peak concurrent sessions per event type: each event opens a
-    half-open interval [ts_micros, ts_micros + value-cents·1k) — sweep-line
-    +1/−1 deltas, per-key cumulative window, exact integers."""
-    from area_etl_spark.operators.intervals import max_concurrency
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("s"),
-        (
-            F.unix_micros(F.col("ts"))
-            + F.round(F.col("value") * 100).cast("long") * 1000
-        ).alias("e"),
-    )
-    return max_concurrency(ev, ["event_type"], "s", "e")
-
-
-def q_fifo_cost_basis(spark, sf_dir):
-    """FIFO tax-lot matching over event-derived trades (event_id is the
-    UNIQUE deterministic trade time — lineitem's (orderkey, linenumber) is
-    not unique in this synthetic data, and FIFO price attribution is
-    order-sensitive under ties) — cumulative-quantity interval algebra,
-    all-BIGINT, one row per sell."""
-    from area_etl_spark.operators.business import fifo_cost_basis
-
-    cents = F.round(F.col("value") * 100).cast("long")
-    tr = _tables(spark, sf_dir)["events"].select(
-        (F.col("user_id") % 50).alias("sym"),
-        F.col("event_id").alias("ts"),
-        F.when(F.col("event_id") % 2 == 1, "buy").otherwise("sell").alias("side"),
-        (cents % 50 + 1).alias("q"),
-        (cents % 1000 + 1).alias("p"),
-    )
-    return fifo_cost_basis(tr, ["sym"], "ts", "side", "q", "p")
-
-
-def q_t_closeness(spark, sf_dir):
-    """t-closeness of nationkey (ordered sensitive attribute) within
-    market-segment classes — exact common-denominator EMD, one division
-    per class."""
-    from area_etl_spark.operators.quality import t_closeness
-
-    c = _tables(spark, sf_dir)["customer"]
-    return t_closeness(c, ["c_mktsegment"], "c_nationkey", 0.1)
-
-
-def q_theil_sen(spark, sf_dir):
-    """Theil–Sen robust balance trend per nation (t = custkey, y = balance
-    cents): median of pairwise slopes via the collect→sort→middle idiom;
-    bounded groups (≤ n/25 customers per nation)."""
-    from area_etl_spark.operators.experiments import theil_sen_slope
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_nationkey",
-        F.col("c_custkey").alias("t"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("y"),
-    )
-    return theil_sen_slope(c, ["c_nationkey"], "t", "y")
-
-
-def q_theil_sen_bounded(spark, sf_dir):
-    """The SCALE-SAFE Theil–Sen composition docs/SCALE.md prescribes
-    (VERDICT r9 item 6): pre-aggregate events to one row per
-    (event_type, day) — group size is then bounded by the CALENDAR, not
-    the corpus, so the O(n²/2) pairwise-slope stage is invariant as rows
-    grow 100× — then take the robust daily-revenue trend per event type.
-    Exact integer daily sums; slope median via the collect→sort→middle
-    idiom."""
-    from area_etl_spark.operators.experiments import theil_sen_slope
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01")).alias("day"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    daily = ev.groupBy("event_type", "day").agg(F.sum("cents").alias("y"))
-    return theil_sen_slope(daily, ["event_type"], "day", "y")
-
-
-def q_acf_lags(spark, sf_dir):
-    """Autocorrelation ladder (lags 1..3) of value-cents per event type
-    ordered by event id — denominator-cleared exact DECIMAL arithmetic,
-    one float division per lag."""
-    from area_etl_spark.operators.windows import acf_lags
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        F.col("event_id").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return acf_lags(ev, ["event_type"], "t", "x", max_lag=3)
-
-
-def q_holt_brown(spark, sf_dir):
-    """Brown double-exponential smoothing over per-day event totals per
-    type (bounded daily series): exact truncated integer-weight form,
-    level/trend/one-step forecast."""
-    from area_etl_spark.operators.windows import holt_brown_smooth
-
-    daily = (
-        _tables(spark, sf_dir)["events"]
-        .groupBy(
-            "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-        )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("v"))
-    )
-    return holt_brown_smooth(daily, ["event_type"], ["day"], "v", n_lags=8)
-
-
-def q_bitemporal_asof(spark, sf_dir):
-    """Bitemporal point lookups: three constructed belief versions per
-    nation (correction at tx 500, valid split at 1000) probed by customer
-    (valid_at, tx_at) points — one key-equi join with two interval
-    containments, every probe matches at most one version."""
-    from area_etl_spark.operators.history import bitemporal_asof
-
-    t = _tables(spark, sf_dir)
-    n = t["nation"]
-    v1 = n.select(
-        F.col("n_nationkey").alias("k"),
-        F.lit(0).alias("valid_from"), F.lit(1000).alias("valid_to"),
-        F.lit(0).alias("tx_from"), F.lit(500).alias("tx_to"),
-        F.concat(F.lit("v1:"), F.col("n_name")).alias("belief"),
-    )
-    v1c = n.select(
-        F.col("n_nationkey").alias("k"),
-        F.lit(0).alias("valid_from"), F.lit(1000).alias("valid_to"),
-        F.lit(500).alias("tx_from"), F.lit(None).cast("int").alias("tx_to"),
-        F.concat(F.lit("v1c:"), F.col("n_name")).alias("belief"),
-    )
-    v2 = n.select(
-        F.col("n_nationkey").alias("k"),
-        F.lit(1000).alias("valid_from"), F.lit(None).cast("int").alias("valid_to"),
-        F.lit(0).alias("tx_from"), F.lit(None).cast("int").alias("tx_to"),
-        F.concat(F.lit("v2:"), F.col("n_name")).alias("belief"),
-    )
-    versions = v1.unionByName(v1c).unionByName(v2)
-    qs = t["customer"].select(
-        F.col("c_custkey"),
-        F.col("c_nationkey").alias("k"),
-        (F.col("c_custkey") % 2000).alias("valid_at"),
-        (F.col("c_custkey") * 7 % 1000).alias("tx_at"),
-    )
-    return bitemporal_asof(versions, qs, ["k"])
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Directed near-containment (|A∩B|/|A| over raw 3-gram shingles) on
-    documents — the quote detector; hot-gram guard max_df=64 default-on,
-    fully SQL-replayable (no seeded hash)."""
-    from area_etl_spark.operators.dedup import containment_pairs
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return containment_pairs(docs, threshold=0.6)
-
-
-def q_containment_blocked(spark, sf_dir):
-    """Two-tier directed containment (VERDICT r9 item 6): asymmetric
-    prefix-filter blocking (probe side carries only each doc's globally
-    rarest grams — no false negatives by the prefix theorem) + exact
-    array_intersect verify on blocked pairs only.  The oracle is the
-    UNBLOCKED all-shared-grams form, so every green proves the blocker
-    lost nothing."""
-    from area_etl_spark.operators.dedup import containment_blocked
-
-    return containment_blocked(
-        _tables(spark, sf_dir)["documents"],
-        threshold=0.75,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-
-
-def q_dedup_candidate_eval(spark, sf_dir):
-    """Dedup-candidate quality harness: precision/recall/F1 of the
-    portable MinHash banding (16 hashes, 4 bands) vs exact 3-gram-Jaccard
-    truth at t=0.5 — the measurement the banding dials are tuned by,
-    fully oracled (the ann_recall_report pattern applied to dedup)."""
-    from area_etl_spark.operators.dedup import dedup_candidate_eval
-
-    return dedup_candidate_eval(
-        _tables(spark, sf_dir)["documents"], threshold=0.5, num_hashes=16, bands=4
-    )
-
-
-def q_dedup_soft_weights(spark, sf_dir):
-    """Soft dedup: 1/cluster_size training weights over exact-normalized
-    text clusters — keeps every doc, equalizes gradient mass per unique
-    text."""
-    from area_etl_spark.operators.dedup import dedup_soft_weights
-
-    return dedup_soft_weights(_tables(spark, sf_dir)["documents"])
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights: every 20th document is the 'target'
-    corpus; hashed-unigram (md5, 64 buckets) add-one likelihood ratios,
-    per-doc sorted-fold dot product."""
-    from area_etl_spark.operators.sampling import dsir_weights
-
-    docs = _tables(spark, sf_dir)["documents"]
-    target = docs.where(F.col("doc_id") % 20 == 0)
-    return dsir_weights(docs, target)
-
-
-def q_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard over the same signup→purchase
-    time-to-event construction as km_survival — additive hazard, ordered
-    sorted-fold float sum, exact risk-set counts."""
-    from area_etl_spark.operators.experiments import nelson_aalen
-
-    ev = _tables(spark, sf_dir)["events"]
-    s = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("t0")
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s, "user_id")
-        .where(F.col("ts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    tmax = ev.agg(F.max("ts").alias("tmax"))
-    subj = (
-        s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(tmax))
-        .select(
-            F.datediff(
-                F.coalesce(F.col("t1"), F.col("tmax")).cast("date"),
-                F.col("t0").cast("date"),
-            ).alias("dur"),
-            F.col("t1").isNotNull().alias("ev"),
-        )
-    )
-    return nelson_aalen(subj, "dur", "ev")
-
-
-def q_sprt_ab(spark, sf_dir):
-    """Wald SPRT per event type: is the odd-cents rate 0.55 rather than
-    0.45?  Cumulative integer (n, s) walk ordered by event id; the two
-    log-likelihood slopes are Python literals injected identically into
-    the oracle, so llr is bit-identical per step; earliest crossing via
-    struct-min argmin."""
-    from area_etl_spark.operators.experiments import sprt_decisions
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        F.col("event_id").alias("t"),
-        (F.round(F.col("value") * 100).cast("long") % 2).alias("y"),
-    )
-    return sprt_decisions(ev, ["event_type"], "t", "y", p0=0.45, p1=0.55)
-
-
-def q_power_two_proportions(spark, sf_dir):
-    """Sample-size table: per nation a (baseline, uplift) scenario in
-    basis points → required n per arm at α=5%/80% power; closed-form
-    projection with literal z constants."""
-    from area_etl_spark.operators.experiments import power_two_proportions
-
-    n = _tables(spark, sf_dir)["nation"].select(
-        "n_nationkey",
-        (2000 + F.col("n_nationkey") * 50).alias("p0_bp"),
-        (2300 + F.col("n_nationkey") * 50 + (F.col("n_nationkey") % 5) * 100).alias(
-            "p1_bp"
-        ),
-    )
-    return power_two_proportions(n, "p0_bp", "p1_bp")
-
-
-def q_fifo_open_lots(spark, sf_dir):
-    """Open tax lots after FIFO consumption over the same event-derived
-    trades as fifo_cost_basis — per-key cumulative buys vs one total-sold
-    aggregate, no pairwise join."""
-    from area_etl_spark.operators.business import fifo_open_lots
-
-    cents = F.round(F.col("value") * 100).cast("long")
-    tr = _tables(spark, sf_dir)["events"].select(
-        (F.col("user_id") % 50).alias("sym"),
-        F.col("event_id").alias("ts"),
-        F.when(F.col("event_id") % 2 == 1, "buy").otherwise("sell").alias("side"),
-        (cents % 50 + 1).alias("q"),
-        (cents % 1000 + 1).alias("p"),
-    )
-    return fifo_open_lots(tr, ["sym"], "ts", "side", "q", "p")
-
-
-def q_tfidf_cosine(spark, sf_dir):
-    """Sparse TF-IDF cosine pairs on documents — integer micro-unit idf
-    weights make norms and dot products exact DECIMAL ints; one sqrt/
-    division per emitted pair; default-ON max_df hot-term guard."""
-    from area_etl_spark.operators.text_analysis import tfidf_cosine_pairs
-
-    return tfidf_cosine_pairs(_tables(spark, sf_dir)["documents"], threshold=0.5)
-
-
-def q_mix_shift(spark, sf_dir):
-    """Mix-shift decomposition of the 1995→1996 average order value by
-    priority segment — mix/rate/interaction effects that reconcile exactly
-    to the overall delta; exact integer sums, fixed-order float effects."""
-    from area_etl_spark.operators.business import mix_shift_decomposition
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        F.year(F.col("o_orderdate")).alias("yr"),
-        F.col("o_orderpriority").alias("seg"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return mix_shift_decomposition(o, "yr", "seg", "cents", 1995, 1996)
-
-
-def q_rake_keyphrases(spark, sf_dir):
-    """RAKE top-3 keyphrases per document — gaps-and-islands phrase
-    candidates, exact integer (degree, freq) word stats broadcast back,
-    word-position-ordered score fold, total-order top-k."""
-    from area_etl_spark.operators.text_analysis import rake_keyphrases
-
-    return rake_keyphrases(_tables(spark, sf_dir)["documents"], topk=3)
-
-
-def q_quantile_treatment_effect(spark, sf_dir):
-    """Distributional A/B: purchase-vs-view value-cents quantile gaps at
-    p25/p50/p75/p90 — exact type-7 quantiles via integer rank arithmetic
-    and aggregate-level cum lookups, never a per-arm collect."""
-    from area_etl_spark.operators.experiments import quantile_treatment_effect
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return quantile_treatment_effect(
-        ev, "event_type", "cents", "purchase", "view", q_pcts=[25, 50, 75, 90]
-    )
-
-
-def q_hll_distinct(spark, sf_dir):
-    """Portable HyperLogLog over event user ids — md5 string-arithmetic
-    registers (no float log in extraction), sorted-fold harmonic sum,
-    small-range correction; bit-identical under any partitioning and in
-    DuckDB."""
-    from area_etl_spark.operators.sketches import hll_distinct_portable
-
-    return hll_distinct_portable(_tables(spark, sf_dir)["events"], "user_id")
-
-
-def q_cliff_delta(spark, sf_dir):
-    """Cliff's δ / Vargha–Delaney Â between URGENT and LOW order values —
-    the ordinal effect size next to mann_whitney's p: gt/lt/ties as
-    exact DECIMAL dot products over one distinct-value cumulative
-    window, never a pair scan."""
-    from area_etl_spark.operators.experiments import cliff_delta
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return cliff_delta(o, "o_orderpriority", "cents", "1-URGENT", "5-LOW")
-
-
-def q_page_hinkley(spark, sf_dir):
-    """Page–Hinkley sequential mean-shift detection on per-priority daily
-    order counts, warmup-reference form — the WHOLE detector state stays
-    in exact BIGINTs (the online-mean form's dyadic tie points land on
-    round-half boundaries where engines' window-sum ulp orders disagree;
-    clearing by the fixed warmup denominator removes every float from the
-    alarm decision)."""
-    from area_etl_spark.operators.windows import page_hinkley
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        "o_orderpriority",
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "day"
-        ),
-    ).agg(F.count(F.lit(1)).alias("v"))
-    return page_hinkley(
-        daily, ["o_orderpriority"], "day", "v", warmup=30, delta=0, lambda_threshold=50
-    )
-
-
-def q_newey_west(spark, sf_dir):
-    """Newey–West (HAC) standard error of the mean daily order count —
-    the autocorrelation-robust CI the i.i.d. formula understates:
-    exact-cleared autocovariances (the acf discipline), Bartlett weights,
-    one sqrt per se."""
-    from area_etl_spark.operators.experiments import newey_west_se
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "day"
-        )
-    ).agg(F.count(F.lit(1)).alias("v"))
-    return newey_west_se(daily, "day", "v", max_lag=5)
-
-
-def q_qini_curve(spark, sf_dir):
-    """Qini uplift curve of a nation-derived targeting score on the
-    positive-balance outcome under the even/odd pseudo-experiment —
-    cumulative incremental responders vs proportional-control expectation
-    per descending score bin, all from exact counts."""
-    from area_etl_spark.operators.experiments import qini_curve
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        (F.col("c_nationkey").cast("long") * 40000).alias("score"),
-        (F.pmod(F.col("c_custkey"), F.lit(2)) == 1).alias("t"),
-        (F.col("c_acctbal") > 0).alias("y"),
-    )
-    return qini_curve(c, "t", "y", "score", n_bins=10)
-
-
-def q_krippendorff_alpha(spark, sf_dir):
-    """Krippendorff's alpha (nominal) over each user's event types — the
-    many-rater reliability cohen_kappa can't express: exact per-unit
-    disagreement integers, singleton units drop per the definition."""
-    from area_etl_spark.operators.experiments import krippendorff_alpha
-
-    ev = _tables(spark, sf_dir)["events"]
-    return krippendorff_alpha(ev, "user_id", "event_type")
-
-
-def q_srm_check(spark, sf_dir):
-    """Sample-ratio-mismatch guardrail on the even/odd customer split
-    against a 1:1 design — exact-count chi-square GOF with the p < 0.001
-    industry alarm; the 2-arm case uses the exact df=1 identity, never
-    the Wilson–Hilferty tail."""
-    from area_etl_spark.operators.experiments import srm_check
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.when(F.pmod(F.col("c_custkey"), F.lit(2)) == 0, F.lit("even"))
-        .otherwise(F.lit("odd"))
-        .alias("arm")
-    )
-    return srm_check(c, "arm", {"even": 1, "odd": 1})
-
-
-def q_power_two_means(spark, sf_dir):
-    """Sample-size planning for a two-arm balance experiment: σ̂ from the
-    exact DECIMAL pilot sums, both z's from the PORTABLE Acklam inverse
-    normal — n/arm to detect a $1000 shift at α=.05, power .8."""
-    from area_etl_spark.operators.experiments import power_two_means
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal")
-    )
-    return power_two_means(c, "bal", delta=100_000)
-
-
-def q_pacf_lags(spark, sf_dir):
-    """PACF of the daily order-count series via Durbin–Levinson over the
-    exact-cleared ACF ladder — the AR-order diagnostic; ONE Python loop
-    both evaluates the recursion and generates its SQL replica, so the
-    float streams are instruction-identical."""
-    from area_etl_spark.operators.windows import pacf_lags
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "day"
-        )
-    ).agg(F.count(F.lit(1)).alias("y"))
-    return pacf_lags(daily, "day", "y", max_lag=5)
-
-
-def q_seasonal_strength(spark, sf_dir):
-    """Wang–Smith–Hyndman seasonal/trend strength of the monthly revenue
-    series — exact-BIGINT decomposition components in, two variance
-    ratios out, every variance one division of exact DECIMAL sums."""
-    from area_etl_spark.operators.windows import seasonal_strength
-
-    o = _tables(spark, sf_dir)["orders"]
-    monthly = o.groupBy(
-        F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("month")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
-    return seasonal_strength(monthly, [], ["month"], "rev", 12)
-
-
-def q_ece_brier(spark, sf_dir):
-    """Brier / ECE / MCE of the balance-derived propensity score against
-    the placed-an-order outcome — the one-row probability-quality summary
-    the calibration_curve table drills into: Brier exact (integer
-    micro-probability squared errors in DECIMAL), ECE a sorted-bin fold,
-    MCE a deterministic max."""
-    from area_etl_spark.operators.quality import ece_brier
-
-    tables = _tables(spark, sf_dir)
-    cust = tables["customer"].select(
-        "c_custkey", F.round(F.col("c_acctbal") * 100).cast("long").alias("bal")
-    )
-    score = F.least(
-        F.lit(1_000_000),
-        F.greatest(
-            F.lit(0),
-            F.floor(
-                (F.col("bal") + 100_000) * F.lit(1_000_000) / F.lit(1_100_000)
-            ).cast("long"),
-        ),
-    )
-    ordered = tables["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
-    units = cust.join(ordered.withColumn("_o", F.lit(1)), "c_custkey", "left").select(
-        score.alias("score"), F.col("_o").isNotNull().alias("placed")
-    )
-    return ece_brier(units, "score", "placed", n_bins=10)
-
-
-def q_heaps_law(spark, sf_dir):
-    """Heaps'-law vocabulary-growth fit over the documents corpus in id
-    order — V at each checkpoint via the first-owner trick (no per-prefix
-    distinct scan), the ln-ln OLS on one ordered cumulative window."""
-    from area_etl_spark.operators.text_analysis import heaps_law
-
-    return heaps_law(_tables(spark, sf_dir)["documents"])
-
-
-def q_conformal_interval(spark, sf_dir):
-    """Split-conformal interval for a fixed unit-price model of extended
-    price: q̂ is the EXACT ⌈(n+1)(1−α)⌉-th order statistic of the
-    absolute residuals (distinct-value cumulative counts, never a
-    percentile approximation)."""
-    from area_etl_spark.operators.quality import conformal_interval
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        (F.col("l_quantity").cast("long") * 101800).alias("pred"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("actual"),
-    )
-    return conformal_interval(li, "pred", "actual", alpha=0.1)
-
-
-def q_novelty_score(spark, sf_dir):
-    """Per-document 8-gram novelty over the corpus in id order — the
-    corpus-increment triage scalar (a slice whose novelty collapses is
-    re-crawling what the corpus holds): first-owner MIN per shingle, one
-    join back, exact counts."""
-    from area_etl_spark.operators.text_analysis import novelty_score
-
-    return novelty_score(_tables(spark, sf_dir)["documents"], n=8)
-
-
-def q_term_burstiness(spark, sf_dir):
-    """Church–Gale term burstiness: variance-to-mean of per-document term
-    counts over containing documents, cleared to one exact-integer
-    ratio — content words clump (VMR ≫ 1), function words sit near the
-    Poisson floor; top-50 bursty terms with min-df support."""
-    from area_etl_spark.operators.text_analysis import term_burstiness
-
-    return term_burstiness(
-        _tables(spark, sf_dir)["documents"], min_df=5, topk=50
-    )
-
-
-def q_kendall_tau(spark, sf_dir):
-    """Kendall's τ-b between line-item quantity and discount — C/D/ties
-    from the joint frequency grid (G×G combo pairs, never an O(n²) row
-    scan), exact integer products, Gamma and Somers' D from the same
-    sums; the third member of the correlation family."""
-    from area_etl_spark.operators.experiments import kendall_tau_b
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc"),
-    )
-    return kendall_tau_b(li, "qty", "disc")
-
-
-def q_theil_u(spark, sf_dir):
-    """Theil's U(priority | status) on orders — the asymmetric nominal
-    association cramers_v can't express: exact-count entropies folded in
-    sorted category order."""
-    from area_etl_spark.operators.experiments import theil_u
-
-    o = _tables(spark, sf_dir)["orders"]
-    return theil_u(o, "o_orderpriority", "o_orderstatus")
-
-
-def q_ipw_ate(spark, sf_dir):
-    """IPW treatment effect of BUILDING-segment membership on account
-    balance, propensities from the closed-form Naive-Bayes factorization
-    over two discrete covariates — exact counts in, fixed-order ln fold,
-    sorted-profile contribution fold; no iterative fit anywhere."""
-    from area_etl_spark.operators.experiments import ipw_ate
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        (F.col("c_mktsegment") == "BUILDING").alias("t"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("y"),
-        F.pmod(F.col("c_nationkey"), F.lit(5)).alias("g1"),
-        F.pmod(F.col("c_custkey"), F.lit(2)).alias("g2"),
-    )
-    return ipw_ate(c, "t", "y", ["g1", "g2"])
-
-
-def q_fe_within(spark, sf_dir):
-    """Panel fixed-effects within estimator: price-per-quantity slope
-    WITHIN each supplier (supplier-level confounders cancel by
-    construction) — per-entity exact DECIMAL numerators, one entity-
-    ordered cumulative window carries both sums."""
-    from area_etl_spark.operators.experiments import fe_within_estimator
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_suppkey").alias("e"),
-        F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    )
-    return fe_within_estimator(li, "e", "x", "y")
-
-
-def q_mmr_diversify(spark, sf_dir):
-    """MMR re-ranking of the ann_cosine_topk pool: the top-20 relevance
-    cut and the pool×pool cosine matrix are distributed; the inherently
-    sequential greedy runs over that bounded round-6 matrix and replays
-    in SQL as five chained argmax CTEs (ties by id, (1−λ) kept as a
-    subtraction so both engines see the same double)."""
-    from area_etl_spark.operators.similarity import mmr_diversify
-
-    emb = _tables(spark, sf_dir)["embeddings"].where(F.col("vec_id") != 0)
-    return mmr_diversify(emb, _query_vec(spark, sf_dir), k=5, lam=0.7, pool=20)
-
-
-def q_reg_discontinuity(spark, sf_dir):
-    """Sharp regression discontinuity on the daily order-count series at
-    the 1996-01-01 boundary (day 1461): local lines on each side from one
-    conditional exact-DECIMAL aggregate, effect = intercept gap at the
-    cutoff."""
-    from area_etl_spark.operators.experiments import reg_discontinuity
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "day"
-        )
-    ).agg(F.count(F.lit(1)).alias("y"))
-    return reg_discontinuity(daily, "day", "y", cutoff=1461, bandwidth=365)
-
-
-def q_ljung_box(spark, sf_dir):
-    """Ljung–Box whiteness test per event-type series (the acf_lags ladder
-    it is built on is already driver-green): Q = n(n+2)·Σ r²/(n−k) folded
-    in sorted lag order, Wilson–Hilferty p — the residual diagnostic that
-    closes the acf → forecast loop."""
-    from area_etl_spark.operators.windows import ljung_box
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        "event_type",
-        F.col("event_id").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-    )
-    return ljung_box(ev, ["event_type"], "t", "x", max_lag=5)
-
-
-def q_haar_transform(spark, sf_dir):
-    """Unnormalized Haar decomposition of the monthly revenue series —
-    every coefficient an EXACT BIGINT (approx = pair sum, detail = pair
-    difference; the 1/√2 normalization would make every level a float),
-    three levels, each ONE hash aggregate."""
-    from area_etl_spark.operators.windows import haar_transform
-
-    o = _tables(spark, sf_dir)["orders"]
-    monthly = o.groupBy(
-        F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("month")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
-    return haar_transform(monthly, "month", "rev", levels=3)
-
-
-def q_granger_causality(spark, sf_dir):
-    """Does yesterday's URGENT order count predict today's total order
-    count beyond yesterday's total?  One-lag Granger F test with the 2×2
-    normal equations solved in closed form over exact DECIMAL n-scaled
-    sums — no iterative fit anywhere."""
-    from area_etl_spark.operators.experiments import granger_causality_1lag
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "day"
-        )
-    ).agg(
-        F.count(F.lit(1)).alias("y"),
-        F.sum(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-        ).alias("x"),
-    )
-    return granger_causality_1lag(daily, "day", "y", "x")
-
-
-def q_logrank_test(spark, sf_dir):
-    """Log-rank comparison of the time-to-first-purchase curves of odd- vs
-    even-id signup users (the km_survival cohort split in two) — at-risk
-    counts from one distinct-time cumulative window, E/V as ordered
-    cumsums, χ²₁'s p is EXACTLY 2·Φ̄(√χ²) on the portable SF."""
-    from area_etl_spark.operators.experiments import logrank_test
-
-    ev = _tables(spark, sf_dir)["events"]
-    s = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("t0")
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s, "user_id")
-        .where(F.col("ts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    tmax = ev.agg(F.max("ts").alias("tmax"))
-    subj = (
-        s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(tmax))
-        .select(
-            F.datediff(
-                F.coalesce(F.col("t1"), F.col("tmax")).cast("date"),
-                F.col("t0").cast("date"),
-            ).alias("dur"),
-            F.col("t1").isNotNull().alias("ev"),
-            F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-        )
-    )
-    return logrank_test(subj, F.col("arm") == 1, "dur", "ev")
-
-
-def q_partial_corr(spark, sf_dir):
-    """Partial correlation of line-item quantity and extended price with
-    the discount held fixed — three pairwise Pearsons off ONE exact
-    DECIMAL aggregate, the first-order recursion in one division."""
-    from area_etl_spark.operators.experiments import partial_corr
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc"),
-    )
-    return partial_corr(li, "qty", "cents", "disc")
-
-
-def q_durbin_watson(spark, sf_dir):
-    """Durbin–Watson autocorrelation diagnostic of the daily order-count
-    trend residuals — the residuals never exist as floats (the OLS
-    denominators clear to exact DECIMAL integers, and DW's ratio is
-    scale-invariant, so the clearing factor cancels)."""
-    from area_etl_spark.operators.experiments import durbin_watson
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "x"
-        )
-    ).agg(F.count(F.lit(1)).alias("y"))
-    return durbin_watson(daily, "x", "y")
-
-
-def q_cochran_q(spark, sf_dir):
-    """Cochran's Q across three binary checks evaluated on the SAME
-    customers (positive balance / BUILDING segment / key divisible by 3)
-    — mcnemar generalized to k treatments, the textbook statistic cleared
-    to an all-integer ratio; Wilson–Hilferty p."""
-    from area_etl_spark.operators.experiments import cochran_q
-
-    c = _tables(spark, sf_dir)["customer"]
-    long = c.select(
-        F.col("c_custkey").alias("blk"),
-        F.expr(
-            "stack(3, 't1', c_acctbal > 0, 't2', c_mktsegment = 'BUILDING', "
-            "'t3', c_custkey % 3 = 0) AS (t, s)"
-        ),
-    ).select("blk", "t", "s")
-    return cochran_q(long, "blk", "t", "s")
-
-
-def q_friedman_test(spark, sf_dir):
-    """Friedman test over per-customer repeated measures — each customer's
-    FIRST, LAST, and MAX order values ranked WITHIN the customer (block-
-    partitioned midrank windows, never a global sort), doubled-rank sums
-    exact, the tie-robust statistic in one division."""
-    from area_etl_spark.operators.experiments import friedman_test
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_custkey", "o_orderdate", "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    per = o.groupBy("o_custkey").agg(
-        F.min(F.struct("o_orderdate", "o_orderkey", "cents"))
-        .getField("cents")
-        .alias("first_c"),
-        F.max(F.struct("o_orderdate", "o_orderkey", "cents"))
-        .getField("cents")
-        .alias("last_c"),
-        F.max("cents").alias("max_c"),
-    )
-    long = per.select(
-        F.col("o_custkey").alias("blk"),
-        F.expr(
-            "stack(3, 'first', first_c, 'last', last_c, 'max', max_c) AS (t, v)"
-        ),
-    ).select("blk", "t", "v")
-    return friedman_test(long, "blk", "t", "v")
-
-
-def q_bayes_ab_beta(spark, sf_dir):
-    """Exact Bayesian A/B: P(positive-balance rate of odd-key customers
-    beats even-key) under Beta(1,1) priors — the Beta-Binomial identity
-    evaluated with NO special functions, two ln-ratio window cumsums (the
-    fisher_exact discipline twice), max-normalized exp."""
-    from area_etl_spark.operators.experiments import bayes_ab_beta
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.when(F.pmod(F.col("c_custkey"), F.lit(2)) == 0, F.lit("control"))
-        .otherwise(F.lit("treatment"))
-        .alias("variant"),
-        (F.col("c_acctbal") > 0).alias("positive"),
-    )
-    return bayes_ab_beta(c, "variant", "positive", "control", "treatment")
-
-
-_PIP_POLYGON = [(100, 100), (900, 200), (800, 800), (400, 950), (50, 600)]
-
-
-def q_point_in_polygon(spark, sf_dir):
-    """Even–odd ray-cast point-in-polygon in EXACT integer arithmetic —
-    the crossing test clears its division by sign-adjusted
-    cross-multiplication, so no float (and no epsilon contract) exists
-    anywhere; customers mapped onto a synthetic 1000×1000 grid against a
-    literal pentagon, the predicate folded edge-by-edge in codegen."""
-    from area_etl_spark.operators.geo import point_in_polygon
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        "c_custkey",
-        F.pmod(F.col("c_custkey"), F.lit(1000)).alias("px"),
-        F.pmod(F.round(F.col("c_acctbal") * 100).cast("long"), F.lit(1000)).alias(
-            "py"
-        ),
-    )
-    return point_in_polygon(c, "px", "py", _PIP_POLYGON)
-
-
-def q_ransac_line(spark, sf_dir):
-    """Deterministic RANSAC line fit over the daily order-count series —
-    candidate pairs are the smallest-md5 sample points (seeded, engine-
-    portable), the inlier test is all-integer cross-multiplication, the
-    winner emits slope/intercept in one exact division each."""
-    from area_etl_spark.operators.experiments import ransac_line
-
-    o = _tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).alias(
-            "x"
-        )
-    ).agg(F.count(F.lit(1)).alias("y"))
-    return ransac_line(daily, "x", "y", eps=20, n_candidates=16, seed="ransac")
-
-
-def q_hits_scores(spark, sf_dir):
-    """HITS hubs/authorities over the DIRECTED user→item interaction graph
-    (users are hubs, items authorities) — fixed-3-round unnormalized power
-    iteration in exact DECIMAL integers (normalization only rescales, so
-    skipping it keeps every intermediate engine-exact); top-20 authorities
-    with max-normalized ratios."""
-    from area_etl_spark.operators.graph import hits_scores
-
-    ev = _tables(spark, sf_dir)["events"].select(
-        F.col("user_id").alias("src"),
-        (F.pmod(F.col("event_id"), F.lit(500)) + F.lit(10_000_000)).alias("dst"),
-    ).distinct()
-    return hits_scores(ev, iterations=3, topk=20)
-
-
-def q_dp_noisy_counts(spark, sf_dir):
-    """ε-DP event-type counts (Laplace mechanism, ε = 0.5) with the
-    SEEDED engine-portable noise draw: md5 digits → uniform → inverse-CDF
-    Laplace — same release, same noise, any engine."""
-    from area_etl_spark.operators.quality import dp_noisy_counts
-
-    ev = _tables(spark, sf_dir)["events"]
-    return dp_noisy_counts(ev, "event_type", epsilon=0.5, seed="dp")
-
-
-def q_decision_stump(spark, sf_dir):
-    """Best Gini split of account balance for predicting the BUILDING
-    segment — the one-level decision tree over the rank-family cumulative
-    machinery; argmin via struct-min so the split is engine-identical."""
-    from area_etl_spark.operators.classify import decision_stump
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-        (F.col("c_mktsegment") == "BUILDING").alias("is_building"),
-    )
-    return decision_stump(c, "bal_cents", "is_building")
-
-
-def q_query_likelihood(spark, sf_dir):
-    """Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty 2001)
-    over the documents corpus — the LM counterpart of bm25_search on the
-    same query, computed sparsely via the standard three-term
-    decomposition (no dense doc×term join at any scale)."""
-    from area_etl_spark.operators.indexing import query_likelihood_dirichlet
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return query_likelihood_dirichlet(
-        docs, ["spark", "window", "merge"], mu=2000.0, topk=20
-    )
-
-
-def q_kneser_ney(spark, sf_dir):
-    """Interpolated Kneser–Ney bigram LM over the documents corpus — the
-    continuation-count smoothing (Chen & Goodman 1998) upgrading
-    bigram_lm_score's raw MLE; top-50 bigram types with their P_KN."""
-    from area_etl_spark.operators.text_analysis import kneser_ney_bigram
-
-    docs = _tables(spark, sf_dir)["documents"]
-    return kneser_ney_bigram(docs, discount=0.75, topk=50)
-
-
-def q_language_purity(spark, sf_dir):
-    """Mixed-language detector: sentence-level heuristic lang-ID over the
-    synthetically-punctuated corpus (the split_sentences prep), per-doc
-    majority vote + purity + undetermined count."""
-    from area_etl_spark.operators.text_analysis import language_purity
-
-    d = _tables(spark, sf_dir)["documents"]
-    punct = F.regexp_replace(
-        F.coalesce(F.col("text"), F.lit("")),
-        r"([a-z0-9]+ [a-z0-9]+ [a-z0-9]+) ",
-        r"$1. ",
-    )
-    return language_purity(d.select("doc_id", punct.alias("text")))
-
-
-def q_sbg_retention(spark, sf_dir):
-    """sBG retention projection of the first-month signup cohort's
-    monthly activity curve — closed-form two-moment Fader–Hardie fit,
-    exact product projection, observed overlay."""
-    from area_etl_spark.operators.business import sbg_retention
-
-    ev = _tables(spark, sf_dir)["events"]
-    mi = ev.select(
-        (F.year(F.col("ts")) * 12 + F.month(F.col("ts"))).alias("m"),
-        "user_id",
-    )
-    m0 = mi.agg(F.min("m").alias("m0"))
-    cohort = (
-        mi.groupBy("user_id")
-        .agg(F.min("m").alias("fm"))
-        .crossJoin(F.broadcast(m0))
-        .where(F.col("fm") == F.col("m0"))
-        .select("user_id")
-    )
-    curve = (
-        mi.join(cohort, "user_id", "left_semi")
-        .crossJoin(F.broadcast(m0))
-        .select((F.col("m") - F.col("m0")).alias("p"), "user_id")
-        .distinct()
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("active"))
-    )
-    return sbg_retention(curve, "p", "active", horizon=12)
-
-
-def q_overdispersion_check(spark, sf_dir):
-    """Poisson overdispersion screen of daily event counts per event
-    type — dispersion ratio from exact DECIMAL sums, Cox-form z with the
-    portable tail."""
-    from area_etl_spark.operators.quality import overdispersion_check
-
-    daily = (
-        _tables(spark, sf_dir)["events"]
-        .groupBy("event_type", F.to_date("ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    return overdispersion_check(daily, "event_type", "x")
-
-
-def q_eb_shrinkage(spark, sf_dir):
-    """Empirical-Bayes shrinkage of each customer's big-order rate —
-    beta-binomial prior fitted by BINNED method of moments (exact
-    integer histogram, fixed fold), posterior mean per customer."""
-    from area_etl_spark.operators.quality import eb_shrinkage
-
-    per = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(F.col("o_custkey").alias("cust"))
-        .agg(
-            F.sum(
-                F.when(F.col("o_totalprice") > 150000, 1).otherwise(0)
-            ).alias("x"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    return eb_shrinkage(per, "cust", "x", "n", n_bins=1000)
-
-
-def q_siegel_slope(spark, sf_dir):
-    """Siegel repeated-median trend of monthly revenue — the 50%-breakdown
-    robust line beside theil_sen; every median exact via sorted arrays,
-    every slope one IEEE division of exact integers."""
-    from area_etl_spark.operators.experiments import siegel_slope
-
-    ser = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(
-            (
-                F.year(F.col("o_orderdate").cast("date")) * 12
-                + F.month(F.col("o_orderdate").cast("date"))
-            ).alias("t")
-        )
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"))
-    )
-    return siegel_slope(ser, "t", "y")
-
-
-def q_twfe_estimator(spark, sf_dir):
-    """Two-way fixed-effects slope of revenue on order count over the
-    balanced (market segment × order year) panel — the double-demeaning
-    cleared to exact DECIMAL integers by the N = U·T multiplication."""
-    from area_etl_spark.operators.experiments import twfe_estimator
-
-    t = _tables(spark, sf_dir)
-    panel = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.year(F.col("o_orderdate").cast("date")).alias("yr"),
-            F.lit(1).alias("x"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("y"),
-        )
-    )
-    return twfe_estimator(panel, "seg", "yr", "x", "y")
-
-
-def q_vwap_bars(spark, sf_dir):
-    """Monthly VWAP per return-flag over lineitem (price cents × integer
-    quantity): both sums exact DECIMAL, one division per bar."""
-    from area_etl_spark.operators.business import vwap_bars
-
-    li = _tables(spark, sf_dir)["lineitem"].select(
-        F.col("l_returnflag").alias("flag"),
-        F.col("l_shipdate").cast("timestamp").alias("ts"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        F.col("l_quantity").cast("long").alias("qty"),
-    )
-    return vwap_bars(li, ["flag"], "ts", "cents", "qty", bar="month")
-
-
-def q_anderson_darling(spark, sf_dir):
-    """Anderson–Darling normality of customer balance cents (case 3,
-    Stephens correction + critical values) — the EDF companion to
-    jarque_bera, portable Φ on both tails, rank-ordered fold."""
-    from area_etl_spark.operators.experiments import anderson_darling
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents")
-    )
-    return anderson_darling(c, "cents")
-
-
-def q_asof_nearest(spark, sf_dir):
-    """Nearest-in-time as-of join (pandas direction='nearest'): each
-    event matched to the closest purchase timestamp of the same user,
-    either direction, backward on ties — one union-merge sort, both
-    direction windows sharing it."""
-    from area_etl_spark.operators.asof import asof_nearest
-
-    ev = _tables(spark, sf_dir)["events"]
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.col("ts").alias("pts"))
-        .distinct()
-    )
-    out = asof_nearest(
-        ev.select("event_id", "user_id", "ts"), p, "user_id", "ts", "pts"
-    )
-    return out.select("event_id", "user_id", "ts", "pts_near", "asof_direction")
-
-
-def q_kn_perplexity(spark, sf_dir):
-    """CCNet-style perplexity filter: score the odd-id documents under a
-    Kneser–Ney bigram LM trained on the even-id half — full backoff with
-    an add-one continuation floor, per-doc logprob folded in position
-    order."""
-    from area_etl_spark.operators.text_analysis import kn_perplexity
-
-    docs = _tables(spark, sf_dir)["documents"]
-    train = docs.where(F.pmod(F.col("doc_id"), F.lit(2)) == 0)
-    score = docs.where(F.pmod(F.col("doc_id"), F.lit(2)) == 1)
-    return kn_perplexity(train, score, discount=0.75)
-
-
-def q_seasonal_decompose(spark, sf_dir):
-    """Classical additive decomposition of the monthly revenue series
-    (period 12, the even-period 2×MA path): exact BIGINT trend numerators,
-    per-phase exact detrended means, sorted-fold phase centering — the
-    decomposition STL descends from, on the grain monthly_revenue_rollup
-    already produces."""
-    from area_etl_spark.operators.windows import seasonal_decompose_classical
-
-    o = _tables(spark, sf_dir)["orders"]
-    # Timestamp (not date) month grain: the driver's hash is dtype-sensitive
-    # and Spark DATE -> pandas object vs DuckDB DATE -> datetime64 breaks it;
-    # date_trunc's TIMESTAMP matches both sides (the monthly_revenue_rollup
-    # recipe).
-    monthly = o.groupBy(
-        F.date_trunc("month", F.col("o_orderdate")).alias("month")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
-    return seasonal_decompose_classical(monthly, [], ["month"], "rev", 12)
-
-
-def q_rsi_cutler(spark, sf_dir):
-    """Cutler's RSI (the SMA, non-recursive form — Wilder's EWMA is a
-    sequential recursion no engine parallelizes; the variant choice is
-    documented) over per-priority daily revenue: exact integer gain/loss
-    window sums, one division, warm-up rows stay NULL."""
-    from area_etl_spark.operators.windows import rsi_cutler
-
-    o = _tables(spark, sf_dir)["orders"]
-    # Timestamp day grain for the dtype-sensitive driver hash (see
-    # q_seasonal_decompose).
-    daily = o.groupBy(
-        "o_orderpriority", F.col("o_orderdate").cast("timestamp").alias("day")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
-    return rsi_cutler(daily, ["o_orderpriority"], ["day"], "rev", 14)
-
-
-def q_bollinger_bands(spark, sf_dir):
-    """Bollinger bands over the same per-priority daily revenue series:
-    20-row moving mean ± 2 sample stddevs from EXACT window sums (Σv, Σv²
-    in DECIMAL) — no catastrophic cancellation, one division per band."""
-    from area_etl_spark.operators.windows import bollinger_bands
-
-    o = _tables(spark, sf_dir)["orders"]
-    # Timestamp day grain for the dtype-sensitive driver hash (see
-    # q_seasonal_decompose).
-    daily = o.groupBy(
-        "o_orderpriority", F.col("o_orderdate").cast("timestamp").alias("day")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
-    return bollinger_bands(daily, ["o_orderpriority"], ["day"], "rev", 20, 2.0)
-
-
-def q_anova_oneway(spark, sf_dir):
-    """One-way ANOVA F across the five order priorities — the parametric
-    complement of kruskal_wallis on the same grouping: exact DECIMAL
-    per-group sums, SSB folded in sorted group order, p from the Paulson
-    (1942) two-Wilson-Hilferty F approximation on the portable normal SF."""
-    from area_etl_spark.operators.experiments import anova_oneway
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return anova_oneway(o, "o_orderpriority", "cents")
-
-
-def q_levene_test(spark, sf_dir):
-    """Levene's homogeneity-of-variances gate in front of that ANOVA —
-    |v − mean_g| never materializes as a float: the deviation numerator
-    |n_g·v − S_g| stays an exact DECIMAL and every ANOVA-on-z sum is a
-    rational with a per-group integer denominator."""
-    from area_etl_spark.operators.experiments import levene_test
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return levene_test(o, "o_orderpriority", "cents")
-
-
-def q_wilcoxon_signed_rank(spark, sf_dir):
-    """Wilcoxon signed-rank on paired pre/post data: each customer's FIRST
-    vs LAST order value (deterministic struct-min/max by (date, orderkey)).
-    Zero differences Pratt-drop, |d| midranks from the distinct-value
-    cumulative window, doubled-rank sums exact in DECIMAL(38,0)."""
-    from area_etl_spark.operators.experiments import wilcoxon_signed_rank
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_custkey", "o_orderdate", "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    pairs = o.groupBy("o_custkey").agg(
-        F.min(F.struct("o_orderdate", "o_orderkey", "cents"))
-        .getField("cents")
-        .alias("first_cents"),
-        F.max(F.struct("o_orderdate", "o_orderkey", "cents"))
-        .getField("cents")
-        .alias("last_cents"),
-    )
-    return wilcoxon_signed_rank(pairs, "last_cents", "first_cents")
-
-
-def q_fisher_exact(spark, sf_dir):
-    """Fisher's exact test: is the BUILDING market segment independent of a
-    negative account balance?  No factorials — the hypergeometric pmf walks
-    its support by the exact-integer ratio recurrence, one window cumsum of
-    ln ratios in k order, scipy's two-sided as-or-less-probable rule."""
-    from area_etl_spark.operators.experiments import fisher_exact_2x2
-
-    c = _tables(spark, sf_dir)["customer"]
-    return fisher_exact_2x2(
-        c,
-        F.col("c_mktsegment") == "BUILDING",
-        F.col("c_acctbal") < 0,
-    )
-
-
-def q_cohens_effect(spark, sf_dir):
-    """Cohen's d / Hedges' g between URGENT and LOW priority order values —
-    the effect-size companion to the significance family: exact integer
-    (n, Σv, Σv²) per group in one aggregate, closed form at the end."""
-    from area_etl_spark.operators.experiments import cohens_effect_sizes
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return cohens_effect_sizes(o, "o_orderpriority", "cents", "1-URGENT", "5-LOW")
-
-
-def q_cramers_v(spark, sf_dir):
-    """Cramér's V for order priority × order status — chi-square's [0,1]
-    effect size via the observed-cells-only identity χ² = Σ n·o²/(r_t·c_t) − n,
-    every numerator an exact DECIMAL, cells folded in sorted order."""
-    from area_etl_spark.operators.experiments import cramers_v
-
-    o = _tables(spark, sf_dir)["orders"]
-    return cramers_v(o, "o_orderpriority", "o_orderstatus")
-
-
-def q_bradley_terry(spark, sf_dir):
-    """Bradley–Terry strengths of part brands from within-order quantity
-    'matches' (higher quantity wins the pair) — 5 Hunter MM iterations,
-    every float a sorted fold; the arena-leaderboard aggregation."""
-    from area_etl_spark.operators.ranking import bradley_terry
-
-    t = _tables(spark, sf_dir)
-    li = (
-        t["lineitem"]
-        .join(t["part"], F.col("l_partkey") == F.col("p_partkey"))
-        .select(
-            F.col("l_orderkey").alias("o"),
-            F.col("l_linenumber").alias("ln"),
-            F.col("p_brand").alias("b"),
-            F.col("l_quantity").cast("long").alias("q"),
-        )
-    )
-    x = li.select(
-        F.col("o").alias("oa"), F.col("ln").alias("lna"),
-        F.col("b").alias("ba"), F.col("q").alias("qa"),
-    )
-    y = li.select(
-        F.col("o").alias("ob"), F.col("ln").alias("lnb"),
-        F.col("b").alias("bb"), F.col("q").alias("qb"),
-    )
-    ms = (
-        x.join(y, (F.col("oa") == F.col("ob")) & (F.col("lna") < F.col("lnb")))
-        .where((F.col("ba") != F.col("bb")) & (F.col("qa") != F.col("qb")))
-        .select(
-            F.when(F.col("qa") > F.col("qb"), F.col("ba"))
-            .otherwise(F.col("bb"))
-            .alias("w"),
-            F.when(F.col("qa") > F.col("qb"), F.col("bb"))
-            .otherwise(F.col("ba"))
-            .alias("l"),
-        )
-    )
-    return bradley_terry(ms, "w", "l", iterations=5)
-
-
-def q_group_sequential(spark, sf_dir):
-    """Group-sequential A/B monitoring over yearly looks: cumulative
-    two-proportion z per look vs the published O'Brien–Fleming and
-    Pocock boundary tables (two-sided α=0.05) — peeking-safe readouts."""
-    from area_etl_spark.operators.experiments import group_sequential_looks
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        F.year(F.col("o_orderdate").cast("date")).alias("look"),
-        F.when(F.pmod(F.col("o_custkey"), F.lit(2)) == 0, F.lit("even"))
-        .otherwise(F.lit("odd"))
-        .alias("arm"),
-        (F.col("o_totalprice") > 150000).alias("ok"),
-    )
-    return group_sequential_looks(o, "look", "arm", "ok")
-
-
-def q_disproportionality(spark, sf_dir):
-    """PRR/ROR disproportionality of short documents per source — which
-    sources are over-represented among quality failures; exact 2×2
-    integer counts, Evans signal rule (PRR ≥ 2, a ≥ 3)."""
-    from area_etl_spark.operators.quality import disproportionality
-
-    d = _tables(spark, sf_dir)["documents"].select(
-        "source", (F.col("n_chars") < 200).alias("short")
-    )
-    return disproportionality(d, "source", "short")
-
-
-def q_hurst_exponent(spark, sf_dir):
-    """Classical R/S Hurst exponent of the daily order-count series —
-    per-block R·s and S·s exact over DECIMAL integers, one sqrt + one
-    division per block, ln-ln OLS slope across dyadic block sizes."""
-    from area_etl_spark.operators.windows import hurst_exponent
-
-    daily = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date")
-            ).alias("d")
-        )
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    return hurst_exponent(daily, "d", "v", (8, 16, 32, 64))
-
-
-def q_welch_ttest(spark, sf_dir):
-    """Welch's unequal-variance t-test on the even/odd customer balance
-    split: exact per-arm DECIMAL sums, Welch–Satterthwaite df, portable
-    large-df normal tail (documented approximation)."""
-    from area_etl_spark.operators.experiments import welch_ttest
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.when(F.pmod(F.col("c_custkey"), F.lit(2)) == 0, F.lit("even"))
-        .otherwise(F.lit("odd"))
-        .alias("arm"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
-    return welch_ttest(c, "arm", "cents")
-
-
-def q_hodges_lehmann(spark, sf_dir):
-    """Hodges–Lehmann location estimate of the monthly order-count
-    series — the median of all Walsh averages via the rank self-join +
-    exact array-median idiom (bounded series grain)."""
-    from area_etl_spark.operators.experiments import hodges_lehmann
-
-    ser = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("t"))
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    return hodges_lehmann(ser, "v")
-
-
-def q_forecast_accuracy(spark, sf_dir):
-    """MAE/RMSE/MAPE/sMAPE/MASE scorecard of a seasonal-naive (lag-7)
-    forecast of the daily order count — exact DECIMAL error sums, float
-    only in the per-row MAPE/sMAPE terms on one ordered window."""
-    from pyspark.sql import Window as W
-
-    from area_etl_spark.operators.windows import forecast_accuracy
-
-    daily = (
-        _tables(spark, sf_dir)["orders"]
-        .groupBy(
-            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date")).alias("d")
-        )
-        .agg(F.count(F.lit(1)).alias("a"))
-    )
-    fc = daily.select(
-        "d", "a", F.lag("a", 7).over(W.orderBy("d")).alias("f")
-    ).where(F.col("f").isNotNull())
-    return forecast_accuracy(fc, "d", "a", "f")
-
-
-def q_tokenizer_fertility(spark, sf_dir):
-    """Per-language tokenizer fertility (sub-word tokens per whitespace
-    word) and chars-per-subtoken from the GPT-2-shaped pre-tokenizer
-    counts — exact integer sums, two divisions."""
-    from area_etl_spark.operators.text_analysis import tokenizer_fertility
-
-    return tokenizer_fertility(_tables(spark, sf_dir)["documents"])
-
-
-def q_adamic_adar(spark, sf_dir):
-    """Adamic–Adar + resource-allocation link prediction over the same
-    user↔item bipartite graph as link_prediction — each shared neighbor
-    weighted down by its degree (1/ln deg, 1/deg), weight sums folded in
-    sorted middle order.  Item-item side kept.
-
-    The checked shape IS the scale-safe shape (VERDICT r12 item 3): the
-    wedge join is O(Σ deg(m)²), so hub middles above ``max_middle_degree``
-    (the operator's default 1000 — 'everyone bought the bestseller'
-    stopword nodes) are excluded from wedge generation with a documented
-    recall tradeoff; the oracle mirrors the cap."""
-    from area_etl_spark.operators.graph import adamic_adar_scores
-
-    ev = _tables(spark, sf_dir)["events"]
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        (F.lit(10_000_000) + F.col("event_id") % 500).alias("dst"),
-    ).distinct()
-    scored = adamic_adar_scores(edges, min_common=2, max_middle_degree=1000)
-    return scored.where(F.col("u") >= 10_000_000)
-
-
-def q_dedup_threshold_curve(spark, sf_dir):
-    """Jaccard-threshold sweep for near-dedup tuning: one exact shared-
-    gram similarity pass feeds every cutoff; qualification is the integer
-    cross-multiplication 100·|∩| ≥ t·|∪|, so the whole curve is exact."""
-    from area_etl_spark.operators.dedup import dedup_threshold_curve
-
-    d = _tables(spark, sf_dir)["documents"]
-    return dedup_threshold_curve(d, thresholds_pct=(50, 60, 70, 80, 90))
-
-
-def q_bcubed_eval(spark, sf_dir):
-    """B³ precision/recall/F1 of a whitespace/case-normalized exact-dedup
-    clustering against raw exact-duplicate gold clusters — the final-
-    clustering quality gauge one level above dedup_candidate_eval's pair
-    harness.  Contingency-table form: no item×item join."""
-    from area_etl_spark.operators.dedup import bcubed_eval
-
-    d = _tables(spark, sf_dir)["documents"].select(
-        "doc_id",
-        F.md5(
-            F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-        ).alias("pred"),
-        F.md5(F.col("text")).alias("gold"),
-    )
-    return bcubed_eval(d, "doc_id", "pred", "gold")
-
-
-def q_hhi_concentration(spark, sf_dir):
-    """Revenue-concentration HHI per market segment: per-customer exact
-    DECIMAL revenue sums, HHI = Σv²/V² as two exact integers and one
-    division, CR4 via a PARTITIONED top-k window."""
-    from area_etl_spark.operators.business import hhi_concentration
-
-    t = _tables(spark, sf_dir)
-    df = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("c_custkey").alias("cust"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-    )
-    return hhi_concentration(df, "segment", "cust", "cents", top_k=4)
-
-
-def q_abc_classification(spark, sf_dir):
-    """ABC / Pareto classes of customer revenue within each nation —
-    integer cross-multiplied cum-share boundaries (cum·100 ≤ pct·total),
-    partitioned rank window, (value desc, entity asc) tie-break."""
-    from area_etl_spark.operators.business import abc_classification
-
-    t = _tables(spark, sf_dir)
-    df = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            F.col("c_nationkey").alias("nation"),
-            F.col("c_custkey").alias("cust"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-    )
-    return abc_classification(df, "nation", "cust", "cents")
-
-
-def q_jarque_bera(spark, sf_dir):
-    """Jarque–Bera normality test on customer balance cents: skewness and
-    kurtosis from pivot-centered exact DECIMAL power sums, JB ~ chi2 df=2
-    whose survival is the CLOSED FORM exp(-JB/2) — an exact p-value."""
-    from area_etl_spark.operators.experiments import jarque_bera
-
-    c = _tables(spark, sf_dir)["customer"].select(
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents")
-    )
-    return jarque_bera(c, "cents")
-
-
-def q_mann_kendall(spark, sf_dir):
-    """Mann–Kendall trend significance on the monthly revenue series —
-    the non-parametric companion to theil_sen: exact integer S and
-    tie-corrected Var(S), continuity-corrected z, portable normal tail."""
-    from area_etl_spark.operators.experiments import mann_kendall
-
-    o = _tables(spark, sf_dir)["orders"].select(
-        F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("t"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    ser = o.groupBy("t").agg(F.sum("cents").alias("v"))
-    return mann_kendall(ser, "t", "v")
-
-
-# ---------------------------------------------------------------------------
-# Driver correctness window (round 10)
-# ---------------------------------------------------------------------------
-# The driver checks the FIRST 50 queries() entries.  VERDICT r9 items 1+3:
-# (1) target_encode_loo — the one driver-red key, now restructured to the
-# single exact-integer division — re-enters the window FIRST for its
-# re-green; (3) the rest of the window is the 42-key _R10_QUEUE backlog plus
-# the most load-bearing never-checked r9 keys.  Items 1 and 3 together name
-# 51 keys for 50 slots, so the least LLM-load-bearing of the prescribed
-# eight r9 promotions (fifo_cost_basis) waits at the head of _R11_QUEUE.
-# compression_ratio (in the queue) is rows-only by design (zlib bytes are
-# per-build; the value oracle is the exact-zlib pytest) — it occupies its
-# slot to collect the rows-only CORRECTNESS row, the stratified_sample_by
-# precedent from r9.
-_R10_WINDOW = [
-    # — the r9 driver-red key, fixed (exact single division), re-windowed —
-    "target_encode_loo",
-    # — the 42-key never-driver-checked backlog queued at r9 close —
-    "standardized_rates",
-    "mask_columns",
-    "stickiness",
-    "fd_violations",
-    "parse_xml",
-    "personalized_pagerank",
-    "link_prediction",
-    "collocations",
-    "growth_accounting",
-    "log2_histogram",
-    "checksum_drilldown",
-    "manifest_pruned_read",
-    "l_diversity",
-    "kmv_overlap",
-    "compression_ratio",
-    "repair_monotonic",
-    "counter_increase",
-    "diff_in_diff",
-    "subset_closure",
-    "interpolate_linear",
-    "collapse_rare_levels",
-    "fdr_bh",
-    "cohen_kappa",
-    "matched_pairs",
-    "trimmed_mean",
-    "nb_classify",
-    "zipf_fit",
-    "ipf_raking",
-    "ann_recall_eval",
-    "hybrid_search_rrf",
-    "rendezvous_assign",
-    "modularity",
-    "calibration_curve",
-    "psi_drift",
-    "good_turing",
-    "classification_report",
-    "roc_auc",
-    "pool_embeddings",
-    "quantile_ci",
-    "stratified_ate",
-    "geohash_cells",
-    "ip_networks",
-    # — the 7 most load-bearing never-checked r9 keys (VERDICT r9 item 3) —
-    "tfidf_cosine",
-    "hll_distinct",
-    "quantile_treatment_effect",
-    "rake_keyphrases",
-    "mix_shift",
-    "containment_pairs",
-    "dsir_weights",
-]
-
-# Never-driver-checked keys left for round 11's window: fifo_cost_basis (the
-# eighth r9 promotion that didn't fit), then the remaining r9 registrations
-# in registration order, then the r10 additions (all judge-gated at
-# sf0.001/0.01/0.1 with dtype parity this round).
-_R11_QUEUE = [
-    "fifo_cost_basis",
-    "woe_iv",
-    "one_hot_segment",
-    "lift_gain",
-    "dag_layers",
-    "shortest_paths",
-    "max_concurrency",
-    "t_closeness",
-    "theil_sen",
-    "acf_lags",
-    "holt_brown",
-    "bitemporal_asof",
-    "dedup_soft_weights",
-    "nelson_aalen",
-    "sprt_ab",
-    "power_two_proportions",
-    "fifo_open_lots",
-    # — r10 additions —
-    "containment_blocked",
-    "theil_sen_bounded",
-    "retrieval_eval",
-    "dedup_candidate_eval",
-    "semdedup",
-    "gopher_rules",
-]
-
-# ---------------------------------------------------------------------------
-# Driver correctness window (round 11)
-# ---------------------------------------------------------------------------
-# VERDICT r10 item 1: the r11 window is the 23-key _R11_QUEUE (every
-# remaining never-driver-checked key) + the 27 OLDEST stale greens: the 4
-# r2-latest keys and 23 of the 26 r3-latest keys (CORRECTNESS_r02/r03),
-# whose operators have been refactored for 7+ rounds since last checked.
-# The 4 r2-stalest keys are exactly the by-design rows-only dedup keys
-# (seeded xxhash64 — no DuckDB hash equivalent), so the expected ledger is
-# 46 green + 4 rows-only + 0 fail; each rows-only slot is value-verified by
-# its driver-green portable md5 twin (dedup_minhash_portable /
-# dedup_simhash_portable / dedup_jaccard_portable / dedup_pipeline_portable)
-# and the re-check proves the refactored fast paths still execute and emit
-# rows at the driver.  The 3 deferred r3 keys (groupby_agg, tpch_q3ish,
-# tpch_q5ish) are exercised by the driver's BENCH run every round — the
-# least-risky deferrals — and head _R12_QUEUE.
-_R11_WINDOW = [
-    *_R11_QUEUE,
-    # — r2-latest stale (rows-only by design, twins driver-green) —
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_full_pipeline",
-    # — r3-latest stale greens (23 of 26; re-check after 7 rounds of drift) —
-    "anti_semi_join",
-    "emb_cosine_pairs_exact",
-    "export_jsonl_roundtrip",
-    "groupby_cube",
-    "groupby_rollup",
-    "multiway_left_join",
-    "percentile_agg",
-    "pipeline_auac",
-    "pipeline_core",
-    "pipeline_cronos",
-    "pipeline_districts",
-    "pipeline_resolutions",
-    "pipeline_specialties",
-    "profile_table",
-    "regex_extract",
-    "role_permissions_fanout",
-    "sample_hash",
-    "scd2_intervals",
-    "string_agg",
-    "text_pii_redact",
-    "text_repetition",
-    "text_topk_terms",
-    "window_rank_funcs",
-]
-
-# Stale-green keys deferred from the r11 window (bench-exercised every
-# round), then every key registered during r11 — first the r11 opening
-# batch, then the r11b second-session registrations (all judge-gated
-# locally at sf0.001/0.01/0.1 on registration).  63 keys: the r12 window
-# takes the 50 in _R12_WINDOW below and the 13-key overflow heads _R13
-# (overflow picked = the most property-tested r11b tail keys, least
-# likely to drift unchecked; the five operators the r12 ADVICE pass
-# touched — durbin_watson, conformal_interval, ece_brier, srm_check,
-# qini_curve — are all pulled INTO the window so the driver validates
-# the fixes this round).
-_R12_QUEUE = [
-    "groupby_agg",
-    "tpch_q3ish",
-    "tpch_q5ish",
-    # — r11 registrations (never driver-checked; judge-gated locally) —
-    "roc_auc_quantized",
-    "warc_roundtrip",
-    "language_id_trained",
-    "luhn_card_scan",
-    "multimodal_quarantine_report",
-    "holm_bonferroni",
-    "randomization_test",
-    "isotonic_calibration",
-    "mantel_haenszel",
-    "mcnemar_langid",
-    "trend_test",
-    "ntile_scalable",
-    "spearman_corr",
-    "kruskal_wallis",
-    "js_divergence",
-    # — r11 second-session registrations (classical-stats completions) —
-    "anova_oneway",
-    "levene_test",
-    "wilcoxon_signed_rank",
-    "fisher_exact",
-    "cohens_effect",
-    "cramers_v",
+# The driver checks the first 50 queries() entries; these are the 50 it checked last.
+DRIVER_WINDOW = [
     "seasonal_decompose",
     "rsi_cutler",
     "bollinger_bands",
-    "query_likelihood",
-    "kneser_ney",
-    "hits_scores",
-    "dp_noisy_counts",
-    "decision_stump",
-    "point_in_polygon",
-    "ransac_line",
-    "bayes_ab_beta",
-    "cochran_q",
-    "friedman_test",
-    "logrank_test",
-    "partial_corr",
-    "durbin_watson",
-    "ljung_box",
     "haar_transform",
-    "granger_causality",
-    "mmr_diversify",
-    "reg_discontinuity",
-    "ipw_ate",
-    "fe_within",
-    "kendall_tau",
-    "theil_u",
-    "novelty_score",
-    "term_burstiness",
-    "heaps_law",
-    "conformal_interval",
-    "ece_brier",
-    "pacf_lags",
-    "seasonal_strength",
-    "srm_check",
-    "power_two_means",
-    "qini_curve",
-    "krippendorff_alpha",
-    "page_hinkley",
-    "newey_west",
-    "cliff_delta",
-]
-
-# The 13-key r12 overflow (re-windowed first in r13), then every key
-# registered during r12, in registration order.
-_R13_QUEUE = [
     "fe_within",
     "kendall_tau",
     "theil_u",
@@ -8532,7 +35,6 @@ _R13_QUEUE = [
     "page_hinkley",
     "newey_west",
     "cliff_delta",
-    # — r12 registrations (judge-gated locally at registration) —
     "jarque_bera",
     "mann_kendall",
     "hhi_concentration",
@@ -8560,12067 +62,27 @@ _R13_QUEUE = [
     "overdispersion_check",
     "sbg_retention",
     "language_purity",
-]
-
-# The r12 driver window: the _R12_QUEUE minus the 13 deferred keys.
-_R12_WINDOW = [k for k in _R12_QUEUE if k not in set(_R13_QUEUE)]
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-
-# r13 regression slots: the four r12 dtype hash-fails, re-sampled FIRST this
-# round after the timestamp/BIGINT parity fixes (VERDICT r12 item 1; the
-# fifth latent break, eb_shrinkage, already sits inside _R13_QUEUE).
-_R13_REGRESSION = [
-    "seasonal_decompose",
-    "rsi_cutler",
-    "bollinger_bands",
-    "haar_transform",
-]
-
-# New r13 registrations (appended as they land; the window is
-# _R13_REGRESSION + _R13_QUEUE + _R13_NEW, padded from _R12_WINDOW).
-_R13_NEW = [
     "business_days_holidays",
     "html_main_text",
     "html_extract_links",
     "vat_checksum_scan",
     "iban_checksum_scan",
     "iban_redaction",
-    # overflow past the 50-slot window: judge-gated at registration, r14
-    # rotation fodder (the r11b-deferral precedent).  The r14 window should
-    # lead with everything from here down (13 keys, none ever
-    # driver-sampled), padded from the freshly-green r13 window.
-    "robots_url_filter",
-    "mojibake_repair",
-    "cf_checksum_scan",
-    "code_detect",
-    "anchor_text_agg",
-    "embedding_anisotropy",
-    "embedding_whiten",
-    "periodogram",
-    "fs_em_weights",
-    "crawl_funnel_pipeline",
-    "cooccurrence_pairs",
-    "hyperball_neighborhood",
-    "local_clustering",
-    "bot_traffic",
 ]
 
-# Historical r9 window (kept for the rotation audit trail; every key in it
-# now holds a driver CORRECTNESS_r09 row).
-_R9_WINDOW = [
-    # — r7-era stragglers (never driver-checked compositions) —
-    "session_paths",
-    "ltv_curve",
-    "decline_streaks",
-    "session_quality_report",
-    "share_of_parent",
-    "time_in_state",
-    "stratified_sample_by",
-    # — LLM-brief load-bearing r8 operators —
-    "jaccard_prefix_join",
-    "remove_duplicate_spans",
-    "bpe_merges",
-    "bpe_segment",
-    "select_under_budget",
-    "feature_matrix",
-    "mutual_information",
-    "ks_test",
-    "label_propagation",
-    "kcore",
-    "ivm_agg_update",
-    "versioned_roundtrip",
-    "merge_conditional",
-    "apply_cdc_log",
-    "bloom_prune",
-    "cms_heavy_hitters",
-    "kmv_distinct",
-    # — fill: remaining never-checked r8 keys, registration order —
-    "attribution_time_decay",
-    "km_survival",
-    "cascade_delete",
-    "quantile_normalize",
-    "seasonal_anomaly",
-    "parse_json_quarantine",
-    "sequence_match",
-    "agg_state_merge",
-    "max_drawdown",
-    "clamped_balance",
-    "burst_detection",
-    "minmax_scale",
-    "mann_whitney",
-    "kfold_assign",
-    "balance_classes",
-    "feature_hash",
-    "target_encode_loo",
-    "expectation_suite",
-    "changepoint",
-    "degree_distribution",
-    "strip_html",
-    "split_sentences",
-    "parse_money",
-    "business_days",
-    "score_linear",
-    "jl_project",
-]
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship query (core pipeline star join + rollup) on sf0.001."""
+    tables = _tables(spark, "/root/testdata/sf0.001")
+    return P.core_pipeline(tables)
+
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registered operators, reordered so the driver's 50-slot correctness
-    window (the FIRST 50 entries) is exactly the round-13 rotation
-    (VERDICT r12 items 1–2): the four r12 dtype hash-fails re-sampled after
-    their parity fixes, then the 40-key _R13_QUEUE (13 r11b deferrals + 27
-    r12 registrations, none yet driver-sampled), then new r13 registrations,
-    padded from the freshly-green _R12_WINDOW; already-driver-green keys
-    follow in their original registration order."""
-    reg = _queries_registry()
-    ordered = [*_R13_REGRESSION, *_R13_QUEUE, *_R13_NEW, *_R12_WINDOW,
-               *_R11_WINDOW]
-    seen = set(ordered)
-    missing = [k for k in ordered if k not in reg]
-    assert not missing, f"window/queue keys not registered: {missing}"
-    out = {k: reg[k] for k in ordered}
-    out.update({k: v for k, v in reg.items() if k not in seen})
-    return out
-
-
-def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (registration
-    order; window ordering is applied by queries() above).
-
-    Round-8 rotation (VERDICT r7 items 1–2): the window is exactly the keys
-    with no driver green yet — vocab_encode (the r7 err, its token_ids array
-    now CSV-serialized on both engine sides), the three new auac 1:1
-    recasts (requirement_taxonomies / requirement_lists / procedures,
-    VERDICT items 3–4), embedding_quantize (schema-audit fix: q8 array →
-    q8_csv), and 45 of the 52 r7 additions the judge verified via the local
-    gate but the driver never windowed.  Six compositions whose machinery
-    already holds driver greens through other keys (ltv_curve,
-    session_paths, session_quality_report, decline_streaks, time_in_state,
-    share_of_parent) sit immediately below the window as the r9 rotation.
-    The full r7 window (49/50 green on current testdata) follows, then the
-    earlier greens; the rows-only dedup_minhash_lsh stays out of the window
-    (test_driver_window_fully_oracled enforces this).
-
-    Below the window sit the r8-built additions as r9 window candidates —
-    all locally gated at sf0.001 AND sf0.01 AND sf0.1 with dtype parity:
-    remove_duplicate_spans, apply_cdc_log, seasonal_anomaly,
-    parse_json_quarantine, sequence_match, agg_state_merge, max_drawdown,
-    clamped_balance, burst_detection, minmax_scale, mann_whitney,
-    versioned_roundtrip, kfold_assign, balance_classes, feature_hash,
-    target_encode_loo, expectation_suite, changepoint,
-    degree_distribution, kcore, strip_html, split_sentences, parse_money,
-    business_days, score_linear, jl_project, standardized_rates,
-    merge_conditional, mask_columns, stickiness, fd_violations,
-    feature_matrix, parse_xml, personalized_pagerank, link_prediction,
-    collocations, plus the five committed earlier this round
-    (attribution_time_decay, km_survival, cascade_delete,
-    jaccard_prefix_join, quantile_normalize), and the r8-session batch:
-    growth_accounting, log2_histogram, checksum_drilldown, bloom_prune,
-    cms_heavy_hitters, ivm_agg_update, manifest_pruned_read, bpe_merges,
-    bpe_segment, kmv_distinct, l_diversity, kmv_overlap,
-    compression_ratio (rows-only by design: zlib), repair_monotonic,
-    counter_increase, diff_in_diff, select_under_budget, subset_closure,
-    interpolate_linear, collapse_rare_levels, and the late-r8 batch:
-    fdr_bh, cohen_kappa, matched_pairs, trimmed_mean, nb_classify,
-    zipf_fit, ipf_raking, ann_recall_eval, hybrid_search_rrf,
-    label_propagation, rendezvous_assign, modularity, calibration_curve,
-    psi_drift, good_turing, classification_report, roc_auc,
-    pool_embeddings.
-    """
-    return {
-        # — the r7 err, fixed: CSV-serialized array, re-windowed for green —
-        "vocab_encode": q_vocab_encode,
-        # — new r8: the last three auac 1:1 recasts —
-        "pipeline_requirement_taxonomies": q_pipeline_requirement_taxonomies,
-        "pipeline_requirement_lists": q_pipeline_requirement_lists,
-        "pipeline_procedures": q_pipeline_procedures,
-        # — r8 rotation: r7 additions never driver-windowed (judge-verified
-        #   at the local gate; this puts them under the hard signal) —
-        "rolling_distinct_users": q_rolling_distinct_users,
-        "or_join": q_or_join,
-        "json_flatten": q_json_flatten,
-        "bitmap_distinct": q_bitmap_distinct,
-        "golden_record": q_golden_record,
-        "allocate_budget": q_allocate_budget,
-        "k_anonymity": q_k_anonymity,
-        "weighted_median": q_weighted_median,
-        "gini_concentration": q_gini_concentration,
-        "rolling_corr": q_rolling_corr,
-        "cusum_drift": q_cusum_drift,
-        "url_canonical_dedup": q_url_canonical_dedup,
-        "readability": q_readability,
-        "negative_sampling": q_negative_sampling,
-        "score_calibration": q_score_calibration,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "linkage_classify": q_linkage_classify,
-        "interval_overlap": q_interval_overlap,
-        "bootstrap_ci": q_bootstrap_ci,
-        "keyness_top_terms": q_keyness_top_terms,
-        "ewma_smooth": q_ewma_smooth,
-        "fk_orphans": q_fk_orphans,
-        "date_dimension": q_date_dimension,
-        "join_size_estimate": q_join_size_estimate,
-        "domain_capped_corpus": q_domain_capped_corpus,
-        "id_gap_report": q_id_gap_report,
-        "keyword_tagging": q_keyword_tagging,
-        "cuped_adjustment": q_cuped_adjustment,
-        "mdm_golden_pipeline": q_mdm_golden_pipeline,
-        "revenue_bridge": q_revenue_bridge,
-        "rfm_segments": q_rfm_segments,
-        "drift_chi2": q_drift_chi2,
-        "knn_classify": q_knn_classify,
-        "embedding_dim_stats": q_embedding_dim_stats,
-        # — schema-audit fix (array output → CSV), needs a driver green —
-        "embedding_quantize": q_embedding_quantize,
-        # — remaining never-windowed r7 additions —
-        "asof_forward": q_asof_forward,
-        "ohlc_bars": q_ohlc_bars,
-        "fixed_width_roundtrip": q_fixed_width_roundtrip,
-        "phrase_search": q_phrase_search,
-        "table_checksum": q_table_checksum,
-        "group_sample_n": q_group_sample_n,
-        "priority_sample_grouped": q_priority_sample_grouped,
-        "waterfall_join": q_waterfall_join,
-        "interval_integrity": q_interval_integrity,
-        "bom_explosion": q_bom_explosion,
-        "pseudonymize_events": q_pseudonymize_events,
-        # —— driver window ends here (first 50) ——
-        # — r9 window candidates: never driver-checked compositions whose
-        #   machinery holds driver greens via other keys —
-        "ltv_curve": q_ltv_curve,
-        "session_paths": q_session_paths,
-        "session_quality_report": q_session_quality_report,
-        "decline_streaks": q_decline_streaks,
-        "time_in_state": q_time_in_state,
-        "share_of_parent": q_share_of_parent,
-        # — new r8 operators (r9 window candidates; local gate + all-SF
-        #   parity verified) —
-        "attribution_time_decay": q_attribution_time_decay,
-        "km_survival": q_km_survival,
-        "cascade_delete": q_cascade_delete,
-        "jaccard_prefix_join": q_jaccard_prefix_join,
-        "quantile_normalize": q_quantile_normalize,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
-        "apply_cdc_log": q_apply_cdc_log,
-        "seasonal_anomaly": q_seasonal_anomaly,
-        "parse_json_quarantine": q_parse_json_quarantine,
-        "sequence_match": q_sequence_match,
-        "agg_state_merge": q_agg_state_merge,
-        "max_drawdown": q_max_drawdown,
-        "clamped_balance": q_clamped_balance,
-        "burst_detection": q_burst_detection,
-        "minmax_scale": q_minmax_scale,
-        "mann_whitney": q_mann_whitney,
-        "versioned_roundtrip": q_versioned_roundtrip,
-        "kfold_assign": q_kfold_assign,
-        "balance_classes": q_balance_classes,
-        "feature_hash": q_feature_hash,
-        "target_encode_loo": q_target_encode_loo,
-        "expectation_suite": q_expectation_suite,
-        "changepoint": q_changepoint,
-        "degree_distribution": q_degree_distribution,
-        "kcore": q_kcore,
-        "strip_html": q_strip_html,
-        "split_sentences": q_split_sentences,
-        "parse_money": q_parse_money,
-        "business_days": q_business_days,
-        "business_days_holidays": q_business_days_holidays,
-        "html_main_text": q_html_main_text,
-        "html_extract_links": q_html_extract_links,
-        "vat_checksum_scan": q_vat_checksum_scan,
-        "iban_checksum_scan": q_iban_checksum_scan,
-        "iban_redaction": q_iban_redaction,
-        "robots_url_filter": q_robots_url_filter,
-        "mojibake_repair": q_mojibake_repair,
-        "cf_checksum_scan": q_cf_checksum_scan,
-        "code_detect": q_code_detect,
-        "anchor_text_agg": q_anchor_text_agg,
-        "embedding_anisotropy": q_embedding_anisotropy,
-        "embedding_whiten": q_embedding_whiten,
-        "periodogram": q_periodogram,
-        "fs_em_weights": q_fs_em_weights,
-        "crawl_funnel_pipeline": q_crawl_funnel_pipeline,
-        "cooccurrence_pairs": q_cooccurrence_pairs,
-        "hyperball_neighborhood": q_hyperball_neighborhood,
-        "local_clustering": q_local_clustering,
-        "bot_traffic": q_bot_traffic,
-        "score_linear": q_score_linear,
-        "jl_project": q_jl_project,
-        "standardized_rates": q_standardized_rates,
-        "merge_conditional": q_merge_conditional,
-        "mask_columns": q_mask_columns,
-        "stickiness": q_stickiness,
-        "fd_violations": q_fd_violations,
-        "feature_matrix": q_feature_matrix,
-        "parse_xml": q_parse_xml,
-        "personalized_pagerank": q_personalized_pagerank,
-        "link_prediction": q_link_prediction,
-        "collocations": q_collocations,
-        "growth_accounting": q_growth_accounting,
-        "log2_histogram": q_log2_histogram,
-        "checksum_drilldown": q_checksum_drilldown,
-        "bloom_prune": q_bloom_prune,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "ivm_agg_update": q_ivm_agg_update,
-        "manifest_pruned_read": q_manifest_pruned_read,
-        "bpe_merges": q_bpe_merges,
-        "bpe_segment": q_bpe_segment,
-        "kmv_distinct": q_kmv_distinct,
-        "l_diversity": q_l_diversity,
-        "kmv_overlap": q_kmv_overlap,
-        "compression_ratio": q_compression_ratio,
-        "repair_monotonic": q_repair_monotonic,
-        "counter_increase": q_counter_increase,
-        "diff_in_diff": q_diff_in_diff,
-        "select_under_budget": q_select_under_budget,
-        "subset_closure": q_subset_closure,
-        "interpolate_linear": q_interpolate_linear,
-        "collapse_rare_levels": q_collapse_rare_levels,
-        "fdr_bh": q_fdr_bh,
-        "holm_bonferroni": q_holm_bonferroni,
-        "randomization_test": q_randomization_test,
-        "cohen_kappa": q_cohen_kappa,
-        "matched_pairs": q_matched_pairs,
-        "trimmed_mean": q_trimmed_mean,
-        "nb_classify": q_nb_classify,
-        "language_id_trained": q_language_id_trained,
-        "luhn_card_scan": q_luhn_card_scan,
-        "multimodal_quarantine_report": q_multimodal_quarantine_report,
-        "zipf_fit": q_zipf_fit,
-        "ipf_raking": q_ipf_raking,
-        "ann_recall_eval": q_ann_recall_eval,
-        "hybrid_search_rrf": q_hybrid_search_rrf,
-        "label_propagation": q_label_propagation,
-        "rendezvous_assign": q_rendezvous_assign,
-        "modularity": q_modularity,
-        "calibration_curve": q_calibration_curve,
-        "isotonic_calibration": q_isotonic_calibration,
-        "mantel_haenszel": q_mantel_haenszel,
-        "mcnemar_langid": q_mcnemar_langid,
-        "trend_test": q_trend_test,
-        "ntile_scalable": q_ntile_scalable,
-        "spearman_corr": q_spearman_corr,
-        "kruskal_wallis": q_kruskal_wallis,
-        "anova_oneway": q_anova_oneway,
-        "levene_test": q_levene_test,
-        "wilcoxon_signed_rank": q_wilcoxon_signed_rank,
-        "fisher_exact": q_fisher_exact,
-        "cohens_effect": q_cohens_effect,
-        "cramers_v": q_cramers_v,
-        "seasonal_decompose": q_seasonal_decompose,
-        "rsi_cutler": q_rsi_cutler,
-        "bollinger_bands": q_bollinger_bands,
-        "query_likelihood": q_query_likelihood,
-        "kneser_ney": q_kneser_ney,
-        "hits_scores": q_hits_scores,
-        "dp_noisy_counts": q_dp_noisy_counts,
-        "decision_stump": q_decision_stump,
-        "point_in_polygon": q_point_in_polygon,
-        "ransac_line": q_ransac_line,
-        "bayes_ab_beta": q_bayes_ab_beta,
-        "cochran_q": q_cochran_q,
-        "friedman_test": q_friedman_test,
-        "logrank_test": q_logrank_test,
-        "partial_corr": q_partial_corr,
-        "durbin_watson": q_durbin_watson,
-        "ljung_box": q_ljung_box,
-        "haar_transform": q_haar_transform,
-        "granger_causality": q_granger_causality,
-        "mmr_diversify": q_mmr_diversify,
-        "reg_discontinuity": q_reg_discontinuity,
-        "ipw_ate": q_ipw_ate,
-        "fe_within": q_fe_within,
-        "kendall_tau": q_kendall_tau,
-        "theil_u": q_theil_u,
-        "novelty_score": q_novelty_score,
-        "term_burstiness": q_term_burstiness,
-        "heaps_law": q_heaps_law,
-        "conformal_interval": q_conformal_interval,
-        "ece_brier": q_ece_brier,
-        "pacf_lags": q_pacf_lags,
-        "seasonal_strength": q_seasonal_strength,
-        "srm_check": q_srm_check,
-        "power_two_means": q_power_two_means,
-        "qini_curve": q_qini_curve,
-        "krippendorff_alpha": q_krippendorff_alpha,
-        "page_hinkley": q_page_hinkley,
-        "newey_west": q_newey_west,
-        "cliff_delta": q_cliff_delta,
-        "jarque_bera": q_jarque_bera,
-        "mann_kendall": q_mann_kendall,
-        "hhi_concentration": q_hhi_concentration,
-        "abc_classification": q_abc_classification,
-        "bcubed_eval": q_bcubed_eval,
-        "dedup_threshold_curve": q_dedup_threshold_curve,
-        "adamic_adar": q_adamic_adar,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "forecast_accuracy": q_forecast_accuracy,
-        "ewma_control_chart": q_ewma_control_chart,
-        "welch_ttest": q_welch_ttest,
-        "hodges_lehmann": q_hodges_lehmann,
-        "hurst_exponent": q_hurst_exponent,
-        "group_sequential": q_group_sequential,
-        "disproportionality": q_disproportionality,
-        "bradley_terry": q_bradley_terry,
-        "km_survival_ci": q_km_survival_ci,
-        "kn_perplexity": q_kn_perplexity,
-        "asof_nearest": q_asof_nearest,
-        "vwap_bars": q_vwap_bars,
-        "anderson_darling": q_anderson_darling,
-        "twfe_estimator": q_twfe_estimator,
-        "siegel_slope": q_siegel_slope,
-        "eb_shrinkage": q_eb_shrinkage,
-        "overdispersion_check": q_overdispersion_check,
-        "sbg_retention": q_sbg_retention,
-        "language_purity": q_language_purity,
-        "psi_drift": q_psi_drift,
-        "js_divergence": q_js_divergence,
-        "good_turing": q_good_turing,
-        "classification_report": q_classification_report,
-        "roc_auc": q_roc_auc,
-        "roc_auc_quantized": q_roc_auc_quantized,
-        "pool_embeddings": q_pool_embeddings,
-        "quantile_ci": q_quantile_ci,
-        "stratified_ate": q_stratified_ate,
-        "ks_test": q_ks_test,
-        "mutual_information": q_mutual_information,
-        "geohash_cells": q_geohash_cells,
-        "ip_networks": q_ip_networks,
-        # — the r7 window: all green in CORRECTNESS_r07 on current testdata —
-        "pagerank": q_pagerank,
-        "id_normalize": q_id_normalize,
-        "enum_mapping": q_enum_mapping,
-        "text_clean": q_text_clean,
-        "year_cast": q_year_cast,
-        "datetime_normalize": q_datetime_normalize,
-        "when_then_derivation": q_when_then_derivation,
-        "dup_name_disambiguation": q_dup_name_disambiguation,
-        "union_diagonal_relaxed": q_union_diagonal_relaxed,
-        "groupby_collect_list": q_groupby_collect_list,
-        "distinct_dedup": q_distinct_dedup,
-        "projection_pipeline": q_projection_pipeline,
-        "load_roundtrip": q_load_roundtrip,
-        "export_csv_roundtrip": q_export_csv_roundtrip,
-        "text_fingerprint": q_text_fingerprint,
-        "text_token_stats": q_text_token_stats,
-        "json_extract": q_json_extract,
-        "dedup_components": q_dedup_components,
-        "text_tfidf_topk": q_text_tfidf_topk,
-        "ann_ivf_trained_topk": q_ann_ivf_trained_topk,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "multimodal_frame_sample": q_multimodal_frame_sample,
-        "funnel_conversion": q_funnel_conversion,
-        "partitioned_layout_prune": q_partitioned_layout_prune,
-        "calendar_gapfill": q_calendar_gapfill,
-        "retention_cohorts": q_retention_cohorts,
-        "first_touch_attribution": q_first_touch_attribution,
-        "monthly_revenue_rollup": q_monthly_revenue_rollup,
-        "distinct_count_skewsafe": q_distinct_count_skewsafe,
-        "bucketed_join": q_bucketed_join,
-        "range_layout_readback": q_range_layout_readback,
-        "zorder_layout_readback": q_zorder_layout_readback,
-        "compact_roundtrip": q_compact_roundtrip,
-        "file_stats_manifest": q_file_stats_manifest,
-        "pipeline_healthcare_companies": q_pipeline_healthcare_companies,
-        "pipeline_requirements": q_pipeline_requirements,
-        "contract_gate_users": q_contract_gate_users,
-        "contract_gate_requirements": q_contract_gate_requirements,
-        "vocab_build": q_vocab_build,
-        "radius_join": q_radius_join,
-        "linear_interpolate": q_linear_interpolate,
-        "ab_test_ztest": q_ab_test_ztest,
-        "parse_logs": q_parse_logs,
-        "warc_roundtrip": q_warc_roundtrip,
-        "hopping_window_agg": q_hopping_window_agg,
-        "hierarchy_paths": q_hierarchy_paths,
-        "priority_sample": q_priority_sample,
-        "pareto_frontier": q_pareto_frontier,
-        "skew_report": q_skew_report,
-        "longest_streak": q_longest_streak,
-        # — displaced rotation candidates (machinery r6-green via
-        #   compositions) —
-        "scd2_intervals": q_scd2_intervals,
-        "text_pii_redact": q_text_pii_redact,
-        "export_jsonl_roundtrip": q_export_jsonl_roundtrip,
-        "window_rank_funcs": q_window_rank_funcs,
-        "role_permissions_fanout": q_role_permissions_fanout,
-        "text_repetition": q_text_repetition,
-        "text_topk_terms": q_text_topk_terms,
-        "sample_hash": q_sample_hash,
-        "profile_table": q_profile_table,
-        "string_agg": q_string_agg,
-        "regex_extract": q_regex_extract,
-        "anti_semi_join": q_anti_semi_join,
-        "percentile_agg": q_percentile_agg,
-        "emb_cosine_pairs_exact": q_emb_cosine_pairs_exact,
-        "groupby_rollup": q_groupby_rollup,
-        "groupby_cube": q_groupby_cube,
-        # — r2+r3 doubles displaced from the window by the five new oracles —
-        "tpch_q3ish": q_tpch_q3ish,
-        "tpch_q5ish": q_tpch_q5ish,
-        "groupby_agg": q_groupby_agg,
-        "multiway_left_join": q_multiway_left_join,
-        "pipeline_core": q_pipeline_core,
-        # — r6 greens: checked on current testdata last round —
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "pipeline_bindings": q_pipeline_bindings,
-        "chunk_documents": q_chunk_documents,
-        "duplicate_spans": q_duplicate_spans,
-        "bigram_lm_score": q_bigram_lm_score,
-        "incremental_dedup": q_incremental_dedup,
-        "leakage_safe_split": q_leakage_safe_split,
-        "inverted_index": q_inverted_index,
-        "search_terms": q_search_terms,
-        "bm25_search": q_bm25_search,
-        "topk_per_group": q_topk_per_group,
-        "corpus_report": q_corpus_report,
-        "merge_intervals": q_merge_intervals,
-        "salted_join_skew": q_salted_join_skew,
-        "grouping_sets": q_grouping_sets,
-        "histogram_equidepth": q_histogram_equidepth,
-        "robust_zscore": q_robust_zscore,
-        "window_running_distinct": q_window_running_distinct,
-        "ols_per_group": q_ols_per_group,
-        "orc_roundtrip": q_orc_roundtrip,
-        "schema_evolution_read": q_schema_evolution_read,
-        "weighted_sample": q_weighted_sample,
-        "dedup_best_rep": q_dedup_best_rep,
-        "ann_pq_topk": q_ann_pq_topk,
-        "scd2_lookup": q_scd2_lookup,
-        "window_moving_median": q_window_moving_median,
-        "locf_impute": q_locf_impute,
-        "ratio_to_report": q_ratio_to_report,
-        "mode_per_group": q_mode_per_group,
-        "set_operations": q_set_operations,
-        "entropy_per_user": q_entropy_per_user,
-        "text_strip_accents": q_text_strip_accents,
-        "time_weighted_avg": q_time_weighted_avg,
-        "mom_growth": q_mom_growth,
-        "event_transitions": q_event_transitions,
-        "winsorize": q_winsorize,
-        "window_dist_funcs": q_window_dist_funcs,
-        "benford_digits": q_benford_digits,
-        "chi_square": q_chi_square,
-        "window_range_frame": q_window_range_frame,
-        "assoc_rules": q_assoc_rules,
-        "topk_with_ties": q_topk_with_ties,
-        "iqr_report": q_iqr_report,
-        "debounce_events": q_debounce_events,
-        "bfs_hops": q_bfs_hops,
-        "triangle_count": q_triangle_count,
-        "pipeline_poa": q_pipeline_poa,
-        "asof_join": q_asof_join,
-        "range_band_join": q_range_band_join,
-        # — rows-only by design (xxhash64 signatures have no DuckDB
-        #   equivalent; md5 twin is full-oracle) —
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        # — rows-only by design: Spark-RNG sampleBy; portable twin
-        #   sample_stratified_hash carries the full oracle —
-        "stratified_sample_by": q_stratified_sample_by,
-        # — r2/r3/r5 greens with current-testdata local parity —
-        "pipeline_cronos": q_pipeline_cronos,
-        "pipeline_auac": q_pipeline_auac,
-        "pipeline_resolutions": q_pipeline_resolutions,
-        "pipeline_specialties": q_pipeline_specialties,
-        "pipeline_districts": q_pipeline_districts,
-        # — r5 greens (checked on current testdata last round) —
-        "merge_upsert": q_merge_upsert,
-        "histogram_bins": q_histogram_bins,
-        "corr_exact": q_corr_exact,
-        "keep_latest": q_keep_latest,
-        "sample_stratified_hash": q_sample_stratified_hash,
-        "dedup_minhash_portable": q_dedup_minhash_portable,
-        "dedup_simhash_portable": q_dedup_simhash_portable,
-        "dedup_jaccard_portable": q_dedup_jaccard_portable,
-        "dedup_pipeline_portable": q_dedup_pipeline_portable,
-        "dense_ids": q_dense_ids,
-        "quarantine_rows": q_quarantine_rows,
-        "pack_sequences": q_pack_sequences,
-        "outlier_detection": q_outlier_detection,
-        "window_rolling_agg": q_window_rolling_agg,
-        "events_sessionization": q_events_sessionization,
-        "pivot_agg": q_pivot_agg,
-        "unpivot_melt": q_unpivot_melt,
-        "agg_salted_sum": q_agg_salted_sum,
-        "multimodal_features": q_multimodal_features,
-        "pipeline_companies": q_pipeline_companies,
-        "pipeline_buildings": q_pipeline_buildings,
-        "pipeline_udo_types": q_pipeline_udo_types,
-        "pipeline_udos": q_pipeline_udos,
-        "pipeline_physical_structures": q_pipeline_physical_structures,
-        "pipeline_operational_offices": q_pipeline_operational_offices,
-        "pipeline_production_factors": q_pipeline_production_factors,
-        "pipeline_udo_specialties": q_pipeline_udo_specialties,
-        "pipeline_users": q_pipeline_users,
-        "pipeline_taxonomies": q_pipeline_taxonomies,
-        "decontaminate_benchmark": q_decontaminate_benchmark,
-        "corpus_prep_pipeline": q_corpus_prep_pipeline,
-        "rebalance_mixture": q_rebalance_mixture,
-        "clean_lines": q_clean_lines,
-        "dedup_paragraphs": q_dedup_paragraphs,
-        "fuzzy_name_match": q_fuzzy_name_match,
-        "extract_sql": q_extract_sql,
-        "extract_csv_schema": q_extract_csv_schema,
-        "reload_idempotent": q_reload_idempotent,
-        "attachment_id_remap": q_attachment_id_remap,
-        "timestamps_coalesce": q_timestamps_coalesce,
-        "text_quality_score": q_text_quality_score,
-        "text_language_id": q_text_language_id,
-        "multimodal_binary_meta": q_multimodal_binary_meta,
-        "dedup_exact": q_dedup_exact,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "events_windowed_agg": q_events_windowed_agg,
-        "snapshot_diff": q_snapshot_diff,
-        "contract_enforce": q_contract_enforce,
-        "contract_violations": q_contract_violations,
-        # — r9 batch (window candidates for r11 after the backlog clears) —
-        "woe_iv": q_woe_iv,
-        "one_hot_segment": q_one_hot_segment,
-        "lift_gain": q_lift_gain,
-        "dag_layers": q_dag_layers,
-        "shortest_paths": q_shortest_paths,
-        "max_concurrency": q_max_concurrency,
-        "fifo_cost_basis": q_fifo_cost_basis,
-        "t_closeness": q_t_closeness,
-        "theil_sen": q_theil_sen,
-        "acf_lags": q_acf_lags,
-        "holt_brown": q_holt_brown,
-        "bitemporal_asof": q_bitemporal_asof,
-        "containment_pairs": q_containment_pairs,
-        "dedup_soft_weights": q_dedup_soft_weights,
-        "dsir_weights": q_dsir_weights,
-        "nelson_aalen": q_nelson_aalen,
-        "sprt_ab": q_sprt_ab,
-        "power_two_proportions": q_power_two_proportions,
-        "fifo_open_lots": q_fifo_open_lots,
-        "tfidf_cosine": q_tfidf_cosine,
-        "hll_distinct": q_hll_distinct,
-        "quantile_treatment_effect": q_quantile_treatment_effect,
-        "rake_keyphrases": q_rake_keyphrases,
-        "mix_shift": q_mix_shift,
-        # — new r10: the composed two-tier scale stories (VERDICT r9 item 6) —
-        "containment_blocked": q_containment_blocked,
-        "theil_sen_bounded": q_theil_sen_bounded,
-        "retrieval_eval": q_retrieval_eval,
-        "dedup_candidate_eval": q_dedup_candidate_eval,
-        "semdedup": q_semdedup,
-        "gopher_rules": q_gopher_rules,
-        # — rows-only by design (seeded-hash candidate generators; no oracle) —
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_full_pipeline": q_dedup_full_pipeline,
-    }
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracles
-# ---------------------------------------------------------------------------
-
-
-def _enum_case_sql(source: str, mapping: dict[str, str], default: str | None) -> str:
-    whens = " ".join(
-        f"WHEN lower(trim(CAST({source} AS VARCHAR))) = '{k.strip().lower()}' THEN '{v}'"
-        for k, v in mapping.items()
-    )
-    tail = "NULL" if default is None else f"'{default}'"
-    return f"CASE {whens} ELSE {tail} END"
-
-
-def _langid_sql(text: str) -> str:
-    toks = f"string_split_regex(trim(lower({text})), '\\s+')"
-    score = {
-        lang: f"len(list_filter({toks}, t -> list_contains([{', '.join(repr(w) for w in words)}], t)))"
-        for lang, words in TA.LANG_STOPWORDS.items()
-    }
-    expr_lang, expr_score = "'und'", "0"
-    for lang in sorted(TA.LANG_STOPWORDS):
-        s = score[lang]
-        expr_lang = f"CASE WHEN {s} > ({expr_score}) THEN '{lang}' ELSE ({expr_lang}) END"
-        expr_score = f"CASE WHEN {s} > ({expr_score}) THEN {s} ELSE ({expr_score}) END"
-    return expr_lang
-
-
-# DuckDB rendering of experiments.normal_sf_portable over abs(z) — same
-# A&S 7.1.26 constants and operation order as the Spark side.
-from area_etl_spark.operators.experiments import normal_sf_sql as _normal_sf_sql  # noqa: E402
-from area_etl_spark.operators.experiments import f_sf_paulson_sql as _f_sf_paulson_sql  # noqa: E402
-from area_etl_spark.operators.geo import point_in_polygon_sql as _pip_sql  # noqa: E402
-from area_etl_spark.operators.experiments import normal_quantile_sql as _nq_sql  # noqa: E402
-
-NORMAL_SF_SQL_ABS_Z = _normal_sf_sql("abs(z)")
-# portable P(chi2_1 > x) = 2*P(Z > sqrt(x)), rendered over the UNROUNDED
-# mcnemar statistic (mirrors the Spark expression order exactly)
-NORMAL_SF_SQL_CHI = _normal_sf_sql(
-    "sqrt(CAST((b - c) * (b - c) AS DOUBLE) / CAST(b + c AS DOUBLE))"
-)
-
-
-def _lpa_sql(rounds: int = 3) -> str:
-    """DuckDB replay of graph.label_propagation over the user↔item events
-    graph: each fixed round is a neighbor-label count + a (count DESC,
-    label ASC) argmax + a coalesce update — chained CTEs, all-integer."""
-    parts = ["""
-        WITH ev AS (
-            SELECT DISTINCT user_id AS u, (event_id % 500) + 10000000 AS i
-            FROM events
-        ), und AS (
-            SELECT u AS src, i AS dst FROM ev
-            UNION
-            SELECT i AS src, u AS dst FROM ev
-        ), l0 AS (
-            SELECT DISTINCT src AS node, src AS label FROM und
-        )"""]
-    for r in range(1, rounds + 1):
-        parts.append(f""", n{r} AS (
-            SELECT e.dst AS node, l.label, COUNT(*) AS c
-            FROM und e JOIN l{r - 1} l ON l.node = e.src
-            GROUP BY 1, 2
-        ), b{r} AS (
-            SELECT node, label FROM (
-                SELECT node, label,
-                       row_number() OVER (PARTITION BY node
-                                          ORDER BY c DESC, label ASC) AS rn
-                FROM n{r}
-            ) WHERE rn = 1
-        ), l{r} AS (
-            SELECT p.node, COALESCE(b.label, p.label) AS label
-            FROM l{r - 1} p LEFT JOIN b{r} b USING (node)
-        )""")
-    parts.append(f"""
-        SELECT node, label FROM l{rounds}
-    """)
-    return "".join(parts)
-
-
-def _lpa_cte(rounds: int = 3) -> str:
-    """The _lpa_sql WITH-chain without the final SELECT — composable prefix
-    for oracles that post-process the LPA labels (modularity)."""
-    full = _lpa_sql(rounds)
-    return full[: full.rindex("SELECT node, label")]
-
-
-def _hrw_sql(key: str, nodes: list[str]) -> str:
-    """DuckDB rendering of ids.rendezvous_assign: fixed-width md5 hex
-    prefixed strings compared by greatest(), winner name = substr 33+."""
-    alts = ", ".join(
-        f"md5('{n}:' || CAST({key} AS VARCHAR)) || '{n}'" for n in sorted(nodes)
-    )
-    return f"substr(greatest({alts}), 33)"
-
-
-def _geohash_sql(lat: str, lon: str, precision: int = 6) -> str:
-    """DuckDB replay of geo.geohash_encode: same quantization, same
-    lon-first bit interleave, same base32 lookup."""
-    half = 5 * precision // 2
-    scale = 1 << half
-    lonq = (
-        f"LEAST({scale - 1}, GREATEST(0, CAST(FLOOR((({lon} + 180.0) / 360.0) "
-        f"* {float(scale)}) AS BIGINT)))"
-    )
-    latq = (
-        f"LEAST({scale - 1}, GREATEST(0, CAST(FLOOR((({lat} + 90.0) / 180.0) "
-        f"* {float(scale)}) AS BIGINT)))"
-    )
-    total = 2 * half
-    # every term fully parenthesized: SQL gives '+' HIGHER precedence than
-    # '<<', so a bare `x << 29 + y << 27` parses as `x << (29 + y) << 27`
-    terms = []
-    for i in range(half):
-        terms.append(f"(((lonq >> {half - 1 - i}) & 1) << {total - 1 - 2 * i})")
-        terms.append(f"(((latq >> {half - 1 - i}) & 1) << {total - 2 - 2 * i})")
-    g = " + ".join(terms)
-    chars = []
-    for j in range(precision):
-        chars.append(
-            "substr('0123456789bcdefghjkmnpqrstuvwxyz', "
-            f"CAST((g >> {5 * (precision - 1 - j)}) & 31 AS INTEGER) + 1, 1)"
-        )
-    concat = " || ".join(chars)
-    # correlated scalar subqueries decorrelate wrongly in the FROM position;
-    # LATERAL keeps the per-row evaluation explicit
-    return {"lonq": lonq, "latq": latq, "g": g, "concat": concat}
-
-
-_GH = _geohash_sql("lat", "lon", 6)
-
-
-def _ks_p_sql(lam: str) -> str:
-    """Truncated Kolmogorov series, same 5 terms and addition order as the
-    Spark fold in experiments.ks_test."""
-    expr = "0.0"
-    for k in range(1, 6):
-        sign = "+" if k % 2 == 1 else "-"
-        expr = f"({expr} {sign} exp(({-2.0 * k * k}) * {lam} * {lam}))"
-    return f"LEAST(1.0, GREATEST(0.0, 2.0 * {expr}))"
-
-
-def _mi_feature_sql(feature: str) -> str:
-    """One UNION-ALL arm of the mutual_information oracle: MI of ``feature``
-    (a column of the projected ``o`` CTE) with the is_high label, the term
-    sum folded in sorted (value, label) order like
-    features.mutual_information.  ``hlab``/``nn`` CTEs are shared."""
-    return f"""
-            SELECT '{feature}' AS feature,
-                   (SELECT CAST(COUNT(DISTINCT CAST({feature} AS VARCHAR)) AS BIGINT)
-                    FROM o) AS n_levels,
-                   (SELECT round(hl, 9) FROM hlab) AS label_entropy,
-                   round(mi, 9) AS mutual_info,
-                   round(CASE WHEN (SELECT hl FROM hlab) > 0
-                         THEN mi / (SELECT hl FROM hlab) END, 9) AS ig_ratio
-            FROM (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(t ORDER BY v, l)), (x, y) -> x + y) AS mi
-                FROM (
-                    SELECT cells.v, cells.l,
-                           (CAST(cvl AS DOUBLE) / CAST(nn.n AS DOUBLE))
-                           * ln((CAST(cvl AS DOUBLE) * CAST(nn.n AS DOUBLE))
-                                / (CAST(pv.cv AS DOUBLE) * CAST(pl.cl AS DOUBLE)))
-                               AS t
-                    FROM (
-                        SELECT CAST({feature} AS VARCHAR) AS v,
-                               CAST(is_high AS VARCHAR) AS l, COUNT(*) AS cvl
-                        FROM o GROUP BY 1, 2
-                    ) cells
-                    JOIN (SELECT CAST({feature} AS VARCHAR) AS v, COUNT(*) AS cv
-                          FROM o GROUP BY 1) pv USING (v)
-                    JOIN (SELECT CAST(is_high AS VARCHAR) AS l, COUNT(*) AS cl
-                          FROM o GROUP BY 1) pl USING (l)
-                    CROSS JOIN nn
-                )
-            )"""
-
-
-def _ipf_sql(iters: int = 3) -> str:
-    """DuckDB replay of sampling.ipf_weights over the (event_type × daypart)
-    cell table with uniform targets: each round's marginal sums fold over
-    ``list(w·n ORDER BY cross-key)`` — the same float sequence as Spark's
-    array_sort → aggregate fold."""
-    base = """
-        WITH cells AS (
-            SELECT event_type AS et,
-                   CAST(FLOOR(EXTRACT(hour FROM ts) / 6) AS BIGINT) AS daypart,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1, 2
-        ), tt AS (
-            SELECT SUM(n) AS tot, COUNT(DISTINCT et) AS nr,
-                   COUNT(DISTINCT daypart) AS nc
-            FROM cells
-        ), it0 AS (
-            SELECT et, daypart, n,
-                   CAST(tot AS DOUBLE) / CAST(nr AS DOUBLE) AS rt,
-                   CAST(tot AS DOUBLE) / CAST(nc AS DOUBLE) AS ct,
-                   CAST(1.0 AS DOUBLE) AS w
-            FROM cells, tt
-        )"""
-    prev = "it0"
-    parts = [base]
-    for i in range(1, iters + 1):
-        parts.append(f""", rs{i} AS (
-            SELECT et, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                       list(w * CAST(n AS DOUBLE) ORDER BY daypart)),
-                       (x, y) -> x + y) AS s
-            FROM {prev} GROUP BY et
-        ), ra{i} AS (
-            SELECT t.et, t.daypart, t.n, t.rt, t.ct, t.w * (t.rt / r.s) AS w
-            FROM {prev} t JOIN rs{i} r USING (et)
-        ), cs{i} AS (
-            SELECT daypart, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                       list(w * CAST(n AS DOUBLE) ORDER BY et)),
-                       (x, y) -> x + y) AS s
-            FROM ra{i} GROUP BY daypart
-        ), it{i} AS (
-            SELECT t.et, t.daypart, t.n, t.rt, t.ct, t.w * (t.ct / c.s) AS w
-            FROM ra{i} t JOIN cs{i} c USING (daypart)
-        )""")
-        prev = f"it{i}"
-    parts.append(f"""
-        SELECT et, daypart, n, round(w, 9) AS weight FROM {prev}
-    """)
-    return "".join(parts)
-
-
-# Literal nDCG@10 discount weights (1/log2(i+1)) and prefix sums — the SAME
-# Python-computed doubles the Spark plan uses (indexing.ndcg_weights), so no
-# engine libm log2 ever runs; repr() round-trips each double exactly.
-def _ndcg_literals_sql(k: int = 10) -> tuple[str, str]:
-    from area_etl_spark.operators.indexing import ndcg_weights
-
-    w, p = ndcg_weights(k)
-    # E-notation parses directly as a correctly-rounded DOUBLE; a bare
-    # decimal literal is DECIMAL in DuckDB and its decimal→double CAST
-    # drops the 17th significant digit (measured: 0.38685280723454163
-    # casts to …416), which shifts the fold by an ulp
-    lit = lambda x: repr(x) if "e" in repr(x) else f"{x!r}e0"  # noqa: E731
-    fmt = lambda xs: "[" + ", ".join(lit(x) for x in xs) + "]"  # noqa: E731
-    return fmt(w), fmt(p)
-
-
-_NDCG_W10_SQL, _NDCG_P10_SQL = _ndcg_literals_sql(10)
-
-
-def _cos2_sql(x: str, y: str) -> str:
-    """DuckDB cosine between two list columns, sequential-sum order (matches
-    ``similarity._dot``/``_norm`` bit-for-bit)."""
-    red = lambda a, b: (  # noqa: E731
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (p, r) -> p + r)"
-    )
-    return f"({red(x, y)} / (sqrt({red(x, x)}) * sqrt({red(y, y)})))"
-
-
-def _hybrid_ctes_sql() -> str:
-    """The hybrid-retrieval CTE chain (BM25 top-20 → lex ranks, cosine
-    top-20 → sem ranks, RRF fold → per) shared by the hybrid_search_rrf
-    and retrieval_eval oracles — ONE source of truth for the tie-breaks
-    and constants, mirroring the Spark-side _hybrid_runs (review fix,
-    r10)."""
-    terms_sql = ", ".join(f"'{t}'" for t in _HYBRID_TERMS)
-    return f"""tk AS (
-                SELECT doc_id, term FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), dl AS (
-                SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY doc_id
-            ), st AS (
-                SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl
-            ), tfq AS (
-                SELECT doc_id, term, COUNT(*) AS tf FROM tk
-                WHERE term IN ({terms_sql}) GROUP BY doc_id, term
-            ), dfq AS (
-                SELECT term, COUNT(*) AS df FROM tfq GROUP BY term
-            ), bm AS (
-                SELECT doc_id,
-                       round(SUM(
-                           ln((n_docs - df + 0.5) / (df + 0.5) + 1)
-                           * tf * (1.2 + 1)
-                           / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                       ), 6) AS score
-                FROM tfq JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-                GROUP BY doc_id
-                ORDER BY score DESC, doc_id
-                LIMIT 20
-            ), lex AS (
-                SELECT doc_id,
-                       row_number() OVER (ORDER BY score DESC, doc_id) AS r
-                FROM bm
-            ), qv AS (
-                SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-            ), cs AS (
-                SELECT vec_id AS doc_id,
-                       round({_cos2_sql("qe", "embedding")}, 6) AS cosine
-                FROM embeddings, qv WHERE vec_id <> 0
-                ORDER BY cosine DESC, vec_id
-                LIMIT 20
-            ), sem AS (
-                SELECT doc_id,
-                       row_number() OVER (ORDER BY cosine DESC, doc_id) AS r
-                FROM cs
-            ), u AS (
-                SELECT doc_id, 'lex' AS s, r FROM lex
-                UNION ALL
-                SELECT doc_id, 'sem' AS s, r FROM sem
-            ), per AS (
-                SELECT doc_id, COUNT(*) AS n_sources,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                               list(1.0 / (60.0 + CAST(r AS DOUBLE)) ORDER BY s)),
-                           (x, y) -> x + y) AS score
-                FROM u GROUP BY doc_id
-            )"""
-
-
-def _lsh_bucket_sql(col: str, dim: int = 64, bits: int = 4, seed: int = 42) -> str:
-    """DuckDB expression for the random-hyperplane bucket id of ``col`` —
-    same plane literals (seeded) and same left-to-right dot order as
-    ``similarity.lsh_signature``, so bucket assignment matches bit-for-bit."""
-    from area_etl_spark.operators.similarity import _hyperplanes
-
-    terms = []
-    for j, p in enumerate(_hyperplanes(dim, bits, seed)):
-        lit = "[" + ", ".join(repr(x) for x in p) + "]"
-        d = (
-            f"list_reduce(list_transform(generate_series(1, len({col})), "
-            f"i -> CAST({col}[i] AS DOUBLE) * ({lit})[i]), (x, y) -> x + y)"
-        )
-        terms.append(f"CASE WHEN {d} >= 0 THEN {1 << j} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _kmeans_train_ctes(k: int, iters: int) -> tuple[list[str], str]:
-    """The bit-reproducible Lloyd's-training CTE chain shared by the
-    trained-IVF and semdedup oracles (one source of truth): seed
-    centroids, per-round assign (argmax cosine, ties to lowest cid) +
-    fixed-point means with empty-bucket carry-over, and a final ``af``
-    assignment of every vector to its trained cluster.  Returns
-    (ctes, final_centroids_cte_name); ``af`` is always the last CTE."""
-    from area_etl_spark.operators.similarity import KMEANS_QUANT
-
-    q = repr(KMEANS_QUANT)
-    ctes = [
-        "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding"
-        " FROM embeddings WHERE vec_id <> 0)",
-        "qv AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe"
-        " FROM embeddings WHERE vec_id = 0)",
-        f"c0 AS (SELECT vec_id AS cid, embedding AS ce FROM e ORDER BY vec_id LIMIT {k})",
-    ]
-
-    def assign(name: str, cents: str) -> str:
-        cos = _cos2_sql("e.embedding", "c.ce")
-        return f"""{name} AS (
-            SELECT vec_id, embedding, cid FROM (
-                SELECT vec_id, embedding, cid,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-                FROM (SELECT e.vec_id, e.embedding, c.cid, {cos} AS cos
-                      FROM e CROSS JOIN {cents} c)
-            ) WHERE rn = 1
-        )"""
-
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(assign(f"a{it}", prev))
-        ctes.append(f"""m{it} AS (
-            SELECT cid, i, CAST(SUM(CAST(floor(x * {q}) AS BIGINT)) AS DOUBLE) / COUNT(*) / {q} AS m
-            FROM (SELECT cid, unnest(generate_series(1, len(embedding))) AS i,
-                         unnest(embedding) AS x
-                  FROM a{it})
-            GROUP BY cid, i
-        )""")
-        ctes.append(f"""c{it} AS (
-            SELECT p.cid, COALESCE(n.ce, p.ce) AS ce
-            FROM {prev} p LEFT JOIN (SELECT cid, list(m ORDER BY i) AS ce
-                                     FROM m{it} GROUP BY cid) n USING (cid)
-        )""")
-        prev = f"c{it}"
-    ctes.append(assign("af", prev))
-    return ctes, prev
-
-
-def _ivf_trained_sql(k: int = 16, iters: int = 3, nprobe: int = 2, topk: int = 10) -> str:
-    """DuckDB replay of the deterministic k-means-trained IVF pipeline.
-
-    ``train_kmeans_codebook`` is bit-reproducible (fixed-point per-dim sums,
-    sequential-fold cosines), so the oracle UNROLLS the same ``iters`` Lloyd
-    rounds in SQL (``_kmeans_train_ctes``) — then probes the ``nprobe``
-    top-dot centroids and exact-ranks inside them, exactly as
-    ``q_ann_ivf_trained_topk`` does on Spark.
-    """
-    ctes, prev = _kmeans_train_ctes(k, iters)
-    dot_qc = (
-        "list_reduce(list_transform(generate_series(1, len(c.ce)), "
-        "j -> c.ce[j] * q.qe[j]), (x, y) -> x + y)"
-    )
-    ctes.append(f"""probes AS (
-        SELECT cid FROM (SELECT c.cid, {dot_qc} AS dot FROM {prev} c CROSS JOIN qv q)
-        ORDER BY dot DESC, cid LIMIT {nprobe}
-    )""")
-    return f"""
-        WITH {', '.join(ctes)}
-        SELECT a.vec_id, round({_cos2_sql("a.embedding", "q.qe")}, 6) AS cosine
-        FROM af a JOIN probes p USING (cid) CROSS JOIN qv q
-        ORDER BY cosine DESC, a.vec_id
-        LIMIT {topk}
-    """
-
-
-def _semdedup_sql(k: int = 16, iters: int = 3, threshold: float = 0.35) -> str:
-    """DuckDB replay of semdedup_prune: the SAME trained assignment as the
-    IVF oracle (``_kmeans_train_ctes``), then the within-cluster min-id
-    shadow prune on rounded cosines."""
-    ctes, _ = _kmeans_train_ctes(k, iters)
-    cos_ab = _cos2_sql("a.embedding", "b.embedding")
-    return f"""
-        WITH {', '.join(ctes)}, dups AS (
-            SELECT a.vec_id AS ida, MIN(b.vec_id) AS dup_of
-            FROM af a JOIN af b
-              ON b.cid = a.cid AND b.vec_id < a.vec_id
-            WHERE round({cos_ab}, 6) >= {threshold!r}
-            GROUP BY a.vec_id
-        )
-        SELECT a.vec_id, a.cid AS cluster,
-               d.dup_of IS NULL AS keep, d.dup_of
-        FROM af a LEFT JOIN dups d ON d.ida = a.vec_id
-    """
-
-
-def _shingles3_sql(text: str = "text") -> str:
-    """DuckDB expression for ``dedup.shingles(normalize_tokens(text), 3)``:
-    3-gram shingles of lowercased whitespace tokens; docs shorter than 3
-    tokens collapse to one whole-doc shingle."""
-    tok_arr = f"string_split_regex(trim(lower({text})), '\\s+')"
-    return (
-        f"CASE WHEN len({tok_arr}) >= 3 THEN "
-        f"list_transform(generate_series(1, len({tok_arr}) - 2), "
-        f"i -> array_to_string(list_slice({tok_arr}, i, i + 2), ' ')) "
-        f"ELSE [array_to_string({tok_arr}, ' ')] END"
-    )
-
-
-def _minhash_portable_ctes(num_hashes: int = 16, bands: int = 4) -> str:
-    """Shared CTE block ending in ``cands(id_a, id_b)`` — the portable md5
-    MinHash banding over 3-gram shingles."""
-    rpb = num_hashes // bands
-    toks = _shingles3_sql()
-    mins = ", ".join(f"min(md5('{s}:' || tok)) AS h{s}" for s in range(num_hashes))
-    sep = " || '|' || "
-    band_exprs = [sep.join(f"h{b * rpb + r}" for r in range(rpb)) for b in range(bands)]
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, md5({expr}) AS band_hash FROM sigs"
-        for b, expr in enumerate(band_exprs)
-    )
-    return f"""
-        t AS (
-            SELECT DISTINCT doc_id, tok FROM (
-                SELECT doc_id, unnest({toks}) AS tok FROM documents
-            ) WHERE tok <> ''
-        ), sigs AS (
-            SELECT doc_id, {mins} FROM t GROUP BY doc_id
-        ), banded AS ({band_rows}),
-        cands AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM banded a JOIN banded b
-              ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-        )"""
-
-
-def _minhash_portable_sql(num_hashes: int = 16, bands: int = 4) -> str:
-    """Standalone portable-MinHash candidate query."""
-    return f"WITH {_minhash_portable_ctes(num_hashes, bands)} SELECT id_a, id_b FROM cands"
-
-
-def _jaccard_portable_ctes(threshold: float) -> str:
-    """CTE block (appended after ``cands``) ending in ``verified(id_a, id_b,
-    jaccard)`` — exact 3-gram Jaccard over the candidate pairs."""
-    toks = _shingles3_sql()
-    return f"""
-        grams AS (
-            SELECT doc_id, list_distinct({toks}) AS g FROM documents
-        ), verified AS (
-            SELECT c.id_a, c.id_b,
-                   round(CASE WHEN len(list_distinct(list_concat(ga.g, gb.g))) > 0
-                              THEN len(list_intersect(ga.g, gb.g))
-                                   / CAST(len(list_distinct(list_concat(ga.g, gb.g))) AS DOUBLE)
-                              ELSE 0.0 END, 6) AS jaccard
-            FROM cands c
-            JOIN grams ga ON ga.doc_id = c.id_a
-            JOIN grams gb ON gb.doc_id = c.id_b
-        )"""
-
-
-def _dedup_portable_pipeline_sql(threshold: float = 0.5) -> str:
-    """End-to-end portable dedup oracle: md5-MinHash candidates → exact
-    Jaccard ≥ threshold → connected components (recursive CTE) → keep the
-    min-id representative per cluster plus every unpaired doc."""
-    return f"""
-        WITH RECURSIVE {_minhash_portable_ctes()}, {_jaccard_portable_ctes(threshold)},
-        pairs AS (
-            SELECT id_a, id_b FROM verified WHERE jaccard >= {threshold}
-        ), edges AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION
-            SELECT id_b AS src, id_a AS dst FROM pairs
-        ), walk(node, reach) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach
-        ), labels AS (
-            SELECT node, MIN(reach) AS label FROM walk GROUP BY node
-        )
-        SELECT d.doc_id, d.lang, d.source
-        FROM documents d
-        LEFT JOIN labels l ON l.node = d.doc_id
-        WHERE l.node IS NULL OR l.node = l.label
-    """
-
-
-def _dedup_best_rep_sql(threshold: float = 0.5) -> str:
-    """Portable dedup pipeline with QUALITY-aware survivors: per cluster the
-    longest document wins (ties → min id), unpaired docs untouched."""
-    return f"""
-        WITH RECURSIVE {_minhash_portable_ctes()}, {_jaccard_portable_ctes(threshold)},
-        pairs AS (
-            SELECT id_a, id_b FROM verified WHERE jaccard >= {threshold}
-        ), edges AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION
-            SELECT id_b AS src, id_a AS dst FROM pairs
-        ), walk(node, reach) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach
-        ), labels AS (
-            SELECT node, MIN(reach) AS label FROM walk GROUP BY node
-        ), ranked AS (
-            SELECT l.label, l.node,
-                   row_number() OVER (PARTITION BY l.label
-                                      ORDER BY d.n_chars DESC, l.node ASC) AS rn
-            FROM labels l JOIN documents d ON d.doc_id = l.node
-        ), winners AS (
-            SELECT label, node FROM ranked WHERE rn = 1
-        )
-        SELECT d.doc_id, d.lang, d.source, d.n_chars
-        FROM documents d
-        LEFT JOIN labels l ON l.node = d.doc_id
-        LEFT JOIN winners w ON w.label = l.label
-        WHERE l.node IS NULL OR d.doc_id = w.node
-    """
-
-
-def _pagerank_sql(iterations: int = 3, damping_pct: int = 85, scale: int = 10**9) -> str:
-    """Chained-CTE replay of the fixed-k all-integer PageRank: one
-    (contrib, rank) CTE pair per iteration — possible only because the
-    operator's arithmetic is pure integer (commutative sums, floor
-    division)."""
-    base = (100 - damping_pct) * scale // 100
-    ctes = [
-        """e AS (
-            SELECT DISTINCT user_id AS src, 10000000 + (event_id % 500) AS dst FROM events
-            UNION
-            SELECT DISTINCT 10000000 + (event_id % 500) AS src, user_id AS dst FROM events
-        )""",
-        "deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src)",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        f"r0 AS (SELECT node, CAST({scale} AS BIGINT) AS pr FROM nodes)",
-    ]
-    for k in range(1, iterations + 1):
-        ctes.append(
-            f"""c{k} AS (
-                SELECT e.dst AS node, CAST(SUM(r.pr // g.d) AS BIGINT) AS s
-                FROM e JOIN deg g ON g.src = e.src JOIN r{k - 1} r ON r.node = e.src
-                GROUP BY e.dst
-            )"""
-        )
-        ctes.append(
-            f"""r{k} AS (
-                SELECT n.node,
-                       CAST({base} AS BIGINT) + ({damping_pct} * COALESCE(c.s, 0)) // 100 AS pr
-                FROM nodes n LEFT JOIN c{k} c ON c.node = n.node
-            )"""
-        )
-    # DuckDB SUM(BIGINT) yields HUGEINT (INT128); without the CASTs the dtype
-    # propagates through the // arithmetic and the final pr_rank column hashes
-    # differently from Spark's LongType even when every value matches
-    # (CORRECTNESS_r06 adjudication).  Cast at both the partial sum and the
-    # final projection so the oracle's dtype is BIGINT end-to-end.
-    return (
-        f"WITH {', '.join(ctes)} "
-        f"SELECT node, CAST(pr AS BIGINT) AS pr_rank FROM r{iterations}"
-    )
-
-
-def _simhash_portable_sql(bits: int = 16) -> str:
-    """DuckDB replay of the md5 portable SimHash: same nibble arithmetic,
-    per-bit ±1 sums (as a GROUP BY — commutative ints, order-free), sign
-    pack."""
-    toks = "string_split_regex(trim(lower(text)), '\\s+')"
-    sums = []
-    for b in range(bits):
-        p, shift = b // 4 + 1, 3 - (b % 4)
-        bit = (
-            f"CAST(floor((strpos('0123456789abcdef', substr(h, {p}, 1)) - 1)"
-            f" / {2 ** shift}) AS BIGINT) % 2"
-        )
-        sums.append(f"SUM(2 * ({bit}) - 1) AS s{b}")
-    pack = " + ".join(f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(bits))
-    return f"""
-        WITH t AS (
-            SELECT doc_id, md5(tok) AS h
-            FROM (SELECT doc_id, unnest({toks}) AS tok FROM documents)
-        ), sums AS (
-            SELECT doc_id, {', '.join(sums)} FROM t GROUP BY doc_id
-        )
-        SELECT doc_id, CAST({pack} AS INT) AS simhash16 FROM sums
-    """
-
-
-def _role_case_sql() -> str:
-    from area_etl_spark.operators.history import DEFAULT_ROLE, ROLE_MAPPING
-
-    whens = " ".join(
-        f"WHEN lower(trim(c_mktsegment)) = '{k.strip().lower()}' THEN '{v}'"
-        for k, v in ROLE_MAPPING.items()
-    )
-    return f"CASE {whens} ELSE '{DEFAULT_ROLE}' END"
-
-
-def _role_perms_sql() -> str:
-    from area_etl_spark.operators.history import ROLE_PERMISSIONS
-
-    whens = " ".join(
-        f"WHEN role = '{r}' THEN [{', '.join(repr(p) for p in perms)}]"
-        for r, perms in ROLE_PERMISSIONS.items()
-    )
-    return f"CASE {whens} ELSE [] END"
-
-
-_DAG_EDGES_SQL = """e AS (
-    SELECT DISTINCT src, dst FROM (
-        SELECT n_nationkey % 20 AS src, 100 + n_nationkey % 40 AS dst FROM nation
-        UNION ALL
-        SELECT 100 + s_suppkey % 40, 200 + s_suppkey % 60 FROM supplier
-        UNION ALL
-        SELECT s_suppkey % 20, 200 + (s_suppkey * 7) % 60 FROM supplier
-    )
-)"""
-
-
-def _dag_layers_sql(rounds: int = 4) -> str:
-    """Chained-CTE replay of dag_layers' fixed-round max propagation (the
-    pagerank oracle convention)."""
-    ctes = [
-        _DAG_EDGES_SQL,
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        "l0 AS (SELECT node, CAST(0 AS BIGINT) AS layer FROM nodes)",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"c{r} AS (SELECT e.dst AS node, MAX(l.layer) + 1 AS cand "
-            f"FROM e JOIN l{r - 1} l ON l.node = e.src GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"l{r} AS (SELECT l.node, CAST(COALESCE(c.cand, l.layer) AS BIGINT) AS layer "
-            f"FROM l{r - 1} l LEFT JOIN c{r} c USING (node))"
-        )
-    return f"WITH {', '.join(ctes)} SELECT node, layer FROM l{rounds}"
-
-
-def _shortest_paths_sql(rounds: int = 4) -> str:
-    """Chained-CTE Bellman-Ford replay: min-relaxation sweeps over the DAG
-    edges with w = (src+dst)%7+1, seeds 0..4 at distance 0."""
-    ctes = [
-        _DAG_EDGES_SQL,
-        "we AS (SELECT src, dst, (src + dst) % 7 + 1 AS w FROM e)",
-        "d0 AS (SELECT CAST(unnest([0, 1, 2, 3, 4]) AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist)",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"c{r} AS (SELECT we.dst AS node, MIN(d.dist + we.w) AS cand "
-            f"FROM we JOIN d{r - 1} d ON d.node = we.src GROUP BY we.dst)"
-        )
-        ctes.append(
-            f"d{r} AS (SELECT node, CAST(CASE WHEN d.dist IS NULL THEN c.cand "
-            f"WHEN c.cand IS NULL THEN d.dist "
-            f"WHEN c.cand < d.dist THEN c.cand ELSE d.dist END AS BIGINT) AS dist "
-            f"FROM d{r - 1} d FULL JOIN c{r} c USING (node))"
-        )
-    return f"WITH {', '.join(ctes)} SELECT node, dist FROM d{rounds}"
-
-
-def _holt_brown_sql(n_lags: int = 8, horizon: int = 1) -> str:
-    """Replay of holt_brown_smooth over per-day event totals: the same
-    integer lag weights (w1 geometric, w2 its self-convolution), per-row
-    linear combinations over LAG columns, one double division per smooth."""
-    k = n_lags
-    lag_cols = ", ".join(
-        f"LAG(v, {m}) OVER w AS g{m}" for m in range(1, 2 * k - 1)
-    )
-    s1n, s1d, s2n, s2d = [], [], [], []
-    for m in range(2 * k - 1):
-        g = "v" if m == 0 else f"g{m}"
-        w1 = (1 << (k - 1 - m)) if m < k else 0
-        overlap = min(m, k - 1) - max(0, m - k + 1) + 1
-        w2 = overlap * (1 << (2 * k - 2 - m))
-        s1n.append(f"COALESCE({g}, 0) * {w1}")
-        s1d.append(f"CASE WHEN {g} IS NOT NULL THEN {w1} ELSE 0 END")
-        s2n.append(f"COALESCE({g}, 0) * {w2}")
-        s2d.append(f"CASE WHEN {g} IS NOT NULL THEN {w2} ELSE 0 END")
-    s1 = f"(CAST({' + '.join(s1n)} AS DOUBLE) / CAST({' + '.join(s1d)} AS DOUBLE))"
-    s2 = f"(CAST({' + '.join(s2n)} AS DOUBLE) / CAST({' + '.join(s2d)} AS DOUBLE))"
-    return f"""
-        WITH daily AS (
-            SELECT event_type,
-                   CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
-            FROM events GROUP BY 1, 2
-        ), led AS (
-            SELECT event_type, day, v, {lag_cols}
-            FROM daily
-            WINDOW w AS (PARTITION BY event_type ORDER BY day)
-        )
-        SELECT event_type, day, v,
-               round(2 * {s1} - {s2}, 6) AS level,
-               round({s1} - {s2}, 6) AS trend,
-               round(2 * {s1} - {s2} + {horizon} * ({s1} - {s2}), 6) AS forecast
-        FROM led
-    """
-
-
-def _sprt_sql(p0: float = 0.45, p1: float = 0.55, alpha: float = 0.05, beta: float = 0.2) -> str:
-    """Replay of sprt_decisions over events: the SAME Python-literal
-    log-likelihood slopes and boundaries (repr round-trips doubles, so
-    both engines walk bit-identical llr)."""
-    import math
-
-    l1, l0 = math.log(p1 / p0), math.log((1 - p1) / (1 - p0))
-    up, lo = math.log((1 - beta) / alpha), math.log(beta / (1 - alpha))
-    return f"""
-        WITH ev AS (
-            SELECT event_type, event_id AS t,
-                   CAST(round(value * 100) AS BIGINT) % 2 AS y
-            FROM events
-        ), w AS (
-            SELECT event_type,
-                   CAST(COUNT(*) OVER win AS BIGINT) AS n,
-                   CAST(SUM(y) OVER win AS BIGINT) AS s
-            FROM ev
-            WINDOW win AS (PARTITION BY event_type ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ), marked AS (
-            SELECT event_type, n,
-                   CASE WHEN s * {l1!r} + (n - s) * {l0!r} >= {up!r} THEN 'accept_h1'
-                        WHEN s * {l1!r} + (n - s) * {l0!r} <= {lo!r} THEN 'accept_h0'
-                   END AS dec
-            FROM w
-        ), first_cross AS (
-            SELECT event_type, arg_min(dec, n) AS decision, MIN(n) AS decided_at_n
-            FROM marked WHERE dec IS NOT NULL GROUP BY event_type
-        ), totals AS (
-            SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_total FROM ev GROUP BY event_type
-        )
-        SELECT t.event_type,
-               COALESCE(f.decision, 'continue') AS decision,
-               CAST(COALESCE(f.decided_at_n, 0) AS BIGINT) AS decided_at_n,
-               t.n_total
-        FROM totals t LEFT JOIN first_cross f USING (event_type)
-    """
-
-
-def _power_sql(z_alpha: float = 1.959963984540054, z_beta: float = 0.8416212335729143) -> str:
-    p0 = "(CAST(p0_bp AS DOUBLE) / 10000.0)"
-    p1 = "(CAST(p1_bp AS DOUBLE) / 10000.0)"
-    pbar = f"(({p0} + {p1}) / 2.0)"
-    num = (
-        f"({z_alpha!r} * sqrt(2.0 * {pbar} * (1.0 - {pbar}))"
-        f" + {z_beta!r} * sqrt({p0} * (1.0 - {p0}) + {p1} * (1.0 - {p1})))"
-    )
-    return f"""
-        WITH s AS (
-            SELECT n_nationkey,
-                   2000 + n_nationkey * 50 AS p0_bp,
-                   2300 + n_nationkey * 50 + (n_nationkey % 5) * 100 AS p1_bp
-            FROM nation
-        )
-        SELECT n_nationkey, p0_bp, p1_bp,
-               CASE WHEN {p1} <> {p0} THEN
-                   CAST(ceil({num} * {num} / (({p1} - {p0}) * ({p1} - {p0}))) AS BIGINT)
-               END AS n_per_arm
-        FROM s
-    """
-
-
-from area_etl_spark.operators.sketches import HLL_DIGIT_ZEROS as _HLL_DZ  # noqa: E402
-
-_HLL_DIGIT_CASE_SQL = " ".join(
-    f"WHEN '{d}' THEN {z}" for d, z in _HLL_DZ.items()
-)
-
-_FIFO_TRADES_SQL = """li AS (
-    SELECT user_id % 50 AS sym,
-           event_id AS ts,
-           CASE WHEN event_id % 2 = 1 THEN 'buy' ELSE 'sell' END AS side,
-           CAST(round(value * 100) AS BIGINT) % 50 + 1 AS q,
-           CAST(round(value * 100) AS BIGINT) % 1000 + 1 AS p
-    FROM events
-)"""
-
-
-def _pacf_sql(max_lag: int = 5) -> str:
-    """Chained-CTE replay of pacf_lags on the daily order-count series:
-    the acf ladder (no partition), pivoted wide, then the Durbin–Levinson
-    levels generated by the SAME loop the Spark side evaluates."""
-    from area_etl_spark.operators.windows import pacf_sql_lines
-
-    leads = ",\n                       ".join(
-        f"LEAD(x, {k}) OVER (ORDER BY t) AS l{k}" for k in range(1, max_lag + 1)
-    )
-    aggs = ",\n                       ".join(
-        f"CAST(SUM(CASE WHEN l{k} IS NOT NULL THEN x * l{k} END) AS HUGEINT) AS cr{k},\n"
-        f"                       CAST(SUM(CASE WHEN l{k} IS NOT NULL THEN x END) AS HUGEINT) AS hd{k},\n"
-        f"                       CAST(SUM(l{k}) AS HUGEINT) AS tl{k}"
-        for k in range(1, max_lag + 1)
-    )
-    rws = "\n                UNION ALL ".join(
-        f"SELECT {k} AS lag, cr{k} AS cr, hd{k} AS hd, tl{k} AS tl, n, S, SS FROM agg"
-        for k in range(1, max_lag + 1)
-    )
-    pivots = ",\n                       ".join(
-        f"MAX(CASE WHEN lag = {k} THEN r END) AS r{k}" for k in range(1, max_lag + 1)
-    )
-    ctes = []
-    prev = "wide"
-    for i, line in enumerate(pacf_sql_lines(max_lag), start=1):
-        ctes.append(f"l{i} AS ({line.replace('__prev__', prev)})")
-        prev = f"l{i}"
-    level_ctes = ",\n            ".join(ctes)
-    finals = "\n            UNION ALL ".join(
-        f"SELECT {k} AS lag, round(p{k}_{k}, 6) AS pacf FROM {prev}"
-        for k in range(1, max_lag + 1)
-    )
-    return f"""
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS t,
-                       COUNT(*) AS x
-                FROM orders GROUP BY 1
-            ), led AS (
-                SELECT x,
-                       {leads}
-                FROM daily
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(x) AS HUGEINT) AS S,
-                       CAST(SUM(x * x) AS HUGEINT) AS SS,
-                       {aggs}
-                FROM led
-            ), longr AS (
-                {rws}
-            ), rr AS (
-                SELECT lag,
-                       CASE WHEN n * n * SS - n * S * S <> 0 AND n > lag THEN
-                           round(CAST(n * n * COALESCE(cr, 0)
-                                      - n * S * (COALESCE(hd, 0) + COALESCE(tl, 0))
-                                      + (n - lag) * S * S AS DOUBLE)
-                                 / CAST(n * n * SS - n * S * S AS DOUBLE), 6)
-                       END + 0.0 AS r
-                FROM longr
-            ), wide AS (
-                SELECT {pivots}
-                FROM rr
-            ),
-            {level_ctes}
-            {finals}
-    """
-
-
-def _mmr_sql(k: int = 5, lam: float = 0.7, pool: int = 20) -> str:
-    """Chained-CTE replay of mmr_diversify's greedy: the pool and sims are
-    plain SQL; each selection step is one argmax CTE over the not-yet-
-    selected rows, scoring λ·rel − (1−λ)·max sim-to-selected with the SAME
-    (1−λ) subtraction the Python greedy performs."""
-
-    def _d(av, bv):
-        return (
-            f"list_reduce(list_transform(generate_series(1, len({av})), "
-            f"i -> CAST({av}[i] AS DOUBLE) * CAST({bv}[i] AS DOUBLE)), (x, y) -> x + y)"
-        )
-
-    def _n(av):
-        return f"sqrt({_d(av, av)})"
-
-    qdot = _d("e.embedding", "q.qe")
-    qne = _n("e.embedding")
-    qnq = _n("q.qe")
-    pdot = _d("a.embedding", "b.embedding")
-    pna = _n("a.embedding")
-    pnb = _n("b.embedding")
-    parts = [
-        "WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)",
-        f"""pool AS (
-            SELECT e.vec_id AS id, e.embedding,
-                   round({qdot} / ({qne} * {qnq}), 6) AS rel
-            FROM embeddings e, q WHERE e.vec_id <> 0
-            ORDER BY rel DESC, id LIMIT {pool}
-        )""",
-        f"""sims AS (
-            SELECT a.id AS i, b.id AS j,
-                   round({pdot} / ({pna} * {pnb}), 6) AS s
-            FROM pool a JOIN pool b ON a.id <> b.id
-        )""",
-        "sel1 AS (SELECT id, rel FROM pool ORDER BY rel DESC, id LIMIT 1)",
-        "acc1 AS (SELECT id FROM sel1)",
-    ]
-    for step in range(2, k + 1):
-        parts.append(
-            f"""c{step} AS (
-            SELECT p.id, p.rel,
-                   {lam} * p.rel - (1.0 - {lam}) * (
-                       SELECT MAX(s) FROM sims
-                       WHERE sims.i = p.id
-                         AND sims.j IN (SELECT id FROM acc{step - 1})) AS score
-            FROM pool p WHERE p.id NOT IN (SELECT id FROM acc{step - 1})
-        )"""
-        )
-        parts.append(
-            f"sel{step} AS (SELECT id, rel FROM c{step} ORDER BY score DESC, id LIMIT 1)"
-        )
-        parts.append(
-            f"acc{step} AS (SELECT id FROM acc{step - 1} UNION ALL SELECT id FROM sel{step})"
-        )
-    selects = " UNION ALL ".join(
-        f"SELECT {i} AS rank, id, rel FROM sel{i}" for i in range(1, k + 1)
-    )
-    return ",\n".join(parts) + f"\n{selects}"
+    """Every registered key → builder: DRIVER_WINDOW first, then the rest."""
+    builders = registry.builders()
+    return {**{key: builders[key] for key in DRIVER_WINDOW}, **builders}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per queries() key (rows-only keys omitted)."""
-    now = FIXED_NOW.strftime("%Y-%m-%d %H:%M:%S")
-    seg_case = _enum_case_sql("c_mktsegment", P.SEGMENT_MAPPING, "ALTRO")
-    pri_case = _enum_case_sql("o_orderpriority", P.PRIORITY_MAPPING, "ALTRO")
-    clean = lambda col: (  # noqa: E731 — handle_text as DuckDB SQL
-        f"regexp_replace(regexp_replace(regexp_replace(trim(CAST({col} AS VARCHAR)), "
-        f"'\\n', '', 'g'), '\\r', '', 'g'), '\\s+', ' ', 'g')"
-    )
-    toks = "string_split_regex(trim(lower(text)), '\\s+')"
-    ntoks = "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
-    stop_list = ", ".join(repr(w) for w in TA.LANG_STOPWORDS["en"])
-    nstop = f"len(list_filter({toks}, t -> list_contains([{stop_list}], t)))"
-    npunct = "length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g'))"
-    stopr = f"round(CASE WHEN {ntoks} > 0 THEN {nstop} / ({ntoks}) ELSE 0.0 END, 6)"
-    punctr = f"round(CASE WHEN length(text) > 0 THEN ({npunct}) / length(text) ELSE 0.0 END, 6)"
-    qscore = (
-        f"round(0.4 * least(1.0, ({ntoks}) / 100.0) + 0.4 * least(1.0, 5.0 * {stopr})"
-        f" + 0.2 * (1.0 - least(1.0, 4.0 * {punctr})), 6)"
-    )
-    dot = (
-        "list_reduce(list_transform(generate_series(1, len(embedding)), "
-        "i -> CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y)"
-    )
-    norm_e = (
-        "sqrt(list_reduce(list_transform(generate_series(1, len(embedding)), "
-        "i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y))"
-    )
-    norm_q = (
-        "sqrt(list_reduce(list_transform(generate_series(1, len(qe)), "
-        "i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y))"
-    )
-
-    resolutions_sql = f"""
-            WITH d AS (
-                SELECT doc_id AS id,
-                       substr({clean("text")}, 1, 40) AS title,
-                       source,
-                       CASE WHEN n_chars > 400 THEN sha256({clean("text")}) END AS file_id
-                FROM documents
-            ), r AS (
-                SELECT *, row_number() OVER (PARTITION BY title ORDER BY id) AS rn FROM d
-            )
-            SELECT id,
-                   CASE WHEN title IS NULL OR rn = 1 THEN title
-                        ELSE title || ' (' || CAST(rn - 1 AS VARCHAR) || ')' END AS title,
-                   source, file_id
-            FROM r
-    """
-
-    oracles = {
-        "extract_sql": """
-            SELECT o_orderpriority, COUNT(*) AS n_orders
-            FROM orders WHERE o_orderstatus = 'F'
-            GROUP BY o_orderpriority
-        """,
-        "extract_csv_schema": f"""
-            SELECT region_code, name, CAST(population AS BIGINT) AS population
-            FROM read_csv('{SEED_CSV}', header = true,
-                          columns = {{'region_code': 'VARCHAR', 'name': 'VARCHAR', 'population': 'BIGINT'}})
-        """,
-        "load_roundtrip": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-        "reload_idempotent": "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier",
-        "export_csv_roundtrip": "SELECT r_regionkey, r_name FROM region",
-        "attachment_id_remap": """
-            SELECT doc_id AS id,
-                   CASE WHEN n_chars > 400 THEN sha256(text) END AS file_id
-            FROM documents
-        """,
-        "timestamps_coalesce": f"""
-            SELECT event_id,
-                   COALESCE(ts, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(CASE WHEN event_id % 3 <> 0 THEN ts + INTERVAL 1 HOUR END,
-                            ts, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN (CASE WHEN event_type = 'click' THEN 'S' ELSE 'N' END) = 'S'
-                        THEN COALESCE(CASE WHEN event_id % 3 <> 0 THEN ts + INTERVAL 1 HOUR END, ts)
-                   END AS disabled_at
-            FROM events
-        """,
-        "id_normalize": """
-            SELECT c_custkey, lower(trim(CAST('  ' || c_name || ' ' AS VARCHAR))) AS id FROM customer
-        """,
-        "enum_mapping": f"SELECT c_custkey, {seg_case} AS segment_it FROM customer",
-        "text_clean": f"""
-            SELECT doc_id, {clean("'  ' || text || chr(10)")} AS clean_text FROM documents
-        """,
-        "year_cast": """
-            SELECT o_orderkey,
-                   CAST(trim(' ' || CAST(year(o_orderdate) AS VARCHAR) || ' ') AS INTEGER) AS order_year
-            FROM orders
-        """,
-        "datetime_normalize": """
-            SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS TIMESTAMP) AS ship_ts FROM lineitem
-        """,
-        "when_then_derivation": f"""
-            SELECT o_orderkey, {pri_case} AS priority_it,
-                   CASE WHEN o_totalprice < 50000 THEN 'SMALL'
-                        WHEN o_totalprice < 200000 THEN 'MEDIUM'
-                        ELSE 'LARGE' END AS order_size
-            FROM orders
-        """,
-        "dup_name_disambiguation": """
-            SELECT id,
-                   CASE WHEN name IS NULL OR rn = 1 THEN name
-                        ELSE name || ' (' || CAST(rn - 1 AS VARCHAR) || ')' END AS name
-            FROM (
-                SELECT p_partkey AS id, p_type AS name,
-                       row_number() OVER (PARTITION BY p_type ORDER BY p_partkey) AS rn
-                FROM part
-            )
-        """,
-        "multiway_left_join": """
-            SELECT o_orderkey, c_name, n_name, r_name
-            FROM orders
-            LEFT JOIN customer ON o_custkey = c_custkey
-            LEFT JOIN nation ON c_nationkey = n_nationkey
-            LEFT JOIN region ON n_regionkey = r_regionkey
-        """,
-        "union_diagonal_relaxed": """
-            SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS o_orderpriority FROM orders
-            UNION ALL
-            SELECT o_orderkey, CAST(NULL AS DOUBLE), o_orderpriority FROM orders
-        """,
-        "groupby_agg": """
-            SELECT l_returnflag, l_linestatus,
-                   SUM(CAST(round(l_quantity * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_qty,
-                   SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_base_price,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "groupby_collect_list": """
-            SELECT user_id,
-                   array_to_string(list_sort(list(event_type)), ',') AS event_types,
-                   COUNT(*) AS n_events
-            FROM events GROUP BY user_id
-        """,
-        "distinct_dedup": "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
-        "projection_pipeline": """
-            SELECT l_orderkey AS order_id,
-                   CAST(l_linenumber AS BIGINT) AS line_no,
-                   COALESCE(l_returnflag, 'N') AS return_flag,
-                   CAST(floor(l_quantity) AS BIGINT) AS qty
-            FROM lineitem WHERE l_discount > 0.05
-        """,
-        "pipeline_core": f"""
-            SELECT trim(r_name) AS region_name, trim(n_name) AS nation_name,
-                   {seg_case} AS segment_it,
-                   CASE WHEN c_acctbal < 0 THEN 'DEBITORE'
-                        WHEN c_acctbal < 5000 THEN 'STANDARD'
-                        ELSE 'PREMIUM' END AS tier,
-                   COUNT(*) AS n_customers,
-                   SUM(CAST(round(c_acctbal * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_acctbal
-            FROM customer
-            LEFT JOIN nation ON c_nationkey = n_nationkey
-            LEFT JOIN region ON n_regionkey = r_regionkey
-            GROUP BY 1, 2, 3, 4
-        """,
-        "pipeline_poa": """
-            SELECT event_id, user_id,
-                   CASE WHEN lower(trim(event_type)) = 'click' THEN 'INTERACTION'
-                        WHEN lower(trim(event_type)) = 'view' THEN 'IMPRESSION'
-                        WHEN lower(trim(event_type)) = 'purchase' THEN 'CONVERSION' END AS event_class,
-                   CAST(ts AS TIMESTAMP) AS event_ts,
-                   CAST(round(value * 100) AS BIGINT) AS value_cents
-            FROM events WHERE event_type IN ('click', 'view', 'purchase')
-        """,
-        "pipeline_cronos": """
-            SELECT CAST(year(o_orderdate) AS INTEGER) AS plan_year, n_name AS nation_name,
-                   COUNT(*) AS n_orders,
-                   SUM(CAST(round(o_totalprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_value
-            FROM orders
-            LEFT JOIN customer ON o_custkey = c_custkey
-            LEFT JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY 1, 2
-        """,
-        "pipeline_healthcare_companies": f"""
-            SELECT lower(trim(CAST(s_suppkey AS VARCHAR))) AS id,
-                   {clean("'  ' || CAST(s_nationkey + 10 AS VARCHAR) || ' '")} AS code,
-                   {clean("s_name")} AS name,
-                   u.ulss_id
-            FROM supplier
-            LEFT JOIN (
-                SELECT lower(trim(CAST(n_nationkey AS VARCHAR))) AS ulss_id,
-                       CAST(n_nationkey + 10 AS VARCHAR) AS code
-                FROM nation WHERE n_nationkey < 20
-            ) u ON {clean("'  ' || CAST(s_nationkey + 10 AS VARCHAR) || ' '")} = u.code
-        """,
-        "pipeline_requirements": f"""
-            WITH base AS (
-                SELECT p_partkey, p_name,
-                       p_type AS testo, p_brand AS annotations_raw,
-                       CASE WHEN p_size % 7 = 0 THEN ' S '
-                            WHEN p_size % 7 = 1 THEN 'n' END AS validato,
-                       CASE WHEN p_size % 7 = 2 THEN 's' ELSE 'N' END AS annullato,
-                       CASE WHEN p_retailprice > 1200 THEN 's' ELSE 'n' END AS irrinunciabile,
-                       CASE WHEN p_partkey % 3 = 0 THEN ' Generale ' ELSE 'specifico' END AS tipo,
-                       CASE WHEN p_partkey % 11 <> 0
-                            THEN 'tax-' || CAST(p_partkey % 5 AS VARCHAR) END AS fk_gen,
-                       CASE WHEN p_partkey % 13 <> 0
-                            THEN 'tax-' || CAST(p_partkey % 7 AS VARCHAR) END AS fk_spec,
-                       'resp-' || CAST(p_partkey % 6 AS VARCHAR) AS fk_resp,
-                       TIMESTAMP '1993-03-01 00:00:00' + INTERVAL (p_partkey % 2500) DAY AS creation,
-                       CASE WHEN p_partkey % 5 <> 0
-                            THEN TIMESTAMP '1993-03-01 00:00:00' + INTERVAL (p_partkey % 2500) DAY
-                                 + INTERVAL (p_partkey % 60) DAY END AS last_mod,
-                       CASE WHEN p_size > 40 THEN 'S' ELSE 'N' END AS disabled
-                FROM part
-            ), resp AS (
-                SELECT 'resp-' || CAST(r_regionkey AS VARCHAR) AS fk_resp,
-                       replace(replace(upper(trim(r_name)), ' ', '_'), '/', '_') AS response_type
-                FROM region
-            )
-            SELECT lower(trim(CAST(p_partkey AS VARCHAR))) AS id,
-                   {clean("p_name")} AS name,
-                   {clean("testo")} AS text,
-                   trim(annotations_raw) AS annotations,
-                   CASE WHEN lower(trim(validato)) = 's' THEN 'VALIDATO'
-                        WHEN lower(trim(annullato)) = 's' THEN 'ANNULLATO'
-                        ELSE 'BOZZA' END AS state,
-                   lower(trim(irrinunciabile)) = 's' AS is_required,
-                   COALESCE(CASE WHEN lower(trim(tipo)) = 'generale'
-                                 THEN fk_gen ELSE fk_spec END,
-                            'rtax-fallback') AS requirement_taxonomy_id,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   resp.response_type
-            FROM base LEFT JOIN resp USING (fk_resp)
-        """,
-        "attribution_time_decay": """
-            WITH conv AS (
-                SELECT event_id AS conv_id, user_id, ts AS conv_ts
-                FROM events WHERE event_type = 'purchase'
-            ), tch AS (
-                SELECT user_id, event_type AS channel, ts AS touch_ts,
-                       event_id AS touch_id
-                FROM events WHERE event_type IN ('view', 'click')
-            ), j AS (
-                SELECT conv_id, channel, touch_ts, touch_id
-                FROM tch JOIN conv USING (user_id)
-                WHERE touch_ts < conv_ts AND touch_ts >= conv_ts - INTERVAL 7 DAY
-            ), r AS (
-                SELECT conv_id, channel,
-                       row_number() OVER (PARTITION BY conv_id
-                           ORDER BY touch_ts DESC, touch_id DESC) - 1 AS k
-                FROM j
-            )
-            SELECT channel,
-                   CAST(SUM(1 << (7 - k)) AS BIGINT) AS credit,
-                   CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_conversions
-            FROM r WHERE k < 8 GROUP BY channel
-        """,
-        "km_survival": """
-            WITH s AS (
-                SELECT user_id, MIN(ts) AS t0 FROM events
-                WHERE event_type = 'signup' GROUP BY user_id
-            ), p AS (
-                SELECT e.user_id, MIN(e.ts) AS t1
-                FROM events e JOIN s USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts > s.t0
-                GROUP BY e.user_id
-            ), m AS (SELECT MAX(ts) AS tmax FROM events),
-            subj AS (
-                SELECT date_diff('day', CAST(s.t0 AS DATE),
-                                 CAST(COALESCE(p.t1, m.tmax) AS DATE)) AS day,
-                       p.t1 IS NOT NULL AS ev
-                FROM s LEFT JOIN p USING (user_id), m
-            ), c AS (
-                SELECT day, COUNT(*) AS n_all,
-                       CAST(SUM(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS n_events
-                FROM subj GROUP BY day
-            ), r AS (
-                SELECT day, n_events,
-                       SUM(n_all) OVER (ORDER BY day DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-                FROM c
-            ), f AS (
-                SELECT day, CAST(n_risk AS BIGINT) AS n_risk, n_events,
-                       1.0 - CAST(n_events AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor
-                FROM r WHERE n_events > 0
-            )
-            SELECT day, n_risk, n_events,
-                   round(list_reduce(list(factor) OVER (ORDER BY day ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                       (a, b) -> a * b), 6) + 0.0 AS survival
-            FROM f
-        """,
-        "km_survival_ci": """
-            WITH s AS (
-                SELECT user_id, MIN(ts) AS t0 FROM events
-                WHERE event_type = 'signup' GROUP BY user_id
-            ), p AS (
-                SELECT e.user_id, MIN(e.ts) AS t1
-                FROM events e JOIN s USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts > s.t0
-                GROUP BY e.user_id
-            ), m AS (SELECT MAX(ts) AS tmax FROM events),
-            subj AS (
-                SELECT date_diff('day', CAST(s.t0 AS DATE),
-                                 CAST(COALESCE(p.t1, m.tmax) AS DATE)) AS day,
-                       p.t1 IS NOT NULL AS ev
-                FROM s LEFT JOIN p USING (user_id), m
-            ), c AS (
-                SELECT day, COUNT(*) AS n_all,
-                       CAST(SUM(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                           AS n_events
-                FROM subj GROUP BY day
-            ), r AS (
-                SELECT day, n_events,
-                       SUM(n_all) OVER (ORDER BY day DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS n_risk
-                FROM c
-            ), f AS (
-                SELECT day, CAST(n_risk AS BIGINT) AS n_risk, n_events,
-                       1.0 - CAST(n_events AS DOUBLE)
-                             / CAST(n_risk AS DOUBLE) AS factor,
-                       COALESCE(CASE WHEN n_risk > n_events THEN
-                           CAST(n_events AS DOUBLE)
-                           / (CAST(n_risk AS DOUBLE)
-                              * (CAST(n_risk AS DOUBLE)
-                                 - CAST(n_events AS DOUBLE))) END,
-                           CAST('nan' AS DOUBLE)) AS gterm
-                FROM r WHERE n_events > 0
-            ), ff AS (
-                SELECT day, n_risk, n_events,
-                       list_reduce(list(factor) OVER win, (a, b) -> a * b)
-                           AS sraw,
-                       list_reduce(list(gterm) OVER win, (a, b) -> a + b)
-                           AS vraw
-                FROM f
-                WINDOW win AS (ORDER BY day ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            ), gg AS (
-                SELECT day, n_risk, n_events, sraw,
-                       CASE WHEN NOT isnan(vraw) THEN vraw END AS v
-                FROM ff
-            ), hh AS (
-                SELECT *,
-                       CASE WHEN v IS NOT NULL AND sraw > 0 AND sraw < 1
-                            THEN sqrt(v) / abs(ln(sraw)) END AS sig
-                FROM gg
-            )
-            SELECT day, n_risk, n_events,
-                   round(sraw, 6) + 0.0 AS survival,
-                   round(CASE WHEN v IS NOT NULL
-                        THEN sraw * sqrt(v) END, 9) AS se_greenwood,
-                   round(CASE WHEN sig IS NOT NULL
-                        THEN pow(sraw, exp(1.96 * sig)) END, 9) AS ci_lo,
-                   round(CASE WHEN sig IS NOT NULL
-                        THEN pow(sraw, exp(-1.96 * sig)) END, 9) AS ci_hi
-            FROM hh
-        """,
-        "cascade_delete": """
-            WITH del_c AS (SELECT c_custkey FROM customer WHERE c_nationkey = 3),
-            del_o AS (SELECT o_orderkey FROM orders
-                      WHERE o_custkey IN (SELECT c_custkey FROM del_c)),
-            nl AS (SELECT COUNT(*) AS n FROM lineitem
-                   WHERE l_orderkey IN (SELECT o_orderkey FROM del_o))
-            SELECT 'root' AS table_name,
-                   (SELECT COUNT(*) FROM del_c) AS n_deleted,
-                   (SELECT COUNT(*) FROM customer) - (SELECT COUNT(*) FROM del_c) AS n_kept
-            UNION ALL
-            SELECT 'orders', (SELECT COUNT(*) FROM del_o),
-                   (SELECT COUNT(*) FROM orders) - (SELECT COUNT(*) FROM del_o)
-            UNION ALL
-            SELECT 'lineitem', (SELECT n FROM nl),
-                   (SELECT COUNT(*) FROM lineitem) - (SELECT n FROM nl)
-        """,
-        "jaccard_prefix_join": """
-            WITH d AS (
-                SELECT doc_id,
-                       list_filter(list_distinct(
-                           string_split_regex(trim(lower(text)), '\\s+')),
-                           t -> t != '') AS toks
-                FROM documents WHERE doc_id % 11 = 0
-            ), dd AS (
-                SELECT doc_id, toks, len(toks) AS sz FROM d WHERE len(toks) > 0
-            ), p AS (
-                SELECT a.doc_id AS l_id, b.doc_id AS r_id,
-                       len(list_intersect(a.toks, b.toks)) AS inter,
-                       a.sz + b.sz AS szs
-                FROM dd a JOIN dd b ON a.doc_id < b.doc_id
-            )
-            SELECT l_id, r_id,
-                   round(CAST(inter AS DOUBLE) / (szs - inter), 6) + 0.0 AS jaccard
-            FROM p WHERE CAST(inter AS DOUBLE) / (szs - inter) >= 0.5
-        """,
-        "quantile_normalize": """
-            WITH scored AS (
-                SELECT doc_id, source, n_chars AS score,
-                       percent_rank() OVER (PARTITION BY source
-                                            ORDER BY n_chars ASC) AS pct
-                FROM documents
-            ), ref AS (
-                SELECT DISTINCT pct AS r_pct, score AS r_val
-                FROM scored WHERE source = 'src0'
-            )
-            SELECT s.doc_id, s.source, s.score, r.r_val AS normalized
-            FROM scored s ASOF JOIN ref r ON s.pct >= r.r_pct
-        """,
-        "remove_duplicate_spans": """
-            WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                       FROM documents),
-            g AS (SELECT doc_id, i AS s, md5(array_to_string(toks[i : i + 7], ' ')) AS gk
-                  FROM t, unnest(range(1, len(toks) - 6)) AS u(i)),
-            o AS (SELECT gk, MIN(doc_id) AS owner FROM g
-                  GROUP BY gk HAVING MIN(doc_id) <> MAX(doc_id)),
-            m AS (SELECT g.doc_id, g.s FROM g JOIN o USING (gk)
-                  WHERE g.doc_id <> o.owner),
-            cov AS (SELECT DISTINCT doc_id, s + j AS p
-                    FROM m, unnest(range(0, 8)) AS v(j)),
-            tok AS (SELECT doc_id, i AS p, toks[i] AS tok
-                    FROM t, unnest(range(1, len(toks) + 1)) AS u(i)),
-            kept AS (SELECT tok.doc_id, tok.p, tok.tok
-                     FROM tok LEFT JOIN cov
-                       ON tok.doc_id = cov.doc_id AND tok.p = cov.p
-                     WHERE cov.p IS NULL),
-            r AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text,
-                         COUNT(*) AS nk
-                  FROM kept GROUP BY doc_id)
-            SELECT t.doc_id,
-                   COALESCE(r.clean_text, '') AS clean_text,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CAST(len(toks) - COALESCE(r.nk, 0) AS BIGINT) AS n_removed
-            FROM t LEFT JOIN r USING (doc_id)
-        """,
-        "apply_cdc_log": """
-            SELECT user_id, event_type, value_cents
-            FROM (SELECT user_id, event_type,
-                         CAST(round(value * 100) AS BIGINT) AS value_cents,
-                         row_number() OVER (PARTITION BY user_id
-                                            ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events)
-            WHERE rn = 1 AND event_type <> 'error'
-        """,
-        "seasonal_anomaly": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                       COUNT(*) AS n
-                FROM events GROUP BY 1, 2
-            ), lagged AS (
-                SELECT *, lag(n, 7) OVER (PARTITION BY event_type
-                                          ORDER BY day) AS forecast
-                FROM daily
-            ), r AS (
-                SELECT event_type, day, n, CAST(forecast AS BIGINT) AS forecast,
-                       CAST(n - forecast AS BIGINT) AS residual
-                FROM lagged WHERE forecast IS NOT NULL
-            ), med AS (
-                SELECT event_type, quantile_cont(residual, 0.5) AS m
-                FROM r GROUP BY event_type
-            ), mad AS (
-                SELECT r.event_type,
-                       quantile_cont(abs(CAST(r.residual AS DOUBLE) - med.m), 0.5) AS mad,
-                       avg(abs(CAST(r.residual AS DOUBLE) - med.m)) AS meanad
-                FROM r JOIN med USING (event_type)
-                GROUP BY r.event_type
-            ), scored AS (
-                SELECT r.event_type, r.day, r.n, r.forecast, r.residual,
-                       round(CASE WHEN mad.mad > 0
-                                  THEN 0.6745 * (CAST(r.residual AS DOUBLE) - med.m) / mad.mad
-                                  WHEN mad.meanad > 0
-                                  THEN 0.7979 * (CAST(r.residual AS DOUBLE) - med.m) / mad.meanad
-                                  ELSE 0.0 END, 6) AS robust_z
-                FROM r JOIN med USING (event_type) JOIN mad USING (event_type)
-            )
-            SELECT * FROM scored WHERE abs(robust_z) > 2.0
-        """,
-        "parse_json_quarantine": """
-            WITH raw AS (
-                SELECT o_orderkey,
-                       '{"key":' || CAST(o_orderkey AS VARCHAR)
-                       || ',"price_cents":'
-                       || CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)
-                       || ',"status":"' || o_orderstatus || '"}' AS full_json
-                FROM orders
-            )
-            SELECT o_orderkey,
-                   CASE WHEN o_orderkey % 7 <> 0 THEN o_orderkey END AS key,
-                   CASE WHEN o_orderkey % 7 <> 0
-                        THEN CAST(round(o_totalprice * 100) AS BIGINT) END
-                       AS price_cents,
-                   CASE WHEN o_orderkey % 7 <> 0 THEN o_orderstatus END AS status,
-                   o_orderkey % 7 <> 0 AS ok,
-                   CASE WHEN o_orderkey % 7 = 0
-                        THEN substr(full_json, 1, 10) END AS corrupt_raw
-            FROM raw JOIN orders USING (o_orderkey)
-        """,
-        "sequence_match": """
-            SELECT user_id,
-                   string_agg(substr(event_type, 1, 1), ''
-                              ORDER BY ts, event_id) AS symbol_seq,
-                   CAST(len(regexp_extract_all(
-                       string_agg(substr(event_type, 1, 1), ''
-                                  ORDER BY ts, event_id),
-                       'vc*p')) AS INT) AS n_matches
-            FROM events GROUP BY user_id
-        """,
-        "agg_state_merge": """
-            SELECT user_id,
-                   COUNT(*) AS n,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                       AS sum_cents,
-                   MIN(CAST(round(value * 100) AS BIGINT)) AS min_cents,
-                   MAX(CAST(round(value * 100) AS BIGINT)) AS max_cents
-            FROM events GROUP BY user_id
-        """,
-        "jl_project": _jl_sql(16, 64),
-        "personalized_pagerank": _ppr_sql(),
-        "collocations": """
-            WITH t AS (
-                SELECT string_split_regex(trim(lower(COALESCE(text, ''))),
-                                          '\\s+') AS toks
-                FROM documents
-            ), uni AS (
-                SELECT w, COUNT(*) AS c FROM (
-                    SELECT unnest(toks) AS w FROM t
-                ) WHERE w <> '' GROUP BY w
-            ), tot AS (
-                SELECT CAST(SUM(c) AS BIGINT) AS n FROM uni
-            ), pairs AS (
-                SELECT w1, w2, COUNT(*) AS n_pair FROM (
-                    SELECT toks[i] AS w1, toks[i + 1] AS w2
-                    FROM t, unnest(range(1, len(toks))) AS u(i)
-                ) WHERE w1 <> '' AND w2 <> ''
-                GROUP BY w1, w2 HAVING COUNT(*) >= 5
-            )
-            SELECT w1, w2, CAST(n_pair AS BIGINT) AS n_pair,
-                   round(CAST(CAST(n_pair AS DECIMAL(38,0))
-                              * CAST(n AS DECIMAL(38,0)) AS DOUBLE)
-                         / (CAST(c1.c AS DOUBLE) * c2.c), 6) + 0.0 AS lift
-            FROM pairs
-            JOIN uni c1 ON c1.w = pairs.w1
-            JOIN uni c2 ON c2.w = pairs.w2
-            CROSS JOIN tot
-            ORDER BY lift DESC, n_pair DESC, w1, w2
-            LIMIT 50
-        """,
-        "growth_accounting": """
-            WITH act AS (
-                SELECT DISTINCT user_id AS k,
-                       CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS p
-                FROM events
-            ), cl AS (
-                SELECT p,
-                       lag(p)  OVER (PARTITION BY k ORDER BY p) AS prev,
-                       lead(p) OVER (PARTITION BY k ORDER BY p) AS nxt
-                FROM act
-            ), bs AS (
-                SELECT p,
-                       CAST(SUM(CASE WHEN prev IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-                       CAST(SUM(CASE WHEN prev = p - 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
-                       CAST(SUM(CASE WHEN prev IS NOT NULL AND prev < p - 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
-                FROM cl GROUP BY p
-            ), mx AS (
-                SELECT MAX(p) AS mp FROM act
-            ), ch AS (
-                SELECT p + 1 AS p, CAST(COUNT(*) AS BIGINT) AS n_churned
-                FROM cl, mx
-                WHERE (nxt IS NULL OR nxt > p + 1) AND p + 1 <= mp
-                GROUP BY p + 1
-            )
-            SELECT COALESCE(bs.p, ch.p) AS period,
-                   COALESCE(n_new, 0) AS n_new,
-                   COALESCE(n_retained, 0) AS n_retained,
-                   COALESCE(n_resurrected, 0) AS n_resurrected,
-                   COALESCE(n_churned, 0) AS n_churned
-            FROM bs FULL OUTER JOIN ch ON bs.p = ch.p
-        """,
-        "log2_histogram": """
-            WITH b AS (
-                SELECT CAST(length(printf('%b', x)) - 1 AS INT) AS bin, x
-                FROM (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS x
-                      FROM orders)
-                WHERE x > 0
-            )
-            SELECT bin,
-                   CAST(1 AS BIGINT) << bin AS lo,
-                   (CAST(1 AS BIGINT) << (bin + 1)) - 1 AS hi,
-                   COUNT(*) AS n_rows,
-                   CAST(SUM(x) AS BIGINT) AS total
-            FROM b GROUP BY bin
-        """,
-        "bpe_merges": """
-            WITH w0 AS MATERIALIZED (
-                SELECT trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS sym,
-                       CAST(COUNT(*) AS BIGINT) AS n
-                FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-                      FROM documents)
-                WHERE regexp_matches(w, '^[a-z0-9]+$')
-                GROUP BY w
-            ),
-            p0 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w0),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m0 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p0 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w1 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m0) || ' ' || (SELECT r FROM m0) || ' ',
-                        ' ' || (SELECT l FROM m0) || (SELECT r FROM m0) || ' ')) AS sym, n
-                FROM w0
-            ),
-            p1 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w1),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m1 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p1 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w2 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m1) || ' ' || (SELECT r FROM m1) || ' ',
-                        ' ' || (SELECT l FROM m1) || (SELECT r FROM m1) || ' ')) AS sym, n
-                FROM w1
-            ),
-            p2 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w2),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m2 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p2 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w3 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m2) || ' ' || (SELECT r FROM m2) || ' ',
-                        ' ' || (SELECT l FROM m2) || (SELECT r FROM m2) || ' ')) AS sym, n
-                FROM w2
-            ),
-            p3 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w3),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m3 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p3 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w4 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m3) || ' ' || (SELECT r FROM m3) || ' ',
-                        ' ' || (SELECT l FROM m3) || (SELECT r FROM m3) || ' ')) AS sym, n
-                FROM w3
-            ),
-            p4 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w4),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m4 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p4 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w5 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m4) || ' ' || (SELECT r FROM m4) || ' ',
-                        ' ' || (SELECT l FROM m4) || (SELECT r FROM m4) || ' ')) AS sym, n
-                FROM w4
-            ),
-            p5 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w5),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m5 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p5 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w6 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m5) || ' ' || (SELECT r FROM m5) || ' ',
-                        ' ' || (SELECT l FROM m5) || (SELECT r FROM m5) || ' ')) AS sym, n
-                FROM w5
-            )
-            SELECT * FROM (
-                SELECT CAST(0 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m0
-                UNION ALL SELECT CAST(1 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m1
-                UNION ALL SELECT CAST(2 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m2
-                UNION ALL SELECT CAST(3 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m3
-                UNION ALL SELECT CAST(4 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m4
-                UNION ALL SELECT CAST(5 AS BIGINT) AS rank, l AS lft, r AS rgt, cnt AS pair_count FROM m5
-            ) ORDER BY rank
-        """,
-        "bpe_segment": """
-            WITH w0 AS MATERIALIZED (
-                SELECT trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS sym,
-                       CAST(COUNT(*) AS BIGINT) AS n
-                FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-                      FROM documents)
-                WHERE regexp_matches(w, '^[a-z0-9]+$')
-                GROUP BY w
-            ),
-            p0 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w0),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m0 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p0 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w1 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m0) || ' ' || (SELECT r FROM m0) || ' ',
-                        ' ' || (SELECT l FROM m0) || (SELECT r FROM m0) || ' ')) AS sym, n
-                FROM w0
-            ),
-            p1 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w1),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m1 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p1 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w2 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m1) || ' ' || (SELECT r FROM m1) || ' ',
-                        ' ' || (SELECT l FROM m1) || (SELECT r FROM m1) || ' ')) AS sym, n
-                FROM w1
-            ),
-            p2 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w2),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m2 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p2 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w3 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m2) || ' ' || (SELECT r FROM m2) || ' ',
-                        ' ' || (SELECT l FROM m2) || (SELECT r FROM m2) || ' ')) AS sym, n
-                FROM w2
-            ),
-            p3 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w3),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m3 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p3 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w4 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m3) || ' ' || (SELECT r FROM m3) || ' ',
-                        ' ' || (SELECT l FROM m3) || (SELECT r FROM m3) || ' ')) AS sym, n
-                FROM w3
-            ),
-            p4 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w4),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m4 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p4 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w5 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m4) || ' ' || (SELECT r FROM m4) || ' ',
-                        ' ' || (SELECT l FROM m4) || (SELECT r FROM m4) || ' ')) AS sym, n
-                FROM w4
-            ),
-            p5 AS MATERIALIZED (
-                SELECT s[i] AS l, s[i+1] AS r, CAST(SUM(n) AS BIGINT) AS cnt
-                FROM (SELECT string_split(sym, ' ') AS s, n FROM w5),
-                     LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i)
-                GROUP BY 1, 2
-            ), m5 AS MATERIALIZED (
-                SELECT l, r, cnt FROM p5 ORDER BY cnt DESC, l, r LIMIT 1
-            ),
-            w6 AS MATERIALIZED (
-                SELECT trim(replace(' ' || sym || ' ',
-                        ' ' || (SELECT l FROM m5) || ' ' || (SELECT r FROM m5) || ' ',
-                        ' ' || (SELECT l FROM m5) || (SELECT r FROM m5) || ' ')) AS sym, n
-                FROM w5
-            ),
-            toks AS MATERIALIZED (
-                SELECT doc_id, w FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-                    FROM documents)
-                WHERE regexp_matches(w, '^[a-z0-9]+$')
-            )
-            SELECT doc_id,
-                   CAST(SUM(len(string_split(trim(replace(replace(replace(replace(replace(replace(' ' || trim(regexp_replace(w, '(.)', '\\1 ', 'g')) || ' ', ' ' || (SELECT l FROM m0) || ' ' || (SELECT r FROM m0) || ' ', ' ' || (SELECT l FROM m0) || (SELECT r FROM m0) || ' '), ' ' || (SELECT l FROM m1) || ' ' || (SELECT r FROM m1) || ' ', ' ' || (SELECT l FROM m1) || (SELECT r FROM m1) || ' '), ' ' || (SELECT l FROM m2) || ' ' || (SELECT r FROM m2) || ' ', ' ' || (SELECT l FROM m2) || (SELECT r FROM m2) || ' '), ' ' || (SELECT l FROM m3) || ' ' || (SELECT r FROM m3) || ' ', ' ' || (SELECT l FROM m3) || (SELECT r FROM m3) || ' '), ' ' || (SELECT l FROM m4) || ' ' || (SELECT r FROM m4) || ' ', ' ' || (SELECT l FROM m4) || (SELECT r FROM m4) || ' '), ' ' || (SELECT l FROM m5) || ' ' || (SELECT r FROM m5) || ' ', ' ' || (SELECT l FROM m5) || (SELECT r FROM m5) || ' ')), ' '))) AS BIGINT)
-                       AS n_bpe_tokens
-            FROM toks GROUP BY doc_id
-        """,
-        "manifest_pruned_read": """
-            SELECT o_custkey,
-                   CAST(COUNT(*) AS BIGINT) AS n_orders,
-                   CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                       AS sum_cents
-            FROM orders
-            WHERE o_custkey IS NOT NULL AND o_custkey BETWEEN 100 AND 400
-            GROUP BY o_custkey
-        """,
-        "ivm_agg_update": """
-            WITH o AS (
-                SELECT o_orderkey, o_custkey,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), final AS (
-                SELECT o_custkey,
-                       CASE WHEN o_orderkey % 97 = 0 AND o_orderkey % 100 <> 1
-                            THEN cents + 1000 ELSE cents END AS cents
-                FROM o
-                WHERE o_orderkey % 500 <> 3 AND o_orderkey % 100 <> 1
-                UNION ALL
-                SELECT o_custkey, cents FROM o WHERE o_orderkey % 500 = 3
-            )
-            SELECT o_custkey,
-                   CAST(COUNT(*) AS BIGINT) AS n_rows,
-                   CAST(SUM(cents) AS BIGINT) AS sum_cents
-            FROM final GROUP BY o_custkey
-        """,
-        "kmv_distinct": """
-            WITH h AS (
-                SELECT DISTINCT c_mktsegment AS seg,
-                       CAST('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12)
-                            AS BIGINT) AS h
-                FROM customer WHERE c_custkey IS NOT NULL
-            ), sk AS (
-                SELECT seg, list_slice(list(h ORDER BY h), 1, 16) AS hs
-                FROM h GROUP BY seg
-            )
-            SELECT seg AS c_mktsegment,
-                   CAST(len(hs) AS INT) AS n_hashes,
-                   CASE WHEN len(hs) < 16 THEN CAST(len(hs) AS DOUBLE)
-                        ELSE CAST(15 AS DOUBLE) * CAST(281474976710656 AS DOUBLE)
-                             / CAST(hs[16] AS DOUBLE) END AS est_distinct
-            FROM sk
-        """,
-        "l_diversity": """
-            SELECT o_orderpriority, o_orderstatus,
-                   CAST(COUNT(*) AS BIGINT) AS class_size,
-                   CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_sensitive,
-                   COUNT(DISTINCT o_custkey) >= 5 AS is_l_diverse
-            FROM orders GROUP BY 1, 2
-        """,
-        "kmv_overlap": """
-            WITH h AS (
-                SELECT DISTINCT event_type AS seg,
-                       CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)
-                            AS BIGINT) AS h
-                FROM events WHERE user_id IS NOT NULL
-            ), sk AS (
-                SELECT seg, list_slice(list(h ORDER BY h), 1, 16) AS hs
-                FROM h GROUP BY seg
-            ), p AS (
-                SELECT s1.seg AS g1, s1.hs AS ha, s2.seg AS g2, s2.hs AS hb
-                FROM sk s1, sk s2 WHERE s1.seg < s2.seg
-            ), c AS (
-                SELECT g1, g2, ha, hb,
-                       list_slice(list_sort(list_distinct(ha || hb)), 1, 16) AS u
-                FROM p
-            )
-            SELECT g1, g2,
-                   CAST(len(u) AS INT) AS k_used,
-                   CAST(len(list_intersect(list_intersect(u, ha), hb)) AS INT)
-                       AS n_shared,
-                   CAST(len(list_intersect(list_intersect(u, ha), hb)) AS DOUBLE)
-                       / CAST(len(u) AS DOUBLE) AS jaccard
-            FROM c
-        """,
-        "repair_monotonic": """
-            SELECT user_id, event_id,
-                   max(ts) OVER (PARTITION BY user_id ORDER BY event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS ts_repaired,
-                   max(ts) OVER (PARTITION BY user_id ORDER BY event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       <> ts AS was_reordered
-            FROM events
-        """,
-        "counter_increase": """
-            WITH s AS (
-                SELECT user_id,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       lag(CAST(round(value * 100) AS BIGINT)) OVER (
-                           PARTITION BY user_id
-                           ORDER BY ts, CAST(round(value * 100) AS BIGINT)
-                       ) AS prev
-                FROM events
-            )
-            SELECT user_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_samples,
-                   CAST(SUM(CASE WHEN prev IS NOT NULL AND cents < prev
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_resets,
-                   CAST(SUM(CASE WHEN prev IS NULL THEN 0
-                                 WHEN cents >= prev THEN cents - prev
-                                 ELSE cents END) AS BIGINT) AS total_increase
-            FROM s GROUP BY user_id
-        """,
-        "diff_in_diff": """
-            WITH c AS (
-                SELECT (user_id % 2 = 0) AS treat,
-                       (ts >= TIMESTAMP '2024-02-01') AS post,
-                       CAST(round(value * 100) AS BIGINT) AS cents
-                FROM events
-            ), agg AS (
-                SELECT
-                    CAST(SUM(CASE WHEN treat AND post THEN 1 ELSE 0 END) AS BIGINT) AS n_t_post,
-                    CAST(SUM(CASE WHEN treat AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS n_t_pre,
-                    CAST(SUM(CASE WHEN NOT treat AND post THEN 1 ELSE 0 END) AS BIGINT) AS n_c_post,
-                    CAST(SUM(CASE WHEN NOT treat AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS n_c_pre,
-                    SUM(CASE WHEN treat AND post THEN cents ELSE 0 END) AS s_t_post,
-                    SUM(CASE WHEN treat AND NOT post THEN cents ELSE 0 END) AS s_t_pre,
-                    SUM(CASE WHEN NOT treat AND post THEN cents ELSE 0 END) AS s_c_post,
-                    SUM(CASE WHEN NOT treat AND NOT post THEN cents ELSE 0 END) AS s_c_pre
-                FROM c
-            )
-            SELECT n_t_post, n_t_pre, n_c_post, n_c_pre,
-                   round(CAST(s_t_post AS DOUBLE) / n_t_post, 9) + 0.0 AS mean_t_post,
-                   round(CAST(s_t_pre AS DOUBLE) / n_t_pre, 9) + 0.0 AS mean_t_pre,
-                   round(CAST(s_c_post AS DOUBLE) / n_c_post, 9) + 0.0 AS mean_c_post,
-                   round(CAST(s_c_pre AS DOUBLE) / n_c_pre, 9) + 0.0 AS mean_c_pre,
-                   round((CAST(s_t_post AS DOUBLE) / n_t_post
-                          - CAST(s_t_pre AS DOUBLE) / n_t_pre)
-                         - (CAST(s_c_post AS DOUBLE) / n_c_post
-                            - CAST(s_c_pre AS DOUBLE) / n_c_pre), 9) + 0.0 AS did
-            FROM agg
-        """,
-        "select_under_budget": """
-            WITH d AS (
-                SELECT doc_id,
-                       CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-                           AS n_tokens
-                FROM documents
-            ), c AS (
-                SELECT doc_id, n_tokens,
-                       SUM(n_tokens) OVER (ORDER BY n_tokens DESC, doc_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                           AND CURRENT ROW) AS cum_tokens
-                FROM d
-            )
-            SELECT doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-            FROM c WHERE cum_tokens <= 50000
-        """,
-        "subset_closure": """
-            WITH o AS (
-                SELECT * FROM orders
-                WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4) < '03d7'
-            )
-            SELECT 'orders' AS tbl, CAST(COUNT(*) AS BIGINT) AS n FROM o
-            UNION ALL
-            SELECT 'lineitem', CAST(COUNT(*) AS BIGINT) FROM lineitem
-            WHERE l_orderkey IN (SELECT o_orderkey FROM o)
-            UNION ALL
-            SELECT 'customer', CAST(COUNT(*) AS BIGINT) FROM customer
-            WHERE c_custkey IN (SELECT o_custkey FROM o)
-            UNION ALL
-            SELECT 'dangling', CAST(0 AS BIGINT)
-        """,
-        "interpolate_linear": """
-            WITH s AS (
-                SELECT user_id, event_id, epoch_us(ts) AS us,
-                       CASE WHEN event_id % 7 <> 0
-                            THEN CAST(round(value * 100) AS BIGINT) END AS cents
-                FROM events
-            ), w AS (
-                SELECT user_id, event_id,
-                       CAST(us AS DOUBLE) AS t, cents,
-                       last_value(cents IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS pv,
-                       CAST(last_value(CASE WHEN cents IS NOT NULL THEN us END
-                                       IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS DOUBLE) AS pt,
-                       first_value(cents IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY us, event_id
-                           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                       ) AS nv,
-                       CAST(first_value(CASE WHEN cents IS NOT NULL THEN us END
-                                        IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY us, event_id
-                           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                       ) AS DOUBLE) AS nt
-                FROM s
-            )
-            SELECT user_id, event_id,
-                   CASE WHEN cents IS NOT NULL THEN CAST(cents AS DOUBLE)
-                        WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                            round(CAST(pv AS DOUBLE)
-                                  + (CAST(nv AS DOUBLE) - CAST(pv AS DOUBLE))
-                                    * (t - pt) / (nt - pt), 9) + 0.0
-                        END AS value_interp
-            FROM w
-        """,
-        "collapse_rare_levels": """
-            WITH o AS (
-                SELECT o_orderkey, CAST(o_custkey % 97 AS VARCHAR) AS bucket
-                FROM orders
-            ), freq AS (
-                SELECT bucket FROM o WHERE bucket IS NOT NULL
-                GROUP BY bucket HAVING COUNT(*) >= 100
-            )
-            SELECT CASE WHEN o.bucket IS NULL THEN NULL
-                        WHEN f.bucket IS NOT NULL THEN o.bucket
-                        ELSE '__other__' END AS level,
-                   CAST(COUNT(*) AS BIGINT) AS n_rows
-            FROM o LEFT JOIN freq f ON o.bucket = f.bucket
-            GROUP BY 1
-        """,
-        "fdr_bh": f"""
-            WITH per AS (
-                SELECT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour,
-                       COUNT(*) AS n,
-                       SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS k
-                FROM events GROUP BY 1
-            ), tot AS (
-                SELECT SUM(n) AS nn, SUM(k) AS kk FROM per
-            ), zs AS (
-                SELECT hour,
-                       (CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
-                        - CAST(kk - k AS DOUBLE) / CAST(nn - n AS DOUBLE))
-                       / sqrt((CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))
-                              * (1 - CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))
-                              * (1 / CAST(n AS DOUBLE) + 1 / CAST(nn - n AS DOUBLE)))
-                       AS z
-                FROM per, tot
-            ), ps AS (
-                SELECT hour, LEAST(1.0, 2.0 * {NORMAL_SF_SQL_ABS_Z}) AS pv FROM zs
-            ), ranked AS (
-                SELECT hour, pv,
-                       row_number() OVER (ORDER BY pv, hour) AS p_rank,
-                       COUNT(*) OVER () AS m
-                FROM ps
-            )
-            SELECT hour AS key, round(pv, 6) AS p, CAST(p_rank AS BIGINT) AS p_rank,
-                   round(LEAST(1.0, MIN(pv * CAST(m AS DOUBLE) / CAST(p_rank AS DOUBLE))
-                         OVER (ORDER BY pv DESC, hour DESC
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-                       AS p_adj,
-                   round(LEAST(1.0, MIN(pv * CAST(m AS DOUBLE) / CAST(p_rank AS DOUBLE))
-                         OVER (ORDER BY pv DESC, hour DESC
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-                       <= 0.05 AS significant
-            FROM ranked
-        """,
-        "randomization_test": """
-            WITH two AS (
-                SELECT o_orderkey AS id,
-                       (o_orderpriority = '1-URGENT') AS is_a,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-                WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-            ), obs AS (
-                SELECT CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                       CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-                       SUM(CASE WHEN is_a THEN v ELSE 0 END) AS sa,
-                       SUM(CASE WHEN is_a THEN 0 ELSE v END) AS sb
-                FROM two
-            ), obs2 AS (
-                SELECT n_a, n_b,
-                       CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE)
-                       - CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE) AS observed_diff
-                FROM obs
-            ), lab AS (
-                SELECT p._perm, t.v,
-                       list_reduce(list_transform(range(1, 9), i ->
-                           CAST(strpos('0123456789abcdef',
-                                substr(md5(concat_ws(':', 'art', CAST(p._perm AS VARCHAR),
-                                                     CAST(t.id AS VARCHAR))), i, 1)) - 1
-                                AS BIGINT)),
-                           (a, b) -> a * 16 + b)
-                       * (o.n_a + o.n_b) < o.n_a * 4294967296 AS to_a
-                FROM two t
-                CROSS JOIN (SELECT unnest(range(1, 200)) AS _perm) p
-                CROSS JOIN obs2 o
-            ), per AS (
-                SELECT _perm,
-                       SUM(CASE WHEN to_a THEN 1 ELSE 0 END) AS pna,
-                       SUM(CASE WHEN to_a THEN 0 ELSE 1 END) AS pnb,
-                       SUM(CASE WHEN to_a THEN v ELSE 0 END) AS psa,
-                       SUM(CASE WHEN to_a THEN 0 ELSE v END) AS psb
-                FROM lab GROUP BY 1
-            ), diffs AS (
-                SELECT CAST(psa AS DOUBLE) / CAST(pna AS DOUBLE)
-                       - CAST(psb AS DOUBLE) / CAST(pnb AS DOUBLE) AS pdiff
-                FROM per WHERE pna > 0 AND pnb > 0
-            ), tallied AS (
-                SELECT MAX(o.n_a) AS n_a, MAX(o.n_b) AS n_b,
-                       MAX(o.observed_diff) AS observed_diff,
-                       CAST(COUNT(*) AS BIGINT) AS n_perms_used,
-                       CAST(SUM(CASE WHEN abs(pdiff) >= abs(o.observed_diff)
-                                     THEN 1 ELSE 0 END) AS BIGINT) AS n_extreme
-                FROM diffs CROSS JOIN obs2 o
-            )
-            SELECT n_a, n_b, round(observed_diff, 9) AS observed_diff,
-                   n_perms_used, n_extreme,
-                   round(CAST(n_extreme + 1 AS DOUBLE)
-                         / CAST(n_perms_used + 1 AS DOUBLE), 9) AS p_value
-            FROM tallied
-        """,
-        "holm_bonferroni": f"""
-            WITH per AS (
-                SELECT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour,
-                       COUNT(*) AS n,
-                       SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS k
-                FROM events GROUP BY 1
-            ), tot AS (
-                SELECT SUM(n) AS nn, SUM(k) AS kk FROM per
-            ), zs AS (
-                SELECT hour,
-                       (CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
-                        - CAST(kk - k AS DOUBLE) / CAST(nn - n AS DOUBLE))
-                       / sqrt((CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))
-                              * (1 - CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))
-                              * (1 / CAST(n AS DOUBLE) + 1 / CAST(nn - n AS DOUBLE)))
-                       AS z
-                FROM per, tot
-            ), ps AS (
-                SELECT hour, LEAST(1.0, 2.0 * {NORMAL_SF_SQL_ABS_Z}) AS pv FROM zs
-            ), ranked AS (
-                SELECT hour, pv,
-                       row_number() OVER (ORDER BY pv, hour) AS p_rank,
-                       COUNT(*) OVER () AS m
-                FROM ps
-            )
-            SELECT hour AS key, round(pv, 6) AS p, CAST(p_rank AS BIGINT) AS p_rank,
-                   round(LEAST(1.0, MAX(pv * CAST(m + 1 - p_rank AS DOUBLE))
-                         OVER (ORDER BY pv, hour
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-                       AS p_adj,
-                   round(LEAST(1.0, MAX(pv * CAST(m + 1 - p_rank AS DOUBLE))
-                         OVER (ORDER BY pv, hour
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-                       <= 0.05 AS significant
-            FROM ranked
-        """,
-        "cohen_kappa": f"""
-            WITH pairs AS (
-                SELECT lang AS gold, {_langid_sql("text")} AS pred FROM documents
-                WHERE lang IS NOT NULL
-            ), pa AS (
-                SELECT gold AS g, CAST(COUNT(*) AS HUGEINT) AS na FROM pairs GROUP BY 1
-            ), pb AS (
-                SELECT pred AS g, CAST(COUNT(*) AS HUGEINT) AS nb FROM pairs GROUP BY 1
-            ), pe AS (
-                SELECT SUM(na * nb) AS pe_num FROM pa JOIN pb USING (g)
-            ), c AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(CASE WHEN gold = pred THEN 1 ELSE 0 END) AS HUGEINT)
-                           AS agree
-                FROM pairs
-            )
-            SELECT CAST(n AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
-                   round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 9) AS po,
-                   round(CAST(pe_num AS DOUBLE) / CAST(n * n AS DOUBLE), 9) AS pe,
-                   round(CAST(agree * n - pe_num AS DOUBLE)
-                         / CAST(n * n - pe_num AS DOUBLE), 9) AS kappa
-            FROM c, pe
-        """,
-        "matched_pairs": """
-            WITH base AS (
-                SELECT c_custkey AS key,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS score,
-                       (c_mktsegment = 'BUILDING') AS t
-                FROM customer
-            ), b2 AS (
-                SELECT *, CAST(FLOOR(CAST(score AS DOUBLE) / 100000) AS BIGINT)
-                           AS bucket
-                FROM base
-            ), r AS (
-                SELECT *, row_number() OVER (PARTITION BY bucket, t
-                                             ORDER BY score, key) AS pr
-                FROM b2
-            )
-            SELECT tr.bucket, CAST(tr.pr AS BIGINT) AS pair_rank,
-                   tr.key AS treated_key, tr.score AS treated_score,
-                   c.key AS control_key, c.score AS control_score
-            FROM r tr JOIN r c ON tr.bucket = c.bucket AND tr.pr = c.pr
-                               AND tr.t AND NOT c.t
-        """,
-        "label_propagation": _lpa_sql(3),
-        "modularity": _lpa_cte(3) + """, lab AS (
-                SELECT node, label FROM l3
-            ), twom AS (
-                SELECT COUNT(*) AS twom FROM und
-            ), inc AS (
-                SELECT ls.label, COUNT(*) AS inc
-                FROM und e JOIN lab ls ON ls.node = e.src
-                           JOIN lab ld ON ld.node = e.dst
-                WHERE ls.label = ld.label GROUP BY 1
-            ), deg AS (
-                SELECT src, COUNT(*) AS d FROM und GROUP BY 1
-            ), dc AS (
-                SELECT l.label, SUM(CAST(d AS HUGEINT)) AS dc
-                FROM deg JOIN lab l ON l.node = deg.src GROUP BY 1
-            ), per AS (
-                SELECT dc.label, CAST(COALESCE(inc.inc, 0) AS HUGEINT) AS inc, dc.dc
-                FROM dc LEFT JOIN inc USING (label)
-            ), qq AS (
-                SELECT label,
-                       CAST(inc AS DOUBLE) / CAST(twom AS DOUBLE)
-                       - CAST(dc * dc AS DOUBLE)
-                         / CAST(CAST(twom AS HUGEINT) * CAST(twom AS HUGEINT) AS DOUBLE)
-                           AS q
-                FROM per, twom
-            ), agg AS (
-                SELECT COUNT(*) AS n_communities,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(q ORDER BY label)),
-                                   (x, y) -> x + y) AS qsum
-                FROM qq
-            ), nn AS (
-                SELECT COUNT(*) AS n_nodes FROM lab
-            )
-            SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-                   CAST(n_communities AS BIGINT) AS n_communities,
-                   CAST(twom / 2 AS BIGINT) AS m_edges,
-                   round(qsum, 9) AS modularity
-            FROM nn, agg, twom
-        """,
-        "geohash_cells": f"""
-            WITH o AS (
-                SELECT ((o_custkey % 17000) / 100.0 - 85.0) AS lat,
-                       ((o_orderkey % 35000) / 100.0 - 175.0) AS lon
-                FROM orders
-            ), cells AS (
-                SELECT {_GH["concat"]} AS cell
-                FROM o,
-                     LATERAL (SELECT {_GH["lonq"]} AS lonq,
-                                     {_GH["latq"]} AS latq) q1,
-                     LATERAL (SELECT ({_GH["g"]}) AS g) q2
-            )
-            SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_orders
-            FROM cells GROUP BY 1
-        """,
-        "ip_networks": f"""
-            WITH c AS (
-                SELECT c_custkey,
-                       (CASE WHEN c_custkey % 3 = 0 THEN '10'
-                             WHEN c_custkey % 3 = 1 THEN '192' ELSE '8' END)
-                       || '.' ||
-                       (CASE WHEN c_custkey % 3 = 0 THEN CAST(c_custkey % 200 AS VARCHAR)
-                             WHEN c_custkey % 3 = 1 THEN '168' ELSE '8' END)
-                       || '.' || CAST(c_custkey % 7 AS VARCHAR)
-                       || '.' || CAST((c_custkey * 3) % 256 AS VARCHAR) AS ip
-                FROM customer
-            ), p AS (
-                SELECT c_custkey, ip, string_split(ip, '.') AS parts FROM c
-            ), n AS (
-                SELECT c_custkey, ip,
-                       TRY_CAST(parts[1] AS BIGINT) * 16777216
-                       + TRY_CAST(parts[2] AS BIGINT) * 65536
-                       + TRY_CAST(parts[3] AS BIGINT) * 256
-                       + TRY_CAST(parts[4] AS BIGINT) AS ip_num
-                FROM p
-            ), dim AS (
-                SELECT * FROM (VALUES {", ".join(f"('{name}', {__import__('area_etl_spark.operators.geo', fromlist=['cidr_bounds']).cidr_bounds(cidr)[0]}, {__import__('area_etl_spark.operators.geo', fromlist=['cidr_bounds']).cidr_bounds(cidr)[1]})" for name, cidr in IP_NETWORKS)})
-                       AS t(net_name, net_lo, net_hi)
-            ), j AS (
-                SELECT n.c_custkey, n.ip, n.ip_num, d.net_name, d.net_lo,
-                       row_number() OVER (
-                           PARTITION BY n.c_custkey
-                           ORDER BY d.net_lo DESC NULLS LAST,
-                                    d.net_name DESC NULLS LAST) AS rn
-                FROM n LEFT JOIN dim d
-                  ON n.ip_num >= d.net_lo AND n.ip_num <= d.net_hi
-            )
-            SELECT c_custkey, ip, ip_num,
-                   CASE WHEN net_lo IS NOT NULL THEN net_name END AS network
-            FROM j WHERE rn = 1
-        """,
-        "ks_test": f"""
-            WITH two AS (
-                SELECT event_type AS g,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE event_type IN ('purchase', 'view')
-            ), pv AS (
-                SELECT v,
-                       SUM(CASE WHEN g = 'purchase' THEN 1 ELSE 0 END) AS ca,
-                       SUM(CASE WHEN g = 'view' THEN 1 ELSE 0 END) AS cb
-                FROM two GROUP BY 1
-            ), c AS (
-                SELECT v,
-                       SUM(ca) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-                       SUM(cb) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
-                FROM pv
-            ), t AS (
-                SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb
-                FROM pv
-            ), s AS (
-                SELECT v, abs(cuma * nb - cumb * na) AS num, na, nb FROM c, t
-            ), b AS (
-                SELECT MAX(na) AS na, MAX(nb) AS nb, MAX(num) AS dnum,
-                       (SELECT MIN(v) FROM s WHERE num = (SELECT MAX(num) FROM s))
-                           AS d_at
-                FROM s
-            )
-            SELECT na AS n_a, nb AS n_b,
-                   round(CAST(dnum AS DOUBLE) / CAST(na * nb AS DOUBLE), 9) AS d,
-                   d_at,
-                   round({_ks_p_sql("((CAST(dnum AS DOUBLE) / CAST(na * nb AS DOUBLE)) * sqrt(CAST(na * nb AS DOUBLE) / CAST(na + nb AS DOUBLE)))")}, 6)
-                       AS p_value
-            FROM b
-        """,
-        "mutual_information": f"""
-            WITH o AS (
-                SELECT o_orderpriority, o_orderstatus,
-                       EXTRACT(month FROM o_orderdate) AS ship_month_raw,
-                       CAST(EXTRACT(month FROM o_orderdate) AS INTEGER)
-                           AS ship_month,
-                       (CAST(round(o_totalprice * 100) AS BIGINT) >= 20000000)
-                           AS is_high,
-                       CAST((CAST(round(o_totalprice * 100) AS BIGINT) >= 20000000)
-                            AS VARCHAR) AS leak_label_copy
-                FROM orders
-            ), nn AS (
-                SELECT COUNT(*) AS n FROM o
-            ), hlab AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(x ORDER BY l)), (a, b) -> a + b) AS hl
-                FROM (
-                    SELECT CAST(is_high AS VARCHAR) AS l,
-                           -(CAST(COUNT(*) AS DOUBLE) / CAST(MAX(nn.n) AS DOUBLE))
-                           * ln(CAST(COUNT(*) AS DOUBLE) / CAST(MAX(nn.n) AS DOUBLE))
-                               AS x
-                    FROM o CROSS JOIN nn GROUP BY 1
-                )
-            )
-            {_mi_feature_sql("o_orderpriority")}
-            UNION ALL {_mi_feature_sql("o_orderstatus")}
-            UNION ALL {_mi_feature_sql("ship_month")}
-            UNION ALL {_mi_feature_sql("leak_label_copy")}
-        """,
-        "quantile_ci": """
-            WITH o AS (
-                SELECT o_orderpriority AS k,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), dv AS (
-                SELECT k, v, COUNT(*) AS cnt FROM o GROUP BY 1, 2
-            ), c AS (
-                SELECT *,
-                       SUM(cnt) OVER (PARTITION BY k ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-                       SUM(cnt) OVER (PARTITION BY k) AS n
-                FROM dv
-            ), f AS (
-                SELECT *,
-                       GREATEST(1, CAST(FLOOR(CAST(n AS DOUBLE) * 0.5
-                           - 1.959964 * sqrt((CAST(n AS DOUBLE) * 0.5) * 0.5))
-                           AS BIGINT)) AS k_lo,
-                       LEAST(n, GREATEST(1, CAST(CEIL(CAST(n AS DOUBLE) * 0.5)
-                           AS BIGINT))) AS k_pt,
-                       LEAST(n, CAST(CEIL(CAST(n AS DOUBLE) * 0.5
-                           + 1.959964 * sqrt((CAST(n AS DOUBLE) * 0.5) * 0.5))
-                           AS BIGINT)) AS k_hi
-                FROM c
-            )
-            SELECT k AS o_orderpriority, CAST(MAX(n) AS BIGINT) AS n,
-                   MIN(CASE WHEN cum - cnt < k_lo AND k_lo <= cum THEN v END) AS lo,
-                   MIN(CASE WHEN cum - cnt < k_pt AND k_pt <= cum THEN v END) AS point,
-                   MIN(CASE WHEN cum - cnt < k_hi AND k_hi <= cum THEN v END) AS hi
-            FROM f GROUP BY 1
-        """,
-        "stratified_ate": """
-            WITH rev AS (
-                SELECT o_custkey AS c_custkey,
-                       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS r
-                FROM orders GROUP BY 1
-            ), units AS (
-                SELECT c_nationkey AS b,
-                       (c_mktsegment = 'BUILDING') AS t,
-                       CAST(COALESCE(r, 0) AS HUGEINT) AS y
-                FROM customer LEFT JOIN rev USING (c_custkey)
-            ), per AS (
-                SELECT b, COUNT(*) AS n,
-                       SUM(CASE WHEN t THEN 1 ELSE 0 END) AS nt,
-                       SUM(CASE WHEN t THEN y ELSE 0 END) AS syt,
-                       SUM(CASE WHEN NOT t THEN y ELSE 0 END) AS syc
-                FROM units GROUP BY 1
-            ), scored AS (
-                SELECT b, n, (nt > 0 AND nt < n) AS ok,
-                       CASE WHEN nt > 0 AND nt < n THEN
-                           CAST(n AS DOUBLE)
-                           * (CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)
-                              - CAST(syc AS DOUBLE) / CAST(n - nt AS DOUBLE))
-                       END AS term
-                FROM per
-            )
-            SELECT CAST(SUM(n) AS BIGINT) AS n_units,
-                   CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_buckets_used,
-                   CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_excluded,
-                   round(CASE WHEN SUM(CASE WHEN ok THEN n ELSE 0 END) > 0 THEN
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(term ORDER BY b) FILTER (WHERE ok)),
-                           (x, y) -> x + y)
-                       / CAST(SUM(CASE WHEN ok THEN n ELSE 0 END) AS DOUBLE)
-                   END, 9) AS ate
-            FROM scored
-        """,
-        "pool_embeddings": """
-            WITH ex AS (
-                SELECT vec_id % 50 AS grp, i.i AS pos,
-                       CAST(FLOOR(CAST(embedding[i.i + 1] AS DOUBLE) * 1000000.0) AS BIGINT) AS q
-                FROM embeddings,
-                     (SELECT unnest(generate_series(0, 63)) AS i) i
-            ), per AS (
-                SELECT grp, pos, COUNT(*) AS n,
-                       SUM(CAST(q AS HUGEINT)) AS s
-                FROM ex GROUP BY 1, 2
-            )
-            SELECT grp, CAST(n AS BIGINT) AS n_vecs, CAST(pos AS INTEGER) AS pos,
-                   round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 9) AS val
-            FROM per
-        """,
-        "classification_report": f"""
-            WITH pairs AS (
-                SELECT lang AS g, {_langid_sql("text")} AS p FROM documents
-                WHERE lang IS NOT NULL
-            ), per_gold AS (
-                SELECT g AS label, COUNT(*) AS support,
-                       SUM(CASE WHEN g = p THEN 1 ELSE 0 END) AS tp_g
-                FROM pairs GROUP BY 1
-            ), per_pred AS (
-                SELECT p AS label, COUNT(*) AS n_pred FROM pairs GROUP BY 1
-            ), j AS (
-                SELECT COALESCE(per_gold.label, per_pred.label) AS label,
-                       COALESCE(tp_g, 0) AS tp,
-                       COALESCE(n_pred, 0) - COALESCE(tp_g, 0) AS fp,
-                       COALESCE(support, 0) - COALESCE(tp_g, 0) AS fn,
-                       COALESCE(support, 0) AS support
-                FROM per_gold FULL OUTER JOIN per_pred
-                  ON per_gold.label = per_pred.label
-            )
-            SELECT label, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-                   CAST(fn AS BIGINT) AS fn, CAST(support AS BIGINT) AS support,
-                   round(CASE WHEN tp + fp > 0 THEN
-                       CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE))
-                   END, 9) AS precision,
-                   round(CASE WHEN tp + fn > 0 THEN
-                       CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE))
-                   END, 9) AS recall,
-                   round(CASE WHEN 2 * tp + fp + fn > 0 THEN
-                       2 * CAST(tp AS DOUBLE)
-                       / (2 * CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)
-                          + CAST(fn AS DOUBLE))
-                   END, 9) AS f1
-            FROM j
-        """,
-        "roc_auc": """
-            WITH cust AS (
-                SELECT c_custkey,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS score
-                FROM customer
-            ), units AS (
-                SELECT cust.score, (o.c IS NOT NULL) AS placed
-                FROM cust LEFT JOIN (SELECT DISTINCT o_custkey AS c FROM orders) o
-                  ON o.c = cust.c_custkey
-            ), per_val AS (
-                SELECT score AS v, COUNT(*) AS cnt,
-                       SUM(CASE WHEN placed THEN 1 ELSE 0 END) AS cnt_pos
-                FROM units GROUP BY 1
-            ), ranked AS (
-                SELECT *,
-                       COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                           0) AS cum_before
-                FROM per_val
-            ), agg AS (
-                SELECT CAST(SUM(cnt_pos) AS BIGINT) AS n_pos,
-                       CAST(SUM(cnt - cnt_pos) AS BIGINT) AS n_neg,
-                       SUM((CAST(cum_before AS DOUBLE) + (cnt + 1) / 2.0)
-                           * cnt_pos) AS r_pos
-                FROM ranked
-            )
-            SELECT n_pos, n_neg,
-                   round(CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-                       (r_pos - (n_pos * (n_pos + 1)) / 2.0)
-                       / CAST(n_pos * n_neg AS DOUBLE)
-                   END, 9) AS auc
-            FROM agg
-        """,
-        "roc_auc_quantized": """
-            WITH cust AS (
-                SELECT c_custkey,
-                       floor(c_acctbal / 50.0e0) * 50.0e0 AS score
-                FROM customer
-            ), units AS (
-                SELECT cust.score, (o.c IS NOT NULL) AS placed
-                FROM cust LEFT JOIN (SELECT DISTINCT o_custkey AS c FROM orders) o
-                  ON o.c = cust.c_custkey
-            ), per_val AS (
-                SELECT score AS v, COUNT(*) AS cnt,
-                       SUM(CASE WHEN placed THEN 1 ELSE 0 END) AS cnt_pos
-                FROM units GROUP BY 1
-            ), ranked AS (
-                SELECT *,
-                       COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                           0) AS cum_before
-                FROM per_val
-            ), agg AS (
-                SELECT CAST(SUM(cnt_pos) AS BIGINT) AS n_pos,
-                       CAST(SUM(cnt - cnt_pos) AS BIGINT) AS n_neg,
-                       SUM((CAST(cum_before AS DOUBLE) + (cnt + 1) / 2.0)
-                           * cnt_pos) AS r_pos
-                FROM ranked
-            )
-            SELECT n_pos, n_neg,
-                   round(CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-                       (r_pos - (n_pos * (n_pos + 1)) / 2.0)
-                       / CAST(n_pos * n_neg AS DOUBLE)
-                   END, 9) AS auc
-            FROM agg
-        """,
-        "isotonic_calibration": """
-            WITH cust AS (
-                SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-                FROM customer
-            ), sc AS (
-                SELECT c_custkey,
-                       LEAST(1000000, GREATEST(0,
-                           CAST(FLOOR((bal + 100000) * 1000000 / 1100000) AS BIGINT)))
-                           AS score
-                FROM cust
-            ), units AS (
-                SELECT sc.score, (o.c IS NOT NULL) AS placed
-                FROM sc LEFT JOIN (SELECT DISTINCT o_custkey AS c FROM orders) o
-                  ON o.c = sc.c_custkey
-            ), bins AS (
-                SELECT LEAST(9, GREATEST(0, CAST(FLOOR(score * 10 / 1000000) AS BIGINT))) AS bin,
-                       COUNT(*) AS n,
-                       SUM(CASE WHEN placed THEN 1 ELSE 0 END) AS pos
-                FROM units GROUP BY 1
-            ), pref AS (
-                SELECT bin, n, pos,
-                       SUM(n) OVER (ORDER BY bin) AS cn,
-                       SUM(pos) OVER (ORDER BY bin) AS cp
-                FROM bins
-            ), segments AS (
-                SELECT lo.bin AS j, hi.bin AS k,
-                       CAST(hi.cp - (lo.cp - lo.pos) AS DOUBLE)
-                       / CAST(hi.cn - (lo.cn - lo.n) AS DOUBLE) AS rate
-                FROM pref lo JOIN pref hi ON lo.bin <= hi.bin
-            ), inner_min AS (
-                SELECT a.bin AS i, s.j, MIN(s.rate) AS mn
-                FROM segments s JOIN pref a ON s.j <= a.bin AND a.bin <= s.k
-                GROUP BY 1, 2
-            ), iso AS (
-                SELECT i AS bin, MAX(mn) AS iso FROM inner_min GROUP BY 1
-            )
-            SELECT p.bin, CAST(p.n AS BIGINT) AS n, CAST(p.pos AS BIGINT) AS pos,
-                   round(CAST(p.pos AS DOUBLE) / CAST(p.n AS DOUBLE), 9) AS rate_raw,
-                   round(iso.iso, 9) AS rate_iso
-            FROM pref p JOIN iso ON iso.bin = p.bin
-        """,
-        "mantel_haenszel": """
-            WITH units AS (
-                SELECT c.c_nationkey AS s,
-                       (c.c_mktsegment = 'BUILDING') AS t,
-                       (o.ck IS NOT NULL) AS y
-                FROM customer c
-                LEFT JOIN (SELECT DISTINCT o_custkey AS ck FROM orders) o
-                  ON o.ck = c.c_custkey
-            ), per AS (
-                SELECT s,
-                       SUM(CASE WHEN t AND y THEN 1 ELSE 0 END) AS a,
-                       SUM(CASE WHEN t AND NOT y THEN 1 ELSE 0 END) AS b,
-                       SUM(CASE WHEN NOT t AND y THEN 1 ELSE 0 END) AS c,
-                       SUM(CASE WHEN NOT t AND NOT y THEN 1 ELSE 0 END) AS d,
-                       COUNT(*) AS n
-                FROM units GROUP BY 1
-            ), terms AS (
-                SELECT s, n,
-                       CAST(a * d AS DOUBLE) / CAST(n AS DOUBLE) AS num,
-                       CAST(b * c AS DOUBLE) / CAST(n AS DOUBLE) AS den
-                FROM per
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-                       CAST(SUM(n) AS BIGINT) AS n_units,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(num ORDER BY s)),
-                                   (x, y) -> x + y) AS snum,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(den ORDER BY s)),
-                                   (x, y) -> x + y) AS sden
-                FROM terms
-            )
-            SELECT n_strata, n_units,
-                   round(CASE WHEN sden > 0 THEN snum / sden END, 9) AS or_mh
-            FROM agg
-        """,
-        "trend_test": f"""
-            WITH per AS (
-                SELECT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS w,
-                       CAST(COUNT(*) AS HUGEINT) AS ni,
-                       CAST(SUM(CASE WHEN event_type = 'purchase'
-                                     THEN 1 ELSE 0 END) AS HUGEINT) AS ki
-                FROM events GROUP BY 1
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS n_levels,
-                       SUM(ni) AS n, SUM(ki) AS k,
-                       SUM(CAST(w AS HUGEINT) * ni) AS swn,
-                       SUM(CAST(w AS HUGEINT) * w * ni) AS swwn,
-                       SUM(CAST(w AS HUGEINT) * ki) AS swk
-                FROM per
-            ), stat AS (
-                SELECT n_levels, n,
-                       CAST(n * swk - k * swn AS DOUBLE) AS t,
-                       (CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (1 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                       * CAST(n AS DOUBLE)
-                       * CAST(n * swwn - swn * swn AS DOUBLE) AS var_t
-                FROM agg
-            ), zed AS (
-                SELECT CAST(n AS BIGINT) AS n, n_levels,
-                       CASE WHEN var_t > 0 THEN t / sqrt(var_t) END AS z
-                FROM stat
-            )
-            SELECT n, n_levels, round(z, 9) AS z,
-                   round(CASE WHEN z IS NOT NULL THEN
-                       LEAST(1.0, 2.0 * {NORMAL_SF_SQL_ABS_Z}) END, 9) AS p_value
-            FROM zed
-        """,
-        "ntile_scalable": """
-            SELECT c_custkey,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
-                   CAST(ntile(10) OVER (
-                       ORDER BY CAST(round(c_acctbal * 100) AS BIGINT), c_custkey)
-                       AS INT) AS decile
-            FROM customer
-        """,
-        "spearman_corr": """
-            WITH pairs AS (
-                SELECT CAST(l_quantity AS BIGINT) AS x,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-                FROM lineitem
-            ), px AS (
-                SELECT x AS v, COUNT(*) AS cnt FROM pairs GROUP BY 1
-            ), rx AS (
-                SELECT v, 2 * COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + cnt + 1 AS r2
-                FROM px
-            ), py AS (
-                SELECT y AS v, COUNT(*) AS cnt FROM pairs GROUP BY 1
-            ), ry AS (
-                SELECT v, 2 * COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + cnt + 1 AS r2
-                FROM py
-            ), ranked AS (
-                SELECT CAST(rx.r2 AS HUGEINT) AS rx2, CAST(ry.r2 AS HUGEINT) AS ry2
-                FROM pairs JOIN rx ON rx.v = pairs.x JOIN ry ON ry.v = pairs.y
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(rx2) AS sx, SUM(ry2) AS sy,
-                       SUM(rx2 * ry2) AS sxy,
-                       SUM(rx2 * rx2) AS sxx, SUM(ry2 * ry2) AS syy
-                FROM ranked
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-                       THEN CAST(n * sxy - sx * sy AS DOUBLE)
-                            / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                                   * CAST(n * syy - sy * sy AS DOUBLE))
-                   END, 9) AS rho
-            FROM agg
-        """,
-        "kruskal_wallis": f"""
-            WITH base AS (
-                SELECT o_orderpriority AS g,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), per_val AS (
-                SELECT v, COUNT(*) AS cnt FROM base GROUP BY 1
-            ), rv AS (
-                SELECT v, 2 * COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + cnt + 1 AS r2
-                FROM per_val
-            ), per_gv AS (
-                SELECT g, v, COUNT(*) AS gvn FROM base GROUP BY 1, 2
-            ), per_g AS (
-                SELECT g, SUM(gvn) AS ng,
-                       SUM(CAST(gvn AS HUGEINT) * rv.r2) AS rg2
-                FROM per_gv JOIN rv USING (v) GROUP BY 1
-            ), gagg AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                       CAST(SUM(ng) AS DOUBLE) AS n,
-                       CAST(SUM(ng) AS BIGINT) AS n_int,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(rg2 * rg2 AS DOUBLE)
-                                / (4.0 * CAST(ng AS DOUBLE)) ORDER BY g)),
-                           (a, b) -> a + b) AS sumg
-                FROM per_g
-            ), ties AS (
-                SELECT SUM(CAST(cnt AS HUGEINT) * cnt * cnt - cnt) AS t3
-                FROM per_val
-            ), hh AS (
-                SELECT n_int, k,
-                       CASE WHEN 1.0 - CAST(t3 AS DOUBLE) / (n * n * n - n) > 0
-                            THEN (12.0 / (n * (n + 1)) * sumg - 3.0 * (n + 1))
-                                 / (1.0 - CAST(t3 AS DOUBLE) / (n * n * n - n))
-                       END AS h,
-                       CAST(k - 1 AS DOUBLE) AS dfree
-                FROM gagg CROSS JOIN ties
-            ), zed AS (
-                SELECT n_int, k, h,
-                       (pow(h / dfree, 0.3333333333333333e0)
-                        - (1.0 - 2.0 / (9.0 * dfree)))
-                       / sqrt(2.0 / (9.0 * dfree)) AS z
-                FROM hh
-            )
-            SELECT n_int AS n, k, round(h, 9) AS h,
-                   round(CASE WHEN h IS NOT NULL AND k > 1 AND h > 0 THEN
-                       LEAST(1.0, GREATEST(0.0,
-                           CASE WHEN z >= 0 THEN {_normal_sf_sql("z")}
-                                ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                       WHEN h IS NOT NULL THEN 1.0 END, 6) AS p_value
-            FROM zed
-        """,
-        "calibration_curve": """
-            WITH cust AS (
-                SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-                FROM customer
-            ), sc AS (
-                SELECT c_custkey,
-                       LEAST(1000000, GREATEST(0,
-                           CAST(FLOOR((bal + 100000) * 1000000 / 1100000) AS BIGINT)))
-                           AS score
-                FROM cust
-            ), units AS (
-                SELECT sc.score, (o.c IS NOT NULL) AS placed
-                FROM sc LEFT JOIN (SELECT DISTINCT o_custkey AS c FROM orders) o
-                  ON o.c = sc.c_custkey
-            ), b AS (
-                SELECT LEAST(9, GREATEST(0, CAST(FLOOR(score * 10 / 1000000) AS BIGINT))) AS bin,
-                       score, placed
-                FROM units
-            )
-            SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-                   round(CAST(SUM(CAST(score AS HUGEINT)) AS DOUBLE)
-                         / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 9) AS mean_score,
-                   round(CAST(SUM(CASE WHEN placed THEN 1 ELSE 0 END) AS DOUBLE)
-                         / CAST(COUNT(*) AS DOUBLE), 9) AS outcome_rate
-            FROM b GROUP BY 1
-        """,
-        "js_divergence": """
-            WITH o AS (
-                SELECT o_orderdate,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), bb AS (
-                SELECT LEAST(9, GREATEST(0,
-                           CAST(FLOOR(cents * 10 / 60000000) AS BIGINT))) AS bin,
-                       COUNT(*) AS nb
-                FROM o WHERE o_orderdate < TIMESTAMP '1996-01-01' GROUP BY 1
-            ), ba AS (
-                SELECT LEAST(9, GREATEST(0,
-                           CAST(FLOOR(cents * 10 / 60000000) AS BIGINT))) AS bin,
-                       COUNT(*) AS na
-                FROM o WHERE o_orderdate >= TIMESTAMP '1996-01-01' GROUP BY 1
-            ), tb AS (SELECT SUM(nb) AS tb FROM bb),
-               ta AS (SELECT SUM(na) AS ta FROM ba),
-            j AS (
-                SELECT COALESCE(bb.bin, ba.bin) AS bin,
-                       COALESCE(nb, 0) AS nb, COALESCE(na, 0) AS na
-                FROM bb FULL OUTER JOIN ba ON bb.bin = ba.bin
-            ), terms AS (
-                SELECT bin, nb, na,
-                       (CASE WHEN nb > 0 THEN
-                            0.5 * (CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE))
-                            * ln(2.0 * (CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE))
-                                 / (CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE)
-                                    + CAST(na AS DOUBLE) / CAST(ta AS DOUBLE)))
-                        ELSE 0.0 END)
-                       + (CASE WHEN na > 0 THEN
-                            0.5 * (CAST(na AS DOUBLE) / CAST(ta AS DOUBLE))
-                            * ln(2.0 * (CAST(na AS DOUBLE) / CAST(ta AS DOUBLE))
-                                 / (CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE)
-                                    + CAST(na AS DOUBLE) / CAST(ta AS DOUBLE)))
-                        ELSE 0.0 END) AS t
-                FROM j CROSS JOIN tb CROSS JOIN ta
-            )
-            SELECT CAST(SUM(nb) AS BIGINT) AS n_before,
-                   CAST(SUM(na) AS BIGINT) AS n_after,
-                   CAST(COUNT(*) AS BIGINT) AS n_bins_used,
-                   round(GREATEST(0.0,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(t ORDER BY bin)),
-                                   (a, b) -> a + b)), 9) AS jsd
-            FROM terms
-        """,
-        "mmr_diversify": _mmr_sql(k=5, lam=0.7, pool=20),
-        "cliff_delta": """
-            WITH base AS (
-                SELECT o_orderpriority AS g,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-                WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-            ), per_v AS (
-                SELECT v,
-                       SUM(CASE WHEN g = '1-URGENT' THEN 1 ELSE 0 END) AS na,
-                       SUM(CASE WHEN g = '5-LOW' THEN 1 ELSE 0 END) AS nb
-                FROM base GROUP BY 1
-            ), cum AS (
-                SELECT v, na, nb,
-                       COALESCE(SUM(nb) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                           AS nb_lt
-                FROM per_v
-            ), tot AS (
-                SELECT SUM(na) AS tot_a, SUM(nb) AS tot_b FROM per_v
-            ), agg AS (
-                SELECT MAX(tot_a) AS tot_a, MAX(tot_b) AS tot_b,
-                       SUM(CAST(na AS HUGEINT) * nb_lt) AS gt,
-                       SUM(CAST(na AS HUGEINT) * (tot_b - nb_lt - nb)) AS lt,
-                       SUM(CAST(na AS HUGEINT) * nb) AS ties
-                FROM cum CROSS JOIN tot
-            )
-            SELECT CAST(tot_a AS BIGINT) AS n_a,
-                   CAST(tot_b AS BIGINT) AS n_b,
-                   CAST(gt AS BIGINT) AS gt,
-                   CAST(lt AS BIGINT) AS lt,
-                   CAST(ties AS BIGINT) AS ties,
-                   round(CASE WHEN CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE) > 0
-                         THEN CAST(gt - lt AS DOUBLE)
-                              / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE))
-                         END, 9) AS cliff_d,
-                   round(CASE WHEN CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE) > 0
-                         THEN (CAST(gt AS DOUBLE) + CAST(ties AS DOUBLE) / 2.0)
-                              / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE))
-                         END, 9) AS vd_a
-            FROM agg
-        """,
-        "page_hinkley": """
-            WITH d AS (
-                SELECT o_orderpriority,
-                       date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS day,
-                       COUNT(*) AS v
-                FROM orders GROUP BY 1, 2
-            ), numbered AS (
-                SELECT o_orderpriority, day, v,
-                       ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                           ORDER BY day) AS rn
-                FROM d
-            ), st AS (
-                SELECT o_orderpriority, day, v, rn,
-                       SUM(CASE WHEN rn <= 30 THEN v END)
-                           OVER (PARTITION BY o_orderpriority) AS sw
-                FROM numbered
-            ), m AS (
-                SELECT o_orderpriority, day, v AS value, rn,
-                       SUM(CASE WHEN rn > 30 THEN 30 * v - sw - 0 ELSE 0 END)
-                           OVER wnd AS m
-                FROM st
-                WINDOW wnd AS (PARTITION BY o_orderpriority ORDER BY day
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            )
-            SELECT o_orderpriority, day, value,
-                   round(CASE WHEN rn > 30 THEN
-                       CAST(m - MIN(m) OVER wnd AS DOUBLE) / 30.0 END, 6) AS ph,
-                   COALESCE(CASE WHEN rn > 30
-                       THEN (m - MIN(m) OVER wnd) > 1500 END, false) AS alarm
-            FROM m
-            WINDOW wnd AS (PARTITION BY o_orderpriority ORDER BY day
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        """,
-        "newey_west": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS t,
-                       COUNT(*) AS x
-                FROM orders GROUP BY 1
-            ), led AS (
-                SELECT x,
-                       LEAD(x, 1) OVER (ORDER BY t) AS l1,
-                       LEAD(x, 2) OVER (ORDER BY t) AS l2,
-                       LEAD(x, 3) OVER (ORDER BY t) AS l3,
-                       LEAD(x, 4) OVER (ORDER BY t) AS l4,
-                       LEAD(x, 5) OVER (ORDER BY t) AS l5
-                FROM daily
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(x) AS HUGEINT) AS s,
-                       CAST(SUM(x * x) AS HUGEINT) AS ss,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x * l1 END) AS HUGEINT) AS cr1,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x END) AS HUGEINT) AS hd1,
-                       CAST(SUM(l1) AS HUGEINT) AS tl1,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x * l2 END) AS HUGEINT) AS cr2,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x END) AS HUGEINT) AS hd2,
-                       CAST(SUM(l2) AS HUGEINT) AS tl2,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x * l3 END) AS HUGEINT) AS cr3,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x END) AS HUGEINT) AS hd3,
-                       CAST(SUM(l3) AS HUGEINT) AS tl3,
-                       CAST(SUM(CASE WHEN l4 IS NOT NULL THEN x * l4 END) AS HUGEINT) AS cr4,
-                       CAST(SUM(CASE WHEN l4 IS NOT NULL THEN x END) AS HUGEINT) AS hd4,
-                       CAST(SUM(l4) AS HUGEINT) AS tl4,
-                       CAST(SUM(CASE WHEN l5 IS NOT NULL THEN x * l5 END) AS HUGEINT) AS cr5,
-                       CAST(SUM(CASE WHEN l5 IS NOT NULL THEN x END) AS HUGEINT) AS hd5,
-                       CAST(SUM(l5) AS HUGEINT) AS tl5
-                FROM led
-            ), g AS (
-                SELECT n,
-                       CAST(n AS DOUBLE) AS nd,
-                       CAST(s AS DOUBLE) AS sd,
-                       CAST(n * (n * ss) - n * (s * s) AS DOUBLE) AS g0,
-                       CAST(n * (n * COALESCE(cr1, 0) - s * (COALESCE(hd1, 0) + COALESCE(tl1, 0))) + (n - 1) * (s * s) AS DOUBLE) AS g1,
-                       CAST(n * (n * COALESCE(cr2, 0) - s * (COALESCE(hd2, 0) + COALESCE(tl2, 0))) + (n - 2) * (s * s) AS DOUBLE) AS g2,
-                       CAST(n * (n * COALESCE(cr3, 0) - s * (COALESCE(hd3, 0) + COALESCE(tl3, 0))) + (n - 3) * (s * s) AS DOUBLE) AS g3,
-                       CAST(n * (n * COALESCE(cr4, 0) - s * (COALESCE(hd4, 0) + COALESCE(tl4, 0))) + (n - 4) * (s * s) AS DOUBLE) AS g4,
-                       CAST(n * (n * COALESCE(cr5, 0) - s * (COALESCE(hd5, 0) + COALESCE(tl5, 0))) + (n - 5) * (s * s) AS DOUBLE) AS g5
-                FROM agg
-            ), v AS (
-                SELECT n, nd, sd, g0,
-                       g0 + 1.6666666666666667 * g1 + 1.3333333333333335 * g2
-                          + 1.0 * g3 + 0.6666666666666667 * g4
-                          + 0.33333333333333326 * g5 AS lrv,
-                       nd * nd * nd AS n3
-                FROM g
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(sd / nd, 6) AS mean,
-                   round(CASE WHEN n > 5
-                         THEN sqrt(GREATEST(g0 / n3, 0.0) / nd) END, 6) AS se_iid,
-                   round(CASE WHEN n > 5
-                         THEN sqrt(GREATEST(lrv / n3, 0.0) / nd) END, 6) AS se_nw,
-                   round(CASE WHEN n > 5 AND sqrt(GREATEST(g0 / n3, 0.0) / nd) > 0
-                         THEN sqrt(GREATEST(lrv / n3, 0.0) / nd)
-                              / sqrt(GREATEST(g0 / n3, 0.0) / nd) END, 6) AS inflation
-            FROM v
-        """,
-        "qini_curve": """
-            WITH units AS (
-                SELECT c_nationkey * 40000 AS score,
-                       CASE WHEN c_custkey % 2 = 1 THEN 1 ELSE 0 END AS t,
-                       CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END AS y
-                FROM customer
-            ), base AS (
-                SELECT 9 - LEAST(9, GREATEST(0, CAST(FLOOR(score * 10 / 1000000) AS BIGINT))) AS b,
-                       t, y
-                FROM units
-            ), per AS (
-                SELECT b, SUM(t) AS nt, SUM(1 - t) AS nc,
-                       SUM(t * y) AS yt, SUM((1 - t) * y) AS yc
-                FROM base GROUP BY 1
-            ), cum AS (
-                SELECT b,
-                       SUM(nt) OVER wnd AS cnt_t, SUM(nc) OVER wnd AS cnt_c,
-                       SUM(yt) OVER wnd AS res_t, SUM(yc) OVER wnd AS res_c
-                FROM per
-                WINDOW wnd AS (ORDER BY b
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            )
-            SELECT CAST(b AS BIGINT) AS bin_rank,
-                   CAST(cnt_t AS BIGINT) AS n_treat_cum,
-                   CAST(cnt_c AS BIGINT) AS n_ctrl_cum,
-                   round(CASE WHEN cnt_c > 0 THEN CAST(res_t AS DOUBLE)
-                              - CAST(res_c AS DOUBLE)
-                                * (CAST(cnt_t AS DOUBLE) / CAST(cnt_c AS DOUBLE))
-                         END, 6) AS qini,
-                   round(CASE WHEN cnt_t > 0 AND cnt_c > 0
-                         THEN CAST(res_t AS DOUBLE) / CAST(cnt_t AS DOUBLE)
-                              - CAST(res_c AS DOUBLE) / CAST(cnt_c AS DOUBLE)
-                         END, 6) AS uplift_cum
-            FROM cum
-        """,
-        "krippendorff_alpha": """
-            WITH base AS (
-                SELECT user_id AS u, CAST(event_type AS VARCHAR) AS c
-                FROM events WHERE event_type IS NOT NULL
-            ), cells AS (
-                SELECT u, c, COUNT(*) AS o FROM base GROUP BY 1, 2
-            ), units AS (
-                SELECT u, SUM(o) AS m, SUM(CAST(o AS HUGEINT) * o) AS o2
-                FROM cells GROUP BY 1 HAVING SUM(o) >= 2
-            ), su AS (
-                SELECT u, m,
-                       CAST(CAST(m AS HUGEINT) * m - o2 AS DOUBLE)
-                           / CAST(m - 1 AS DOUBLE) AS innr
-                FROM units
-            ), cums AS (
-                SELECT u,
-                       SUM(innr) OVER wnd AS do_num,
-                       SUM(m) OVER wnd AS np,
-                       COUNT(*) OVER wnd AS nu,
-                       MAX(u) OVER () AS umax
-                FROM su
-                WINDOW wnd AS (ORDER BY u
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            ), lastrow AS (
-                SELECT * FROM cums WHERE u = umax
-            ), ncat AS (
-                SELECT c, SUM(o) AS nc FROM cells JOIN units USING (u) GROUP BY 1
-            ), de AS (
-                SELECT SUM(CAST(nc AS HUGEINT)
-                           * ((SELECT np FROM lastrow) - nc)) AS de_num
-                FROM ncat
-            )
-            SELECT CAST(np AS BIGINT) AS n_pairable,
-                   CAST(nu AS BIGINT) AS n_units,
-                   round(do_num / CAST(np AS DOUBLE), 9) AS d_o,
-                   round(CAST(de_num AS DOUBLE)
-                         / (CAST(np AS DOUBLE) * (CAST(np AS DOUBLE) - 1.0)), 9)
-                       AS d_e,
-                   round(CASE WHEN CAST(de_num AS DOUBLE)
-                                   / (CAST(np AS DOUBLE)
-                                      * (CAST(np AS DOUBLE) - 1.0)) > 0
-                         THEN 1.0 - (do_num / CAST(np AS DOUBLE))
-                              / (CAST(de_num AS DOUBLE)
-                                 / (CAST(np AS DOUBLE)
-                                    * (CAST(np AS DOUBLE) - 1.0))) END, 9) AS alpha
-            FROM lastrow CROSS JOIN de
-        """,
-        "srm_check": f"""
-            WITH counts AS (
-                SELECT CASE WHEN c_custkey % 2 = 0 THEN 'even' ELSE 'odd' END AS a,
-                       COUNT(*) AS o
-                FROM customer GROUP BY 1
-            ), design AS (
-                SELECT 'even' AS a, 1 AS w UNION ALL SELECT 'odd', 1
-            ), st AS (
-                SELECT COALESCE(d.a, c.a) AS a,
-                       COALESCE(c.o, 0) AS o,
-                       COALESCE(d.w, 0) AS w
-                FROM design d FULL OUTER JOIN counts c ON d.a = c.a
-                WHERE COALESCE(d.w, 0) > 0 OR COALESCE(c.o, 0) > 0
-            ), tot AS (
-                SELECT SUM(o) AS n FROM st
-            ), terms AS (
-                SELECT a, o, w, n,
-                       CASE WHEN w > 0 THEN
-                           (CAST(o AS DOUBLE)
-                            - CAST(n AS DOUBLE) * CAST(w AS DOUBLE) / 2.0)
-                           * (CAST(o AS DOUBLE)
-                              - CAST(n AS DOUBLE) * CAST(w AS DOUBLE) / 2.0)
-                           / (CAST(n AS DOUBLE) * CAST(w AS DOUBLE) / 2.0)
-                       ELSE 0.0 END AS t
-                FROM st CROSS JOIN tot
-            ), packed AS (
-                SELECT CAST(MAX(n) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS k,
-                       SUM(CASE WHEN w = 0 AND o > 0 THEN 1 ELSE 0 END) AS bad,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(t ORDER BY a)), (x, y) -> x + y) AS chi2r
-                FROM terms
-            ), ch AS (
-                SELECT n, k, bad,
-                       CASE WHEN bad = 0 THEN chi2r END AS chi2,
-                       CAST(k - 1 AS DOUBLE) AS dfree
-                FROM packed
-            ), zed AS (
-                SELECT *,
-                       (pow(chi2 / dfree, 0.3333333333333333e0)
-                        - (1.0 - 2.0 / (9.0 * dfree)))
-                       / sqrt(2.0 / (9.0 * dfree)) AS z
-                FROM ch
-            ), ps AS (
-                SELECT n, k, chi2, bad,
-                       CASE WHEN chi2 IS NOT NULL AND k > 1 AND chi2 > 0
-                            THEN LEAST(1.0, GREATEST(0.0,
-                                CASE WHEN k = 2
-                                     THEN 2.0 * {_normal_sf_sql("sqrt(chi2)")}
-                                     WHEN z >= 0 THEN {_normal_sf_sql("z")}
-                                     ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                            WHEN chi2 IS NOT NULL THEN 1.0 END AS p
-                FROM zed
-            )
-            SELECT n, k, round(chi2, 9) AS chi2, round(p, 6) AS p_value,
-                   CASE WHEN bad > 0 THEN true ELSE p < 0.001 END AS srm_detected
-            FROM ps
-        """,
-        "bradley_terry": _bradley_terry_sql(5),
-        "group_sequential": """
-            WITH base AS (
-                SELECT year(CAST(o_orderdate AS DATE)) AS lk,
-                       CASE WHEN o_custkey % 2 = 0 THEN 'even' ELSE 'odd' END
-                           AS a,
-                       CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS x
-                FROM orders
-            ), per AS (
-                SELECT lk, a, COUNT(*) AS n, SUM(x) AS s
-                FROM base GROUP BY 1, 2
-            ), cum AS (
-                SELECT lk, a,
-                       SUM(n) OVER (PARTITION BY a ORDER BY lk
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cn,
-                       SUM(s) OVER (PARTITION BY a ORDER BY lk
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cs
-                FROM per
-            ), arms AS (
-                SELECT MIN(a) AS arm_a, MAX(a) AS arm_b FROM per
-            ), looks AS (
-                SELECT DISTINCT lk FROM per
-            ), kk AS (
-                SELECT COUNT(*) AS k FROM looks
-            ), nt AS (
-                SELECT COUNT(*) AS ntot FROM base
-            ), j AS (
-                SELECT l.lk,
-                       ca.cn AS na, ca.cs AS xa,
-                       cb.cn AS nb, cb.cs AS xb,
-                       k, ntot
-                FROM looks l CROSS JOIN arms
-                JOIN cum ca ON ca.lk = l.lk AND ca.a = arms.arm_a
-                JOIN cum cb ON cb.lk = l.lk AND cb.a = arms.arm_b
-                CROSS JOIN kk CROSS JOIN nt
-            ), zz AS (
-                SELECT *,
-                       CAST(xa AS DOUBLE) / CAST(na AS DOUBLE) AS pa,
-                       CAST(xb AS DOUBLE) / CAST(nb AS DOUBLE) AS pb,
-                       CAST(xa + xb AS DOUBLE) / CAST(na + nb AS DOUBLE) AS pp,
-                       CAST(na + nb AS DOUBLE) / CAST(ntot AS DOUBLE) AS t
-                FROM j
-            ), ss AS (
-                SELECT *,
-                       pp * (1.0 - pp) * (1.0 / CAST(na AS DOUBLE)
-                                          + 1.0 / CAST(nb AS DOUBLE)) AS se2,
-                       CASE WHEN k <= 10 THEN
-                           (CAST([1.960, 1.977, 2.004, 2.024, 2.040,
-                                  2.053, 2.063, 2.072, 2.080, 2.087]
-                                 AS DOUBLE[]))[CAST(k AS BIGINT)]
-                           / sqrt(t) END AS obf,
-                       CASE WHEN k <= 10 THEN
-                           (CAST([1.960, 2.178, 2.289, 2.361, 2.413,
-                                  2.453, 2.485, 2.512, 2.535, 2.555]
-                                 AS DOUBLE[]))[CAST(k AS BIGINT)]
-                       END AS poc
-                FROM zz
-            ), fin AS (
-                SELECT *,
-                       CASE WHEN na > 0 AND nb > 0 AND se2 > 0
-                            THEN (pa - pb) / sqrt(se2) END AS z
-                FROM ss
-            )
-            SELECT CAST(lk AS BIGINT) AS look,
-                   round(t, 9) AS info_frac,
-                   CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-                   CAST(xa AS BIGINT) AS x_a, CAST(xb AS BIGINT) AS x_b,
-                   round(z, 9) AS z_obs,
-                   round(obf, 9) AS obf_bound,
-                   round(poc, 9) AS pocock_bound,
-                   CASE WHEN z IS NOT NULL AND obf IS NOT NULL
-                        THEN abs(z) > obf END AS cross_obf,
-                   CASE WHEN z IS NOT NULL AND poc IS NOT NULL
-                        THEN abs(z) > poc END AS cross_pocock
-            FROM fin
-        """,
-        "disproportionality": """
-            WITH base AS (
-                SELECT source AS i,
-                       CASE WHEN n_chars < 200 THEN 1 ELSE 0 END AS f
-                FROM documents WHERE source IS NOT NULL
-            ), per AS (
-                SELECT i, SUM(f) AS a, SUM(1 - f) AS b FROM base GROUP BY 1
-            ), tot AS (
-                SELECT SUM(f) AS ta, SUM(1 - f) AS tb FROM base
-            ), j AS (
-                SELECT i, a, b, ta - a AS c, tb - b AS d
-                FROM per CROSS JOIN tot
-            ), st AS (
-                SELECT *,
-                       CASE WHEN a + b > 0 AND c > 0 THEN
-                           (CAST(a AS DOUBLE) / (CAST(a AS DOUBLE)
-                                                 + CAST(b AS DOUBLE)))
-                           / (CAST(c AS DOUBLE) / (CAST(c AS DOUBLE)
-                                                   + CAST(d AS DOUBLE)))
-                       END AS prr,
-                       a > 0 AND b > 0 AND c > 0 AND d > 0 AS all_pos
-                FROM j
-            ), rr AS (
-                SELECT *,
-                       CASE WHEN all_pos THEN
-                           CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                           / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)) END AS ror,
-                       1.96 * sqrt(1.0 / CAST(a AS DOUBLE)
-                                   + 1.0 / CAST(b AS DOUBLE)
-                                   + 1.0 / CAST(c AS DOUBLE)
-                                   + 1.0 / CAST(d AS DOUBLE)) AS half
-                FROM st
-            )
-            SELECT i AS source,
-                   CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-                   CAST(c AS BIGINT) AS c, CAST(d AS BIGINT) AS d,
-                   round(prr, 9) AS prr,
-                   round(ror, 9) AS ror,
-                   round(CASE WHEN all_pos THEN exp(ln(ror) - half) END, 9)
-                       AS ror_lo,
-                   round(CASE WHEN all_pos THEN exp(ln(ror) + half) END, 9)
-                       AS ror_hi,
-                   CASE WHEN prr IS NOT NULL
-                        THEN prr >= 2.0 AND a >= 3 END AS signal
-            FROM rr
-        """,
-        "hurst_exponent": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS o,
-                       COUNT(*) AS v
-                FROM orders GROUP BY 1
-            ), base AS (
-                SELECT v, row_number() OVER (ORDER BY o) - 1 AS i FROM daily
-            ), grid AS (
-                SELECT unnest([8, 16, 32, 64]) AS bs
-            ), rws AS (
-                SELECT bs, v, i // bs AS b, i % bs AS k
-                FROM base CROSS JOIN grid
-            ), staged AS (
-                SELECT bs, b, k, v,
-                       SUM(CAST(v AS HUGEINT)) OVER (PARTITION BY bs, b
-                           ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS cum,
-                       SUM(CAST(v AS HUGEINT)) OVER (PARTITION BY bs, b)
-                           AS tot,
-                       COUNT(*) OVER (PARTITION BY bs, b) AS cnt
-                FROM rws
-            ), blocks AS (
-                SELECT bs, b,
-                       MAX(CAST(bs AS HUGEINT) * cum - (k + 1) * tot) AS maxsy,
-                       MIN(CAST(bs AS HUGEINT) * cum - (k + 1) * tot) AS minsy,
-                       MAX(tot) AS tot,
-                       SUM(CAST(v AS HUGEINT) * v) AS q
-                FROM staged WHERE cnt = bs GROUP BY 1, 2
-            ), valid AS (
-                SELECT bs, b,
-                       CAST(maxsy - minsy AS DOUBLE)
-                       / sqrt(CAST(CAST(bs AS HUGEINT) * q - tot * tot
-                                   AS DOUBLE)) AS rs
-                FROM blocks
-                WHERE CAST(CAST(bs AS HUGEINT) * q - tot * tot AS DOUBLE) > 0
-            ), per_size AS (
-                SELECT bs, COUNT(*) AS n_blocks,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(rs ORDER BY b)), (x, y) -> x + y)
-                       / CAST(COUNT(*) AS DOUBLE) AS mean_rs
-                FROM valid GROUP BY 1
-            ), reg AS (
-                SELECT COUNT(*) AS m,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(CAST(bs AS DOUBLE)) ORDER BY bs)),
-                           (x, y) -> x + y) AS sx,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(mean_rs) ORDER BY bs)),
-                           (x, y) -> x + y) AS sy,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(CAST(bs AS DOUBLE)) * ln(mean_rs)
-                                ORDER BY bs)), (x, y) -> x + y) AS sxy,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(CAST(bs AS DOUBLE)) * ln(CAST(bs AS DOUBLE))
-                                ORDER BY bs)), (x, y) -> x + y) AS sxx
-                FROM per_size
-            ), h AS (
-                SELECT CASE WHEN m > 1 THEN
-                    (CAST(m AS DOUBLE) * sxy - sx * sy)
-                    / (CAST(m AS DOUBLE) * sxx - sx * sx) END AS hurst
-                FROM reg
-            ), nt AS (
-                SELECT COUNT(*) AS n FROM base
-            )
-            SELECT CAST(bs AS BIGINT) AS block_size,
-                   CAST(n_blocks AS BIGINT) AS n_blocks,
-                   round(mean_rs, 9) AS mean_rs,
-                   round(hurst, 9) AS hurst,
-                   CAST(n AS BIGINT) AS n
-            FROM per_size CROSS JOIN h CROSS JOIN nt
-        """,
-        "welch_ttest": f"""
-            WITH base AS (
-                SELECT CASE WHEN c_custkey % 2 = 0 THEN 'even' ELSE 'odd' END
-                           AS a,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS v
-                FROM customer
-            ), per AS (
-                SELECT a, COUNT(*) AS n,
-                       SUM(CAST(v AS HUGEINT)) AS s,
-                       SUM(CAST(v AS HUGEINT) * v) AS q
-                FROM base GROUP BY 1
-            ), pick AS (
-                SELECT COUNT(*) AS k, MIN(a) AS arm_a, MAX(a) AS arm_b FROM per
-            ), j AS (
-                SELECT k, arm_a, arm_b,
-                       p1.n AS n1, p1.s AS s1, p1.q AS q1,
-                       p2.n AS n2, p2.s AS s2, p2.q AS q2
-                FROM pick JOIN per p1 ON p1.a = pick.arm_a
-                          JOIN per p2 ON p2.a = pick.arm_b
-            ), st AS (
-                SELECT *,
-                       CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS ma,
-                       CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS mb,
-                       CAST(n1 * q1 - s1 * s1 AS DOUBLE)
-                           / (CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) - 1.0))
-                           AS va,
-                       CAST(n2 * q2 - s2 * s2 AS DOUBLE)
-                           / (CAST(n2 AS DOUBLE) * (CAST(n2 AS DOUBLE) - 1.0))
-                           AS vb
-                FROM j
-            ), se AS (
-                SELECT *,
-                       va / CAST(n1 AS DOUBLE) + vb / CAST(n2 AS DOUBLE) AS se2,
-                       (k = 2 AND n1 > 1 AND n2 > 1) AS two_ok
-                FROM st
-            ), tt AS (
-                SELECT *,
-                       CASE WHEN two_ok AND se2 > 0
-                            THEN (ma - mb) / sqrt(se2) END AS t,
-                       CASE WHEN two_ok AND se2 > 0
-                            THEN se2 * se2 / (
-                                (va / CAST(n1 AS DOUBLE)) * (va / CAST(n1 AS DOUBLE))
-                                    / (CAST(n1 AS DOUBLE) - 1.0)
-                                + (vb / CAST(n2 AS DOUBLE)) * (vb / CAST(n2 AS DOUBLE))
-                                    / (CAST(n2 AS DOUBLE) - 1.0)) END AS dfw
-                FROM se
-            )
-            SELECT CAST(k AS BIGINT) AS n_arms, arm_a, arm_b,
-                   CAST(n1 AS BIGINT) AS n_a, CAST(n2 AS BIGINT) AS n_b,
-                   round(ma, 9) AS mean_a, round(mb, 9) AS mean_b,
-                   round(t, 9) AS t_stat, round(dfw, 9) AS df_welch,
-                   round(CASE WHEN t IS NOT NULL THEN
-                       LEAST(1.0, 2.0 * {_normal_sf_sql("abs(t)")}) END, 9)
-                       AS p_value
-            FROM tt
-        """,
-        "hodges_lehmann": """
-            WITH ser AS (
-                SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS t,
-                       COUNT(*) AS v
-                FROM orders GROUP BY 1
-            ), idx AS (
-                SELECT v, row_number() OVER (ORDER BY v) AS rn FROM ser
-            ), sums AS (
-                SELECT a.v + b.v AS s FROM idx a JOIN idx b ON a.rn <= b.rn
-            ), ag AS (
-                SELECT COUNT(*) AS np, list_sort(list(s)) AS ss FROM sums
-            ), nn AS (
-                SELECT COUNT(*) AS n FROM ser
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   CAST(np AS BIGINT) AS n_pairs,
-                   round(CASE WHEN np > 0 THEN
-                       CASE WHEN np % 2 = 1
-                            THEN CAST(ss[CAST((np + 1) // 2 AS BIGINT)] AS DOUBLE)
-                            ELSE (CAST(ss[CAST(np // 2 AS BIGINT)] AS DOUBLE)
-                                  + CAST(ss[CAST(np // 2 + 1 AS BIGINT)] AS DOUBLE))
-                                 / 2.0
-                       END / 2.0
-                   END, 9) AS hl_estimate
-            FROM ag CROSS JOIN nn
-        """,
-        "forecast_accuracy": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS d,
-                       COUNT(*) AS a
-                FROM orders GROUP BY 1
-            ), fc AS (
-                SELECT d, a, lag(a, 7) OVER (ORDER BY d) AS f FROM daily
-            ), base AS (
-                SELECT d, a, f FROM fc WHERE f IS NOT NULL
-            ), lagd AS (
-                SELECT d, a, f,
-                       abs(a - f) AS ae,
-                       CAST(a - f AS HUGEINT) * (a - f) AS se,
-                       CASE WHEN a <> 0 THEN CAST(abs(a - f) AS DOUBLE)
-                            / CAST(abs(a) AS DOUBLE) END AS mape_t,
-                       CASE WHEN abs(a) + abs(f) > 0
-                            THEN 2.0 * CAST(abs(a - f) AS DOUBLE)
-                                 / CAST(abs(a) + abs(f) AS DOUBLE)
-                       END AS smape_t,
-                       COALESCE(abs(a - lag(a, 1) OVER (ORDER BY d, a, f)), 0)
-                           AS naive
-                FROM base
-            ), cum AS (
-                SELECT row_number() OVER (ORDER BY d, a, f) AS rn,
-                       SUM(ae) OVER win AS sae,
-                       SUM(se) OVER win AS sse,
-                       SUM(naive) OVER win AS snaive,
-                       SUM(COALESCE(mape_t, 0.0)) OVER win AS smn,
-                       SUM(CASE WHEN mape_t IS NOT NULL THEN 1 ELSE 0 END)
-                           OVER win AS nm,
-                       SUM(COALESCE(smape_t, 0.0)) OVER win AS ssm,
-                       SUM(CASE WHEN smape_t IS NOT NULL THEN 1 ELSE 0 END)
-                           OVER win AS ns,
-                       COUNT(*) OVER () AS n
-                FROM lagd
-                WINDOW win AS (ORDER BY d, a, f
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(CAST(sae AS DOUBLE) / CAST(n AS DOUBLE), 9) AS mae,
-                   round(sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)), 9)
-                       AS rmse,
-                   round(CASE WHEN nm > 0
-                        THEN smn / CAST(nm AS DOUBLE) END, 9) AS mape,
-                   round(CASE WHEN ns > 0
-                        THEN ssm / CAST(ns AS DOUBLE) END, 9) AS smape,
-                   round(CASE WHEN n > 1 AND snaive > 0
-                        THEN (CAST(sae AS DOUBLE) / CAST(n AS DOUBLE))
-                             / (CAST(snaive AS DOUBLE)
-                                / (CAST(n AS DOUBLE) - 1.0)) END, 9) AS mase
-            FROM cum WHERE rn = n
-        """,
-        "tokenizer_fertility": r"""
-            WITH pre AS (
-                SELECT lang,
-                       regexp_replace(
-                           regexp_replace(text, '([^\s\p{L}\p{N}])', ' \1 ', 'g'),
-                           '(\p{N}+)', ' \1 ', 'g') AS p2,
-                       text
-                FROM documents
-            ), base AS (
-                SELECT lang,
-                       CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+'))
-                       END AS w,
-                       CASE WHEN length(trim(p2)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(p2), '\s+'))
-                       END AS s,
-                       length(regexp_replace(text, '\s+', '', 'g')) AS c
-                FROM pre
-            ), ag AS (
-                SELECT lang, COUNT(*) AS n_docs, SUM(w) AS n_words,
-                       SUM(s) AS n_subtokens, SUM(c) AS chars
-                FROM base GROUP BY 1
-            )
-            SELECT lang,
-                   CAST(n_docs AS BIGINT) AS n_docs,
-                   CAST(n_words AS BIGINT) AS n_words,
-                   CAST(n_subtokens AS BIGINT) AS n_subtokens,
-                   round(CASE WHEN n_words > 0 THEN
-                       CAST(n_subtokens AS DOUBLE) / CAST(n_words AS DOUBLE)
-                   END, 9) AS fertility,
-                   round(CASE WHEN n_subtokens > 0 THEN
-                       CAST(chars AS DOUBLE) / CAST(n_subtokens AS DOUBLE)
-                   END, 9) AS chars_per_subtoken
-            FROM ag
-        """,
-        "adamic_adar": """
-            WITH e0 AS (
-                SELECT DISTINCT user_id AS src,
-                       10000000 + event_id % 500 AS dst
-                FROM events
-            ), sym AS (
-                SELECT DISTINCT a, b FROM (
-                    SELECT src AS a, dst AS b FROM e0
-                    UNION ALL SELECT dst, src FROM e0
-                ) WHERE a <> b
-            ), deg AS (
-                SELECT a, COUNT(*) AS d FROM sym GROUP BY 1
-            ), mids AS (
-                SELECT s.b AS m, s.a AS n
-                FROM sym s JOIN deg ON deg.a = s.b
-                WHERE deg.d <= 1000
-            ), wedges AS (
-                SELECT x.n AS u, y.n AS v, x.m, deg.d AS mdeg
-                FROM mids x JOIN mids y USING (m)
-                JOIN deg ON deg.a = x.m
-                WHERE x.n < y.n
-            ), pairs AS (
-                SELECT u, v, COUNT(*) AS common,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(1.0 / ln(CAST(mdeg AS DOUBLE)) ORDER BY m)),
-                           (x, y) -> x + y) AS aa,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(1.0 / CAST(mdeg AS DOUBLE) ORDER BY m)),
-                           (x, y) -> x + y) AS ra
-                FROM wedges GROUP BY 1, 2
-                HAVING COUNT(*) >= 2
-            ), existing AS (
-                SELECT a AS u, b AS v FROM sym WHERE a < b
-            )
-            SELECT p.u, p.v, CAST(common AS BIGINT) AS common,
-                   round(aa, 9) AS aa_score,
-                   round(ra, 9) AS ra_score
-            FROM pairs p ANTI JOIN existing e ON p.u = e.u AND p.v = e.v
-            WHERE p.u >= 10000000
-        """,
-        "dedup_threshold_curve": f"""
-            WITH ts AS (
-                SELECT doc_id AS id, list_distinct({_shingles3_sql()}) AS grams
-                FROM documents
-            ), ts2 AS (
-                SELECT id, len(grams) AS sz FROM ts WHERE len(grams) > 0
-            ), tp AS (
-                SELECT id, unnest(grams) AS g FROM ts WHERE len(grams) > 0
-            ), sh AS (
-                SELECT x.id AS ida, y.id AS idb, COUNT(*) AS shared
-                FROM tp x JOIN tp y USING (g)
-                WHERE x.id < y.id GROUP BY 1, 2
-            ), pr AS (
-                SELECT ida, idb, shared * 100 AS s100,
-                       a.sz + b.sz - shared AS un
-                FROM sh JOIN ts2 a ON a.id = sh.ida
-                        JOIN ts2 b ON b.id = sh.idb
-            ), grid AS (
-                SELECT unnest([50, 60, 70, 80, 90]) AS threshold_pct
-            ), qual AS (
-                SELECT g.threshold_pct, ida, idb
-                FROM pr JOIN grid g ON s100 >= g.threshold_pct * un
-            ), pt AS (
-                SELECT threshold_pct, COUNT(*) AS n_pairs FROM qual GROUP BY 1
-            ), dt AS (
-                SELECT threshold_pct, COUNT(DISTINCT d) AS n_docs
-                FROM (SELECT threshold_pct, unnest([ida, idb]) AS d FROM qual)
-                GROUP BY 1
-            )
-            SELECT CAST(g.threshold_pct AS BIGINT) AS threshold_pct,
-                   CAST(COALESCE(n_pairs, 0) AS BIGINT) AS n_pairs,
-                   CAST(COALESCE(n_docs, 0) AS BIGINT) AS n_docs
-            FROM grid g LEFT JOIN pt USING (threshold_pct)
-                        LEFT JOIN dt USING (threshold_pct)
-        """,
-        "bcubed_eval": r"""
-            WITH base AS (
-                SELECT doc_id,
-                       md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))
-                           AS p,
-                       md5(text) AS t
-                FROM documents
-            ), cells AS (
-                SELECT p, t, COUNT(*) AS npt FROM base GROUP BY 1, 2
-            ), psz AS (
-                SELECT p, SUM(npt) AS np FROM cells GROUP BY 1
-            ), tsz AS (
-                SELECT t, SUM(npt) AS nt FROM cells GROUP BY 1
-            ), terms AS (
-                SELECT c.p, c.t, c.npt,
-                       CAST(c.npt AS DOUBLE) * CAST(c.npt AS DOUBLE)
-                           / CAST(np AS DOUBLE) AS tp,
-                       CAST(c.npt AS DOUBLE) * CAST(c.npt AS DOUBLE)
-                           / CAST(nt AS DOUBLE) AS tr
-                FROM cells c JOIN psz USING (p) JOIN tsz USING (t)
-            ), folded AS (
-                SELECT SUM(npt) AS n,
-                       COUNT(DISTINCT p) AS kp,
-                       COUNT(DISTINCT t) AS kt,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(tp ORDER BY p, t)), (x, y) -> x + y) AS sp,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(tr ORDER BY p, t)), (x, y) -> x + y) AS sr
-                FROM terms
-            ), pr AS (
-                SELECT n, kp, kt,
-                       CASE WHEN n > 0 THEN sp / CAST(n AS DOUBLE) END AS p,
-                       CASE WHEN n > 0 THEN sr / CAST(n AS DOUBLE) END AS r
-                FROM folded
-            )
-            SELECT CAST(n AS BIGINT) AS n_items,
-                   CAST(kp AS BIGINT) AS n_pred_clusters,
-                   CAST(kt AS BIGINT) AS n_true_clusters,
-                   round(p, 9) AS precision,
-                   round(r, 9) AS recall,
-                   round(CASE WHEN p IS NOT NULL AND r IS NOT NULL
-                              AND p + r > 0
-                         THEN 2.0 * p * r / (p + r) END, 9) AS f1
-            FROM pr
-        """,
-        "hhi_concentration": """
-            WITH pe AS (
-                SELECT c.c_mktsegment AS segment, c.c_custkey AS e,
-                       SUM(CAST(round(o.o_totalprice * 100) AS HUGEINT)) AS ev
-                FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-                GROUP BY 1, 2
-            ), rk AS (
-                SELECT segment, e, ev,
-                       row_number() OVER (PARTITION BY segment
-                           ORDER BY ev DESC, e ASC) AS rk
-                FROM pe
-            ), ag AS (
-                SELECT segment, COUNT(*) AS n, MIN(ev) AS minv,
-                       SUM(ev) AS tot, SUM(ev * ev) AS sq,
-                       SUM(CASE WHEN rk <= 4 THEN ev ELSE 0 END) AS topv
-                FROM rk GROUP BY 1
-            )
-            SELECT segment,
-                   CAST(n AS BIGINT) AS n_entities,
-                   CAST(tot AS BIGINT) AS total,
-                   round(CASE WHEN minv >= 0 AND tot > 0
-                        THEN CAST(sq AS DOUBLE)
-                             / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE)) END,
-                        9) AS hhi,
-                   round(CASE WHEN minv >= 0 AND tot > 0 AND n > 1
-                        THEN (CAST(sq AS DOUBLE)
-                              / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE))
-                              - 1.0 / CAST(n AS DOUBLE))
-                             / (1.0 - 1.0 / CAST(n AS DOUBLE)) END, 9)
-                       AS hhi_normalized,
-                   round(CASE WHEN minv >= 0 AND tot > 0
-                        THEN CAST(topv AS DOUBLE) / CAST(tot AS DOUBLE) END, 9)
-                       AS cr_k
-            FROM ag
-        """,
-        "abc_classification": """
-            WITH pe AS (
-                SELECT c.c_nationkey AS nation, c.c_custkey AS cust,
-                       SUM(CAST(round(o.o_totalprice * 100) AS HUGEINT)) AS ev
-                FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-                GROUP BY 1, 2
-            ), tot AS (
-                SELECT nation, SUM(ev) AS tot FROM pe GROUP BY 1
-            ), rk AS (
-                SELECT pe.nation, cust, ev, tot,
-                       row_number() OVER (PARTITION BY pe.nation
-                           ORDER BY ev DESC, cust ASC) AS rk,
-                       SUM(ev) OVER (PARTITION BY pe.nation
-                           ORDER BY ev DESC, cust ASC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cum
-                FROM pe JOIN tot USING (nation)
-            )
-            SELECT nation, cust,
-                   CAST(ev AS BIGINT) AS value,
-                   CAST(rk AS BIGINT) AS rank,
-                   CAST(cum AS BIGINT) AS cum_value,
-                   CASE WHEN cum * 100 <= tot * 80 THEN 'A'
-                        WHEN cum * 100 <= tot * 95 THEN 'B'
-                        ELSE 'C' END AS abc_class
-            FROM rk
-        """,
-        "jarque_bera": """
-            WITH base AS (
-                SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS x
-                FROM customer WHERE c_acctbal IS NOT NULL
-            ), p1 AS (
-                SELECT COUNT(*) AS n, SUM(CAST(x AS HUGEINT)) AS s1 FROM base
-            ), pc AS (
-                -- integer pivot, truncating division (matches Spark DIV)
-                SELECT n, CAST(s1 // n AS BIGINT) AS c FROM p1
-            ), p2 AS (
-                SELECT MAX(n) AS n,
-                       SUM(CAST(x - c AS HUGEINT)) AS t1,
-                       SUM(CAST(x - c AS HUGEINT) * (x - c)) AS t2,
-                       SUM(CAST(x - c AS HUGEINT) * (x - c) * (x - c)) AS t3,
-                       SUM(CAST(x - c AS HUGEINT) * (x - c) * (x - c) * (x - c)) AS t4
-                FROM base CROSS JOIN pc
-            ), mm AS (
-                SELECT CAST(n AS BIGINT) AS n, CAST(n AS DOUBLE) AS nd,
-                       CAST(t1 AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-                       CAST(t2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2,
-                       CAST(t3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3,
-                       CAST(t4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4
-                FROM p2
-            ), cm AS (
-                SELECT n, nd,
-                       r2 - mu * mu AS m2,
-                       r3 - 3.0 * mu * r2 + 2.0 * mu * mu * mu AS m3,
-                       r4 - 4.0 * mu * r3 + 6.0 * mu * mu * r2
-                          - 3.0 * mu * mu * mu * mu AS m4
-                FROM mm
-            ), sk AS (
-                SELECT n, nd,
-                       CASE WHEN n > 1 AND m2 > 0 THEN m3 / pow(m2, 1.5) END AS s,
-                       CASE WHEN n > 1 AND m2 > 0 THEN m4 / (m2 * m2) END AS k
-                FROM cm
-            ), jbx AS (
-                SELECT n, s, k,
-                       nd * (s * s / 6.0 + (k - 3.0) * (k - 3.0) / 24.0) AS jb
-                FROM sk
-            )
-            SELECT n,
-                   round(s, 9) AS skewness,
-                   round(k, 9) AS kurtosis,
-                   round(jb, 9) AS jb,
-                   round(CASE WHEN jb IS NOT NULL THEN exp(-jb / 2.0) END, 9)
-                       AS p_value
-            FROM jbx
-        """,
-        "mann_kendall": f"""
-            WITH ser AS (
-                SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS t,
-                       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS v
-                FROM orders GROUP BY 1
-            ), sgn AS (
-                SELECT SUM(CASE WHEN b.v > a.v THEN 1
-                                WHEN b.v < a.v THEN -1 ELSE 0 END) AS s_stat
-                FROM ser a JOIN ser b ON a.t < b.t
-            ), ties AS (
-                SELECT SUM(c) AS n,
-                       SUM(CAST(c AS HUGEINT) * (c - 1) * (2 * c + 5)) AS tie_term
-                FROM (SELECT v, COUNT(*) AS c FROM ser GROUP BY 1)
-            ), vz AS (
-                SELECT n, s_stat,
-                       CAST(CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - tie_term
-                            AS DOUBLE) / 18.0 AS var_s
-                FROM sgn CROSS JOIN ties
-            ), zz AS (
-                SELECT n, s_stat, var_s,
-                       CASE WHEN var_s > 0 AND n > 1 THEN
-                           CASE WHEN s_stat > 0
-                                    THEN (CAST(s_stat AS DOUBLE) - 1) / sqrt(var_s)
-                                WHEN s_stat < 0
-                                    THEN (CAST(s_stat AS DOUBLE) + 1) / sqrt(var_s)
-                                ELSE 0.0 END END AS z
-                FROM vz
-            ), pp AS (
-                SELECT n, s_stat, var_s, z,
-                       CASE WHEN z IS NOT NULL
-                            THEN LEAST(1.0, 2.0 * {_normal_sf_sql("abs(z)")})
-                       END AS p
-                FROM zz
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   CAST(s_stat AS BIGINT) AS s_stat,
-                   round(CASE WHEN n > 1 THEN var_s END, 9) AS var_s,
-                   round(z, 9) AS z,
-                   round(p, 9) AS p_value,
-                   CASE WHEN p IS NOT NULL AND p < 0.05
-                        THEN CASE WHEN s_stat > 0 THEN 'increasing'
-                                  ELSE 'decreasing' END
-                        WHEN n > 1 THEN 'no_trend' END AS trend
-            FROM pp
-        """,
-        "power_two_means": f"""
-            WITH base AS (
-                SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS v FROM customer
-            ), s AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(CAST(v AS HUGEINT)) AS sv,
-                       SUM(CAST(v AS HUGEINT) * v) AS qv
-                FROM base
-            ), c AS (
-                SELECT CAST(n AS BIGINT) AS n_int, CAST(n AS DOUBLE) AS nd,
-                       sqrt(GREATEST(CAST(n * qv - sv * sv AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)),
-                           0.0)) AS sigma
-                FROM s
-            ), z AS (
-                SELECT *, {_nq_sql("0.975")} AS za, {_nq_sql("0.8")} AS zp FROM c
-            )
-            SELECT n_int AS n_pilot,
-                   round(sigma, 6) AS sigma_est,
-                   round(za, 6) AS z_alpha,
-                   round(zp, 6) AS z_power,
-                   CASE WHEN nd > 1 THEN CAST(ceil(
-                       2.0 * ((za + zp) * sigma / 100000.0)
-                           * ((za + zp) * sigma / 100000.0)) AS BIGINT) END
-                       AS n_per_arm
-            FROM z
-        """,
-        "pacf_lags": _pacf_sql(5),
-        "seasonal_strength": """
-            WITH m AS (
-                SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
-                FROM orders GROUP BY 1
-            ), st AS (
-                SELECT month, rev,
-                       ROW_NUMBER() OVER (ORDER BY month) AS rn,
-                       2 * SUM(rev) OVER (ORDER BY month
-                           ROWS BETWEEN 5 PRECEDING AND 5 FOLLOWING)
-                       + COALESCE(lag(rev, 6) OVER (ORDER BY month), 0)
-                       + COALESCE(lead(rev, 6) OVER (ORDER BY month), 0) AS num0,
-                       COUNT(rev) OVER (ORDER BY month
-                           ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING) AS cnt,
-                       lag(rev, 6) OVER (ORDER BY month) AS lg,
-                       lead(rev, 6) OVER (ORDER BY month) AS ld
-                FROM m
-            ), st2 AS (
-                SELECT month, rev, (rn - 1) % 12 AS phase,
-                       CASE WHEN cnt = 13 AND lg IS NOT NULL AND ld IS NOT NULL
-                            THEN num0 END AS num
-                FROM st
-            ), dn AS (
-                SELECT month, rev, phase, num,
-                       CASE WHEN num IS NOT NULL THEN rev * 24 - num END AS dnv
-                FROM st2
-            ), pp AS (
-                SELECT phase, SUM(dnv) AS sdn, COUNT(*) AS np
-                FROM dn WHERE dnv IS NOT NULL GROUP BY 1
-            ), ppr AS (
-                SELECT phase,
-                       CAST(sdn AS DOUBLE) / (24.0 * CAST(np AS DOUBLE)) AS s_raw
-                FROM pp
-            ), cen AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(s_raw ORDER BY phase)), (a, b) -> a + b) AS ssum,
-                       COUNT(*) AS nph
-                FROM ppr
-            ), sea AS (
-                SELECT phase, s_raw - ssum / CAST(nph AS DOUBLE) AS seasonal
-                FROM ppr CROSS JOIN cen
-            ), comp AS (
-                SELECT CAST(round(CAST(num AS DOUBLE) / 24.0) AS BIGINT) AS trend,
-                       CAST(round(seasonal) AS BIGINT) AS seasonal,
-                       CAST(round(CAST(rev AS DOUBLE) - CAST(num AS DOUBLE) / 24.0
-                                  - seasonal) AS BIGINT) AS residual
-                FROM dn LEFT JOIN sea USING (phase)
-            ), kept AS (
-                SELECT CAST(seasonal + residual AS HUGEINT) AS sr,
-                       CAST(trend + residual AS HUGEINT) AS tr,
-                       CAST(residual AS HUGEINT) AS rr
-                FROM comp WHERE residual IS NOT NULL
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(rr) AS s_r, SUM(rr * rr) AS q_r,
-                       SUM(sr) AS s_s, SUM(sr * sr) AS q_s,
-                       SUM(tr) AS s_t, SUM(tr * tr) AS q_t
-                FROM kept
-            ), vs AS (
-                SELECT CAST(n AS BIGINT) AS n_int,
-                       CAST(n * q_r - s_r * s_r AS DOUBLE) AS vr,
-                       CAST(n * q_s - s_s * s_s AS DOUBLE) AS vss,
-                       CAST(n * q_t - s_t * s_t AS DOUBLE) AS vt
-                FROM agg
-            )
-            SELECT n_int AS n,
-                   round(CASE WHEN vss > 0
-                         THEN GREATEST(0.0, 1.0 - vr / vss) END, 6)
-                       AS seasonal_strength,
-                   round(CASE WHEN vt > 0
-                         THEN GREATEST(0.0, 1.0 - vr / vt) END, 6)
-                       AS trend_strength
-            FROM vs
-        """,
-        "ece_brier": """
-            WITH cust AS (
-                SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS bal
-                FROM customer
-            ), sc AS (
-                SELECT c_custkey,
-                       LEAST(1000000, GREATEST(0,
-                           CAST(FLOOR((bal + 100000) * 1000000 / 1100000) AS BIGINT)))
-                           AS score
-                FROM cust
-            ), units AS (
-                SELECT sc.score,
-                       CASE WHEN o.c IS NOT NULL THEN 1 ELSE 0 END AS y
-                FROM sc LEFT JOIN (SELECT DISTINCT o_custkey AS c FROM orders) o
-                  ON o.c = sc.c_custkey
-            ), base AS (
-                SELECT score, y,
-                       LEAST(9, GREATEST(0, CAST(FLOOR(score * 10 / 1000000) AS BIGINT))) AS b
-                FROM units
-            ), per_bin AS (
-                SELECT b, COUNT(*) AS nb, SUM(y) AS pos,
-                       SUM(CAST(score AS HUGEINT)) AS ssum
-                FROM base GROUP BY 1
-            ), bn AS (
-                SELECT COUNT(*) AS n,
-                       SUM((CAST(score AS HUGEINT) - 1000000 * y)
-                           * (CAST(score AS HUGEINT) - 1000000 * y)) AS briern
-                FROM base
-            ), gaps AS (
-                SELECT b, nb,
-                       abs(CAST(pos AS DOUBLE) / CAST(nb AS DOUBLE)
-                           - CAST(ssum AS DOUBLE)
-                             / (CAST(nb AS DOUBLE) * 1000000.0)) AS gap
-                FROM per_bin
-            ), packed AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(nb AS DOUBLE) * gap ORDER BY b)),
-                           (a, s) -> a + s) AS wsum,
-                       MAX(gap) AS mce
-                FROM gaps
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(CAST(briern AS DOUBLE)
-                         / (CAST(n AS DOUBLE) * 1000000.0 * 1000000.0), 9) AS brier,
-                   round(wsum / CAST(n AS DOUBLE), 9) AS ece,
-                   round(mce, 9) AS mce
-            FROM packed CROSS JOIN bn
-        """,
-        "heaps_law": """
-            WITH tk AS (
-                SELECT doc_id, term FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), pdt AS (
-                SELECT doc_id, COUNT(*) AS ntok FROM tk GROUP BY 1
-            ), fo AS (
-                SELECT term, MIN(doc_id) AS first FROM tk GROUP BY 1
-            ), np AS (
-                SELECT first AS doc_id, COUNT(*) AS nnew FROM fo GROUP BY 1
-            ), st AS (
-                SELECT p.doc_id, ntok, COALESCE(nnew, 0) AS nnew
-                FROM pdt p LEFT JOIN np USING (doc_id)
-            ), cum AS (
-                SELECT doc_id,
-                       SUM(ntok) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nn,
-                       SUM(nnew) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS vv,
-                       COUNT(*) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS d,
-                       MAX(doc_id) OVER () AS idmax
-                FROM st
-            ), f AS (
-                SELECT doc_id, idmax, d,
-                       ln(CAST(nn AS DOUBLE)) AS x, ln(CAST(vv AS DOUBLE)) AS y
-                FROM cum WHERE vv > 0
-            ), s AS (
-                SELECT doc_id, idmax, d,
-                       SUM(x) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sx,
-                       SUM(y) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sy,
-                       SUM(x * x) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sxx,
-                       SUM(x * y) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sxy,
-                       CAST(COUNT(*) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS DOUBLE) AS m
-                FROM f
-            )
-            SELECT CAST(d AS BIGINT) AS n_docs,
-                   round(CASE WHEN m * sxx - sx * sx <> 0
-                         THEN (m * sxy - sx * sy) / (m * sxx - sx * sx) END, 6)
-                       AS beta,
-                   round(CASE WHEN m * sxx - sx * sx <> 0
-                         THEN exp((sy * sxx - sx * sxy) / (m * sxx - sx * sx)) END, 6)
-                       AS k_est
-            FROM s WHERE doc_id = idmax
-        """,
-        "conformal_interval": """
-            WITH res AS (
-                SELECT abs(CAST(round(l_extendedprice * 100) AS BIGINT)
-                           - CAST(l_quantity AS BIGINT) * 101800) AS r
-                FROM lineitem
-            ), pr AS (
-                SELECT r, COUNT(*) AS c FROM res GROUP BY 1
-            ), tot AS (
-                SELECT SUM(c) AS n FROM pr
-            ), cum AS (
-                SELECT r, n,
-                       SUM(c) OVER (ORDER BY r
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumc
-                FROM pr CROSS JOIN tot
-            ), hit AS (
-                -- q_index = ceil((n+1)*9/10) EXACT in integers (alpha = 1/10)
-                SELECT * FROM cum
-                WHERE cumc >= LEAST(((n + 1) * 9 + 9) // 10, n)
-                ORDER BY r LIMIT 1
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   CAST(((n + 1) * 9 + 9) // 10 AS BIGINT) AS q_index,
-                   CASE WHEN ((n + 1) * 9 + 9) // 10 <= n
-                        THEN CAST(r AS BIGINT) END AS q_hat,
-                   round(CASE WHEN ((n + 1) * 9 + 9) // 10 <= n
-                        THEN LEAST(1.0, CAST(cumc AS DOUBLE) / CAST(n AS DOUBLE))
-                   END, 6) AS coverage_at_qhat
-            FROM hit
-        """,
-        "novelty_score": """
-            WITH t AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents
-            ), g AS (
-                SELECT DISTINCT doc_id,
-                       md5(array_to_string(toks[i : i + 7], ' ')) AS gk
-                FROM t, unnest(range(1, len(toks) - 6)) AS u(i)
-            ), fo AS (
-                SELECT gk, MIN(doc_id) AS first FROM g GROUP BY 1
-            ), pd AS (
-                SELECT doc_id, COUNT(*) AS n_shingles,
-                       SUM(CASE WHEN doc_id = first THEN 1 ELSE 0 END) AS n_novel
-                FROM g JOIN fo USING (gk) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(pd.n_shingles, 0) AS BIGINT) AS n_shingles,
-                   CAST(COALESCE(pd.n_novel, 0) AS BIGINT) AS n_novel,
-                   round(CASE WHEN pd.n_shingles > 0
-                         THEN CAST(pd.n_novel AS DOUBLE)
-                              / CAST(pd.n_shingles AS DOUBLE) END, 6) AS novelty
-            FROM documents d LEFT JOIN pd USING (doc_id)
-        """,
-        "term_burstiness": """
-            WITH tk AS (
-                SELECT doc_id, term FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), dt AS (
-                SELECT doc_id, term, COUNT(*) AS c FROM tk GROUP BY 1, 2
-            ), pt AS (
-                SELECT term, COUNT(*) AS dfq,
-                       SUM(CAST(c AS HUGEINT)) AS s,
-                       SUM(CAST(c AS HUGEINT) * c) AS q
-                FROM dt GROUP BY 1
-            )
-            SELECT term, CAST(dfq AS BIGINT) AS df,
-                   CAST(s AS BIGINT) AS total_count,
-                   round(CAST(CAST(dfq AS HUGEINT) * q - s * s AS DOUBLE)
-                         / CAST(CAST(dfq AS HUGEINT) * s AS DOUBLE), 6) AS vmr
-            FROM pt WHERE dfq >= 5
-            ORDER BY vmr DESC, term
-            LIMIT 50
-        """,
-        "kendall_tau": """
-            WITH base AS (
-                SELECT CAST(l_quantity AS BIGINT) AS x,
-                       CAST(round(l_discount * 100) AS BIGINT) AS y
-                FROM lineitem
-            ), grid AS (
-                SELECT x, y, COUNT(*) AS c FROM base GROUP BY 1, 2
-            ), ps AS (
-                SELECT
-                    SUM(CASE WHEN (a.x < b.x AND a.y < b.y)
-                               OR (a.x > b.x AND a.y > b.y)
-                        THEN CAST(a.c AS HUGEINT) * b.c ELSE 0 END) AS cc,
-                    SUM(CASE WHEN (a.x < b.x AND a.y > b.y)
-                               OR (a.x > b.x AND a.y < b.y)
-                        THEN CAST(a.c AS HUGEINT) * b.c ELSE 0 END) AS dd
-                FROM grid a JOIN grid b
-                  ON (a.x < b.x) OR (a.x = b.x AND a.y < b.y)
-            ), t1 AS (
-                SELECT SUM((CAST(t AS HUGEINT) * (t - 1)) // 2) AS n1
-                FROM (SELECT COUNT(*) AS t FROM base GROUP BY x)
-            ), t2 AS (
-                SELECT SUM((CAST(t AS HUGEINT) * (t - 1)) // 2) AS n2
-                FROM (SELECT COUNT(*) AS t FROM base GROUP BY y)
-            ), tot AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM base
-            ), f AS (
-                SELECT cc, dd, n1, n2, n, (n * (n - 1)) // 2 AS n0
-                FROM ps, t1, t2, tot
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   CAST(cc AS BIGINT) AS concordant,
-                   CAST(dd AS BIGINT) AS discordant,
-                   round(CASE WHEN CAST(n0 - n1 AS DOUBLE)
-                                   * CAST(n0 - n2 AS DOUBLE) > 0
-                         THEN CAST(cc - dd AS DOUBLE)
-                              / sqrt(CAST(n0 - n1 AS DOUBLE)
-                                     * CAST(n0 - n2 AS DOUBLE)) END, 9) AS tau_b,
-                   round(CASE WHEN CAST(cc + dd AS DOUBLE) > 0
-                         THEN CAST(cc - dd AS DOUBLE)
-                              / CAST(cc + dd AS DOUBLE) END, 9) AS gamma,
-                   round(CASE WHEN CAST(n0 - n1 AS DOUBLE) > 0
-                         THEN CAST(cc - dd AS DOUBLE)
-                              / CAST(n0 - n1 AS DOUBLE) END, 9) AS somers_d_yx
-            FROM f
-        """,
-        "theil_u": """
-            WITH base AS (
-                SELECT CAST(o_orderpriority AS VARCHAR) AS a,
-                       CAST(o_orderstatus AS VARCHAR) AS b
-                FROM orders
-                WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-            ), tot AS (
-                SELECT COUNT(*) AS n FROM base
-            ), ma AS (
-                SELECT a, COUNT(*) AS c FROM base GROUP BY 1
-            ), ha AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                    list(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
-                         * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                         ORDER BY a)), (x, y) -> x + y) AS ha_neg
-                FROM ma CROSS JOIN tot
-            ), cells AS (
-                SELECT a, b, COUNT(*) AS c FROM base GROUP BY 1, 2
-            ), nb AS (
-                SELECT b, COUNT(*) AS nb FROM base GROUP BY 1
-            ), hab AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                    list(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
-                         * ln(CAST(c AS DOUBLE) / CAST(nb AS DOUBLE))
-                         ORDER BY a, b)), (x, y) -> x + y) AS hab_neg
-                FROM cells JOIN nb USING (b) CROSS JOIN tot
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(-ha_neg, 9) AS h_a,
-                   round(-hab_neg, 9) AS h_a_given_b,
-                   round(CASE WHEN -ha_neg > 0
-                         THEN (-ha_neg - (-hab_neg)) / (-ha_neg) END, 9) AS u
-            FROM ha CROSS JOIN hab CROSS JOIN tot
-        """,
-        "ipw_ate": """
-            WITH b AS (
-                SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS t,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS y,
-                       CAST(((c_nationkey % 5) + 5) % 5 AS VARCHAR) AS g1,
-                       CAST(((c_custkey % 2) + 2) % 2 AS VARCHAR) AS g2
-                FROM customer
-            ), tot AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS n_all,
-                       CAST(SUM(t) AS BIGINT) AS n_tr,
-                       CAST((SELECT COUNT(DISTINCT g1) FROM b) AS DOUBLE) AS k1,
-                       CAST((SELECT COUNT(DISTINCT g2) FROM b) AS DOUBLE) AS k2
-                FROM b
-            ), prof AS (
-                SELECT g1, g2,
-                       SUM(CAST(t * y AS HUGEINT)) AS syt,
-                       SUM(CAST((1 - t) * y AS HUGEINT)) AS syc
-                FROM b GROUP BY 1, 2
-            ), c1 AS (
-                SELECT g1, SUM(t) AS vt1, SUM(1 - t) AS vc1 FROM b GROUP BY 1
-            ), c2 AS (
-                SELECT g2, SUM(t) AS vt2, SUM(1 - t) AS vc2 FROM b GROUP BY 1
-            ), scored AS (
-                SELECT g1, g2, syt, syc,
-                       GREATEST(-30.0, LEAST(30.0,
-                           ln(CAST(n_tr AS DOUBLE)
-                              / CAST(n_all - n_tr AS DOUBLE))
-                           + (ln((CAST(vt1 AS DOUBLE) + 1.0)
-                                 / (CAST(n_tr AS DOUBLE) + 1.0 * k1))
-                              - ln((CAST(vc1 AS DOUBLE) + 1.0)
-                                   / (CAST(n_all - n_tr AS DOUBLE) + 1.0 * k1)))
-                           + (ln((CAST(vt2 AS DOUBLE) + 1.0)
-                                 / (CAST(n_tr AS DOUBLE) + 1.0 * k2))
-                              - ln((CAST(vc2 AS DOUBLE) + 1.0)
-                                   / (CAST(n_all - n_tr AS DOUBLE) + 1.0 * k2)))
-                       )) AS lo,
-                       n_all, n_tr
-                FROM prof JOIN c1 USING (g1) JOIN c2 USING (g2) CROSS JOIN tot
-            ), contrib AS (
-                SELECT g1, g2, n_all, n_tr,
-                       CAST(syt AS DOUBLE) / (1.0 / (1.0 + exp(-lo)))
-                       - CAST(syc AS DOUBLE)
-                         / (1.0 - 1.0 / (1.0 + exp(-lo))) AS w
-                FROM scored
-            ), packed AS (
-                SELECT MAX(n_all) AS n_all, MAX(n_tr) AS n_tr,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(w ORDER BY g1, g2)), (a, b) -> a + b) AS sumw
-                FROM contrib
-            ), sums AS (
-                SELECT CAST(SUM(t * y) AS DOUBLE) AS st,
-                       CAST(SUM((1 - t) * y) AS DOUBLE) AS sc
-                FROM b
-            )
-            SELECT n_all AS n, n_tr AS n_treat,
-                   round(st / CAST(n_tr AS DOUBLE)
-                         - sc / (CAST(n_all AS DOUBLE) - CAST(n_tr AS DOUBLE)), 6)
-                       AS ate_naive,
-                   round(sumw / CAST(n_all AS DOUBLE), 6) AS ate_ipw
-            FROM packed CROSS JOIN sums
-        """,
-        "fe_within": """
-            WITH base AS (
-                SELECT l_suppkey AS e, CAST(l_quantity AS BIGINT) AS x,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-                FROM lineitem
-            ), per_e AS (
-                SELECT e, COUNT(*) AS ni,
-                       SUM(CAST(x AS HUGEINT)) AS sx,
-                       SUM(CAST(y AS HUGEINT)) AS sy,
-                       SUM(CAST(x AS HUGEINT) * x) AS sxx,
-                       SUM(CAST(x AS HUGEINT) * y) AS sxy
-                FROM base GROUP BY 1
-            ), terms AS (
-                SELECT e, ni,
-                       CAST(ni * sxy - sx * sy AS DOUBLE)
-                           / CAST(ni AS DOUBLE) AS numi,
-                       CAST(ni * sxx - sx * sx AS DOUBLE)
-                           / CAST(ni AS DOUBLE) AS deni
-                FROM per_e
-            ), summed AS (
-                SELECT e,
-                       SUM(numi) OVER (ORDER BY e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS num,
-                       SUM(deni) OVER (ORDER BY e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS den,
-                       SUM(ni) OVER (ORDER BY e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ncum,
-                       COUNT(*) OVER (ORDER BY e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ecum,
-                       MAX(e) OVER () AS emax
-                FROM terms
-            )
-            SELECT CAST(ncum AS BIGINT) AS n, CAST(ecum AS BIGINT) AS n_entities,
-                   round(CASE WHEN den > 0 THEN num / den END, 6) AS beta
-            FROM summed WHERE e = emax
-        """,
-        "reg_discontinuity": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS day,
-                       COUNT(*) AS y
-                FROM orders GROUP BY 1
-            ), base AS (
-                SELECT day - 1461 AS u, y FROM daily
-                WHERE day >= 1461 - 365 AND day <= 1461 + 365
-            ), agg AS (
-                SELECT
-                    SUM(CASE WHEN u < 0 THEN 1 ELSE 0 END) AS nl,
-                    SUM(CASE WHEN u < 0 THEN CAST(u AS HUGEINT) END) AS sul,
-                    SUM(CASE WHEN u < 0 THEN CAST(y AS HUGEINT) END) AS syl,
-                    SUM(CASE WHEN u < 0 THEN CAST(u AS HUGEINT) * u END) AS suul,
-                    SUM(CASE WHEN u < 0 THEN CAST(u AS HUGEINT) * y END) AS suyl,
-                    SUM(CASE WHEN u >= 0 THEN 1 ELSE 0 END) AS nr,
-                    SUM(CASE WHEN u >= 0 THEN CAST(u AS HUGEINT) END) AS sur,
-                    SUM(CASE WHEN u >= 0 THEN CAST(y AS HUGEINT) END) AS syr,
-                    SUM(CASE WHEN u >= 0 THEN CAST(u AS HUGEINT) * u END) AS suur,
-                    SUM(CASE WHEN u >= 0 THEN CAST(u AS HUGEINT) * y END) AS suyr
-                FROM base
-            ), fits AS (
-                SELECT CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right,
-                       CASE WHEN CAST(nl * suul - sul * sul AS DOUBLE) <> 0
-                            THEN CAST(syl * suul - sul * suyl AS DOUBLE)
-                                 / CAST(nl * suul - sul * sul AS DOUBLE) END AS al,
-                       CASE WHEN CAST(nl * suul - sul * sul AS DOUBLE) <> 0
-                            THEN CAST(nl * suyl - sul * syl AS DOUBLE)
-                                 / CAST(nl * suul - sul * sul AS DOUBLE) END AS bl,
-                       CASE WHEN CAST(nr * suur - sur * sur AS DOUBLE) <> 0
-                            THEN CAST(syr * suur - sur * suyr AS DOUBLE)
-                                 / CAST(nr * suur - sur * sur AS DOUBLE) END AS ar,
-                       CASE WHEN CAST(nr * suur - sur * sur AS DOUBLE) <> 0
-                            THEN CAST(nr * suyr - sur * syr AS DOUBLE)
-                                 / CAST(nr * suur - sur * sur AS DOUBLE) END AS br
-                FROM agg
-            )
-            SELECT n_left, n_right,
-                   round(al, 6) AS intercept_left,
-                   round(ar, 6) AS intercept_right,
-                   round(bl, 6) AS slope_left,
-                   round(br, 6) AS slope_right,
-                   round(ar - al, 6) AS effect
-            FROM fits
-        """,
-        "ljung_box": f"""
-            WITH b AS (
-                SELECT event_type, event_id AS t,
-                       CAST(round(value * 100) AS BIGINT) AS x
-                FROM events
-            ), led AS (
-                SELECT event_type, x,
-                       LEAD(x, 1) OVER w AS l1, LEAD(x, 2) OVER w AS l2,
-                       LEAD(x, 3) OVER w AS l3, LEAD(x, 4) OVER w AS l4,
-                       LEAD(x, 5) OVER w AS l5
-                FROM b
-                WINDOW w AS (PARTITION BY event_type ORDER BY t)
-            ), agg AS (
-                SELECT event_type,
-                       CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(x) AS HUGEINT) AS S,
-                       CAST(SUM(x * x) AS HUGEINT) AS SS,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x * l1 END) AS HUGEINT) AS cr1,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x END) AS HUGEINT) AS hd1,
-                       CAST(SUM(l1) AS HUGEINT) AS tl1,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x * l2 END) AS HUGEINT) AS cr2,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x END) AS HUGEINT) AS hd2,
-                       CAST(SUM(l2) AS HUGEINT) AS tl2,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x * l3 END) AS HUGEINT) AS cr3,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x END) AS HUGEINT) AS hd3,
-                       CAST(SUM(l3) AS HUGEINT) AS tl3,
-                       CAST(SUM(CASE WHEN l4 IS NOT NULL THEN x * l4 END) AS HUGEINT) AS cr4,
-                       CAST(SUM(CASE WHEN l4 IS NOT NULL THEN x END) AS HUGEINT) AS hd4,
-                       CAST(SUM(l4) AS HUGEINT) AS tl4,
-                       CAST(SUM(CASE WHEN l5 IS NOT NULL THEN x * l5 END) AS HUGEINT) AS cr5,
-                       CAST(SUM(CASE WHEN l5 IS NOT NULL THEN x END) AS HUGEINT) AS hd5,
-                       CAST(SUM(l5) AS HUGEINT) AS tl5
-                FROM led GROUP BY 1
-            ), long AS (
-                SELECT event_type, 1 AS lag, cr1 AS cr, hd1 AS hd, tl1 AS tl, n, S, SS FROM agg
-                UNION ALL SELECT event_type, 2, cr2, hd2, tl2, n, S, SS FROM agg
-                UNION ALL SELECT event_type, 3, cr3, hd3, tl3, n, S, SS FROM agg
-                UNION ALL SELECT event_type, 4, cr4, hd4, tl4, n, S, SS FROM agg
-                UNION ALL SELECT event_type, 5, cr5, hd5, tl5, n, S, SS FROM agg
-            ), rr AS (
-                SELECT event_type, lag, n,
-                       CASE WHEN n * n * SS - n * S * S <> 0 AND n > lag THEN
-                           round(CAST(n * n * COALESCE(cr, 0)
-                                      - n * S * (COALESCE(hd, 0) + COALESCE(tl, 0))
-                                      + (n - lag) * S * S AS DOUBLE)
-                                 / CAST(n * n * SS - n * S * S AS DOUBLE), 6)
-                       END + 0.0 AS r
-                FROM long
-            ), packed AS (
-                SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-                       CAST(COUNT(*) AS BIGINT) AS h,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(r * r / CAST(n - lag AS DOUBLE) ORDER BY lag)),
-                           (a, b) -> a + b) AS s
-                FROM rr WHERE r IS NOT NULL GROUP BY 1
-            ), qq AS (
-                SELECT event_type, n, h,
-                       CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2) * s AS q,
-                       CAST(h AS DOUBLE) AS dfree
-                FROM packed
-            ), zed AS (
-                SELECT event_type, n, h, q,
-                       (pow(q / dfree, 0.3333333333333333e0)
-                        - (1.0 - 2.0 / (9.0 * dfree)))
-                       / sqrt(2.0 / (9.0 * dfree)) AS z
-                FROM qq
-            )
-            SELECT event_type, n, h, round(q, 9) AS q_stat,
-                   round(CASE WHEN h > 0 AND q > 0 THEN
-                       LEAST(1.0, GREATEST(0.0,
-                           CASE WHEN z >= 0 THEN {_normal_sf_sql("z")}
-                                ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                       ELSE 1.0 END, 6) AS p_value
-            FROM zed
-        """,
-        "haar_transform": """
-            WITH m AS (
-                SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS rev
-                FROM orders GROUP BY 1
-            ), s0 AS (
-                SELECT ROW_NUMBER() OVER (ORDER BY month) - 1 AS idx, rev AS val
-                FROM m
-            ), l1 AS (
-                SELECT CAST(floor(idx / 2) AS BIGINT) AS idx, COUNT(*) AS cnt,
-                       MIN(CASE WHEN idx % 2 = 0 THEN val END) AS ev,
-                       MIN(CASE WHEN idx % 2 = 1 THEN val END) AS od
-                FROM s0 GROUP BY 1
-            ), h1 AS (
-                SELECT 1 AS level, idx, ev + od AS approx, ev - od AS detail
-                FROM l1 WHERE cnt = 2
-            ), s1 AS (
-                SELECT idx, approx AS val FROM h1
-            ), l2 AS (
-                SELECT CAST(floor(idx / 2) AS BIGINT) AS idx, COUNT(*) AS cnt,
-                       MIN(CASE WHEN idx % 2 = 0 THEN val END) AS ev,
-                       MIN(CASE WHEN idx % 2 = 1 THEN val END) AS od
-                FROM s1 GROUP BY 1
-            ), h2 AS (
-                SELECT 2 AS level, idx, ev + od AS approx, ev - od AS detail
-                FROM l2 WHERE cnt = 2
-            ), s2 AS (
-                SELECT idx, approx AS val FROM h2
-            ), l3 AS (
-                SELECT CAST(floor(idx / 2) AS BIGINT) AS idx, COUNT(*) AS cnt,
-                       MIN(CASE WHEN idx % 2 = 0 THEN val END) AS ev,
-                       MIN(CASE WHEN idx % 2 = 1 THEN val END) AS od
-                FROM s2 GROUP BY 1
-            ), h3 AS (
-                SELECT 3 AS level, idx, ev + od AS approx, ev - od AS detail
-                FROM l3 WHERE cnt = 2
-            )
-            SELECT level, idx, approx, detail FROM h1
-            UNION ALL SELECT level, idx, approx, detail FROM h2
-            UNION ALL SELECT level, idx, approx, detail FROM h3
-        """,
-        "granger_causality": f"""
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS day,
-                       COUNT(*) AS y,
-                       SUM(CASE WHEN o_orderpriority = '1-URGENT'
-                                THEN 1 ELSE 0 END) AS x
-                FROM orders GROUP BY 1
-            ), lagged AS (
-                SELECT y, lag(y, 1) OVER (ORDER BY day) AS y1,
-                       lag(x, 1) OVER (ORDER BY day) AS x1
-                FROM daily
-            ), kept AS (
-                SELECT y, y1, x1 FROM lagged
-                WHERE y1 IS NOT NULL AND x1 IS NOT NULL
-            ), sums AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(CAST(y AS HUGEINT)) AS sy,
-                       SUM(CAST(y1 AS HUGEINT)) AS s1,
-                       SUM(CAST(x1 AS HUGEINT)) AS s2,
-                       SUM(CAST(y AS HUGEINT) * y) AS syy0,
-                       SUM(CAST(y1 AS HUGEINT) * y1) AS s11x,
-                       SUM(CAST(x1 AS HUGEINT) * x1) AS s22x,
-                       SUM(CAST(y1 AS HUGEINT) * y) AS s1yx,
-                       SUM(CAST(x1 AS HUGEINT) * y) AS s2yx,
-                       SUM(CAST(y1 AS HUGEINT) * x1) AS s12x
-                FROM kept
-            ), cs AS (
-                SELECT CAST(n AS BIGINT) AS n_int, CAST(n AS DOUBLE) AS nd,
-                       CAST(n * syy0 - sy * sy AS DOUBLE) AS syyc,
-                       CAST(n * s11x - s1 * s1 AS DOUBLE) AS s11,
-                       CAST(n * s22x - s2 * s2 AS DOUBLE) AS s22,
-                       CAST(n * s1yx - s1 * sy AS DOUBLE) AS s1y,
-                       CAST(n * s2yx - s2 * sy AS DOUBLE) AS s2y,
-                       CAST(n * s12x - s1 * s2 AS DOUBLE) AS s12
-                FROM sums
-            ), coefs AS (
-                SELECT *, s11 * s22 - s12 * s12 AS det FROM cs
-            ), bc AS (
-                SELECT *,
-                       CASE WHEN det <> 0
-                            THEN (s1y * s22 - s2y * s12) / det END AS b,
-                       CASE WHEN det <> 0
-                            THEN (s2y * s11 - s1y * s12) / det END AS c
-                FROM coefs
-            ), rs AS (
-                SELECT *,
-                       CASE WHEN s11 > 0 THEN syyc - s1y * s1y / s11 END AS rssr,
-                       syyc - (b * s1y + c * s2y) AS rssu
-                FROM bc
-            ), ff AS (
-                SELECT n_int, det, b, c, rssr, rssu, nd,
-                       CASE WHEN det <> 0 AND rssr IS NOT NULL
-                                 AND rssu > 0 AND nd > 3
-                            THEN (rssr - rssu) * (nd - 3.0) / rssu END AS f
-                FROM rs
-            )
-            SELECT n_int AS n,
-                   round(CASE WHEN det <> 0 THEN b END, 6) AS coef_ylag,
-                   round(CASE WHEN det <> 0 THEN c END, 6) AS coef_xlag,
-                   round(f, 9) AS f_stat,
-                   round(CASE WHEN f IS NOT NULL THEN LEAST(1.0,
-                           2.0 * {_normal_sf_sql("sqrt(GREATEST(f, 0.0))")})
-                         WHEN det <> 0 AND rssr IS NOT NULL AND rssu <= 0
-                              AND nd > 3 AND rssr > 0 THEN 0.0
-                         WHEN det <> 0 AND rssr IS NOT NULL AND rssu <= 0
-                              AND nd > 3 THEN 1.0 END, 6) AS p_value
-            FROM ff
-        """,
-        "logrank_test": f"""
-            WITH s AS (
-                SELECT user_id, MIN(ts) AS t0 FROM events
-                WHERE event_type = 'signup' GROUP BY user_id
-            ), p AS (
-                SELECT e.user_id, MIN(e.ts) AS t1
-                FROM events e JOIN s USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts > s.t0
-                GROUP BY e.user_id
-            ), m AS (SELECT MAX(ts) AS tmax FROM events),
-            subj AS (
-                SELECT date_diff('day', CAST(s.t0 AS DATE),
-                                 CAST(COALESCE(p.t1, m.tmax) AS DATE)) AS t,
-                       CASE WHEN p.t1 IS NOT NULL THEN 1 ELSE 0 END AS e,
-                       CASE WHEN s.user_id % 2 = 1 THEN 1 ELSE 0 END AS g
-                FROM s LEFT JOIN p USING (user_id), m
-            ), per_t AS (
-                SELECT t, COUNT(*) AS cnt, SUM(g) AS cnt1,
-                       SUM(e) AS d, SUM(e * g) AS d1
-                FROM subj GROUP BY 1
-            ), tot AS (
-                SELECT SUM(cnt) AS n, SUM(cnt1) AS n1,
-                       SUM(d1) AS o1, MAX(t) AS tmx
-                FROM per_t
-            ), st AS (
-                SELECT t, d, tmx, n, n1, o1,
-                       n - COALESCE(SUM(cnt) OVER (ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nr,
-                       n1 - COALESCE(SUM(cnt1) OVER (ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nr1
-                FROM per_t CROSS JOIN tot
-            ), tm AS (
-                SELECT t, tmx, n, n1, o1,
-                       SUM(CASE WHEN d > 0 THEN CAST(d AS DOUBLE)
-                               * (CAST(nr1 AS DOUBLE) / CAST(nr AS DOUBLE))
-                           ELSE 0.0 END) OVER (ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e1,
-                       SUM(CASE WHEN d > 0 AND nr > 1 THEN CAST(d AS DOUBLE)
-                               * (CAST(nr1 AS DOUBLE) / CAST(nr AS DOUBLE))
-                               * (1.0 - CAST(nr1 AS DOUBLE) / CAST(nr AS DOUBLE))
-                               * CAST(nr - d AS DOUBLE) / CAST(nr - 1 AS DOUBLE)
-                           ELSE 0.0 END) OVER (ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
-                FROM st
-            ), fin AS (
-                SELECT CAST(n AS BIGINT) AS n, CAST(n1 AS BIGINT) AS n1,
-                       CAST(o1 AS BIGINT) AS o1, e1,
-                       CASE WHEN v > 0 THEN (CAST(o1 AS DOUBLE) - e1)
-                           * (CAST(o1 AS DOUBLE) - e1) / v END AS chi2
-                FROM tm WHERE t = tmx
-            )
-            SELECT n, n1, o1, round(e1, 6) AS e1, round(chi2, 9) AS chi2,
-                   round(CASE WHEN chi2 IS NOT NULL THEN
-                       LEAST(1.0, 2.0 * {_normal_sf_sql("sqrt(chi2)")}) END, 6)
-                       AS p_value
-            FROM fin
-        """,
-        "partial_corr": """
-            WITH base AS (
-                SELECT CAST(l_quantity AS BIGINT) AS x,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-                       CAST(round(l_discount * 100) AS BIGINT) AS z
-                FROM lineitem
-            ), sums AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS sx,
-                       SUM(CAST(y AS HUGEINT)) AS sy,
-                       SUM(CAST(z AS HUGEINT)) AS sz,
-                       SUM(CAST(x AS HUGEINT) * x) AS sxx,
-                       SUM(CAST(y AS HUGEINT) * y) AS syy,
-                       SUM(CAST(z AS HUGEINT) * z) AS szz,
-                       SUM(CAST(x AS HUGEINT) * y) AS sxy,
-                       SUM(CAST(x AS HUGEINT) * z) AS sxz,
-                       SUM(CAST(y AS HUGEINT) * z) AS syz
-                FROM base
-            ), rr AS (
-                SELECT CAST(n AS BIGINT) AS n_int,
-                       CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-                             AND CAST(n * syy - sy * sy AS DOUBLE) > 0
-                            THEN CAST(n * sxy - sx * sy AS DOUBLE)
-                                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                                        * CAST(n * syy - sy * sy AS DOUBLE)) END AS rxy,
-                       CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-                             AND CAST(n * szz - sz * sz AS DOUBLE) > 0
-                            THEN CAST(n * sxz - sx * sz AS DOUBLE)
-                                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                                        * CAST(n * szz - sz * sz AS DOUBLE)) END AS rxz,
-                       CASE WHEN CAST(n * syy - sy * sy AS DOUBLE) > 0
-                             AND CAST(n * szz - sz * sz AS DOUBLE) > 0
-                            THEN CAST(n * syz - sy * sz AS DOUBLE)
-                                 / sqrt(CAST(n * syy - sy * sy AS DOUBLE)
-                                        * CAST(n * szz - sz * sz AS DOUBLE)) END AS ryz
-                FROM sums
-            )
-            SELECT n_int AS n,
-                   round(rxy, 9) AS r_xy,
-                   round(rxz, 9) AS r_xz,
-                   round(ryz, 9) AS r_yz,
-                   round(CASE WHEN (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0
-                         THEN (rxy - rxz * ryz)
-                              / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)) END, 9)
-                       AS partial_r
-            FROM rr
-        """,
-        "durbin_watson": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS x,
-                       COUNT(*) AS y
-                FROM orders GROUP BY 1
-            ), sums AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS sx,
-                       SUM(CAST(y AS HUGEINT)) AS sy,
-                       SUM(CAST(x AS HUGEINT) * x) AS sxx,
-                       SUM(CAST(x AS HUGEINT) * y) AS sxy
-                FROM daily
-            ), cons AS (
-                SELECT n, sx, sy,
-                       n * sxx - sx * sx AS dd,
-                       n * sxy - sx * sy AS nb
-                FROM sums
-            ), staged AS (
-                SELECT x, n,
-                       CAST(n * dd * y - (sy * dd - nb * sx) - n * nb * x
-                            AS DOUBLE) AS e,
-                       CAST(dd AS DOUBLE) AS ddd,
-                       CAST(nb AS DOUBLE) / CAST(dd AS DOUBLE) AS slope
-                FROM daily CROSS JOIN cons
-            ), lagged AS (
-                SELECT x, n, ddd, slope, e,
-                       lag(e, 1) OVER (ORDER BY x, e) AS ep,
-                       row_number() OVER (ORDER BY x, e) AS rn
-                FROM staged
-            ), summed AS (
-                SELECT n, rn, ddd, slope,
-                       SUM(CASE WHEN ep IS NOT NULL THEN (e - ep) * (e - ep)
-                           ELSE 0.0 END) OVER (ORDER BY x, e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS num,
-                       SUM(e * e) OVER (ORDER BY x, e
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS den
-                FROM lagged
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(CASE WHEN ddd <> 0 THEN slope END, 9) AS slope,
-                   round(CASE WHEN den > 0 AND ddd <> 0 THEN num / den END, 9) AS dw
-            FROM summed WHERE rn = CAST(n AS BIGINT)
-        """,
-        "cochran_q": f"""
-            WITH long AS (
-                SELECT c_custkey AS b, 't1' AS t,
-                       CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END AS s
-                FROM customer
-                UNION ALL
-                SELECT c_custkey, 't2',
-                       CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
-                FROM customer
-                UNION ALL
-                SELECT c_custkey, 't3',
-                       CASE WHEN c_custkey % 3 = 0 THEN 1 ELSE 0 END
-                FROM customer
-            ), ct AS (
-                SELECT t, SUM(s) AS cj FROM long GROUP BY 1
-            ), cb AS (
-                SELECT b, SUM(s) AS ri FROM long GROUP BY 1
-            ), at2 AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS k,
-                       SUM(CAST(cj AS HUGEINT)) AS n,
-                       SUM(CAST(cj AS HUGEINT) * cj) AS c2
-                FROM ct
-            ), ab2 AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS nb,
-                       SUM(CAST(ri AS HUGEINT) * ri) AS r2
-                FROM cb
-            ), qq AS (
-                SELECT nb, CAST(k AS BIGINT) AS k,
-                       CASE WHEN CAST(k * n - r2 AS DOUBLE) > 0 THEN
-                           CAST((k - 1) * (k * c2 - n * n) AS DOUBLE)
-                           / CAST(k * n - r2 AS DOUBLE) END AS q,
-                       CAST(k - 1 AS DOUBLE) AS dfree
-                FROM at2 CROSS JOIN ab2
-            ), zed AS (
-                SELECT nb, k, q,
-                       (pow(q / dfree, 0.3333333333333333e0)
-                        - (1.0 - 2.0 / (9.0 * dfree)))
-                       / sqrt(2.0 / (9.0 * dfree)) AS z
-                FROM qq
-            )
-            SELECT nb AS n_blocks, k, round(q, 9) AS q,
-                   round(CASE WHEN q IS NOT NULL AND k > 1 AND q > 0 THEN
-                       LEAST(1.0, GREATEST(0.0,
-                           CASE WHEN z >= 0 THEN {_normal_sf_sql("z")}
-                                ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                       WHEN q IS NOT NULL THEN 1.0 END, 6) AS p_value
-            FROM zed
-        """,
-        "friedman_test": f"""
-            WITH o AS (
-                SELECT o_custkey AS ck, o_orderdate AS dt, o_orderkey AS okey,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), per AS (
-                SELECT ck,
-                       first(cents ORDER BY dt, okey) AS first_c,
-                       last(cents ORDER BY dt, okey) AS last_c,
-                       MAX(cents) AS max_c
-                FROM o GROUP BY 1
-            ), long AS (
-                SELECT ck AS b, 'first' AS t, first_c AS v FROM per
-                UNION ALL SELECT ck, 'last', last_c FROM per
-                UNION ALL SELECT ck, 'max', max_c FROM per
-            ), per_bv AS (
-                SELECT b, v, COUNT(*) AS cnt FROM long GROUP BY 1, 2
-            ), ranked_v AS (
-                SELECT b, v,
-                       2 * COALESCE(SUM(cnt) OVER (PARTITION BY b ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + cnt + 1 AS r2
-                FROM per_bv
-            ), ranked AS (
-                SELECT long.t, r2 FROM long JOIN ranked_v USING (b, v)
-            ), per_t AS (
-                SELECT t, SUM(CAST(r2 AS HUGEINT)) AS rj2, COUNT(*) AS nb
-                FROM ranked GROUP BY 1
-            ), a2t AS (
-                SELECT SUM(CAST(r2 AS HUGEINT) * r2) AS a2 FROM ranked
-            ), agg AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS k,
-                       CAST(MAX(nb) AS HUGEINT) AS n,
-                       SUM(rj2) AS sr,
-                       SUM(rj2 * rj2) AS sr2
-                FROM per_t
-            ), st AS (
-                SELECT CAST(n AS BIGINT) AS n_blocks, CAST(k AS BIGINT) AS k,
-                       CASE WHEN CAST(n * k * a2 - sr * sr AS DOUBLE) > 0 THEN
-                           CAST((k - 1) * n * (k * sr2 - sr * sr) AS DOUBLE)
-                           / CAST(n * k * a2 - sr * sr AS DOUBLE) END AS chi2,
-                       CAST(k - 1 AS DOUBLE) AS dfree
-                FROM agg CROSS JOIN a2t
-            ), zed AS (
-                SELECT n_blocks, k, chi2,
-                       (pow(chi2 / dfree, 0.3333333333333333e0)
-                        - (1.0 - 2.0 / (9.0 * dfree)))
-                       / sqrt(2.0 / (9.0 * dfree)) AS z
-                FROM st
-            )
-            SELECT n_blocks, k, round(chi2, 9) AS chi2,
-                   round(CASE WHEN chi2 IS NOT NULL AND k > 1 AND chi2 > 0 THEN
-                       LEAST(1.0, GREATEST(0.0,
-                           CASE WHEN z >= 0 THEN {_normal_sf_sql("z")}
-                                ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                       WHEN chi2 IS NOT NULL THEN 1.0 END, 6) AS p_value
-            FROM zed
-        """,
-        "bayes_ab_beta": """
-            WITH flags AS (
-                SELECT CASE WHEN c_custkey % 2 = 0 THEN 'control'
-                            ELSE 'treatment' END AS v,
-                       CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END AS s
-                FROM customer
-            ), c AS (
-                SELECT SUM(CASE WHEN v = 'control' THEN s ELSE 0 END) AS sa,
-                       SUM(CASE WHEN v = 'control' THEN 1 ELSE 0 END) AS na,
-                       SUM(CASE WHEN v = 'treatment' THEN s ELSE 0 END) AS sb,
-                       SUM(CASE WHEN v = 'treatment' THEN 1 ELSE 0 END) AS nb
-                FROM flags
-            ), p AS (
-                SELECT sa, na, sb, nb,
-                       sa + 1 AS aa, na - sa + 1 AS ba,
-                       sb + 1 AS abb, nb - sb + 1 AS bb
-                FROM c
-            ), gj AS (
-                SELECT p.*, unnest(generate_series(0, CAST(bb - 1 AS BIGINT))) AS j FROM p
-            ), l0c AS (
-                SELECT j, bb,
-                       SUM(ln(CAST(ba + j AS DOUBLE))
-                           - ln(CAST(aa + ba + j AS DOUBLE)))
-                           OVER (ORDER BY j
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-                FROM gj
-            ), l0 AS (
-                SELECT c AS l0 FROM l0c WHERE j = bb - 1
-            ), gi AS (
-                SELECT p.*, unnest(generate_series(0, CAST(abb - 1 AS BIGINT))) AS i FROM p
-            ), ltc AS (
-                SELECT i, abb,
-                       SUM(CASE WHEN i > 0 THEN
-                               ln(CAST(aa + i - 1 AS DOUBLE)
-                                  * CAST(bb + i - 1 AS DOUBLE))
-                               - ln(CAST(aa + ba + bb + i - 1 AS DOUBLE)
-                                    * CAST(i AS DOUBLE))
-                           ELSE 0.0 END)
-                           OVER (ORDER BY i
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lt
-                FROM gi
-            ), mx AS (
-                SELECT MAX(lt) AS m FROM ltc
-            ), sm AS (
-                SELECT i, abb,
-                       SUM(exp(lt - m)) OVER (ORDER BY i
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
-                       m
-                FROM ltc CROSS JOIN mx
-            )
-            SELECT CAST((SELECT sa FROM c) AS BIGINT) AS successes_a,
-                   CAST((SELECT na FROM c) AS BIGINT) AS trials_a,
-                   CAST((SELECT sb FROM c) AS BIGINT) AS successes_b,
-                   CAST((SELECT nb FROM c) AS BIGINT) AS trials_b,
-                   round(LEAST(1.0, exp((SELECT l0 FROM l0) + m + ln(s))), 6)
-                       AS prob_b_beats_a
-            FROM sm WHERE i = abb - 1
-        """,
-        "point_in_polygon": f"""
-            WITH pts AS (
-                SELECT c_custkey,
-                       ((c_custkey % 1000) + 1000) % 1000 AS px,
-                       ((CAST(round(c_acctbal * 100) AS BIGINT) % 1000) + 1000)
-                           % 1000 AS py
-                FROM customer
-            )
-            SELECT c_custkey, px, py,
-                   {_pip_sql("px", "py", _PIP_POLYGON)} AS inside
-            FROM pts
-        """,
-        "ransac_line": """
-            WITH pts AS (
-                SELECT date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) AS x,
-                       COUNT(*) AS y
-                FROM orders GROUP BY 1
-            ), d AS (
-                SELECT DISTINCT x, y FROM pts
-            ), s AS (
-                SELECT x, y,
-                       md5('ransac:' || CAST(x AS VARCHAR) || ':'
-                           || CAST(y AS VARCHAR)) AS h
-                FROM d ORDER BY h, x, y LIMIT 32
-            ), r AS (
-                SELECT x, y, ROW_NUMBER() OVER (ORDER BY h, x, y) AS rn FROM s
-            ), a AS (
-                SELECT CAST((rn + 1) / 2 AS BIGINT) AS cand_id,
-                       x AS x1, y AS y1 FROM r WHERE rn % 2 = 1
-            ), b AS (
-                SELECT CAST(rn / 2 AS BIGINT) AS cand_id,
-                       x AS x2, y AS y2 FROM r WHERE rn % 2 = 0
-            ), cands AS (
-                SELECT a.cand_id, x1, y1, x2, y2
-                FROM a JOIN b USING (cand_id) WHERE x1 <> x2
-            ), sc AS (
-                SELECT cand_id, x1, y1, x2, y2,
-                       SUM(CASE WHEN abs(p.y * (x2 - x1) - y1 * (x2 - x1)
-                                         - (y2 - y1) * (p.x - x1))
-                                     <= 20 * abs(x2 - x1)
-                                THEN 1 ELSE 0 END) AS inl,
-                       COUNT(*) AS npts
-                FROM pts p CROSS JOIN cands
-                GROUP BY 1, 2, 3, 4, 5
-            ), best AS (
-                SELECT * FROM sc ORDER BY inl DESC, cand_id LIMIT 1
-            )
-            SELECT round(CAST(y2 - y1 AS DOUBLE) / CAST(x2 - x1 AS DOUBLE), 6)
-                       AS slope,
-                   round(CAST(y1 * (x2 - x1) - (y2 - y1) * x1 AS DOUBLE)
-                         / CAST(x2 - x1 AS DOUBLE), 6) AS intercept,
-                   CAST(inl AS BIGINT) AS n_inliers,
-                   CAST(npts AS BIGINT) AS n_points,
-                   cand_id
-            FROM best
-        """,
-        "hits_scores": """
-            WITH ev AS (
-                SELECT DISTINCT user_id AS src,
-                       (event_id % 500) + 10000000 AS dst
-                FROM events
-            ), nodes AS (
-                SELECT DISTINCT node FROM (
-                    SELECT src AS node FROM ev
-                    UNION ALL SELECT dst AS node FROM ev
-                )
-            ), h0 AS (
-                SELECT node, CAST(1 AS HUGEINT) AS h FROM nodes
-            ), s1 AS (
-                SELECT dst AS node, SUM(h) AS a FROM ev
-                JOIN h0 ON h0.node = ev.src GROUP BY 1
-            ), a1 AS (
-                SELECT n.node, COALESCE(s1.a, 0) AS a
-                FROM nodes n LEFT JOIN s1 USING (node)
-            ), t1 AS (
-                SELECT src AS node, SUM(a) AS h FROM ev
-                JOIN a1 ON a1.node = ev.dst GROUP BY 1
-            ), h1 AS (
-                SELECT n.node, COALESCE(t1.h, 0) AS h
-                FROM nodes n LEFT JOIN t1 USING (node)
-            ), s2 AS (
-                SELECT dst AS node, SUM(h) AS a FROM ev
-                JOIN h1 ON h1.node = ev.src GROUP BY 1
-            ), a2 AS (
-                SELECT n.node, COALESCE(s2.a, 0) AS a
-                FROM nodes n LEFT JOIN s2 USING (node)
-            ), t2 AS (
-                SELECT src AS node, SUM(a) AS h FROM ev
-                JOIN a2 ON a2.node = ev.dst GROUP BY 1
-            ), h2 AS (
-                SELECT n.node, COALESCE(t2.h, 0) AS h
-                FROM nodes n LEFT JOIN t2 USING (node)
-            ), s3 AS (
-                SELECT dst AS node, SUM(h) AS a FROM ev
-                JOIN h2 ON h2.node = ev.src GROUP BY 1
-            ), a3 AS (
-                SELECT n.node, COALESCE(s3.a, 0) AS a
-                FROM nodes n LEFT JOIN s3 USING (node)
-            ), t3 AS (
-                SELECT src AS node, SUM(a) AS h FROM ev
-                JOIN a3 ON a3.node = ev.dst GROUP BY 1
-            ), h3 AS (
-                SELECT n.node, COALESCE(t3.h, 0) AS h
-                FROM nodes n LEFT JOIN t3 USING (node)
-            ), j AS (
-                SELECT a3.node AS node, a3.a AS a, h3.h AS h
-                FROM a3 JOIN h3 USING (node)
-            ), mx AS (
-                SELECT MAX(a) AS ma, MAX(h) AS mh FROM j
-            )
-            SELECT node,
-                   round(CASE WHEN ma > 0
-                         THEN CAST(a AS DOUBLE) / CAST(ma AS DOUBLE)
-                         ELSE 0.0 END, 9) AS auth_ratio,
-                   round(CASE WHEN mh > 0
-                         THEN CAST(h AS DOUBLE) / CAST(mh AS DOUBLE)
-                         ELSE 0.0 END, 9) AS hub_ratio
-            FROM j CROSS JOIN mx
-            ORDER BY auth_ratio DESC, node
-            LIMIT 20
-        """,
-        "dp_noisy_counts": """
-            WITH c AS (
-                SELECT event_type AS grp, COUNT(*) AS n FROM events GROUP BY 1
-            ), hx AS (
-                SELECT grp, n, md5('dp:' || CAST(grp AS VARCHAR)) AS h FROM c
-            ), dg AS (
-                SELECT grp, n,
-                       ascii(substr(h, 1, 1)) - CASE WHEN ascii(substr(h, 1, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d1,
-                       ascii(substr(h, 2, 1)) - CASE WHEN ascii(substr(h, 2, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d2,
-                       ascii(substr(h, 3, 1)) - CASE WHEN ascii(substr(h, 3, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d3,
-                       ascii(substr(h, 4, 1)) - CASE WHEN ascii(substr(h, 4, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d4,
-                       ascii(substr(h, 5, 1)) - CASE WHEN ascii(substr(h, 5, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d5,
-                       ascii(substr(h, 6, 1)) - CASE WHEN ascii(substr(h, 6, 1)) <= 57
-                           THEN 48 ELSE 87 END AS d6
-                FROM hx
-            ), uu AS (
-                SELECT grp, n,
-                       (CAST((((((d1 * 16 + d2) * 16 + d3) * 16 + d4) * 16 + d5)
-                              * 16 + d6) AS DOUBLE) + 0.5) / 16777216.0 AS u
-                FROM dg
-            ), nz AS (
-                SELECT grp, n,
-                       -2.0 * (CASE WHEN u - 0.5 >= 0 THEN 1.0 ELSE -1.0 END)
-                       * ln(1.0 - 2.0 * abs(u - 0.5)) AS noise
-                FROM uu
-            )
-            SELECT grp, round(CAST(n AS DOUBLE) + noise, 6) AS noisy_count
-            FROM nz
-        """,
-        "decision_stump": """
-            WITH base AS (
-                SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS f,
-                       CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS y
-                FROM customer
-            ), per_f AS (
-                SELECT f, COUNT(*) AS cnt, SUM(y) AS pos FROM base GROUP BY 1
-            ), cum AS (
-                SELECT f,
-                       SUM(cnt) OVER (ORDER BY f
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ln,
-                       SUM(pos) OVER (ORDER BY f
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lp
-                FROM per_f
-            ), tot AS (
-                SELECT SUM(cnt) AS n, SUM(pos) AS p, MAX(f) AS fmax FROM per_f
-            ), cand AS (
-                SELECT f, ln, lp, n, p FROM cum CROSS JOIN tot WHERE f < fmax
-            ), g AS (
-                SELECT f, ln, lp, n - ln AS rn, p - lp AS rp,
-                       (2.0 * CAST(lp AS DOUBLE)
-                            * (CAST(ln AS DOUBLE) - CAST(lp AS DOUBLE))
-                            / CAST(ln AS DOUBLE)
-                        + 2.0 * CAST(p - lp AS DOUBLE)
-                            * (CAST(n - ln AS DOUBLE) - CAST(p - lp AS DOUBLE))
-                            / CAST(n - ln AS DOUBLE)) / CAST(n AS DOUBLE) AS gini
-                FROM cand
-            )
-            SELECT CAST(f AS BIGINT) AS threshold, round(gini, 9) AS gini,
-                   CAST(ln AS BIGINT) AS left_n, CAST(lp AS BIGINT) AS left_pos,
-                   CAST(rn AS BIGINT) AS right_n, CAST(rp AS BIGINT) AS right_pos
-            FROM g ORDER BY gini, f LIMIT 1
-        """,
-        "query_likelihood": """
-            WITH tk AS (
-                SELECT doc_id, term FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), dl AS (
-                SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY 1
-            ), tot AS (
-                SELECT SUM(dl) AS tt FROM dl
-            ), cf AS (
-                SELECT term, COUNT(*) AS cf FROM tk
-                WHERE term IN ('merge', 'spark', 'window') GROUP BY 1
-            ), consts AS (
-                SELECT COUNT(*) AS nq,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(2000.0 * (CAST(cf AS DOUBLE) / CAST(tt AS DOUBLE)))
-                                ORDER BY term)), (a, b) -> a + b) AS c0
-                FROM cf CROSS JOIN tot
-            ), tf AS (
-                SELECT doc_id, term, COUNT(*) AS tf FROM tk
-                WHERE term IN ('merge', 'spark', 'window') GROUP BY 1, 2
-            ), sp AS (
-                SELECT doc_id,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(ln(1.0 + CAST(tf AS DOUBLE)
-                                / (2000.0 * (CAST(cf AS DOUBLE) / CAST(tt AS DOUBLE))))
-                                ORDER BY term)), (a, b) -> a + b) AS bonus
-                FROM tf JOIN cf USING (term) CROSS JOIN tot
-                GROUP BY doc_id
-            )
-            SELECT doc_id,
-                   round(c0 - CAST(nq AS DOUBLE) * ln(CAST(dl AS DOUBLE) + 2000.0)
-                         + COALESCE(bonus, 0.0), 6) AS score
-            FROM dl LEFT JOIN sp USING (doc_id) CROSS JOIN consts
-            ORDER BY score DESC, doc_id
-            LIMIT 20
-        """,
-        "language_purity": f"""
-            WITH m AS (
-                SELECT doc_id,
-                       string_split(
-                           regexp_replace(
-                               regexp_replace(COALESCE(text, ''),
-                                   '([a-z0-9]+ [a-z0-9]+ [a-z0-9]+) ',
-                                   '\\1. ', 'g'),
-                               '([.!?]+)\\s+', '\\1' || chr(10), 'g'),
-                           chr(10)) AS sents
-                FROM documents
-            ), s AS (
-                SELECT doc_id, trim(sents[i]) AS sentence
-                FROM m, unnest(range(1, len(sents) + 1)) AS u(i)
-                WHERE trim(sents[i]) <> ''
-            ), sc AS (
-                SELECT doc_id, {_langid_sql("sentence")} AS lang FROM s
-            ), per AS (
-                SELECT doc_id, lang, COUNT(*) AS c FROM sc GROUP BY 1, 2
-            ), tot AS (
-                SELECT doc_id, SUM(c) AS ns,
-                       SUM(CASE WHEN lang = 'und' THEN c ELSE 0 END) AS nund
-                FROM per GROUP BY 1
-            ), top AS (
-                SELECT doc_id, lang, c FROM (
-                    SELECT *, row_number() OVER (PARTITION BY doc_id
-                        ORDER BY c DESC, lang ASC) AS rk
-                    FROM per
-                ) WHERE rk = 1
-            )
-            SELECT t.doc_id,
-                   CAST(ns AS BIGINT) AS n_sentences,
-                   top.lang AS majority_lang,
-                   CAST(top.c AS BIGINT) AS n_majority,
-                   round(CAST(top.c AS DOUBLE) / CAST(ns AS DOUBLE), 9)
-                       AS purity,
-                   CAST(nund AS BIGINT) AS n_und
-            FROM tot t JOIN top USING (doc_id)
-        """,
-        "sbg_retention": """
-            WITH mi AS (
-                SELECT year(ts) * 12 + month(ts) AS m, user_id FROM events
-            ), m0 AS (
-                SELECT MIN(m) AS m0 FROM mi
-            ), cohort AS (
-                SELECT user_id FROM mi CROSS JOIN m0
-                GROUP BY user_id, m0 HAVING MIN(m) = MAX(m0)
-            ), curve AS (
-                SELECT p, COUNT(*) AS active FROM (
-                    SELECT DISTINCT mi.m - m0.m0 AS p, mi.user_id
-                    FROM mi JOIN cohort USING (user_id) CROSS JOIN m0
-                ) GROUP BY 1
-            ), piv AS (
-                SELECT
-                    SUM(CASE WHEN p = 0 THEN active END) AS n0,
-                    CAST(SUM(CASE WHEN p = 1 THEN active END) AS DOUBLE)
-                        / CAST(SUM(CASE WHEN p = 0 THEN active END) AS DOUBLE)
-                        AS s1,
-                    CAST(SUM(CASE WHEN p = 2 THEN active END) AS DOUBLE)
-                        / CAST(SUM(CASE WHEN p = 0 THEN active END) AS DOUBLE)
-                        AS s2
-                FROM curve
-            ), pri AS (
-                SELECT n0,
-                       CASE WHEN n0 IS NOT NULL AND n0 > 0
-                                 AND s1 IS NOT NULL AND s2 IS NOT NULL
-                                 AND s2 > s1 * s1 AND s1 > s2 AND s1 < 1
-                            THEN ((s1 - s2) / (s2 - s1 * s1)) * (1.0 - s1)
-                       END AS alpha,
-                       CASE WHEN n0 IS NOT NULL AND n0 > 0
-                                 AND s1 IS NOT NULL AND s2 IS NOT NULL
-                                 AND s2 > s1 * s1 AND s1 > s2 AND s1 < 1
-                            THEN s1 * ((s1 - s2) / (s2 - s1 * s1))
-                       END AS beta
-                FROM piv
-            ), grid AS (
-                SELECT DISTINCT p FROM (
-                    SELECT unnest(range(1, 13)) AS p
-                    UNION ALL SELECT p FROM curve WHERE p >= 1
-                )
-            ), j AS (
-                SELECT g.p, c.active, n0, alpha, beta
-                FROM grid g CROSS JOIN pri
-                LEFT JOIN curve c ON c.p = g.p
-            )
-            SELECT CAST(p AS BIGINT) AS period,
-                   CAST(active AS BIGINT) AS n_active,
-                   round(CASE WHEN active IS NOT NULL AND n0 > 0 THEN
-                       CAST(active AS DOUBLE) / CAST(n0 AS DOUBLE) END, 9)
-                       AS retention_obs,
-                   round(CASE WHEN alpha IS NOT NULL THEN
-                       list_reduce(list_prepend(CAST(1.0 AS DOUBLE),
-                           list_transform(range(1, CAST(p AS BIGINT) + 1),
-                               k -> CAST(k AS DOUBLE))),
-                           (acc, k) -> acc * ((beta + k - 1)
-                                              / (alpha + beta + k - 1)))
-                   END, 9) AS retention_fit,
-                   round(alpha, 9) AS alpha,
-                   round(beta, 9) AS beta
-            FROM j
-        """,
-        "overdispersion_check": f"""
-            WITH daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS x
-                FROM events GROUP BY 1, 2
-            ), ag AS (
-                SELECT event_type, COUNT(*) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS s,
-                       SUM(CAST(x AS HUGEINT) * x) AS q
-                FROM daily GROUP BY 1
-            ), st AS (
-                SELECT event_type, n,
-                       CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-                       CAST(n * q - s * s AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))
-                           AS var
-                FROM ag
-            ), rr AS (
-                SELECT *,
-                       CASE WHEN n > 1 AND mean > 0 THEN var / mean END
-                           AS ratio
-                FROM st
-            ), zz AS (
-                SELECT *,
-                       CASE WHEN ratio IS NOT NULL THEN
-                           (ratio - 1.0) * sqrt(CAST(n AS DOUBLE) / 2.0)
-                       END AS z
-                FROM rr
-            ), pp AS (
-                SELECT *,
-                       CASE WHEN z IS NOT NULL THEN
-                           LEAST(1.0, 2.0 * {_normal_sf_sql("abs(z)")})
-                       END AS p
-                FROM zz
-            )
-            SELECT event_type,
-                   CAST(n AS BIGINT) AS n,
-                   round(CASE WHEN n > 0 THEN mean END, 9) AS mean,
-                   round(CASE WHEN n > 1 THEN var END, 9) AS variance,
-                   round(ratio, 9) AS dispersion,
-                   round(z, 9) AS z,
-                   round(p, 9) AS p_value,
-                   CASE WHEN p IS NOT NULL
-                        THEN p < 0.05 AND ratio > 1 END AS overdispersed
-            FROM pp
-        """,
-        "eb_shrinkage": """
-            WITH base AS (
-                SELECT o_custkey AS k,
-                       CAST(SUM(CASE WHEN o_totalprice > 150000
-                                     THEN 1 ELSE 0 END) AS BIGINT) AS x,
-                       COUNT(*) AS n
-                FROM orders GROUP BY 1
-            ), rated AS (
-                SELECT k, x, n,
-                       LEAST(999, CAST(FLOOR(CAST(x * 1000 AS DOUBLE)
-                           / CAST(n AS DOUBLE)) AS INT)) AS b
-                FROM base WHERE n > 0
-            ), hist AS (
-                SELECT b, COUNT(*) AS c FROM rated GROUP BY 1
-            ), mom AS (
-                SELECT SUM(c) AS m0,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(c AS DOUBLE)
-                                * ((CAST(b AS DOUBLE) + 0.5) / 1000.0)
-                                ORDER BY b)), (a, s) -> a + s) AS s1,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(c AS DOUBLE)
-                                * ((CAST(b AS DOUBLE) + 0.5) / 1000.0)
-                                * ((CAST(b AS DOUBLE) + 0.5) / 1000.0)
-                                ORDER BY b)), (a, s) -> a + s) AS s2
-                FROM hist
-            ), pr AS (
-                SELECT m0,
-                       s1 / CAST(m0 AS DOUBLE) AS mean,
-                       s2 / CAST(m0 AS DOUBLE)
-                           - (s1 / CAST(m0 AS DOUBLE))
-                             * (s1 / CAST(m0 AS DOUBLE)) AS var
-                FROM mom
-            ), pri AS (
-                SELECT CASE WHEN m0 > 1 AND var > 0 AND mean > 0 AND mean < 1
-                             AND mean * (1.0 - mean) / var - 1.0 > 0
-                            THEN mean * (mean * (1.0 - mean) / var - 1.0)
-                       END AS alpha,
-                       CASE WHEN m0 > 1 AND var > 0 AND mean > 0 AND mean < 1
-                             AND mean * (1.0 - mean) / var - 1.0 > 0
-                            THEN (1.0 - mean)
-                                 * (mean * (1.0 - mean) / var - 1.0)
-                       END AS beta,
-                       CASE WHEN m0 > 0 THEN mean END AS pmean
-                FROM pr
-            ), j AS (
-                SELECT k, x, n, alpha, beta, pmean,
-                       CASE WHEN n > 0 THEN CAST(x AS DOUBLE)
-                            / CAST(n AS DOUBLE) END AS raw
-                FROM base CROSS JOIN pri
-            )
-            SELECT k AS cust,
-                   x AS successes, n AS trials,
-                   round(raw, 9) AS rate_raw,
-                   round(CASE WHEN alpha IS NOT NULL THEN
-                           (CAST(x AS DOUBLE) + alpha)
-                           / (CAST(n AS DOUBLE) + alpha + beta)
-                        ELSE COALESCE(raw, pmean) END, 9) AS rate_shrunk,
-                   round(alpha, 9) AS alpha,
-                   round(beta, 9) AS beta
-            FROM j
-        """,
-        "siegel_slope": """
-            WITH ser AS (
-                SELECT year(CAST(o_orderdate AS DATE)) * 12
-                       + month(CAST(o_orderdate AS DATE)) AS t,
-                       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS y
-                FROM orders GROUP BY 1
-            ), sl AS (
-                SELECT a.t AS ta, a.y AS ya,
-                       CAST(b.y - a.y AS DOUBLE)
-                       / CAST(b.t - a.t AS DOUBLE) AS s
-                FROM ser a JOIN ser b ON a.t <> b.t
-            ), pp AS (
-                SELECT ta, ya, list_sort(list(s)) AS ss, COUNT(*) AS k
-                FROM sl GROUP BY 1, 2
-            ), pm AS (
-                SELECT ta, ya,
-                       CASE WHEN k % 2 = 1
-                            THEN CAST(ss[CAST((k + 1) // 2 AS BIGINT)] AS DOUBLE)
-                            WHEN k > 0 THEN
-                                (CAST(ss[CAST(k // 2 AS BIGINT)] AS DOUBLE)
-                                 + CAST(ss[CAST(k // 2 + 1 AS BIGINT)] AS DOUBLE))
-                                / 2.0 END AS m
-                FROM pp
-            ), tp AS (
-                SELECT COUNT(*) AS n_points, list_sort(list(m)) AS ms FROM pm
-            ), sv AS (
-                SELECT n_points,
-                       CASE WHEN n_points % 2 = 1
-                            THEN CAST(ms[CAST((n_points + 1) // 2 AS BIGINT)]
-                                      AS DOUBLE)
-                            WHEN n_points > 0 THEN
-                                (CAST(ms[CAST(n_points // 2 AS BIGINT)] AS DOUBLE)
-                                 + CAST(ms[CAST(n_points // 2 + 1 AS BIGINT)]
-                                        AS DOUBLE)) / 2.0 END AS slope
-                FROM tp
-            ), wb AS (
-                SELECT n_points, slope,
-                       CAST(ya AS DOUBLE) - slope * CAST(ta AS DOUBLE) AS r
-                FROM pm CROSS JOIN sv
-            ), ob AS (
-                SELECT n_points, slope, list_sort(list(r)) AS rs, COUNT(*) AS k
-                FROM wb GROUP BY 1, 2
-            )
-            SELECT CAST(n_points AS BIGINT) AS n_points,
-                   round(slope, 9) AS slope,
-                   round(CASE WHEN k % 2 = 1
-                        THEN CAST(rs[CAST((k + 1) // 2 AS BIGINT)] AS DOUBLE)
-                        WHEN k > 0 THEN
-                            (CAST(rs[CAST(k // 2 AS BIGINT)] AS DOUBLE)
-                             + CAST(rs[CAST(k // 2 + 1 AS BIGINT)] AS DOUBLE))
-                            / 2.0 END, 9) AS intercept
-            FROM ob
-        """,
-        "twfe_estimator": """
-            WITH cellr AS (
-                SELECT c.c_mktsegment AS u,
-                       year(CAST(o_orderdate AS DATE)) AS t,
-                       1 AS x,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS y
-                FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            ), cell AS (
-                SELECT u, t, SUM(CAST(x AS HUGEINT)) AS x,
-                       SUM(CAST(y AS HUGEINT)) AS y
-                FROM cellr GROUP BY 1, 2
-            ), pu AS (
-                SELECT u, SUM(x) AS sxu, SUM(y) AS syu, COUNT(*) AS tu
-                FROM cell GROUP BY 1
-            ), pt AS (
-                SELECT t, SUM(x) AS sxt, SUM(y) AS syt FROM cell GROUP BY 1
-            ), tot AS (
-                SELECT COUNT(*) AS n, COUNT(DISTINCT u) AS uu,
-                       COUNT(DISTINCT t) AS tcnt,
-                       SUM(x) AS sx, SUM(y) AS sy
-                FROM cell
-            ), balu AS (
-                SELECT MIN(CASE WHEN tu = tcnt THEN 1 ELSE 0 END) AS bal_u
-                FROM pu CROSS JOIN tot
-            ), j AS (
-                SELECT n, uu, tcnt, bal_u,
-                       CAST(n AS HUGEINT) * cell.x - CAST(uu AS HUGEINT) * sxu
-                           - CAST(tcnt AS HUGEINT) * sxt + sx AS nx,
-                       CAST(n AS HUGEINT) * cell.y - CAST(uu AS HUGEINT) * syu
-                           - CAST(tcnt AS HUGEINT) * syt + sy AS ny
-                FROM cell JOIN pu USING (u) JOIN pt USING (t)
-                CROSS JOIN tot CROSS JOIN balu
-            ), ag AS (
-                SELECT MAX(n) AS n, MAX(uu) AS uu, MAX(tcnt) AS tcnt,
-                       MAX(bal_u) AS bal_u,
-                       SUM(nx * ny) AS sxy, SUM(nx * nx) AS sxx
-                FROM j
-            )
-            SELECT CAST(n AS BIGINT) AS n_cells,
-                   CAST(uu AS BIGINT) AS n_units,
-                   CAST(tcnt AS BIGINT) AS n_times,
-                   (n = uu * tcnt AND bal_u = 1) AS balanced,
-                   round(CASE WHEN n = uu * tcnt AND bal_u = 1
-                              AND CAST(sxx AS DOUBLE) > 0
-                         THEN CAST(sxy AS DOUBLE) / CAST(sxx AS DOUBLE)
-                   END, 6) AS beta
-            FROM ag
-        """,
-        "vwap_bars": """
-            SELECT l_returnflag AS flag,
-                   CAST(date_trunc('month', CAST(l_shipdate AS TIMESTAMP))
-                        AS TIMESTAMP) AS bar_start,
-                   COUNT(*) AS n_trades,
-                   CAST(SUM(CAST(l_quantity AS HUGEINT)) AS BIGINT)
-                       AS total_qty,
-                   round(CASE WHEN SUM(CAST(l_quantity AS HUGEINT)) > 0 THEN
-                       CAST(SUM(CAST(round(l_extendedprice * 100) AS HUGEINT)
-                                * CAST(l_quantity AS BIGINT)) AS DOUBLE)
-                       / CAST(SUM(CAST(l_quantity AS HUGEINT)) AS DOUBLE)
-                   END, 6) AS vwap
-            FROM lineitem
-            GROUP BY 1, 2
-        """,
-        "anderson_darling": f"""
-            WITH base AS (
-                SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS x
-                FROM customer WHERE c_acctbal IS NOT NULL
-            ), sums AS (
-                SELECT COUNT(*) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS s,
-                       SUM(CAST(x AS HUGEINT) * x) AS q
-                FROM base
-            ), st AS (
-                SELECT n,
-                       sqrt(GREATEST(CAST(n * q - s * s AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)),
-                           0.0)) AS sig,
-                       CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mu
-                FROM sums
-            ), zz AS (
-                SELECT n, sig,
-                       CASE WHEN sig > 0
-                            THEN (CAST(x AS DOUBLE) - mu) / sig END AS z,
-                       row_number() OVER (ORDER BY x) AS i
-                FROM base CROSS JOIN st
-            ), tt AS (
-                SELECT n, sig, i,
-                       CAST(2 * i - 1 AS DOUBLE)
-                           * ln(1.0 - (CASE WHEN z >= 0
-                                 THEN {_normal_sf_sql("z")}
-                                 ELSE 1.0 - {_normal_sf_sql("(-z)")} END))
-                       + CAST(2 * (n - i) + 1 AS DOUBLE)
-                           * ln(CASE WHEN z >= 0
-                                 THEN {_normal_sf_sql("z")}
-                                 ELSE 1.0 - {_normal_sf_sql("(-z)")} END)
-                           AS t
-                FROM zz
-            ), fold AS (
-                SELECT MAX(n) AS n, MIN(sig) AS sig,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(t ORDER BY i)), (a, b) -> a + b) AS su
-                FROM tt
-            ), aa AS (
-                SELECT n, sig,
-                       CASE WHEN n >= 8 AND sig > 0 THEN
-                           -CAST(n AS DOUBLE) - su / CAST(n AS DOUBLE)
-                       END AS a2
-                FROM fold
-            ), bb AS (
-                SELECT n, a2,
-                       a2 * (1.0 + 0.75 / CAST(n AS DOUBLE)
-                             + 2.25 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                           AS a2s
-                FROM aa
-            )
-            SELECT CAST(n AS BIGINT) AS n,
-                   round(a2, 9) AS a2,
-                   round(a2s, 9) AS a2_star,
-                   CASE WHEN a2s IS NOT NULL THEN a2s > 0.656 END
-                       AS reject_10pct,
-                   CASE WHEN a2s IS NOT NULL THEN a2s > 0.787 END
-                       AS reject_5pct,
-                   CASE WHEN a2s IS NOT NULL THEN a2s > 1.092 END
-                       AS reject_1pct
-            FROM bb
-        """,
-        "asof_nearest": """
-            WITH p AS (
-                SELECT DISTINCT user_id, ts AS pts FROM events
-                WHERE event_type = 'purchase'
-            ), b AS (
-                SELECT e.event_id, p.pts AS bts
-                FROM events e ASOF LEFT JOIN p
-                  ON e.user_id = p.user_id AND e.ts >= p.pts
-            ), f AS (
-                SELECT e.event_id, p.pts AS fts
-                FROM events e ASOF LEFT JOIN p
-                  ON e.user_id = p.user_id AND e.ts <= p.pts
-            ), j AS (
-                SELECT e.event_id, e.user_id, e.ts, bts, fts
-                FROM events e JOIN b USING (event_id) JOIN f USING (event_id)
-            )
-            SELECT event_id, user_id, ts,
-                   CASE WHEN bts IS NOT NULL AND (fts IS NULL OR
-                            epoch_us(ts) - epoch_us(bts)
-                            <= epoch_us(fts) - epoch_us(ts))
-                        THEN bts ELSE fts END AS pts_near,
-                   CASE WHEN bts IS NOT NULL AND (fts IS NULL OR
-                            epoch_us(ts) - epoch_us(bts)
-                            <= epoch_us(fts) - epoch_us(ts))
-                        THEN 'backward'
-                        WHEN fts IS NOT NULL THEN 'forward' END
-                       AS asof_direction
-            FROM j
-        """,
-        "kn_perplexity": """
-            WITH tr AS (
-                SELECT string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents WHERE doc_id % 2 = 0
-            ), ptr AS (
-                SELECT toks[i] AS w1, toks[i + 1] AS w2
-                FROM tr, unnest(range(1, len(toks))) AS u(i)
-            ), m AS (
-                SELECT w1, w2, COUNT(*) AS c12 FROM ptr GROUP BY 1, 2
-            ), l AS (
-                SELECT w1, SUM(c12) AS c1, COUNT(*) AS n1f FROM m GROUP BY 1
-            ), r AS (
-                SELECT w2, COUNT(*) AS n1b FROM m GROUP BY 1
-            ), ty AS (
-                SELECT COUNT(*) AS nt, COUNT(DISTINCT w2) AS v FROM m
-            ), sc AS (
-                SELECT doc_id,
-                       string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents WHERE doc_id % 2 = 1
-            ), psc AS (
-                SELECT doc_id, i AS pos, toks[i] AS w1, toks[i + 1] AS w2
-                FROM sc, unnest(range(1, len(toks))) AS u(i)
-            ), j AS (
-                SELECT doc_id, pos, c12, c1, n1f, n1b, nt, v
-                FROM psc LEFT JOIN m USING (w1, w2)
-                         LEFT JOIN l USING (w1)
-                         LEFT JOIN r USING (w2)
-                         CROSS JOIN ty
-            ), pp AS (
-                SELECT doc_id, pos,
-                       CASE WHEN c12 IS NULL THEN 1 ELSE 0 END AS unseen,
-                       ln(CASE WHEN c1 IS NOT NULL THEN
-                           greatest(CAST(COALESCE(c12, 0) AS DOUBLE) - 0.75,
-                                    0.0) / CAST(c1 AS DOUBLE)
-                           + 0.75 * CAST(n1f AS DOUBLE) / CAST(c1 AS DOUBLE)
-                             * (CAST(COALESCE(n1b, 0) + 1 AS DOUBLE)
-                                / CAST(nt + v + 1 AS DOUBLE))
-                       ELSE CAST(COALESCE(n1b, 0) + 1 AS DOUBLE)
-                            / CAST(nt + v + 1 AS DOUBLE) END) AS lp
-                FROM j
-            ), ag AS (
-                SELECT doc_id, COUNT(*) AS nb, SUM(unseen) AS nu,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(lp ORDER BY pos)), (a, b) -> a + b) AS s
-                FROM pp GROUP BY 1
-            )
-            SELECT doc_id,
-                   CAST(nb AS BIGINT) AS n_bigrams,
-                   CAST(nu AS BIGINT) AS n_unseen,
-                   round(s / CAST(nb AS DOUBLE), 9) AS avg_logprob,
-                   round(exp(-(s / CAST(nb AS DOUBLE))), 6) AS perplexity
-            FROM ag
-        """,
-        "kneser_ney": """
-            WITH t AS (
-                SELECT string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents
-            ), p AS (
-                SELECT toks[i] AS w1, toks[i + 1] AS w2
-                FROM t, unnest(range(1, len(toks))) AS u(i)
-            ), m AS (
-                SELECT w1, w2, COUNT(*) AS c12 FROM p GROUP BY 1, 2
-            ), l AS (
-                SELECT w1, SUM(c12) AS c1, COUNT(*) AS n1f FROM m GROUP BY 1
-            ), r AS (
-                SELECT w2, COUNT(*) AS n1b FROM m GROUP BY 1
-            ), ty AS (
-                SELECT COUNT(*) AS nt FROM m
-            )
-            SELECT w1, w2, CAST(c12 AS BIGINT) AS c12,
-                   round(greatest(CAST(c12 AS DOUBLE) - 0.75, 0.0)
-                             / CAST(c1 AS DOUBLE)
-                         + 0.75 * CAST(n1f AS DOUBLE) / CAST(c1 AS DOUBLE)
-                             * (CAST(n1b AS DOUBLE) / CAST(nt AS DOUBLE)), 6) AS p_kn
-            FROM m JOIN l USING (w1) JOIN r USING (w2) CROSS JOIN ty
-            ORDER BY c12 DESC, w1, w2
-            LIMIT 50
-        """,
-        "seasonal_decompose": """
-            WITH m AS (
-                SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS rev
-                FROM orders GROUP BY 1
-            ), st AS (
-                SELECT month, rev,
-                       ROW_NUMBER() OVER (ORDER BY month) AS rn,
-                       2 * SUM(rev) OVER (ORDER BY month
-                           ROWS BETWEEN 5 PRECEDING AND 5 FOLLOWING)
-                       + COALESCE(lag(rev, 6) OVER (ORDER BY month), 0)
-                       + COALESCE(lead(rev, 6) OVER (ORDER BY month), 0) AS num0,
-                       COUNT(rev) OVER (ORDER BY month
-                           ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING) AS cnt,
-                       lag(rev, 6) OVER (ORDER BY month) AS lg,
-                       lead(rev, 6) OVER (ORDER BY month) AS ld
-                FROM m
-            ), st2 AS (
-                SELECT month, rev, (rn - 1) % 12 AS phase,
-                       CASE WHEN cnt = 13 AND lg IS NOT NULL AND ld IS NOT NULL
-                            THEN num0 END AS num
-                FROM st
-            ), dn AS (
-                SELECT month, rev, phase, num,
-                       CASE WHEN num IS NOT NULL THEN rev * 24 - num END AS dnv
-                FROM st2
-            ), pp AS (
-                SELECT phase, SUM(dnv) AS sdn, COUNT(*) AS np
-                FROM dn WHERE dnv IS NOT NULL GROUP BY 1
-            ), ppr AS (
-                SELECT phase,
-                       CAST(sdn AS DOUBLE) / (24.0 * CAST(np AS DOUBLE)) AS s_raw
-                FROM pp
-            ), cen AS (
-                SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(s_raw ORDER BY phase)), (a, b) -> a + b) AS ssum,
-                       COUNT(*) AS nph
-                FROM ppr
-            ), sea AS (
-                SELECT phase, s_raw - ssum / CAST(nph AS DOUBLE) AS seasonal
-                FROM ppr CROSS JOIN cen
-            )
-            SELECT month, rev AS value,
-                   CAST(round(CAST(num AS DOUBLE) / 24.0) AS BIGINT) AS trend,
-                   CAST(round(seasonal) AS BIGINT) AS seasonal,
-                   CAST(round(CAST(rev AS DOUBLE) - CAST(num AS DOUBLE) / 24.0
-                              - seasonal) AS BIGINT) AS residual
-            FROM dn LEFT JOIN sea USING (phase)
-        """,
-        "rsi_cutler": """
-            WITH d AS (
-                SELECT o_orderpriority, CAST(o_orderdate AS TIMESTAMP) AS day,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS rev
-                FROM orders GROUP BY 1, 2
-            ), g AS (
-                SELECT o_orderpriority, day, rev,
-                       rev - lag(rev, 1) OVER (PARTITION BY o_orderpriority
-                           ORDER BY day) AS diff
-                FROM d
-            ), gl AS (
-                SELECT o_orderpriority, day, rev,
-                       CASE WHEN diff IS NOT NULL THEN GREATEST(diff, 0) END AS gain,
-                       CASE WHEN diff IS NOT NULL THEN GREATEST(-diff, 0) END AS loss
-                FROM g
-            ), s AS (
-                SELECT o_orderpriority, day, rev,
-                       SUM(gain) OVER (PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS sg,
-                       SUM(loss) OVER (PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS sl,
-                       COUNT(gain) OVER (PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS nd
-                FROM gl
-            )
-            SELECT o_orderpriority, day, rev,
-                   round(CASE WHEN nd = 14 THEN
-                       CASE WHEN sg + sl > 0
-                            THEN 100.0 * CAST(sg AS DOUBLE) / CAST(sg + sl AS DOUBLE)
-                            ELSE 50.0 END
-                   END, 9) AS rsi
-            FROM s
-        """,
-        "bollinger_bands": """
-            WITH d AS (
-                SELECT o_orderpriority, CAST(o_orderdate AS TIMESTAMP) AS day,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS rev
-                FROM orders GROUP BY 1, 2
-            ), s AS (
-                SELECT o_orderpriority, day, rev,
-                       SUM(CAST(rev AS HUGEINT)) OVER (
-                           PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS sv,
-                       SUM(CAST(rev AS HUGEINT) * rev) OVER (
-                           PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS qv,
-                       COUNT(rev) OVER (
-                           PARTITION BY o_orderpriority ORDER BY day
-                           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS cnt
-                FROM d
-            ), calc AS (
-                SELECT o_orderpriority, day, rev, cnt,
-                       CAST(sv AS DOUBLE) / 20.0 AS mean,
-                       sqrt(GREATEST(CAST(20 * qv - sv * sv AS DOUBLE) / 380.0,
-                                     0.0)) AS std
-                FROM s
-            )
-            SELECT o_orderpriority, day, rev,
-                   CAST(round(CASE WHEN cnt = 20 THEN mean END) AS BIGINT) AS bb_mean,
-                   CAST(round(CASE WHEN cnt = 20 THEN mean + 2.0 * std END)
-                        AS BIGINT) AS bb_upper,
-                   CAST(round(CASE WHEN cnt = 20 THEN mean - 2.0 * std END)
-                        AS BIGINT) AS bb_lower
-            FROM calc
-        """,
-        "anova_oneway": f"""
-            WITH base AS (
-                SELECT o_orderpriority AS g,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), per_g AS (
-                SELECT g, COUNT(*) AS ng,
-                       SUM(CAST(v AS HUGEINT)) AS sg,
-                       SUM(CAST(v AS HUGEINT) * v) AS qg
-                FROM base GROUP BY 1
-            ), packed AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                       CAST(SUM(ng) AS BIGINT) AS n_int,
-                       CAST(SUM(sg) AS DOUBLE) AS s,
-                       CAST(SUM(qg) AS DOUBLE) AS q,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)
-                                / CAST(ng AS DOUBLE) ORDER BY g)),
-                           (a, b) -> a + b) AS sumg
-                FROM per_g
-            ), stats AS (
-                SELECT n_int, k, CAST(n_int AS DOUBLE) AS n,
-                       CAST(k AS DOUBLE) AS kk,
-                       sumg - s * s / CAST(n_int AS DOUBLE) AS ssb,
-                       q - sumg AS ssw
-                FROM packed
-            ), fs AS (
-                SELECT n_int, k,
-                       CASE WHEN kk - 1.0 > 0 AND n - kk > 0 AND ssw > 0
-                            THEN (ssb / (kk - 1.0)) / (ssw / (n - kk)) END AS f,
-                       kk - 1.0 AS d1, n - kk AS d2
-                FROM stats
-            )
-            SELECT n_int AS n, k, round(f, 9) AS f_stat,
-                   round(LEAST(1.0, GREATEST(0.0,
-                       CASE WHEN f IS NOT NULL AND f > 0
-                            THEN {_f_sf_paulson_sql("f", "d1", "d2")}
-                            WHEN f IS NOT NULL THEN 1.0 END)), 6) AS p_value
-            FROM fs
-        """,
-        "levene_test": f"""
-            WITH base AS (
-                SELECT o_orderpriority AS g,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), sums AS (
-                SELECT g, COUNT(*) AS ng, SUM(CAST(v AS HUGEINT)) AS sg
-                FROM base GROUP BY 1
-            ), wrows AS (
-                SELECT base.g AS g, ng,
-                       abs(CAST(ng AS HUGEINT) * v - sg) AS w
-                FROM base JOIN sums ON base.g = sums.g
-            ), per_g AS (
-                SELECT g, MAX(ng) AS ng, SUM(w) AS w1, SUM(w * w) AS w2
-                FROM wrows GROUP BY 1
-            ), terms AS (
-                SELECT g, ng,
-                       CAST(w1 AS DOUBLE) / CAST(ng AS DOUBLE) AS sz,
-                       (CAST(w1 AS DOUBLE) / (CAST(ng AS DOUBLE) * CAST(ng AS DOUBLE)))
-                       * (CAST(w1 AS DOUBLE) / (CAST(ng AS DOUBLE) * CAST(ng AS DOUBLE)))
-                       * CAST(ng AS DOUBLE) AS sb,
-                       (CAST(w2 AS DOUBLE)
-                        - CAST(w1 AS DOUBLE) * CAST(w1 AS DOUBLE) / CAST(ng AS DOUBLE))
-                       / (CAST(ng AS DOUBLE) * CAST(ng AS DOUBLE)) AS sw
-                FROM per_g
-            ), packed AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                       CAST(SUM(ng) AS BIGINT) AS n_int,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(sz ORDER BY g)), (a, b) -> a + b) AS szs,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(sb ORDER BY g)), (a, b) -> a + b) AS sbs,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(sw ORDER BY g)), (a, b) -> a + b) AS sws
-                FROM terms
-            ), stats AS (
-                SELECT n_int, k, CAST(n_int AS DOUBLE) AS n,
-                       CAST(k AS DOUBLE) AS kk,
-                       sbs - CAST(n_int AS DOUBLE) * (szs / CAST(n_int AS DOUBLE))
-                           * (szs / CAST(n_int AS DOUBLE)) AS ssb,
-                       sws AS ssw
-                FROM packed
-            ), fs AS (
-                SELECT n_int, k,
-                       CASE WHEN kk - 1.0 > 0 AND n - kk > 0 AND ssw > 0
-                            THEN (ssb / (kk - 1.0)) / (ssw / (n - kk)) END AS f,
-                       kk - 1.0 AS d1, n - kk AS d2
-                FROM stats
-            )
-            SELECT n_int AS n, k, round(f, 9) AS w_stat,
-                   round(LEAST(1.0, GREATEST(0.0,
-                       CASE WHEN f IS NOT NULL AND f > 0
-                            THEN {_f_sf_paulson_sql("f", "d1", "d2")}
-                            WHEN f IS NOT NULL THEN 1.0 END)), 6) AS p_value
-            FROM fs
-        """,
-        "wilcoxon_signed_rank": f"""
-            WITH o AS (
-                SELECT o_custkey AS ck, o_orderdate AS dt, o_orderkey AS okey,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), pr AS (
-                SELECT ck,
-                       first(v ORDER BY dt, okey) AS firstv,
-                       last(v ORDER BY dt, okey) AS lastv
-                FROM o GROUP BY 1
-            ), dd AS (
-                SELECT lastv - firstv AS d FROM pr WHERE lastv <> firstv
-            ), per_abs AS (
-                SELECT abs(d) AS a, COUNT(*) AS cnt,
-                       SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS pos
-                FROM dd GROUP BY 1
-            ), ranked AS (
-                SELECT a, cnt, pos,
-                       2 * COALESCE(SUM(cnt) OVER (ORDER BY a
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + cnt + 1 AS r2
-                FROM per_abs
-            ), agg AS (
-                SELECT CAST(SUM(cnt) AS BIGINT) AS n_int,
-                       SUM(CAST(pos AS HUGEINT) * r2) AS w2p,
-                       SUM(CAST(cnt AS HUGEINT) * cnt * cnt - cnt) AS t3
-                FROM ranked
-            ), st AS (
-                SELECT n_int, CAST(n_int AS DOUBLE) AS n,
-                       CAST(w2p AS DOUBLE) AS w2pd, CAST(t3 AS DOUBLE) AS t3d
-                FROM agg
-            ), zz AS (
-                SELECT n_int, w2pd,
-                       CASE WHEN n * (n + 1) * (2 * n + 1) / 6.0 - t3d / 12.0 > 0
-                            THEN (abs(w2pd - n * (n + 1) / 2.0) - 1.0)
-                                 / sqrt(n * (n + 1) * (2 * n + 1) / 6.0 - t3d / 12.0)
-                       END AS z
-                FROM st
-            )
-            SELECT n_int AS n, w2pd / 2.0 AS w_plus, round(z, 9) AS z,
-                   round(CASE WHEN z IS NOT NULL THEN LEAST(1.0,
-                       2.0 * {_normal_sf_sql("GREATEST(0.0, z)")}) END, 6) AS p_value
-            FROM zz
-        """,
-        "fisher_exact": """
-            WITH fl AS (
-                SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS r,
-                       CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS c
-                FROM customer
-            ), t AS (
-                SELECT CAST(SUM(r * c) AS BIGINT) AS a,
-                       CAST(SUM(r * (1 - c)) AS BIGINT) AS b,
-                       CAST(SUM((1 - r) * c) AS BIGINT) AS c2,
-                       CAST(SUM((1 - r) * (1 - c)) AS BIGINT) AS d
-                FROM fl
-            ), m AS (
-                SELECT a, b, c2, d, a + b + c2 + d AS n, a + b AS kk,
-                       a + c2 AS n1,
-                       GREATEST(0, (a + b) + (a + c2) - (a + b + c2 + d)) AS klo,
-                       LEAST(a + b, a + c2) AS khi
-                FROM t
-            ), grid AS (
-                SELECT m.*, unnest(generate_series(klo, khi)) AS k FROM m
-            ), lr AS (
-                SELECT a, khi, k,
-                       CASE WHEN k > klo THEN
-                           ln(CAST(kk - k + 1 AS DOUBLE) * CAST(n1 - k + 1 AS DOUBLE))
-                           - ln(CAST(k AS DOUBLE) * CAST(n - kk - n1 + k AS DOUBLE))
-                       ELSE 0.0 END AS lrv
-                FROM grid
-            ), lp AS (
-                SELECT a, khi, k,
-                       SUM(lrv) OVER (ORDER BY k
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lpv
-                FROM lr
-            ), w AS (
-                SELECT a, khi, k, lpv,
-                       MAX(lpv) OVER () AS mx,
-                       MAX(CASE WHEN k = a THEN lpv END) OVER () AS lobs
-                FROM lp
-            ), s AS (
-                SELECT khi, k,
-                       SUM(CASE WHEN lpv <= lobs + 1e-7
-                                THEN exp(lpv - mx) ELSE 0.0 END)
-                           OVER (ORDER BY k
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ps,
-                       SUM(exp(lpv - mx))
-                           OVER (ORDER BY k
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt
-                FROM w
-            )
-            SELECT (SELECT a FROM t) AS a, (SELECT b FROM t) AS b,
-                   (SELECT c2 FROM t) AS c, (SELECT d FROM t) AS d,
-                   round(LEAST(1.0, ps / pt), 6) AS p_value
-            FROM s WHERE k = khi
-        """,
-        "cohens_effect": """
-            WITH base AS (
-                SELECT o_orderpriority AS g,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-                WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-            ), agg AS (
-                SELECT
-                    CAST(SUM(CASE WHEN g = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS na_i,
-                    SUM(CASE WHEN g = '1-URGENT' THEN CAST(v AS HUGEINT) END) AS sa,
-                    SUM(CASE WHEN g = '1-URGENT' THEN CAST(v AS HUGEINT) * v END) AS qa,
-                    CAST(SUM(CASE WHEN g = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS nb_i,
-                    SUM(CASE WHEN g = '5-LOW' THEN CAST(v AS HUGEINT) END) AS sb,
-                    SUM(CASE WHEN g = '5-LOW' THEN CAST(v AS HUGEINT) * v END) AS qb
-                FROM base
-            ), st AS (
-                SELECT na_i, nb_i,
-                       CAST(na_i AS DOUBLE) AS na, CAST(nb_i AS DOUBLE) AS nb,
-                       CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
-                       CAST(qa AS DOUBLE) AS qad, CAST(qb AS DOUBLE) AS qbd
-                FROM agg
-            ), calc AS (
-                SELECT na_i, nb_i, na, nb,
-                       sad / na - sbd / nb AS diff,
-                       ((qad - sad * sad / na) + (qbd - sbd * sbd / nb))
-                           / (na + nb - 2.0) AS pooled
-                FROM st
-            ), dv AS (
-                SELECT na_i, nb_i, diff,
-                       CASE WHEN na > 1 AND nb > 1 AND pooled > 0
-                            THEN diff / sqrt(pooled) END AS d,
-                       1.0 - 3.0 / (4.0 * (na + nb) - 9.0) AS j
-                FROM calc
-            )
-            SELECT na_i AS n_a, nb_i AS n_b,
-                   round(diff, 9) AS mean_diff,
-                   round(d, 9) AS cohens_d,
-                   round(d * j, 9) AS hedges_g
-            FROM dv
-        """,
-        "cramers_v": """
-            WITH base AS (
-                SELECT o_orderpriority AS a, o_orderstatus AS b
-                FROM orders
-                WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-            ), cells AS (
-                SELECT a, b, COUNT(*) AS o FROM base GROUP BY 1, 2
-            ), rt AS (
-                SELECT a, COUNT(*) AS rt FROM base GROUP BY 1
-            ), ct AS (
-                SELECT b, COUNT(*) AS ct FROM base GROUP BY 1
-            ), nn AS (
-                SELECT COUNT(*) AS nn FROM base
-            ), fullc AS (
-                SELECT cells.a, cells.b, o, rt.rt, ct.ct, nn.nn
-                FROM cells JOIN rt USING (a) JOIN ct USING (b) CROSS JOIN nn
-            ), packed AS (
-                SELECT MAX(nn) AS n_i,
-                       CAST(COUNT(DISTINCT a) AS BIGINT) AS r,
-                       CAST(COUNT(DISTINCT b) AS BIGINT) AS c,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST(CAST(nn AS HUGEINT) * o * o AS DOUBLE)
-                                / CAST(CAST(rt AS HUGEINT) * ct AS DOUBLE)
-                                ORDER BY a, b)),
-                           (x, y) -> x + y) AS s
-                FROM fullc
-            )
-            SELECT CAST(n_i AS BIGINT) AS n, r AS n_rows, c AS n_cols,
-                   round(s - CAST(n_i AS DOUBLE), 9) AS chi2,
-                   round(CASE WHEN CAST(LEAST(r, c) AS DOUBLE) - 1.0 > 0
-                              AND s - CAST(n_i AS DOUBLE) >= 0
-                         THEN sqrt((s - CAST(n_i AS DOUBLE))
-                              / (CAST(n_i AS DOUBLE)
-                                 * (CAST(LEAST(r, c) AS DOUBLE) - 1.0))) END, 9) AS v
-            FROM packed
-        """,
-        "psi_drift": """
-            WITH o AS (
-                SELECT o_orderdate,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), bb AS (
-                SELECT LEAST(9, GREATEST(0,
-                           CAST(FLOOR(cents * 10 / 60000000) AS BIGINT))) AS bin,
-                       COUNT(*) AS n_before
-                FROM o WHERE o_orderdate < TIMESTAMP '1996-01-01' GROUP BY 1
-            ), ba AS (
-                SELECT LEAST(9, GREATEST(0,
-                           CAST(FLOOR(cents * 10 / 60000000) AS BIGINT))) AS bin,
-                       COUNT(*) AS n_after
-                FROM o WHERE o_orderdate >= TIMESTAMP '1996-01-01' GROUP BY 1
-            ), tb AS (SELECT SUM(n_before) AS tb FROM bb),
-               ta AS (SELECT SUM(n_after) AS ta FROM ba),
-            j AS (
-                SELECT COALESCE(bb.bin, ba.bin) AS bin,
-                       COALESCE(n_before, 0) AS n_before,
-                       COALESCE(n_after, 0) AS n_after
-                FROM bb FULL OUTER JOIN ba ON bb.bin = ba.bin
-            )
-            SELECT bin, CAST(n_before AS BIGINT) AS n_before,
-                   CAST(n_after AS BIGINT) AS n_after,
-                   round(CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE), 9) AS p_before,
-                   round(CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE), 9) AS p_after,
-                   round(CASE WHEN n_before > 0 AND n_after > 0 THEN
-                       (CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE)
-                        - CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE))
-                       * ln((CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE))
-                            / (CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE)))
-                   END, 9) AS psi_term
-            FROM j, tb, ta
-        """,
-        "good_turing": """
-            WITH counts AS (
-                SELECT token, COUNT(*) AS n FROM (
-                    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-                    FROM documents
-                ) WHERE token != '' GROUP BY token
-            ), s AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS v_obs,
-                       CAST(SUM(CAST(n AS HUGEINT)) AS HUGEINT) AS nt,
-                       CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS f1,
-                       CAST(SUM(CASE WHEN n = 2 THEN 1 ELSE 0 END) AS HUGEINT) AS f2
-                FROM counts
-            )
-            SELECT v_obs, CAST(nt AS BIGINT) AS n_tokens,
-                   CAST(f1 AS BIGINT) AS f1, CAST(f2 AS BIGINT) AS f2,
-                   round(CASE WHEN nt > 0 THEN
-                       CAST(f1 AS DOUBLE) / CAST(nt AS DOUBLE) END, 9) AS p0_unseen,
-                   round(CASE WHEN f2 > 0 THEN
-                       CAST(v_obs AS DOUBLE)
-                       + CAST(f1 * f1 AS DOUBLE) / (2.0 * CAST(f2 AS DOUBLE))
-                   END, 6) AS chao1_vocab
-            FROM s
-        """,
-        "rendezvous_assign": f"""
-            SELECT c_custkey, {_hrw_sql("c_custkey", LPA_NODES)} AS assigned_node
-            FROM customer
-        """,
-        "hybrid_search_rrf": f"""
-            WITH {_hybrid_ctes_sql()}
-            SELECT doc_id, round(score, 9) AS rrf_score,
-                   CAST(n_sources AS BIGINT) AS n_sources,
-                   CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-                       AS rrf_rank
-            FROM per
-            ORDER BY rrf_rank
-            LIMIT 10
-        """,
-        # Shares the hybrid_search_rrf CTE chain (_hybrid_ctes_sql — one
-        # source of truth); metrics use the SAME literal 1/log2(i+1)
-        # weights (and their prefix sums) injected into the Spark plan —
-        # no engine libm log2 runs on either side.
-        "retrieval_eval": f"""
-            WITH {_hybrid_ctes_sql()}, fused AS (
-                SELECT doc_id, r FROM (
-                    SELECT doc_id,
-                           row_number() OVER (ORDER BY score DESC, doc_id) AS r
-                    FROM per
-                ) WHERE r <= 10
-            ), runs AS (
-                SELECT 'bm25' AS system, doc_id, r FROM lex WHERE r <= 10
-                UNION ALL
-                SELECT 'cosine' AS system, doc_id, r FROM sem WHERE r <= 10
-                UNION ALL
-                SELECT 'rrf' AS system, doc_id, r FROM fused
-            ), qr AS (
-                SELECT doc_id,
-                       len(list_intersect(
-                           list_distinct(string_split_regex(
-                               trim(lower(COALESCE(text, ''))), '\\s+')),
-                           ['spark', 'window', 'merge'])) AS rel
-                FROM documents
-            ), gr AS (
-                SELECT rel, COUNT(*) AS n FROM qr WHERE rel > 0 GROUP BY rel
-            ), g2 AS (
-                SELECT rel, n,
-                       COALESCE(SUM(n) OVER (ORDER BY rel DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                           0) AS slots_before
-                FROM gr
-            ), idcg AS (
-                SELECT COALESCE(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST((1 << rel) - 1 AS DOUBLE)
-                                * (list_extract({_NDCG_P10_SQL},
-                                       CAST(least(10, slots_before + n) AS INT) + 1)
-                                   - list_extract({_NDCG_P10_SQL},
-                                       CAST(least(10, slots_before) AS INT) + 1))
-                                ORDER BY rel DESC)),
-                       (x, y) -> x + y), 0.0) AS v
-                FROM g2
-            ), jj AS (
-                SELECT runs.system, runs.r AS rank, COALESCE(qr.rel, 0) AS rel
-                FROM runs LEFT JOIN qr USING (doc_id)
-            ), psys AS (
-                SELECT system, CAST(COUNT(*) AS BIGINT) AS n_retrieved,
-                       CAST(SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                           AS n_rel_at_k,
-                       MIN(CASE WHEN rel > 0 THEN rank END) AS first_rel,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                           list(CAST((1 << rel) - 1 AS DOUBLE)
-                                * list_extract({_NDCG_W10_SQL}, CAST(rank AS INT))
-                                ORDER BY rank)),
-                           (x, y) -> x + y) AS dcg
-                FROM jj GROUP BY system
-            )
-            SELECT system, n_retrieved, n_rel_at_k,
-                   CAST(n_rel_at_k AS DOUBLE) / 10.0 AS precision_at_k,
-                   CASE WHEN first_rel IS NOT NULL
-                        THEN 1.0 / CAST(first_rel AS DOUBLE) ELSE 0.0 END AS mrr,
-                   CASE WHEN idcg.v > 0 THEN dcg / idcg.v ELSE 0.0 END
-                       AS ndcg_at_k
-            FROM psys, idcg
-        """,
-        "ann_recall_eval": f"""
-            WITH corpus AS (
-                SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5
-            ), qs AS (
-                SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5
-            ), scored AS (
-                SELECT qid, vec_id,
-                       round({_cos2_sql("qe", "embedding")}, 6) AS cos
-                FROM qs, corpus
-            ), truth AS (
-                SELECT qid, vec_id FROM (
-                    SELECT qid, vec_id,
-                           row_number() OVER (PARTITION BY qid
-                                              ORDER BY cos DESC, vec_id) AS rn
-                    FROM scored
-                ) WHERE rn <= 10
-            ), cb AS (
-                SELECT vec_id, {_lsh_bucket_sql("embedding")} AS b FROM corpus
-            ), qsig AS (
-                SELECT qid, {_lsh_bucket_sql("qe")} AS qb FROM qs
-            ), cand AS (
-                SELECT q.qid, c.vec_id
-                FROM qsig q JOIN cb c ON c.b = q.qb OR c.b = xor(q.qb, 1)
-            ), approx AS (
-                SELECT qid, vec_id FROM (
-                    SELECT s.qid, s.vec_id,
-                           row_number() OVER (PARTITION BY s.qid
-                                              ORDER BY s.cos DESC, s.vec_id) AS rn
-                    FROM scored s JOIN cand USING (qid, vec_id)
-                ) WHERE rn <= 10
-            ), nt AS (
-                SELECT qid, COUNT(*) AS n_truth FROM truth GROUP BY 1
-            ), na AS (
-                SELECT qid, COUNT(*) AS n_approx FROM approx GROUP BY 1
-            ), h AS (
-                SELECT t.qid, COUNT(*) AS n_hit
-                FROM truth t JOIN approx a ON a.qid = t.qid AND a.vec_id = t.vec_id
-                GROUP BY 1
-            )
-            SELECT nt.qid AS query_id, CAST(n_truth AS BIGINT) AS n_truth,
-                   CAST(COALESCE(n_approx, 0) AS BIGINT) AS n_approx,
-                   CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
-                   round(CAST(COALESCE(n_hit, 0) AS DOUBLE)
-                         / CAST(n_truth AS DOUBLE), 6) AS recall
-            FROM nt LEFT JOIN na USING (qid) LEFT JOIN h USING (qid)
-        """,
-        "zipf_fit": """
-            WITH counts AS (
-                SELECT token, COUNT(*) AS n FROM (
-                    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-                    FROM documents
-                ) WHERE token != '' GROUP BY token
-            ), vocab AS (
-                SELECT n, row_number() OVER (ORDER BY n DESC, token ASC) - 1 AS token_id
-                FROM counts
-            ), q AS (
-                SELECT CAST(round(ln(CAST(token_id + 1 AS DOUBLE)) * 1000000.0) AS BIGINT) AS x,
-                       CAST(round(ln(CAST(n AS DOUBLE)) * 1000000.0) AS BIGINT) AS y
-                FROM vocab
-            ), s AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-                       SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-                       SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-                       SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy
-                FROM q
-            )
-            SELECT CAST(n AS BIGINT) AS n_terms,
-                   round(CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE), 6) AS slope,
-                   round((CAST(sy AS DOUBLE) / 1000000.0
-                          - (CAST(n * sxy - sx * sy AS DOUBLE)
-                             / CAST(n * sxx - sx * sx AS DOUBLE))
-                            * (CAST(sx AS DOUBLE) / 1000000.0))
-                         / CAST(n AS DOUBLE), 6) AS intercept,
-                   round(CAST(n * sxy - sx * sy AS DOUBLE)
-                         * CAST(n * sxy - sx * sy AS DOUBLE)
-                         / (CAST(n * sxx - sx * sx AS DOUBLE)
-                            * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS r2
-            FROM s
-        """,
-        "ipf_raking": _ipf_sql(3),
-        "nb_classify": """
-            WITH train AS (
-                SELECT lang, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents WHERE doc_id % 2 = 0 AND lang IS NOT NULL
-            ), test AS (
-                SELECT doc_id, lang AS gold,
-                       string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents WHERE doc_id % 2 = 1
-            ), tc AS (
-                SELECT lang AS label, token, COUNT(*) AS cnt
-                FROM (SELECT lang, unnest(toks) AS token FROM train)
-                WHERE token <> '' GROUP BY 1, 2
-            ), cs AS (
-                SELECT lang AS label, COUNT(*) AS n_docs,
-                       SUM(len(list_filter(toks, t -> t <> ''))) AS n_tokens
-                FROM train GROUP BY 1
-            ), tot AS (
-                SELECT SUM(n_docs) AS total_docs FROM cs
-            ), v AS (
-                SELECT COUNT(DISTINCT token) AS vs FROM tc
-            ), cls AS (
-                SELECT label, n_tokens, vs,
-                       ln(CAST(n_docs AS DOUBLE) / CAST(total_docs AS DOUBLE)) AS prior
-                FROM cs, tot, v
-            ), tf AS (
-                SELECT doc_id, token, COUNT(*) AS tf
-                FROM (SELECT doc_id, unnest(toks) AS token FROM test)
-                WHERE token <> '' GROUP BY 1, 2
-            ), terms AS (
-                SELECT tf.doc_id, c.label, tf.token,
-                       CAST(tf.tf AS DOUBLE)
-                       * ln(CAST(COALESCE(tc.cnt, 0) + 1 AS DOUBLE)
-                            / CAST(c.n_tokens + c.vs AS DOUBLE)) AS term
-                FROM tf CROSS JOIN cls c
-                LEFT JOIN tc ON tc.label = c.label AND tc.token = tf.token
-            ), folded AS (
-                SELECT doc_id, label,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(term ORDER BY token)),
-                                   (x, y) -> x + y) AS ll
-                FROM terms GROUP BY 1, 2
-            ), scored AS (
-                SELECT i.doc_id, c.label, c.prior + COALESCE(f.ll, 0.0) AS score
-                FROM (SELECT DISTINCT doc_id FROM test) i
-                CROSS JOIN cls c
-                LEFT JOIN folded f ON f.doc_id = i.doc_id AND f.label = c.label
-            ), best AS (
-                SELECT doc_id, label, score,
-                       row_number() OVER (PARTITION BY doc_id
-                                          ORDER BY score DESC, label) AS rn
-                FROM scored
-            )
-            SELECT b.doc_id, t.gold, b.label AS pred, round(b.score, 6) AS log_score
-            FROM best b JOIN (SELECT doc_id, gold FROM test) t USING (doc_id)
-            WHERE rn = 1
-        """,
-        "multimodal_quarantine_report": """
-            SELECT fmt, ok, reason, CAST(COUNT(*) AS BIGINT) AS n_blobs
-            FROM (
-                SELECT CASE doc_id % 6
-                           WHEN 0 THEN 'png'
-                           WHEN 5 THEN 'unknown'
-                           ELSE 'jpeg' END AS fmt,
-                       (doc_id % 6) IN (0, 1, 2) AS ok,
-                       CASE doc_id % 6
-                           WHEN 0 THEN 'baseline_subset_ok'
-                           WHEN 1 THEN 'baseline_subset_ok'
-                           WHEN 2 THEN 'progressive_subset_ok'
-                           WHEN 3 THEN 'jpeg_subsampling'
-                           WHEN 4 THEN 'jpeg_restart_interval'
-                           ELSE 'unknown_format' END AS reason
-                FROM documents
-            ) GROUP BY 1, 2, 3
-        """,
-        "luhn_card_scan": """
-            WITH d AS (
-                SELECT o_orderkey,
-                       lpad(CAST(o_orderkey AS VARCHAR), 16, '0') AS num
-                FROM orders
-            ), s AS (
-                SELECT o_orderkey, num,
-                       list_reduce(list_transform(range(1, 17), i ->
-                           CASE WHEN (16 - i) % 2 = 1
-                                THEN CASE WHEN 2 * CAST(substr(num, i, 1) AS INT) > 9
-                                          THEN 2 * CAST(substr(num, i, 1) AS INT) - 9
-                                          ELSE 2 * CAST(substr(num, i, 1) AS INT) END
-                                ELSE CAST(substr(num, i, 1) AS INT) END),
-                           (a, b) -> a + b) % 10 = 0 AS ok
-                FROM d
-            )
-            SELECT o_orderkey, num AS card_digits, ok AS luhn_ok,
-                   CASE WHEN ok THEN 'ref [CARD] ok'
-                        ELSE 'ref ' || num || ' ok' END AS redacted
-            FROM s
-        """,
-        "mcnemar_langid": f"""
-            WITH gr AS (
-                SELECT doc_id, lang,
-                       regexp_replace(lower(COALESCE(text, '')), '\\s+', '_', 'g') AS c
-                FROM documents
-            ), train AS (
-                SELECT lang, CASE WHEN len(c) >= 3
-                            THEN list_transform(range(1, len(c) - 1),
-                                                i -> substr(c, i, 3))
-                            ELSE [c] END AS toks
-                FROM gr WHERE doc_id % 2 = 0 AND lang IS NOT NULL
-            ), test AS (
-                SELECT doc_id, lang AS gold, CASE WHEN len(c) >= 3
-                            THEN list_transform(range(1, len(c) - 1),
-                                                i -> substr(c, i, 3))
-                            ELSE [c] END AS toks
-                FROM gr WHERE doc_id % 2 = 1
-            ), tc AS (
-                SELECT lang AS label, token, COUNT(*) AS cnt
-                FROM (SELECT lang, unnest(toks) AS token FROM train)
-                WHERE token <> '' GROUP BY 1, 2
-            ), cs AS (
-                SELECT lang AS label, COUNT(*) AS n_docs,
-                       SUM(len(list_filter(toks, t -> t <> ''))) AS n_tokens
-                FROM train GROUP BY 1
-            ), tot AS (
-                SELECT SUM(n_docs) AS total_docs FROM cs
-            ), v AS (
-                SELECT COUNT(DISTINCT token) AS vs FROM tc
-            ), cls AS (
-                SELECT label, n_tokens, vs,
-                       ln(CAST(n_docs AS DOUBLE) / CAST(total_docs AS DOUBLE)) AS prior
-                FROM cs, tot, v
-            ), tf AS (
-                SELECT doc_id, token, COUNT(*) AS tf
-                FROM (SELECT doc_id, unnest(toks) AS token FROM test)
-                WHERE token <> '' GROUP BY 1, 2
-            ), terms AS (
-                SELECT tf.doc_id, c.label, tf.token,
-                       CAST(tf.tf AS DOUBLE)
-                       * ln(CAST(COALESCE(tc.cnt, 0) + 1 AS DOUBLE)
-                            / CAST(c.n_tokens + c.vs AS DOUBLE)) AS term
-                FROM tf CROSS JOIN cls c
-                LEFT JOIN tc ON tc.label = c.label AND tc.token = tf.token
-            ), folded AS (
-                SELECT doc_id, label,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(term ORDER BY token)),
-                                   (x, y) -> x + y) AS ll
-                FROM terms GROUP BY 1, 2
-            ), scored AS (
-                SELECT i.doc_id, c.label, c.prior + COALESCE(f.ll, 0.0) AS score
-                FROM (SELECT DISTINCT doc_id FROM test) i
-                CROSS JOIN cls c
-                LEFT JOIN folded f ON f.doc_id = i.doc_id AND f.label = c.label
-            ), best AS (
-                SELECT doc_id, label, score,
-                       row_number() OVER (PARTITION BY doc_id
-                                          ORDER BY score DESC, label) AS rn
-                FROM scored
-            ), trained AS (
-                SELECT b.doc_id, t.gold, b.label AS pred
-                FROM best b JOIN (SELECT doc_id, gold FROM test) t USING (doc_id)
-                WHERE rn = 1
-            ), heur AS (
-                SELECT doc_id, lang AS gold, {_langid_sql("text")} AS hpred
-                FROM documents WHERE doc_id % 2 = 1
-            ), pairs AS (
-                SELECT (h.hpred = h.gold) AS ca, (tr.pred = tr.gold) AS cb
-                FROM heur h JOIN trained tr USING (doc_id)
-            ), cells AS (
-                SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                       CAST(SUM(CASE WHEN ca AND NOT cb THEN 1 ELSE 0 END) AS BIGINT) AS b,
-                       CAST(SUM(CASE WHEN NOT ca AND cb THEN 1 ELSE 0 END) AS BIGINT) AS c
-                FROM pairs
-            )
-            SELECT n, b, c,
-                   round(CASE WHEN b + c > 0 THEN
-                       CAST((b - c) * (b - c) AS DOUBLE) / CAST(b + c AS DOUBLE) END, 9)
-                       AS chi2,
-                   round(CASE WHEN b + c > 0 THEN 2.0 * {NORMAL_SF_SQL_CHI} END, 9)
-                       AS p_value
-            FROM cells
-        """,
-        "language_id_trained": """
-            WITH gr AS (
-                SELECT doc_id, lang,
-                       regexp_replace(lower(COALESCE(text, '')), '\\s+', '_', 'g') AS c
-                FROM documents
-            ), train AS (
-                SELECT lang, CASE WHEN len(c) >= 3
-                            THEN list_transform(range(1, len(c) - 1),
-                                                i -> substr(c, i, 3))
-                            ELSE [c] END AS toks
-                FROM gr WHERE doc_id % 2 = 0 AND lang IS NOT NULL
-            ), test AS (
-                SELECT doc_id, lang AS gold, CASE WHEN len(c) >= 3
-                            THEN list_transform(range(1, len(c) - 1),
-                                                i -> substr(c, i, 3))
-                            ELSE [c] END AS toks
-                FROM gr WHERE doc_id % 2 = 1
-            ), tc AS (
-                SELECT lang AS label, token, COUNT(*) AS cnt
-                FROM (SELECT lang, unnest(toks) AS token FROM train)
-                WHERE token <> '' GROUP BY 1, 2
-            ), cs AS (
-                SELECT lang AS label, COUNT(*) AS n_docs,
-                       SUM(len(list_filter(toks, t -> t <> ''))) AS n_tokens
-                FROM train GROUP BY 1
-            ), tot AS (
-                SELECT SUM(n_docs) AS total_docs FROM cs
-            ), v AS (
-                SELECT COUNT(DISTINCT token) AS vs FROM tc
-            ), cls AS (
-                SELECT label, n_tokens, vs,
-                       ln(CAST(n_docs AS DOUBLE) / CAST(total_docs AS DOUBLE)) AS prior
-                FROM cs, tot, v
-            ), tf AS (
-                SELECT doc_id, token, COUNT(*) AS tf
-                FROM (SELECT doc_id, unnest(toks) AS token FROM test)
-                WHERE token <> '' GROUP BY 1, 2
-            ), terms AS (
-                SELECT tf.doc_id, c.label, tf.token,
-                       CAST(tf.tf AS DOUBLE)
-                       * ln(CAST(COALESCE(tc.cnt, 0) + 1 AS DOUBLE)
-                            / CAST(c.n_tokens + c.vs AS DOUBLE)) AS term
-                FROM tf CROSS JOIN cls c
-                LEFT JOIN tc ON tc.label = c.label AND tc.token = tf.token
-            ), folded AS (
-                SELECT doc_id, label,
-                       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                                list(term ORDER BY token)),
-                                   (x, y) -> x + y) AS ll
-                FROM terms GROUP BY 1, 2
-            ), scored AS (
-                SELECT i.doc_id, c.label, c.prior + COALESCE(f.ll, 0.0) AS score
-                FROM (SELECT DISTINCT doc_id FROM test) i
-                CROSS JOIN cls c
-                LEFT JOIN folded f ON f.doc_id = i.doc_id AND f.label = c.label
-            ), best AS (
-                SELECT doc_id, label, score,
-                       row_number() OVER (PARTITION BY doc_id
-                                          ORDER BY score DESC, label) AS rn
-                FROM scored
-            )
-            SELECT b.doc_id, t.gold, b.label AS pred, round(b.score, 6) AS log_score
-            FROM best b JOIN (SELECT doc_id, gold FROM test) t USING (doc_id)
-            WHERE rn = 1
-        """,
-        "trimmed_mean": """
-            WITH o AS (
-                SELECT o_orderpriority,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders
-            ), b AS (
-                SELECT o_orderpriority, quantile_cont(v, 0.1) AS lo,
-                       quantile_cont(v, 0.9) AS hi, COUNT(v) AS n_total
-                FROM o GROUP BY 1
-            )
-            SELECT o.o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_kept,
-                   CAST(MAX(b.n_total) AS BIGINT) AS n_total,
-                   CAST(SUM(CAST(v AS HUGEINT)) AS DOUBLE)
-                   / CAST(COUNT(*) AS DOUBLE) AS trimmed_mean
-            FROM o JOIN b USING (o_orderpriority)
-            WHERE CAST(v AS DOUBLE) >= lo AND CAST(v AS DOUBLE) <= hi
-            GROUP BY 1
-        """,
-        "bloom_prune": """
-            WITH bp AS (
-                SELECT DISTINCT
-                       CAST('0x' || substr(md5(CAST(s_suppkey AS VARCHAR) || ':'
-                            || CAST(i.i AS VARCHAR)), 1, 12) AS BIGINT) % 256 AS p
-                FROM supplier, (SELECT UNNEST([0, 1, 2]) AS i) i
-                WHERE s_nationkey = 3
-            ), kept AS (
-                SELECT l_suppkey, l_extendedprice
-                FROM lineitem
-                WHERE l_suppkey IS NOT NULL
-                  AND (CAST('0x' || substr(md5(CAST(l_suppkey AS VARCHAR) || ':0'), 1, 12)
-                       AS BIGINT) % 256) IN (SELECT p FROM bp)
-                  AND (CAST('0x' || substr(md5(CAST(l_suppkey AS VARCHAR) || ':1'), 1, 12)
-                       AS BIGINT) % 256) IN (SELECT p FROM bp)
-                  AND (CAST('0x' || substr(md5(CAST(l_suppkey AS VARCHAR) || ':2'), 1, 12)
-                       AS BIGINT) % 256) IN (SELECT p FROM bp)
-            )
-            SELECT l_suppkey,
-                   CAST(COUNT(*) AS BIGINT) AS n_rows,
-                   CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-                       AS sum_cents
-            FROM kept GROUP BY l_suppkey
-        """,
-        "cms_heavy_hitters": """
-            WITH sketch AS (
-                SELECT i.i AS row_,
-                       CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':'
-                            || CAST(i.i AS VARCHAR)), 1, 12) AS BIGINT) % 64 AS bucket,
-                       CAST(COUNT(*) AS BIGINT) AS cnt
-                FROM orders, (SELECT UNNEST([0, 1, 2]) AS i) i
-                WHERE o_custkey IS NOT NULL
-                GROUP BY 1, 2
-            ), probes AS (
-                SELECT k.k, i.i AS row_,
-                       CAST('0x' || substr(md5(CAST(k.k AS VARCHAR) || ':'
-                            || CAST(i.i AS VARCHAR)), 1, 12) AS BIGINT) % 64 AS bucket
-                FROM (SELECT DISTINCT o_custkey AS k FROM orders
-                      WHERE o_custkey IS NOT NULL) k,
-                     (SELECT UNNEST([0, 1, 2]) AS i) i
-            ), est AS (
-                SELECT p.k, MIN(COALESCE(s.cnt, 0)) AS est
-                FROM probes p
-                LEFT JOIN sketch s ON p.row_ = s.row_ AND p.bucket = s.bucket
-                GROUP BY p.k
-            )
-            SELECT k AS o_custkey, CAST(est AS BIGINT) AS est
-            FROM est WHERE est >= 25
-        """,
-        "checksum_drilldown": """
-            WITH lft AS (
-                SELECT o_orderkey, o_custkey,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), rgt AS (
-                SELECT o_orderkey, o_custkey,
-                       CASE WHEN o_orderkey % 997 = 0 THEN cents + 1 ELSE cents END AS cents
-                FROM lft WHERE o_orderkey % 1000 <> 1
-            ), lb AS (
-                SELECT CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12) AS BIGINT) % 64 AS bucket,
-                       COUNT(*) AS n_left,
-                       SUM(CAST('0x' || substr(md5(
-                           CAST(o_orderkey AS VARCHAR) || chr(31)
-                           || CAST(o_custkey AS VARCHAR) || chr(31)
-                           || CAST(cents AS VARCHAR)), 1, 12) AS BIGINT)) AS sum_left
-                FROM lft GROUP BY 1
-            ), rb AS (
-                SELECT CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12) AS BIGINT) % 64 AS bucket,
-                       COUNT(*) AS n_right,
-                       SUM(CAST('0x' || substr(md5(
-                           CAST(o_orderkey AS VARCHAR) || chr(31)
-                           || CAST(o_custkey AS VARCHAR) || chr(31)
-                           || CAST(cents AS VARCHAR)), 1, 12) AS BIGINT)) AS sum_right
-                FROM rgt GROUP BY 1
-            )
-            SELECT COALESCE(lb.bucket, rb.bucket) AS bucket,
-                   n_left, n_right,
-                   CAST(sum_left AS VARCHAR) AS sum_left,
-                   CAST(sum_right AS VARCHAR) AS sum_right
-            FROM lb FULL OUTER JOIN rb ON lb.bucket = rb.bucket
-            WHERE n_left IS DISTINCT FROM n_right
-               OR sum_left IS DISTINCT FROM sum_right
-        """,
-        "link_prediction": """
-            WITH sym AS (
-                SELECT DISTINCT a, b FROM (
-                    SELECT user_id AS a, 10000000 + (event_id % 500) AS b FROM events
-                    UNION ALL
-                    SELECT 10000000 + (event_id % 500) AS a, user_id AS b FROM events
-                ) WHERE a <> b
-            ), deg AS (
-                SELECT a, COUNT(*) AS d FROM sym GROUP BY a
-            ), mids AS (
-                SELECT b AS m, a AS n FROM sym
-            ), pairs AS (
-                SELECT x.n AS u, y.n AS v, COUNT(*) AS common
-                FROM mids x JOIN mids y ON x.m = y.m AND x.n < y.n
-                GROUP BY x.n, y.n
-                HAVING COUNT(*) >= 2
-            ), cand AS (
-                SELECT p.* FROM pairs p
-                LEFT JOIN (SELECT a AS u, b AS v FROM sym WHERE a < b) e
-                  ON p.u = e.u AND p.v = e.v
-                WHERE e.u IS NULL
-            )
-            SELECT c.u, c.v, CAST(c.common AS BIGINT) AS common,
-                   round(CAST(c.common AS DOUBLE)
-                         / (du.d + dv.d - c.common), 6) + 0.0 AS jaccard
-            FROM cand c
-            JOIN deg du ON du.a = c.u
-            JOIN deg dv ON dv.a = c.v
-            WHERE c.u >= 10000000
-        """,
-        "parse_xml": """
-            SELECT o_orderkey,
-                   o_orderkey AS key,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-                   o_orderstatus AS status,
-                   'A&B <' || o_orderpriority || '>' AS comment
-            FROM orders
-        """,
-        "feature_matrix": """
-            WITH ev AS (
-                SELECT user_id, ts, event_id, event_type,
-                       CAST(round(value * 100) AS BIGINT) AS cents
-                FROM events
-            ), labels AS (
-                SELECT user_id, ts, event_id, cents AS label_cents
-                FROM ev WHERE event_type = 'purchase'
-            ), v AS (
-                SELECT user_id, ts, cents FROM ev WHERE event_type = 'view'
-            ), c AS (
-                SELECT user_id, ts, cents FROM ev WHERE event_type = 'click'
-            ), with_v AS (
-                SELECT l.user_id, l.ts, l.event_id, l.label_cents,
-                       v.cents AS lv_cents
-                FROM labels l
-                ASOF LEFT JOIN v ON l.user_id = v.user_id AND l.ts > v.ts
-            )
-            SELECT w.user_id, w.ts, w.event_id, w.label_cents, w.lv_cents,
-                   c.cents AS lc_cents
-            FROM with_v w
-            ASOF LEFT JOIN c ON w.user_id = c.user_id AND w.ts > c.ts
-        """,
-        "stickiness": """
-            WITH du AS (
-                SELECT DISTINCT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                       user_id
-                FROM events
-            ), dau AS (
-                SELECT day, COUNT(DISTINCT user_id) AS dau FROM du GROUP BY day
-            ), spread AS (
-                SELECT DISTINCT day + to_days(CAST(i AS INTEGER)) AS day, user_id
-                FROM du, unnest(range(0, 28)) AS u(i)
-            ), mau AS (
-                SELECT day, COUNT(DISTINCT user_id) AS mau FROM spread GROUP BY day
-            )
-            SELECT day, CAST(dau AS BIGINT) AS dau, CAST(mau AS BIGINT) AS mau,
-                   round(CAST(dau AS DOUBLE) / mau, 6) + 0.0 AS stickiness
-            FROM dau JOIN mau USING (day)
-        """,
-        "fd_violations": """
-            WITH j AS (
-                SELECT l_orderkey, o_custkey, l_suppkey, l_shipdate
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            ),
-            f1 AS (SELECT _a, COUNT(*) AS n FROM
-                   (SELECT DISTINCT l_orderkey AS _a, o_custkey AS _b FROM j)
-                   GROUP BY _a),
-            f2 AS (SELECT _a, COUNT(*) AS n FROM
-                   (SELECT DISTINCT l_suppkey AS _a, l_orderkey AS _b FROM j)
-                   GROUP BY _a),
-            f3 AS (SELECT _a, COUNT(*) AS n FROM
-                   (SELECT DISTINCT l_orderkey AS _a, l_shipdate AS _b FROM j)
-                   GROUP BY _a)
-            SELECT 'l_orderkey' AS column_a, 'o_custkey' AS column_b,
-                   COUNT(*) AS n_determinants,
-                   CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_violating,
-                   CAST(MAX(n) AS BIGINT) AS max_fanout,
-                   SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) = 0 AS holds
-            FROM f1
-            UNION ALL
-            SELECT 'l_suppkey', 'l_orderkey', COUNT(*),
-                   CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(MAX(n) AS BIGINT),
-                   SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) = 0
-            FROM f2
-            UNION ALL
-            SELECT 'l_orderkey', 'l_shipdate', COUNT(*),
-                   CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(MAX(n) AS BIGINT),
-                   SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) = 0
-            FROM f3
-        """,
-        "merge_conditional": """
-            WITH t AS (
-                SELECT c_custkey, c_name,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
-                FROM customer
-            ), s AS (
-                SELECT c_custkey, c_name,
-                       CASE WHEN c_custkey % 9 = 0 THEN -999999
-                            WHEN c_custkey % 4 = 0 THEN bal_cents + 555
-                            ELSE bal_cents END AS bal_cents
-                FROM t WHERE c_custkey % 2 = 0
-                UNION ALL
-                SELECT c_custkey + 10000000, 'NEW ' || c_name, 100
-                FROM t WHERE c_custkey % 7 = 0
-            ), j AS (
-                SELECT COALESCE(t.c_custkey, s.c_custkey) AS c_custkey,
-                       t.c_name AS t_name, t.bal_cents AS t_bal,
-                       s.c_name AS s_name, s.bal_cents AS s_bal,
-                       t.c_custkey IS NOT NULL AS has_t,
-                       s.c_custkey IS NOT NULL AS has_s
-                FROM t FULL OUTER JOIN s USING (c_custkey)
-            )
-            SELECT c_custkey,
-                   CASE WHEN NOT has_t THEN s_name
-                        WHEN has_s AND s_bal <> t_bal THEN s_name
-                        ELSE t_name END AS c_name,
-                   CASE WHEN NOT has_t THEN s_bal
-                        WHEN has_s AND s_bal <> t_bal THEN s_bal
-                        ELSE t_bal END AS bal_cents
-            FROM j
-            WHERE NOT (has_t AND has_s AND s_bal = -999999)
-        """,
-        "mask_columns": """
-            SELECT c_custkey,
-                   CASE WHEN c_name IS NOT NULL THEN '***' END AS c_name,
-                   CASE WHEN c_acctbal IS NOT NULL
-                        THEN substr(md5('mask-v1:' || CAST(c_acctbal AS VARCHAR)),
-                                    1, 16) END AS bal,
-                   CAST(NULL AS VARCHAR) AS nat,
-                   repeat('*', 6) || substr(
-                       '555-01' || lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0'),
-                       7, 4) AS phone
-            FROM customer
-        """,
-        "standardized_rates": """
-            WITH cell AS (
-                SELECT c_mktsegment, c_nationkey,
-                       COUNT(*) AS n_gs,
-                       CAST(SUM(CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS c_gs
-                FROM customer GROUP BY 1, 2
-            ), w AS (
-                SELECT c_nationkey, COUNT(*) AS n_s FROM customer GROUP BY 1
-            ), j AS (
-                SELECT cell.*, w.n_s,
-                       CAST(c_gs AS DOUBLE) / n_gs * n_s AS term
-                FROM cell JOIN w USING (c_nationkey)
-            )
-            SELECT c_mktsegment,
-                   CAST(SUM(n_gs) AS BIGINT) AS n,
-                   CAST(SUM(c_gs) AS BIGINT) AS n_success,
-                   round(CAST(SUM(c_gs) AS DOUBLE) / SUM(n_gs), 6) + 0.0
-                       AS crude_rate,
-                   round(list_reduce(
-                             list_prepend(0.0::DOUBLE,
-                                 list(term ORDER BY c_nationkey)),
-                             (a, b) -> a + b)
-                         / SUM(n_s), 6) + 0.0 AS adjusted_rate
-            FROM j GROUP BY c_mktsegment
-        """,
-        "strip_html": """
-            SELECT doc_id,
-                   trim(regexp_replace(
-                       COALESCE(text, '') || '  src=' || source || '  &  end',
-                       '\\s+', ' ', 'g')) AS clean_text
-            FROM documents
-        """,
-        "split_sentences": """
-            WITH m AS (
-                SELECT doc_id,
-                       string_split(
-                           regexp_replace(
-                               regexp_replace(COALESCE(text, ''),
-                                   '([a-z0-9]+ [a-z0-9]+ [a-z0-9]+) ',
-                                   '\\1. ', 'g'),
-                               '([.!?]+)\\s+', '\\1' || chr(10), 'g'),
-                           chr(10)) AS sents
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(i - 1 AS INT) AS sentence_id,
-                   trim(sents[i]) AS sentence,
-                   CAST(length(trim(sents[i])) AS INT) AS n_chars
-            FROM m, unnest(range(1, len(sents) + 1)) AS u(i)
-            WHERE trim(sents[i]) <> ''
-        """,
-        "parse_money": """
-            SELECT o_orderkey,
-                   CAST(o_orderkey % 4 AS INT) AS style,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-            FROM orders
-        """,
-        "vat_checksum_scan": """
-            WITH d AS (
-                SELECT c_custkey,
-                       lpad(CAST(c_custkey % 10000000000 AS VARCHAR), 10, '0')
-                       || CAST(c_custkey % 10 AS VARCHAR) AS vat_number
-                FROM customer
-            ), s AS (
-                SELECT c_custkey, vat_number,
-                       list_reduce(list_prepend(0,
-                           list_transform(range(1, 11), i ->
-                               CASE WHEN i % 2 = 0 THEN
-                                   CASE WHEN 2 * CAST(substr(vat_number,
-                                            CAST(i AS INT), 1) AS INT) > 9
-                                        THEN 2 * CAST(substr(vat_number,
-                                            CAST(i AS INT), 1) AS INT) - 9
-                                        ELSE 2 * CAST(substr(vat_number,
-                                            CAST(i AS INT), 1) AS INT) END
-                               ELSE CAST(substr(vat_number,
-                                        CAST(i AS INT), 1) AS INT) END)),
-                           (a, b) -> a + b) AS total
-                FROM d
-            )
-            SELECT c_custkey, vat_number,
-                   CAST(substr(vat_number, 11, 1) AS INT)
-                       = (10 - total % 10) % 10 AS vat_ok
-            FROM s
-        """,
-        "iban_checksum_scan": """
-            WITH d AS (
-                SELECT c_custkey,
-                       'IT' || lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0')
-                       || 'X0542811101'
-                       || lpad(CAST(c_custkey % 1000000000000 AS VARCHAR), 12, '0')
-                           AS iban
-                FROM customer
-            ), r AS (
-                SELECT c_custkey, iban,
-                       substr(iban, 5) || substr(iban, 1, 4) AS re
-                FROM d
-            ), s AS (
-                SELECT c_custkey, iban,
-                       list_reduce(list_prepend(0,
-                           list_transform(range(1, length(re) + 1), i ->
-                               ascii(substr(re, CAST(i AS INT), 1)))),
-                           (acc, code) ->
-                               CASE WHEN code BETWEEN 48 AND 57
-                                    THEN (acc * 10 + code - 48) % 97
-                                    ELSE (acc * 100 + code - 55) % 97 END)
-                           AS rem
-                FROM r
-            )
-            SELECT c_custkey, iban, rem = 1 AS iban_ok
-            FROM s
-        """,
-        "mojibake_repair": f"""
-            SELECT doc_id,
-                   CASE doc_id % 3
-                       WHEN 0 THEN '{_MOJI_BROKEN_L1}' || COALESCE(text, '')
-                       WHEN 1 THEN '{_MOJI_BROKEN_CP}' || COALESCE(text, '')
-                       ELSE 'clean: ' || COALESCE(text, '') END AS raw,
-                   CASE doc_id % 3
-                       WHEN 0 THEN '{_MOJI_CLEAN_L1}' || COALESCE(text, '')
-                       WHEN 1 THEN '{_MOJI_CLEAN_CP}' || COALESCE(text, '')
-                       ELSE 'clean: ' || COALESCE(text, '') END AS fixed
-            FROM documents
-        """,
-        "robots_url_filter": """
-            SELECT doc_id,
-                   CASE doc_id % 4
-                       WHEN 0 THEN '/private/doc/' || CAST(doc_id AS VARCHAR)
-                       WHEN 1 THEN '/private/press/rel' || CAST(doc_id AS VARCHAR)
-                       WHEN 2 THEN '/tmp' || CAST(doc_id AS VARCHAR)
-                       ELSE '/public/doc/' || CAST(doc_id AS VARCHAR) END AS path,
-                   (doc_id % 4) IN (1, 3) AS crawl_allowed
-            FROM documents
-        """,
-        "iban_redaction": """
-            WITH d AS (
-                SELECT c_custkey,
-                       'IT' || lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0')
-                       || 'X0542811101'
-                       || lpad(CAST(c_custkey % 1000000000000 AS VARCHAR), 12, '0')
-                           AS iban
-                FROM customer
-            ), r AS (
-                SELECT c_custkey, iban,
-                       substr(iban, 5) || substr(iban, 1, 4) AS re
-                FROM d
-            ), s AS (
-                SELECT c_custkey, iban,
-                       list_reduce(list_prepend(0,
-                           list_transform(range(1, length(re) + 1), i ->
-                               ascii(substr(re, CAST(i AS INT), 1)))),
-                           (acc, code) ->
-                               CASE WHEN code BETWEEN 48 AND 57
-                                    THEN (acc * 10 + code - 48) % 97
-                                    ELSE (acc * 100 + code - 55) % 97 END)
-                           AS rem
-                FROM r
-            )
-            SELECT c_custkey,
-                   'pay ' || iban || ' by wire' AS raw,
-                   CASE WHEN rem = 1 THEN 'pay [IBAN] by wire'
-                        ELSE 'pay ' || iban || ' by wire' END AS redacted
-            FROM s
-        """,
-        "cf_checksum_scan": f"""
-            WITH d AS (
-                SELECT c_custkey,
-                       {" || ".join(
-                           f"list_extract({_CF_LETTERS_SQL}, CAST((c_custkey // {26**j}) % 26 AS INT) + 1)"
-                           for j in range(6)
-                       )}
-                       || lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0')
-                       || list_extract({_CF_MONTHS_SQL}, CAST(c_custkey % 12 AS INT) + 1)
-                       || lpad(CAST(c_custkey % 28 + 1 AS VARCHAR), 2, '0')
-                       || list_extract({_CF_LETTERS_SQL}, CAST(c_custkey % 26 AS INT) + 1)
-                       || lpad(CAST(c_custkey % 1000 AS VARCHAR), 3, '0') AS cf15
-                FROM customer
-            ), s AS (
-                SELECT c_custkey, cf15,
-                       list_reduce(list_prepend(0,
-                           list_transform(range(1, 16), i ->
-                               CASE WHEN i % 2 = 1 THEN
-                                   list_extract({_CF_ODD_SQL},
-                                       CASE WHEN substr(cf15, CAST(i AS INT), 1)
-                                                 BETWEEN '0' AND '9'
-                                            THEN ascii(substr(cf15, CAST(i AS INT), 1)) - 48
-                                            ELSE ascii(substr(cf15, CAST(i AS INT), 1)) - 65
-                                       END + 1)
-                               ELSE
-                                   CASE WHEN substr(cf15, CAST(i AS INT), 1)
-                                             BETWEEN '0' AND '9'
-                                        THEN ascii(substr(cf15, CAST(i AS INT), 1)) - 48
-                                        ELSE ascii(substr(cf15, CAST(i AS INT), 1)) - 65
-                                   END
-                               END)),
-                           (a, b) -> a + b) % 26 AS chk
-                FROM d
-            ), t AS (
-                SELECT c_custkey,
-                       cf15 || CASE WHEN c_custkey % 2 = 0
-                                    THEN list_extract({_CF_LETTERS_SQL}, CAST(chk AS INT) + 1)
-                                    ELSE list_extract({_CF_LETTERS_SQL}, CAST((chk + 7) % 26 AS INT) + 1)
-                               END AS cf
-                FROM s
-            )
-            SELECT c_custkey, cf,
-                   c_custkey % 2 = 0 AS cf_ok,
-                   CASE WHEN c_custkey % 2 = 0 THEN 'cf [CF] ok'
-                        ELSE 'cf ' || cf || ' ok' END AS redacted
-            FROM t
-        """,
-        "code_detect": f"""
-            WITH d AS (
-                SELECT doc_id,
-                       CASE doc_id % 3
-                           WHEN 0 THEN {_sqlq(_CODE_SNIP_PY)} || COALESCE(text, '')
-                           WHEN 1 THEN {_sqlq(_CODE_SNIP_SQL)} || COALESCE(text, '')
-                           ELSE COALESCE(text, '') END AS t
-                FROM documents
-            ), f AS (
-                SELECT doc_id, t,
-                       len(string_split(t, chr(10))) AS n_lines,
-                       len(list_filter(string_split(t, chr(10)), l ->
-                           starts_with(l, '    ') OR starts_with(l, chr(9))))
-                           AS indent_lines,
-                       length(t) - length(regexp_replace(t, '[{{}};=]', '', 'g'))
-                           AS sym_hits,
-                       string_split_regex(trim(lower(t)), '\\s+') AS toks,
-                       greatest(length(t), 1) AS nc
-                FROM d
-            ), k AS (
-                SELECT doc_id, n_lines, indent_lines, sym_hits, nc,
-                       {", ".join(
-                           "len(list_filter(toks, x -> list_contains(["
-                           + ", ".join(_sqlq(w) for w in TA.CODE_KEYWORDS[lang])
-                           + f"], x))) AS kw_{key}"
-                           for lang, key in (
-                               ("python", "python"), ("js", "js"),
-                               ("c", "c"), ("sql", "sql"),
-                           )
-                       )}
-                FROM f
-            )
-            SELECT doc_id, n_lines, indent_lines, sym_hits,
-                   kw_python, kw_js, kw_c, kw_sql,
-                   round((5 * sym_hits
-                          + 10 * (kw_python + kw_js + kw_c + kw_sql)
-                          + 8 * indent_lines) * 100.0 / nc, 6) AS code_density,
-                   (round((5 * sym_hits
-                           + 10 * (kw_python + kw_js + kw_c + kw_sql)
-                           + 8 * indent_lines) * 100.0 / nc, 6) >= 10
-                    AND sym_hits + kw_python + kw_js + kw_c + kw_sql
-                        + indent_lines >= 3) AS is_code,
-                   CASE WHEN kw_python >= kw_js AND kw_python >= kw_c
-                             AND kw_python >= kw_sql AND kw_python > 0
-                        THEN 'python'
-                        WHEN kw_sql >= kw_js AND kw_sql >= kw_c AND kw_sql > 0
-                        THEN 'sql'
-                        WHEN kw_js >= kw_c AND kw_js > 0 THEN 'js'
-                        WHEN kw_c > 0 THEN 'c'
-                        ELSE 'none' END AS lang_hint
-            FROM k
-        """,
-        "periodogram": _periodogram_oracle_sql(),
-        "fs_em_weights": LKG.fs_em_oracle_sql(_FS_EM_PAIRS_SQL, _FS_EM_FIELDS),
-        "hyperball_neighborhood": _hyperball_oracle_sql(),
-        "bot_traffic": """
-            WITH e AS (
-                SELECT user_id,
-                       CASE WHEN user_id % 7 = 0
-                            THEN TIMESTAMP '1995-01-01 00:00:00'
-                                 + (event_id % 1000 * 60) * INTERVAL 1 SECOND
-                            ELSE ts END AS ts
-                FROM events
-            ), lagged AS (
-                SELECT user_id AS u, ts,
-                       lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-                FROM e
-            ), gaps AS (
-                SELECT u, date_diff('microsecond', prev, ts) AS gap
-                FROM lagged WHERE prev IS NOT NULL
-            ), pu AS (
-                SELECT u, CAST(count(*) AS BIGINT) AS g,
-                       SUM(CAST(gap AS HUGEINT)) AS s,
-                       SUM(CAST(gap AS HUGEINT) * gap) AS ss
-                FROM gaps GROUP BY u
-            ), md AS (
-                SELECT u, MAX(c) AS mode_c FROM (
-                    SELECT u, gap, CAST(count(*) AS BIGINT) AS c
-                    FROM gaps GROUP BY u, gap
-                ) GROUP BY u
-            ), ct AS (
-                SELECT user_id AS u, CAST(count(*) AS BIGINT) AS n_events
-                FROM e GROUP BY user_id
-            ), sig AS (
-                SELECT ct.u AS "user", ct.n_events,
-                       CASE WHEN pu.g IS NOT NULL THEN
-                           round(CAST(pu.s AS DOUBLE) / CAST(pu.g AS DOUBLE)
-                                 / 1000.0, 3) END AS mean_gap_ms,
-                       CASE WHEN pu.s > 0 THEN
-                           round(sqrt(greatest(
-                                     CAST(pu.g * pu.ss - pu.s * pu.s
-                                          AS DOUBLE), 0.0))
-                                 / CAST(pu.s AS DOUBLE) * 1000.0, 3)
-                       END AS cv_milli,
-                       CASE WHEN pu.g IS NOT NULL THEN
-                           round(CAST(md.mode_c AS DOUBLE)
-                                 / CAST(pu.g AS DOUBLE), 6) END AS repeat_share
-                FROM ct
-                LEFT JOIN pu ON pu.u = ct.u
-                LEFT JOIN md ON md.u = ct.u
-            )
-            SELECT "user", n_events, mean_gap_ms, cv_milli, repeat_share,
-                   COALESCE(n_events >= 10
-                            AND (cv_milli < 100 OR repeat_share > 0.9),
-                            false) AS is_bot
-            FROM sig
-        """,
-        "local_clustering": """
-            WITH g AS (
-                SELECT DISTINCT o_custkey % 1000 AS src, o_orderkey % 1000 AS dst
-                FROM orders
-            ), und AS (
-                SELECT src AS a, dst AS b FROM g WHERE src <> dst
-                UNION
-                SELECT dst AS a, src AS b FROM g WHERE src <> dst
-            ), deg AS (
-                SELECT a AS node, CAST(count(*) AS BIGINT) AS degree
-                FROM und GROUP BY a
-            ), kept AS (
-                SELECT node FROM deg WHERE degree <= 500
-            ), e AS (
-                SELECT und.a, und.b FROM und
-                JOIN kept ka ON ka.node = und.a
-                JOIN kept kb ON kb.node = und.b
-                WHERE und.a < und.b
-            ), tris AS (
-                SELECT ij.a AS a, ij.b AS b, jk.b AS c
-                FROM e ij
-                JOIN e jk ON jk.a = ij.b
-                JOIN e ik ON ik.a = ij.a AND ik.b = jk.b
-            ), member AS (
-                SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM (
-                    SELECT a AS node FROM tris
-                    UNION ALL SELECT b FROM tris
-                    UNION ALL SELECT c FROM tris
-                ) GROUP BY node
-            ), o AS (
-                SELECT deg.node, deg.degree,
-                       COALESCE(member.triangles, 0) AS triangles
-                FROM deg LEFT JOIN member USING (node)
-            )
-            SELECT node, degree, triangles,
-                   CASE WHEN degree > 500 THEN NULL
-                        WHEN degree <= 1 THEN 0.0
-                        ELSE round(CAST(2 * triangles AS DOUBLE)
-                                   / CAST(degree * (degree - 1) AS DOUBLE), 6)
-                   END AS clustering
-            FROM o
-        """,
-        "cooccurrence_pairs": """
-            WITH base AS (
-                SELECT DISTINCT l_orderkey AS u, l_partkey % 100 AS i
-                FROM lineitem
-            ), capped AS (
-                SELECT u, i FROM (
-                    SELECT u, i,
-                           row_number() OVER (PARTITION BY u ORDER BY i) AS rn
-                    FROM base
-                ) WHERE rn <= 5
-            ), nt AS (
-                SELECT count(DISTINCT u) AS N FROM capped
-            ), deg AS (
-                SELECT i, count(*) AS d FROM capped GROUP BY i
-            ), p AS (
-                SELECT a.i AS item_a, b.i AS item_b, count(*) AS n_users
-                FROM capped a JOIN capped b ON a.u = b.u AND a.i < b.i
-                GROUP BY 1, 2 HAVING count(*) >= 2
-            )
-            SELECT item_a, item_b, n_users,
-                   round(CAST(n_users * N AS DOUBLE)
-                         / CAST(da.d * db.d AS DOUBLE), 6) AS lift
-            FROM p
-            JOIN deg da ON da.i = item_a
-            JOIN deg db ON db.i = item_b
-            CROSS JOIN nt
-        """,
-        "crawl_funnel_pipeline": f"""
-            WITH n AS (
-                SELECT doc_id,
-                       trim(regexp_replace(COALESCE(text, ''), '\\s+', ' ', 'g'))
-                           AS norm
-                FROM documents
-            ), k AS (
-                SELECT doc_id, norm,
-                       length(replace(norm, ' ', '')) AS nws
-                FROM n
-            ), m AS (
-                SELECT doc_id,
-                       CASE WHEN nws >= 25
-                            THEN 'Doc ' || CAST(doc_id AS VARCHAR)
-                                 || chr(10) || norm
-                            ELSE 'Doc ' || CAST(doc_id AS VARCHAR) END AS text
-                FROM k
-            )
-            SELECT doc_id,
-                   {_langid_sql("text")} AS lang,
-                   {ntoks} AS n_tokens,
-                   {qscore} AS quality,
-                   (true AND ({_langid_sql("text")} = 'en')
-                         AND ({qscore} >= 0.5)) AS kept
-            FROM m
-        """,
-        "embedding_anisotropy": """
-            WITH ex AS (
-                SELECT unnest(list_transform(embedding,
-                           (v, i) -> struct_pack(dim := i - 1, v := v))) AS s
-                FROM embeddings
-            ), qq AS (
-                SELECT s.dim AS dim,
-                       CAST(floor(CAST(s.v AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-                FROM ex
-            ), pd AS (
-                SELECT dim, COUNT(*) AS n,
-                       CAST(SUM(CAST(q AS HUGEINT)) AS HUGEINT) AS s,
-                       CAST(SUM(CAST(q AS HUGEINT) * q) AS HUGEINT) AS ss
-                FROM qq GROUP BY dim
-            ), a AS (
-                SELECT MAX(n) AS n, CAST(COUNT(*) AS BIGINT) AS dims,
-                       CAST(SUM(s * s) AS HUGEINT) AS s2,
-                       CAST(SUM(ss) AS HUGEINT) AS q2
-                FROM pd
-            )
-            SELECT n, dims,
-                   round(CAST(s2 AS DOUBLE)
-                         / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-                         / 1000000000000.0, 6) AS mean_norm2,
-                   round(CAST(q2 AS DOUBLE) / CAST(n AS DOUBLE)
-                         / 1000000000000.0, 6) AS avg_norm2,
-                   CASE WHEN q2 > 0 THEN
-                       round((CAST(s2 AS DOUBLE)
-                              / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-                              / 1000000000000.0)
-                             / (CAST(q2 AS DOUBLE) / CAST(n AS DOUBLE)
-                                / 1000000000000.0), 6)
-                   ELSE NULL END AS anisotropy
-            FROM a
-        """,
-        "embedding_whiten": """
-            WITH ex AS (
-                SELECT vec_id,
-                       unnest(list_transform(embedding,
-                           (v, i) -> struct_pack(dim := i - 1, v := v))) AS s
-                FROM embeddings
-            ), qq AS (
-                SELECT vec_id, s.dim AS dim,
-                       CAST(floor(CAST(s.v AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-                FROM ex
-            ), st AS (
-                SELECT dim, COUNT(*) AS n,
-                       CAST(SUM(CAST(q AS HUGEINT)) AS HUGEINT) AS s,
-                       CAST(SUM(CAST(q AS HUGEINT) * q) AS HUGEINT) AS ss
-                FROM qq GROUP BY dim
-            ), mu AS (
-                SELECT dim,
-                       CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-                       sqrt(greatest(CAST(ss AS DOUBLE) / CAST(n AS DOUBLE)
-                            - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 0.0))
-                           AS sd
-                FROM st
-            ), z AS (
-                SELECT qq.vec_id, qq.dim,
-                       CAST(floor(CASE WHEN mu.sd > 0.0
-                                       THEN (CAST(qq.q AS DOUBLE) - mu.mu) / mu.sd
-                                       ELSE 0.0 END * 1000.0 + 0.5) AS BIGINT)
-                           AS zq
-                FROM qq JOIN mu USING (dim)
-            )
-            SELECT vec_id,
-                   array_to_string(list(CAST(zq AS VARCHAR) ORDER BY dim), ',')
-                       AS white_q3_csv
-            FROM z GROUP BY vec_id
-        """,
-        "anchor_text_agg": """
-            SELECT '/doc/' || CAST(doc_id AS VARCHAR) AS target,
-                   CAST(1 AS BIGINT) AS inlinks,
-                   CAST(1 AS BIGINT) AS follow_inlinks,
-                   CAST(1 AS BIGINT) AS distinct_sources,
-                   CAST(1 AS BIGINT) AS distinct_anchors,
-                   'Doc ' || CAST(doc_id AS VARCHAR) AS top_anchor
-            FROM documents
-            UNION ALL
-            SELECT 'https://example.com/src/' || source,
-                   count(*), CAST(0 AS BIGINT), count(DISTINCT doc_id),
-                   CAST(1 AS BIGINT), 'source ' || source
-            FROM documents GROUP BY source
-            UNION ALL
-            SELECT '/', count(*), count(*), count(DISTINCT doc_id),
-                   CAST(1 AS BIGINT), 'Home'
-            FROM documents
-        """,
-        "html_extract_links": """
-            SELECT doc_id AS id, CAST(1 AS INTEGER) AS link_no,
-                   '/doc/' || CAST(doc_id AS VARCHAR) AS href,
-                   'Doc ' || CAST(doc_id AS VARCHAR) AS anchor_text,
-                   '' AS rel, false AS nofollow
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(2 AS INTEGER),
-                   'https://example.com/src/' || source,
-                   'source ' || source,
-                   'nofollow ugc', true
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(3 AS INTEGER), '/', 'Home', '', false
-            FROM documents
-        """,
-        "html_main_text": """
-            WITH n AS (
-                SELECT doc_id,
-                       trim(regexp_replace(COALESCE(text, ''), '\\s+', ' ', 'g'))
-                           AS norm
-                FROM documents
-            ), k AS (
-                SELECT doc_id, norm,
-                       length(replace(norm, ' ', '')) AS nws
-                FROM n
-            )
-            SELECT doc_id AS id,
-                   'Doc ' || CAST(doc_id AS VARCHAR) AS title,
-                   CASE WHEN nws >= 25
-                        THEN 'Doc ' || CAST(doc_id AS VARCHAR) || chr(10) || norm
-                        ELSE 'Doc ' || CAST(doc_id AS VARCHAR) END AS main_text,
-                   CAST(CASE WHEN nws >= 25 THEN 2 ELSE 1 END AS INTEGER)
-                       AS n_blocks_kept,
-                   CAST(CASE WHEN nws >= 25 OR nws = 0 THEN 0 ELSE 1 END
-                        AS INTEGER) AS n_blocks_dropped,
-                   true AS parse_ok
-            FROM k
-        """,
-        "business_days_holidays": f"""
-            SELECT o_orderkey,
-                   CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP) AS start_day,
-                   CAST(CAST(o_orderdate AS DATE)
-                        + CAST(o_orderkey % 60 AS INTEGER) AS TIMESTAMP) AS end_day,
-                   CAST((SELECT COUNT(*) FROM unnest(range(0, o_orderkey % 60)) AS v(i)
-                         WHERE isodow(CAST(o_orderdate AS DATE)
-                                      + CAST(i AS INTEGER)) <= 5
-                           AND NOT list_contains(
-                                   CAST({_italian_holidays()!r} AS DATE[]),
-                                   CAST(o_orderdate AS DATE) + CAST(i AS INTEGER)))
-                        AS BIGINT) AS business_days
-            FROM orders
-        """,
-        "business_days": """
-            SELECT o_orderkey,
-                   CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP) AS start_day,
-                   CAST(CAST(o_orderdate AS DATE)
-                        + CAST(o_orderkey % 60 AS INTEGER) AS TIMESTAMP) AS end_day,
-                   CAST((SELECT COUNT(*) FROM unnest(range(0, o_orderkey % 60)) AS v(i)
-                         WHERE isodow(CAST(o_orderdate AS DATE)
-                                      + CAST(i AS INTEGER)) <= 5) AS BIGINT)
-                       AS business_days
-            FROM orders
-        """,
-        "score_linear": """
-            WITH toks AS (
-                SELECT doc_id, unnest(string_split_regex(
-                           trim(lower(COALESCE(text, ''))), '\\s+')) AS tok
-                FROM documents
-            ), h AS (
-                SELECT doc_id,
-                       CAST(CAST('0x' || substr(md5(tok), 1, 12) AS BIGINT) % 64
-                            AS INT) AS bucket,
-                       CASE WHEN (strpos('0123456789abcdef',
-                                         substr(md5(tok), 13, 1)) - 1) % 2 = 0
-                            THEN 1 ELSE -1 END AS s
-                FROM toks WHERE tok <> ''
-            ), f AS (
-                SELECT doc_id, bucket, CAST(SUM(s) AS BIGINT) AS x
-                FROM h GROUP BY doc_id, bucket
-                HAVING SUM(s) <> 0
-            )
-            SELECT doc_id,
-                   CAST(SUM(x * ((bucket * 7) % 13 - 6)) AS BIGINT)
-                       AS margin_micros
-            FROM f GROUP BY doc_id
-        """,
-        "changepoint": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                           AS cents
-                FROM events GROUP BY 1, 2
-            ), w AS (
-                SELECT event_type, day, cents,
-                       SUM(cents) OVER (PARTITION BY event_type ORDER BY day
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS pk,
-                       row_number() OVER (PARTITION BY event_type
-                                          ORDER BY day) AS k,
-                       COUNT(*) OVER (PARTITION BY event_type) AS n,
-                       SUM(cents) OVER (PARTITION BY event_type) AS s
-                FROM daily
-            ), cand AS (
-                SELECT event_type, day, k, pk, n, s,
-                       abs(n * pk - k * s) AS numer,
-                       row_number() OVER (PARTITION BY event_type
-                           ORDER BY abs(n * pk - k * s) DESC, k ASC) AS rn
-                FROM w WHERE k < n
-            )
-            SELECT event_type, CAST(n AS BIGINT) AS n,
-                   day AS change_at_day,
-                   CAST(numer AS BIGINT) AS max_abs_numer,
-                   round(CAST(pk AS DOUBLE) / k, 6) + 0.0 AS mean_before,
-                   round(CAST(s - pk AS DOUBLE) / (n - k), 6) + 0.0 AS mean_after
-            FROM cand WHERE rn = 1
-        """,
-        "degree_distribution": """
-            WITH c AS (
-                SELECT l_orderkey, COUNT(*) AS cnt FROM lineitem GROUP BY 1
-            )
-            SELECT CAST(length(bin(cnt)) AS INT) AS bucket,
-                   COUNT(*) AS n_keys,
-                   CAST(MIN(cnt) AS BIGINT) AS min_count,
-                   CAST(MAX(cnt) AS BIGINT) AS max_count,
-                   CAST(SUM(cnt) AS BIGINT) AS n_rows
-            FROM c GROUP BY 1
-        """,
-        "kcore": _kcore_sql(KCORE_K, KCORE_ROUNDS),
-        "expectation_suite": """
-            WITH s AS (
-                SELECT COUNT(*) AS n,
-                       CAST(MIN(o_totalprice) AS DOUBLE) AS min_tp,
-                       CAST(MAX(o_totalprice) AS DOUBLE) AS max_tp,
-                       SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS nulls_k,
-                       COUNT(DISTINCT o_orderkey) AS nd_k,
-                       SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS nulls_st,
-                       SUM(CASE WHEN o_orderstatus NOT IN ('F', 'O', 'P')
-                                 AND o_orderstatus IS NOT NULL
-                                THEN 1 ELSE 0 END) AS bad_st,
-                       CAST(MIN(o_custkey) AS DOUBLE) AS min_ck
-                FROM orders
-            )
-            SELECT 'o_totalprice' AS "column", 'min_value' AS rule,
-                   min_tp AS observed, CAST(0.0 AS DOUBLE) AS bound, min_tp >= 0 AS ok FROM s
-            UNION ALL
-            SELECT 'o_totalprice', 'max_value', max_tp, CAST(1000000.0 AS DOUBLE),
-                   max_tp <= 1000000 FROM s
-            UNION ALL
-            SELECT 'o_orderkey', 'max_null_frac',
-                   round(nulls_k / n, 6) + 0.0, CAST(0.0 AS DOUBLE),
-                   round(nulls_k / n, 6) + 0.0 <= 0.0 FROM s
-            UNION ALL
-            SELECT 'o_orderkey', 'min_distinct', CAST(nd_k AS DOUBLE), CAST(100.0 AS DOUBLE),
-                   nd_k >= 100 FROM s
-            UNION ALL
-            SELECT 'o_orderstatus', 'max_null_frac',
-                   round(nulls_st / n, 6) + 0.0, CAST(0.0 AS DOUBLE),
-                   round(nulls_st / n, 6) + 0.0 <= 0.0 FROM s
-            UNION ALL
-            SELECT 'o_orderstatus', 'allowed_values', CAST(bad_st AS DOUBLE),
-                   CAST(0.0 AS DOUBLE), bad_st = 0 FROM s
-            UNION ALL
-            SELECT 'o_custkey', 'min_value', min_ck, CAST(1.0 AS DOUBLE), min_ck >= 1 FROM s
-        """,
-        "kfold_assign": """
-            SELECT doc_id, lang, source,
-                   CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12)
-                             AS BIGINT) % 5 AS INT) AS fold
-            FROM documents
-        """,
-        "balance_classes": """
-            WITH r AS (
-                SELECT doc_id, lang, source,
-                       row_number() OVER (PARTITION BY lang
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                FROM documents
-            ), m AS (
-                SELECT MIN(n) AS min_n
-                FROM (SELECT COUNT(*) AS n FROM documents GROUP BY lang)
-            )
-            SELECT doc_id, lang, source FROM r, m WHERE rn <= min_n
-        """,
-        "feature_hash": """
-            WITH toks AS (
-                SELECT doc_id, unnest(string_split_regex(
-                           trim(lower(COALESCE(text, ''))), '\\s+')) AS tok
-                FROM documents
-            ), h AS (
-                SELECT doc_id,
-                       CAST(CAST('0x' || substr(md5(tok), 1, 12) AS BIGINT) % 64
-                            AS INT) AS bucket,
-                       CASE WHEN (strpos('0123456789abcdef',
-                                         substr(md5(tok), 13, 1)) - 1) % 2 = 0
-                            THEN 1 ELSE -1 END AS s
-                FROM toks WHERE tok <> ''
-            )
-            SELECT doc_id, bucket, CAST(SUM(s) AS BIGINT) AS weight
-            FROM h GROUP BY doc_id, bucket
-            HAVING SUM(s) <> 0
-        """,
-        "target_encode_loo": """
-            WITH o AS (
-                SELECT o_orderkey, o_orderpriority,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), cat AS (
-                SELECT o_orderpriority,
-                       CAST(SUM(cents) AS HUGEINT) AS cat_sum,
-                       COUNT(*) AS cat_n
-                FROM o GROUP BY o_orderpriority
-            ), g AS (
-                SELECT CAST(SUM(cents) AS HUGEINT) AS gsum,
-                       COUNT(*) AS gn
-                FROM o
-            )
-            SELECT o_orderkey, o_orderpriority, cents,
-                   CAST((cat_sum - cents) * gn + 20 * gsum AS DOUBLE)
-                   / CAST(gn * (cat_n - 1 + 20) AS DOUBLE) AS encoded
-            FROM o JOIN cat USING (o_orderpriority), g
-        """,
-        "versioned_roundtrip": """
-            SELECT n_nationkey, upper(n_name) AS n_name, n_regionkey
-            FROM nation
-        """,
-        "max_drawdown": """
-            WITH d AS (
-                SELECT user_id, event_id, epoch_us(ts) AS us,
-                       CASE WHEN event_type = 'purchase'
-                            THEN CAST(round(value * 100) AS BIGINT)
-                            ELSE -CAST(round(value * 100) AS BIGINT) END AS delta
-                FROM events
-            ), c0 AS (
-                SELECT user_id, event_id, us, delta,
-                       SUM(delta) OVER (PARTITION BY user_id
-                           ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cum
-                FROM d
-            ), c AS (
-                SELECT *, MAX(cum) OVER (PARTITION BY user_id
-                           ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS peak
-                FROM c0
-            ), ranked AS (
-                SELECT user_id, peak - cum AS dd, peak, cum,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY peak - cum DESC,
-                                                   us ASC, event_id ASC) AS rn
-                FROM c
-            )
-            SELECT user_id,
-                   CAST(dd AS BIGINT) AS max_drawdown,
-                   CAST(peak AS BIGINT) AS peak_at_max,
-                   CAST(cum AS BIGINT) AS trough_at_max
-            FROM ranked WHERE rn = 1
-        """,
-        "clamped_balance": """
-            WITH d AS (
-                SELECT user_id, ts, event_id,
-                       CASE WHEN event_type = 'purchase'
-                            THEN CAST(round(value * 100) AS BIGINT)
-                            ELSE -CAST(round(value * 100) AS BIGINT) END AS delta
-                FROM events
-            ), folded AS (
-                SELECT user_id,
-                       list_reduce(
-                           list_prepend(
-                               [0::BIGINT, 0::BIGINT],
-                               list_transform(
-                                   list(delta ORDER BY ts, event_id),
-                                   x -> [x, 0::BIGINT])),
-                           (acc, x) -> [
-                               greatest(0::BIGINT, acc[1] + x[1]),
-                               acc[2] + CASE WHEN acc[1] + x[1] < 0
-                                             THEN 1 ELSE 0 END]) AS r
-                FROM d GROUP BY user_id
-            )
-            SELECT user_id,
-                   CAST(r[1] AS BIGINT) AS end_balance,
-                   CAST(r[2] AS BIGINT) AS n_floor_hits
-            FROM folded
-        """,
-        "burst_detection": """
-            SELECT user_id, event_id, ts,
-                   COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                                  RANGE BETWEEN 2592000000000 PRECEDING
-                                        AND CURRENT ROW) AS n_trailing_30d,
-                   COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                                  RANGE BETWEEN 2592000000000 PRECEDING
-                                        AND CURRENT ROW) >= 14 AS is_burst
-            FROM events
-        """,
-        "minmax_scale": """
-            WITH b AS (
-                SELECT source, MIN(n_chars) AS lo, MAX(n_chars) AS hi
-                FROM documents GROUP BY source
-            )
-            SELECT doc_id, d.source, n_chars,
-                   CASE WHEN hi > lo
-                        THEN round((CAST(n_chars AS DOUBLE) - lo) / (hi - lo), 6)
-                             + 0.0
-                        ELSE 0.0 END AS scaled
-            FROM documents d JOIN b USING (source)
-        """,
-        "mann_whitney": """
-            WITH two AS (
-                SELECT event_type AS g,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE event_type IN ('purchase', 'view')
-            ), per_val AS (
-                SELECT v, COUNT(*) AS cnt,
-                       SUM(CASE WHEN g = 'purchase' THEN 1 ELSE 0 END) AS cnt_a
-                FROM two GROUP BY v
-            ), ranked AS (
-                SELECT *,
-                       COALESCE(SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                           0) AS cum_before
-                FROM per_val
-            ), agg AS (
-                SELECT CAST(SUM(cnt_a) AS BIGINT) AS n_a,
-                       CAST(SUM(cnt - cnt_a) AS BIGINT) AS n_b,
-                       SUM((CAST(cum_before AS DOUBLE) + (cnt + 1) / 2.0)
-                           * cnt_a) AS r_a,
-                       CAST(SUM(cnt * cnt * cnt - cnt) AS BIGINT) AS tie3
-                FROM ranked
-            )
-            SELECT n_a, n_b,
-                   r_a - (n_a * (n_a + 1)) / 2.0 AS u_a,
-                   n_a * n_b - (r_a - (n_a * (n_a + 1)) / 2.0) AS u_b,
-                   round((r_a - (n_a * (n_a + 1)) / 2.0 - n_a * n_b / 2.0)
-                         / sqrt(n_a * n_b / 12.0
-                                * ((n_a + n_b + 1)
-                                   - tie3 / ((n_a + n_b) * (n_a + n_b - 1.0)))),
-                         6) AS z
-            FROM agg
-        """,
-        "pipeline_requirement_taxonomies": f"""
-            WITH tr AS (
-                SELECT '  TR-' || CAST(n_nationkey AS VARCHAR) || ' ' AS clientid,
-                       CASE WHEN n_nationkey % 5 = 0 THEN ' Generale '
-                            ELSE n_name END AS nome,
-                       TIMESTAMP '1994-06-01 00:00:00'
-                           + INTERVAL (n_nationkey % 900) DAY AS creation,
-                       CASE WHEN n_nationkey % 4 <> 0
-                            THEN TIMESTAMP '1994-06-01 00:00:00'
-                                 + INTERVAL (n_nationkey % 1100) DAY END AS last_mod
-                FROM nation
-            ), tsr AS (
-                SELECT ' TSR-' || CAST(s_suppkey AS VARCHAR) || '  ' AS clientid,
-                       s_name AS nome,
-                       TIMESTAMP '1993-01-15 00:00:00'
-                           + INTERVAL (s_suppkey % 1500) DAY AS creation,
-                       CASE WHEN s_suppkey % 3 <> 0
-                            THEN TIMESTAMP '1993-01-15 00:00:00'
-                                 + INTERVAL (s_suppkey % 1800) DAY END AS last_mod
-                FROM supplier
-            )
-            SELECT lower(trim(clientid)) AS id, trim(nome) AS name,
-                   true AS is_readonly, CAST(NULL AS TIMESTAMP) AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-            FROM tr WHERE lower(trim(nome)) = 'generale'
-            UNION ALL
-            SELECT lower(trim(clientid)), trim(nome), false, NULL,
-                   COALESCE(creation, TIMESTAMP '{now}'),
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}')
-            FROM tsr
-            UNION ALL
-            SELECT 'rtax-fallback', '-', false, NULL,
-                   TIMESTAMP '{now}', TIMESTAMP '{now}'
-        """,
-        "pipeline_requirement_lists": f"""
-            WITH base AS (
-                SELECT '  LRT-' || CAST(s_suppkey AS VARCHAR) || ' ' AS clientid,
-                       ' ' || s_name || '  ' AS nome,
-                       CASE WHEN s_suppkey % 9 <> 0
-                            THEN ' DEL-' || CAST(s_suppkey % 40 AS VARCHAR) || ' '
-                       END AS id_delibera_templ,
-                       TIMESTAMP '1992-09-01 00:00:00'
-                           + INTERVAL (s_suppkey % 1400) DAY AS creation,
-                       CASE WHEN s_suppkey % 5 <> 0
-                            THEN TIMESTAMP '1992-09-01 00:00:00'
-                                 + INTERVAL (s_suppkey % 1700) DAY END AS last_mod,
-                       CASE WHEN s_acctbal < 0 THEN 'S' ELSE 'N' END AS disabled
-                FROM supplier
-            )
-            SELECT trim(clientid) AS id, trim(nome) AS name,
-                   trim(id_delibera_templ) AS resolution_id,
-                   CASE WHEN disabled = 'S'
-                        THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-            FROM base
-        """,
-        "pipeline_procedures": f"""
-            WITH base AS (
-                SELECT ' DOM-' || CAST(o_orderkey AS VARCHAR) || '  ' AS clientid,
-                       CASE WHEN o_orderkey % 7 <> 0
-                            THEN CAST(o_orderkey + 100000 AS INTEGER) END AS id_domanda,
-                       CAST(o_orderkey + 200000 AS INTEGER) AS codice_univoco_nrecord,
-                       'comp-' || CAST(o_custkey AS VARCHAR) AS id_titolare_fk,
-                       'proc-' || CAST(o_orderkey % 5 AS VARCHAR) AS id_tipo_proc_fk,
-                       CASE WHEN o_orderkey % 11 = 0 THEN 'CESTINATA'
-                            WHEN o_orderkey % 11 < 4 THEN 'IN COMPILAZIONE'
-                            WHEN o_orderkey % 11 < 7 THEN 'INVIATA'
-                            WHEN o_orderkey % 11 < 9 THEN 'PRESA IN CARICO'
-                            ELSE 'CONCLUSA' END AS stato,
-                       CAST(o_orderdate AS TIMESTAMP) AS creation,
-                       CASE WHEN o_orderkey % 6 <> 0
-                            THEN CAST(o_orderdate AS TIMESTAMP)
-                                 + INTERVAL (o_orderkey % 75) DAY END AS last_mod,
-                       CASE WHEN o_orderkey % 11 >= 9
-                            THEN CAST(o_orderdate AS DATE)
-                                 + CAST(o_orderkey % 90 AS INTEGER) END AS data_conclusione,
-                       CASE WHEN o_orderkey % 11 >= 4
-                            THEN CAST(o_orderdate AS DATE) END AS data_invio_domanda,
-                       CAST(o_orderdate AS DATE) + 365 AS data_scadenza,
-                       CASE WHEN o_orderkey % 13 <> 0
-                            THEN CAST(o_orderkey % 180 AS INTEGER) END AS durata_procedimento,
-                       CAST(365 AS INTEGER) AS massima_durata_procedimento,
-                       CASE WHEN o_orderkey % 3 <> 0
-                            THEN 'PN/' || CAST(o_orderkey AS VARCHAR) END AS numero_procedimento
-                FROM orders
-            ), tipo_proc AS (
-                SELECT trim(' proc-' || CAST(r_regionkey AS VARCHAR) || ' ') AS id_tipo_proc_fk,
-                       regexp_replace(regexp_replace(
-                           upper(trim(' ' || r_name || ' proc. v2 ')),
-                           ' ', '_', 'g'), '\\.', '', 'g') AS procedure_type
-                FROM region
-            )
-            SELECT trim(clientid) AS id,
-                   COALESCE(id_domanda, codice_univoco_nrecord) AS progressive_code,
-                   id_titolare_fk AS company_id,
-                   CASE WHEN replace(trim(stato), ' ', '_') = 'CESTINATA' THEN 'BOZZA'
-                        ELSE replace(trim(stato), ' ', '_') END AS status,
-                   CAST(data_conclusione AS TIMESTAMP) AS completion_date,
-                   CAST(data_invio_domanda AS TIMESTAMP) AS sent_date,
-                   CAST(data_scadenza AS TIMESTAMP) AS expiration_date,
-                   durata_procedimento AS procedure_duration,
-                   massima_durata_procedimento AS max_procedure_duration,
-                   numero_procedimento AS procedure_number,
-                   CASE WHEN stato = 'CESTINATA'
-                        THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   t.procedure_type
-            FROM base LEFT JOIN tipo_proc t USING (id_tipo_proc_fk)
-        """,
-        "pipeline_auac": f"""
-            WITH unioned AS (
-                SELECT CAST(p_partkey AS BIGINT) AS id, {clean("p_name")} AS name,
-                       p_retailprice AS threshold, 'GENERAL' AS requirement_kind,
-                       p_brand AS brand, CAST(NULL AS DOUBLE) AS balance
-                FROM part
-                UNION ALL
-                SELECT CAST(s_suppkey AS BIGINT), {clean("s_name")},
-                       CAST(NULL AS DOUBLE), 'SPECIFIC', CAST(NULL AS VARCHAR), s_acctbal
-                FROM supplier
-                UNION ALL
-                SELECT -1, 'ALTRO', CAST(NULL AS DOUBLE), 'FALLBACK',
-                       CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE)
-            ), numbered AS (
-                SELECT *, row_number() OVER (PARTITION BY name ORDER BY id) AS rn FROM unioned
-            )
-            SELECT id,
-                   CASE WHEN name IS NULL OR rn = 1 THEN name
-                        ELSE name || ' (' || CAST(rn - 1 AS VARCHAR) || ')' END AS name,
-                   requirement_kind, threshold, brand, balance
-            FROM numbered
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS dup_count
-            FROM documents GROUP BY md5(text)
-        """,
-        "ann_cosine_topk": f"""
-            WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-            SELECT vec_id, round({dot} / ({norm_e} * {norm_q}), 6) AS cosine
-            FROM embeddings, q
-            WHERE vec_id <> 0
-            ORDER BY cosine DESC, vec_id
-            LIMIT 10
-        """,
-        "ann_ivf_topk": f"""
-            WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-            e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 0),
-            cents AS (SELECT vec_id AS cid, embedding AS ce FROM e ORDER BY vec_id LIMIT 16),
-            assign AS (
-                SELECT vec_id, embedding, cid,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-                FROM (SELECT e.vec_id, e.embedding, c.cid,
-                             {_cos2_sql("e.embedding", "c.ce")} AS cos
-                      FROM e CROSS JOIN cents c)
-            ),
-            qprobe AS (
-                SELECT cid FROM (SELECT c.cid, {_cos2_sql("q.qe", "c.ce")} AS cos
-                                 FROM q CROSS JOIN cents c)
-                ORDER BY cos DESC, cid LIMIT 2
-            )
-            SELECT a.vec_id, round({_cos2_sql("a.embedding", "q.qe")}, 6) AS cosine
-            FROM assign a JOIN qprobe p ON a.cid = p.cid, q
-            WHERE a.rn = 1
-            ORDER BY cosine DESC, a.vec_id
-            LIMIT 10
-        """,
-        "ann_lsh_topk": f"""
-            WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-                 qs AS (SELECT {_lsh_bucket_sql("qe")} AS qb FROM q)
-            SELECT vec_id, round({dot} / ({norm_e} * {norm_q}), 6) AS cosine
-            FROM embeddings, q, qs
-            WHERE vec_id <> 0
-              AND ({_lsh_bucket_sql("embedding")} = qb
-                   OR {_lsh_bucket_sql("embedding")} = xor(qb, 1))
-            ORDER BY cosine DESC, vec_id
-            LIMIT 10
-        """,
-        "multimodal_binary_meta": """
-            SELECT doc_id AS id, 'text/plain' AS mime,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-                   CAST(octet_length(encode(text)) % 997 AS INTEGER) AS width,
-                   CAST(octet_length(encode(text)) % 991 AS INTEGER) AS height,
-                   CAST(octet_length(encode(text)) % 31 AS INTEGER) AS n_frames,
-                   true AS ok
-            FROM documents
-        """,
-        "text_token_stats": f"""
-            SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-                   CAST({ntoks} AS BIGINT) AS n_tokens
-            FROM documents
-        """,
-        "text_quality_score": f"""
-            SELECT doc_id, CAST({ntoks} AS BIGINT) AS n_tokens,
-                   {stopr} AS stopword_ratio, {punctr} AS punct_ratio,
-                   {qscore} AS quality_score
-            FROM documents
-        """,
-        "text_language_id": f"""
-            SELECT doc_id, lang, {_langid_sql("text")} AS lang_pred FROM documents
-        """,
-        "text_fingerprint": f"""
-            SELECT doc_id, md5(array_to_string(list_sort(list_distinct({toks})), ' ')) AS fingerprint
-            FROM documents
-        """,
-        "events_windowed_agg": """
-            SELECT date_trunc('hour', ts) AS window_start, event_type,
-                   COUNT(*) AS n_events,
-                   SUM(CAST(round(value * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_value
-            FROM events GROUP BY 1, 2
-        """,
-        "asof_join": """
-            SELECT e.event_id, e.user_id, e.ts, p.ts AS ts_asof
-            FROM events e
-            ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-              ON e.user_id = p.user_id AND e.ts > p.ts
-        """,
-        "range_band_join": """
-            SELECT o.o_orderkey, b.band
-            FROM orders o
-            LEFT JOIN (VALUES ('SMALL', 0.0, 50000.0),
-                              ('MEDIUM', 50000.0, 200000.0),
-                              ('LARGE', 200000.0, 10000000.0)) AS b(band, lo, hi)
-              ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
-        """,
-        "window_rolling_agg": """
-            SELECT event_id, user_id, ts,
-                   CAST(round(value * 100) AS BIGINT) AS value_cents,
-                   lag(CAST(round(value * 100) AS BIGINT), 1, 0)
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value_cents,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT))
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT)
-                       AS rolling_value_cents
-            FROM events
-        """,
-        "ann_ivf_trained_topk": _ivf_trained_sql(k=16, iters=3, nprobe=2, topk=10),
-        "semdedup": _semdedup_sql(k=16, iters=3, threshold=0.35),
-        # Integer cross-multiplication thresholds — no float in the gate.
-        "gopher_rules": """
-            WITH base AS (
-                SELECT doc_id,
-                       COALESCE(text, '') AS c,
-                       list_filter(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+'),
-                                   t -> t <> '') AS toks,
-                       list_filter(string_split(COALESCE(text, ''), chr(10)),
-                                   ln -> trim(ln) <> '') AS lines
-                FROM documents
-            ), stats AS (
-                SELECT doc_id,
-                       CAST(len(toks) AS BIGINT) AS n_words,
-                       CAST(len(lines) AS BIGINT) AS n_lines,
-                       list_reduce(list_prepend(CAST(0 AS BIGINT),
-                           list_transform(toks, t -> CAST(len(t) AS BIGINT))),
-                           (a, b) -> a + b) AS chars,
-                       CAST(len(c) - len(replace(c, '#', '')) AS BIGINT) AS n_hash,
-                       CAST((len(c) - len(replace(c, '...', ''))) / 3
-                            + (len(c) - len(replace(c, '…', ''))) AS BIGINT) AS n_ell,
-                       CAST(len(list_filter(lines, ln ->
-                           starts_with(trim(ln), '•') OR starts_with(trim(ln), '-')
-                           OR starts_with(trim(ln), '*'))) AS BIGINT) AS n_bullet,
-                       CAST(len(list_filter(lines, ln ->
-                           ends_with(trim(ln), '...') OR ends_with(trim(ln), '…')))
-                           AS BIGINT) AS n_ell_lines,
-                       CAST(len(list_filter(toks, t -> regexp_matches(t, '[a-z]')))
-                           AS BIGINT) AS n_alpha,
-                       CAST(len(list_intersect(list_distinct(toks),
-                           ['the', 'a'])) AS BIGINT) AS n_stop
-                FROM base
-            ), ruled AS (
-                SELECT doc_id, n_words, n_lines,
-                       n_words >= 20 AND n_words <= 100000 AS rule_word_count,
-                       chars >= 3 * n_words AND chars <= 10 * n_words AS rule_mean_word_len,
-                       n_hash * 10 <= n_words AND n_ell * 10 <= n_words AS rule_symbol_ratio,
-                       n_bullet * 10 <= 9 * n_lines AS rule_bullet_lines,
-                       n_ell_lines * 10 <= 3 * n_lines AS rule_ellipsis_lines,
-                       n_alpha * 10 >= 8 * n_words AS rule_alpha_words,
-                       n_stop >= 2 AS rule_stopwords
-                FROM stats
-            )
-            SELECT doc_id, n_words, n_lines,
-                   rule_word_count, rule_mean_word_len, rule_symbol_ratio,
-                   rule_bullet_lines, rule_ellipsis_lines, rule_alpha_words,
-                   rule_stopwords,
-                   rule_word_count AND rule_mean_word_len AND rule_symbol_ratio
-                   AND rule_bullet_lines AND rule_ellipsis_lines
-                   AND rule_alpha_words AND rule_stopwords AS passes
-            FROM ruled
-        """,
-        "text_repetition": f"""
-            WITH per AS (
-                SELECT doc_id, term, COUNT(*) AS tf
-                FROM (SELECT doc_id, unnest({toks}) AS term FROM documents)
-                WHERE term <> ''
-                GROUP BY doc_id, term
-            )
-            SELECT doc_id,
-                   CAST(SUM(tf) AS BIGINT) AS n_tokens,
-                   CAST(COUNT(*) AS BIGINT) AS n_distinct,
-                   round(COUNT(*) / CAST(SUM(tf) AS DOUBLE), 6) AS distinct_ratio,
-                   round(MAX(tf) / CAST(SUM(tf) AS DOUBLE), 6) AS top_term_ratio
-            FROM per GROUP BY doc_id
-        """,
-        "text_tfidf_topk": f"""
-            WITH per AS (
-                SELECT doc_id, term, COUNT(*) AS tf
-                FROM (SELECT doc_id, unnest({toks}) AS term FROM documents)
-                WHERE term <> ''
-                GROUP BY doc_id, term
-            ), dfreq AS (
-                SELECT term, COUNT(*) AS df_t FROM per GROUP BY term
-            ), nd AS (
-                SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents
-            ), scored AS (
-                SELECT per.doc_id, per.term,
-                       round(per.tf * ln(nd.n_docs / CAST(df_t AS DOUBLE)), 6) AS tfidf
-                FROM per JOIN dfreq USING (term) CROSS JOIN nd
-            )
-            SELECT doc_id, term, tfidf, CAST(rank AS INT) AS rank FROM (
-                SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-                FROM scored
-            ) WHERE rank <= 3
-        """,
-        "text_pii_redact": """
-            SELECT doc_id,
-                   regexp_replace(regexp_replace(regexp_replace(
-                       text || ' contact user' || CAST(doc_id AS VARCHAR)
-                            || '@example.com or +1 (555) 123-4567 ref 9876543210.',
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-                       '\\+?\\d{1,3}[-. (]{1,2}\\d{3}[-. )]{1,2}\\d{3}[-. ]?\\d{2,4}', '[PHONE]', 'g'),
-                       '\\d{9,}', '[ID]', 'g') AS redacted
-            FROM documents
-        """,
-        "sample_hash": """
-            SELECT doc_id, lang, source FROM documents
-            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999'
-        """,
-        "funnel_conversion": """
-            WITH v AS (
-                SELECT user_id, MIN(ts) AS t1 FROM events
-                WHERE event_type = 'view' GROUP BY user_id
-            ), c AS (
-                SELECT e.user_id, MIN(e.ts) AS t2
-                FROM events e JOIN v ON e.user_id = v.user_id
-                WHERE e.event_type = 'click' AND e.ts > v.t1
-                GROUP BY e.user_id
-            ), p AS (
-                SELECT e.user_id, MIN(e.ts) AS t3
-                FROM events e JOIN c ON e.user_id = c.user_id
-                WHERE e.event_type = 'purchase' AND e.ts > c.t2
-                GROUP BY e.user_id
-            )
-            SELECT 1 AS stage, 'view' AS event, COUNT(*) AS n_users FROM v
-            UNION ALL
-            SELECT 2, 'click', COUNT(*) FROM c
-            UNION ALL
-            SELECT 3, 'purchase', COUNT(*) FROM p
-            ORDER BY stage
-        """,
-        "partitioned_layout_prune": """
-            SELECT doc_id, lang, n_chars FROM documents WHERE lang = 'en'
-        """,
-        "export_jsonl_roundtrip": """
-            SELECT doc_id, lang, source, text FROM documents
-        """,
-        "scd2_intervals": """
-            WITH ordered AS (
-                SELECT user_id, event_id, ts, event_type AS status,
-                       lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_status,
-                       row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-                FROM events
-            ), changes AS (
-                SELECT user_id, event_id, ts, status FROM ordered
-                WHERE rn = 1 OR status IS DISTINCT FROM prev_status
-            )
-            SELECT user_id, status, ts AS valid_from,
-                   lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-                   lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-            FROM changes
-        """,
-        "role_permissions_fanout": f"""
-            SELECT c_custkey, role, unnest({_role_perms_sql()}) AS permission
-            FROM (SELECT c_custkey, {_role_case_sql()} AS role FROM customer)
-        """,
-        "window_rank_funcs": """
-            SELECT o_orderkey, o_orderpriority,
-                   rank() OVER w AS rnk,
-                   dense_rank() OVER w AS drnk,
-                   ntile(4) OVER w AS quartile,
-                   first_value(o_orderkey) OVER w AS top_order_key
-            FROM orders
-            WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)
-        """,
-        "monthly_revenue_rollup": """
-            SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-                   SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-                       / CAST(100.0 AS DOUBLE) AS revenue,
-                   COUNT(*) AS n_lines
-            FROM lineitem GROUP BY 1
-        """,
-        "first_touch_attribution": """
-            SELECT user_id, event_id AS first_event_id, event_type AS first_touch
-            FROM (SELECT user_id, event_id, event_type,
-                         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-                  FROM events)
-            WHERE rn = 1
-        """,
-        "retention_cohorts": """
-            WITH d AS (
-                SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day FROM events
-            ), c AS (
-                SELECT user_id, day, MIN(day) OVER (PARTITION BY user_id) AS cohort_day FROM d
-            )
-            SELECT cohort_day, day, COUNT(DISTINCT user_id) AS n_users
-            FROM c GROUP BY cohort_day, day
-        """,
-        "calendar_gapfill": """
-            WITH spine AS (
-                SELECT CAST(unnest(generate_series(TIMESTAMP '1995-01-01',
-                                                   TIMESTAMP '2001-12-01',
-                                                   INTERVAL 1 MONTH)) AS TIMESTAMP) AS ship_month
-            ), monthly AS (
-                SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-                       SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS cents
-                FROM lineitem GROUP BY 1
-            )
-            SELECT s.ship_month,
-                   COALESCE(m.cents, 0) / CAST(100.0 AS DOUBLE) AS revenue
-            FROM spine s LEFT JOIN monthly m ON s.ship_month = m.ship_month
-        """,
-        "events_sessionization": """
-            WITH g AS (
-                SELECT user_id, ts, value,
-                       CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                                 >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_sess
-                FROM events
-            ), s AS (
-                SELECT user_id, ts, value,
-                       SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                           ROWS UNBOUNDED PRECEDING) AS sess_id
-                FROM g
-            )
-            SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end_ts,
-                   COUNT(*) AS n_events,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-            FROM s GROUP BY user_id, sess_id
-        """,
-        "text_topk_terms": """
-            SELECT term, COUNT(*) AS n
-            FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                  FROM documents)
-            WHERE term <> ''
-            GROUP BY term ORDER BY n DESC, term LIMIT 20
-        """,
-        # Full oracle for the multi-table sign-LSH near-dup path: reproduces
-        # BOTH hash tables' plane literals (seeds 42 and 42+7919, the
-        # embedding_near_dup_pairs per-table seed schedule) via the same
-        # _lsh_bucket_sql used by ann_lsh_topk, unions the bucket self-joins,
-        # and exact-ranks the candidate pairs — byte-identical semantics to
-        # the Spark operator, so the "rows-only by design" row count drops
-        # by one.
-        "dedup_embedding_cosine": f"""
-            WITH e AS (SELECT vec_id, embedding FROM embeddings),
-            b0 AS (SELECT vec_id, {_lsh_bucket_sql("embedding", 64, 8, 42)} AS bucket FROM e),
-            b1 AS (SELECT vec_id, {_lsh_bucket_sql("embedding", 64, 8, 42 + 7919)} AS bucket FROM e),
-            cand AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                FROM b0 a JOIN b0 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-                UNION
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                FROM b1 a JOIN b1 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            ),
-            scored AS (
-                SELECT id_a, id_b,
-                       round({_cos2_sql('ea.embedding', 'eb.embedding')}, 6) AS cosine
-                FROM cand
-                JOIN e ea ON cand.id_a = ea.vec_id
-                JOIN e eb ON cand.id_b = eb.vec_id
-            )
-            SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.38
-        """,
-        "emb_cosine_pairs_exact": f"""
-            WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-            pairs AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       round(
-                           list_reduce(list_transform(generate_series(1, len(a.embedding)),
-                               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)
-                           / (sqrt(list_reduce(list_transform(generate_series(1, len(a.embedding)),
-                               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-                              * sqrt(list_reduce(list_transform(generate_series(1, len(b.embedding)),
-                               i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y))),
-                           6) AS cosine
-                FROM e a JOIN e b ON a.vec_id < b.vec_id
-            )
-            SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.38
-        """,
-        "groupby_rollup": """
-            SELECT n.n_name, c.c_mktsegment,
-                   COUNT(*) AS n,
-                   SUM(CAST(round(c.c_acctbal * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_acctbal
-            FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-            GROUP BY ROLLUP (n.n_name, c.c_mktsegment)
-        """,
-        "pivot_agg": """
-            SELECT o_orderpriority,
-                   CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_f,
-                   CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_o,
-                   CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_p
-            FROM orders GROUP BY o_orderpriority
-        """,
-        "pipeline_resolutions": resolutions_sql,
-        "pipeline_companies": f"""
-            WITH sup AS (
-                SELECT s_suppkey, s_name, s_nationkey,
-                       '27-' || lpad(CAST(s_suppkey AS VARCHAR), 7, '0') || '-'
-                           || lpad(CAST(s_suppkey % 100 AS VARCHAR), 2, '0') AS phone,
-                       upper(s_name) AS rag_soc,
-                       s_suppkey % 5 AS id_natura,
-                       lpad(CAST(s_suppkey AS VARCHAR), 6, '0') AS cod_comune,
-                       ['srl','spa','coop','onlus'][CAST(s_suppkey % 4 AS INT) + 1] AS forma,
-                       TIMESTAMP '1994-01-01 00:00:00' + INTERVAL (s_suppkey % 2000) DAY AS creation,
-                       CASE WHEN s_suppkey % 3 <> 0
-                            THEN TIMESTAMP '1994-01-01 00:00:00' + INTERVAL (s_suppkey % 2000) DAY
-                                 + INTERVAL (s_suppkey % 30) DAY END AS last_mod,
-                       CASE WHEN s_acctbal < 0 THEN 'S' ELSE 'N' END AS disabled
-                FROM supplier
-            )
-            SELECT lower(trim(CAST(s_suppkey AS VARCHAR))) AS id,
-                   {clean('s_name')} AS name,
-                   trim(phone) AS code,
-                   {clean('rag_soc')} AS business_name,
-                   {_enum_case_sql('forma', P.COMPANY_BUSINESS_FORM_MAPPING, None)} AS business_form,
-                   {_enum_case_sql('n_name', P.COMPANY_LEGAL_FORM_MAPPING, 'ALTRO')} AS legal_form,
-                   {_enum_case_sql('r_name', P.COMPANY_NATURE_MAPPING, 'PRIVATO')} AS nature,
-                   substring(replace(phone, '-', ''), 1, 9) AS tax_code,
-                   c_custkey AS municipality_id,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at
-            FROM sup
-            LEFT JOIN nation ON s_nationkey = n_nationkey
-            LEFT JOIN region ON id_natura = r_regionkey
-            LEFT JOIN customer ON cod_comune = lpad(CAST(c_custkey AS VARCHAR), 6, '0')
-        """,
-        "pipeline_buildings": f"""
-            WITH p AS (
-                SELECT p_partkey, p_name, p_brand, p_type,
-                       'MFGR#' || CAST(p_partkey % 5 + 1 AS VARCHAR) AS mfgr,
-                       p_size % 2 AS flag,
-                       CASE WHEN p_retailprice > 1500
-                            THEN 'DW-' || CAST(p_partkey AS VARCHAR) END AS docway,
-                       TIMESTAMP '1992-06-01 00:00:00' + INTERVAL (p_partkey % 3000) DAY AS creation,
-                       CASE WHEN p_size > 45 THEN 'S' ELSE 'N' END AS disabled,
-                       CASE WHEN p_partkey % 4 <> 0
-                            THEN TIMESTAMP '1992-06-01 00:00:00' + INTERVAL (p_partkey % 3000) DAY
-                                 + INTERVAL (p_partkey % 90) DAY END AS last_mod
-                FROM part
-            )
-            SELECT lower(trim(CAST(p_partkey AS VARCHAR))) AS id,
-                   {clean('p_name')} AS name,
-                   trim(mfgr) AS code,
-                   lower(trim(p_brand)) AS physical_structure_id,
-                   {clean('p_type')} AS owner_business_name,
-                   flag = 1 AS is_own_property,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(CASE WHEN docway IS NOT NULL
-                                 THEN '{{"docway_file_id":"' || docway || '"}}' END,
-                            '{{}}') AS extra
-            FROM p
-        """,
-        "pipeline_udo_types": f"""
-            WITH base AS (
-                SELECT p_partkey, p_name, p_brand, p_type,
-                       'MFGR#' || CAST(p_partkey % 5 + 1 AS VARCHAR) AS mfgr,
-                       CASE WHEN p_size % 2 = 0 THEN 'S' ELSE 'N' END AS osp,
-                       CASE WHEN p_size % 5 = 0 THEN 'y' ELSE 'n' END AS sm,
-                       CASE WHEN p_size % 3 = 0 THEN 'Y' ELSE 'N' END AS pl,
-                       TIMESTAMP '1993-01-01 00:00:00' + INTERVAL (p_partkey % 2500) DAY AS creation,
-                       CASE WHEN p_partkey % 7 = 0 THEN 'S' ELSE 'N' END AS disabled,
-                       CASE WHEN p_partkey % 2 = 0
-                            THEN TIMESTAMP '1993-01-01 00:00:00' + INTERVAL (p_partkey % 2500) DAY
-                                 + INTERVAL 30 DAY END AS last_mod
-                FROM part
-            ),
-            bind_scope AS (
-                SELECT DISTINCT l_partkey, l_suppkey FROM lineitem WHERE l_linenumber = 1
-            ),
-            scope AS (
-                SELECT s_suppkey, trim(s_name) AS scope_name,
-                       'ambito ' || lower(trim(s_name)) AS scope_description,
-                       CASE WHEN s_suppkey % 2 = 0 THEN 's' ELSE 'n' END AS agg_disc,
-                       CASE WHEN s_suppkey % 3 = 0 THEN 'y' ELSE 'n' END AS agg_branche
-                FROM supplier
-            ),
-            natures AS (
-                SELECT l_partkey,
-                       list_transform(list_sort(list(DISTINCT l_returnflag)),
-                           x -> CASE WHEN x = 'R' THEN 'PRIVATO'
-                                     WHEN x = 'A' THEN 'PUBBLICO'
-                                     WHEN x = 'N' THEN 'AZIENDA_SANITARIA' ELSE x END) AS nature
-                FROM lineitem WHERE l_linenumber = 2 GROUP BY l_partkey
-            ),
-            flows AS (
-                SELECT l_partkey,
-                       list_transform(list_sort(list(DISTINCT
-                           ['REG AIR','AIR','RAIL','SHIP','TRUCK','MAIL','FOB']
-                               [CAST(l_orderkey % 7 AS INT) + 1])),
-                           x -> replace(replace(x, ' ', '_'), '.', '_')) AS flussi
-                FROM lineitem WHERE l_linenumber = 3 GROUP BY l_partkey
-            )
-            SELECT lower(trim(CAST(b.p_partkey AS VARCHAR))) AS id,
-                   {clean('p_name')} AS name,
-                   trim(mfgr) AS code,
-                   trim(p_brand) AS code_name,
-                   trim(p_type) AS setting,
-                   COALESCE(lower(trim(osp)) IN ('s','y'), FALSE) AS is_hospital,
-                   COALESCE(lower(trim(sm)) IN ('s','y'), FALSE) AS is_mental_health,
-                   COALESCE(lower(trim(pl)) IN ('s','y'), FALSE) AS has_beds,
-                   scope_name, scope_description,
-                   COALESCE(lower(trim(agg_disc)) IN ('s','y'), FALSE) AS has_disciplines,
-                   COALESCE(lower(trim(agg_branche)) IN ('s','y'), FALSE) AS has_branches,
-                   COALESCE('{{' || array_to_string(
-                       list_transform(nature, x -> '"' || x || '"'), ',') || '}}',
-                       '{{}}') AS company_natures,
-                   COALESCE('{{' || array_to_string(
-                       list_transform(flussi, x -> '"' || x || '"'), ',') || '}}',
-                       '{{}}') AS ministerial_flows,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at
-            FROM base b
-            LEFT JOIN bind_scope ON b.p_partkey = bind_scope.l_partkey
-            LEFT JOIN scope ON bind_scope.l_suppkey = scope.s_suppkey
-            LEFT JOIN natures ON b.p_partkey = natures.l_partkey
-            LEFT JOIN flows ON b.p_partkey = flows.l_partkey
-            WHERE scope_name IS NOT NULL AND scope_name <> ''
-        """,
-        "clean_lines": f"""
-            WITH pages AS (
-                SELECT doc_id,
-                       substring(text, 1, 80) || '.' || chr(10) ||
-                       '{BOILERPLATE_LINE}' || chr(10) ||
-                       'ok' || chr(10) ||
-                       substring(text, 81, 60) AS page
-                FROM documents
-            )
-            SELECT doc_id,
-                   array_to_string(list_filter(string_split(page, chr(10)),
-                       l -> len(list_filter(string_split_regex(trim(l), '\\s+'),
-                                w -> w <> '')) >= 3
-                            AND regexp_matches(trim(l), '[.!?\"]$')), chr(10)) AS clean_text
-            FROM pages
-        """,
-        "dedup_paragraphs": f"""
-            WITH pages AS (
-                SELECT doc_id,
-                       substring(text, 1, 80) || '.' || chr(10) ||
-                       '{BOILERPLATE_LINE}' || chr(10) ||
-                       'ok' || chr(10) ||
-                       substring(text, 81, 60) AS page
-                FROM documents
-            ),
-            d AS (SELECT doc_id, string_split(page, chr(10)) AS ls FROM pages),
-            e AS (SELECT doc_id, unnest(generate_series(1, len(ls))) AS i, ls FROM d),
-            p AS (SELECT doc_id, i - 1 AS idx, ls[i] AS para, trim(ls[i]) AS para_t FROM e),
-            h AS (SELECT *, CASE WHEN length(para_t) >= 20 THEN md5(para_t) END AS fp FROM p),
-            r AS (SELECT *, CASE WHEN fp IS NULL THEN TRUE
-                                 ELSE row_number() OVER (PARTITION BY fp
-                                      ORDER BY doc_id, idx) = 1 END AS keep FROM h)
-            SELECT doc_id,
-                   COALESCE(string_agg(para, chr(10) ORDER BY idx)
-                            FILTER (WHERE keep), '') AS text,
-                   CAST(COUNT(*) FILTER (WHERE NOT keep) AS BIGINT) AS n_dropped
-            FROM r GROUP BY doc_id
-        """,
-        "rebalance_mixture": """
-            WITH counts AS (
-                SELECT source, COUNT(*) AS n_src FROM documents GROUP BY source
-            ),
-            tot AS (SELECT SUM(n_src) AS n_total FROM counts),
-            rates AS (
-                SELECT source,
-                       least(1.0, (CASE WHEN source = 'src0' THEN 0.10
-                                        WHEN source = 'src1' THEN 0.05
-                                        WHEN source = 'src2' THEN 0.02
-                                        ELSE 0.01 END)
-                                  * CAST(n_total AS DOUBLE) / n_src) AS rate
-                FROM counts, tot
-            )
-            SELECT d.doc_id, d.source, d.n_chars
-            FROM documents d JOIN rates r ON d.source IS NOT DISTINCT FROM r.source
-            WHERE r.rate >= 1.0
-               OR substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4)
-                  < lpad(to_hex(CAST(floor(r.rate * 65536) AS BIGINT)), 4, '0')
-        """,
-        "corpus_prep_pipeline": f"""
-            WITH staged AS (
-                SELECT doc_id, text,
-                       {_langid_sql('text')} AS lid,
-                       {ntoks} AS n_tokens,
-                       {qscore} AS q
-                FROM documents
-            ),
-            kept AS (SELECT * FROM staged WHERE lid = 'en' AND q >= 0.5),
-            survivors AS (
-                SELECT MIN(doc_id) AS doc_id, CAST(MIN(n_tokens) AS BIGINT) AS n_tokens
-                FROM kept GROUP BY md5(text)
-            ),
-            d AS (SELECT doc_id, n_tokens, CAST(doc_id % 64 AS INT) AS shard FROM survivors)
-            SELECT doc_id, n_tokens, shard,
-                   CAST(COALESCE(SUM(n_tokens) OVER w, 0) AS BIGINT) AS pack_offset,
-                   CAST(floor(COALESCE(SUM(n_tokens) OVER w, 0) / 2048) AS BIGINT) AS pack_id
-            FROM d
-            WINDOW w AS (PARTITION BY shard ORDER BY doc_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        """,
-        "decontaminate_benchmark": """
-            WITH d AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                           generate_series(1, greatest(0,
-                               len(string_split_regex(trim(lower(text)), '\\s+')) - 7)),
-                           i -> array_to_string(list_slice(
-                               string_split_regex(trim(lower(text)), '\\s+'), i, i + 7), ' ')
-                       )) AS sh
-                FROM documents
-            ),
-            t AS (SELECT doc_id AS train_id, unnest(sh) AS shingle
-                  FROM d WHERE doc_id % 61 <> 0),
-            b AS (SELECT doc_id AS bench_id, unnest(sh) AS shingle
-                  FROM d WHERE doc_id % 61 = 0),
-            bt AS (SELECT bench_id, COUNT(*) AS bench_shingles FROM b GROUP BY bench_id),
-            j AS (
-                SELECT train_id, bench_id, COUNT(*) AS n_matches
-                FROM t JOIN b USING (shingle)
-                WHERE shingle <> ''
-                GROUP BY train_id, bench_id
-            )
-            SELECT train_id, bench_id, n_matches, bench_shingles,
-                   round(CAST(n_matches AS DOUBLE) / bench_shingles, 6) AS overlap_fraction
-            FROM j JOIN bt USING (bench_id)
-            WHERE round(CAST(n_matches AS DOUBLE) / bench_shingles, 6) >= 0.2
-        """,
-        "pipeline_bindings": f"""
-            WITH upf AS (
-                SELECT 'BIND_UDO_FATT_PROD' AS kind,
-                       lower(trim(CAST(l_partkey AS VARCHAR))) AS left_id,
-                       lower(trim(CAST(l_orderkey AS VARCHAR))) AS right_id
-                FROM lineitem WHERE l_linenumber = 2
-            ), tpf AS (
-                SELECT 'BIND_TIPO_22_TIPO_FATT',
-                       lower(trim(CAST(p_partkey % 50 AS VARCHAR))),
-                       lower(trim(CAST(p_partkey % 30 AS VARCHAR)))
-                FROM part
-            ), ures AS (
-                SELECT 'BIND_ATTO_UDO',
-                       lower(trim(CAST(l_orderkey AS VARCHAR))),
-                       lower(trim(CAST(l_suppkey AS VARCHAR)))
-                FROM lineitem WHERE l_linenumber = 3
-            ), base AS (
-                SELECT * FROM upf UNION ALL SELECT * FROM tpf UNION ALL SELECT * FROM ures
-            ), uc AS (
-                SELECT 'OPERATORE_MODEL' AS kind,
-                       lower(trim(CAST(o_custkey AS VARCHAR))) AS left_id,
-                       lower(trim(CAST(o_custkey % 500 AS VARCHAR))) AS right_id,
-                       lower(trim(CAST(o_orderkey AS VARCHAR))) AS id,
-                       FALSE AS is_legal_representative,
-                       CASE WHEN o_orderkey % 13 = 0
-                            THEN COALESCE(last_mod, creation) END AS disabled_at,
-                       COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                       COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-                FROM (SELECT o_orderkey, o_custkey,
-                             CAST(o_orderdate AS TIMESTAMP) AS creation,
-                             CASE WHEN o_orderkey % 3 <> 0
-                                  THEN CAST(o_orderdate AS TIMESTAMP) + INTERVAL 2 DAY
-                             END AS last_mod
-                      FROM orders)
-            ), gs AS (
-                SELECT 'RAGG_DISCPL' AS kind,
-                       lower(trim(CAST(s_suppkey AS VARCHAR))) AS left_id,
-                       lower(trim(CAST(s_nationkey AS VARCHAR))) AS right_id,
-                       {clean('s_name')} AS name,
-                       trim(n_name) AS macroarea
-                FROM supplier LEFT JOIN nation ON s_nationkey = n_nationkey
-            )
-            SELECT kind, left_id, right_id,
-                   CAST(NULL AS VARCHAR) AS id,
-                   CAST(NULL AS BOOLEAN) AS is_legal_representative,
-                   CAST(NULL AS TIMESTAMP) AS disabled_at,
-                   CAST(NULL AS TIMESTAMP) AS created_at,
-                   CAST(NULL AS TIMESTAMP) AS updated_at,
-                   CAST(NULL AS VARCHAR) AS name, CAST(NULL AS VARCHAR) AS macroarea
-            FROM base
-            UNION ALL
-            SELECT kind, left_id, right_id, id, is_legal_representative,
-                   disabled_at, created_at, updated_at,
-                   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-            FROM uc
-            UNION ALL
-            SELECT kind, left_id, right_id, CAST(NULL AS VARCHAR),
-                   CAST(NULL AS BOOLEAN), CAST(NULL AS TIMESTAMP),
-                   CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-                   name, macroarea
-            FROM gs
-        """,
-        "pipeline_taxonomies": f"""
-            WITH u AS (
-                SELECT 'REGION_TEMPL' AS kind, CAST(r_regionkey AS BIGINT) AS key,
-                       CAST(r_regionkey AS VARCHAR) AS rawid, r_name AS rawname,
-                       CAST(NULL AS BOOLEAN) AS f1, CAST(NULL AS BOOLEAN) AS f2
-                FROM region
-                UNION ALL
-                SELECT 'TIPO_TITOLARE_TEMPL', CAST(n_nationkey AS BIGINT),
-                       CAST(n_nationkey AS VARCHAR), n_name,
-                       n_nationkey % 2 = 0, n_nationkey % 5 <> 0
-                FROM nation
-                UNION ALL
-                SELECT 'RAGG_DISCPL', s_suppkey, CAST(s_suppkey AS VARCHAR), s_name,
-                       CAST(NULL AS BOOLEAN), CAST(NULL AS BOOLEAN)
-                FROM supplier
-            ),
-            a AS (
-                SELECT *,
-                       TIMESTAMP '1996-01-01 00:00:00' + INTERVAL (key % 1500) DAY AS creation,
-                       CASE WHEN key % 3 <> 0
-                            THEN TIMESTAMP '1996-01-01 00:00:00' + INTERVAL (key % 1500) DAY
-                                 + INTERVAL (key % 40) DAY END AS last_mod,
-                       CASE WHEN key % 9 = 0 THEN 'S' ELSE 'N' END AS disabled
-                FROM u
-            )
-            SELECT kind, lower(trim(rawid)) AS id, {clean('rawname')} AS name,
-                   f1 AS is_show_health_director_declaration_poa,
-                   f2 AS is_active_poa,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at
-            FROM a
-        """,
-        "pipeline_users": f"""
-            WITH utente AS (
-                SELECT o_orderkey, o_custkey AS id_anagr,
-                       'user_' || CAST(o_orderkey % 10000 AS VARCHAR) AS username_cas,
-                       ['region','amministratore','op','viewer','','guest']
-                           [CAST(o_orderkey % 6 AS INT) + 1] AS ruolo,
-                       CASE WHEN o_orderpriority <> '5-LOW' THEN o_custkey % 100 END AS id_uo,
-                       CASE WHEN o_orderkey % 4 = 0 THEN 'ORGANIGRAMMA_TREE'
-                            ELSE 'UO' END AS provenienza_uo,
-                       CASE WHEN o_orderkey % 13 = 0
-                            THEN CAST(o_orderdate AS TIMESTAMP) END AS data_disabilitato,
-                       CAST(o_orderdate AS TIMESTAMP) AS creation,
-                       CASE WHEN o_orderkey % 3 <> 0
-                            THEN CAST(o_orderdate AS TIMESTAMP) + INTERVAL 2 DAY END AS last_mod
-                FROM orders
-            ),
-            ana AS (
-                SELECT c_custkey AS id_anagr, c_name AS nome_raw, c_nationkey,
-                       CASE WHEN c_custkey % 5 <> 0 THEN lower(c_name) END AS email_raw,
-                       substring(replace(replace(c_name, '#', ''), ' ', ''), 1, 11) AS cfisc
-                FROM customer
-            ),
-            j AS (
-                SELECT u.*, a.nome_raw, a.email_raw, a.cfisc, n.n_name AS birth_place,
-                       CASE WHEN provenienza_uo = 'ORGANIGRAMMA_TREE' THEN NULL
-                            ELSE id_uo END AS id_uo_fk
-                FROM utente u
-                LEFT JOIN ana a USING (id_anagr)
-                LEFT JOIN nation n ON a.c_nationkey = n.n_nationkey
-            )
-            SELECT lower(trim(CAST(o_orderkey AS VARCHAR))) AS id,
-                   {clean('username_cas')} AS username,
-                   COALESCE({_enum_case_sql('ruolo', P.USER_ROLE_MAPPING, 'OPERATOR')},
-                            'OPERATOR') AS role,
-                   {clean('nome_raw')} AS first_name,
-                   COALESCE({clean('email_raw')}, '-') AS email,
-                   cfisc AS tax_code,
-                   birth_place,
-                   lower(trim(CAST(s_suppkey AS VARCHAR))) AS operational_unit_id,
-                   data_disabilitato AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-            FROM j LEFT JOIN supplier ON id_uo_fk = s_suppkey
-        """,
-        "pipeline_udo_specialties": """
-            WITH branca AS (
-                SELECT COALESCE(lower(trim(CASE WHEN l_quantity > 25 THEN 'S' ELSE 'N' END))
-                           IN ('s', 'y'), FALSE) AS is_authorized,
-                       COALESCE(lower(trim(CASE WHEN l_discount > 0.05 THEN 'y' ELSE 'n' END))
-                           IN ('s', 'y'), FALSE) AS is_accredited,
-                       CAST(NULL AS INTEGER) AS num_beds,
-                       CAST(NULL AS INTEGER) AS num_extra_beds,
-                       CAST(NULL AS INTEGER) AS num_mortuary_beds,
-                       CAST(NULL AS INTEGER) AS num_accredited_beds,
-                       CAST(NULL AS VARCHAR) AS hsp12,
-                       CAST(NULL AS VARCHAR) AS clinical_operational_unit_id,
-                       CAST(NULL AS VARCHAR) AS clinical_poa_node_id,
-                       lower(trim(CAST(l_partkey AS VARCHAR))) AS specialty_id,
-                       lower(trim(CAST(l_orderkey AS VARCHAR))) AS udo_id
-                FROM lineitem WHERE l_linenumber = 4
-            ),
-            branca_altro AS (
-                SELECT FALSE AS is_authorized, FALSE AS is_accredited,
-                       CAST(NULL AS INTEGER) AS num_beds,
-                       CAST(NULL AS INTEGER) AS num_extra_beds,
-                       CAST(NULL AS INTEGER) AS num_mortuary_beds,
-                       CAST(NULL AS INTEGER) AS num_accredited_beds,
-                       CAST(NULL AS VARCHAR) AS hsp12,
-                       CAST(NULL AS VARCHAR) AS clinical_operational_unit_id,
-                       CAST(NULL AS VARCHAR) AS clinical_poa_node_id,
-                       lower(trim(CAST(l_suppkey AS VARCHAR))) AS specialty_id,
-                       lower(trim(CAST(l_orderkey AS VARCHAR))) AS udo_id
-                FROM lineitem WHERE l_linenumber = 5
-            ),
-            disciplina AS (
-                SELECT FALSE AS is_authorized, FALSE AS is_accredited,
-                       CAST(round(l_quantity) AS INTEGER) AS num_beds,
-                       CAST(round(l_discount * 100) AS INTEGER) AS num_extra_beds,
-                       CAST(round(l_tax * 100) AS INTEGER) AS num_mortuary_beds,
-                       CAST(l_suppkey % 20 AS INTEGER) AS num_accredited_beds,
-                       trim(l_linestatus) AS hsp12,
-                       lower(trim(CAST(s_suppkey AS VARCHAR))) AS clinical_operational_unit_id,
-                       CAST(NULL AS VARCHAR) AS clinical_poa_node_id,
-                       lower(trim(CAST(l_partkey AS VARCHAR))) AS specialty_id,
-                       lower(trim(CAST(l_orderkey AS VARCHAR))) AS udo_id
-                FROM lineitem
-                LEFT JOIN supplier ON l_suppkey % 100 = s_suppkey
-                WHERE l_linenumber = 6 AND l_partkey % 11 <> 0
-            )
-            SELECT * FROM branca
-            UNION ALL SELECT * FROM branca_altro
-            UNION ALL SELECT * FROM disciplina
-        """,
-        "pipeline_physical_structures": f"""
-            WITH base AS (
-                SELECT c_custkey, c_name, c_nationkey,
-                       'PF' || lpad(CAST(c_custkey % 500 AS VARCHAR), 4, '0') AS code,
-                       CASE WHEN c_custkey % 3 = 0
-                            THEN 'PFS-' || CAST(c_custkey AS VARCHAR) END AS secondary_code,
-                       CASE WHEN c_acctbal > 5000
-                            THEN 'DW-' || CAST(c_custkey AS VARCHAR) END AS docway,
-                       CASE WHEN c_custkey % 5 = 0
-                            THEN 'area-' || CAST(c_custkey % 7 AS VARCHAR) END AS area,
-                       TIMESTAMP '1995-03-15 00:00:00' + INTERVAL (c_custkey % 2200) DAY AS creation,
-                       CASE WHEN c_custkey % 4 <> 0
-                            THEN TIMESTAMP '1995-03-15 00:00:00' + INTERVAL (c_custkey % 2200) DAY
-                                 + INTERVAL (c_custkey % 45) DAY END AS last_mod,
-                       CASE WHEN c_acctbal < 0 THEN 'S' ELSE 'N' END AS disabled
-                FROM customer
-            )
-            SELECT lower(trim(CAST(c_custkey AS VARCHAR))) AS id,
-                   {clean('c_name')} AS name,
-                   trim(code) AS code,
-                   secondary_code,
-                   lower(trim(CAST(c_nationkey AS VARCHAR))) AS district_id,
-                   lower(trim(CAST(c_custkey % 100 AS VARCHAR))) AS company_id,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   CASE WHEN docway IS NULL AND area IS NULL THEN '{{}}'
-                        ELSE '{{"docway_file_id": ' || COALESCE('"' || docway || '"', 'null')
-                             || ', "area_id": ' || COALESCE('"' || area || '"', 'null') || '}}'
-                   END AS extra
-            FROM base
-        """,
-        "pipeline_operational_offices": f"""
-            WITH sede AS (
-                SELECT o_orderkey, o_orderpriority,
-                       lpad(CAST(o_custkey AS VARCHAR), 6, '0') AS istat,
-                       lower(trim(CAST(o_custkey AS VARCHAR))) AS physical_structure_id,
-                       CAST(o_custkey % 25 AS INT) AS id_tipo,
-                       CAST(o_orderdate AS TIMESTAMP) AS creation,
-                       CASE WHEN o_orderkey % 5 <> 0
-                            THEN CAST(o_orderdate AS TIMESTAMP) + INTERVAL 3 DAY END AS last_mod,
-                       CASE WHEN o_orderkey % 11 = 0 THEN 'S' ELSE 'N' END AS disabled
-                FROM orders
-            ),
-            muni AS (
-                SELECT lpad(CAST(c_custkey AS VARCHAR), 6, '0') AS istat,
-                       c_custkey AS municipality_id
-                FROM customer
-            ),
-            tipo AS (
-                SELECT CAST(n_nationkey AS INT) AS id_tipo, n_name AS physical_point_type
-                FROM nation
-            )
-            SELECT lower(trim(CAST(o_orderkey AS VARCHAR))) AS id,
-                   {clean("'sede ' || lower(o_orderpriority) || ' ' || CAST(o_orderkey AS VARCHAR)")} AS name,
-                   physical_structure_id,
-                   'via ' || lower(o_orderpriority) AS street_name,
-                   CAST(o_orderkey % 200 AS VARCHAR) AS street_number,
-                   lpad(CAST(o_orderkey % 100000 AS VARCHAR), 5, '0') AS zip_code,
-                   o_orderkey % 2 = 0 AS is_main_address,
-                   physical_point_type,
-                   35.0 + CAST(o_orderkey % 1500 AS DOUBLE) / 100.0 AS lat,
-                   6.0 + CAST(o_orderkey % 1300 AS DOUBLE) / 100.0 AS lon,
-                   CASE WHEN o_orderkey % 6 <> 0
-                        THEN 'top-' || CAST(o_orderkey % 50 AS VARCHAR) END AS toponym_id,
-                   municipality_id,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-            FROM sede
-            LEFT JOIN muni USING (istat)
-            LEFT JOIN tipo USING (id_tipo)
-        """,
-        "pipeline_production_factors": f"""
-            WITH base AS (
-                SELECT l_orderkey * 10 + l_linenumber AS rid,
-                       CAST(l_partkey % 40 AS VARCHAR) AS tipo,
-                       CASE WHEN l_orderkey % 7 = 0 THEN ''
-                            WHEN l_orderkey % 7 = 1 THEN '?'
-                            WHEN l_orderkey % 7 = 2 THEN NULL
-                            ELSE CAST(CAST(round(l_quantity) AS INT) AS VARCHAR) END AS valore,
-                       CASE WHEN l_linenumber % 5 = 0 THEN ' '
-                            WHEN l_linenumber % 5 = 1 THEN NULL
-                            ELSE CAST(l_linenumber * 10 AS VARCHAR) END AS valore3,
-                       CASE WHEN l_orderkey % 9 = 0 THEN 'NUL'
-                            WHEN l_orderkey % 9 = 1 THEN 'room   ' || l_returnflag
-                            ELSE 'room ' || l_returnflag END AS valore2,
-                       CASE WHEN l_linenumber % 4 = 0 THEN 'NUL'
-                            ELSE 'rc  ' || l_linestatus END AS descr,
-                       CAST(l_shipdate AS TIMESTAMP) AS creation,
-                       CASE WHEN l_orderkey % 2 = 0
-                            THEN CAST(l_shipdate AS TIMESTAMP) + INTERVAL 7 DAY END AS last_mod,
-                       CASE WHEN l_returnflag = 'R' THEN 'S' ELSE 'N' END AS disabled
-                FROM lineitem
-            )
-            SELECT lower(trim(CAST(rid AS VARCHAR))) AS id,
-                   lower(trim(tipo)) AS production_factor_type_id,
-                   CASE WHEN valore IS NULL OR trim(valore) IN ('', '?') THEN 0
-                        ELSE CAST(trim(valore) AS INT) END AS num_beds,
-                   CASE WHEN valore3 IS NULL OR trim(valore3) IN ('', '?') THEN 0
-                        ELSE CAST(trim(valore3) AS INT) END AS num_hospital_beds,
-                   CASE WHEN replace(regexp_replace(trim(valore2), '\\s+', ' ', 'g'), chr(0), '') = 'NUL'
-                        THEN NULL
-                        ELSE replace(regexp_replace(trim(valore2), '\\s+', ' ', 'g'), chr(0), '')
-                   END AS room_name,
-                   CASE WHEN replace(regexp_replace(trim(descr), '\\s+', ' ', 'g'), chr(0), '') = 'NUL'
-                        THEN NULL
-                        ELSE replace(regexp_replace(trim(descr), '\\s+', ' ', 'g'), chr(0), '')
-                   END AS room_code,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at
-            FROM base
-        """,
-        "pipeline_udos": f"""
-            WITH fact AS (
-                SELECT o_orderkey, o_custkey AS operational_office_id,
-                       'udo ' || lower(o_orderpriority) || ' '
-                           || CAST(o_custkey AS VARCHAR) AS comment,
-                       o_orderstatus,
-                       'Clerk#' || lpad(CAST(o_orderkey % 997 AS VARCHAR), 9, '0') AS clerk,
-                       CAST(o_orderkey % 3 AS VARCHAR) AS ship_priority,
-                       o_orderpriority,
-                       CASE WHEN o_orderstatus = 'F' THEN 'y' ELSE 'n' END AS sio,
-                       o_orderkey % 2 AS auac,
-                       CASE WHEN o_orderpriority <> '5-LOW' THEN o_custkey % 100 END AS id_uo,
-                       CAST(o_orderdate AS TIMESTAMP) AS creation,
-                       CASE WHEN o_orderstatus = 'F' THEN 'S' ELSE 'N' END AS disabled,
-                       CASE WHEN o_orderkey % 3 <> 0
-                            THEN CAST(o_orderdate AS TIMESTAMP) + INTERVAL 1 DAY END AS last_mod
-                FROM orders
-            ),
-            x AS (
-                SELECT c_custkey AS operational_office_id, CAST(n_regionkey AS BIGINT) AS company_id
-                FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-            ),
-            z AS (
-                SELECT lower(trim(CAST(s_name AS VARCHAR))) AS operational_unit_id,
-                       s_suppkey AS id_uo
-                FROM supplier
-            )
-            SELECT lower(trim(CAST(o_orderkey AS VARCHAR))) AS id,
-                   {clean('comment')} AS name,
-                   COALESCE(upper(trim(o_orderstatus)), 'NUOVA') AS status,
-                   trim(clerk) AS code,
-                   CAST(f.operational_office_id AS BIGINT) AS operational_office_id,
-                   ship_priority AS floor,
-                   CASE WHEN substring(clerk, length(clerk) - 1, 2) <> '00'
-                        THEN substring(clerk, length(clerk) - 1, 2) END AS block,
-                   trim(o_orderpriority) AS ministerial_code,
-                   COALESCE(lower(trim(sio)) IN ('s','y'), FALSE) AS is_sio,
-                   auac = 1 AS is_auac,
-                   company_id,
-                   operational_unit_id,
-                   COALESCE(creation, TIMESTAMP '{now}') AS created_at,
-                   COALESCE(last_mod, creation, TIMESTAMP '{now}') AS updated_at,
-                   CASE WHEN disabled = 'S' THEN COALESCE(last_mod, creation) END AS disabled_at
-            FROM fact f
-            LEFT JOIN x ON f.operational_office_id = x.operational_office_id
-            LEFT JOIN z ON f.id_uo = z.id_uo
-        """,
-        "snapshot_diff": """
-            WITH old AS (
-                SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier
-            ), new AS (
-                SELECT s_suppkey, s_name, s_nationkey,
-                       CASE WHEN s_suppkey % 7 = 0 THEN s_acctbal + 1000.0 ELSE s_acctbal END AS s_acctbal
-                FROM supplier WHERE s_suppkey % 10 <> 0
-                UNION ALL
-                SELECT s_suppkey + 100000, s_name, s_nationkey, s_acctbal
-                FROM supplier WHERE s_suppkey % 13 = 0
-            )
-            SELECT COALESCE(o.s_suppkey, n.s_suppkey) AS s_suppkey,
-                   CASE WHEN o.s_suppkey IS NULL THEN 'inserted'
-                        WHEN n.s_suppkey IS NULL THEN 'deleted'
-                        WHEN o.s_name <> n.s_name OR o.s_nationkey <> n.s_nationkey
-                             OR o.s_acctbal <> n.s_acctbal THEN 'updated'
-                        ELSE 'unchanged' END AS change_type
-            FROM old o FULL OUTER JOIN new n ON o.s_suppkey = n.s_suppkey
-            WHERE NOT (o.s_suppkey IS NOT NULL AND n.s_suppkey IS NOT NULL
-                       AND o.s_name = n.s_name AND o.s_nationkey = n.s_nationkey
-                       AND o.s_acctbal = n.s_acctbal)
-        """,
-        "outlier_detection": """
-            WITH o AS (
-                SELECT event_id, event_type,
-                       CAST(round(value * 100) AS BIGINT) AS cents
-                FROM events
-            ), s AS (
-                SELECT event_type, COUNT(*) AS _n,
-                       CAST(SUM(cents) AS BIGINT) AS _sx,
-                       CAST(SUM(cents * cents) AS BIGINT) AS _sxx
-                FROM o GROUP BY event_type
-            ), j AS (
-                SELECT o.event_id, o.event_type, o.cents,
-                       CAST(_sx AS DOUBLE) / CAST(_n AS DOUBLE) AS mean,
-                       sqrt(greatest(CAST(_sxx AS DOUBLE) / CAST(_n AS DOUBLE)
-                                     - (CAST(_sx AS DOUBLE) / CAST(_n AS DOUBLE))
-                                       * (CAST(_sx AS DOUBLE) / CAST(_n AS DOUBLE)), 0.0)) AS std
-                FROM o JOIN s USING (event_type)
-            )
-            SELECT event_id, event_type, cents,
-                   round(CASE WHEN std > 0 THEN (CAST(cents AS DOUBLE) - mean) / std
-                              ELSE 0.0 END, 6) AS z_score
-            FROM j
-            WHERE abs(round(CASE WHEN std > 0 THEN (CAST(cents AS DOUBLE) - mean) / std
-                                 ELSE 0.0 END, 6)) > 3.0
-        """,
-        "pack_sequences": f"""
-            WITH d AS (
-                SELECT doc_id, CAST({ntoks} AS BIGINT) AS n_tokens,
-                       CAST(doc_id % 64 AS INT) AS shard
-                FROM documents
-            )
-            SELECT doc_id, n_tokens, shard,
-                   CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                       AS pack_offset,
-                   CAST(floor(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                              / 2048) AS BIGINT) AS pack_id
-            FROM d
-        """,
-        "dense_ids": """
-            SELECT c_custkey, c_name, c_nationkey,
-                   row_number() OVER (ORDER BY c_name, c_custkey) AS surrogate_id
-            FROM customer
-        """,
-        "quarantine_rows": """
-            -- NULL-safe like the Spark side: coalesce(rule, FALSE) so a rule
-            -- that cannot be evaluated quarantines the row instead of passing
-            SELECT c_custkey, c_acctbal, c_mktsegment,
-                   array_to_string(list_filter([
-                       CASE WHEN NOT coalesce(c_mktsegment IN ('BUILDING', 'AUTOMOBILE',
-                                              'MACHINERY', 'HOUSEHOLD', 'FURNITURE'), FALSE)
-                            THEN 'known_segment' END,
-                       CASE WHEN NOT coalesce(c_acctbal >= 0, FALSE) THEN 'non_negative_balance' END,
-                       CASE WHEN NOT coalesce(c_nationkey BETWEEN 0 AND 24, FALSE) THEN 'valid_nation' END
-                   ], x -> x IS NOT NULL), ',') AS quarantine_reasons
-            FROM customer
-            WHERE NOT coalesce(c_acctbal >= 0, FALSE)
-               OR NOT coalesce(c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY',
-                                                'HOUSEHOLD', 'FURNITURE'), FALSE)
-               OR NOT coalesce(c_nationkey BETWEEN 0 AND 24, FALSE)
-        """,
-        "keep_latest": """
-            SELECT user_id, event_id AS last_event_id, ts AS last_ts,
-                   event_type AS last_event_type
-            FROM (SELECT user_id, event_id, ts, event_type,
-                         row_number() OVER (PARTITION BY user_id
-                                            ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events)
-            WHERE rn = 1
-        """,
-        "sample_stratified_hash": """
-            SELECT doc_id, lang, source FROM documents
-            WHERE CASE WHEN lang = 'en'
-                       THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '3333'
-                       ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '0ccc' END
-        """,
-        "dedup_minhash_portable": _minhash_portable_sql(num_hashes=16, bands=4),
-        "dedup_simhash_portable": _simhash_portable_sql(bits=16),
-        "dedup_jaccard_portable": f"""
-            WITH {_minhash_portable_ctes()}, {_jaccard_portable_ctes(0.5)}
-            SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5
-        """,
-        "dedup_pipeline_portable": _dedup_portable_pipeline_sql(threshold=0.5),
-        "dedup_best_rep": _dedup_best_rep_sql(threshold=0.5),
-        "pagerank": _pagerank_sql(iterations=3),
-        "text_strip_accents": f"""
-            SELECT c_custkey,
-                   'Località Tùrìn é ' || c_name || ' ÀÈÌÒÙ çñ' AS raw,
-                   translate('Località Tùrìn é ' || c_name || ' ÀÈÌÒÙ çñ',
-                             '{TR.ACCENT_SRC}', '{TR.ACCENT_DST}') AS folded
-            FROM customer
-        """,
-        "bfs_hops": """
-            WITH RECURSIVE g AS (
-                SELECT DISTINCT o_custkey % 1000 AS src, o_orderkey % 1000 AS dst FROM orders
-            ), und AS (
-                SELECT src AS a, dst AS b FROM g
-                UNION
-                SELECT dst AS a, src AS b FROM g
-            ), walk(node, hops) AS (
-                SELECT CAST(1 AS BIGINT), 0
-                UNION
-                SELECT e.b, w.hops + 1
-                FROM walk w JOIN und e ON e.a = w.node
-                WHERE w.hops < 6
-            )
-            SELECT node, CAST(MIN(hops) AS INT) AS hops FROM walk GROUP BY node
-        """,
-        "triangle_count": """
-            WITH g AS (
-                SELECT DISTINCT o_custkey % 1000 AS src, o_orderkey % 1000 AS dst FROM orders
-            ), und AS (
-                SELECT src AS a, dst AS b FROM g WHERE src <> dst
-                UNION
-                SELECT dst AS a, src AS b FROM g WHERE src <> dst
-            ), e AS (
-                SELECT a, b FROM und WHERE a < b
-            )
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-            FROM e ij
-            JOIN e jk ON jk.a = ij.b
-            JOIN e ik ON ik.a = ij.a AND ik.b = jk.b
-        """,
-        "topk_with_ties": """
-            SELECT o_orderkey, o_orderpriority,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-                   CAST(rnk AS BIGINT) AS rnk
-            FROM (
-                SELECT o_orderkey, o_orderpriority, o_totalprice,
-                       rank() OVER (PARTITION BY o_orderpriority
-                                    ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC) AS rnk
-                FROM orders
-            ) WHERE rnk <= 3
-        """,
-        "iqr_report": """
-            WITH ev AS (
-                SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events
-            )
-            SELECT event_type,
-                   round(quantile_cont(cents, 0.25), 6) AS p25,
-                   round(quantile_cont(cents, 0.5), 6) AS p50,
-                   round(quantile_cont(cents, 0.75), 6) AS p75,
-                   round(quantile_cont(cents, 0.75) - quantile_cont(cents, 0.25), 6) AS iqr,
-                   round(quantile_cont(cents, 0.25)
-                         - 1.5 * (quantile_cont(cents, 0.75) - quantile_cont(cents, 0.25)), 6) AS lo_fence,
-                   round(quantile_cont(cents, 0.75)
-                         + 1.5 * (quantile_cont(cents, 0.75) - quantile_cont(cents, 0.25)), 6) AS hi_fence
-            FROM ev GROUP BY event_type
-        """,
-        "debounce_events": """
-            WITH lagged AS (
-                SELECT event_id, user_id, event_type, ts,
-                       lag(ts) OVER (PARTITION BY user_id, event_type
-                                     ORDER BY ts, event_id) AS prev_ts
-                FROM events
-            )
-            SELECT event_id, user_id, event_type, ts
-            FROM lagged
-            WHERE prev_ts IS NULL
-               OR date_diff('microsecond', prev_ts, ts) >= 1800 * 1000000
-        """,
-        "window_range_frame": """
-            WITH daily AS (
-                SELECT date_diff('day', DATE '1990-01-01', CAST(ts AS DATE)) AS day_num,
-                       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS day_cents,
-                       COUNT(*) AS n_events
-                FROM events GROUP BY 1
-            )
-            SELECT day_num, day_cents, n_events,
-                   CAST(SUM(day_cents) OVER w AS BIGINT) AS trailing7_cents,
-                   CAST(COUNT(*) OVER w AS BIGINT) AS days_present_7
-            FROM daily
-            WINDOW w AS (ORDER BY day_num RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        """,
-        "assoc_rules": """
-            WITH ut AS (
-                SELECT DISTINCT user_id, event_type AS et FROM events
-            ), nu AS (SELECT CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS n_users FROM ut),
-            item AS (SELECT et, COUNT(*) AS n_item FROM ut GROUP BY et),
-            pairs AS (
-                SELECT a.et AS et_a, b.et AS et_b, COUNT(*) AS n_pair
-                FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.et < b.et
-                GROUP BY a.et, b.et
-            )
-            SELECT p.et_a, p.et_b, p.n_pair,
-                   round(p.n_pair / nu.n_users, 6) AS support,
-                   round(p.n_pair / CAST(ia.n_item AS DOUBLE), 6) AS confidence_a_b,
-                   round(p.n_pair * nu.n_users / (ia.n_item * ib.n_item), 6) AS lift
-            FROM pairs p
-            JOIN item ia ON ia.et = p.et_a
-            JOIN item ib ON ib.et = p.et_b
-            CROSS JOIN nu
-        """,
-        "benford_digits": """
-            WITH counts AS (
-                SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit,
-                       COUNT(*) AS n
-                FROM orders GROUP BY 1
-            ), t AS (SELECT SUM(n) AS total FROM counts)
-            SELECT digit, CAST(n AS BIGINT) AS n,
-                   round(n / CAST(t.total AS DOUBLE), 6) AS share,
-                   round(log10(1 + 1.0 / digit), 6) AS benford_expected,
-                   round(n / CAST(t.total AS DOUBLE) - log10(1 + 1.0 / digit), 6) AS excess
-            FROM counts, t
-        """,
-        "chi_square": """
-            WITH ev AS (
-                SELECT event_type AS et, user_id % 3 AS cohort FROM events
-            ), cells AS (
-                SELECT et, cohort, COUNT(*) AS o FROM ev GROUP BY et, cohort
-            ), rt AS (SELECT et, COUNT(*) AS rt FROM ev GROUP BY et),
-            ct AS (SELECT cohort, COUNT(*) AS ct FROM ev GROUP BY cohort),
-            nn AS (SELECT COUNT(*) AS nn FROM ev),
-            fc AS (
-                SELECT c.et, c.cohort, c.o, rt.rt, ct.ct, nn.nn
-                FROM cells c JOIN rt USING (et) JOIN ct USING (cohort) CROSS JOIN nn
-            ), packed AS (
-                SELECT list(
-                           (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(nn AS DOUBLE))
-                           * (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(nn AS DOUBLE))
-                           / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(nn AS DOUBLE))
-                           ORDER BY et, cohort) AS terms,
-                       COUNT(DISTINCT et) AS r, COUNT(DISTINCT cohort) AS c
-                FROM fc
-            )
-            SELECT round(0.0 + list_reduce(terms, (x, y) -> x + y), 6) AS chi2,
-                   CAST((r - 1) * (c - 1) AS BIGINT) AS dof
-            FROM packed
-        """,
-        "winsorize": """
-            WITH o AS (
-                SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders
-            ), b AS (
-                SELECT round(quantile_cont(cents, 0.01), 4) AS lo,
-                       round(quantile_cont(cents, 0.99), 4) AS hi
-                FROM o
-            )
-            SELECT o.o_orderkey, o.cents,
-                   least(greatest(CAST(o.cents AS DOUBLE), b.lo), b.hi) AS clipped,
-                   CAST(o.cents AS DOUBLE) <> least(greatest(CAST(o.cents AS DOUBLE), b.lo), b.hi) AS was_clipped
-            FROM o, b
-        """,
-        "window_dist_funcs": """
-            SELECT o_orderkey, o_orderpriority,
-                   round(percent_rank() OVER w, 9) AS pct_rank,
-                   round(cume_dist() OVER w, 9) AS cume
-            FROM orders
-            WINDOW w AS (PARTITION BY o_orderpriority
-                         ORDER BY CAST(round(o_totalprice * 100) AS BIGINT), o_orderkey)
-        """,
-        "time_weighted_avg": """
-            WITH ev AS (
-                SELECT user_id, event_id, ts,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_ts
-                FROM events
-            ), spans AS (
-                SELECT user_id, cents,
-                       date_diff('microsecond', ts, next_ts) AS dur_us
-                FROM ev WHERE next_ts IS NOT NULL
-            )
-            SELECT user_id,
-                   round(CAST(SUM(CAST(cents AS HUGEINT) * dur_us) AS DOUBLE)
-                         / CAST(SUM(dur_us) AS DOUBLE), 6) AS tw_avg_cents,
-                   COUNT(*) AS n_spans
-            FROM spans GROUP BY user_id
-        """,
-        "mom_growth": """
-            WITH monthly AS (
-                SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
-                FROM orders GROUP BY 1
-            )
-            SELECT month, rev_cents,
-                   round(rev_cents / CAST(lag(rev_cents) OVER (ORDER BY month) AS DOUBLE), 6) AS growth
-            FROM monthly
-        """,
-        "event_transitions": """
-            WITH ev AS (
-                SELECT event_type AS from_type,
-                       lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-                FROM events
-            )
-            SELECT from_type, to_type, COUNT(*) AS n
-            FROM ev WHERE to_type IS NOT NULL
-            GROUP BY from_type, to_type
-        """,
-        "locf_impute": """
-            WITH ev AS (
-                SELECT event_id, user_id, ts,
-                       CASE WHEN event_id % 5 <> 0
-                            THEN CAST(round(value * 100) AS BIGINT) END AS value_cents
-                FROM events
-            )
-            SELECT event_id, user_id, value_cents,
-                   last_value(value_cents IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_cents
-            FROM ev
-        """,
-        "ratio_to_report": """
-            SELECT o_orderkey, o_orderpriority,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-                   round(CAST(round(o_totalprice * 100) AS BIGINT)
-                         / CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                                OVER (PARTITION BY o_orderpriority) AS DOUBLE), 9) AS share
-            FROM orders
-        """,
-        "mode_per_group": """
-            SELECT user_id, event_type AS mode_event_type, CAST(cnt AS BIGINT) AS mode_count
-            FROM (
-                SELECT user_id, event_type, COUNT(*) AS cnt,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY COUNT(*) DESC, event_type ASC) AS rn
-                FROM events GROUP BY user_id, event_type
-            ) WHERE rn = 1
-        """,
-        "set_operations": """
-            SELECT 'ordered' AS kind, c_custkey FROM (
-                SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-                INTERSECT
-                SELECT o_custkey FROM orders
-            )
-            UNION ALL
-            SELECT 'never' AS kind, c_custkey FROM (
-                SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-                EXCEPT
-                SELECT o_custkey FROM orders
-            )
-        """,
-        "entropy_per_user": """
-            WITH counts AS (
-                SELECT user_id, event_type, COUNT(*) AS cnt
-                FROM events GROUP BY user_id, event_type
-            ), per_user AS (
-                SELECT user_id, SUM(cnt) AS total,
-                       list(cnt ORDER BY event_type) AS cs
-                FROM counts GROUP BY user_id
-            )
-            SELECT user_id, CAST(total AS BIGINT) AS total,
-                   round(0.0 + list_reduce(list_transform(cs,
-                             c -> -(CAST(c AS DOUBLE) / CAST(total AS DOUBLE))
-                                  * log2(CAST(c AS DOUBLE) / CAST(total AS DOUBLE))),
-                         (x, y) -> x + y), 6) AS entropy
-            FROM per_user
-        """,
-        "scd2_lookup": """
-            WITH ordered AS (
-                SELECT user_id, event_id, ts, event_type AS status,
-                       lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_status,
-                       row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-                FROM events
-            ), changes AS (
-                SELECT user_id, ts AS valid_from, status FROM ordered
-                WHERE rn = 1 OR status IS DISTINCT FROM prev_status
-            )
-            SELECT e.event_id, e.user_id, e.ts, s.status AS status_asof
-            FROM events e
-            ASOF LEFT JOIN changes s
-              ON e.user_id = s.user_id AND e.ts >= s.valid_from
-        """,
-        "window_moving_median": """
-            SELECT user_id, event_id,
-                   CAST(round(value * 100) AS BIGINT) AS cents,
-                   round(quantile_cont(CAST(round(value * 100) AS BIGINT), 0.5) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS median_7
-            FROM events WHERE user_id < 100
-        """,
-        "ann_pq_topk": f"""
-            WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-            e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 0),
-            seeds AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding AS cv
-                FROM (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 16)
-            ),
-            ms AS (SELECT unnest(range(0, 16)) AS m),
-            dists AS (
-                SELECT e.vec_id, ms.m, s.code,
-                       list_reduce(list_transform(generate_series(1, 4),
-                           i -> (CAST(e.embedding[ms.m * 4 + i] AS DOUBLE) - CAST(s.cv[ms.m * 4 + i] AS DOUBLE))
-                              * (CAST(e.embedding[ms.m * 4 + i] AS DOUBLE) - CAST(s.cv[ms.m * 4 + i] AS DOUBLE))),
-                           (x, y) -> x + y) AS d
-                FROM e CROSS JOIN ms CROSS JOIN seeds s
-            ),
-            enc AS (
-                SELECT vec_id, m, code FROM (
-                    SELECT vec_id, m, code,
-                           row_number() OVER (PARTITION BY vec_id, m ORDER BY d ASC, code ASC) AS rn
-                    FROM dists) WHERE rn = 1
-            ),
-            qtab AS (
-                SELECT ms.m, s.code,
-                       list_reduce(list_transform(generate_series(1, 4),
-                           i -> CAST(q.qe[ms.m * 4 + i] AS DOUBLE) * CAST(s.cv[ms.m * 4 + i] AS DOUBLE)),
-                           (x, y) -> x + y) AS qd
-                FROM q CROSS JOIN ms CROSS JOIN seeds s
-            ),
-            scored AS (
-                SELECT enc.vec_id,
-                       list_reduce(list(qt.qd ORDER BY enc.m), (x, y) -> x + y) AS score
-                FROM enc JOIN qtab qt ON qt.m = enc.m AND qt.code = enc.code
-                GROUP BY enc.vec_id
-            ),
-            shortlist AS (
-                SELECT vec_id FROM scored
-                ORDER BY round(score, 6) DESC, vec_id LIMIT 50
-            )
-            SELECT vec_id, round({dot} / ({norm_e} * {norm_q}), 6) AS cosine
-            FROM embeddings JOIN shortlist USING (vec_id) CROSS JOIN q
-            ORDER BY cosine DESC, vec_id
-            LIMIT 10
-        """,
-        "merge_intervals": """
-            WITH iv AS (
-                SELECT user_id, ts AS iv_start,
-                       ts + (event_id % 3000) * INTERVAL 1 MINUTE AS iv_end
-                FROM events
-            ), flagged AS (
-                SELECT user_id, iv_start, iv_end,
-                       CASE WHEN iv_start > MAX(iv_end) OVER (
-                                PARTITION BY user_id ORDER BY iv_start, iv_end
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                            THEN 1 ELSE 0 END AS new_island
-                FROM iv
-            ), islands AS (
-                SELECT *, SUM(new_island) OVER (
-                           PARTITION BY user_id ORDER BY iv_start, iv_end
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-                FROM flagged
-            )
-            SELECT user_id, MIN(iv_start) AS interval_start,
-                   MAX(iv_end) AS interval_end, COUNT(*) AS n_merged
-            FROM islands GROUP BY user_id, island
-        """,
-        "salted_join_skew": """
-            SELECT l.l_orderkey, l.l_linenumber, l.l_suppkey AS s_suppkey,
-                   s.s_name, l.l_quantity
-            FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        """,
-        "grouping_sets": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(CASE WHEN l_returnflag IS NULL THEN 2 ELSE 0 END
-                        + CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END AS INT) AS gid,
-                   COUNT(*) AS n,
-                   SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_price
-            FROM lineitem
-            GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """,
-        "histogram_equidepth": f"""
-            WITH c AS (
-                SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders
-            ), b AS (
-                SELECT list_transform(
-                           quantile_cont(cents, [{', '.join(str(i / 10) for i in range(1, 10))}]),
-                           e -> round(e, 4)) AS bounds
-                FROM c
-            )
-            SELECT CAST(len(list_filter(b.bounds, e -> CAST(c.cents AS DOUBLE) > e)) AS INT) AS bin,
-                   COUNT(*) AS n_rows, MIN(c.cents) AS lo_cents, MAX(c.cents) AS hi_cents,
-                   CAST(SUM(c.cents) AS DOUBLE) / 100.0 AS total_value
-            FROM c, b
-            GROUP BY 1
-        """,
-        "robust_zscore": """
-            WITH ev AS (
-                SELECT event_id, event_type,
-                       CAST(round(value * 100) AS BIGINT) AS cents
-                FROM events
-            ), med AS (
-                SELECT event_type, quantile_cont(cents, 0.5) AS m
-                FROM ev GROUP BY event_type
-            ), mad AS (
-                SELECT e.event_type,
-                       quantile_cont(abs(CAST(e.cents AS DOUBLE) - med.m), 0.5) AS mad,
-                       avg(abs(CAST(e.cents AS DOUBLE) - med.m)) AS meanad
-                FROM ev e JOIN med USING (event_type)
-                GROUP BY e.event_type
-            ), scored AS (
-                SELECT e.event_type, e.event_id, e.cents,
-                       round(CASE WHEN mad.mad > 0
-                                  THEN 0.6745 * (CAST(e.cents AS DOUBLE) - med.m) / mad.mad
-                                  WHEN mad.meanad > 0
-                                  THEN 0.7979 * (CAST(e.cents AS DOUBLE) - med.m) / mad.meanad
-                                  ELSE 0.0 END, 6) AS robust_z
-                FROM ev e JOIN med USING (event_type) JOIN mad USING (event_type)
-            )
-            SELECT event_type, event_id, cents, robust_z
-            FROM scored WHERE abs(robust_z) > 3.5
-        """,
-        "window_running_distinct": """
-            SELECT user_id, event_id,
-                   CAST(COUNT(DISTINCT event_type) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS n_types_seen
-            FROM events WHERE user_id < 100
-        """,
-        "ols_per_group": """
-            WITH s AS (
-                SELECT l_returnflag, COUNT(*) AS n,
-                       CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-                       CAST(SUM(x * y) AS DOUBLE) AS sxy,
-                       CAST(SUM(x * x) AS DOUBLE) AS sxx,
-                       CAST(SUM(y * y) AS DOUBLE) AS syy
-                FROM (SELECT l_returnflag,
-                             CAST(round(l_quantity * 100) AS BIGINT) AS x,
-                             CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-                      FROM lineitem)
-                GROUP BY l_returnflag
-            )
-            SELECT l_returnflag, n,
-                   round((CAST(n AS DOUBLE) * sxy - sx * sy)
-                         / (CAST(n AS DOUBLE) * sxx - sx * sx), 6) AS ols_slope,
-                   round((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy)
-                                / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
-                         / CAST(n AS DOUBLE), 4) AS ols_intercept,
-                   round(((CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy))
-                         / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-                            * (CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS r2
-            FROM s
-        """,
-        "or_join": """
-            WITH cust AS (
-                SELECT c_custkey, c_nationkey AS l_nat, c_custkey % 30 AS l_code
-                FROM customer
-            ), supp AS (
-                SELECT s_suppkey, s_nationkey AS r_nat, s_suppkey % 30 AS r_code
-                FROM supplier
-            )
-            SELECT l_nat, COUNT(*) AS n_pairs,
-                   CAST(COUNT(DISTINCT s_suppkey) AS BIGINT) AS n_suppliers
-            FROM cust JOIN supp ON l_nat = r_nat OR l_code = r_code
-            GROUP BY l_nat
-        """,
-        "json_flatten": """
-            SELECT o_orderkey,
-                   CAST(s.slot AS INTEGER) AS slot, CAST(s.amt AS INTEGER) AS amt
-            FROM (
-                SELECT o_orderkey,
-                       unnest([struct_pack(slot := 1, amt := o_orderkey % 100),
-                               struct_pack(slot := 2, amt := (o_orderkey * 7) % 100)]) AS s
-                FROM orders
-            )
-        """,
-        "bitmap_distinct": """
-            SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS n_distinct
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "golden_record": """
-            WITH src AS (
-                SELECT o_custkey AS key,
-                       CASE o_orderpriority
-                            WHEN '1-URGENT' THEN 3
-                            WHEN '2-HIGH' THEN 2
-                            WHEN '3-MEDIUM' THEN 1
-                            ELSE -1 END AS pri,
-                       o_orderdate AS ts,
-                       CASE WHEN o_orderkey % 3 <> 0
-                            THEN o_orderstatus END AS v_status,
-                       CASE WHEN o_orderkey % 5 <> 0
-                            THEN CAST(round(o_totalprice * 100) AS BIGINT)
-                            END AS v_price
-                FROM orders
-            )
-            SELECT key,
-                   first(v_status ORDER BY pri DESC, ts DESC, v_status DESC)
-                       FILTER (WHERE v_status IS NOT NULL) AS v_status,
-                   first(v_price ORDER BY pri DESC, ts DESC, v_price DESC)
-                       FILTER (WHERE v_price IS NOT NULL) AS v_price
-            FROM src GROUP BY key
-        """,
-        "allocate_budget": """
-            WITH w AS (
-                SELECT o_orderpriority, o_orderkey,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS weight
-                FROM orders
-            ), t AS (
-                SELECT *, CAST(SUM(weight) OVER (PARTITION BY o_orderpriority)
-                               AS BIGINT) AS tot
-                FROM w
-            ), s AS (
-                SELECT o_orderpriority, o_orderkey, weight,
-                       (1000000 * weight) // tot AS fl,
-                       (1000000 * weight) % tot AS rem
-                FROM t
-            ), r AS (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                              ORDER BY rem DESC, o_orderkey) AS rk,
-                       CAST(SUM(fl) OVER (PARTITION BY o_orderpriority)
-                            AS BIGINT) AS sfl
-                FROM s
-            )
-            SELECT o_orderpriority, o_orderkey, weight,
-                   CAST(fl + CASE WHEN rk <= 1000000 - sfl THEN 1 ELSE 0 END
-                        AS BIGINT) AS share
-            FROM r
-        """,
-        "k_anonymity": """
-            SELECT c_nationkey, c_mktsegment,
-                   COUNT(*) AS class_size,
-                   COUNT(*) >= 5 AS is_k_anonymous
-            FROM customer GROUP BY c_nationkey, c_mktsegment
-        """,
-        "weighted_median": """
-            WITH s AS (
-                SELECT l_returnflag,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
-                       CAST(l_quantity AS BIGINT) AS w
-                FROM lineitem
-            ), c AS (
-                SELECT l_returnflag, v,
-                       CAST(SUM(w) OVER (PARTITION BY l_returnflag ORDER BY v
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                            AS BIGINT) AS cum,
-                       CAST(SUM(w) OVER (PARTITION BY l_returnflag)
-                            AS BIGINT) AS tot
-                FROM s
-            )
-            SELECT l_returnflag, MIN(v) AS weighted_median
-            FROM c WHERE cum * 2 >= tot GROUP BY l_returnflag
-        """,
-        "gini_concentration": """
-            WITH s AS (
-                SELECT o_orderpriority,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS x,
-                       ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                          ORDER BY round(o_totalprice * 100))
-                           AS i
-                FROM orders
-            ), a AS (
-                SELECT o_orderpriority,
-                       COUNT(*) AS n, SUM(i * x) AS six, SUM(x) AS sx
-                FROM s GROUP BY o_orderpriority
-            )
-            SELECT o_orderpriority,
-                   ROUND(CAST(2 * six - (n + 1) * sx AS DOUBLE)
-                         / CAST(n * sx AS DOUBLE), 9) AS gini
-            FROM a
-        """,
-        "rolling_corr": """
-            WITH s AS (
-                SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-                       CAST(l_quantity AS BIGINT) AS x,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-                FROM lineitem
-            ), w AS (
-                SELECT l_suppkey, l_orderkey, l_linenumber,
-                       CAST(COUNT(*) OVER fr AS BIGINT) AS n,
-                       CAST(SUM(x) OVER fr AS BIGINT) AS sx,
-                       CAST(SUM(y) OVER fr AS BIGINT) AS sy,
-                       CAST(SUM(x * y) OVER fr AS BIGINT) AS sxy,
-                       CAST(SUM(x * x) OVER fr AS BIGINT) AS sxx,
-                       CAST(SUM(y * y) OVER fr AS BIGINT) AS syy
-                FROM s
-                WINDOW fr AS (PARTITION BY l_suppkey
-                              ORDER BY l_shipdate, l_orderkey, l_linenumber, x, y
-                              ROWS BETWEEN 29 PRECEDING AND CURRENT ROW)
-            )
-            SELECT l_suppkey, l_orderkey, l_linenumber,
-                   CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-                        THEN ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
-                             / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                                * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-                             + 0.0
-                   END AS rolling_corr
-            FROM w
-        """,
-        "cusum_drift": """
-            WITH s AS (
-                SELECT user_id, ts, event_id,
-                       CAST(round(value * 100) AS BIGINT) AS x
-                FROM events
-            ), w AS (
-                SELECT user_id,
-                       CAST(SUM(x) OVER cum AS BIGINT) AS pk,
-                       CAST(COUNT(*) OVER cum AS BIGINT) AS k,
-                       CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-                       CAST(SUM(x) OVER (PARTITION BY user_id) AS BIGINT) AS s
-                FROM s
-                WINDOW cum AS (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            ), c AS (
-                SELECT user_id, n, n * pk - k * s AS numer FROM w
-            )
-            SELECT user_id, MAX(n) AS n,
-                   MAX(abs(numer)) AS max_abs_cusum_numer,
-                   CAST(SUM(CASE WHEN abs(numer) > 500 * n THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_crossings
-            FROM c GROUP BY user_id
-        """,
-        "url_canonical_dedup": """
-            WITH u AS (
-                SELECT doc_id,
-                    'HTTP://WWW.Site' || CAST(doc_id % 37 AS VARCHAR) || '.COM'
-                    || CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE '' END
-                    || '/Articles/' || CAST(doc_id % 97 AS VARCHAR)
-                    || CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END
-                    || CASE WHEN doc_id % 4 = 0
-                            THEN '?utm_source=feed&ref=' || CAST(doc_id % 5 AS VARCHAR)
-                            WHEN doc_id % 4 = 1
-                            THEN '?ref=' || CAST(doc_id % 5 AS VARCHAR)
-                            ELSE '' END
-                    || CASE WHEN doc_id % 6 = 0 THEN '#sec' ELSE '' END AS url
-                FROM documents
-            ), nf AS (
-                SELECT doc_id, regexp_replace(url, '#.*$', '') AS u FROM u
-            ), parts AS (
-                SELECT doc_id,
-                    lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                    lower(regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?]*)', 1)) AS rawhost,
-                    regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?]*(.*)$', 1) AS pathq
-                FROM nf
-            ), hosts AS (
-                SELECT doc_id, scheme, pathq,
-                    -- scheme-conditional default-port strip (matches operator)
-                    CASE WHEN scheme = 'http'
-                         THEN regexp_replace(regexp_replace(rawhost, '^www\\.', ''), ':80$', '')
-                         WHEN scheme = 'https'
-                         THEN regexp_replace(regexp_replace(rawhost, '^www\\.', ''), ':443$', '')
-                         ELSE regexp_replace(rawhost, '^www\\.', '') END AS host
-                FROM parts
-            ), pq AS (
-                SELECT doc_id, scheme, host,
-                    CASE WHEN regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$', '') = ''
-                         THEN '/'
-                         ELSE regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$', '')
-                    END AS path,
-                    regexp_replace(regexp_replace(
-                        '&' || regexp_extract(pathq, '\\?(.*)$', 1),
-                        '&utm_[^&]*', '', 'g'), '^&', '') AS query
-                FROM hosts
-            ), canon AS (
-                SELECT doc_id, host AS domain,
-                    scheme || '://' || host || path
-                    || CASE WHEN query <> '' THEN '?' || query ELSE '' END AS canon_url
-                FROM pq
-            )
-            SELECT domain, COUNT(*) AS n_urls,
-                   COUNT(DISTINCT canon_url) AS n_canonical
-            FROM canon GROUP BY domain
-        """,
-        "readability": """
-            WITH c AS (
-                SELECT doc_id,
-                       CAST(len(regexp_extract_all(text, '[A-Za-z]+')) AS INT) AS n_words,
-                       CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS INT) AS n_sentences,
-                       CAST(len(regexp_extract_all(text, '[AEIOUYaeiouy]+')) AS INT) AS n_syllables
-                FROM documents
-            )
-            SELECT doc_id, n_words, n_sentences, n_syllables,
-                   CASE WHEN n_words > 0 THEN
-                       ROUND(206.835
-                             - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-                             - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6)
-                   END AS flesch
-            FROM c
-        """,
-        "negative_sampling": """
-            WITH n AS (SELECT COUNT(*) AS cnt FROM documents),
-            a AS (
-                SELECT d.doc_id AS anchor_id, i.neg_i, n.cnt
-                FROM documents d, n, (SELECT unnest([0, 1, 2]) AS neg_i) i
-            ), h AS (
-                SELECT anchor_id, neg_i, cnt,
-                       md5(CAST(anchor_id AS VARCHAR) || '#' || CAST(neg_i AS VARCHAR)) AS hh
-                FROM a
-            ), dr AS (
-                SELECT anchor_id, neg_i, cnt,
-                       CAST(((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096
-                           + (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256
-                           + (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16
-                           + (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % cnt
-                            AS BIGINT) AS draw
-                FROM h
-            ), p AS (
-                SELECT anchor_id, neg_i,
-                       CASE WHEN draw = anchor_id THEN (draw + 1) % cnt
-                            ELSE draw END AS negative_id
-                FROM dr
-            )
-            SELECT p.anchor_id, CAST(p.neg_i AS INT) AS neg_i, p.negative_id,
-                   d2.source AS neg_source
-            FROM p JOIN documents d2 ON d2.doc_id = p.negative_id
-        """,
-        "score_calibration": """
-            SELECT doc_id, source, n_chars,
-                   ROUND(percent_rank() OVER (PARTITION BY source ORDER BY n_chars), 9)
-                       AS calibrated
-            FROM documents
-        """,
-        "session_paths": """
-            WITH o AS (
-                SELECT user_id, ts, event_id, event_type,
-                       lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-                FROM events
-            ), s AS (
-                SELECT *, SUM(CASE WHEN prev IS NULL
-                                     OR date_diff('microsecond', prev, ts) > 1800000000
-                                   THEN 1 ELSE 0 END)
-                           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-                FROM o
-            ), t AS (
-                SELECT event_type AS e1,
-                       lead(event_type, 1) OVER w2 AS e2,
-                       lead(event_type, 2) OVER w2 AS e3
-                FROM s
-                WINDOW w2 AS (PARTITION BY user_id, sess ORDER BY ts, event_id)
-            )
-            SELECT e1 || '>' || e2 || '>' || e3 AS path,
-                   COUNT(*) AS n_sessions_through
-            FROM t WHERE e3 IS NOT NULL GROUP BY 1
-        """,
-        "sorted_neighborhood": """
-            WITH r AS (
-                SELECT c_custkey AS id,
-                       ROW_NUMBER() OVER (ORDER BY CAST(round(c_acctbal * 100)
-                                          AS BIGINT), c_custkey) AS rn
-                FROM customer
-            )
-            SELECT a.id AS id_a, b.id AS id_b,
-                   CAST(b.rn - a.rn AS INT) AS neighbor_distance
-            FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3
-        """,
-        "linkage_classify": """
-            WITH c AS (
-                SELECT c_custkey, c_nationkey, c_mktsegment,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
-                       c_custkey % 100 AS blk
-                FROM customer
-            ), p AS (
-                SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                       (CASE WHEN a.c_nationkey = b.c_nationkey THEN 2 ELSE -1 END
-                      + CASE WHEN a.c_mktsegment = b.c_mktsegment THEN 1 ELSE -1 END
-                      + CASE WHEN abs(a.cents - b.cents) <= 50000 THEN 2 ELSE -2 END)
-                           AS score
-                FROM c a JOIN c b ON a.blk = b.blk AND a.c_custkey < b.c_custkey
-            )
-            SELECT id_a, id_b, score,
-                   CASE WHEN score >= 4 THEN 'match' ELSE 'possible' END AS tier
-            FROM p WHERE score >= 1
-        """,
-        "interval_overlap": """
-            WITH ev AS (
-                SELECT event_id, epoch_us(ts) AS s,
-                       epoch_us(ts)
-                       + (CAST(round(value * 100) AS BIGINT) % 600 + 1) * 1000000 AS e
-                FROM events
-            )
-            SELECT a.event_id AS id_a, b.event_id AS id_b,
-                   least(a.e, b.e) - greatest(a.s, b.s) AS overlap
-            FROM ev a JOIN ev b
-              ON a.event_id % 2 = 0 AND b.event_id % 2 = 1
-             AND a.s <= b.e AND b.s <= a.e
-        """,
-        "bootstrap_ci": """
-            WITH ev AS (
-                SELECT event_type, event_id,
-                       CAST(round(value * 100) AS BIGINT) AS x
-                FROM events
-            ), reps AS (
-                SELECT event_type, event_id, x, CAST(r.range AS INT) AS b
-                FROM ev, range(0, 50) r
-            ), hashed AS (
-                SELECT event_type, x, b,
-                       md5(CAST(event_id AS VARCHAR) || '#' || CAST(b AS VARCHAR)) AS h
-                FROM reps
-            ), drawn AS (
-                SELECT event_type, x, b,
-                       ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-                      + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-                      + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) AS d
-                FROM hashed
-            ), cnt AS (
-                SELECT event_type, b, x,
-                       CASE WHEN d < 24109 THEN 0 WHEN d < 48218 THEN 1
-                            WHEN d < 60273 THEN 2 WHEN d < 64291 THEN 3
-                            WHEN d < 65296 THEN 4 WHEN d < 65497 THEN 5
-                            WHEN d < 65530 THEN 6 ELSE 7 END AS c
-                FROM drawn
-            ), rm AS (
-                SELECT event_type, b,
-                       round(CAST(SUM(x * c) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6)
-                           AS mean_b
-                FROM cnt GROUP BY event_type, b
-            ), ci AS (
-                SELECT event_type,
-                       round(quantile_cont(mean_b, 0.05), 6) AS ci_lo,
-                       round(quantile_cont(mean_b, 0.95), 6) AS ci_hi
-                FROM rm GROUP BY event_type
-            ), pt AS (
-                SELECT event_type,
-                       round(CAST(SUM(x) AS DOUBLE) / COUNT(*), 6) AS point_mean
-                FROM ev GROUP BY event_type
-            )
-            SELECT pt.event_type, point_mean, ci_lo, ci_hi
-            FROM pt JOIN ci USING (event_type)
-        """,
-        "keyness_top_terms": """
-            WITH tk AS (
-                SELECT source, term FROM (
-                    SELECT source,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), st AS (
-                SELECT source, term, COUNT(*) AS a FROM tk GROUP BY 1, 2
-            ), tt AS (
-                SELECT term, CAST(SUM(a) AS BIGINT) AS n_term FROM st GROUP BY 1
-            ), srct AS (
-                SELECT source, CAST(SUM(a) AS BIGINT) AS n_src FROM st GROUP BY 1
-            ), tot AS (
-                SELECT CAST(SUM(a) AS BIGINT) AS n_total FROM st
-            ), scored AS (
-                SELECT st.source, st.term,
-                       a * (n_total - n_term - n_src + a)
-                       - (n_term - a) * (n_src - a) AS diff,
-                       round(
-                           CAST(CAST(n_total AS HUGEINT)
-                                * CAST(a * (n_total - n_term - n_src + a)
-                                       - (n_term - a) * (n_src - a) AS HUGEINT)
-                                * CAST(a * (n_total - n_term - n_src + a)
-                                       - (n_term - a) * (n_src - a) AS HUGEINT)
-                                AS DOUBLE)
-                           / CAST(CAST(n_term AS HUGEINT)
-                                  * CAST(n_total - n_term AS HUGEINT)
-                                  * CAST(n_src AS HUGEINT)
-                                  * CAST(n_total - n_src AS HUGEINT) AS DOUBLE),
-                           6) AS chi2
-                FROM st JOIN tt USING (term) JOIN srct USING (source) CROSS JOIN tot
-            ), ranked AS (
-                SELECT source, term, chi2,
-                       CAST(ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY chi2 DESC, term ASC) AS INT) AS rank
-                FROM scored WHERE diff > 0
-            )
-            SELECT source, rank, term, chi2 FROM ranked WHERE rank <= 10
-        """,
-        "id_gap_report": """
-            WITH ids AS (
-                SELECT DISTINCT o_orderkey AS id FROM orders
-                WHERE o_orderkey % 7 <> 3
-            ), l AS (
-                SELECT id, lead(id) OVER (ORDER BY id) AS nxt FROM ids
-            )
-            SELECT id + 1 AS gap_start, nxt - 1 AS gap_end,
-                   nxt - 1 - id AS gap_width
-            FROM l WHERE nxt > id + 1
-        """,
-        "keyword_tagging": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                FROM documents
-            ), kw(term, tag) AS (
-                VALUES ('join', 'relational'), ('sort', 'relational'),
-                       ('hash', 'relational'), ('scan', 'io'),
-                       ('stream', 'streaming'), ('window', 'analytics')
-            )
-            SELECT DISTINCT t.doc_id, k.tag FROM toks t JOIN kw k USING (term)
-        """,
-        "cuped_adjustment": """
-            WITH ev AS (
-                SELECT user_id, ts, CAST(round(value * 100) AS BIGINT) AS cents
-                FROM events
-            ), pu AS (
-                SELECT user_id,
-                       CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-15'
-                                     THEN cents ELSE 0 END) AS BIGINT) AS x,
-                       CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-01-15'
-                                     THEN cents ELSE 0 END) AS BIGINT) AS y
-                FROM ev GROUP BY user_id
-            ), u AS (
-                SELECT x, y, CAST(user_id % 2 AS INT) AS variant FROM pu
-            ), pooled AS (
-                SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(x) AS HUGEINT) AS sx,
-                       CAST(SUM(y) AS HUGEINT) AS sy,
-                       CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-                       CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-                FROM u
-            ), sc AS (
-                SELECT CAST(n * sxy - sx * sy AS DOUBLE)
-                       / CAST(n * sxx - sx * sx AS DOUBLE) AS theta,
-                       CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS xbar
-                FROM pooled
-            ), pv AS (
-                SELECT variant, COUNT(*) AS n_units,
-                       CAST(SUM(y) AS BIGINT) AS vy,
-                       CAST(SUM(x) AS BIGINT) AS vx
-                FROM u GROUP BY variant
-            )
-            SELECT variant, n_units,
-                   round(CAST(vy AS DOUBLE) / CAST(n_units AS DOUBLE), 6)
-                       AS mean_raw,
-                   round((CAST(vy AS DOUBLE)
-                          - theta * (CAST(vx AS DOUBLE)
-                                     - CAST(n_units AS DOUBLE) * xbar))
-                         / CAST(n_units AS DOUBLE), 6) AS mean_adjusted
-            FROM pv, sc
-        """,
-        "mdm_golden_pipeline": """
-            WITH RECURSIVE c AS (
-                SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
-                       c_custkey % 100 AS blk
-                FROM customer
-            ), pr AS (
-                SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                       (CASE WHEN a.c_nationkey = b.c_nationkey THEN 2 ELSE -1 END
-                      + CASE WHEN a.c_mktsegment = b.c_mktsegment THEN 1 ELSE -1 END
-                      + CASE WHEN abs(a.cents - b.cents) <= 10000 THEN 2 ELSE -2 END)
-                           AS score
-                FROM c a JOIN c b ON a.blk = b.blk AND a.c_custkey < b.c_custkey
-            ), m AS (
-                SELECT id_a, id_b FROM pr WHERE score >= 4
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM m
-                UNION
-                SELECT id_b, id_a FROM m
-            ), walk(node, reach) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach
-            ), labels AS (
-                SELECT node, MIN(reach) AS label FROM walk GROUP BY node
-            ), lab AS (
-                SELECT c.*, COALESCE(l.label, c.c_custkey) AS cluster
-                FROM c LEFT JOIN labels l ON l.node = c.c_custkey
-            ), pri AS (
-                SELECT *, CASE c_mktsegment WHEN 'BUILDING' THEN 3
-                               WHEN 'AUTOMOBILE' THEN 2
-                               WHEN 'MACHINERY' THEN 1 ELSE -1 END AS p
-                FROM lab
-            )
-            SELECT cluster, COUNT(*) AS n_members,
-                   first(c_name ORDER BY p DESC, c_custkey DESC, c_name DESC)
-                       FILTER (WHERE c_name IS NOT NULL) AS c_name,
-                   first(cents ORDER BY p DESC, c_custkey DESC, cents DESC)
-                       FILTER (WHERE cents IS NOT NULL) AS cents
-            FROM pri GROUP BY cluster
-        """,
-        "time_in_state": """
-            WITH o AS (
-                SELECT user_id, event_type, ts,
-                       lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                           AS nxt
-                FROM events
-            )
-            SELECT user_id, event_type,
-                   CAST(SUM(epoch_us(nxt) - epoch_us(ts)) AS BIGINT) AS total_us,
-                   COUNT(*) AS n_intervals
-            FROM o WHERE nxt IS NOT NULL
-            GROUP BY user_id, event_type
-        """,
-        "share_of_parent": """
-            WITH rev AS (
-                SELECT n.n_regionkey AS regionkey, n.n_name AS nation,
-                       CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS nation_cents
-                FROM customer c
-                JOIN orders o ON c.c_custkey = o.o_custkey
-                JOIN nation n ON c.c_nationkey = n.n_nationkey
-                GROUP BY 1, 2
-            ), w AS (
-                SELECT *,
-                       CAST(SUM(nation_cents) OVER (PARTITION BY regionkey)
-                            AS BIGINT) AS region_cents,
-                       CAST(SUM(nation_cents) OVER () AS BIGINT) AS total_cents
-                FROM rev
-            )
-            SELECT regionkey, nation, nation_cents,
-                   round(CAST(nation_cents AS DOUBLE) / CAST(region_cents AS DOUBLE), 9)
-                       AS share_of_region,
-                   round(CAST(region_cents AS DOUBLE) / CAST(total_cents AS DOUBLE), 9)
-                       AS region_share_of_total
-            FROM w
-        """,
-        "bom_explosion": """
-            WITH RECURSIVE e AS (
-                SELECT p_partkey AS child, p_partkey // 10 AS parent,
-                       p_partkey % 5 + 1 AS qty
-                FROM part WHERE p_partkey >= 10
-            ), roots AS (
-                -- roots inlined as a subquery and the walk runs TOP-DOWN:
-                -- a separate chained CTE inside WITH RECURSIVE
-                -- triple-evaluates the anchor in DuckDB 1.0 (the
-                -- hierarchy_paths lesson)
-                SELECT node
-                FROM (SELECT child AS node FROM e UNION SELECT parent FROM e) n
-                WHERE node NOT IN (SELECT child FROM e)
-            ), walk(node, root, units) AS (
-                SELECT node, node, CAST(1 AS BIGINT) FROM roots
-                UNION ALL
-                SELECT e.child, w.root, w.units * e.qty
-                FROM e JOIN walk w ON e.parent = w.node
-            )
-            SELECT w.root, COUNT(*) AS n_nodes,
-                   CAST(SUM(w.units * CAST(round(p.p_retailprice * 100) AS BIGINT))
-                        AS BIGINT) AS total_cost_cents
-            FROM walk w JOIN part p ON p.p_partkey = w.node
-            GROUP BY w.root
-        """,
-        "pseudonymize_events": """
-            SELECT substr(md5('s3cret:' || CAST(user_id AS VARCHAR)), 1, 16)
-                       AS user_token,
-                   COUNT(*) AS n_events
-            FROM events GROUP BY 1
-        """,
-        "decline_streaks": """
-            WITH daily AS (
-                SELECT user_id, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                           AS cents
-                FROM events GROUP BY 1, 2
-            ), flagged AS (
-                SELECT user_id, day, cents,
-                       CASE WHEN cents - lag(cents) OVER w < 0 THEN 1 ELSE 0 END
-                           AS declining
-                FROM daily
-                WINDOW w AS (PARTITION BY user_id ORDER BY day)
-            ), grouped AS (
-                SELECT *, SUM(CASE WHEN declining = 0 THEN 1 ELSE 0 END)
-                           OVER (PARTITION BY user_id ORDER BY day
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS grp
-                FROM flagged
-            ), streaks AS (
-                SELECT user_id, CAST(MAX(len) AS BIGINT) AS longest FROM (
-                    SELECT user_id, grp, COUNT(*) AS len
-                    FROM grouped WHERE declining = 1 GROUP BY user_id, grp
-                ) GROUP BY user_id
-            )
-            SELECT d.user_id,
-                   COALESCE(s.longest, 0) AS longest_decline_streak
-            FROM (SELECT DISTINCT user_id FROM daily) d
-            LEFT JOIN streaks s ON s.user_id = d.user_id
-        """,
-        "priority_sample_grouped": """
-            WITH drawn AS (
-                SELECT doc_id, source, n_chars,
-                       round(CAST(n_chars AS DOUBLE) /
-                             (CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) + 1 AS DOUBLE)
-                              / 4294967296.0), 6) AS priority
-                FROM documents
-            ), ranked AS (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY source
-                              ORDER BY priority DESC, doc_id ASC) AS rn
-                FROM drawn
-            )
-            SELECT doc_id, source, n_chars, priority
-            FROM ranked WHERE rn <= 5
-        """,
-        "waterfall_join": """
-            WITH incoming AS (
-                SELECT c_custkey AS in_id,
-                       CASE WHEN c_custkey % 3 = 0 THEN c_custkey ELSE -1 END AS key_dirty,
-                       CASE WHEN c_custkey % 3 <> 2 THEN c_name
-                            ELSE 'zzz-' || CAST(c_custkey AS VARCHAR) END AS name_dirty
-                FROM customer
-            ), t1 AS (
-                SELECT i.in_id, MIN(c.c_custkey) AS matched_id, 'exact' AS match_tier
-                FROM incoming i JOIN customer c ON i.key_dirty = c.c_custkey
-                GROUP BY i.in_id
-            ), t2 AS (
-                SELECT i.in_id, MIN(c.c_custkey) AS matched_id, 'by_name' AS match_tier
-                FROM incoming i JOIN customer c ON i.name_dirty = c.c_name
-                WHERE NOT EXISTS (SELECT 1 FROM t1 WHERE t1.in_id = i.in_id)
-                GROUP BY i.in_id
-            ), matched AS (
-                SELECT * FROM t1 UNION ALL SELECT * FROM t2
-            )
-            SELECT i.in_id, m.matched_id, m.match_tier
-            FROM incoming i LEFT JOIN matched m ON m.in_id = i.in_id
-        """,
-        "interval_integrity": """
-            WITH iv AS (
-                SELECT o_custkey, epoch_us(o_orderdate) AS s,
-                       epoch_us(o_orderdate)
-                       + (CAST(round(o_totalprice * 100) AS BIGINT) % 30 + 1)
-                         * 86400000000 AS e
-                FROM orders
-            ), w AS (
-                SELECT o_custkey, s, e,
-                       lead(s) OVER (PARTITION BY o_custkey ORDER BY s, e)
-                           AS next_start
-                FROM iv
-            )
-            SELECT o_custkey, s, e, next_start,
-                   CASE WHEN next_start < e THEN 'overlap'
-                        WHEN next_start > e THEN 'gap' END AS issue
-            FROM w
-            WHERE next_start IS NOT NULL AND next_start <> e
-        """,
-        "session_quality_report": """
-            WITH o AS (
-                SELECT user_id, ts, event_id,
-                       lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-                FROM events
-            ), s AS (
-                SELECT *, SUM(CASE WHEN prev IS NULL
-                                     OR date_diff('microsecond', prev, ts) > 1800000000
-                                   THEN 1 ELSE 0 END)
-                           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-                FROM o
-            ), per_session AS (
-                SELECT user_id, sess, MIN(ts) AS start_ts, COUNT(*) AS n_events,
-                       epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS dur_us
-                FROM s GROUP BY user_id, sess
-            )
-            SELECT CAST(date_trunc('day', start_ts) AS TIMESTAMP) AS day,
-                   COUNT(*) AS n_sessions,
-                   CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_bounces,
-                   quantile_cont(dur_us, 0.5) AS median_duration_us
-            FROM per_session GROUP BY 1
-        """,
-        "phrase_search": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(list_transform(
-                           string_split_regex(trim(lower(text)), '\\s+'),
-                           (t, i) -> struct_pack(pos := i - 1, term := t))) AS s
-                FROM documents
-            ), t AS (
-                SELECT doc_id, s.pos AS pos, s.term AS term
-                FROM toks WHERE s.term <> ''
-            )
-            SELECT a.doc_id, COUNT(*) AS n_occurrences
-            FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-            WHERE a.term = 'hash' AND b.term = 'join'
-            GROUP BY a.doc_id
-        """,
-        "table_checksum": """
-            WITH canon AS (
-                SELECT md5(
-                    CAST(o_orderkey AS VARCHAR) || chr(31)
-                    || CAST(o_custkey AS VARCHAR) || chr(31)
-                    || COALESCE(o_orderstatus, chr(0) || 'NULL') || chr(31)
-                    || CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)
-                    || chr(31)
-                    || COALESCE(o_orderpriority, chr(0) || 'NULL')
-                ) AS h
-                FROM orders
-            ), v AS (
-                SELECT ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 17592186044416
-                      + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 1099511627776
-                      + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 68719476736
-                      + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 4294967296
-                      + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 268435456
-                      + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1) * 16777216
-                      + (strpos('0123456789abcdef', substr(h, 7, 1)) - 1) * 1048576
-                      + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1) * 65536
-                      + (strpos('0123456789abcdef', substr(h, 9, 1)) - 1) * 4096
-                      + (strpos('0123456789abcdef', substr(h, 10, 1)) - 1) * 256
-                      + (strpos('0123456789abcdef', substr(h, 11, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(h, 12, 1)) - 1)) AS x
-                FROM canon
-            )
-            SELECT COUNT(*) AS n_rows,
-                   -- VARCHAR not HUGEINT/DECIMAL: duckdb renders both as a
-                   -- LOSSY float64 in pandas while Spark's decimal(38,0) is
-                   -- exact object-Decimal — string is the only exact common
-                   -- representation for the driver canonicalizer
-                   CAST(CAST(SUM(CAST(x AS HUGEINT)) AS DECIMAL(38,0)) AS VARCHAR)
-                       AS checksum
-            FROM v
-        """,
-        "group_sample_n": """
-            SELECT doc_id, lang, source FROM (
-                SELECT doc_id, lang, source,
-                       ROW_NUMBER() OVER (PARTITION BY lang, source
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                FROM documents
-            ) WHERE rn <= 2
-        """,
-        "ltv_curve": """
-            WITH signups AS (
-                SELECT user_id, MIN(ts) AS signup_ts
-                FROM events WHERE event_type = 'signup' GROUP BY user_id
-            ), j AS (
-                SELECT CAST(date_trunc('week', s.signup_ts) AS TIMESTAMP) AS cohort_week,
-                       CAST(date_diff('day', CAST(s.signup_ts AS DATE),
-                                      CAST(e.ts AS DATE)) AS INT) AS day_offset,
-                       CAST(round(e.value * 100) AS BIGINT) AS cents
-                FROM events e JOIN signups s ON e.user_id = s.user_id
-                WHERE e.event_type = 'purchase' AND e.ts >= s.signup_ts
-            ), daily AS (
-                SELECT cohort_week, day_offset,
-                       CAST(SUM(cents) AS BIGINT) AS revenue_cents
-                FROM j GROUP BY 1, 2
-            )
-            SELECT cohort_week, day_offset, revenue_cents,
-                   CAST(SUM(revenue_cents) OVER (PARTITION BY cohort_week
-                        ORDER BY day_offset
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS cum_revenue_cents
-            FROM daily
-        """,
-        "asof_forward": """
-            SELECT e.event_id, e.user_id, e.ts, p.ts AS ts_asof
-            FROM events e
-            ASOF LEFT JOIN (SELECT user_id, ts FROM events
-                            WHERE event_type = 'purchase') p
-              ON e.user_id = p.user_id AND e.ts < p.ts
-        """,
-        "ohlc_bars": """
-            WITH s AS (
-                SELECT event_type, epoch_us(ts) AS tus,
-                       CAST(round(value * 100) AS BIGINT) AS v
-                FROM events
-            ), b AS (
-                SELECT event_type, tus - tus % 3600000000 AS bar_start_us,
-                       tus, v
-                FROM s
-            )
-            SELECT event_type, bar_start_us,
-                   first(v ORDER BY tus, v) AS open,
-                   MAX(v) AS high, MIN(v) AS low,
-                   first(v ORDER BY tus DESC, v DESC) AS close,
-                   COUNT(*) AS n_obs, CAST(SUM(v) AS BIGINT) AS volume
-            FROM b GROUP BY 1, 2
-        """,
-        "fixed_width_roundtrip": """
-            SELECT o_orderkey, o_custkey, o_orderstatus,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-                   o_orderpriority
-            FROM orders
-        """,
-        "knn_classify": f"""
-            WITH q AS (
-                SELECT vec_id AS qid, embedding AS qv FROM embeddings
-                WHERE vec_id % 40 = 0
-            ), c AS (
-                SELECT vec_id AS cid, embedding AS cv, label FROM embeddings
-                WHERE vec_id % 40 <> 0
-            ), scored AS (
-                SELECT qid, cid, label,
-                       round({_cos2_sql("qv", "cv")}, 6) AS cos
-                FROM q CROSS JOIN c
-            ), top AS (
-                SELECT * FROM (
-                    SELECT *, row_number() OVER (PARTITION BY qid
-                                 ORDER BY cos DESC, cid) AS rn
-                    FROM scored
-                ) WHERE rn <= 5
-            ), votes AS (
-                SELECT qid, label, COUNT(*) AS v FROM top GROUP BY 1, 2
-            ), best AS (
-                SELECT qid, label, v,
-                       row_number() OVER (PARTITION BY qid
-                           ORDER BY v DESC, label ASC) AS rn
-                FROM votes
-            )
-            SELECT qid AS query_id, label AS predicted_label,
-                   CAST(v AS BIGINT) AS votes
-            FROM best WHERE rn = 1
-        """,
-        "embedding_dim_stats": """
-            WITH ex AS (
-                SELECT unnest(list_transform(embedding,
-                           (v, i) -> struct_pack(dim := i - 1, v := v))) AS s
-                FROM embeddings
-            ), qq AS (
-                SELECT s.dim AS dim,
-                       CAST(floor(CAST(s.v AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-                FROM ex
-            ), a AS (
-                SELECT dim, COUNT(*) AS n,
-                       CAST(SUM(CAST(q AS HUGEINT)) AS HUGEINT) AS s,
-                       CAST(SUM(CAST(q AS HUGEINT) * q) AS HUGEINT) AS ss,
-                       MIN(q) AS mn, MAX(q) AS mx
-                FROM qq GROUP BY dim
-            )
-            SELECT CAST(dim AS INT) AS dim, n,
-                   round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS mean,
-                   round(sqrt(greatest(CAST(ss AS DOUBLE) / CAST(n AS DOUBLE)
-                              - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                                * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 0.0))
-                         / 1000000.0, 6) AS std,
-                   round(CAST(mn AS DOUBLE) / 1000000.0, 6) AS min,
-                   round(CAST(mx AS DOUBLE) / 1000000.0, 6) AS max
-            FROM a
-        """,
-        "embedding_quantize": """
-            SELECT vec_id,
-                   array_to_string(
-                       CASE WHEN amax > 0
-                            THEN list_transform(embedding,
-                                 x -> CAST(CAST(floor(CAST(x AS DOUBLE) * 127.0 / amax + 0.5)
-                                           AS INT) AS VARCHAR))
-                            ELSE list_transform(embedding, x -> '0') END, ',') AS q8_csv,
-                   round(amax / 127.0, 9) AS q_scale
-            FROM (
-                SELECT vec_id, embedding,
-                       CAST(list_aggregate(list_transform(embedding,
-                            x -> abs(CAST(x AS DOUBLE))), 'max') AS DOUBLE) AS amax
-                FROM embeddings
-            )
-        """,
-        "revenue_bridge": """
-            WITH o AS (
-                SELECT o_custkey, o_orderdate,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-                FROM orders
-            ), p AS (
-                SELECT o_custkey, CAST(SUM(cents) AS BIGINT) AS amt
-                FROM o WHERE o_orderdate < TIMESTAMP '1997-01-01'
-                GROUP BY o_custkey
-            ), c AS (
-                SELECT o_custkey, CAST(SUM(cents) AS BIGINT) AS amt
-                FROM o WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-                GROUP BY o_custkey
-            ), j AS (
-                SELECT COALESCE(p.amt, 0) AS pa, COALESCE(c.amt, 0) AS ca,
-                       p.amt IS NULL AS is_new, c.amt IS NULL AS is_churned
-                FROM p FULL OUTER JOIN c ON p.o_custkey = c.o_custkey
-            )
-            SELECT CASE WHEN is_new THEN 'new'
-                        WHEN is_churned THEN 'churned'
-                        WHEN ca > pa THEN 'expansion'
-                        WHEN ca < pa THEN 'contraction'
-                        ELSE 'flat' END AS category,
-                   COUNT(*) AS n_keys,
-                   CAST(SUM(ca - pa) AS BIGINT) AS delta
-            FROM j GROUP BY 1
-        """,
-        "rfm_segments": """
-            WITH per_key AS (
-                SELECT o_custkey,
-                       CAST(date_diff('day', CAST(MAX(o_orderdate) AS DATE),
-                                      DATE '2003-01-01') AS INT) AS recency_days,
-                       COUNT(*) AS frequency,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                            AS BIGINT) AS monetary
-                FROM orders GROUP BY o_custkey
-            ), scored AS (
-                SELECT *,
-                       CAST(ntile(5) OVER (ORDER BY recency_days DESC, o_custkey)
-                            AS INT) AS r_score,
-                       CAST(ntile(5) OVER (ORDER BY frequency ASC, o_custkey)
-                            AS INT) AS f_score,
-                       CAST(ntile(5) OVER (ORDER BY monetary ASC, o_custkey)
-                            AS INT) AS m_score
-                FROM per_key
-            )
-            SELECT o_custkey, recency_days, frequency, monetary,
-                   r_score, f_score, m_score,
-                   CAST(r_score * 100 + f_score * 10 + m_score AS INT) AS segment
-            FROM scored
-        """,
-        "drift_chi2": """
-            WITH li AS (
-                SELECT l_shipdate,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-                FROM lineitem
-            ), bb AS (
-                SELECT cents // 100000 AS bin, COUNT(*) AS b FROM li
-                WHERE l_shipdate < TIMESTAMP '1997-01-01' GROUP BY 1
-            ), cc AS (
-                SELECT cents // 100000 AS bin, COUNT(*) AS c FROM li
-                WHERE l_shipdate >= TIMESTAMP '1997-01-01' GROUP BY 1
-            ), j AS (
-                SELECT COALESCE(bb.bin, cc.bin) AS bin,
-                       COALESCE(b, 0) AS b, COALESCE(c, 0) AS c
-                FROM bb FULL OUTER JOIN cc ON bb.bin = cc.bin
-            ), t AS (
-                SELECT CAST(SUM(b) AS BIGINT) AS nb, CAST(SUM(c) AS BIGINT) AS nc,
-                       COUNT(*) AS n_bins
-                FROM j
-            ), packed AS (
-                SELECT nb, nc, n_bins,
-                       list(struct_pack(k := bin, b := b, c := c) ORDER BY bin) AS bins
-                FROM j, t GROUP BY nb, nc, n_bins
-            )
-            SELECT nb AS n_baseline, nc AS n_current, n_bins,
-                   round(0.0 + list_reduce(list_transform(bins,
-                       s -> CAST((CAST(nb AS HUGEINT) * s.c - CAST(nc AS HUGEINT) * s.b)
-                                 * (CAST(nb AS HUGEINT) * s.c - CAST(nc AS HUGEINT) * s.b)
-                                 AS DOUBLE)
-                            / CAST(CAST(nb AS HUGEINT) * nc * (s.b + s.c) AS DOUBLE)),
-                       (x, y) -> x + y), 6) AS chi2
-            FROM packed
-        """,
-        "ewma_smooth": _ewma_sql(),
-        "ewma_control_chart": _ewma_chart_sql(),
-        "fk_orphans": """
-            SELECT 'orders->customer' AS relation,
-                   (SELECT COUNT(*) FROM orders) AS n_rows,
-                   (SELECT COUNT(*) FROM orders o
-                     WHERE o.o_custkey IS NOT NULL AND NOT EXISTS
-                       (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-                       AS n_orphans
-            UNION ALL
-            SELECT 'lineitem->part',
-                   (SELECT COUNT(*) FROM lineitem),
-                   (SELECT COUNT(*) FROM lineitem l
-                     WHERE l.l_partkey IS NOT NULL AND NOT EXISTS
-                       (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
-            UNION ALL
-            SELECT 'lineitem->supplier',
-                   (SELECT COUNT(*) FROM lineitem),
-                   (SELECT COUNT(*) FROM lineitem l
-                     WHERE l.l_suppkey IS NOT NULL AND NOT EXISTS
-                       (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey))
-        """,
-        "date_dimension": """
-            WITH days AS (
-                SELECT CAST(unnest(generate_series(DATE '2024-01-01',
-                            DATE '2024-12-31', INTERVAL 1 DAY)) AS DATE) AS d
-            )
-            SELECT CAST(d AS TIMESTAMP) AS date,
-                   CAST(year(d) * 10000 + month(d) * 100 + day(d) AS INT) AS date_key,
-                   CAST(year(d) AS INT) AS year,
-                   CAST(quarter(d) AS INT) AS quarter,
-                   CAST(month(d) AS INT) AS month,
-                   CAST(day(d) AS INT) AS day,
-                   CAST(weekofyear(d) AS INT) AS iso_week,
-                   CAST(isodow(d) - 1 AS INT) AS weekday,
-                   isodow(d) - 1 >= 5 AS is_weekend,
-                   day(d) = 1 AS is_month_start,
-                   d = last_day(d) AS is_month_end
-            FROM days
-        """,
-        "join_size_estimate": """
-            WITH lc AS (SELECT l_orderkey AS k, COUNT(*) AS nl FROM lineitem GROUP BY 1),
-                 rc AS (SELECT o_orderkey AS k, COUNT(*) AS nr FROM orders GROUP BY 1),
-                 p AS (SELECT CAST(nl * nr AS BIGINT) AS p FROM lc JOIN rc USING (k))
-            SELECT CAST(COALESCE(SUM(p), 0) AS BIGINT) AS est_rows,
-                   CAST(COALESCE(MAX(p), 0) AS BIGINT) AS max_key_product,
-                   COUNT(*) AS n_matching_keys
-            FROM p
-        """,
-        "domain_capped_corpus": """
-            WITH u AS (
-                SELECT doc_id, n_chars,
-                    'HTTP://WWW.Site' || CAST(doc_id % 37 AS VARCHAR) || '.COM'
-                    || CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE '' END
-                    || '/Articles/' || CAST(doc_id % 97 AS VARCHAR)
-                    || CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END AS url
-                FROM documents
-            ), parts AS (
-                SELECT doc_id, n_chars,
-                    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                    regexp_replace(regexp_replace(
-                        lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?]*)', 1)),
-                        '^www\\.', ''), ':80$|:443$', '') AS host,
-                    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?]*(.*)$', 1) AS pathq
-                FROM u
-            ), canon AS (
-                SELECT doc_id, n_chars, host AS domain,
-                    scheme || '://' || host ||
-                    CASE WHEN regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$', '') = ''
-                         THEN '/'
-                         ELSE regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$', '')
-                    END AS canon_url
-                FROM parts
-            ), ded AS (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY canon_url ORDER BY doc_id) AS rn
-                FROM canon
-            ), capd AS (
-                SELECT domain, doc_id, n_chars,
-                       CAST(ROW_NUMBER() OVER (PARTITION BY domain
-                            ORDER BY n_chars DESC, doc_id) AS INT) AS domain_rank
-                FROM ded WHERE rn = 1
-            )
-            SELECT domain, domain_rank, doc_id, n_chars
-            FROM capd WHERE domain_rank <= 3
-        """,
-        "rolling_distinct_users": """
-            WITH daily AS (
-                SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
-            ), contrib AS (
-                SELECT DISTINCT day + CAST(o.o AS INTEGER) AS win_day, user_id
-                FROM daily, (SELECT unnest(range(7)) AS o) o
-            )
-            SELECT CAST(c.win_day AS TIMESTAMP) AS win_day,
-                   CAST(COUNT(*) AS BIGINT) AS users_7d
-            FROM contrib c
-            JOIN (SELECT DISTINCT day AS win_day FROM daily) obs USING (win_day)
-            GROUP BY c.win_day
-        """,
-        "vocab_build": """
-            WITH counts AS (
-                SELECT token, COUNT(*) AS n FROM (
-                    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-                    FROM documents
-                ) WHERE token != '' GROUP BY token
-            )
-            SELECT token, n, row_number() OVER (ORDER BY n DESC, token ASC) - 1 AS token_id
-            FROM counts WHERE n >= 2
-        """,
-        "vocab_encode": """
-            WITH tok AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents
-            ), counts AS (
-                SELECT token, COUNT(*) AS n FROM (
-                    SELECT unnest(toks) AS token FROM tok
-                ) WHERE token != '' GROUP BY token
-            ), vocab AS (
-                SELECT token, row_number() OVER (ORDER BY n DESC, token ASC) - 1 AS token_id
-                FROM counts WHERE n >= 2
-            ), pos_tok AS (
-                SELECT t.doc_id, gs.i AS pos, t.toks[gs.i] AS token
-                FROM tok t, LATERAL (SELECT unnest(generate_series(1, len(t.toks))) AS i) gs
-                WHERE t.toks[gs.i] != ''
-            ), enc AS (
-                SELECT p.doc_id, p.pos, COALESCE(v.token_id, -1) AS tid
-                FROM pos_tok p LEFT JOIN vocab v USING (token)
-            ), seqs AS (
-                SELECT doc_id, list(tid ORDER BY pos ASC) AS token_ids
-                FROM enc GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(len(s.token_ids), 0) AS BIGINT) AS n_tokens,
-                   array_to_string(
-                       list_transform(COALESCE(s.token_ids, CAST([] AS BIGINT[])),
-                                      t -> CAST(t AS VARCHAR)), ',') AS token_ids_csv
-            FROM documents d LEFT JOIN seqs s USING (doc_id)
-        """,
-        "radius_join": """
-            WITH cust AS (
-                SELECT c_custkey AS left_id,
-                       (c_custkey * 37) % 10000 AS x, (c_custkey * 91) % 10000 AS y
-                FROM customer
-            ), supp AS (
-                SELECT s_suppkey AS right_id,
-                       (s_suppkey * 53) % 10000 AS x, (s_suppkey * 71) % 10000 AS y
-                FROM supplier
-            )
-            SELECT c.left_id, s.right_id,
-                   (c.x - s.x) * (c.x - s.x) + (c.y - s.y) * (c.y - s.y) AS dist2
-            FROM cust c JOIN supp s
-              ON (c.x - s.x) * (c.x - s.x) + (c.y - s.y) * (c.y - s.y) <= 250000
-        """,
-        "linear_interpolate": """
-            WITH ev AS (
-                SELECT event_id, user_id,
-                       make_timestamp(event_id * 60000000) AS ts,
-                       CASE WHEN event_id % 5 <> 0
-                            THEN CAST(round(value * 100) AS BIGINT) END AS cents
-                FROM events
-            ), n AS (
-                SELECT *,
-                       epoch_us(ts) AS t,
-                       last_value(CASE WHEN cents IS NOT NULL
-                                       THEN struct_pack(t := epoch_us(ts), v := cents) END
-                                  IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY ts
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev,
-                       first_value(CASE WHEN cents IS NOT NULL
-                                        THEN struct_pack(t := epoch_us(ts), v := cents) END
-                                   IGNORE NULLS) OVER (
-                           PARTITION BY user_id ORDER BY ts
-                           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nxt
-                FROM ev
-            )
-            SELECT event_id, user_id, cents,
-                   round(CASE
-                       WHEN cents IS NOT NULL THEN CAST(cents AS DOUBLE)
-                       WHEN prev IS NOT NULL AND nxt IS NOT NULL THEN
-                            CAST(prev.v AS DOUBLE)
-                            + CAST(nxt.v - prev.v AS DOUBLE)
-                              * (CAST(t - prev.t AS DOUBLE) / CAST(nxt.t - prev.t AS DOUBLE))
-                       WHEN prev IS NOT NULL THEN CAST(prev.v AS DOUBLE)
-                       ELSE CAST(nxt.v AS DOUBLE)
-                   END, 6) AS value_interp
-            FROM n
-        """,
-        "ab_test_ztest": """
-            WITH agg AS (
-                SELECT CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                       CAST(SUM(CASE WHEN user_id % 2 = 0 AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-                       CAST(SUM(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-                       CAST(SUM(CASE WHEN user_id % 2 <> 0 AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS c_b
-                FROM events
-            )
-            SELECT n_a, c_a, n_b, c_b,
-                   round(CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS rate_a,
-                   round(CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS rate_b,
-                   round((CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-                          - CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-                         / sqrt((CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-                                * (1.0 - CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-                                * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))), 6) AS z_stat
-            FROM agg
-        """,
-        "warc_roundtrip": """
-            WITH k AS (SELECT chr(13) || chr(10) AS crlf),
-            base AS (
-                SELECT doc_id,
-                       COALESCE(text, '') AS t,
-                       'http://corpus.example/doc/' || CAST(doc_id AS VARCHAR) AS url
-                FROM documents
-            ), http AS (
-                SELECT doc_id, t, url,
-                       'HTTP/1.1 200 OK' || crlf
-                       || 'Content-Type: text/html' || crlf
-                       || 'Content-Length: '
-                       || CAST(octet_length(encode(t)) AS VARCHAR)
-                       || crlf || crlf || t AS h
-                FROM base CROSS JOIN k
-            ), rec AS (
-                SELECT doc_id, t, url,
-                       'WARC/1.0' || crlf
-                       || 'WARC-Type: response' || crlf
-                       || 'WARC-Record-ID: <urn:id:' || CAST(doc_id AS VARCHAR)
-                       || '>' || crlf
-                       || 'WARC-Target-URI: ' || url || crlf
-                       || 'Content-Type: application/http;msgtype=response' || crlf
-                       || 'Content-Length: '
-                       || CAST(octet_length(encode(h)) AS VARCHAR)
-                       || crlf || crlf || h || crlf || crlf AS r
-                FROM http CROSS JOIN k
-            )
-            SELECT doc_id, url,
-                   CAST(200 AS INTEGER) AS http_status,
-                   CAST(octet_length(encode(t)) AS BIGINT) AS payload_len,
-                   CAST(octet_length(encode(r)) AS BIGINT) AS record_length,
-                   t AS text
-            FROM rec
-        """,
-        "parse_logs": """
-            WITH clean AS (
-                SELECT '/' || event_type AS path,
-                       CASE WHEN event_id % 10 = 0 THEN 500
-                            WHEN event_id % 10 = 1 THEN 404
-                            ELSE 200 END AS status,
-                       greatest(CAST(round(value * 100) AS BIGINT), 0) AS n_bytes,
-                       date_trunc('second', ts) AS ts
-                FROM events WHERE event_id % 97 <> 0
-            )
-            SELECT path, CAST(status AS INTEGER) AS status, COUNT(*) AS n,
-                   CAST(SUM(n_bytes) AS BIGINT) AS total_bytes, MIN(ts) AS first_ts
-            FROM clean GROUP BY path, status
-        """,
-        "hopping_window_agg": """
-            WITH expanded AS (
-                SELECT e.event_type,
-                       CAST(round(e.value * 100) AS BIGINT) AS cents,
-                       to_timestamp((epoch_us(e.ts) // 1000000 // 900) * 900 - o.o * 900)
-                           AT TIME ZONE 'UTC' AS win_start
-                FROM events e CROSS JOIN (SELECT unnest(range(4)) AS o) o
-                WHERE (epoch_us(e.ts) // 1000000 // 900) * 900 - o.o * 900
-                      > epoch_us(e.ts) // 1000000 - 3600
-            )
-            SELECT CAST(win_start AS TIMESTAMP) AS win_start, event_type,
-                   COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS value_cents
-            FROM expanded GROUP BY 1, 2
-        """,
-        "hierarchy_paths": """
-            WITH RECURSIVE e AS (
-                SELECT p_partkey AS child, p_partkey // 4 AS parent
-                FROM part WHERE p_partkey > 0
-            ), roots AS (
-                -- roots inlined as a subquery: a separate chained CTE inside
-                -- WITH RECURSIVE triple-evaluates the anchor in DuckDB 1.0
-                SELECT node
-                FROM (SELECT child AS node FROM e UNION SELECT parent FROM e) n
-                WHERE node NOT IN (SELECT child FROM e)
-            ), walk(node, root, depth, path) AS (
-                SELECT node, node, 0, CAST(node AS VARCHAR) FROM roots
-                UNION ALL
-                SELECT e.child, w.root, w.depth + 1,
-                       CAST(e.child AS VARCHAR) || '/' || w.path
-                FROM e JOIN walk w ON e.parent = w.node
-            )
-            SELECT node, root, CAST(depth AS INTEGER) AS depth, path FROM walk
-        """,
-        "priority_sample": """
-            WITH drawn AS (
-                SELECT doc_id, lang, n_chars,
-                       round(CAST(n_chars AS DOUBLE) /
-                             (CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) + 1 AS DOUBLE)
-                              / 4294967296.0), 6) AS priority
-                FROM documents
-            )
-            SELECT doc_id, lang, n_chars, priority
-            FROM drawn ORDER BY priority DESC, doc_id ASC LIMIT 50
-        """,
-        "pareto_frontier": """
-            WITH best AS (
-                SELECT p_size, MAX(CAST(round(p_retailprice * 100) AS BIGINT)) AS price_cents
-                FROM part GROUP BY p_size
-            ), run AS (
-                SELECT p_size, price_cents,
-                       MAX(price_cents) OVER (
-                           ORDER BY p_size DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_best
-                FROM best
-            )
-            SELECT p_size, price_cents FROM run
-            WHERE prev_best IS NULL OR price_cents > prev_best
-        """,
-        "skew_report": """
-            WITH pairs AS (
-                SELECT 'event_type' AS "column", CAST(event_type AS VARCHAR) AS value FROM events
-                UNION ALL
-                SELECT 'user_id', CAST(user_id AS VARCHAR) FROM events
-                UNION ALL
-                SELECT 'props', CAST(props AS VARCHAR) FROM events
-            ), counts AS (
-                SELECT "column", value, COUNT(*) AS n FROM pairs GROUP BY 1, 2
-            ), ranked AS (
-                SELECT *, CAST(row_number() OVER (
-                    PARTITION BY "column" ORDER BY n DESC, value ASC) AS INTEGER) AS rank
-                FROM counts
-            )
-            SELECT "column", value, n, rank,
-                   round(n / CAST((SELECT COUNT(*) FROM events) AS DOUBLE), 6) AS share
-            FROM ranked WHERE rank <= 5
-        """,
-        "longest_streak": """
-            WITH days AS (
-                SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-            ), islands AS (
-                SELECT user_id,
-                       datediff('day', DATE '1970-01-01', day)
-                       - row_number() OVER (PARTITION BY user_id ORDER BY day) AS island
-                FROM days
-            ), runs AS (
-                SELECT user_id, island, COUNT(*) AS run_len
-                FROM islands GROUP BY user_id, island
-            )
-            SELECT user_id, CAST(MAX(run_len) AS BIGINT) AS longest_streak
-            FROM runs GROUP BY user_id
-        """,
-        "orc_roundtrip": """
-            SELECT s_nationkey, COUNT(*) AS n_suppliers,
-                   SUM(CAST(round(s_acctbal * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_acctbal
-            FROM supplier GROUP BY s_nationkey
-        """,
-        "bucketed_join": """
-            SELECT o.o_orderpriority, COUNT(*) AS n_lines,
-                   SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-            GROUP BY o.o_orderpriority
-        """,
-        "range_layout_readback": """
-            SELECT user_id, COUNT(*) AS n_events,
-                   SUM(CAST(round(value * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_value
-            FROM events WHERE user_id >= 3 AND user_id < 12
-            GROUP BY user_id
-        """,
-        "zorder_layout_readback": """
-            SELECT o_orderkey, o_custkey, o_totalprice
-            FROM orders WHERE o_custkey < 500 AND o_totalprice > 100000.0
-        """,
-        "compact_roundtrip": """
-            SELECT doc_id, lang, source, n_chars FROM documents
-        """,
-        "file_stats_manifest": """
-            SELECT lang, COUNT(*) AS n_rows,
-                   MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id,
-                   MIN(n_chars) AS min_n_chars, MAX(n_chars) AS max_n_chars
-            FROM documents GROUP BY lang
-        """,
-        "schema_evolution_read": """
-            SELECT doc_id, lang, CAST(NULL AS VARCHAR) AS source, CAST(NULL AS BIGINT) AS n_chars
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(NULL AS VARCHAR) AS lang, source, n_chars FROM documents
-        """,
-        "weighted_sample": """
-            SELECT doc_id, lang, n_chars FROM documents
-            WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                  < CAST(floor(least(greatest(n_chars / 800.0, 0.0), 1.0) * 4294967296.0) AS BIGINT)
-        """,
-        "merge_upsert": """
-            WITH old AS (
-                SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier
-            ), new AS (
-                SELECT s_suppkey, s_name, s_nationkey,
-                       CASE WHEN s_suppkey % 7 = 0 THEN s_acctbal + 1000.0 ELSE s_acctbal END AS s_acctbal
-                FROM supplier WHERE s_suppkey % 10 <> 0
-                UNION ALL
-                SELECT s_suppkey + 100000, s_name, s_nationkey, s_acctbal
-                FROM supplier WHERE s_suppkey % 13 = 0
-            )
-            SELECT COALESCE(n.s_suppkey, o.s_suppkey) AS s_suppkey,
-                   CASE WHEN n.s_suppkey IS NOT NULL THEN n.s_name ELSE o.s_name END AS s_name,
-                   CASE WHEN n.s_suppkey IS NOT NULL THEN n.s_nationkey ELSE o.s_nationkey END AS s_nationkey,
-                   CASE WHEN n.s_suppkey IS NOT NULL THEN n.s_acctbal ELSE o.s_acctbal END AS s_acctbal
-            FROM old o FULL OUTER JOIN new n ON o.s_suppkey = n.s_suppkey
-        """,
-        "histogram_bins": """
-            SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bin,
-                   COUNT(*) AS n_orders,
-                   SUM(CAST(round(o_totalprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_value
-            FROM orders GROUP BY 1
-        """,
-        "corr_exact": """
-            WITH s AS (
-                SELECT COUNT(*) AS n,
-                       CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-                       CAST(SUM(x * y) AS DOUBLE) AS sxy,
-                       CAST(SUM(x * x) AS DOUBLE) AS sxx,
-                       CAST(SUM(y * y) AS DOUBLE) AS syy
-                FROM (SELECT CAST(round(l_quantity * 100) AS BIGINT) AS x,
-                             CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-                      FROM lineitem)
-            )
-            SELECT n,
-                   round((CAST(n AS DOUBLE) * sxy - sx * sy)
-                         / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
-                            * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS pearson_r,
-                   round((CAST(n AS DOUBLE) * sxy - sx * sy)
-                         / (CAST(n AS DOUBLE) * sxx - sx * sx), 6) AS ols_slope
-            FROM s
-        """,
-        "contract_enforce": f"""
-            SELECT CAST(id AS BIGINT) AS id,
-                   COALESCE(CAST(title AS VARCHAR), '(untitled)') AS title,
-                   COALESCE(CAST(source AS VARCHAR), 'unknown') AS source,
-                   CAST(file_id AS VARCHAR) AS file_id
-            FROM ({resolutions_sql})
-        """,
-        "contract_violations": f"""
-            WITH enforced AS (
-                SELECT CAST(id AS BIGINT) AS id,
-                       COALESCE(CAST(title AS VARCHAR), '(untitled)') AS title,
-                       COALESCE(CAST(source AS VARCHAR), 'unknown') AS source,
-                       CAST(file_id AS VARCHAR) AS file_id
-                FROM ({resolutions_sql})
-            )
-            SELECT 'not_null:id' AS rule, CAST(COUNT(CASE WHEN id IS NULL THEN 1 END) AS BIGINT) AS n_bad FROM enforced
-            UNION ALL
-            SELECT 'not_null:title', CAST(COUNT(CASE WHEN title IS NULL THEN 1 END) AS BIGINT) FROM enforced
-            UNION ALL
-            SELECT 'not_null:source', CAST(COUNT(CASE WHEN source IS NULL THEN 1 END) AS BIGINT) FROM enforced
-            UNION ALL
-            SELECT 'unique_pk:id', CAST(COUNT(id) - COUNT(DISTINCT id) AS BIGINT) FROM enforced
-        """,
-        "pipeline_specialties": f"""
-            WITH p AS (
-                SELECT p_partkey AS id, {clean("p_name")} AS name, p_brand AS brand, p_type
-                FROM part
-            ), par AS (
-                SELECT 'parent:' || brand AS parent_id, brand, COUNT(*) AS n_children
-                FROM p GROUP BY brand
-            )
-            SELECT p.id, p.name, p.brand, par.parent_id, par.n_children,
-                   CASE WHEN p.p_type LIKE '%BRASS%' THEN 'METALLO'
-                        WHEN p.p_type LIKE '%COPPER%' THEN 'METALLO'
-                        ELSE 'ALTRO' END AS material_class
-            FROM p JOIN par USING (brand)
-        """,
-        "pipeline_districts": f"""
-            WITH seed AS (
-                SELECT CAST(region_code AS VARCHAR) AS region_code,
-                       {clean("name")} AS seed_name,
-                       CAST(population AS BIGINT) AS population
-                FROM read_csv('{SEED_CSV}', header = true,
-                              columns = {{'region_code': 'VARCHAR', 'name': 'VARCHAR', 'population': 'BIGINT'}})
-            ), n AS (
-                SELECT n_nationkey,
-                       lpad(CAST(n_nationkey % 5 + 1 AS VARCHAR), 2, '0') AS region_code
-                FROM nation
-            )
-            SELECT region_code, seed_name, population,
-                   COUNT(*) AS n_customers,
-                   SUM(CAST(round(c_acctbal * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_acctbal
-            FROM customer c
-            JOIN n ON c.c_nationkey = n.n_nationkey
-            JOIN seed USING (region_code)
-            GROUP BY 1, 2, 3
-        """,
-        "tpch_q3ish": """
-            SELECT o_orderkey, o_orderdate,
-                   SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-                       / CAST(100.0 AS DOUBLE) AS revenue
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey AND c_mktsegment = 'BUILDING'
-            JOIN lineitem ON l_orderkey = o_orderkey
-            GROUP BY 1, 2
-            ORDER BY revenue DESC, o_orderkey
-            LIMIT 10
-        """,
-        "tpch_q5ish": """
-            SELECT r.r_name, n.n_name, year(o.o_orderdate) AS o_year,
-                   SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT))
-                       / CAST(100.0 AS DOUBLE) AS revenue
-            FROM orders o
-            JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
-            WHERE year(o.o_orderdate) BETWEEN 1996 AND 1998
-            GROUP BY 1, 2, 3
-        """,
-        "multimodal_frame_sample": """
-            SELECT doc_id AS id,
-                   CAST(unnest(range(0, octet_length(encode(text)) % 31, 5)) AS INTEGER) AS frame_idx,
-                   CAST(octet_length(encode(text)) % 31 AS INTEGER) AS n_frames
-            FROM documents
-            WHERE octet_length(encode(text)) % 31 > 0
-        """,
-        "multimodal_features": """
-            SELECT doc_id AS id,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-                   array_to_string(list_transform(generate_series(1, 8),
-                       i -> CAST((octet_length(encode(text)) * i) % 1000 AS VARCHAR)), ',') AS features_csv
-            FROM documents
-        """,
-        "agg_salted_sum": """
-            SELECT event_type,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-                   COUNT(*) AS n
-            FROM events GROUP BY event_type
-        """,
-        "distinct_count_skewsafe": """
-            SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_user_id
-            FROM events GROUP BY event_type
-        """,
-        "json_extract": """
-            SELECT event_id, CAST(props->>'k' AS INTEGER) AS k FROM events
-        """,
-        "string_agg": """
-            SELECT s_nationkey, string_agg(s_name, ',' ORDER BY s_name) AS supplier_names
-            FROM supplier GROUP BY s_nationkey
-        """,
-        "unpivot_melt": """
-            WITH wide AS (
-                SELECT o_orderpriority,
-                       CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS f,
-                       CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS o,
-                       CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS p
-                FROM orders GROUP BY o_orderpriority
-            )
-            SELECT o_orderpriority, 'F' AS status, f AS cents FROM wide
-            UNION ALL SELECT o_orderpriority, 'O', o FROM wide
-            UNION ALL SELECT o_orderpriority, 'P', p FROM wide
-        """,
-        "groupby_cube": """
-            SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-                   SUM(CAST(round(o_totalprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total
-            FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        """,
-        "regex_extract": """
-            SELECT p_partkey,
-                   CAST(regexp_extract(p_brand, 'Brand#(\\d+)', 1) AS INTEGER) AS brand_num,
-                   regexp_extract(p_type, '^(\\w+)', 1) AS type_head
-            FROM part
-        """,
-        "fuzzy_name_match": """
-            SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
-                   levenshtein(trim(a.s_name), trim(b.s_name)) AS edit_dist
-            FROM supplier a JOIN supplier b
-              ON a.s_nationkey = b.s_nationkey AND a.s_suppkey < b.s_suppkey
-            WHERE levenshtein(trim(a.s_name), trim(b.s_name)) <= 3
-        """,
-        "dedup_components": """
-            WITH RECURSIVE fuzzy AS (
-                SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b
-                FROM supplier a JOIN supplier b
-                  ON a.s_nationkey = b.s_nationkey AND a.s_suppkey < b.s_suppkey
-                WHERE levenshtein(trim(a.s_name), trim(b.s_name)) <= 3
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM fuzzy
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM fuzzy
-            ), walk(node, reach) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach
-            )
-            SELECT node, MIN(reach) AS label FROM walk GROUP BY node
-        """,
-        "anti_semi_join": """
-            SELECT 'never_ordered' AS kind, COUNT(*) AS n FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            UNION ALL
-            SELECT 'ordered' AS kind, COUNT(*) AS n FROM customer c
-            WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "percentile_agg": """
-            SELECT l_returnflag,
-                   round(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
-                   round(quantile_cont(l_quantity, 0.95), 6) AS p95_qty,
-                   round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "profile_table": """
-            SELECT 'o_custkey' AS "column", COUNT(*) AS n_rows,
-                   COUNT(CASE WHEN o_custkey IS NULL THEN 1 END) AS n_null,
-                   COUNT(DISTINCT o_custkey) AS n_distinct,
-                   CAST(MIN(o_custkey) AS DOUBLE) AS min_num, CAST(MAX(o_custkey) AS DOUBLE) AS max_num,
-                   CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-            FROM orders
-            UNION ALL
-            SELECT 'o_totalprice', COUNT(*),
-                   COUNT(CASE WHEN o_totalprice IS NULL THEN 1 END),
-                   COUNT(DISTINCT o_totalprice),
-                   CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE),
-                   NULL, NULL
-            FROM orders
-            UNION ALL
-            SELECT 'o_orderstatus', COUNT(*),
-                   COUNT(CASE WHEN o_orderstatus IS NULL THEN 1 END),
-                   COUNT(DISTINCT o_orderstatus),
-                   NULL, NULL,
-                   MIN(o_orderstatus), MAX(o_orderstatus)
-            FROM orders
-        """,
-        # — r6 corpus operators (chunking / span dedup / bigram LM / incremental) —
-        "chunk_documents": """
-            WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                       FROM documents),
-            s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 30)) AS start FROM t)
-            SELECT doc_id,
-                   CAST(start // 30 AS BIGINT) AS chunk_id,
-                   array_to_string(toks[start + 1 : start + 40], ' ') AS chunk_text,
-                   CAST(least(40, len(toks) - start) AS BIGINT) AS n_tokens
-            FROM s
-        """,
-        "duplicate_spans": """
-            WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                       FROM documents),
-            g AS (SELECT doc_id, md5(array_to_string(toks[i : i + 7], ' ')) AS gk
-                  FROM t, unnest(range(1, len(toks) - 6)) AS u(i)),
-            d AS (SELECT gk FROM g GROUP BY gk HAVING COUNT(DISTINCT doc_id) >= 2),
-            c AS (SELECT doc_id, COUNT(*) AS n_dup FROM g JOIN d USING (gk) GROUP BY doc_id)
-            SELECT t.doc_id,
-                   CAST(CASE WHEN len(toks) >= 8 THEN len(toks) - 7 ELSE 0 END AS BIGINT) AS n_grams,
-                   CAST(COALESCE(c.n_dup, 0) AS BIGINT) AS n_dup,
-                   CASE WHEN len(toks) >= 8
-                        THEN round(COALESCE(c.n_dup, 0)::DOUBLE / (len(toks) - 7), 6)
-                        ELSE 0.0 END AS dup_frac
-            FROM t LEFT JOIN c USING (doc_id)
-        """,
-        "bigram_lm_score": """
-            WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                       FROM documents),
-            p AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-                  FROM t, unnest(range(1, len(toks))) AS u(i)),
-            m AS (SELECT w1, w2, COUNT(*) AS c12 FROM p GROUP BY w1, w2),
-            pre AS (SELECT w1, SUM(c12) AS c1 FROM m GROUP BY w1),
-            s AS (SELECT doc_id, COUNT(*) AS nb,
-                         round(AVG(ln(c12::DOUBLE / c1)), 6) AS lp
-                  FROM p JOIN m USING (w1, w2) JOIN pre USING (w1) GROUP BY doc_id)
-            SELECT d.doc_id,
-                   CAST(COALESCE(s.nb, 0) AS BIGINT) AS n_bigrams,
-                   s.lp AS avg_logprob
-            FROM documents d LEFT JOIN s USING (doc_id)
-        """,
-        "incremental_dedup": """
-            WITH h AS (SELECT md5(trim(lower(text))) AS content_hash
-                       FROM documents WHERE doc_id % 3 <> 0),
-            b AS (SELECT doc_id, md5(trim(lower(text))) AS content_hash FROM documents),
-            f AS (SELECT * FROM b WHERE content_hash NOT IN (SELECT content_hash FROM h))
-            SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id, content_hash
-            FROM f GROUP BY content_hash
-        """,
-        # 0.8/0.9 of 65536 → 52428 = 0xcccc and 58982 = 0xe666: the same
-        # hex-prefix thresholds leakage_safe_split builds with format(...,'04x')
-        "leakage_safe_split": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-                FROM documents
-            ), g AS (
-                SELECT DISTINCT doc_id, md5(array_to_string(toks[i : i + 7], ' ')) AS gk
-                FROM t, unnest(range(1, len(toks) - 6)) AS u(i)
-            ), p AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                FROM g a JOIN g b ON a.gk = b.gk AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM p
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM p
-            ), walk(node, reach) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach
-            ), labels AS (
-                SELECT node, MIN(reach) AS label FROM walk GROUP BY node
-            ), lab AS (
-                SELECT d.doc_id, COALESCE(l.label, d.doc_id) AS group_id
-                FROM documents d LEFT JOIN labels l ON l.node = d.doc_id
-            )
-            SELECT doc_id, group_id,
-                   CASE WHEN substr(md5(CAST(group_id AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
-                        WHEN substr(md5(CAST(group_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
-                        ELSE 'test' END AS split
-            FROM lab
-        """,
-        "inverted_index": """
-            WITH t AS (
-                SELECT doc_id, CAST(doc_id % 8 AS INTEGER) AS shard_id,
-                       unnest(list_distinct(string_split_regex(trim(lower(text)), '\\s+'))) AS term
-                FROM documents
-            )
-            SELECT shard_id, term, CAST(COUNT(*) AS BIGINT) AS df,
-                   array_to_string(list_sort(list(doc_id)), ',') AS postings_csv
-            FROM t WHERE term <> ''
-            GROUP BY shard_id, term
-        """,
-        "search_terms": """
-            WITH t AS (
-                SELECT doc_id,
-                       unnest(list_distinct(string_split_regex(trim(lower(text)), '\\s+'))) AS term
-                FROM documents
-            )
-            SELECT doc_id, CAST(COUNT(DISTINCT term) AS BIGINT) AS n_matched
-            FROM t WHERE term IN ('spark', 'window', 'merge')
-            GROUP BY doc_id HAVING COUNT(DISTINCT term) = 3
-        """,
-        "bm25_search": """
-            WITH tk AS (
-                SELECT doc_id, term FROM (
-                    SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-                    FROM documents
-                ) WHERE term <> ''
-            ), dl AS (
-                SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY doc_id
-            ), st AS (
-                SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl
-            ), tf AS (
-                SELECT doc_id, term, COUNT(*) AS tf FROM tk
-                WHERE term IN ('spark', 'window', 'merge') GROUP BY doc_id, term
-            ), dfq AS (
-                SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-            )
-            SELECT doc_id,
-                   round(SUM(
-                       ln((n_docs - df + 0.5) / (df + 0.5) + 1)
-                       * tf * (1.2 + 1)
-                       / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                   ), 6) AS score
-            FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-            GROUP BY doc_id
-            ORDER BY score DESC, doc_id
-            LIMIT 20
-        """,
-        "topk_per_group": """
-            WITH ct AS (
-                SELECT o_custkey,
-                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-                FROM orders GROUP BY o_custkey
-            ), j AS (
-                SELECT n_name, c_custkey, cents
-                FROM ct JOIN customer ON o_custkey = c_custkey
-                        JOIN nation ON c_nationkey = n_nationkey
-            ), r AS (
-                SELECT n_name, c_custkey, cents,
-                       CAST(row_number() OVER (
-                           PARTITION BY n_name ORDER BY cents DESC, c_custkey
-                       ) AS INTEGER) AS rank
-                FROM j
-            )
-            SELECT n_name, rank, c_custkey, cents FROM r WHERE rank <= 3
-        """,
-        "corpus_report": f"""
-            SELECT source,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM({ntoks}) AS BIGINT) AS total_tokens,
-                   CAST(SUM(CASE WHEN {_langid_sql('text')} = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-                   round(AVG({qscore}), 6) AS avg_quality
-            FROM documents
-            GROUP BY source
-        """,
-        # —— r9 batch ——
-        "woe_iv": """
-            WITH cat AS (
-                SELECT c_mktsegment AS category,
-                       CAST(SUM(CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-                       CAST(SUM(CASE WHEN c_acctbal > 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
-                FROM customer GROUP BY 1
-            ), tot AS (
-                SELECT CAST(SUM(2 * n_pos + 1) AS BIGINT) AS P2,
-                       CAST(SUM(2 * n_neg + 1) AS BIGINT) AS N2
-                FROM cat
-            ), scored AS (
-                SELECT category, n_pos, n_neg,
-                       round(ln(CAST((2 * n_pos + 1) * N2 AS DOUBLE)
-                                / ((2 * n_neg + 1) * P2)), 6) + 0.0 AS woe,
-                       (CAST(2 * n_pos + 1 AS DOUBLE) / P2
-                        - CAST(2 * n_neg + 1 AS DOUBLE) / N2) AS d
-                FROM cat, tot
-            ), iv AS (
-                SELECT round(list_reduce(
-                           list_prepend(0.0::DOUBLE, list(d * woe ORDER BY category)),
-                           (a, b) -> a + b), 6) AS iv
-                FROM scored
-            )
-            SELECT category, n_pos, n_neg, woe, iv FROM scored, iv
-        """,
-        "one_hot_segment": """
-            SELECT c_custkey,
-                   CAST(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS INT) AS c_mktsegment_building,
-                   CAST(CASE WHEN c_mktsegment = 'MACHINERY' THEN 1 ELSE 0 END AS INT) AS c_mktsegment_machinery,
-                   CAST(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END AS INT) AS c_mktsegment_automobile,
-                   CAST(CASE WHEN c_mktsegment IS NULL
-                             OR c_mktsegment NOT IN ('BUILDING', 'MACHINERY', 'AUTOMOBILE')
-                        THEN 1 ELSE 0 END AS INT) AS c_mktsegment_other
-            FROM customer
-        """,
-        "lift_gain": """
-            WITH base AS (
-                SELECT CAST(round(value * 100) AS BIGINT) AS v,
-                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-                FROM events
-            ), per_val AS (
-                SELECT v, COUNT(*) AS cnt, CAST(SUM(y) AS BIGINT) AS cnt_pos
-                FROM base GROUP BY v
-            ), tot AS (
-                SELECT CAST(SUM(cnt) AS BIGINT) AS T, CAST(SUM(cnt_pos) AS BIGINT) AS TP
-                FROM per_val
-            ), b AS (
-                SELECT *, COALESCE(SUM(cnt) OVER (ORDER BY v DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-                FROM per_val
-            ), pb AS (
-                SELECT CAST(floor(cum_before * 10 / T) AS INT) AS bucket,
-                       CAST(SUM(cnt) AS BIGINT) AS n,
-                       CAST(SUM(cnt_pos) AS BIGINT) AS n_pos,
-                       MAX(T) AS T, MAX(TP) AS TP
-                FROM b, tot GROUP BY 1
-            ), fin AS (
-                SELECT bucket, n, n_pos,
-                       CAST(SUM(n) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n,
-                       CAST(SUM(n_pos) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_pos,
-                       T, TP
-                FROM pb
-            )
-            SELECT bucket, n, n_pos, cum_n, cum_pos,
-                   round(cum_pos * 100.0 / TP, 6) + 0.0 AS gain_pct,
-                   round(CAST(cum_pos * T AS DOUBLE) / (cum_n * TP), 6) + 0.0 AS lift
-            FROM fin
-        """,
-        "dag_layers": _dag_layers_sql(rounds=4),
-        "shortest_paths": _shortest_paths_sql(rounds=4),
-        "max_concurrency": """
-            WITH iv AS (
-                SELECT event_type, epoch_us(ts) AS s,
-                       epoch_us(ts) + CAST(round(value * 100) AS BIGINT) * 1000 AS e
-                FROM events
-            ), ev AS (
-                SELECT event_type, s AS t, 1 AS d FROM iv
-                UNION ALL
-                SELECT event_type, e, -1 FROM iv
-            ), run AS (
-                SELECT event_type, SUM(d) OVER (PARTITION BY event_type
-                    ORDER BY t, d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cur
-                FROM ev
-            )
-            SELECT event_type,
-                   CAST(MAX(cur) AS BIGINT) AS peak_concurrent,
-                   CAST(COUNT(*) // 2 AS BIGINT) AS n_intervals
-            FROM run GROUP BY event_type
-        """,
-        "fifo_cost_basis": f"""
-            WITH {_FIFO_TRADES_SQL}, buys AS (
-                SELECT sym,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS b0,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + q AS b1,
-                       p AS bp
-                FROM li WHERE side = 'buy'
-            ), sells AS (
-                SELECT sym, ts AS sell_ts, q, p AS sell_price,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s0,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + q AS s1
-                FROM li WHERE side = 'sell'
-            ), j AS (
-                SELECT s.sym, s.sell_ts, s.q, s.sell_price, s.s0, s.s1,
-                       b.b0, b.b1, b.bp
-                FROM sells s LEFT JOIN buys b
-                  ON s.sym = b.sym AND b.b0 < s.s1 AND s.s0 < b.b1
-            )
-            SELECT sym, sell_ts, q AS qty, sell_price,
-                   CAST(COALESCE(SUM(CASE WHEN b0 IS NOT NULL
-                       THEN LEAST(b1, s1) - GREATEST(b0, s0) END), 0) AS BIGINT) AS matched_qty,
-                   CAST(COALESCE(SUM(CASE WHEN b0 IS NOT NULL
-                       THEN (LEAST(b1, s1) - GREATEST(b0, s0)) * bp END), 0) AS BIGINT) AS cost_cents,
-                   CAST(COALESCE(SUM(CASE WHEN b0 IS NOT NULL
-                       THEN (LEAST(b1, s1) - GREATEST(b0, s0)) * sell_price END), 0) AS BIGINT) AS proceeds_cents,
-                   CAST(COALESCE(SUM(CASE WHEN b0 IS NOT NULL
-                       THEN (LEAST(b1, s1) - GREATEST(b0, s0)) * (sell_price - bp) END), 0) AS BIGINT) AS realized_pnl_cents
-            FROM j GROUP BY sym, sell_ts, q, sell_price, s0
-        """,
-        "t_closeness": """
-            WITH cell AS (
-                SELECT c_mktsegment, c_nationkey, COUNT(*) AS c_gv
-                FROM customer GROUP BY 1, 2
-            ), cls AS (
-                SELECT c_mktsegment, COUNT(*) AS n_g FROM customer GROUP BY 1
-            ), vals AS (
-                SELECT c_nationkey, COUNT(*) AS c_v FROM customer GROUP BY 1
-            ), tot AS (
-                SELECT COUNT(*) AS N, COUNT(DISTINCT c_nationkey) AS m FROM customer
-            ), spine AS (
-                SELECT cls.c_mktsegment, cls.n_g, vals.c_nationkey, vals.c_v,
-                       COALESCE(cell.c_gv, 0) AS c_gv
-                FROM cls CROSS JOIN vals
-                LEFT JOIN cell USING (c_mktsegment, c_nationkey)
-            ), cums AS (
-                SELECT *,
-                       SUM(c_gv) OVER w AS cum_cls,
-                       SUM(c_v) OVER w AS cum_all
-                FROM spine
-                WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_nationkey
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            ), g AS (
-                SELECT c_mktsegment, MAX(n_g) AS class_size,
-                       SUM(ABS(cum_cls * N - cum_all * n_g)) AS num,
-                       MAX(N) AS N2, MAX(m) AS m2
-                FROM cums, tot GROUP BY 1
-            )
-            SELECT c_mktsegment, CAST(class_size AS BIGINT) AS class_size,
-                   round(CASE WHEN m2 > 1 THEN CAST(num AS DOUBLE)
-                              / ((m2 - 1) * class_size * N2) ELSE 0.0 END, 6) + 0.0 AS emd,
-                   round(CASE WHEN m2 > 1 THEN CAST(num AS DOUBLE)
-                              / ((m2 - 1) * class_size * N2) ELSE 0.0 END, 6) <= 0.1 AS is_t_close
-            FROM g
-        """,
-        "theil_sen": """
-            WITH c AS (
-                SELECT c_nationkey, c_custkey AS t,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS y
-                FROM customer
-            ), pairs AS (
-                SELECT a.c_nationkey,
-                       CAST(b.y - a.y AS DOUBLE) / (b.t - a.t) AS s
-                FROM c a JOIN c b ON a.c_nationkey = b.c_nationkey AND a.t < b.t
-            ), m AS (
-                SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                       round(median(s), 6) + 0.0 AS slope
-                FROM pairs GROUP BY 1
-            ), n AS (
-                SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_points
-                FROM c GROUP BY 1
-            )
-            SELECT n.c_nationkey, n.n_points,
-                   COALESCE(m.n_pairs, 0) AS n_pairs, m.slope
-            FROM n LEFT JOIN m USING (c_nationkey)
-        """,
-        "theil_sen_bounded": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS INT) AS day,
-                       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-                FROM events GROUP BY 1, 2
-            ), pairs AS (
-                SELECT a.event_type,
-                       CAST(b.y - a.y AS DOUBLE) / (b.day - a.day) AS s
-                FROM daily a JOIN daily b
-                  ON a.event_type = b.event_type AND a.day < b.day
-            ), m AS (
-                SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                       round(median(s), 6) + 0.0 AS slope
-                FROM pairs GROUP BY 1
-            ), n AS (
-                SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_points
-                FROM daily GROUP BY 1
-            )
-            SELECT n.event_type, n.n_points,
-                   COALESCE(m.n_pairs, 0) AS n_pairs, m.slope
-            FROM n LEFT JOIN m USING (event_type)
-        """,
-        "acf_lags": """
-            WITH b AS (
-                SELECT event_type, event_id AS t,
-                       CAST(round(value * 100) AS BIGINT) AS x
-                FROM events
-            ), led AS (
-                SELECT event_type, x,
-                       LEAD(x, 1) OVER w AS l1,
-                       LEAD(x, 2) OVER w AS l2,
-                       LEAD(x, 3) OVER w AS l3
-                FROM b
-                WINDOW w AS (PARTITION BY event_type ORDER BY t)
-            ), agg AS (
-                SELECT event_type,
-                       CAST(COUNT(*) AS HUGEINT) AS n,
-                       CAST(SUM(x) AS HUGEINT) AS S,
-                       CAST(SUM(x * x) AS HUGEINT) AS SS,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x * l1 END) AS HUGEINT) AS cr1,
-                       CAST(SUM(CASE WHEN l1 IS NOT NULL THEN x END) AS HUGEINT) AS hd1,
-                       CAST(SUM(l1) AS HUGEINT) AS tl1,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x * l2 END) AS HUGEINT) AS cr2,
-                       CAST(SUM(CASE WHEN l2 IS NOT NULL THEN x END) AS HUGEINT) AS hd2,
-                       CAST(SUM(l2) AS HUGEINT) AS tl2,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x * l3 END) AS HUGEINT) AS cr3,
-                       CAST(SUM(CASE WHEN l3 IS NOT NULL THEN x END) AS HUGEINT) AS hd3,
-                       CAST(SUM(l3) AS HUGEINT) AS tl3
-                FROM led GROUP BY 1
-            ), long AS (
-                SELECT event_type, 1 AS lag, cr1 AS cr, hd1 AS hd, tl1 AS tl, n, S, SS FROM agg
-                UNION ALL
-                SELECT event_type, 2, cr2, hd2, tl2, n, S, SS FROM agg
-                UNION ALL
-                SELECT event_type, 3, cr3, hd3, tl3, n, S, SS FROM agg
-            )
-            SELECT event_type, CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n,
-                   CASE WHEN n * n * SS - n * S * S <> 0 AND n > lag THEN
-                       round(CAST(n * n * COALESCE(cr, 0)
-                                  - n * S * (COALESCE(hd, 0) + COALESCE(tl, 0))
-                                  + (n - lag) * S * S AS DOUBLE)
-                             / CAST(n * n * SS - n * S * S AS DOUBLE), 6)
-                   END + 0.0 AS r
-            FROM long
-        """,
-        "holt_brown": _holt_brown_sql(n_lags=8, horizon=1),
-        "bitemporal_asof": """
-            WITH v AS (
-                SELECT n_nationkey AS vk, 0 AS vf, 1000 AS vt, 0 AS tf, 500 AS tt,
-                       'v1:' || n_name AS belief FROM nation
-                UNION ALL
-                SELECT n_nationkey, 0, 1000, 500, NULL, 'v1c:' || n_name FROM nation
-                UNION ALL
-                SELECT n_nationkey, 1000, NULL, 0, NULL, 'v2:' || n_name FROM nation
-            ), q AS (
-                SELECT c_custkey, c_nationkey AS k,
-                       c_custkey % 2000 AS valid_at,
-                       c_custkey * 7 % 1000 AS tx_at
-                FROM customer
-            )
-            SELECT q.c_custkey, q.k, q.valid_at, q.tx_at, v.belief
-            FROM q LEFT JOIN v
-              ON q.k = v.vk
-             AND v.vf <= q.valid_at AND (v.vt IS NULL OR q.valid_at < v.vt)
-             AND v.tf <= q.tx_at AND (v.tt IS NULL OR q.tx_at < v.tt)
-        """,
-        "containment_pairs": f"""
-            WITH s AS (
-                SELECT doc_id AS id, list_distinct({_shingles3_sql()}) AS grams
-                FROM documents
-            ), s2 AS (
-                SELECT id, grams, len(grams) AS sz FROM s WHERE len(grams) > 0
-            ), p AS (
-                SELECT id, unnest(grams) AS g FROM s2
-            ), rare AS (
-                SELECT g FROM p GROUP BY g HAVING COUNT(*) <= 64
-            ), pr AS (
-                SELECT p.id, p.g FROM p JOIN rare USING (g)
-            ), sh AS (
-                SELECT x.id AS id_a, y.id AS id_b, COUNT(*) AS shared
-                FROM pr x JOIN pr y USING (g)
-                WHERE x.id <> y.id
-                GROUP BY 1, 2
-            )
-            SELECT id_a, id_b,
-                   round(CAST(shared AS DOUBLE) / s2.sz, 6) AS containment
-            FROM sh JOIN s2 ON s2.id = sh.id_a
-            WHERE round(CAST(shared AS DOUBLE) / s2.sz, 6) >= 0.6
-        """,
-        # The UNBLOCKED brute form — every green proves the Spark side's
-        # asymmetric prefix-filter blocker has no false negatives.
-        "containment_blocked": f"""
-            WITH s AS (
-                SELECT doc_id AS id, list_distinct({_shingles3_sql()}) AS grams
-                FROM documents
-            ), s2 AS (
-                SELECT id, grams, len(grams) AS sz FROM s WHERE len(grams) > 0
-            ), p AS (
-                SELECT id, unnest(grams) AS g FROM s2
-            ), sh AS (
-                SELECT x.id AS id_a, y.id AS id_b, COUNT(*) AS shared
-                FROM p x JOIN p y USING (g)
-                WHERE x.id <> y.id
-                GROUP BY 1, 2
-            )
-            SELECT id_a, id_b,
-                   CAST(shared AS DOUBLE) / CAST(s2.sz AS DOUBLE) AS containment
-            FROM sh JOIN s2 ON s2.id = sh.id_a
-            WHERE CAST(shared AS DOUBLE) / CAST(s2.sz AS DOUBLE) >= 0.75
-        """,
-        # Truth = exact all-shared-gram Jaccard >= 0.5; candidates = the
-        # portable MinHash banding CTEs (one source of truth with the
-        # dedup_minhash_portable oracle); metrics are exact counts + one
-        # division each, f1 in the same expression order as Spark.
-        "dedup_candidate_eval": f"""
-            WITH {_minhash_portable_ctes(16, 4)}, ts AS (
-                SELECT doc_id AS id, list_distinct({_shingles3_sql()}) AS grams
-                FROM documents
-            ), ts2 AS (
-                SELECT id, len(grams) AS sz FROM ts WHERE len(grams) > 0
-            ), tp AS (
-                SELECT id, unnest(grams) AS g FROM ts WHERE len(grams) > 0
-            ), tsh AS (
-                SELECT x.id AS id_a, y.id AS id_b, COUNT(*) AS shared
-                FROM tp x JOIN tp y USING (g)
-                WHERE x.id < y.id
-                GROUP BY 1, 2
-            ), truth AS (
-                SELECT tsh.id_a, tsh.id_b
-                FROM tsh
-                JOIN ts2 a ON a.id = tsh.id_a
-                JOIN ts2 b ON b.id = tsh.id_b
-                WHERE CAST(shared AS DOUBLE)
-                      / CAST(a.sz + b.sz - shared AS DOUBLE) >= 0.5
-            ), hits AS (
-                SELECT t.id_a, t.id_b
-                FROM truth t JOIN cands c
-                  ON c.id_a = t.id_a AND c.id_b = t.id_b
-            ), counts AS (
-                SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
-                       (SELECT COUNT(*) FROM cands) AS n_cand,
-                       (SELECT COUNT(*) FROM hits) AS n_hit
-            ), pr AS (
-                SELECT n_truth, n_cand, n_hit,
-                       CASE WHEN n_cand > 0
-                            THEN CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE)
-                            ELSE 0.0 END AS precision,
-                       CASE WHEN n_truth > 0
-                            THEN CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE)
-                            ELSE 0.0 END AS recall
-                FROM counts
-            )
-            SELECT n_truth, n_cand, n_hit, precision, recall,
-                   CASE WHEN precision + recall > 0
-                        THEN 2.0 * precision * recall / (precision + recall)
-                        ELSE 0.0 END AS f1
-            FROM pr
-        """,
-        "dedup_soft_weights": """
-            WITH n AS (
-                SELECT doc_id,
-                       array_to_string(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+'), ' ') AS key
-                FROM documents
-            ), c AS (
-                SELECT key, MIN(doc_id) AS cluster_id, COUNT(*) AS cluster_size
-                FROM n GROUP BY key
-            )
-            SELECT n.doc_id, c.cluster_id,
-                   CAST(c.cluster_size AS BIGINT) AS cluster_size,
-                   round(1.0 / c.cluster_size, 6) AS weight
-            FROM n JOIN c USING (key)
-        """,
-        "mix_shift": """
-            WITH two AS (
-                SELECT year(o_orderdate) = 1996 AS is_b,
-                       o_orderpriority AS segment,
-                       CAST(round(o_totalprice * 100) AS BIGINT) AS v
-                FROM orders WHERE year(o_orderdate) IN (1995, 1996)
-            ), seg AS (
-                SELECT segment,
-                       CAST(SUM(CASE WHEN NOT is_b THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                       CAST(SUM(CASE WHEN is_b THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-                       CAST(SUM(CASE WHEN NOT is_b THEN v ELSE 0 END) AS BIGINT) AS s_a,
-                       CAST(SUM(CASE WHEN is_b THEN v ELSE 0 END) AS BIGINT) AS s_b
-                FROM two GROUP BY segment
-            ), tot AS (
-                SELECT CAST(SUM(n_a) AS BIGINT) AS tot_a, CAST(SUM(n_b) AS BIGINT) AS tot_b FROM seg
-            ), fx AS (
-                SELECT segment, n_a, n_b,
-                       CAST(n_a AS DOUBLE) / tot_a AS w1,
-                       CAST(n_b AS DOUBLE) / tot_b AS w2,
-                       CASE WHEN n_a > 0 THEN CAST(s_a AS DOUBLE) / n_a ELSE 0.0 END AS r1,
-                       CASE WHEN n_b > 0 THEN CAST(s_b AS DOUBLE) / n_b ELSE 0.0 END AS r2
-                FROM seg, tot
-            )
-            SELECT segment, n_a, n_b,
-                   round(r1, 6) + 0.0 AS rate_a,
-                   round(r2, 6) + 0.0 AS rate_b,
-                   round((w2 - w1) * r1, 6) + 0.0 AS mix_effect,
-                   round(w1 * (r2 - r1), 6) + 0.0 AS rate_effect,
-                   round((w2 - w1) * (r2 - r1), 6) + 0.0 AS interaction,
-                   round((w2 - w1) * r1 + w1 * (r2 - r1) + (w2 - w1) * (r2 - r1), 6) + 0.0 AS total_effect
-            FROM fx
-        """,
-        "rake_keyphrases": f"""
-            WITH tk AS (
-                SELECT doc_id AS id,
-                       string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+') AS a
-                FROM documents
-            ), toks AS (
-                SELECT id, i - 1 AS pos, a[i] AS tok
-                FROM tk, LATERAL (SELECT unnest(generate_series(1, len(a))) AS i)
-                WHERE a[i] <> ''
-            ), nonstop AS (
-                SELECT id, pos, tok FROM toks
-                WHERE tok NOT IN ({", ".join(repr(s) for s in sorted(TA.LANG_STOPWORDS["en"]))})
-            ), isl AS (
-                SELECT id, pos, tok,
-                       pos - row_number() OVER (PARTITION BY id ORDER BY pos) AS g
-                FROM nonstop
-            ), ph AS (
-                SELECT id, g,
-                       list_slice(list(tok ORDER BY pos), 1, 4) AS words
-                FROM isl GROUP BY id, g
-            ), ph2 AS (
-                SELECT id, g, words, len(words) AS n_words FROM ph
-            ), wstats AS (
-                SELECT w, CAST(SUM(n_words) AS BIGINT) AS degree, COUNT(*) AS freq
-                FROM (SELECT n_words, unnest(words) AS w FROM ph2)
-                GROUP BY w
-            ), expl AS (
-                SELECT id, g, n_words, words, i AS wp, words[i] AS w
-                FROM ph2, LATERAL (SELECT unnest(generate_series(1, len(words))) AS i)
-            ), scored AS (
-                SELECT expl.id, expl.g,
-                       MAX(expl.n_words) AS n_words,
-                       array_to_string(MAX(expl.words), ' ') AS phrase,
-                       round(list_reduce(
-                           list_prepend(0.0::DOUBLE,
-                               list(CAST(degree AS DOUBLE) / freq ORDER BY wp)),
-                           (acc, x) -> acc + x), 6) AS score
-                FROM expl JOIN wstats ON wstats.w = expl.w
-                GROUP BY expl.id, expl.g
-            ), ranked AS (
-                SELECT id AS doc_id, phrase, CAST(n_words AS INT) AS n_words, score,
-                       CAST(row_number() OVER (PARTITION BY id
-                           ORDER BY score DESC, phrase ASC, g ASC) AS INT) AS rank
-                FROM scored
-            )
-            SELECT doc_id, phrase, n_words, score, rank FROM ranked WHERE rank <= 3
-        """,
-        "quantile_treatment_effect": """
-            WITH two AS (
-                SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS v
-                FROM events WHERE event_type IN ('purchase', 'view')
-            ), per_val AS (
-                SELECT g, v, COUNT(*) AS cnt FROM two GROUP BY 1, 2
-            ), cums AS (
-                SELECT *, SUM(cnt) OVER (PARTITION BY g ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                FROM per_val
-            ), ns AS (
-                SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM two GROUP BY g
-            ), pos AS (
-                SELECT g, n, q_pct,
-                       (n - 1) * q_pct // 100 + 1 AS k1,
-                       LEAST((n - 1) * q_pct // 100 + 2, n) AS k2,
-                       (n - 1) * q_pct % 100 AS frac
-                FROM ns, (SELECT unnest([25, 50, 75, 90]) AS q_pct)
-            ), ranks AS (
-                SELECT g, q_pct, n, frac, k1 AS k, 1 AS which FROM pos
-                UNION ALL
-                SELECT g, q_pct, n, frac, k2, 2 FROM pos
-            ), looked AS (
-                SELECT r.g, r.q_pct, r.n, r.frac, r.which, c.v
-                FROM ranks r JOIN cums c
-                  ON r.g = c.g AND c.cum - c.cnt < r.k AND r.k <= c.cum
-            ), per_arm AS (
-                SELECT g, q_pct, MAX(n) AS n, MAX(frac) AS frac,
-                       MAX(CASE WHEN which = 1 THEN v END) AS v1,
-                       MAX(CASE WHEN which = 2 THEN v END) AS v2
-                FROM looked GROUP BY 1, 2
-            ), qv AS (
-                SELECT g, q_pct, n,
-                       CAST(v1 AS DOUBLE) + frac * (v2 - v1) / 100.0 AS q
-                FROM per_arm
-            ), piv AS (
-                SELECT CAST(q_pct AS INT) AS q_pct,
-                       MAX(CASE WHEN g = 'purchase' THEN n END) AS n_treat,
-                       MAX(CASE WHEN g = 'view' THEN n END) AS n_control,
-                       round(MAX(CASE WHEN g = 'purchase' THEN q END), 6) AS q_treat,
-                       round(MAX(CASE WHEN g = 'view' THEN q END), 6) AS q_control
-                FROM qv GROUP BY 1
-            )
-            SELECT q_pct, n_treat, n_control, q_treat, q_control,
-                   round(q_treat - q_control, 6) + 0.0 AS qte
-            FROM piv
-        """,
-        "tfidf_cosine": """
-            WITH toks AS (
-                SELECT doc_id AS id,
-                       unnest(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+')) AS t
-                FROM documents
-            ), tf AS (
-                SELECT id, t, COUNT(*) AS tf FROM toks WHERE t <> '' GROUP BY 1, 2
-            ), nd AS (
-                SELECT COUNT(DISTINCT doc_id) AS N FROM documents
-            ), dfq AS (
-                SELECT t, COUNT(*) AS df FROM tf GROUP BY t HAVING COUNT(*) <= 64
-            ), posting AS (
-                SELECT id, tf.t,
-                       CAST(tf * CAST(round(ln(CAST(N AS DOUBLE) / df) * 1000000.0) AS BIGINT) AS HUGEINT) AS w
-                FROM tf JOIN dfq USING (t) CROSS JOIN nd
-            ), norms AS (
-                SELECT id, SUM(w * w) AS norm2 FROM posting GROUP BY id
-            ), dots AS (
-                SELECT x.id AS id_a, y.id AS id_b, SUM(x.w * y.w) AS dot
-                FROM posting x JOIN posting y ON x.t = y.t AND x.id < y.id
-                GROUP BY 1, 2
-            )
-            SELECT id_a, id_b,
-                   round(CAST(dot AS DOUBLE)
-                         / (sqrt(CAST(na.norm2 AS DOUBLE)) * sqrt(CAST(nb.norm2 AS DOUBLE))), 6) AS cosine
-            FROM dots
-            JOIN norms na ON na.id = dots.id_a
-            JOIN norms nb ON nb.id = dots.id_b
-            WHERE round(CAST(dot AS DOUBLE)
-                        / (sqrt(CAST(na.norm2 AS DOUBLE)) * sqrt(CAST(nb.norm2 AS DOUBLE))), 6) >= 0.5
-        """,
-        "hll_distinct": f"""
-            WITH h AS (
-                SELECT md5(CAST(user_id AS VARCHAR)) AS h FROM events
-            ), ext AS (
-                SELECT CAST(CAST('0x' || substr(h, 1, 12) AS BIGINT) % 64 AS INT) AS b,
-                       substr(h, 13, 15) AS tail
-                FROM h
-            ), rho AS (
-                SELECT b,
-                       CASE WHEN regexp_replace(tail, '^0+', '') = '' THEN 61
-                            ELSE (length(tail) - length(regexp_replace(tail, '^0+', ''))) * 4
-                                 + CASE substr(regexp_replace(tail, '^0+', ''), 1, 1)
-                                   {_HLL_DIGIT_CASE_SQL}
-                                   END + 1
-                       END AS rho
-                FROM ext
-            ), regs AS (
-                SELECT b, MAX(rho) AS m FROM rho GROUP BY b
-            ), spine AS (
-                SELECT CAST(unnest(range(64)) AS INT) AS b
-            ), filled AS (
-                SELECT spine.b, COALESCE(regs.m, 0) AS m
-                FROM spine LEFT JOIN regs USING (b)
-            ), agg AS (
-                SELECT list_reduce(
-                           list_prepend(0.0::DOUBLE,
-                               list(pow(2.0, -CAST(m AS DOUBLE)) ORDER BY b)),
-                           (a, x) -> a + x) AS S,
-                       CAST(SUM(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero
-                FROM filled
-            )
-            SELECT 64 AS m, v_zero,
-                   round(CASE WHEN 0.709 * 64 * 64 / S <= 2.5 * 64 AND v_zero > 0
-                              THEN 64.0 * ln(64.0 / CAST(v_zero AS DOUBLE))
-                              ELSE 0.709 * 64 * 64 / S END, 3) + 0.0 AS estimate
-            FROM agg
-        """,
-        "nelson_aalen": """
-            WITH s AS (
-                SELECT user_id, MIN(ts) AS t0 FROM events
-                WHERE event_type = 'signup' GROUP BY user_id
-            ), p AS (
-                SELECT e.user_id, MIN(e.ts) AS t1
-                FROM events e JOIN s USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts > s.t0
-                GROUP BY e.user_id
-            ), m AS (SELECT MAX(ts) AS tmax FROM events),
-            subj AS (
-                SELECT date_diff('day', CAST(s.t0 AS DATE),
-                                 CAST(COALESCE(p.t1, m.tmax) AS DATE)) AS day,
-                       p.t1 IS NOT NULL AS ev
-                FROM s LEFT JOIN p USING (user_id), m
-            ), c AS (
-                SELECT day, COUNT(*) AS n_all,
-                       CAST(SUM(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS n_events
-                FROM subj GROUP BY day
-            ), r AS (
-                SELECT day, n_events,
-                       SUM(n_all) OVER (ORDER BY day DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-                FROM c
-            ), f AS (
-                SELECT day, CAST(n_risk AS BIGINT) AS n_risk, n_events,
-                       CAST(n_events AS DOUBLE) / CAST(n_risk AS DOUBLE) AS inc
-                FROM r WHERE n_events > 0
-            )
-            SELECT day, n_risk, n_events,
-                   round(list_reduce(list(inc) OVER (ORDER BY day ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                       (a, b) -> a + b), 6) + 0.0 AS cum_hazard
-            FROM f
-        """,
-        "sprt_ab": _sprt_sql(),
-        "power_two_proportions": _power_sql(),
-        "fifo_open_lots": f"""
-            WITH {_FIFO_TRADES_SQL},
-            buys AS (
-                SELECT sym, ts AS buy_ts, p AS price, q AS qty,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS b0,
-                       COALESCE(SUM(q) OVER (PARTITION BY sym ORDER BY ts, q, p
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + q AS b1
-                FROM li WHERE side = 'buy'
-            ), sold AS (
-                SELECT sym, CAST(SUM(q) AS BIGINT) AS sq
-                FROM li WHERE side = 'sell' GROUP BY sym
-            )
-            SELECT b.sym, b.buy_ts, b.price, b.qty,
-                   CAST(b.b1 - GREATEST(b.b0, COALESCE(s.sq, 0)) AS BIGINT) AS remaining_qty,
-                   CAST((b.b1 - GREATEST(b.b0, COALESCE(s.sq, 0))) * b.price AS BIGINT) AS remaining_value_cents
-            FROM buys b LEFT JOIN sold s USING (sym)
-            WHERE b.b1 > COALESCE(s.sq, 0)
-        """,
-        "dsir_weights": """
-            WITH src_tok AS (
-                SELECT unnest(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+')) AS tok
-                FROM documents
-            ), tgt_tok AS (
-                SELECT unnest(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+')) AS tok
-                FROM documents WHERE doc_id % 20 = 0
-            ), sn AS (
-                SELECT CAST(CAST('0x' || substr(md5(tok), 1, 12) AS BIGINT) % 64 AS INT) AS bucket,
-                       CAST(COUNT(*) AS BIGINT) AS ns
-                FROM src_tok WHERE tok <> '' GROUP BY 1
-            ), tn AS (
-                SELECT CAST(CAST('0x' || substr(md5(tok), 1, 12) AS BIGINT) % 64 AS INT) AS bucket,
-                       CAST(COUNT(*) AS BIGINT) AS nt
-                FROM tgt_tok WHERE tok <> '' GROUP BY 1
-            ), spine AS (
-                SELECT CAST(unnest(range(64)) AS INT) AS bucket
-            ), tots AS (
-                SELECT (SELECT CAST(COALESCE(SUM(ns), 0) AS BIGINT) FROM sn) AS Ts,
-                       (SELECT CAST(COALESCE(SUM(nt), 0) AS BIGINT) FROM tn) AS Tt
-            ), r AS (
-                SELECT spine.bucket,
-                       ln(CAST(COALESCE(tn.nt, 0) + 1 AS DOUBLE) / (Tt + 64))
-                       - ln(CAST(COALESCE(sn.ns, 0) + 1 AS DOUBLE) / (Ts + 64)) AS llr
-                FROM spine
-                LEFT JOIN sn USING (bucket)
-                LEFT JOIN tn USING (bucket)
-                CROSS JOIN tots
-            ), doc_tok AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(trim(lower(COALESCE(text, ''))), '\\s+')) AS tok
-                FROM documents
-            ), doc_b AS (
-                SELECT doc_id,
-                       CAST(CAST('0x' || substr(md5(tok), 1, 12) AS BIGINT) % 64 AS INT) AS bucket,
-                       CAST(COUNT(*) AS BIGINT) AS c
-                FROM doc_tok WHERE tok <> '' GROUP BY 1, 2
-            )
-            SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-                   round(list_reduce(
-                       list_prepend(0.0::DOUBLE, list(c * llr ORDER BY bucket)),
-                       (a, b) -> a + b), 6) AS log_weight
-            FROM doc_b JOIN r USING (bucket)
-            GROUP BY doc_id
-        """,
-    }
-
-    # Derived contract-gate oracles: every rule recomputed over the SAME SQL
-    # the pipeline oracle declares, so the gate and the recast can never
-    # drift apart silently.
-    from area_etl_spark.plans.contracts import PIPELINE_CONTRACTS
-
-    def _contract_gate_sql(inner_sql: str, contract) -> str:
-        parts = [
-            f"SELECT 'not_null:{c.name}' AS rule, "
-            f"CAST(COUNT(CASE WHEN {c.name} IS NULL THEN 1 END) AS BIGINT) AS n_bad FROM out"
-            for c in contract.columns
-            if not c.nullable
-        ]
-        if contract.primary_key:
-            pk = contract.primary_key
-            present = " AND ".join(f"{k} IS NOT NULL" for k in pk)
-            parts.append(
-                f"SELECT 'unique_pk:{','.join(pk)}' AS rule, "
-                f"CAST(COUNT(CASE WHEN {present} THEN 1 END)"
-                f" - COUNT(DISTINCT ({', '.join(pk)})) AS BIGINT) AS n_bad FROM out"
-            )
-        return f"WITH out AS ({inner_sql}) " + " UNION ALL ".join(parts)
-
-    oracles["contract_gate_users"] = _contract_gate_sql(
-        oracles["pipeline_users"], PIPELINE_CONTRACTS["core.users"]
-    )
-    oracles["contract_gate_requirements"] = _contract_gate_sql(
-        oracles["pipeline_requirements"], PIPELINE_CONTRACTS["auac.requirement_templates"]
-    )
-    return oracles
+    return registry.oracles()

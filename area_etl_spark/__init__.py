@@ -13,6 +13,7 @@ operators/   relational + LLM operators (joins, unions, windows, dedup, ANN, ...
 sources/     extract (SQL / CSV / parquet) and load (append / overwrite / CSV)
 plans/       composite pipelines recasting the reference's migrate_* modules
 streaming/   Structured Streaming operators over the events table
+registry/    the query records: builder q_<key> + DuckDB oracle o_<key>, by family
 """
 
 from area_etl_spark.session import get_spark, load_tables

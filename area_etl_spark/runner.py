@@ -3,9 +3,10 @@
 Parity: ``/root/reference/main.py:35-70`` runs the selected ``migrate_*``
 modules sequentially over one connection context, timing each.  Here a
 module is a named set of pipeline plans over the table catalog; ``run``
-materializes each plan into the target lake as an atomic overwrite (the
-reference's truncate+reload idiom, ``src/utils.py:226``), partitioned where
-the plan declares it.
+materializes each plan into the target lake as a staged overwrite (the
+reference's truncate+reload idiom, ``src/utils.py:226``): written aside and
+renamed into place, so a failed write keeps the previous table.  Tables are
+partitioned where the plan declares it.
 
 Cross-module reads: the reference's cronos module reads a table the core
 module just loaded (``src/cronos.py:102`` extracts ``ulss`` from the core
@@ -152,7 +153,7 @@ MODULES: dict[str, list[PipelineSpec]] = {
         PipelineSpec("procedures", _with_now(P.procedures_pipeline)),
     ],
     # training-corpus preparation as a first-class runnable module: the LLM
-    # operator families materialized as lake tables, same atomic-overwrite
+    # operator families materialized as lake tables, same staged-overwrite
     # contract as the reference recasts
     "corpus": [
         PipelineSpec("clean_docs", _corpus_clean, partition_by=["lang"]),

@@ -6,9 +6,9 @@ Parity:
   append rows into a target table.
 - ``reload_overwrite``← ``truncate_pg_table`` + reload
   (utils.py:226 + the per-module truncate loops, core.py:56): the reference's
-  idempotent-reload idiom.  In Spark this is a single atomic
-  ``mode("overwrite")`` write — no separate TRUNCATE round-trip, and on a
-  cluster the write is parallel per partition.
+  idempotent-reload idiom.  In Spark this is one staged
+  ``mode("overwrite")`` write swapped in by rename — no separate TRUNCATE
+  round-trip, and on a cluster the write is parallel per partition.
 - ``export_csv``      ← ``export_tables_to_csv`` (utils.py:246).
 
 Scale notes: parquet sinks accept ``partition_by`` (hive-style layout) and
@@ -43,27 +43,26 @@ def reload_overwrite(
     partition_by: list[str] | None = None,
     before_publish: Callable[[], None] | None = None,
 ) -> None:
-    """Truncate-and-reload as one atomic overwrite (utils.py:226 idiom).
+    """Truncate-and-reload as one staged overwrite (utils.py:226 idiom).
 
-    With ``before_publish`` the write is staged: ``df`` lands in a hidden,
-    uniquely named sibling of ``path``, then ``before_publish()`` runs (the
-    runner's contract check reads the counts the write job observed).  If
-    the write or the check raises, the staging directory is deleted and
-    ``path`` keeps its previous table.  Otherwise the old table is deleted
-    and the staging directory renamed into its place — a reader in that
-    window finds no table (``write_versioned`` has no such window).
+    ``df`` lands in a hidden, uniquely named sibling of ``path``, then
+    ``before_publish()`` runs if given (the runner's contract check reads the
+    counts the write job observed).  If the write or the check raises, the
+    staging directory is deleted and ``path`` keeps its previous table.
+    Otherwise the old table is deleted and the staging directory renamed
+    into its place — a reader in that window finds no table
+    (``write_versioned`` has no such window).
     """
     writer = df.write.mode("overwrite").format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if before_publish is None:
-        writer.save(path)
-    else:
-        _staged_save(df.sparkSession, writer, path, before_publish)
+    _staged_save(df.sparkSession, writer, path, before_publish)
     logging.info("reload_overwrite: rewrote %s", path)
 
 
-def _staged_save(spark: SparkSession, writer, path: str, before_publish: Callable[[], None]) -> None:
+def _staged_save(
+    spark: SparkSession, writer, path: str, before_publish: Callable[[], None] | None
+) -> None:
     """Save to a staging sibling of ``path``, gate, then swap it in.  Goes
     through the Hadoop ``FileSystem`` of ``path``, so every scheme the
     writer accepts works."""
@@ -76,7 +75,8 @@ def _staged_save(spark: SparkSession, writer, path: str, before_publish: Callabl
     staging = fs_path(target.getParent(), f".{target.getName()}.staging-{uuid.uuid4().hex}")
     try:
         writer.save(staging.toString())
-        before_publish()
+        if before_publish is not None:
+            before_publish()
     except BaseException:
         fs.delete(staging, True)
         raise

@@ -55,7 +55,6 @@ def make_drift_monitor(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         nb = spark.read.parquet(baseline_dir).withColumnRenamed("n", "n_before")
         na = psi_bin_counts(batch_df, value_col, n_bins, lo, hi).withColumnRenamed(
             "n", "n_after"
@@ -77,7 +76,12 @@ def make_drift_monitor(
                 "n_bins_used"
             ),
         ).withColumn("batch_id", F.lit(batch_id))
-        summary.write.mode("overwrite").partitionBy("batch_id").parquet(monitor_dir)
+        (
+            summary.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(monitor_dir)
+        )
 
     return _apply
 

@@ -72,23 +72,11 @@ def test_driver_window_fully_oracled():
     assert missing == []
 
 
-def test_r13_window_is_the_prescribed_rotation():
-    """r13 rotation (VERDICT r12 items 1-2): the driver window leads with
-    the four r12 dtype hash-fails re-sampled after their parity fixes,
-    then the 40-key _R13_QUEUE (13 r11b deferrals + 27 r12 registrations,
-    none yet driver-sampled — eb_shrinkage, the fifth latent dtype fix,
-    sits inside it), then the r13 registrations.  Assert the exact
-    composition so a stray registration can't silently displace a key
-    from the window."""
-    first50 = list(QUERIES)[:50]
-    want = [*entrymod._R13_REGRESSION, *entrymod._R13_QUEUE, *entrymod._R13_NEW]
-    assert first50 == want[:50]
-    assert len(first50) == 50
-    assert "eb_shrinkage" in first50
-    # immediately after the window: the freshly-green r12 window keys
-    after = list(QUERIES)[50 : 50 + 5]
-    assert after == [k for k in want[50:] + entrymod._R12_WINDOW
-                     if k not in first50][:5]
+def test_driver_window_leads_queries():
+    """queries() opens with the literal DRIVER_WINDOW, in its order, so a
+    new registration can never displace a key from the driver's window."""
+    assert len(entrymod.DRIVER_WINDOW) == len(set(entrymod.DRIVER_WINDOW)) == 50
+    assert list(QUERIES)[:50] == entrymod.DRIVER_WINDOW
 
 
 def test_every_query_has_oracle_or_is_documented_rows_only():

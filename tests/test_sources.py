@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from area_etl_spark.sources.extract import extract_csv, extract_sql
@@ -39,6 +42,21 @@ def test_reload_overwrite_idempotent(spark, tables, tmp_path):
     reload_overwrite(df, path)
     reload_overwrite(df, path)
     assert read_back(spark, path).count() == df.count()
+
+
+def test_reload_overwrite_failed_write_keeps_previous_table(spark, tmp_path):
+    """A write that fails mid-job publishes nothing, also without a
+    before_publish hook: the previous rows stay readable and no staging
+    directory is left next to the table."""
+    path = str(tmp_path / "t")
+    reload_overwrite(spark.range(5), path)
+    bad = spark.range(5).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        reload_overwrite(bad, path)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [0, 1, 2, 3, 4]
+    assert os.listdir(tmp_path) == ["t"]
 
 
 def test_write_range_layout_clusters_values(spark, tables, tmp_path):

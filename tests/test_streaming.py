@@ -448,6 +448,32 @@ def test_drift_monitor_sink_flags_shifted_batch(spark, tmp_path):
     assert spark.read.parquet(mdir).count() == 2
 
 
+def test_drift_monitor_keeps_session_overwrite_mode(spark, tmp_path):
+    """The monitor sets dynamic partition overwrite on its own writer only:
+    the session conf is unchanged after a batch, and a later partitioned
+    reload_overwrite still replaces every partition."""
+    from area_etl_spark.sources.load import reload_overwrite
+    from area_etl_spark.streaming.monitor import make_drift_monitor, write_baseline_bins
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        batch = spark.createDataFrame([(100,), (900,)], ["v"])
+        bdir, mdir = str(tmp_path / "baseline"), str(tmp_path / "monitor")
+        write_baseline_bins(batch, "v", bdir, n_bins=10, lo=0, hi=1000)
+        make_drift_monitor(bdir, mdir, "v", n_bins=10, lo=0, hi=1000)(batch, 0)
+        assert spark.conf.get(key) == "static"
+
+        path = str(tmp_path / "docs")
+        docs = spark.createDataFrame([(1, "en"), (2, "it")], ["id", "lang"])
+        reload_overwrite(docs, path, partition_by=["lang"])
+        reload_overwrite(docs.where("lang = 'en'"), path, partition_by=["lang"])
+        assert [(r.id, r.lang) for r in spark.read.parquet(path).collect()] == [(1, "en")]
+    finally:
+        spark.conf.set(key, old)
+
+
 def _has_protobuf() -> bool:
     try:
         import google.protobuf  # noqa: F401

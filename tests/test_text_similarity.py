@@ -541,8 +541,9 @@ def test_dedup_pipeline_portable_matches_fast_path(spark):
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
-    fast = {r.doc_id for r in entrymod.q_dedup_full_pipeline(spark, sf).collect()}
-    portable = {r.doc_id for r in entrymod.q_dedup_pipeline_portable(spark, sf).collect()}
+    qs = entrymod.queries()
+    fast = {r.doc_id for r in qs["dedup_full_pipeline"](spark, sf).collect()}
+    portable = {r.doc_id for r in qs["dedup_pipeline_portable"](spark, sf).collect()}
     assert fast == portable
 
 

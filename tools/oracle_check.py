@@ -10,11 +10,12 @@ names, and order-insensitive values.  Usage::
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from area_etl_spark.session import TABLES, get_spark  # noqa: E402

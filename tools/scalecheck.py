@@ -17,10 +17,11 @@ as bench.py and skewbench.py.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from area_etl_spark.session import get_spark  # noqa: E402

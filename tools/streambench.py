@@ -15,12 +15,13 @@ max_snapshot_rows: at fact scale the rewrite tier is quadratic total I/O.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -44,7 +44,6 @@ def poisson_bootstrap_mean_ci(
     n_replicates: int = 50,
     lo: float = 0.05,
     hi: float = 0.95,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Per-key percentile CI for the mean of ``value_col`` (integer units).
 
@@ -53,16 +52,7 @@ def poisson_bootstrap_mean_ci(
     Values must be integers (cents) so replicate sums are exact; the only
     floats are the B per-replicate divisions and the final interpolated
     percentile, both rounded to 6 digits.
-
-    ``parallelism``: the B-way fan-out (one md5 per (row, replicate)) is
-    the heaviest map-side stage and runs BEFORE any exchange — when the
-    input arrives as one unsplittable partition (single small file
-    locally) the whole rows×B hash work lands on one core.  Pass the core
-    count to spread it; leave ``None`` at scale where the scan is already
-    wide (the minhash parallelism contract).
     """
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
     reps = F.explode(
         F.array(*[F.lit(b) for b in range(n_replicates)])
     ).alias("_b")

@@ -33,10 +33,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# bind_once's definition (and the HOF captured-expression rationale) lives in
-# operators.expressions; re-exported here because this module is where the
-# idiom originated and external callers import it as dedup.bind_once.
-from area_etl_spark.operators.expressions import bind_once, materialize  # noqa: F401
+from area_etl_spark.operators.expressions import bind_once, materialize
 
 # Mersenne prime 2^31-1: (a * x + b) with a, b, x < 2^31 stays within a
 # signed 64-bit long, so the hash family never overflows under ANSI mode.
@@ -104,13 +101,19 @@ def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return [(rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31)) for _ in range(num_hashes)]
 
 
-def minhash_signature(
-    text_col: str | Column, num_hashes: int = 64, shingle_k: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature as array<bigint> — pure Catalyst expressions.
+def _minhash_fold(
+    text_col: str | Column,
+    num_hashes: int,
+    shingle_k: int,
+    seed: int,
+    finish=None,
+):
+    """MinHash signature as array<bigint> in one pass — pure Catalyst
+    expressions, with an optional ``finish`` lambda.
 
     Each hash h_i(s) = (a_i * (xxhash64(s) mod p) + b_i) mod p with
-    p = 2^31-1; the signature element is min over shingles.
+    p = 2^31-1; the signature element is min over shingles.  The
+    arithmetic never exceeds 2^62 (ANSI-overflow-safe).
 
     Evaluation shape matters: the naive form (num_hashes independent
     ``array_min(transform(shingles, ...))`` expressions) re-derives the
@@ -119,19 +122,6 @@ def minhash_signature(
     shingles are materialized once, each shingle hash updates all 64
     accumulator slots via an indexed ``transform`` — O(shingles · hashes)
     arithmetic on one pass, ~100× faster, identical output values.
-    The arithmetic never exceeds 2^62 (ANSI-overflow-safe).
-    """
-    return _minhash_fold(text_col, num_hashes, shingle_k, seed)
-
-
-def _minhash_fold(
-    text_col: str | Column,
-    num_hashes: int,
-    shingle_k: int,
-    seed: int,
-    finish=None,
-):
-    """The single-pass MinHash fold, with an optional ``finish`` lambda.
 
     ``finish`` (if given) maps the 64-slot accumulator to the final value
     INSIDE the aggregate expression — callers that derive per-band hashes
@@ -193,24 +183,6 @@ def minhash_band_structs(
     return _minhash_fold(text_col, num_hashes, shingle_k, seed, finish=_bands)
 
 
-def minhash_bands(df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band: int) -> DataFrame:
-    """Explode a signature into (id, band_id, band_hash) — the LSH bucketing key."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.concat_ws(",", *[F.col(sig_col)[b * rows_per_band + r] for r in range(rows_per_band)])
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return df.select(F.col(id_col), F.explode(band_structs).alias("band")).select(
-        id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -219,7 +191,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     seed: int = 42,
-    parallelism: int | None = None,
     max_bucket: int | None = 256,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
@@ -228,12 +199,6 @@ def minhash_lsh_pairs(
     on (band_id, band_hash) (ONE shuffle, key-partitioned) → distinct pairs.
     Never all-pairs: only documents sharing a band bucket ever meet.
     Returns (id_a, id_b) with id_a < id_b.
-
-    ``parallelism``: the signature stage is CPU-bound per row; when the input
-    arrives in few partitions (one small file locally) pass the cluster's
-    core count to spread it.  Leave ``None`` at scale — a 100 TB corpus
-    already lands in thousands of scan partitions and a forced repartition
-    would only add a shuffle of the full text column.
 
     ``max_bucket``: hot-bucket guard for adversarial corpora, ON by default
     (256).  m copies of one boilerplate page land in the SAME
@@ -251,8 +216,6 @@ def minhash_lsh_pairs(
     trusted corpora.  The window partitions by the same key the self-join
     shuffles on, so the guard adds no extra exchange.
     """
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
     structs = minhash_band_structs(text_col, num_hashes, bands, shingle_k, seed)
     banded = df.select(F.col(id_col), F.explode(structs).alias("band")).select(
         id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
@@ -295,19 +258,11 @@ def minhash_lsh_pairs_portable(
     num_hashes: int = 16,
     bands: int = 4,
     n: int = 3,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via md5-based MinHash — the ENGINE-PORTABLE
     variant with a full SQL oracle.  ``n`` is the shingle width (tokens per
     gram); it must match whatever ground truth the candidates are scored
     against (``dedup_candidate_eval`` passes its own ``n`` through).
-
-    ``parallelism``: the md5 signature fold (num_hashes digests per shingle)
-    is by far the heaviest per-row stage and runs map-side, BEFORE the
-    groupBy exchange — when the input arrives in one unsplittable partition
-    it is single-threaded.  Pass the core count to spread it (one cheap
-    shuffle of the raw text); leave ``None`` at scale where the scan is
-    already wide (same contract as ``minhash_lsh_pairs``).
 
     ``minhash_lsh_pairs`` (the scale path) folds ``xxhash64`` signatures in
     one pass — fast, but no other engine reproduces Spark's seeded xxhash64,
@@ -323,8 +278,6 @@ def minhash_lsh_pairs_portable(
     (band_id, band_hash), distinct pairs — never all-pairs.
     """
     rows_per_band = num_hashes // bands
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
     toks = F.array_distinct(shingles(normalize_tokens(text_col), n))
     exploded = df.select(F.col(id_col), F.explode(toks).alias("tok")).where(F.col("tok") != "")
     sigs = exploded.groupBy(id_col).agg(
@@ -439,11 +392,6 @@ def simhash_portable(
     return staged.select(F.col(id_col), packed.cast("int").alias("simhash16"))
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints (popcount of xor)."""
-    return F.bit_count(a.bitwiseXOR(b)).cast("int")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     candidates: DataFrame,
@@ -451,7 +399,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard verification over a blocked candidate-pair set.
 
@@ -465,8 +412,6 @@ def ngram_jaccard_pairs(
     pass over the corpus (2 scans otherwise — same rationale as
     ``containment_blocked``).
     """
-    if parallelism:
-        df = df.repartition(parallelism, F.col(id_col))
     sets_df = df.select(
         F.col(id_col),
         F.array_distinct(shingles(normalize_tokens(text_col), n)).alias("grams"),
@@ -902,7 +847,6 @@ def containment_blocked(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.75,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Two-tier directed containment — the composed scale-safe form of
     :func:`containment_pairs` that docs/SCALE.md prescribes (VERDICT r9
@@ -936,14 +880,9 @@ def containment_blocked(
     verify sides) reads it back: the five branches of this plan would
     otherwise each re-run the tokenize→shingle→distinct pass over the full
     corpus (5 scans, measured — the §8 "decide on a proxy you computed
-    once" shape).  ``parallelism`` spreads that single tokenize pass when
-    the input arrives in few partitions (one unsplittable file locally);
-    leave ``None`` at scale where the scan is already wide.
+    once" shape).
     """
-    base = df.select(F.col(id_col), F.col(text_col))
-    if parallelism:
-        base = base.repartition(parallelism, F.col(id_col))
-    sets_df = base.select(
+    sets_df = df.select(
         F.col(id_col).alias("_id"),
         F.array_distinct(shingles(normalize_tokens(text_col), n)).alias("_grams"),
     ).where(F.size("_grams") > 0).transform(materialize)

@@ -436,7 +436,6 @@ def approx_randomization_test(
     group_b: str,
     n_perm: int = 199,
     seed: str = "art",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Approximate randomization test (Noreen 1989; the NLP-standard
     significance test, Riezler & Maxwell 2005) for a difference in means —
@@ -455,20 +454,12 @@ def approx_randomization_test(
     either side lands empty are dropped from the count (documented; at any
     real n they don't occur).  Returns one row
     (n_a, n_b, observed_diff, n_perms_used, n_extreme, p_value).
-
-    ``parallelism``: the ×n_perm explode (one md5 per (row, perm)) is the
-    heaviest map-side stage and runs before the perm-id exchange — a
-    single-partition local scan would fold the whole rows×B hash work on
-    one core.  Pass the core count to spread it; leave ``None`` at scale
-    (the bootstrap/minhash parallelism contract).
     """
     two = df.where(F.col(group_col).isin([group_a, group_b])).select(
         F.col(id_col).alias("_id"),
         (F.col(group_col) == group_a).alias("_is_a"),
         F.col(value_col).cast("long").alias("_v"),
     )
-    if parallelism:
-        two = two.repartition(parallelism, F.col("_id"))
     obs = two.agg(
         F.sum(F.when(F.col("_is_a"), 1).otherwise(0)).alias("n_a"),
         F.sum(F.when(~F.col("_is_a"), 1).otherwise(0)).alias("n_b"),

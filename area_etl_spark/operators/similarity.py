@@ -242,7 +242,6 @@ def train_kmeans_codebook(
     iters: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    parallelism: int | None = None,
     materialize: bool = True,
 ) -> list[tuple[int, list[float]]]:
     """Train an IVF codebook with Lloyd's k-means on DataFrame primitives.
@@ -268,18 +267,14 @@ def train_kmeans_codebook(
     ``materialize``: the Lloyd loop reads its input ``iters``+1 times; by
     default the (id, vec) projection is materialized once
     (``localCheckpoint``) so each round reads the two columns back instead
-    of re-running the source scan/decode.  ``parallelism`` additionally
-    spreads that projection when the input arrives in few partitions (the
-    single-file local case); both are partition-invariant — the centroid
-    sums are exact fixed-point and commutative.  Pass
+    of re-running the source scan/decode.  The codebook does not depend on
+    the input's partitioning — the centroid sums are exact fixed-point and
+    commutative.  Pass
     ``materialize=False`` when the caller already hands in a materialized
     (id, vec) table (``semdedup_prune`` does).
     """
     if materialize:
-        src = df.select(F.col(id_col), F.col(vec_col))
-        if parallelism:
-            src = src.repartition(parallelism, F.col(id_col))
-        df = src.transform(_materialize)
+        df = df.select(F.col(id_col), F.col(vec_col)).transform(_materialize)
     cents = [
         (r[0], [float(x) for x in r[1]])
         for r in df.orderBy(id_col).limit(k).select(id_col, vec_col).collect()
@@ -963,7 +958,9 @@ def semdedup_prune(
     the within-cluster join, so each candidate pair folds one dot product
     instead of a dot plus two norms — identical doubles, the division
     still sees ``norm(a)·norm(b)``.  ``parallelism`` spreads the single
-    materialize pass in the few-partition local case.
+    materialize pass in the few-partition local case; unlike the other
+    operators it stays a parameter because ``bench.py`` and the benchmark
+    workloads pass it.
     """
     src = df.select(F.col(id_col), F.col(vec_col))
     if parallelism:

@@ -1721,7 +1721,7 @@ def kn_perplexity(
         # bind the token array once per row: the position lambda reads two
         # elements per bigram, and a captured (unbound) tokenize expression
         # would re-run split+trim+lower TWICE per position (guide §1.2 —
-        # per-task work; see dedup.bind_once)
+        # per-task work; see expressions.bind_once)
         bg = bind_once(
             toks_t,
             lambda tk: F.when(

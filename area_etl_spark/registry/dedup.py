@@ -422,10 +422,8 @@ def o_dedup_exact() -> str:
 
 def q_dedup_minhash_lsh(spark, sf_dir):
     tables = _tables(spark, sf_dir)
-    return D.minhash_lsh_pairs(
-        tables["documents"], "text", "doc_id", num_hashes=64, bands=16,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    docs = tables["documents"].repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16)
 
 
 def q_dedup_simhash(spark, sf_dir):
@@ -436,10 +434,9 @@ def q_dedup_simhash(spark, sf_dir):
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
     tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    candidates = D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16, parallelism=par)
-    return D.ngram_jaccard_pairs(docs, candidates, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
+    docs = tables["documents"].repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    candidates = D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16)
+    return D.ngram_jaccard_pairs(docs, candidates, "text", "doc_id", n=3, threshold=0.5)
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -607,7 +604,7 @@ def q_ann_ivf_trained_topk(spark, sf_dir):
     q = _query_vec(spark, sf_dir)
     emb = tables["embeddings"].where(F.col("vec_id") != 0)
     cents = SIM.train_kmeans_codebook(
-        emb, k=16, iters=3, parallelism=spark.sparkContext.defaultParallelism
+        emb.repartition(spark.sparkContext.defaultParallelism, "vec_id"), k=16, iters=3
     )
     assigned = SIM.assign_ivf_buckets(emb, cents)
     qsims = sorted(
@@ -638,9 +635,9 @@ def q_dedup_full_pipeline(spark, sf_dir):
 
     tables = _tables(spark, sf_dir)
     docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=64, bands=16, parallelism=par)
-    verified = D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
+    spread = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    cands = D.minhash_lsh_pairs(spread, "text", "doc_id", num_hashes=64, bands=16)
+    verified = D.ngram_jaccard_pairs(spread, cands, "text", "doc_id", n=3, threshold=0.5)
     comps = connected_components(verified.select("id_a", "id_b"))
     return dedup_keep_representatives(docs.select("doc_id", "lang", "source"), comps, "doc_id")
 
@@ -810,10 +807,8 @@ def q_dedup_minhash_portable(spark, sf_dir):
     dedup_minhash_lsh, with a full DuckDB oracle (lexicographic min of md5
     hex per seed over the distinct unigram set)."""
     tables = _tables(spark, sf_dir)
-    return D.minhash_lsh_pairs_portable(
-        tables["documents"], "text", "doc_id", num_hashes=16, bands=4,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    docs = tables["documents"].repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return D.minhash_lsh_pairs_portable(docs, "text", "doc_id", num_hashes=16, bands=4)
 def o_dedup_minhash_portable() -> str:
     return _minhash_portable_sql(num_hashes=16, bands=4)
 
@@ -856,12 +851,9 @@ def q_dedup_jaccard_portable(spark, sf_dir):
     """Exact 3-gram Jaccard over the PORTABLE MinHash candidates — the
     verification stage of the dedup pipeline with a full DuckDB oracle."""
     tables = _tables(spark, sf_dir)
-    docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", num_hashes=16, bands=4, parallelism=par
-    )
-    return D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
+    docs = tables["documents"].repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    cands = D.minhash_lsh_pairs_portable(docs, "text", "doc_id", num_hashes=16, bands=4)
+    return D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5)
 def o_dedup_jaccard_portable() -> str:
     return f"""
             WITH {_minhash_portable_ctes()}, {_jaccard_portable_ctes(0.5)}
@@ -904,11 +896,9 @@ def q_dedup_pipeline_portable(spark, sf_dir):
 
     tables = _tables(spark, sf_dir)
     docs = tables["documents"]
-    par = spark.sparkContext.defaultParallelism
-    cands = D.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", num_hashes=16, bands=4, parallelism=par
-    )
-    verified = D.ngram_jaccard_pairs(docs, cands, "text", "doc_id", n=3, threshold=0.5, parallelism=par)
+    spread = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    cands = D.minhash_lsh_pairs_portable(spread, "text", "doc_id", num_hashes=16, bands=4)
+    verified = D.ngram_jaccard_pairs(spread, cands, "text", "doc_id", n=3, threshold=0.5)
     comps = connected_components(verified.select("id_a", "id_b"))
     return dedup_keep_representatives(docs.select("doc_id", "lang", "source"), comps, "doc_id")
 def o_dedup_pipeline_portable() -> str:
@@ -1357,11 +1347,7 @@ def q_containment_blocked(spark, sf_dir):
     lost nothing."""
     from area_etl_spark.operators.dedup import containment_blocked
 
-    return containment_blocked(
-        _tables(spark, sf_dir)["documents"],
-        threshold=0.75,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return containment_blocked(_tables(spark, sf_dir)["documents"], threshold=0.75)
 # The UNBLOCKED brute form — every green proves the Spark side's
 # asymmetric prefix-filter blocker has no false negatives.
 def o_containment_blocked() -> str:

@@ -25,8 +25,8 @@ def q_bootstrap_ci(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     return poisson_bootstrap_mean_ci(
-        ev, ["event_type"], "event_id", "cents", n_replicates=50,
-        parallelism=spark.sparkContext.defaultParallelism,
+        ev.repartition(spark.sparkContext.defaultParallelism, "event_id"),
+        ["event_type"], "event_id", "cents", n_replicates=50,
     )
 def o_bootstrap_ci() -> str:
     return """
@@ -927,8 +927,8 @@ def q_randomization_test(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     return approx_randomization_test(
-        o, "o_orderkey", "o_orderpriority", "cents", "1-URGENT", "2-HIGH",
-        n_perm=199, parallelism=spark.sparkContext.defaultParallelism,
+        o.repartition(spark.sparkContext.defaultParallelism, "o_orderkey"),
+        "o_orderkey", "o_orderpriority", "cents", "1-URGENT", "2-HIGH", n_perm=199,
     )
 def o_randomization_test() -> str:
     return """

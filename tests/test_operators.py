@@ -2780,8 +2780,10 @@ def test_approx_randomization_test_signal_and_null(spark):
     )
     rn = approx_randomization_test(null, "id", "g", "v", "a", "b", n_perm=99).collect()[0]
     assert rn.p_value > 0.05, rn
-    # deterministic under the same seed
-    rn2 = approx_randomization_test(null, "id", "g", "v", "a", "b", n_perm=99).collect()[0]
+    # deterministic under the same seed, whatever the input's partitioning
+    rn2 = approx_randomization_test(
+        null.repartition(7, "id"), "id", "g", "v", "a", "b", n_perm=99
+    ).collect()[0]
     assert rn == rn2
 
 

@@ -111,6 +111,8 @@ def test_kmeans_codebook_separates_clusters(spark):
         groups.setdefault(r.ivf_bucket, set()).add(r.vec_id < 100)
     # each trained bucket is pure: all first-cluster or all second-cluster
     assert all(len(v) == 1 for v in groups.values()) and len(groups) == 2
+    # fixed-point centroid sums: the same codebook from any partitioning
+    assert train_kmeans_codebook(df.repartition(7, "vec_id"), k=2, iters=4) == cents
 
 
 def test_embedding_near_dup_pairs(spark):
@@ -534,17 +536,26 @@ def test_simhash_portable_locality(spark):
     assert 0 <= sig[1] < (1 << 16)
 
 
-def test_dedup_pipeline_portable_matches_fast_path(spark):
+def test_dedup_pipeline_portable_matches_fast_path(spark, tables):
     """The fully-oracled portable dedup pipeline and the xxhash64 fast path
     must keep the same survivor set — independent hash families, same
-    near-dup clusters."""
+    near-dup clusters.  The portable pairs do not depend on how the input
+    is partitioned (callers spread a single-file input themselves)."""
     import __spark_entry__ as entrymod
+    from area_etl_spark.operators.dedup import minhash_lsh_pairs_portable, ngram_jaccard_pairs
 
     sf = "/root/testdata/sf0.001"
     qs = entrymod.queries()
     fast = {r.doc_id for r in qs["dedup_full_pipeline"](spark, sf).collect()}
     portable = {r.doc_id for r in qs["dedup_pipeline_portable"](spark, sf).collect()}
     assert fast == portable
+
+    def pairs(docs):
+        cands = minhash_lsh_pairs_portable(docs, num_hashes=16, bands=4)
+        return {tuple(r) for r in ngram_jaccard_pairs(docs, cands, threshold=0.5).collect()}
+
+    docs = tables["documents"]
+    assert pairs(docs.repartition(7, "doc_id")) == pairs(docs)
 
 
 def test_pq_encode_recovers_seed_codes(spark):
@@ -1280,6 +1291,11 @@ def test_containment_blocked_equals_brute_and_prunes_boilerplate(spark):
         (r.id_a, r.id_b): r.containment
         for r in containment_blocked(docs, threshold=t).collect()
     }
+    # the same output from a differently partitioned input
+    assert {
+        (r.id_a, r.id_b): r.containment
+        for r in containment_blocked(docs.repartition(7, "doc_id"), threshold=t).collect()
+    } == got
 
     # brute reference: all shared-gram pairs, exact containment
     sets_df = docs.select(

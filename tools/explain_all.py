@@ -17,7 +17,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from area_etl_spark.session import get_spark  # noqa: E402
@@ -194,7 +195,7 @@ def main() -> None:
         # keep the tree, drop the verbose per-node details for readability
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", "```", tree.strip(), "```", ""]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(HEADLINE)} plans)")
 

@@ -42,7 +42,7 @@ def nb_train(
     normalizers.  Two hash aggregates, both map-side combined; nothing is
     collected to the driver.
 
-    Both model tables are MATERIALIZED (``localCheckpoint``) — that is what
+    Both model tables are MATERIALIZED (``materialize``) — that is what
     "train" means: ``nb_classify`` consumes each one twice (model join +
     vocab count; priors + normalizers), and without materialization every
     consumer re-runs the corpus featurize+explode from the source (4 scans

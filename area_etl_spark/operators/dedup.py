@@ -407,7 +407,7 @@ def ngram_jaccard_pairs(
     keyed by doc id, then a narrow similarity expression.  Returns pairs with
     jaccard >= threshold.
 
-    The shingle-set table is materialized once (``localCheckpoint``): both
+    The shingle-set table is materialized once (``materialize``): both
     join sides read it back instead of each re-running the tokenize→shingle
     pass over the corpus (2 scans otherwise — same rationale as
     ``containment_blocked``).
@@ -875,7 +875,7 @@ def containment_blocked(
     binary-representable (0.75 default) so ⌈t·|S|⌉ is engine-portable.
     Emits both directions when both clear ``threshold``; a≠b always.
 
-    The gram-set table is MATERIALIZED once (``localCheckpoint``) and every
+    The gram-set table is MATERIALIZED once (``materialize``) and every
     consumer (prefix build, document frequencies, probe postings, both
     verify sides) reads it back: the five branches of this plan would
     otherwise each re-run the tokenize→shingle→distinct pass over the full

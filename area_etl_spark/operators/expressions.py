@@ -65,7 +65,10 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       per-DataFrame and never explicitly unpersisted (operators return
       lazy plans; eviction is the GC) — size executor storage memory
       accordingly.  Use at 100 TB where a retry-the-whole-query failure
-      mode is unacceptable.
+      mode is unacceptable.  The plan is kept too, so an iterative
+      operator's per-round cuts nest: with AQE on, a loop that reads the
+      previous round twice plans ~4× slower per round (docs/SCALE.md) —
+      run iterative operators under ``local`` or ``reliable``.
     - ``reliable``: ``checkpoint`` to the directory named by
       ``SPARK_GRAFT_CHECKPOINT_DIR`` (set on the session on first use,
       unless it already has one) — survives executor loss

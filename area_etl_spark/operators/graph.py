@@ -7,9 +7,11 @@ iterative min-label propagation:
     label(v) ← min(label(v), min over neighbors u of label(u))
 
 repeated until a fixpoint.  Each round is two shuffles (join labels to
-edges, min-aggregate per node); ``localCheckpoint(eager)`` truncates the
-lineage every round so the plan doesn't grow unboundedly — the standard
-iterative-algorithm pattern on Spark.
+edges, min-aggregate per node); an eager ``materialize`` cuts the lineage
+every round so the plan doesn't grow unboundedly — the standard
+iterative-algorithm pattern on Spark.  Every iterative operator here cuts
+its rounds the same way, so ``SPARK_GRAFT_MATERIALIZE`` decides how the
+round tables are stored.
 
 Scale notes: plain propagation needs O(graph diameter) rounds; similarity
 graphs from LSH dedup have tiny components (bounded by bucket sizes), so
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from area_etl_spark.operators.expressions import materialize
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -74,12 +78,12 @@ def connected_components(
         pairs.select(both.alias("_e"))
         .select(F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
 
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize, eager=True)
 
     changed = 1
     for _ in range(max_iter):
@@ -98,7 +102,7 @@ def connected_components(
                 F.least(labels["label"], F.coalesce(F.col("nbr_label"), labels["label"])).alias("label"),
                 (F.coalesce(F.col("nbr_label"), labels["label"]) < labels["label"]).alias("_chg"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         changed = new_labels.where(F.col("_chg")).limit(1).count()
         labels = new_labels.drop("_chg")
@@ -138,7 +142,7 @@ def connected_components_star(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -176,7 +180,7 @@ def connected_components_star(
 
     stable = False
     for _ in range(max_rounds):
-        new_edges = _star(_star(edges, large=True), large=False).localCheckpoint(eager=True)
+        new_edges = materialize(_star(_star(edges, large=True), large=False), eager=True)
         delta = new_edges.exceptAll(edges).limit(1).count()
         stable = delta == 0 and new_edges.count() == edges.count()
         edges = new_edges
@@ -279,24 +283,40 @@ def pagerank_integer(
     Scale shape: per round one equi-join (ranks ⋈ edges on src — the big
     side; AQE broadcasts the rank table only while it's small) plus one
     groupBy(dst) with map-side combine — the Pregel-on-DataFrames pattern.
-    ``localCheckpoint(eager)`` truncates lineage per round like
-    ``connected_components``.  Degrees are computed once, outside the loop.
+    Each round is materialized like ``connected_components``.  Degrees are
+    computed once, outside the loop.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
+    return _pagerank_rounds(edges, None, src, dst, iterations, damping_pct, scale)
+
+
+def _pagerank_rounds(
+    edges: DataFrame, seeds: DataFrame | None, src: str, dst: str, iterations: int, damping_pct: int, scale: int
+) -> DataFrame:
+    """The loop behind both PageRank variants.  ``seeds=None`` makes every
+    node a seed (plain PageRank) by a literal flag, so no seed table is
+    joined."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(
+        materialize, eager=True
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    if seeds is not None:
+        sd = seeds.select(F.col(seeds.columns[0]).alias("node"), F.lit(True).alias("_seed")).distinct()
+        nodes = nodes.join(F.broadcast(sd), "node", "left")
+    nodes = materialize(nodes, eager=True)
+    seeded = F.lit(True) if seeds is None else F.col("_seed").isNotNull()
     base = (100 - damping_pct) * scale // 100
+    base_col = F.when(seeded, F.lit(base)).otherwise(F.lit(0)).cast("long")
     # loop-invariant: the (edge, out-degree) relation never changes — join it
-    # once and checkpoint, instead of re-shuffling the edge list every round
-    e_deg = e.join(deg, "src").localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+    # once and materialize, instead of re-shuffling the edge list every round
+    e_deg = materialize(e.join(deg, "src"), eager=True)
+    ranks = nodes.select(
+        "node", F.when(seeded, F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank")
+    )
     for _ in range(iterations):
         contrib = (
             e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -308,11 +328,11 @@ def pagerank_integer(
             .select(
                 "node",
                 (
-                    F.lit(base).cast("long")
+                    base_col
                     + F.expr(f"({damping_pct} * coalesce(_s, 0L)) div 100")
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     return ranks
 
@@ -330,17 +350,17 @@ def bfs_hops(
     Each round joins the current FRONTIER (nodes first reached last round —
     not the whole visited set) to the edge list and anti-joins out already-
     visited nodes: per round one equi-join shuffle + one anti-join, frontier
-    size bounded by the graph's expansion.  ``localCheckpoint`` truncates
-    lineage per round like the other iterative operators.  Integer hop
+    size bounded by the graph's expansion.  Each round is materialized like
+    the other iterative operators.  Integer hop
     labels ⇒ deterministic, and a bounded recursive CTE replays it exactly.
     Nodes unreachable within ``max_hops`` are absent from the output.
     """
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = fwd.unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().localCheckpoint(eager=True)
-    visited = und.sparkSession.createDataFrame([(source, 0)], "node long, hops int").localCheckpoint(
-        eager=True
+    ).distinct().transform(materialize, eager=True)
+    visited = und.sparkSession.createDataFrame([(source, 0)], "node long, hops int").transform(
+        materialize, eager=True
     )
     frontier = visited
     for hop in range(1, max_hops + 1):
@@ -350,11 +370,11 @@ def bfs_hops(
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(hop))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         if nxt.limit(1).count() == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = visited.unionByName(nxt).transform(materialize, eager=True)
         frontier = nxt
     return visited
 
@@ -404,7 +424,7 @@ def triangle_count(
         e = und.where(F.col("a") < F.col("b"))
     else:
         raise ValueError(f"orient must be 'id' or 'degree', got {orient!r}")
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e, eager=True)
     ij = e.select(F.col("a").alias("i"), F.col("b").alias("j"))
     jk = e.select(F.col("a").alias("j"), F.col("b").alias("k"))
     ik = e.select(F.col("a").alias("i"), F.col("b").alias("k"))
@@ -454,46 +474,28 @@ def ancestor_paths(
     flattens in O(log d) self-join shuffles, not d (30 rounds cover depth
     2^30).  Depth adds and path fragments concatenate during the doubling
     (fragment(n) spans n's parent..n's current ancestor, so two fragments
-    are always contiguous).  ``localCheckpoint`` truncates lineage each
-    round.  Roots (nodes never appearing as a child) have depth 0 and path
-    = their own id.
+    are always contiguous).  Each round is materialized.  Roots (nodes
+    never appearing as a child) have depth 0 and path = their own id.
 
     Raises after ``max_depth`` non-converged doublings — a cycle in what
     should be a forest (at 2^30 that is a data bug, not scale).
     """
     e = edges.select(F.col(child).alias("node"), F.col(parent).alias("anc"))
-    nodes = e.select("node").union(e.select(F.col("anc").alias("node"))).distinct()
-    # state per node: current ancestor, hops to it, fragment = ids from the
-    # node's parent up to that ancestor ('' for roots)
-    state = nodes.join(e, "node", "left").select(
-        "node",
-        F.coalesce(F.col("anc"), F.col("node")).alias("anc"),
-        F.when(F.col("anc").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
-        F.when(F.col("anc").isNull(), F.lit("")).otherwise(F.col("anc").cast("string")).alias("frag"),
+    root = F.col("anc").isNull()
+    # carried per node: hops to the current ancestor, and the fragment = ids
+    # from the node's parent up to that ancestor ('' for roots)
+    state = _pointer_doubling(
+        e,
+        {
+            "depth": (F.when(root, F.lit(0)).otherwise(F.lit(1)), lambda a, b: a + b),
+            "frag": (
+                F.when(root, F.lit("")).otherwise(F.col("anc").cast("string")),
+                lambda a, b: F.concat_ws("/", F.nullif(a, F.lit("")), F.nullif(b, F.lit(""))),
+            ),
+        },
+        ["node", "anc", "depth"],
+        max_depth,
     )
-    for _ in range(max_depth):
-        up = state.select(
-            F.col("node").alias("j_node"),
-            F.col("anc").alias("j_anc"),
-            F.col("depth").alias("j_depth"),
-            F.col("frag").alias("j_frag"),
-        )
-        nxt = (
-            state.join(up, state.anc == up.j_node)
-            .select(
-                "node",
-                F.col("j_anc").alias("anc"),
-                (F.col("depth") + F.col("j_depth")).alias("depth"),
-                F.concat_ws("/", F.nullif(F.col("frag"), F.lit("")), F.nullif(F.col("j_frag"), F.lit(""))).alias("frag"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if nxt.join(state, ["node", "anc", "depth"], "left_anti").isEmpty():
-            state = nxt
-            break
-        state = nxt
-    else:
-        raise ValueError(f"hierarchy deeper than 2^{max_depth} or cyclic")
     return state.select(
         "node",
         F.col("anc").alias("root"),
@@ -516,8 +518,8 @@ def bom_rollup(
     ``ancestor_paths`` flattens the tree; this carries a multiplicative
     weight through the same pointer doubling (products compose exactly
     like depth sums: fragment(n) spans n..current-ancestor, so two
-    fragments multiply) — O(log depth) self-join rounds, localCheckpoint
-    lineage truncation, cycle guard.  Quantities must be positive
+    fragments multiply) — O(log depth) self-join rounds, each
+    materialized, cycle guard.  Quantities must be positive
     integers; the product is exact BIGINT (bound: qty^depth < 2^63 — at
     qty ≤ 10 that is depth ≤ 18; lift to DECIMAL(38,0) past it).  Roots
     appear with units 1 under themselves.
@@ -527,39 +529,47 @@ def bom_rollup(
         F.col(parent).alias("anc"),
         F.col(qty_col).cast("long").alias("mult"),
     )
+    state = _pointer_doubling(
+        e,
+        {
+            "mult": (F.coalesce(F.col("mult"), F.lit(1)), lambda a, b: a * b),
+            # depth rides along purely as the cycle detector: a qty-1 cycle
+            # reaches a (anc, mult) fixpoint, but its depth keeps growing
+            "depth": (F.when(F.col("mult").isNull(), F.lit(0)).otherwise(F.lit(1)), lambda a, b: a + b),
+        },
+        ["node", "anc", "mult", "depth"],
+        max_depth,
+    )
+    return state.select("node", F.col("anc").alias("root"), F.col("mult").alias("units"))
+
+
+def _pointer_doubling(e: DataFrame, carried: dict, fixpoint: list[str], max_depth: int) -> DataFrame:
+    """The loop behind ``ancestor_paths`` and ``bom_rollup`` over (node, anc,
+    ...) parent edges ``e``; roots point at themselves.  ``carried`` maps
+    each extra state column to (its start value off the node's parent edge,
+    how a node's and its ancestor's values combine).  Stops once a round
+    changes no ``fixpoint`` column; raises after ``max_depth`` rounds."""
     nodes = e.select("node").union(e.select(F.col("anc").alias("node"))).distinct()
     state = nodes.join(e, "node", "left").select(
         "node",
         F.coalesce(F.col("anc"), F.col("node")).alias("anc"),
-        F.coalesce(F.col("mult"), F.lit(1)).alias("mult"),
-        # depth rides along purely as the cycle detector: a qty-1 cycle
-        # reaches a (anc, mult) fixpoint, but its depth keeps growing
-        F.when(F.col("mult").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
+        *[start.alias(c) for c, (start, _) in carried.items()],
     )
     for _ in range(max_depth):
-        up = state.select(
-            F.col("node").alias("j_node"),
-            F.col("anc").alias("j_anc"),
-            F.col("mult").alias("j_mult"),
-            F.col("depth").alias("j_depth"),
-        )
+        up = state.select(*[F.col(c).alias(f"j_{c}") for c in state.columns])
         nxt = (
             state.join(up, state.anc == up.j_node)
             .select(
                 "node",
                 F.col("j_anc").alias("anc"),
-                (F.col("mult") * F.col("j_mult")).alias("mult"),
-                (F.col("depth") + F.col("j_depth")).alias("depth"),
+                *[combine(F.col(c), F.col(f"j_{c}")).alias(c) for c, (_, combine) in carried.items()],
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
-        if nxt.join(state, ["node", "anc", "mult", "depth"], "left_anti").isEmpty():
-            state = nxt
-            break
+        if nxt.join(state, fixpoint, "left_anti").isEmpty():
+            return nxt
         state = nxt
-    else:
-        raise ValueError(f"hierarchy deeper than 2^{max_depth} or cyclic")
-    return state.select("node", F.col("anc").alias("root"), F.col("mult").alias("units"))
+    raise ValueError(f"hierarchy deeper than 2^{max_depth} or cyclic")
 
 
 def kcore_peel(
@@ -580,8 +590,8 @@ def kcore_peel(
 
     Returns (node, degree) over the surviving subgraph.  Per round: one
     degree aggregate + two semi-joins on the endpoint keys — all hash
-    shuffles bounded by the shrinking edge set; ``localCheckpoint`` after
-    each round truncates the growing plan (the CC/pagerank lineage
+    shuffles bounded by the shrinking edge set; a ``materialize`` after
+    each round cuts the growing plan (the CC/pagerank lineage
     discipline).  Undirected input expected as symmetric pairs; pass each
     edge once and it is symmetrized here.
     """
@@ -592,7 +602,7 @@ def kcore_peel(
         e = (
             e.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
     return (
         e.groupBy(F.col("a").alias("node"))
@@ -618,53 +628,12 @@ def personalized_pagerank_integer(
     Same conventions as :func:`pagerank_integer` (its docstring carries
     the full rationale): ALL-INTEGER units of 1/scale, fixed-k iterate,
     dangling mass leaks, one equi-join + one map-side-combined groupBy per
-    round with localCheckpoint lineage discipline.  Differences: seeds
+    round, each round materialized.  Differences: seeds
     start at ``scale``, everyone else at 0, and the per-round base term is
     ``(100 − d)·scale div 100`` FOR SEEDS ONLY (0 elsewhere) — non-seed
     scores are purely inherited walk mass.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    sd = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("_seed", F.lit(1))
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(F.broadcast(sd), "node", "left")
-        .select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
-        .localCheckpoint(eager=True)
-    )
-    base = (100 - damping_pct) * scale // 100
-    base_col = F.when(F.col("_seed") == 1, F.lit(base)).otherwise(F.lit(0)).cast("long")
-    e_deg = e.join(deg, "src").localCheckpoint(eager=True)
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("_seed") == 1, F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank"),
-    )
-    for _ in range(iterations):
-        contrib = (
-            e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("`rank` div `_deg`").alias("_c"))
-        )
-        sums = contrib.groupBy("dst").agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    base_col
-                    + F.expr(f"({damping_pct} * coalesce(_s, 0L)) div 100")
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _pagerank_rounds(edges, seeds, src, dst, iterations, damping_pct, scale)
 
 
 def common_neighbor_scores(
@@ -689,7 +658,7 @@ def common_neighbor_scores(
     with a documented recall tradeoff, while degrees/Jaccard still count
     the full graph.  Exact integers; Jaccard rounded once.
     """
-    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=False)
+    sym = materialize(_symmetrize(edges, src, dst))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("_deg"))
     mids = sym.select(F.col("b").alias("m"), F.col("a").alias("n"))
     if max_middle_degree is not None:
@@ -753,17 +722,17 @@ def label_propagation(
     (count DESC, label ASC) with no window at all, so both aggregates are
     map-side combinable and a power-law hub (one node, millions of
     neighbor labels) never lands in a single sort task (the hot-node skew
-    a row_number argmax would create); ``localCheckpoint(eager)``
-    truncates lineage per round.  Returns (node, label).
+    a row_number argmax would create); each round is materialized.
+    Returns (node, label).
     """
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    und = fwd.unionByName(rev).distinct().localCheckpoint(eager=True)
+    und = fwd.unionByName(rev).distinct().transform(materialize, eager=True)
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     for _ in range(rounds):
         nbr = (
@@ -779,7 +748,7 @@ def label_propagation(
         labels = (
             labels.join(best, "node", "left")
             .select("node", F.coalesce("_new", "label").alias("label"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     return labels
 
@@ -878,18 +847,18 @@ def dag_layers(
     keep the partially-propagated value, so pick rounds ≥ graph depth (a
     cycle, which has no finite layering, would saturate at ``rounds`` —
     detectable as layer == rounds).  Per round: one equi-join + one
-    map-side-combined max aggregate, localCheckpoint lineage truncation.
+    map-side-combined max aggregate, each round materialized.
     All-integer labels.  Returns (node, layer).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().localCheckpoint(
-        eager=True
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().transform(
+        materialize, eager=True
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    layers = nodes.withColumn("layer", F.lit(0).cast("long")).localCheckpoint(eager=True)
+    layers = nodes.withColumn("layer", F.lit(0).cast("long")).transform(materialize, eager=True)
     for _ in range(rounds):
         inc = (
             e.join(layers.withColumnRenamed("node", "src"), "src")
@@ -899,7 +868,7 @@ def dag_layers(
         nxt = (
             layers.join(inc, "node", "left")
             .select("node", F.coalesce("_cand", F.col("layer")).alias("layer"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         moved = (
             nxt.withColumnRenamed("layer", "_new")
@@ -933,18 +902,18 @@ def shortest_paths_weighted(
     graph's hop diameter; with non-negative weights the values only ever
     decrease toward the true distance, and a sweep that changes nothing
     stops early.  Per round one equi-join + one map-side-combined min
-    aggregate with localCheckpoint lineage truncation — the same shuffle
+    aggregate, each round materialized — the same shuffle
     shape as pagerank_integer; all-integer distances make every round
     bit-reproducible and the whole thing replayable as chained CTEs.
     Unreached nodes are absent.  Returns (node, dist).
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize, eager=True)
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(s), 0) for s in sources], "node long, dist long"
-    ).localCheckpoint(eager=True)
+    ).transform(materialize, eager=True)
     for _ in range(rounds):
         relax = (
             e.join(dist.withColumnRenamed("node", "src"), "src")
@@ -959,7 +928,7 @@ def shortest_paths_weighted(
                     F.coalesce("dist", F.lit(None)), F.coalesce("_cand", F.lit(None))
                 ).alias("dist"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         moved = (
             nxt.withColumnRenamed("dist", "_new")
@@ -1001,20 +970,20 @@ def hits_scores(
     score over its max, the normalization-invariant quantity — rounded to
     9 (ratios are ≤ 1, safely inside portable-round range).  Ties break
     by node id.  Scale shape per round: two equi-joins + two groupBys
-    with map-side combine (the Pregel-on-DataFrames pattern);
-    ``localCheckpoint(eager)`` truncates lineage per round.
+    with map-side combine (the Pregel-on-DataFrames pattern); each round
+    is materialized.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     dec = "decimal(38,0)"
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(
+        materialize, eager=True
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     hub = nodes.withColumn("h", F.lit(1).cast(dec))
     auth = None
@@ -1036,7 +1005,7 @@ def hits_scores(
             h_sums.withColumnRenamed("src", "node"), "node", "left"
         ).select("node", F.coalesce(F.col("h"), F.lit(0).cast(dec)).alias("h"))
         if i < iterations - 1:
-            hub = hub.localCheckpoint(eager=True)
+            hub = materialize(hub, eager=True)
     joined = auth.join(hub, "node")
     maxes = joined.agg(
         F.max("a").alias("ma"), F.max("h").alias("mh")
@@ -1087,7 +1056,7 @@ def adamic_adar_scores(
     (u, v, common, aa_score, ra_score) for non-adjacent pairs with
     ≥ ``min_common`` shared neighbors.
     """
-    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=False)
+    sym = materialize(_symmetrize(edges, src, dst))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("_deg"))
     mids = sym.select(F.col("b").alias("m"), F.col("a").alias("n"))
     if max_middle_degree is not None:

@@ -46,6 +46,8 @@ def dense_ids(
     # partitioning by materializing it once.  At lake scale the equivalent
     # stable snapshot is the written range layout itself
     # (``sources.load.write_range_layout``), not an in-memory checkpoint.
+    # Raw localCheckpoint, not ``materialize``: its persist mode keeps the
+    # lineage, so a lost block would recompute under new range bounds.
     staged = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
     counts = {r._pid: r.n for r in staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     if not counts:  # empty input: keep the schema, no map literal to build

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from area_etl_spark.operators.expressions import materialize
+
 
 def bradley_terry(
     df: DataFrame,
@@ -67,11 +69,10 @@ def bradley_terry(
             "_i",
         )
     )
-    # truncate lineage at the iteration boundary (the pagerank idiom) —
-    # without it each MM round nests the previous plan and planning time
-    # explodes
-    pairs = pairs.localCheckpoint(eager=True)
-    stats = stats.localCheckpoint(eager=True)
+    # cut lineage at the iteration boundary (the pagerank idiom) — without
+    # it each MM round nests the previous plan and planning time explodes
+    pairs = materialize(pairs, eager=True)
+    stats = materialize(stats, eager=True)
     p = stats.select("_i", F.lit(1.0).alias("_p"))
     for _ in range(iterations):
         pj = p.select(F.col("_i").alias("_j"), F.col("_p").alias("_pj"))
@@ -110,7 +111,7 @@ def bradley_terry(
         p = (
             raw.crossJoin(F.broadcast(total))
             .select("_i", (F.col("_pr") / F.col("_s")).alias("_p"))
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     from pyspark.sql import Window
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from area_etl_spark.operators.expressions import materialize
+
 
 def hash_sample_predicate(id_col: str | Column, fraction: float) -> Column:
     """Boolean Column: row is in the deterministic ``fraction`` sample.
@@ -421,6 +423,8 @@ def select_under_budget(
         if num_partitions
         else parts_src.repartitionByRange(*order)
     )
+    # raw localCheckpoint, not ``materialize``: persist keeps the lineage
+    # that could re-sample the range bounds (the dense_ids freeze)
     staged = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
         eager=True
     )
@@ -558,12 +562,12 @@ def ipf_weights(
         df = df.join(F.broadcast(cs), "_c").withColumn(
             "_w", F.col("_w") * (F.col("_ct") / F.col("_cs"))
         ).drop("_cs")
-        # truncate lineage each round: every iteration references df twice
-        # (cells ⋈ agg(cells)), so the UNchecked plan doubles per round —
+        # cut lineage each round: every iteration references df twice
+        # (cells ⋈ agg(cells)), so the uncut plan doubles per round —
         # 2^iters analysis blow-up long before any data moves.  The cell
         # table is aggregate-level (categories², not rows), so an eager
-        # localCheckpoint is O(small) — the connected_components recipe.
-        df = df.localCheckpoint(eager=True)
+        # materialize is O(small) — the connected_components recipe.
+        df = materialize(df, eager=True)
     return df.select(
         F.col("_r").alias(row_col),
         F.col("_c").alias(col_col),

@@ -266,7 +266,7 @@ def train_kmeans_codebook(
 
     ``materialize``: the Lloyd loop reads its input ``iters``+1 times; by
     default the (id, vec) projection is materialized once
-    (``localCheckpoint``) so each round reads the two columns back instead
+    (``materialize``) so each round reads the two columns back instead
     of re-running the source scan/decode.  The codebook does not depend on
     the input's partitioning — the centroid sums are exact fixed-point and
     commutative.  Pass
@@ -395,7 +395,7 @@ def embedding_near_dup_pairs(
     # ALL tables' signatures in one materialized pass: each self-join reads
     # the bucketed table twice, so the bits·dim signature fold would
     # otherwise re-run 2·num_tables times over the source (4 scans at the
-    # default L=2); one narrow (id, bucket…) localCheckpoint makes it one.
+    # default L=2); one narrow (id, bucket…) materialize makes it one.
     ids_only = df.select(F.col(id_col), F.col(vec_col))
     sigs = ids_only.select(
         F.col(id_col),

@@ -721,7 +721,7 @@ def bigram_lm_score(
     )
     # the bigram relation feeds the model build AND the scoring join, and
     # the model feeds the prefix marginal AND the join — materialize both
-    # once (localCheckpoint) or the corpus tokenize+explode re-runs three
+    # once (materialize) or the corpus tokenize+explode re-runs three
     # times (measured; per-branch pruning defeats ReuseExchange).  At scale
     # this trades one tokenize pass for a write+read of the bigram relation
     # — the §8 "compute the proxy once" shape; the model table is
@@ -1745,7 +1745,7 @@ def kn_perplexity(
     # marginals); without a materialization each branch re-runs the whole
     # tokenize→explode→count pass over the training corpus (4 scans,
     # measured — the column pruning differs per branch so ReuseExchange
-    # never fires).  One localCheckpoint makes the model vocabulary-sized
+    # never fires).  One materialize makes the model vocabulary-sized
     # state computed exactly once, the §8 "decide on the small table" shape.
     m = (
         _bigrams(train_df, False)

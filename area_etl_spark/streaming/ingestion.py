@@ -195,8 +195,9 @@ def make_versioned_appender(
                 F.col("_batch_id") != batch_id
             )
             stamped = base.unionByName(stamped)
-        # materialize BEFORE the publish: the new version must not lazily
-        # re-read the old snapshot dir mid-GC
+        # freeze BEFORE the publish: the new version must not lazily
+        # re-read the old snapshot dir mid-GC — a raw localCheckpoint, since
+        # ``materialize``'s persist mode would keep that read in the lineage
         rows = stamped.localCheckpoint(eager=True)
         n = rows.count()
         if n > max_snapshot_rows:
@@ -264,6 +265,8 @@ def make_leaderboard_applier(
         if current_version(state_dir) is not None:
             prev = read_versioned(spark, state_dir)
             part = merge_agg_states([prev, part], keys)
+        # freeze BEFORE the publish (raw localCheckpoint, not ``materialize``):
+        # ``prev`` reads the snapshot dir that write_versioned replaces
         state = part.localCheckpoint(eager=True)
         n = state.count()
         if n > max_state_rows:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from area_etl_spark.operators.aggregates import collect_sorted_list, exact_money_sum
@@ -5660,10 +5662,24 @@ def test_detect_bot_traffic(spark):
     assert out[4].n_events == 1 and out[4].mean_gap_ms is None
 
 
+def _checkpoint_files(spark) -> int:
+    """Files under the session's checkpoint directory (0 while it has none)."""
+    from urllib.parse import urlparse
+
+    ckpt_dir = spark.sparkContext.getCheckpointDir()
+    if ckpt_dir is None:
+        return 0
+    return sum(len(files) for _, _, files in os.walk(urlparse(ckpt_dir).path))
+
+
 def _materialize_roundtrip(spark):
     """Materialize a frame under the current dial and check every consumer
-    reads the values the plan computes."""
+    reads the values the plan computes; then run ``connected_components``,
+    whose rounds go through the same dial, and check its labels.  Returns
+    the frame and the number of files the components run added under the
+    session's checkpoint directory."""
     from area_etl_spark.operators.expressions import materialize
+    from area_etl_spark.operators.graph import connected_components
 
     df = spark.range(100).select((F.col("id") % 7).alias("k"), F.col("id"))
     expected = sorted(map(tuple, df.collect()))
@@ -5672,28 +5688,37 @@ def _materialize_roundtrip(spark):
     assert sorted(map(tuple, m.groupBy("k").count().collect())) == [
         (k, len([i for i in range(100) if i % 7 == k])) for k in range(7)
     ]
-    return m
+    before = _checkpoint_files(spark)
+    pairs = spark.createDataFrame([(2, 1), (2, 3), (3, 7), (5, 6)], "id_a int, id_b int")
+    labels = {r.node: r.label for r in connected_components(pairs).collect()}
+    assert labels == {1: 1, 2: 1, 3: 1, 7: 1, 5: 5, 6: 5}
+    return m, _checkpoint_files(spark) - before
 
 
 def test_materialize_local_mode(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
-    _materialize_roundtrip(spark)
+    _, added = _materialize_roundtrip(spark)
+    assert added == 0
 
 
 def test_materialize_persist_mode(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    m = _materialize_roundtrip(spark)
-    assert m.is_cached
+    m, added = _materialize_roundtrip(spark)
+    assert m.is_cached and added == 0
     m.unpersist()
+    # the components rounds cached one table each; drop them for later tests
+    spark.catalog.clearCache()
 
 
 def test_materialize_reliable_mode(spark, monkeypatch, tmp_path):
     """reliable checkpoints to SPARK_GRAFT_CHECKPOINT_DIR, setting it on
-    the session when the session has none."""
+    the session when the session has none — and the iterative operators'
+    round tables land there too."""
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-    _materialize_roundtrip(spark)
+    _, added = _materialize_roundtrip(spark)
     assert spark.sparkContext.getCheckpointDir() is not None
+    assert added > 0
 
 
 def test_materialize_bad_setting_fails_clearly(spark, monkeypatch):

@@ -10,7 +10,8 @@ them and they must not drift per module:
   the cheap local-mode lineage cut, but its blocks are executor-local and
   UNREPLICATED — an executor loss mid-query fails the job instead of
   recomputing, and corpus-sized checkpoints must fit executor
-  memory+disk).
+  memory+disk); :func:`materialize_loop` is its variant for the tables
+  an iterative operator's loop reads.
 """
 
 from __future__ import annotations
@@ -65,10 +66,8 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       per-DataFrame and never explicitly unpersisted (operators return
       lazy plans; eviction is the GC) — size executor storage memory
       accordingly.  Use at 100 TB where a retry-the-whole-query failure
-      mode is unacceptable.  The plan is kept too, so an iterative
-      operator's per-round cuts nest: with AQE on, a loop that reads the
-      previous round twice plans ~4× slower per round (docs/SCALE.md) —
-      run iterative operators under ``local`` or ``reliable``.
+      mode is unacceptable.  The tables iterative operators' loops read
+      are not persisted: see :func:`materialize_loop`.
     - ``reliable``: ``checkpoint`` to the directory named by
       ``SPARK_GRAFT_CHECKPOINT_DIR`` (set on the session on first use,
       unless it already has one) — survives executor loss
@@ -97,3 +96,15 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
 
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=eager)
+
+
+def materialize_loop(df: DataFrame, eager: bool = False) -> DataFrame:
+    """:func:`materialize` for a table an iterative operator's loop reads
+    (each round's result, and the setup tables every round joins).  Under
+    ``persist`` it cuts with ``localCheckpoint`` instead: a persisted table
+    keeps its plan, so each round would nest all earlier ones, and with AQE
+    on planning grows ~4× per round (``connected_components`` on a 7-edge
+    path ran out of an 8 GB driver heap)."""
+    if os.environ.get("SPARK_GRAFT_MATERIALIZE") == "persist":
+        return df.localCheckpoint(eager=eager)
+    return materialize(df, eager=eager)

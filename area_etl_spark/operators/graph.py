@@ -7,11 +7,11 @@ iterative min-label propagation:
     label(v) ← min(label(v), min over neighbors u of label(u))
 
 repeated until a fixpoint.  Each round is two shuffles (join labels to
-edges, min-aggregate per node); an eager ``materialize`` cuts the lineage
-every round so the plan doesn't grow unboundedly — the standard
+edges, min-aggregate per node); an eager ``materialize_loop`` cuts the
+lineage every round so the plan doesn't grow unboundedly — the standard
 iterative-algorithm pattern on Spark.  Every iterative operator here cuts
-its rounds the same way, so ``SPARK_GRAFT_MATERIALIZE`` decides how the
-round tables are stored.
+its rounds and setup tables the same way, so ``SPARK_GRAFT_MATERIALIZE``
+decides how they are stored.
 
 Scale notes: plain propagation needs O(graph diameter) rounds; similarity
 graphs from LSH dedup have tiny components (bounded by bucket sizes), so
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from area_etl_spark.operators.expressions import materialize
+from area_etl_spark.operators.expressions import materialize, materialize_loop
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -78,12 +78,12 @@ def connected_components(
         pairs.select(both.alias("_e"))
         .select(F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
         .distinct()
-        .transform(materialize, eager=True)
+        .transform(materialize_loop, eager=True)
     )
 
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
-    ).transform(materialize, eager=True)
+    ).transform(materialize_loop, eager=True)
 
     changed = 1
     for _ in range(max_iter):
@@ -102,7 +102,7 @@ def connected_components(
                 F.least(labels["label"], F.coalesce(F.col("nbr_label"), labels["label"])).alias("label"),
                 (F.coalesce(F.col("nbr_label"), labels["label"]) < labels["label"]).alias("_chg"),
             )
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
         changed = new_labels.where(F.col("_chg")).limit(1).count()
         labels = new_labels.drop("_chg")
@@ -142,7 +142,7 @@ def connected_components_star(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .transform(materialize, eager=True)
+        .transform(materialize_loop, eager=True)
     )
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -180,7 +180,7 @@ def connected_components_star(
 
     stable = False
     for _ in range(max_rounds):
-        new_edges = materialize(_star(_star(edges, large=True), large=False), eager=True)
+        new_edges = materialize_loop(_star(_star(edges, large=True), large=False), eager=True)
         delta = new_edges.exceptAll(edges).limit(1).count()
         stable = delta == 0 and new_edges.count() == edges.count()
         edges = new_edges
@@ -296,7 +296,7 @@ def _pagerank_rounds(
     node a seed (plain PageRank) by a literal flag, so no seed table is
     joined."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(
-        materialize, eager=True
+        materialize_loop, eager=True
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     nodes = (
@@ -307,13 +307,13 @@ def _pagerank_rounds(
     if seeds is not None:
         sd = seeds.select(F.col(seeds.columns[0]).alias("node"), F.lit(True).alias("_seed")).distinct()
         nodes = nodes.join(F.broadcast(sd), "node", "left")
-    nodes = materialize(nodes, eager=True)
+    nodes = materialize_loop(nodes, eager=True)
     seeded = F.lit(True) if seeds is None else F.col("_seed").isNotNull()
     base = (100 - damping_pct) * scale // 100
     base_col = F.when(seeded, F.lit(base)).otherwise(F.lit(0)).cast("long")
     # loop-invariant: the (edge, out-degree) relation never changes — join it
     # once and materialize, instead of re-shuffling the edge list every round
-    e_deg = materialize(e.join(deg, "src"), eager=True)
+    e_deg = materialize_loop(e.join(deg, "src"), eager=True)
     ranks = nodes.select(
         "node", F.when(seeded, F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank")
     )
@@ -332,7 +332,7 @@ def _pagerank_rounds(
                     + F.expr(f"({damping_pct} * coalesce(_s, 0L)) div 100")
                 ).alias("rank"),
             )
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
     return ranks
 
@@ -358,9 +358,9 @@ def bfs_hops(
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = fwd.unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().transform(materialize, eager=True)
+    ).distinct().transform(materialize_loop, eager=True)
     visited = und.sparkSession.createDataFrame([(source, 0)], "node long, hops int").transform(
-        materialize, eager=True
+        materialize_loop, eager=True
     )
     frontier = visited
     for hop in range(1, max_hops + 1):
@@ -370,11 +370,11 @@ def bfs_hops(
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(hop))
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
         if nxt.limit(1).count() == 0:
             break
-        visited = visited.unionByName(nxt).transform(materialize, eager=True)
+        visited = visited.unionByName(nxt).transform(materialize_loop, eager=True)
         frontier = nxt
     return visited
 
@@ -564,7 +564,7 @@ def _pointer_doubling(e: DataFrame, carried: dict, fixpoint: list[str], max_dept
                 F.col("j_anc").alias("anc"),
                 *[combine(F.col(c), F.col(f"j_{c}")).alias(c) for c, (_, combine) in carried.items()],
             )
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
         if nxt.join(state, fixpoint, "left_anti").isEmpty():
             return nxt
@@ -602,7 +602,7 @@ def kcore_peel(
         e = (
             e.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .transform(materialize)
+            .transform(materialize_loop)
         )
     return (
         e.groupBy(F.col("a").alias("node"))
@@ -727,12 +727,12 @@ def label_propagation(
     """
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    und = fwd.unionByName(rev).distinct().transform(materialize, eager=True)
+    und = fwd.unionByName(rev).distinct().transform(materialize_loop, eager=True)
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .transform(materialize, eager=True)
+        .transform(materialize_loop, eager=True)
     )
     for _ in range(rounds):
         nbr = (
@@ -748,7 +748,7 @@ def label_propagation(
         labels = (
             labels.join(best, "node", "left")
             .select("node", F.coalesce("_new", "label").alias("label"))
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
     return labels
 
@@ -851,14 +851,14 @@ def dag_layers(
     All-integer labels.  Returns (node, layer).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().transform(
-        materialize, eager=True
+        materialize_loop, eager=True
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    layers = nodes.withColumn("layer", F.lit(0).cast("long")).transform(materialize, eager=True)
+    layers = nodes.withColumn("layer", F.lit(0).cast("long")).transform(materialize_loop, eager=True)
     for _ in range(rounds):
         inc = (
             e.join(layers.withColumnRenamed("node", "src"), "src")
@@ -868,7 +868,7 @@ def dag_layers(
         nxt = (
             layers.join(inc, "node", "left")
             .select("node", F.coalesce("_cand", F.col("layer")).alias("layer"))
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
         moved = (
             nxt.withColumnRenamed("layer", "_new")
@@ -909,11 +909,11 @@ def shortest_paths_weighted(
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).transform(materialize, eager=True)
+    ).transform(materialize_loop, eager=True)
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(s), 0) for s in sources], "node long, dist long"
-    ).transform(materialize, eager=True)
+    ).transform(materialize_loop, eager=True)
     for _ in range(rounds):
         relax = (
             e.join(dist.withColumnRenamed("node", "src"), "src")
@@ -928,7 +928,7 @@ def shortest_paths_weighted(
                     F.coalesce("dist", F.lit(None)), F.coalesce("_cand", F.lit(None))
                 ).alias("dist"),
             )
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
         moved = (
             nxt.withColumnRenamed("dist", "_new")
@@ -977,13 +977,13 @@ def hits_scores(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     dec = "decimal(38,0)"
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(
-        materialize, eager=True
+        materialize_loop, eager=True
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .transform(materialize, eager=True)
+        .transform(materialize_loop, eager=True)
     )
     hub = nodes.withColumn("h", F.lit(1).cast(dec))
     auth = None
@@ -1005,7 +1005,7 @@ def hits_scores(
             h_sums.withColumnRenamed("src", "node"), "node", "left"
         ).select("node", F.coalesce(F.col("h"), F.lit(0).cast(dec)).alias("h"))
         if i < iterations - 1:
-            hub = materialize(hub, eager=True)
+            hub = materialize_loop(hub, eager=True)
     joined = auth.join(hub, "node")
     maxes = joined.agg(
         F.max("a").alias("ma"), F.max("h").alias("mh")

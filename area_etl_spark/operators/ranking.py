@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from area_etl_spark.operators.expressions import materialize
+from area_etl_spark.operators.expressions import materialize_loop
 
 
 def bradley_terry(
@@ -71,8 +71,8 @@ def bradley_terry(
     )
     # cut lineage at the iteration boundary (the pagerank idiom) — without
     # it each MM round nests the previous plan and planning time explodes
-    pairs = materialize(pairs, eager=True)
-    stats = materialize(stats, eager=True)
+    pairs = materialize_loop(pairs, eager=True)
+    stats = materialize_loop(stats, eager=True)
     p = stats.select("_i", F.lit(1.0).alias("_p"))
     for _ in range(iterations):
         pj = p.select(F.col("_i").alias("_j"), F.col("_p").alias("_pj"))
@@ -111,7 +111,7 @@ def bradley_terry(
         p = (
             raw.crossJoin(F.broadcast(total))
             .select("_i", (F.col("_pr") / F.col("_s")).alias("_p"))
-            .transform(materialize, eager=True)
+            .transform(materialize_loop, eager=True)
         )
     from pyspark.sql import Window
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from area_etl_spark.operators.expressions import materialize
+from area_etl_spark.operators.expressions import materialize_loop
 
 
 def hash_sample_predicate(id_col: str | Column, fraction: float) -> Column:
@@ -566,8 +566,8 @@ def ipf_weights(
         # (cells ⋈ agg(cells)), so the uncut plan doubles per round —
         # 2^iters analysis blow-up long before any data moves.  The cell
         # table is aggregate-level (categories², not rows), so an eager
-        # materialize is O(small) — the connected_components recipe.
-        df = materialize(df, eager=True)
+        # cut is O(small) — the connected_components recipe.
+        df = materialize_loop(df, eager=True)
     return df.select(
         F.col("_r").alias(row_col),
         F.col("_c").alias(col_col),

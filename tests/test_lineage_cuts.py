@@ -1,7 +1,8 @@
 """Where intermediates are stored is decided in one place: every lineage
-cut goes through ``expressions.materialize`` (so ``SPARK_GRAFT_MATERIALIZE``
-reaches it), except the few freezes that must never be recomputed.
-Checked without Spark."""
+cut goes through ``expressions.materialize`` or, for the tables an
+iterative operator's loop reads, ``expressions.materialize_loop`` (so
+``SPARK_GRAFT_MATERIALIZE`` reaches it), except the few freezes that must
+never be recomputed.  Checked without Spark."""
 
 from __future__ import annotations
 
@@ -15,7 +16,9 @@ PACKAGE = Path(area_etl_spark.__file__).parent
 # (module, enclosing function) of every allowed raw ``localCheckpoint`` call
 ALLOWED = sorted(
     [
-        ("operators/expressions.py", "materialize"),  # the helper itself
+        # the helpers themselves
+        ("operators/expressions.py", "materialize"),
+        ("operators/expressions.py", "materialize_loop"),
         # partition ids frozen against AQE re-sampling the range bounds
         ("operators/ids.py", "dense_ids"),
         ("operators/sampling.py", "select_under_budget"),

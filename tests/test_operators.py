@@ -5675,7 +5675,7 @@ def _checkpoint_files(spark) -> int:
 def _materialize_roundtrip(spark):
     """Materialize a frame under the current dial and check every consumer
     reads the values the plan computes; then run ``connected_components``,
-    whose rounds go through the same dial, and check its labels.  Returns
+    whose loop tables go through the same dial, and check its labels.  Returns
     the frame and the number of files the components run added under the
     session's checkpoint directory."""
     from area_etl_spark.operators.expressions import materialize
@@ -5702,11 +5702,18 @@ def test_materialize_local_mode(spark, monkeypatch):
 
 
 def test_materialize_persist_mode(spark, monkeypatch):
+    """persist caches compute-once tables; the components loop still cuts
+    its plans, so a 9-round path finishes (persisted rounds nest their
+    plans, and a 7-edge path ran out of driver heap)."""
+    from area_etl_spark.operators.graph import connected_components
+
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
     m, added = _materialize_roundtrip(spark)
     assert m.is_cached and added == 0
     m.unpersist()
-    # the components rounds cached one table each; drop them for later tests
+    path = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a int, id_b int")
+    assert sorted(map(tuple, connected_components(path).collect())) == [(i, 0) for i in range(10)]
+    # leave nothing cached for later tests
     spark.catalog.clearCache()
 
 

@@ -8,25 +8,27 @@ reference's truncate+reload idiom, ``src/utils.py:226``): written aside and
 renamed into place, so a failed write keeps the previous table.  Tables are
 partitioned where the plan declares it.
 
-Cross-module reads: the reference's cronos module reads a table the core
-module just loaded (``src/cronos.py:102`` extracts ``ulss`` from the core
-Postgres).  Here that maps to a pipeline reading a previously materialized
-lake path (``spark.read.parquet(out_dir/core/...)``); the default
-sequential submission order (core → poa → cronos → auac, the reference's
-``main.py`` order) preserves the dependency.
+Every pipeline is an independent plan: each reads only the source catalog,
+never another pipeline's lake table.  ``run`` therefore submits them all
+through one thread pool of ``min(pipelines, defaultParallelism)`` workers
+(Spark job submission is thread-safe, and the jobs share the executors
+under the session's scheduler).  A single small plan leaves most slots
+idle while the driver plans and commits it; concurrent pipelines fill
+those gaps.  Timings, the ledger and the per-pipeline log lines follow
+spec order whatever order the pipelines finish in.
 
-Scale notes: pipelines within a module are INDEPENDENT plans — the runner
-submits them sequentially by default (deterministic log order, one cluster's
-full parallelism per plan), or concurrently (``max_parallel > 1``) via a
-thread pool since Spark job submission is thread-safe and scheduler pools
-share the executors; at 100 TB concurrency helps when single plans can't
-saturate the cluster (many small dimension tables).
+Failure: once a pipeline raises, pipelines that have not started never
+start; the running ones finish and publish their tables.  ``run`` then
+re-raises the first failed pipeline's own exception, in spec order, with
+a ``runner pipeline: <module>.<name>`` note.  Each table stays atomic on
+its own; there is no cross-table transaction.
 """
 
 from __future__ import annotations
 
 import argparse
 import logging
+import threading
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -34,6 +36,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from area_etl_spark.plans import pipelines as P
 from area_etl_spark.plans.contracts import PIPELINE_CONTRACTS, enforce_contract
@@ -169,11 +172,11 @@ def run(
     sf_dir: str,
     out_dir: str,
     modules: list[str] | None = None,
-    max_parallel: int = 1,
     versioned: bool = False,
     ledger: bool = False,
 ) -> dict[str, float]:
-    """Run the selected modules' pipelines into ``out_dir``; returns timings.
+    """Run the selected modules' pipelines into ``out_dir`` concurrently;
+    returns ``{module.name: seconds}`` in spec order.
 
     ``versioned=True`` publishes every table through the manifest-pointer
     layout (``write_versioned``) instead of a plain directory overwrite —
@@ -188,34 +191,55 @@ def run(
     now = _now_naive()  # one shared audit clock per invocation
     selected = modules or list(MODULES)
     specs = [(m, s) for m in selected for s in MODULES[m]]
-    timings: dict[str, float] = {}
+    sc = spark.sparkContext
+    failed = threading.Event()
 
-    def _one(item: tuple[str, PipelineSpec]) -> None:
-        module, spec = item
+    def _one(module: str, spec: PipelineSpec) -> tuple[float, int] | None:
+        if failed.is_set():
+            return None  # a pipeline already failed: this one never starts
         key = f"{module}.{spec.name}"
+        tag = f"runner:{key}"
+        sc.addJobTag(tag)
         t0 = time.perf_counter()
-        # Contract gate: the reference's DDL layer (typing / NOT NULL / PK)
-        # enforced engine-side INSIDE the write — the sink stages the table,
-        # and a violated rule aborts the publish with named rule counts,
-        # leaving the previous table in place.
-        contract = PIPELINE_CONTRACTS.get(key)
-        gate = enforce_contract(spec.build(spark, tables, now), contract)
-        check = gate.check if contract is not None else None
-        path = f"{out_dir}/{module}/{spec.name}"
-        partition_by = spec.partition_by or None
-        if versioned:
-            write_versioned(gate.frame, path, partition_by=partition_by, before_publish=check)
-        else:
-            reload_overwrite(gate.frame, path, partition_by=partition_by, before_publish=check)
-        timings[key] = round(time.perf_counter() - t0, 3)
-        logging.info("runner: %s done in %.2fs, %d rows", key, timings[key], gate.rows)
+        try:
+            # Contract gate: the reference's DDL layer (typing / NOT NULL /
+            # PK) enforced engine-side INSIDE the write — the sink stages the
+            # table, and a violated rule aborts the publish with named rule
+            # counts, leaving the previous table in place.
+            contract = PIPELINE_CONTRACTS.get(key)
+            gate = enforce_contract(spec.build(spark, tables, now), contract)
+            check = gate.check if contract is not None else None
+            path = f"{out_dir}/{module}/{spec.name}"
+            partition_by = spec.partition_by or None
+            if versioned:
+                write_versioned(gate.frame, path, partition_by=partition_by, before_publish=check)
+            else:
+                reload_overwrite(gate.frame, path, partition_by=partition_by, before_publish=check)
+            return round(time.perf_counter() - t0, 3), gate.rows
+        except BaseException:
+            failed.set()
+            raise
+        finally:
+            sc.removeJobTag(tag)
 
-    if max_parallel > 1:
-        with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-            list(pool.map(_one, specs))
-    else:
-        for item in specs:
-            _one(item)
+    # Each submission is wrapped on the caller's thread, so every pipeline
+    # starts from its own copy of the caller's local properties (job group,
+    # tags) and its tag never reaches another pipeline's jobs.
+    with ThreadPoolExecutor(max_workers=min(len(specs), sc.defaultParallelism)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(_one), m, s) for m, s in specs]
+    timings: dict[str, float] = {}
+    failures: list[tuple[str, BaseException]] = []
+    for (module, spec), fut in zip(specs, futures):
+        key = f"{module}.{spec.name}"
+        if fut.exception() is not None:
+            failures.append((key, fut.exception()))
+        elif (done := fut.result()) is not None:
+            timings[key], rows = done
+            logging.info("runner: %s done in %.2fs, %d rows", key, timings[key], rows)
+    if failures:
+        key, error = failures[0]
+        error.add_note(f"runner pipeline: {key}")
+        raise error
     if ledger:
         _write_ledger(spark, out_dir, timings, versioned)
     return timings
@@ -234,14 +258,14 @@ def _write_ledger(spark, out_dir: str, timings: dict[str, float], versioned: boo
     from area_etl_spark.sources.load import read_versioned
 
     entries = {}
-    for key, secs in sorted(timings.items()):
+    for key, secs in timings.items():
         module, name = key.split(".", 1)
         path = f"{out_dir}/{module}/{name}"
         df = read_versioned(spark, path) if versioned else spark.read.parquet(path)
         entries[key] = {"rows": df.count(), "seconds": secs}
     tmp = os.path.join(out_dir, "_run_ledger.json.tmp")
     with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"versioned": versioned, "tables": entries}, f, indent=1, sort_keys=True)
+        json.dump({"versioned": versioned, "tables": entries}, f, indent=1)
     os.replace(tmp, os.path.join(out_dir, "_run_ledger.json"))
 
 
@@ -252,14 +276,13 @@ def main() -> None:
     )
     parser.add_argument("--sf-dir", type=str, default="/root/testdata/sf0.01")
     parser.add_argument("--out-dir", type=str, required=True)
-    parser.add_argument("--parallel", type=int, default=1)
     args = parser.parse_args()
 
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     spark = get_spark("area-etl-runner")
     mods = None if args.modules == "all" else [m.strip() for m in args.modules.split(",")]
     start = time.perf_counter()
-    timings = run(spark, args.sf_dir, args.out_dir, mods, args.parallel)
+    timings = run(spark, args.sf_dir, args.out_dir, mods)
     logging.info("runner: %d pipelines in %.2fs: %s", len(timings), time.perf_counter() - start, timings)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,7 +99,9 @@ class LazyTables(dict):
     ``spark.read.parquet`` costs a driver-side footer/schema read per table;
     a catalog of N tables must not pay that N times for a query touching one
     table.  Missing keys load (and view-register) on demand and are then
-    cached for the life of the mapping.
+    cached for the life of the mapping.  Loads are serialized, so threads
+    sharing the catalog (the runner's concurrent pipelines) open each table
+    once.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str, register_views: bool) -> None:
@@ -106,17 +109,21 @@ class LazyTables(dict):
         self._spark = spark
         self._sf_dir = sf_dir
         self._register_views = register_views
+        self._lock = threading.Lock()
 
     def __missing__(self, name: str) -> DataFrame:
         if name not in TABLES:
             raise KeyError(name)
-        df = _read_table(self._spark, self._sf_dir, name)
-        if df is None:
-            raise KeyError(name)
-        if self._register_views:
-            df.createOrReplaceTempView(name)
-        self[name] = df
-        return df
+        with self._lock:
+            if name in self:  # another thread loaded it while we waited
+                return self[name]
+            df = _read_table(self._spark, self._sf_dir, name)
+            if df is None:
+                raise KeyError(name)
+            if self._register_views:
+                df.createOrReplaceTempView(name)
+            self[name] = df
+            return df
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:

@@ -12,8 +12,9 @@ from area_etl_spark.runner import MODULES, run
 
 def test_runner_all_modules(spark, sf_dir, tmp_path):
     out = str(tmp_path / "lake")
-    timings = run(spark, sf_dir, out, max_parallel=2)
-    assert set(timings) == {f"{m}.{s.name}" for m, specs in MODULES.items() for s in specs}
+    timings = run(spark, sf_dir, out)
+    # concurrent pipelines, but timings come back in spec order
+    assert list(timings) == [f"{m}.{s.name}" for m, specs in MODULES.items() for s in specs]
     # every pipeline landed as a readable parquet table
     for key in timings:
         module, name = key.split(".")
@@ -22,6 +23,112 @@ def test_runner_all_modules(spark, sf_dir, tmp_path):
     # partitioned sink has hive-style layout
     parts = os.listdir(f"{out}/poa/operational_events")
     assert any(p.startswith("event_class=") for p in parts)
+
+
+def test_runner_failure_stops_unstarted_pipelines(spark, sf_dir, tmp_path, monkeypatch):
+    """Once a pipeline raises, the pipelines not yet started are never
+    built, the running ones finish and publish, and ``run`` re-raises the
+    failure itself with a note naming its pipeline."""
+    import threading
+    import time
+
+    from area_etl_spark.runner import PipelineSpec
+
+    class PlanError(RuntimeError):
+        pass
+
+    # the failing pipeline and the sleepers fill every worker of the pool;
+    # the barrier holds the failure until all of them have started
+    workers = spark.sparkContext.defaultParallelism
+    started = threading.Barrier(workers, timeout=60)
+    built: list[str] = []
+
+    def fail(spark, tables, now):
+        started.wait()
+        raise PlanError("bad plan")
+
+    def slow(spark, tables, now):
+        started.wait()
+        time.sleep(1)
+        return spark.range(3)
+
+    def counted(spark, tables, now):
+        built.append("late")
+        return spark.range(3)
+
+    slow_names = [f"slow{i}" for i in range(workers - 1)]
+    specs = [PipelineSpec("fail", fail)] + [PipelineSpec(n, slow) for n in slow_names]
+    specs += [PipelineSpec("late0", counted), PipelineSpec("late1", counted)]
+    monkeypatch.setitem(MODULES, "t", specs)
+    out = str(tmp_path / "lake")
+    with pytest.raises(PlanError, match="bad plan") as err:
+        run(spark, sf_dir, out, modules=["t"])
+    assert err.value.__notes__ == ["runner pipeline: t.fail"]
+    assert built == []
+    assert sorted(os.listdir(f"{out}/t")) == sorted(slow_names)
+    for name in slow_names:
+        assert spark.read.parquet(f"{out}/t/{name}").count() == 3
+
+
+def test_runner_tags_each_pipelines_jobs(spark, sf_dir, tmp_path):
+    """Every pipeline's jobs carry the tag ``runner:<module>.<name>`` and
+    no other pipeline's tag; the caller's job group reaches them too."""
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    keys = [f"cronos.{s.name}" for s in MODULES["cronos"]]
+    # earlier runner runs in this session tagged jobs with the same keys
+    before = {key: set(tracker.getJobIdsForTag(f"runner:{key}")) for key in keys}
+    sc.setJobGroup("runner-caller", "runner test")
+    try:
+        timings = run(spark, sf_dir, str(tmp_path / "lake"), modules=["cronos"])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(timings) == keys == ["cronos.yearly_plans", "cronos.healthcare_companies"]
+    tagged = {key: set(tracker.getJobIdsForTag(f"runner:{key}")) - before[key] for key in keys}
+    assert all(tagged.values())
+    assert tagged["cronos.yearly_plans"].isdisjoint(tagged["cronos.healthcare_companies"])
+    assert set().union(*tagged.values()) <= set(sc.statusTracker().getJobIdsForGroup("runner-caller"))
+    assert not sc.getJobTags()
+
+
+def test_lazy_catalog_opens_each_table_once_across_threads(monkeypatch):
+    """Threads subscripting the same missing table at once share one read."""
+    import sys
+    import threading
+    import time
+
+    from area_etl_spark import session
+
+    reads: list[str] = []
+
+    def slow_read(spark, sf_dir, name):
+        reads.append(name)
+        time.sleep(0.2)
+        return object()
+
+    monkeypatch.setattr(session, "_read_table", slow_read)
+    catalog = session.LazyTables(None, "unused", register_views=False)
+    n = 16
+    barrier = threading.Barrier(n, timeout=30)
+    got: list[object] = []
+
+    def reader():
+        barrier.wait()
+        got.append(catalog["orders"])
+
+    threads = [threading.Thread(target=reader) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert reads == ["orders"]
+    assert len(got) == n and all(df is got[0] for df in got)
 
 
 def _gated_write(df, contract, path, versioned=False):

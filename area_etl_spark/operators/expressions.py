@@ -5,13 +5,12 @@ them and they must not drift per module:
 
 - :func:`bind_once` — the higher-order-function captured-expression fix
   (evaluate an expression once per row, not once per array element).
-- :func:`materialize` — the compute-once intermediate-table helper with a
+- :func:`materialize` — the one lineage cut in the package, with a
   documented scale/fault-tolerance dial (guide §5: ``localCheckpoint`` is
   the cheap local-mode lineage cut, but its blocks are executor-local and
   UNREPLICATED — an executor loss mid-query fails the job instead of
   recomputing, and corpus-sized checkpoints must fit executor
-  memory+disk); :func:`materialize_loop` is its variant for the tables
-  an iterative operator's loop reads.
+  memory+disk).
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ def bind_once(expr: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
-MATERIALIZE_MODES = ("local", "persist", "reliable")
+MATERIALIZE_MODES = ("local", "reliable")
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -60,14 +59,6 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       with NO lineage and NO replication.  Right for local/bench runs and
       for clusters where a rare executor loss may fail a query (it will be
       retried whole).  Cheapest.
-    - ``persist``: ``persist(MEMORY_AND_DISK)`` — lineage is KEPT, so an
-      executor loss recomputes only the lost partitions; blocks spill to
-      disk under pressure and are LRU-evicted.  The handles are
-      per-DataFrame and never explicitly unpersisted (operators return
-      lazy plans; eviction is the GC) — size executor storage memory
-      accordingly.  Use at 100 TB where a retry-the-whole-query failure
-      mode is unacceptable.  The tables iterative operators' loops read
-      are not persisted: see :func:`materialize_loop`.
     - ``reliable``: ``checkpoint`` to the directory named by
       ``SPARK_GRAFT_CHECKPOINT_DIR`` (set on the session on first use,
       unless it already has one) — survives executor loss
@@ -91,20 +82,4 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=eager)
-
-
-def materialize_loop(df: DataFrame, eager: bool = False) -> DataFrame:
-    """:func:`materialize` for a table an iterative operator's loop reads
-    (each round's result, and the setup tables every round joins).  Under
-    ``persist`` it cuts with ``localCheckpoint`` instead: a persisted table
-    keeps its plan, so each round would nest all earlier ones, and with AQE
-    on planning grows ~4× per round (``connected_components`` on a 7-edge
-    path ran out of an 8 GB driver heap)."""
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE") == "persist":
-        return df.localCheckpoint(eager=eager)
-    return materialize(df, eager=eager)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from area_etl_spark.operators.expressions import materialize
+
 
 def dense_ids(
     df: DataFrame,
@@ -46,9 +48,7 @@ def dense_ids(
     # partitioning by materializing it once.  At lake scale the equivalent
     # stable snapshot is the written range layout itself
     # (``sources.load.write_range_layout``), not an in-memory checkpoint.
-    # Raw localCheckpoint, not ``materialize``: its persist mode keeps the
-    # lineage, so a lost block would recompute under new range bounds.
-    staged = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
+    staged = materialize(parts.withColumn("_pid", F.spark_partition_id()), eager=True)
     counts = {r._pid: r.n for r in staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     if not counts:  # empty input: keep the schema, no map literal to build
         return df.withColumn(id_name, F.lit(None).cast("long"))

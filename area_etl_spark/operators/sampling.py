@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from area_etl_spark.operators.expressions import materialize_loop
+from area_etl_spark.operators.expressions import materialize
 
 
 def hash_sample_predicate(id_col: str | Column, fraction: float) -> Column:
@@ -408,7 +408,7 @@ def select_under_budget(
     partition-local cumulative window.  Identical result to the global
     window — which is exactly what the SQL oracle replays — with the heavy
     data crossing ONE range shuffle.  The partitioning is pinned with an
-    eager localCheckpoint (same AQE-resampling caveat as ``dense_ids``).
+    eager ``materialize`` (same AQE-resampling caveat as ``dense_ids``).
 
     Returns the selected rows plus ``cum_tokens`` (running total including
     the row).  A document larger than the remaining budget is skipped and
@@ -423,11 +423,8 @@ def select_under_budget(
         if num_partitions
         else parts_src.repartitionByRange(*order)
     )
-    # raw localCheckpoint, not ``materialize``: persist keeps the lineage
-    # that could re-sample the range bounds (the dense_ids freeze)
-    staged = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
+    # frozen so a recompute cannot re-sample the range bounds (the dense_ids freeze)
+    staged = materialize(parts.withColumn("_pid", F.spark_partition_id()), eager=True)
     sums = {
         r._pid: r.s
         for r in staged.groupBy("_pid")
@@ -567,7 +564,7 @@ def ipf_weights(
         # 2^iters analysis blow-up long before any data moves.  The cell
         # table is aggregate-level (categories², not rows), so an eager
         # cut is O(small) — the connected_components recipe.
-        df = materialize_loop(df, eager=True)
+        df = materialize(df, eager=True)
     return df.select(
         F.col("_r").alias(row_col),
         F.col("_c").alias(col_col),

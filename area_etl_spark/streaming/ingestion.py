@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from area_etl_spark.operators.dedup import incremental_dedup
+from area_etl_spark.operators.expressions import materialize
 
 _EMPTY_INDEX_SCHEMA = "content_hash string, batch_id long"
 
@@ -196,9 +197,8 @@ def make_versioned_appender(
             )
             stamped = base.unionByName(stamped)
         # freeze BEFORE the publish: the new version must not lazily
-        # re-read the old snapshot dir mid-GC — a raw localCheckpoint, since
-        # ``materialize``'s persist mode would keep that read in the lineage
-        rows = stamped.localCheckpoint(eager=True)
+        # re-read the old snapshot dir mid-GC
+        rows = materialize(stamped, eager=True)
         n = rows.count()
         if n > max_snapshot_rows:
             raise SnapshotScaleError(
@@ -265,9 +265,9 @@ def make_leaderboard_applier(
         if current_version(state_dir) is not None:
             prev = read_versioned(spark, state_dir)
             part = merge_agg_states([prev, part], keys)
-        # freeze BEFORE the publish (raw localCheckpoint, not ``materialize``):
-        # ``prev`` reads the snapshot dir that write_versioned replaces
-        state = part.localCheckpoint(eager=True)
+        # freeze BEFORE the publish: ``prev`` reads the snapshot dir that
+        # write_versioned replaces
+        state = materialize(part, eager=True)
         n = state.count()
         if n > max_state_rows:
             raise SnapshotScaleError(

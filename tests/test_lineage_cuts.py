@@ -1,8 +1,7 @@
 """Where intermediates are stored is decided in one place: every lineage
-cut goes through ``expressions.materialize`` or, for the tables an
-iterative operator's loop reads, ``expressions.materialize_loop`` (so
-``SPARK_GRAFT_MATERIALIZE`` reaches it), except the few freezes that must
-never be recomputed.  Checked without Spark."""
+cut, cache or persist in the package goes through
+``expressions.materialize``, so ``SPARK_GRAFT_MATERIALIZE`` reaches it.
+Checked without Spark."""
 
 from __future__ import annotations
 
@@ -13,23 +12,14 @@ import area_etl_spark
 
 PACKAGE = Path(area_etl_spark.__file__).parent
 
-# (module, enclosing function) of every allowed raw ``localCheckpoint`` call
-ALLOWED = sorted(
-    [
-        # the helpers themselves
-        ("operators/expressions.py", "materialize"),
-        ("operators/expressions.py", "materialize_loop"),
-        # partition ids frozen against AQE re-sampling the range bounds
-        ("operators/ids.py", "dense_ids"),
-        ("operators/sampling.py", "select_under_budget"),
-        # the sinks must not re-read the snapshot dir write_versioned replaces
-        ("streaming/ingestion.py", "_apply"),
-        ("streaming/ingestion.py", "_apply"),
-    ]
-)
+# the DataFrame methods that store a table outside the dial
+STORING = {"localCheckpoint", "checkpoint", "persist", "cache"}
+
+# (module, enclosing function) of every allowed call to one of them
+ALLOWED = [("operators/expressions.py", "materialize")]
 
 
-def _raw_checkpoints(path: Path) -> list[tuple[str, str]]:
+def _storing_calls(path: Path) -> list[tuple[str, str]]:
     found = []
 
     def visit(node: ast.AST, func: str) -> None:
@@ -40,7 +30,7 @@ def _raw_checkpoints(path: Path) -> list[tuple[str, str]]:
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "localCheckpoint"
+                and child.func.attr in STORING
             ):
                 found.append((path.relative_to(PACKAGE).as_posix(), func))
             visit(child, func)
@@ -50,5 +40,5 @@ def _raw_checkpoints(path: Path) -> list[tuple[str, str]]:
 
 
 def test_lineage_cuts_go_through_materialize():
-    calls = sorted(c for p in PACKAGE.rglob("*.py") for c in _raw_checkpoints(p))
+    calls = sorted(set(c for p in PACKAGE.rglob("*.py") for c in _storing_calls(p)))
     assert calls == ALLOWED

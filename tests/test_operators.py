@@ -5701,44 +5701,42 @@ def test_materialize_local_mode(spark, monkeypatch):
     assert added == 0
 
 
-def test_materialize_persist_mode(spark, monkeypatch):
-    """persist caches compute-once tables; the components loop still cuts
-    its plans, so a 9-round path finishes (persisted rounds nest their
-    plans, and a 7-edge path ran out of driver heap)."""
-    from area_etl_spark.operators.graph import connected_components
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    m, added = _materialize_roundtrip(spark)
-    assert m.is_cached and added == 0
-    m.unpersist()
-    path = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a int, id_b int")
-    assert sorted(map(tuple, connected_components(path).collect())) == [(i, 0) for i in range(10)]
-    # leave nothing cached for later tests
-    spark.catalog.clearCache()
-
-
 def test_materialize_reliable_mode(spark, monkeypatch, tmp_path):
     """reliable checkpoints to SPARK_GRAFT_CHECKPOINT_DIR, setting it on
     the session when the session has none — and the iterative operators'
-    round tables land there too."""
+    round tables and the ``dense_ids`` freeze land there too, with the ids
+    of the default mode."""
+    from area_etl_spark.operators.ids import dense_ids
+
+    df = spark.createDataFrame([(i, f"n{i % 7}") for i in range(50)], "k long, name string")
+
+    def ids():
+        return {r.k: r.dense_id for r in dense_ids(df, ["name", "k"], num_partitions=4).collect()}
+
+    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
+    expected = ids()
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
     _, added = _materialize_roundtrip(spark)
     assert spark.sparkContext.getCheckpointDir() is not None
     assert added > 0
+    before = _checkpoint_files(spark)
+    assert ids() == expected
+    assert _checkpoint_files(spark) > before
 
 
 def test_materialize_bad_setting_fails_clearly(spark, monkeypatch):
-    """An unknown mode and reliable without a directory raise a ValueError
-    naming the setting, before any Spark work."""
+    """An unknown mode (the removed ``persist`` too) and reliable without a
+    directory raise a ValueError naming the setting, before any Spark work."""
     import pytest
 
     from area_etl_spark.operators.expressions import materialize
 
     df = spark.range(3)
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persit")
-    with pytest.raises(ValueError, match="'persit': expected one of local, persist, reliable"):
-        materialize(df)
+    for mode in ("persit", "persist"):
+        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+        with pytest.raises(ValueError, match=f"'{mode}': expected one of local, reliable"):
+            materialize(df)
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CHECKPOINT_DIR"):

@@ -250,12 +250,11 @@ def _write_ledger(spark, out_dir: str, timings: dict[str, float], versioned: boo
     the run landed, the row count read back FROM THE SINK (what actually
     landed, not what the plan promised) plus elapsed seconds — the audit
     artifact a migration sign-off diffs against the source system.  Written
-    atomically (temp + rename) so a crashed run leaves no half ledger.
+    atomically (temp + fsync + rename) so a crashed run leaves no half ledger.
     """
     import json
-    import os
 
-    from area_etl_spark.sources.load import read_versioned
+    from area_etl_spark.sources.load import read_versioned, replace_file
 
     entries = {}
     for key, secs in timings.items():
@@ -263,10 +262,8 @@ def _write_ledger(spark, out_dir: str, timings: dict[str, float], versioned: boo
         path = f"{out_dir}/{module}/{name}"
         df = read_versioned(spark, path) if versioned else spark.read.parquet(path)
         entries[key] = {"rows": df.count(), "seconds": secs}
-    tmp = os.path.join(out_dir, "_run_ledger.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"versioned": versioned, "tables": entries}, f, indent=1)
-    os.replace(tmp, os.path.join(out_dir, "_run_ledger.json"))
+    ledger = {"versioned": versioned, "tables": entries}
+    replace_file(f"{out_dir}/_run_ledger.json", json.dumps(ledger, indent=1))
 
 
 def main() -> None:

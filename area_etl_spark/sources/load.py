@@ -1,29 +1,49 @@
-"""Load/sink surface — append, truncate+reload, CSV export.
+"""Load/sink surface: append, staged overwrite, numbered publishes, CSV export.
 
-Parity:
+Parity with the reference's LOAD stage, which truncates a table and then
+reloads it:
 
-- ``load_append``     ← ``load_data`` (/root/reference/src/utils.py:206):
+- ``load_append``      ← ``load_data`` (the reference's ``src/utils.py:206``):
   append rows into a target table.
-- ``reload_overwrite``← ``truncate_pg_table`` + reload
-  (utils.py:226 + the per-module truncate loops, core.py:56): the reference's
-  idempotent-reload idiom.  In Spark this is one staged
-  ``mode("overwrite")`` write swapped in by rename — no separate TRUNCATE
-  round-trip, and on a cluster the write is parallel per partition.
-- ``export_csv``      ← ``export_tables_to_csv`` (utils.py:246).
+- ``reload_overwrite`` ← ``truncate_pg_table`` + reload (utils.py:226 and the
+  per-module truncate loops, core.py:56).  In Spark this is one staged
+  ``mode("overwrite")`` write, parallel per partition on a cluster.
+- ``export_csv``       ← ``export_tables_to_csv`` (utils.py:246).
 
-Scale notes: parquet sinks accept ``partition_by`` (hive-style layout) and
-``bucket_by`` intent is documented at the call sites; CSV export coalesces
-only when ``single_file=True`` (the reference writes one file per table —
-fine for exports, wrong for 100 TB data movement, so the default keeps one
-file per partition).
+A table is made visible in one of two ways, each written once:
+
+- **Directory swap** (``_staged_save``): the new table lands in a hidden,
+  uniquely named sibling of its path; the caller's gate runs; then the old
+  directory is deleted and the sibling renamed into place.  A failed write
+  or gate deletes the sibling and keeps the old table.  ``reload_overwrite``
+  and ``compact_files`` publish this way.  Between the delete and the
+  rename a reader finds no table.
+- **Numbered publish** (``_numbered_publish``, under ``_writer_lock``):
+  each frame lands in a new ``<prefix><n>/`` directory, one past every
+  existing number; the gate runs; a pointer file is flipped to ``n``; old
+  numbers past the retention are deleted.  ``write_versioned``
+  (``v=<n>/`` + ``_CURRENT``), ``publish_snapshot`` and
+  ``incremental_publish_cycle`` (``<table>/s=<n>/`` + ``_SNAPSHOT``)
+  publish this way.  Readers resolve the pointer, so there is no window.
+
+Pointer files (``_CURRENT``, ``_SNAPSHOT``, the incremental bookmark and the
+runner's ledger) are all written by ``replace_file``: temp file, fsync,
+``os.replace``.
+
+Scale notes: parquet sinks accept ``partition_by`` (hive-style layout);
+CSV export coalesces only when ``single_file=True`` (the reference writes
+one file per table: fine for exports, wrong for 100 TB data movement).
 """
 
 from __future__ import annotations
 
 import logging
+import math
+import os
+import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -98,7 +118,6 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist a managed table bucketed (and optionally sorted) by join key.
 
@@ -109,7 +128,7 @@ def write_bucketed(
     join plan is exchange-free AND sort-free.  The write itself shuffles
     once (that's the point: pay the partitioning once, reuse it every join).
     """
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
@@ -121,7 +140,6 @@ def write_range_layout(
     path: str,
     range_cols: list[str],
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
     num_partitions: int | None = None,
 ) -> None:
     """Write with range-clustered file layout for data-skipping reads.
@@ -142,7 +160,7 @@ def write_range_layout(
         else df.repartitionByRange(*range_exprs)
     )
     out = out.sortWithinPartitions(*[F.col(c) for c in (sort_cols or range_cols)])
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
     logging.info("write_range_layout: %s clustered by %s", path, range_cols)
 
 
@@ -172,7 +190,6 @@ def write_zorder_layout(
     path: str,
     zorder_cols: list[str],
     bits: int = 8,
-    mode: str = "overwrite",
     num_partitions: int | None = None,
 ) -> None:
     """Write with Z-order-clustered file layout for multi-column skipping.
@@ -213,7 +230,7 @@ def write_zorder_layout(
     (
         out.sortWithinPartitions("_zval")
         .drop("_zval", *rank_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
     logging.info("write_zorder_layout: %s z-ordered by %s", path, zorder_cols)
@@ -282,70 +299,29 @@ def compact_files(
 ) -> tuple[int, int]:
     """Small-file compaction: rewrite a table directory into files of
     ~``target_rows_per_file`` rows.  Returns (files_before, files_after).
-    Hive-partitioned layouts are preserved: partition columns discovered
-    from the `col=value` directory structure are re-applied via
-    ``partitionBy`` on the rewrite, so downstream partition pruning keeps
-    working.
+    Hive-partitioned layouts are preserved: the partition columns Spark
+    discovers from the ``col=value`` directories are re-applied via
+    ``partitionBy``, so downstream partition pruning keeps working.
 
-    The maintenance job every long-running lake needs — streaming sinks and
+    The maintenance job every long-running lake needs: streaming sinks and
     per-batch appends accrete thousands of KB-sized files, and at 100 TB the
-    NameNode/listing and per-file open costs dominate scan time long before
-    the bytes do.  Strategy: count once, `repartition(ceil(rows/target))` (a
-    round-robin shuffle — the ONE shuffle this job does), write to a
-    temporary sibling, then swap via two renames.  HONEST CONTRACT: the
-    swap has a brief window (between the renames) where ``path`` does not
-    exist — concurrent readers in that instant fail, and a crash inside
-    the window strands the data at ``<path>__compact_old`` (recoverable by
-    a manual rename; the next successful run clears stale debris).  A truly
-    atomic swap needs either a transactional table format (Delta/Iceberg,
-    absent here) or the manifest-pointer layout — for tables stored via
-    :func:`write_versioned` compaction IS atomic: read the current
-    snapshot, repartition, ``write_versioned`` the result; readers never
-    see a gap.  For plain directories run compaction in the lake's
-    maintenance window.
+    listing and per-file open costs dominate scan time long before the
+    bytes do.  Strategy: count once, ``repartition(ceil(rows/target))`` (a
+    round-robin shuffle, the one shuffle this job does), then publish
+    through :func:`reload_overwrite`'s staged swap, with its window.  For
+    a :func:`write_versioned` table, compact with no window by reading the
+    current version, repartitioning it and ``write_versioned``-ing it.
     """
-    import math
-    import os
-    import shutil
-
     df = spark.read.format(fmt).load(path)
     n_rows = df.count()
-    files_before = sum(
-        1 for _, _, fs in os.walk(path) for f in fs if not f.startswith(("_", "."))
-    )
-    # Hive-partitioned input: discover the partition columns from the
-    # directory names (one `col=value` level per partition column, in
-    # nesting order) and preserve them on rewrite — a flat rewrite would
-    # demote partition columns to data columns and silently break every
-    # downstream partition-pruned read.
-    part_cols: list[str] = []
-    level = path
-    while True:
-        subdirs = [
-            d for d in os.listdir(level)
-            if os.path.isdir(os.path.join(level, d)) and "=" in d and not d.startswith((".", "_"))
-        ]
-        if not subdirs:
-            break
-        part_cols.append(subdirs[0].split("=", 1)[0])
-        level = os.path.join(level, subdirs[0])
+    files = df.inputFiles()
+    # a file read on its own has no partition columns: the columns the
+    # directory read adds are the hive partitioning, in nesting order
+    data_cols = set(spark.read.format(fmt).load(files[0]).columns) if files else set(df.columns)
+    part_cols = [c for c in df.columns if c not in data_cols]
     n_files = max(1, math.ceil(n_rows / max(1, target_rows_per_file)))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    writer = df.repartition(n_files).write.mode("overwrite").format(fmt)
-    if part_cols:
-        # repartition(n) still bounds small files per partition dir; the
-        # per-directory file count is data-distribution dependent
-        writer = writer.partitionBy(*part_cols)
-    writer.save(tmp)
-    old = path.rstrip("/") + "__compact_old"
-    shutil.rmtree(old, ignore_errors=True)  # debris from a previously failed swap
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    files_after = sum(
-        1 for _, _, fs in os.walk(path) for f in fs if not f.startswith(("_", "."))
-    )
-    return files_before, files_after
+    reload_overwrite(df.repartition(n_files), path, fmt, partition_by=part_cols)
+    return len(files), len(spark.read.format(fmt).load(path).inputFiles())
 
 
 def file_stats_manifest(
@@ -418,19 +394,81 @@ def read_pruned(
     )
 
 
-def _versions(table_dir: str) -> list[int]:
-    import os
+def replace_file(path: str, text: str) -> None:
+    """Replace ``path``'s content with ``text`` atomically: write a temp
+    sibling, fsync it, then ``os.replace`` it over ``path``.  A reader sees
+    the old content or the new, never a half-written file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
-    if not os.path.isdir(table_dir):
-        return []
-    out = []
-    for d in os.listdir(table_dir):
-        if d.startswith("v=") and os.path.isdir(os.path.join(table_dir, d)):
-            try:
-                out.append(int(d[2:]))
-            except ValueError:
-                continue
-    return sorted(out)
+
+def _read_pointer(path: str) -> int | None:
+    """The number a pointer file names (None if it does not exist)."""
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return int(f.read().strip())
+
+
+def _numbered(parent: str, prefix: str) -> set[int]:
+    """The numbers ``n`` of the ``<prefix><n>`` directories in ``parent``."""
+    if not os.path.isdir(parent):
+        return set()
+    return {
+        int(d[len(prefix):])
+        for d in os.listdir(parent)
+        if d.startswith(prefix) and d[len(prefix):].isdigit() and os.path.isdir(os.path.join(parent, d))
+    }
+
+
+def _numbered_publish(
+    frames: dict[str, DataFrame],
+    prefix: str,
+    pointer: str,
+    keep: int,
+    fmt: str,
+    partition_by: list[str] | None = None,
+    before_publish: Callable[[], None] | None = None,
+) -> int:
+    """Publish each frame as ``<parent>/<prefix><n>/`` (``frames`` maps
+    parent directory → frame), then point ``pointer`` at ``n``.  The
+    caller holds the writer lock.
+
+    ``n`` is one past every existing number, orphans of crashed writes
+    included, so an orphan is never mistaken for a later publish.  If a
+    write or ``before_publish()`` raises, this publish's directories are
+    deleted and the pointer still names the previous number.  After the
+    flip, every number except ``n`` and the newest ``keep - 1`` published
+    ones (at or below the old pointer) is deleted.  Returns ``n``.
+    """
+    cur = _read_pointer(pointer)
+    existing = {n for parent in frames for n in _numbered(parent, prefix)}
+    new = max(existing | {cur or 0}) + 1
+    dirs = {parent: os.path.join(parent, f"{prefix}{new}") for parent in frames}
+    try:
+        for parent, df in frames.items():
+            writer = df.write.mode("overwrite").format(fmt)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.save(dirs[parent])
+        if before_publish is not None:
+            before_publish()
+    except BaseException:
+        for d in dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+        raise
+    replace_file(pointer, str(new))
+    published = sorted((n for n in existing if cur is not None and n <= cur), reverse=True)
+    kept = {new, *published[: max(keep - 1, 0)]}
+    for parent in frames:
+        for n in _numbered(parent, prefix):
+            if n not in kept:
+                shutil.rmtree(os.path.join(parent, f"{prefix}{n}"), ignore_errors=True)
+    return new
 
 
 def current_version(table_dir: str) -> int | None:
@@ -438,13 +476,7 @@ def current_version(table_dir: str) -> int | None:
     never published).  Readers MUST resolve this, not the directory
     listing — data directories newer than the manifest are in-flight or
     crashed writes."""
-    import os
-
-    manifest = os.path.join(table_dir, "_CURRENT")
-    if not os.path.exists(manifest):
-        return None
-    with open(manifest, encoding="utf-8") as f:
-        return int(f.read().strip())
+    return _read_pointer(os.path.join(table_dir, "_CURRENT"))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -589,12 +621,10 @@ def write_versioned(
     fmt: str = "parquet",
     keep_versions: int = 2,
     partition_by: list[str] | None = None,
-    lock_stale_after_s: float = 3600.0,
     before_publish: Callable[[], None] | None = None,
 ) -> int:
     """Atomic table publish via a manifest pointer — the poor-man's
-    transactional table that closes :func:`compact_files`' documented swap
-    window without Delta/Iceberg: data lands in an immutable
+    transactional table without Delta/Iceberg: data lands in an immutable
     ``v=<n>/`` directory, then ONE ``os.replace`` of the ``_CURRENT``
     manifest (POSIX rename atomicity — also how Iceberg's
     version-hint/metadata pointer commit works) makes it visible.  There
@@ -617,46 +647,18 @@ def write_versioned(
     Returns the published version number.  Writer concurrency is ENFORCED
     by :func:`_writer_lock`: a second concurrent writer raises
     :class:`ConcurrentWriteError` before touching any state (a crashed
-    holder's lock is taken over after ``lock_stale_after_s``).
+    holder's lock is taken over after an hour).
     """
-    import os
-    import shutil
-
-    with _writer_lock(table_dir, stale_after_s=lock_stale_after_s):
-        cur = current_version(table_dir)
-        existing = _versions(table_dir)
-        new_v = max(existing + ([cur] if cur is not None else [0])) + 1
-        data_dir = os.path.join(table_dir, f"v={new_v}")
-        writer = df.write.mode("overwrite").format(fmt)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        try:
-            writer.save(data_dir)
-            if before_publish is not None:
-                before_publish()
-        except BaseException:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
-        # atomic publish: write-temp + rename, never truncate-in-place
-        tmp_manifest = os.path.join(table_dir, "_CURRENT.tmp")
-        with open(tmp_manifest, "w", encoding="utf-8") as f:
-            f.write(str(new_v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_manifest, os.path.join(table_dir, "_CURRENT"))
-        # GC: keep the newest `keep_versions` PUBLISHED snapshots — only
-        # versions at or below the OLD manifest ever were published; dirs
-        # between it and new_v are crashed-write orphans and always sweep
-        keep = {new_v}
-        for v in reversed(_versions(table_dir)):
-            if len(keep) >= keep_versions:
-                break
-            if cur is not None and v <= cur:
-                keep.add(v)
-        for v in _versions(table_dir):
-            if v not in keep:
-                shutil.rmtree(os.path.join(table_dir, f"v={v}"), ignore_errors=True)
-        return new_v
+    with _writer_lock(table_dir):
+        return _numbered_publish(
+            {table_dir: df},
+            "v=",
+            os.path.join(table_dir, "_CURRENT"),
+            keep_versions,
+            fmt,
+            partition_by,
+            before_publish,
+        )
 
 
 def read_versioned(
@@ -670,38 +672,10 @@ def read_versioned(
     the retention window).  The resolve-then-scan order IS the isolation
     mechanism — the returned DataFrame is pinned to its snapshot directory
     and unaffected by later publishes."""
-    import os
-
     v = version if version is not None else current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no published version at {table_dir}")
     return spark.read.format(fmt).load(os.path.join(table_dir, f"v={v}"))
-
-
-def load_with_observation(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, object],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> dict:
-    """Write ``df`` and collect named aggregate metrics IN THE SAME PASS
-    via Spark's Observation API (CollectMetrics) — the zero-extra-scan way
-    to record load audit numbers (row counts, null counts, sums) that a
-    separate ``df.agg`` would re-read 100 TB to produce.
-
-    ``metrics`` maps metric name → aggregate Column; returns the observed
-    values as a plain dict after the write job finishes.  Use for the
-    audit row every load writes next to its data (rows_written,
-    nulls_in_key, total_cents) — contracts (plans/contracts.py) remain the
-    gate for hard failures; this is the cheap always-on telemetry.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("load_metrics")
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.mode(mode).format(fmt).save(path)
-    return dict(obs.get)
 
 
 def publish_snapshot(
@@ -718,8 +692,9 @@ def publish_snapshot(
     Layout: ``<wh>/<table>/s=<n>/`` data directories, one
     ``<wh>/_SNAPSHOT`` file holding the published snapshot number.  The
     commit is a single ``os.replace`` (POSIX-atomic), after every data
-    write finished — a crash before it leaves only orphan ``s=<n>`` dirs
-    (invisible; swept by the next successful publish); readers that
+    write finished.  A failed write deletes this publish's ``s=<n>``
+    directories; a crash before the commit leaves only orphan ``s=<n>``
+    dirs (invisible; swept by the next successful publish); readers that
     resolved the old number keep reading immutable old directories
     (snapshot isolation with ``keep_snapshots - 1`` publishes of grace).
     Writer concurrency is ENFORCED by :func:`_writer_lock` on the warehouse
@@ -727,66 +702,9 @@ def publish_snapshot(
     :class:`ConcurrentWriteError` before any data write.  Returns the
     published snapshot number.
     """
+    frames = {os.path.join(warehouse_dir, t): df for t, df in tables.items()}
     with _writer_lock(warehouse_dir):
-        return _publish_snapshot_locked(tables, warehouse_dir, fmt, keep_snapshots)
-
-
-def _publish_snapshot_locked(
-    tables: dict[str, DataFrame],
-    warehouse_dir: str,
-    fmt: str,
-    keep_snapshots: int,
-) -> int:
-    """:func:`publish_snapshot`'s body, for callers that ALREADY hold the
-    warehouse writer lock (``incremental_publish_cycle`` serializes its
-    whole read-accumulate-publish-commit critical section under it)."""
-    import os
-    import shutil
-
-    cur = _read_snapshot_no(warehouse_dir)
-    existing = set()
-    for t in tables:
-        tdir = os.path.join(warehouse_dir, t)
-        if os.path.isdir(tdir):
-            for d in os.listdir(tdir):
-                if d.startswith("s="):
-                    try:
-                        existing.add(int(d[2:]))
-                    except ValueError:
-                        pass
-    new_s = max(existing | ({cur} if cur is not None else {0})) + 1
-    for name, df in tables.items():
-        df.write.mode("overwrite").format(fmt).save(
-            os.path.join(warehouse_dir, name, f"s={new_s}")
-        )
-    tmp = os.path.join(warehouse_dir, "_SNAPSHOT.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(str(new_s))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(warehouse_dir, "_SNAPSHOT"))
-    # GC: keep the newest keep_snapshots PUBLISHED snapshots per table
-    keep = {new_s}
-    published = sorted(
-        [s for s in existing if cur is not None and s <= cur], reverse=True
-    )
-    for s in published:
-        if len(keep) >= keep_snapshots:
-            break
-        keep.add(s)
-    for t in tables:
-        tdir = os.path.join(warehouse_dir, t)
-        if not os.path.isdir(tdir):
-            continue
-        for d in os.listdir(tdir):
-            if d.startswith("s="):
-                try:
-                    v = int(d[2:])
-                except ValueError:
-                    continue
-                if v not in keep:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-    return new_s
+        return _numbered_publish(frames, "s=", os.path.join(warehouse_dir, "_SNAPSHOT"), keep_snapshots, fmt)
 
 
 def incremental_publish_cycle(
@@ -848,22 +766,14 @@ def incremental_publish_cycle(
         derived = build_tables(raw)
         if "raw" in derived:
             raise ValueError("build_tables must not emit a table named 'raw'")
-        snap = _publish_snapshot_locked(
-            {"raw": raw, **derived}, warehouse_dir, fmt, keep_snapshots=2
-        )
+        frames = {os.path.join(warehouse_dir, t): df for t, df in {"raw": raw, **derived}.items()}
+        snap = _numbered_publish(frames, "s=", os.path.join(warehouse_dir, "_SNAPSHOT"), 2, fmt)
         commit()
         return snap, new_mark
 
 
-
 def _read_snapshot_no(warehouse_dir: str) -> int | None:
-    import os
-
-    p = os.path.join(warehouse_dir, "_SNAPSHOT")
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as f:
-        return int(f.read().strip())
+    return _read_pointer(os.path.join(warehouse_dir, "_SNAPSHOT"))
 
 
 def read_snapshot_table(
@@ -873,8 +783,6 @@ def read_snapshot_table(
     reads in the same snapshot resolution are mutually consistent; pin the
     number once per job (this helper resolves per call) for multi-table
     jobs."""
-    import os
-
     s = _read_snapshot_no(warehouse_dir)
     if s is None:
         raise FileNotFoundError(f"no published snapshot in {warehouse_dir}")
@@ -903,8 +811,6 @@ def incremental_partitions(
     as strings — zero-pad numeric partition values at write time (date
     strings are already safe).
     """
-    import os
-
     mark = None
     if os.path.exists(bookmark_file):
         with open(bookmark_file, encoding="utf-8") as f:
@@ -921,14 +827,8 @@ def incremental_partitions(
     new_mark = new_vals[-1] if new_vals else None
 
     def commit() -> None:
-        if new_mark is None:
-            return
-        tmp = bookmark_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(new_mark)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, bookmark_file)
+        if new_mark is not None:
+            replace_file(bookmark_file, new_mark)
 
     return df, new_mark, commit
 

@@ -8,16 +8,17 @@ over every event seen so far.
 
 Strategy: RECOMPUTE-FROM-EVENTS per batch — the raw event log (key, time,
 status) accumulates in an append-only staging table (cheap: appends are
-blind writes), and the history derivation re-runs over it atomically.  This
-is the honest pattern while interval state fits a recompute; true
-delta-merge of intervals (split/extend only touched keys) needs a
-transactional table format's MERGE (Delta/Iceberg) and is the documented
-next step there — the operator and sink interface stay identical.
+blind writes), and the history derivation re-runs over it and lands through
+a staged overwrite.  This is the honest pattern while interval state fits a
+recompute; true delta-merge of intervals (split/extend only touched keys)
+needs a transactional table format's MERGE (Delta/Iceberg) and is the
+documented next step there — the operator and sink interface stay
+identical.
 
 Why not ``applyInPandasWithState``: SCD2 output REWRITES history rows
 (closing an open interval) — append-mode stateful output can't retract, and
-the parquet sink can't update in place; foreachBatch + atomic overwrite is
-the stock Spark answer.
+the parquet sink can't update in place; foreachBatch + a staged overwrite
+is the stock Spark answer.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import os
 from pyspark.sql import DataFrame
 
 from area_etl_spark.operators.history import scd2_intervals
+from area_etl_spark.sources.load import reload_overwrite
 
 
 def incremental_scd2_sink(
@@ -42,8 +44,9 @@ def incremental_scd2_sink(
     ``out_dir`` from a stream of status events.  Returns the StreamingQuery.
 
     Layout: ``{out_dir}/events`` append-only staging log;
-    ``{out_dir}/history`` the derived validity intervals (atomic overwrite
-    per batch — readers never see a partial history).
+    ``{out_dir}/history`` the derived validity intervals, rewritten per
+    batch through ``reload_overwrite``: a batch whose history write fails
+    leaves the previous history in place.
     """
     events_dir = os.path.join(out_dir, "events")
     history_dir = os.path.join(out_dir, "history")
@@ -53,7 +56,7 @@ def incremental_scd2_sink(
         batch_df.write.mode("append").parquet(events_dir)
         all_events = spark.read.parquet(events_dir)
         hist = scd2_intervals(all_events, key_cols, time_col, attr_cols, tiebreak_cols)
-        hist.write.mode("overwrite").parquet(history_dir)
+        reload_overwrite(hist, history_dir)
 
     writer = stream.writeStream.foreachBatch(_apply).outputMode("update")
     if checkpoint_dir:

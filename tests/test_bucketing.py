@@ -185,49 +185,34 @@ def test_file_stats_manifest_prunes_correctly(spark, tables, tmp_path):
     assert via_manifest == full > 0
 
 
-def test_compact_files_clears_stale_debris_and_survives(spark, tables, tmp_path):
-    """A previously crashed swap strands data at <path>__compact_old; the
-    next successful run must clear the debris and still compact correctly
-    (load.py's documented recovery contract)."""
-    from area_etl_spark.sources.load import compact_files
+def test_compact_files_failed_publish_keeps_old_rows(spark, tables, tmp_path, monkeypatch):
+    """A compaction whose publish fails keeps the old table readable and
+    leaves no sibling directory behind."""
+    import os
+
+    import pytest
+
+    from area_etl_spark.sources import load
 
     path = str(tmp_path / "t")
     src = tables["supplier"].select("s_suppkey", "s_name")
     src.repartition(16).write.parquet(path)
-    before_rows = sorted(r.s_suppkey for r in spark.read.parquet(path).collect())
-    # plant debris from a "crashed" earlier swap
-    debris = path + "__compact_old"
-    src.limit(3).write.parquet(debris)
-    n_before, n_after = compact_files(spark, path, target_rows_per_file=1000)
-    import os
-
-    assert not os.path.exists(debris)
-    assert n_before > n_after == 1
-    assert sorted(r.s_suppkey for r in spark.read.parquet(path).collect()) == before_rows
-
-
-def test_compact_swap_window_fails_cleanly_and_is_recoverable(spark, tables, tmp_path):
-    """The documented non-atomic swap window: with <path> absent and the
-    data at <path>__compact_old (the mid-swap / crashed state), a concurrent
-    read must FAIL LOUDLY (never silently return wrong/empty data), and the
-    documented manual recovery (rename old back) restores the table."""
-    import os
-
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    path = str(tmp_path / "t2")
-    src = tables["supplier"].select("s_suppkey", "s_name")
-    src.write.parquet(path)
+    files = sorted(os.listdir(path))
     rows = sorted(r.s_suppkey for r in spark.read.parquet(path).collect())
-    # reproduce the exact mid-swap state compact_files passes through:
-    # first rename done (path -> old), second (tmp -> path) not yet
-    os.rename(path, path + "__compact_old")
-    with pytest.raises(AnalysisException):
-        spark.read.parquet(path).collect()
-    # documented recovery: manual rename back
-    os.rename(path + "__compact_old", path)
+    real = load._staged_save
+
+    def fail():
+        raise RuntimeError("injected publish failure")
+
+    def failing_save(session, writer, target, _before_publish):
+        real(session, writer, target, fail)
+
+    monkeypatch.setattr(load, "_staged_save", failing_save)
+    with pytest.raises(RuntimeError, match="injected publish failure"):
+        load.compact_files(spark, path, target_rows_per_file=1000)
+    assert sorted(os.listdir(path)) == files
     assert sorted(r.s_suppkey for r in spark.read.parquet(path).collect()) == rows
+    assert os.listdir(tmp_path) == ["t"]
 
 
 def test_read_pruned_opens_file_subset_and_matches_full_scan(spark, tables, tmp_path):

@@ -244,31 +244,6 @@ def test_versioned_merge_cycle_integration(spark, tmp_path):
     assert pinned.count() == 3  # old snapshot intact for pinned readers
 
 
-def test_load_with_observation_single_pass_metrics(spark, tables, tmp_path):
-    from area_etl_spark.sources.load import load_with_observation
-
-    src = tables["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    path = str(tmp_path / "observed")
-    got = load_with_observation(
-        src,
-        path,
-        {
-            "rows_written": F.count(F.lit(1)),
-            "null_custkeys": F.sum(F.col("o_custkey").isNull().cast("long")),
-            "total_cents": F.sum(
-                F.round(F.col("o_totalprice") * 100).cast("long")
-            ),
-        },
-    )
-    n = src.count()
-    assert got["rows_written"] == n
-    assert got["null_custkeys"] == 0
-    assert got["total_cents"] == src.agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-    ).collect()[0][0]
-    assert spark.read.parquet(path).count() == n
-
-
 def test_incremental_partitions_bookmark_cycle(spark, tables, tmp_path):
     from area_etl_spark.sources.load import incremental_partitions
 
@@ -429,6 +404,61 @@ def test_publish_snapshot_concurrent_publisher_fails_cleanly(spark, tmp_path):
             publish_snapshot({"facts": facts, "dims": dims}, wh)
         assert not os.path.exists(os.path.join(wh, "facts", "s=2"))
     assert publish_snapshot({"facts": facts, "dims": dims}, wh) == 2
+
+
+def test_publish_snapshot_failed_write_publishes_nothing(spark, tmp_path):
+    """A frame that raises mid-write leaves _SNAPSHOT at the previous
+    number and no new s=<n> directory in any table, the tables written
+    before the failing one included."""
+    from area_etl_spark.sources.load import _read_snapshot_no, publish_snapshot
+
+    wh = str(tmp_path / "wh")
+    facts = spark.createDataFrame([(1, 10)], "k int, v int")
+    dims = spark.createDataFrame([(1, "x")], "k int, s string")
+    assert publish_snapshot({"facts": facts, "dims": dims}, wh) == 1
+    broken = dims.withColumn("boom", F.raise_error(F.lit("injected write failure")))
+    with pytest.raises(Exception, match="injected write failure"):
+        publish_snapshot({"facts": facts, "dims": broken}, wh)
+    assert _read_snapshot_no(wh) == 1
+    assert sorted(os.listdir(os.path.join(wh, "facts"))) == ["s=1"]
+    assert sorted(os.listdir(os.path.join(wh, "dims"))) == ["s=1"]
+    assert publish_snapshot({"facts": facts, "dims": dims}, wh) == 2
+
+
+def test_numbered_layouts_written_by_hand_stay_readable(spark, tmp_path):
+    """Tables in the on-disk layouts (v=<n>/ + _CURRENT, <table>/s=<n>/ +
+    _SNAPSHOT) written without this module resolve through the readers; the
+    next publish is numbered one past an orphan, and GC keeps the new
+    number plus the newest keep - 1 published ones."""
+    from area_etl_spark.sources.load import (
+        current_version,
+        publish_snapshot,
+        read_snapshot_table,
+        read_versioned,
+        write_versioned,
+    )
+
+    one = spark.createDataFrame([(1,)], "k int")
+    two = spark.createDataFrame([(2,), (3,)], "k int")
+    t = tmp_path / "tbl"
+    one.write.parquet(str(t / "v=1"))
+    two.write.parquet(str(t / "v=5"))  # orphan of a crashed write
+    (t / "_CURRENT").write_text("1\n")
+    wh = tmp_path / "wh"
+    one.write.parquet(str(wh / "facts" / "s=1"))
+    two.write.parquet(str(wh / "facts" / "s=5"))
+    (wh / "_SNAPSHOT").write_text("1\n")
+
+    assert current_version(str(t)) == 1
+    assert [r.k for r in read_versioned(spark, str(t)).collect()] == [1]
+    assert [r.k for r in read_snapshot_table(spark, str(wh), "facts").collect()] == [1]
+
+    assert write_versioned(two, str(t), keep_versions=2) == 6
+    assert sorted(d for d in os.listdir(t) if d.startswith("v=")) == ["v=1", "v=6"]
+    assert sorted(r.k for r in read_versioned(spark, str(t)).collect()) == [2, 3]
+    assert publish_snapshot({"facts": two}, str(wh), keep_snapshots=2) == 6
+    assert sorted(os.listdir(wh / "facts")) == ["s=1", "s=6"]
+    assert sorted(r.k for r in read_snapshot_table(spark, str(wh), "facts").collect()) == [2, 3]
 
 
 def test_avro_roundtrip_gated(spark, tables, tmp_path):

@@ -180,6 +180,44 @@ def test_incremental_scd2_equals_batch(spark, tables, tmp_path):
     assert got == want and len(got) > 0
 
 
+def test_incremental_scd2_failed_batch_keeps_history(spark, tables, tmp_path, monkeypatch):
+    """A batch whose history write fails leaves the previous batch's
+    history readable and no staging sibling next to it."""
+    import os
+
+    from area_etl_spark.streaming import cdc
+
+    ev = tables["events"].select(
+        "user_id", "event_id", "ts", F.col("event_type").alias("status")
+    )
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ev.where(F.col("event_id") % 2 == 0).write.parquet(src)
+
+    def run_sink():
+        stream = spark.readStream.schema(ev.schema).parquet(src)
+        cdc.incremental_scd2_sink(
+            stream, out, ["user_id"], "ts", ["status"], tiebreak_cols=["event_id"],
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ).awaitTermination(240)
+
+    run_sink()
+    first = sorted(map(tuple, spark.read.parquet(out + "/history").collect()))
+    assert first
+
+    real = cdc.scd2_intervals
+
+    def failing_intervals(*args, **kwargs):
+        boom = F.raise_error(F.lit("injected history failure"))
+        return real(*args, **kwargs).withColumn("boom", boom)
+
+    monkeypatch.setattr(cdc, "scd2_intervals", failing_intervals)
+    ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
+    with pytest.raises(Exception, match="injected history failure"):
+        run_sink()
+    assert sorted(map(tuple, spark.read.parquet(out + "/history").collect())) == first
+    assert sorted(os.listdir(out)) == ["events", "history"]
+
+
 def test_stateful_session_merges_across_restart(spark, tmp_path):
     """Checkpoint restart: an OPEN session's state must be restored, so
     events delivered after the restart extend the same session instead of
